@@ -174,28 +174,12 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     return toks.groupBy(id_col).agg(*aggs)
 
 
-def lsh_band_keys(sig: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
-    """Signature -> (id, band_idx, band_key) with band_key = concat of the
-    band's signature components."""
-    out = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-        out.append(sig.select(F.col(id_col), F.lit(b).alias("band"),
-                              F.concat(*cols).alias("band_key")))
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    return res
-
-
 def lsh_candidate_pairs(sig: DataFrame, id_col: str, bands: int = 2,
                         rows: int = 4, max_bucket: int = 10000,
                         parallelism: int | None = None,
                         n_docs: int | None = None,
                         broadcast_max_rows: int = BROADCAST_MAX_ROWS,
-                        cache_keys: bool = True,
-                        width_keys: DataFrame | None = None,
-                        n_width_docs: int | None = None) -> DataFrame:
+                        cache_keys: bool = True) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) sharing any band bucket.
 
     Plan choices (the pair set is the hot output — often ≫ corpus):
@@ -237,16 +221,6 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str, bands: int = 2,
       (`operators._cache`), so a same-session rebuild (e.g. the
       Jaccard-verify stage re-deriving candidates from the same
       signature plan) reuses the materialized relation.
-    - **External width source** (``width_keys`` / ``n_width_docs``):
-      the per-band bucket widths are computed over ``width_keys`` (a
-      ``band_key_index``-schema relation that must be a SUPERSET of
-      this run's keys) instead of this run's own keys. The incremental
-      path passes the index∪batch key union here so a sub-corpus run
-      guards on the TOTAL corpus width — the exact survival a full
-      re-run over the merged corpus would compute, which is what makes
-      incremental-vs-full pair parity hold even with the guard active.
-      ``n_width_docs`` is the width-source row attestation (guard
-      skip + flag-relation broadcast sizing).
     """
     from ._cache import cached_relation
     # the ONE key-construction definition (band_key_index) — q51's
@@ -262,26 +236,22 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str, bands: int = 2,
     # its groupBy+join instead of paying two exchanges per band for a
     # filter that cannot trigger (at corpus scale n_docs >> max_bucket
     # and the guard always stays)
-    wsrc = keys if width_keys is None else width_keys
-    n_wsrc = n_docs if width_keys is None else n_width_docs
-    guard_needed = n_wsrc is None or n_wsrc > max_bucket
+    guard_needed = n_docs is None or n_docs > max_bucket
     flagged = keys
     if guard_needed:
         # per-band bucket-width SURVIVAL FLAGS (distinct band keys ≤
-        # the width-source rows, so the same size attestation governs
-        # each broadcast). Flags instead of destructive per-band
-        # filters so first-match emission can test band SURVIVAL: a
+        # docs, so the same size attestation governs each broadcast).
+        # Flags instead of destructive per-band filters so
+        # first-match emission can test band SURVIVAL: a
         # pair whose first matching band is guard-dropped still emits
         # at its first surviving matching band — the oracle's
         # semantics (r7 review finding; previously such a pair was
-        # silently lost whenever the guard fired). The inner join is
-        # lossless because wsrc ⊇ keys (trivially when it IS keys;
-        # a contract when the caller passes width_keys).
+        # silently lost whenever the guard fired).
         for i in range(bands):
-            wf = (wsrc.groupBy(f"_k{i}")
+            wf = (keys.groupBy(f"_k{i}")
                   .agg((F.count("*") <= max_bucket).alias(f"_ok{i}")))
             flagged = flagged.join(
-                _maybe_broadcast(wf, n_wsrc, broadcast_max_rows),
+                _maybe_broadcast(wf, n_docs, broadcast_max_rows),
                 f"_k{i}")
     out = None
     for b in range(bands):
@@ -1300,11 +1270,12 @@ def incremental_near_dup_candidates(new_docs: DataFrame,
     - corpus signatures are NEVER recomputed — the index relation is
       read in place; only the batch (ingest-sized) pays the shingle +
       MinHash stages;
-    - per band, the probe is an equi-join of the batch keys into the
-      index; under the ``n_new`` attestation the batch side broadcasts,
-      so the corpus-sized index never reshuffles (land it bucketed on
-      the band keys to also skip the scan-side exchange — the
-      incremental_exact layout contract);
+    - ONE probe join for every band and both pair families: the batch
+      keys probe index ∪ batch keys tagged by source, one row per (doc,
+      band) on each side; a batch match needs ``id_new < id_match``
+      (the intra-batch pair set). Under the ``n_new`` attestation the
+      batch side broadcasts, so the corpus-sized index is read once and
+      never reshuffles;
     - first-match-only emission across bands (the
       `lsh_candidate_pairs` trick): a pair matching several bands is
       emitted by its FIRST matching band only — the union is exactly
@@ -1316,13 +1287,10 @@ def incremental_near_dup_candidates(new_docs: DataFrame,
       full re-run over the merged corpus computes, so incremental
       pair-set parity with the full pipeline holds even with the
       guard active — including a bucket that straddles ``max_bucket``
-      across the index/batch split (index-only or batch-only widths
-      would keep it while the full run drops it, or vice versa; the
-      r7 advisor counterexample). Short-circuited when ``n_index +
-      n_new`` attests the merged corpus under ``max_bucket``. The
-      width relations are corpus-cardinality-sized and follow the
-      module's broadcast attestation (never unconditionally
-      broadcast).
+      across the index/batch split (the r7 advisor counterexample).
+      Short-circuited when ``n_index + n_new`` (an upper bound is
+      enough) attests the merged corpus under ``max_bucket``. The
+      width relations follow the module's broadcast attestation.
 
     ``sig`` lets a caller that already materialized the batch
     signature relation (the streaming sink computes it for the
@@ -1330,67 +1298,50 @@ def incremental_near_dup_candidates(new_docs: DataFrame,
     MinHash stages twice.
     """
     if sig is None:
-        # the batch signature relation is referenced ~3·bands times
-        # below (per-band cross legs + the intra stage's
-        # keys/guards/joins); it is ingest-batch-sized by definition,
-        # so materialize it ONCE — an eager localCheckpoint, not the
-        # session cache, because a long-running streaming caller
-        # submits a NEW batch plan per epoch and plan-keyed cache
-        # entries would accumulate without bound
+        # the batch signature relation feeds both sides of every band
+        # probe; it is ingest-batch-sized, so materialize it ONCE — an
+        # eager localCheckpoint, not the session cache, because a
+        # streaming caller submits a NEW batch plan per epoch and
+        # plan-keyed cache entries would accumulate without bound
         sig = minhash_signature_shingled(new_docs, id_col, text_col,
                                          k=bands * rows, n=shingle_n
                                          ).localCheckpoint(eager=True)
+    band_cols = [f"_k{b}" for b in range(bands)]
     nk = band_key_index(sig, id_col, bands, rows)
+    total = (index_keys.select("_id", *band_cols)
+             .withColumn("source", F.lit("index"))
+             .unionByName(nk.withColumn("source", F.lit("batch"))))
     n_total = (n_index + n_new
                if n_index is not None and n_new is not None else None)
     guard = n_total is None or n_total > max_bucket
-    ix = index_keys
-    band_cols = [f"_k{b}" for b in range(bands)]
-    total_keys = (index_keys.select(*band_cols)
-                  .unionByName(nk.select(*band_cols)))
+    build = total
     if guard:
-        # per-band SURVIVAL FLAGS over the TOTAL (index ∪ batch)
-        # width — see the docstring's parity argument — and not a
-        # destructive filter: a doc over-wide in band 0 still probes
-        # bands 1..n; a pair emits at its first SURVIVING matching
-        # band, so a degenerate early band never costs a pair a later
-        # narrow band finds. The flag relations are
-        # corpus-cardinality-sized → module broadcast attestation.
+        # per-band SURVIVAL FLAGS over the TOTAL width, not a
+        # destructive filter: a pair emits at its first SURVIVING
+        # matching band. A shared key's flag is the same for both docs,
+        # so only the build side carries it.
         for b in range(bands):
-            wf = (total_keys.groupBy(f"_k{b}")
+            wf = (total.groupBy(f"_k{b}")
                   .agg((F.count("*") <= max_bucket).alias(f"_ok{b}")))
-            ix = ix.join(_maybe_broadcast(wf, n_total), f"_k{b}")
-    legs = []
-    a = _maybe_broadcast(nk, n_new).alias("nw")
-    bx = ix.alias("ix")
-
-    def live_match(b: int):
-        m = F.col(f"nw._k{b}") == F.col(f"ix._k{b}")
-        if guard:
-            m = m & F.col(f"ix._ok{b}")
-        return m
-
-    for b in range(bands):
-        cond = live_match(b)
-        for i in range(b):
-            cond = cond & ~live_match(i)
-        legs.append(
-            a.join(bx, cond)
-            .filter(F.col("nw._id") != F.col("ix._id"))
+            build = build.join(_maybe_broadcast(wf, n_total), f"_k{b}")
+    # ONE join for all bands on (band, band key): a row per (doc, band),
+    # carrying the doc's band keys for the first-match test
+    by_band = [F.posexplode(F.array(*band_cols)).alias("_b", "_key")]
+    nw = nk.select("*", *by_band)
+    ix = build.select("*", *by_band)
+    if guard:
+        ix = ix.filter(F.get(F.array(*[f"_ok{b}" for b in range(bands)]),
+                             F.col("_b")))
+    cond = ((F.col("nw._b") == F.col("ix._b"))
+            & (F.col("nw._key") == F.col("ix._key")))
+    for i in range(bands - 1):  # no earlier band matched (and survived)
+        m = F.col(f"nw._k{i}") == F.col(f"ix._k{i}")
+        m = m & F.col(f"ix._ok{i}") if guard else m
+        cond = cond & ((F.col("nw._b") <= i) | ~m)
+    a = _maybe_broadcast(nw, None if n_new is None else n_new * bands)
+    return (a.alias("nw").join(ix.alias("ix"), cond)
+            .filter(F.when(F.col("ix.source") == "batch",
+                           F.col("nw._id") < F.col("ix._id"))
+                    .otherwise(F.col("nw._id") != F.col("ix._id")))
             .select(F.col("nw._id").alias("id_new"),
-                    F.col("ix._id").alias("id_match")))
-    cross = legs[0]
-    for leg in legs[1:]:
-        cross = cross.unionByName(leg)
-    # the intra-batch leg guards on the SAME total widths: two batch
-    # docs sharing a bucket the merged corpus makes degenerate must
-    # not pair here when the full run would drop them
-    intra = (lsh_candidate_pairs(sig, id_col, bands=bands, rows=rows,
-                                 max_bucket=max_bucket, n_docs=n_new,
-                                 cache_keys=False,
-                                 width_keys=total_keys,
-                                 n_width_docs=n_total)
-             .select(F.col("id_a").alias("id_new"),
-                     F.col("id_b").alias("id_match")))
-    return (cross.withColumn("source", F.lit("index"))
-            .unionByName(intra.withColumn("source", F.lit("batch"))))
+                    F.col("ix._id").alias("id_match"), F.col("ix.source")))

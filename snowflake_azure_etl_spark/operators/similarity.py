@@ -45,16 +45,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def _cos_qv_cv() -> Column:
-    """The scored-pair cosine over the module's canonical (qv, cv)
-    column names — built once per JVM (VERDICT r10 #2: the fold tree
-    costs ~40 py4j round-trips; every topk variant re-created it per
-    invocation once the result legs were de-memoized)."""
-    from ._cache import cached_column
-    return cached_column(("cos", "qv", "cv"),
-                         lambda: cosine(F.col("qv"), F.col("cv")))
-
-
 def _cos_normed() -> Column:
     """Cosine over (qv, cv) with the norms PRECOMPUTED per side
     (canonical columns _nq/_nc) — the semdedup norms-once trick

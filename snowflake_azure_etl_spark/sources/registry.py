@@ -123,29 +123,37 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return out
 
 
-def stage_row_count(sf_dir: str, table: str) -> int | None:
-    """Exact row count from parquet footer metadata — no Spark job, no
-    data read. This is what a lake catalog/metastore hands out for free;
-    operators that need a corpus-size attestation (broadcast gating in
-    `operators.dedup`) use it instead of running a count() job per
-    query. Returns None when the source isn't local parquet (caller
-    falls back to count())."""
-    import os
+def footer_row_count(paths: list[str]) -> int | None:
+    """Exact row count of parquet files from their footers — no Spark
+    job, no data read; what a lake catalog hands out for free, used for
+    size attestations instead of a count() job. None for a non-local
+    path or an unreadable footer (the caller counts or stays guarded)."""
+    from urllib.parse import unquote, urlparse
 
+    import pyarrow.parquet as pq
+    total = 0
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow is baked in
-        return None
-    path = f"{sf_dir}/{table}.parquet"
-    try:
-        if os.path.isdir(path):
-            return sum(
-                pq.read_metadata(os.path.join(root, f)).num_rows
-                for root, _, files in os.walk(path)
-                for f in files if f.endswith(".parquet"))
-        return pq.read_metadata(path).num_rows
+        for p in paths:
+            u = urlparse(p)
+            if u.scheme not in ("", "file"):
+                return None
+            total += pq.read_metadata(
+                unquote(u.path) if u.scheme else p).num_rows
     except (OSError, ValueError):
         return None
+    return total
+
+
+def stage_row_count(sf_dir: str, table: str) -> int | None:
+    """`footer_row_count` of a stage table (file or directory)."""
+    import os
+
+    path = f"{sf_dir}/{table}.parquet"
+    if os.path.isdir(path):
+        return footer_row_count([
+            os.path.join(root, f) for root, _, files in os.walk(path)
+            for f in files if f.endswith(".parquet")])
+    return footer_row_count([path])
 
 
 #: Only inputs this small are ever rebalanced — above it, the natural

@@ -25,7 +25,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -593,23 +593,18 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
         # the shard ids this batch lands in ride the WRITE job as an
         # Observation metric (r17, VERDICT r16 #5/#6: the read-back of
         # the just-written partition was one extra per-epoch driver
-        # collect). Bootstrap epochs (table just created) fall back to
-        # the pruned read-back: the sink's schema-DDL write is the
-        # FIRST action on the observed plan there and would satisfy
-        # the observation with zero rows.
-        from pyspark.sql import Observation
+        # collect). An Observation reports the FIRST action on its
+        # plan: after the bootstrap epoch's schema-DDL write, or any
+        # action that saw no rows, read the partition back instead.
         existed = spark.catalog.tableExists(winner_table)
         obs = Observation()
         write_win(part.observe(obs, F.collect_set(LINE_SHARD_COL)
                                .alias("sh")),
                   epoch_id)
-        if existed:
-            shards = sorted(obs.get["sh"])
-        else:
-            shards = sorted(
-                r[0] for r in spark.table(winner_table)
-                .filter(F.col(EPOCH_COL) == int(epoch_id))
-                .select(LINE_SHARD_COL).distinct().collect())
+        shards = (existed and sorted(obs.get["sh"])) or sorted(
+            r[0] for r in spark.table(winner_table)
+            .filter(F.col(EPOCH_COL) == int(epoch_id))
+            .select(LINE_SHARD_COL).distinct().collect())
         # index as of this epoch, shard-pruned to the batch's shards
         # and narrowed to hashes the batch can touch (every dedupable
         # batch line is in `part` — just written); unhinted semi-join:

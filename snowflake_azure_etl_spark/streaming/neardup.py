@@ -24,14 +24,16 @@ partition-pruned read of epochs ≤ v.
 
 from __future__ import annotations
 
+import re
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (band_key_index,
                                incremental_near_dup_candidates,
                                minhash_signature_shingled)
+from ..sources.registry import footer_row_count
 from .sinks import EPOCH_COL, idempotent_epoch_sink
 
 
@@ -47,29 +49,42 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
     Per epoch: (1) candidates of the batch vs the index restricted to
     earlier epochs (plus intra-batch pairs) → `cand_table`;
     (2) the batch's band keys → `index_table`. Both epoch-idempotent.
+
+    Both probe attestations cost no job: ``n_new`` is observed on the
+    signature's eager checkpoint (the one action on that plan),
+    ``n_index`` is the footer row count of the index files the probe
+    reads. No bucket is wider than ``n_index + n_new``, so the width
+    guard drops out under ``max_bucket``; an overcount only keeps it
+    on, and an unreadable footer (None) attests nothing.
     """
     write_cands = idempotent_epoch_sink(cand_table)
     write_keys = idempotent_epoch_sink(index_table)
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # ONE materialized signature pass per epoch — shared by the
-        # candidate probe (via the `sig` hand-off) and the index write,
-        # so the batch pays shingle+MinHash exactly once
-        sig = minhash_signature_shingled(batch_df, id_col, text_col,
-                                         k=bands * rows, n=shingle_n
-                                         ).localCheckpoint(eager=True)
+        # ONE materialized signature pass per epoch, shared by the
+        # probe (`sig` hand-off) and the index write
+        obs = Observation()
+        sig = (minhash_signature_shingled(batch_df, id_col, text_col,
+                                          k=bands * rows, n=shingle_n)
+               .observe(obs, F.count(F.lit(1)).alias("n"))
+               .localCheckpoint(eager=True))
         keys = band_key_index(sig, id_col, bands, rows)
         if spark.catalog.tableExists(index_table):
-            index = (spark.table(index_table)
-                     .filter(F.col(EPOCH_COL) < int(epoch_id))
+            index = spark.table(index_table)
+            n_index = footer_row_count([
+                f for f in index.inputFiles()
+                if int(re.search(rf"/{EPOCH_COL}=(\d+)/", f)[1])
+                < int(epoch_id)])
+            index = (index.filter(F.col(EPOCH_COL) < int(epoch_id))
                      .drop(EPOCH_COL))
         else:
-            index = keys.limit(0)
+            index, n_index = keys.limit(0), 0
         cands = incremental_near_dup_candidates(
             batch_df, index, id_col, text_col,
             bands=bands, rows=rows, shingle_n=shingle_n,
-            max_bucket=max_bucket, sig=sig)
+            max_bucket=max_bucket, n_new=obs.get["n"], n_index=n_index,
+            sig=sig)
         write_cands(cands, epoch_id)
         write_keys(keys, epoch_id)
 

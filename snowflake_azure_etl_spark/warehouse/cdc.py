@@ -46,9 +46,11 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
          .withColumn("_present", F.lit(1)))
     n = (new.select(*business_keys, *tracked_cols)
          .withColumn("_present", F.lit(1)))
+    # alias-qualified keys: when `new` derives from `old`, `o[k]` and
+    # `n[k]` are ONE attribute and the predicate is trivially true
     cond = None
     for k in business_keys:
-        c = o[k].eqNullSafe(n[k])
+        c = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
         cond = c if cond is None else (cond & c)
     joined = o.alias("o").join(n.alias("n"), cond, "full_outer")
 

@@ -25,9 +25,9 @@ def create_database(spark: SparkSession, name: str) -> bool:
 
 
 def database_exists(spark: SparkSession, name: str) -> bool:
-    """SHOW DATABASES LIKE analog (S9)."""
-    return any(db.name.lower() == name.lower()
-               for db in spark.catalog.listDatabases())
+    """SHOW DATABASES LIKE analog (S9): a catalog lookup, no Spark job
+    (listing the databases launches jobs on a cold session)."""
+    return spark.catalog.databaseExists(name)
 
 
 def create_table(spark: SparkSession, name: str, schema: T.StructType,

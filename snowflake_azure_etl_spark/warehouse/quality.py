@@ -24,6 +24,7 @@ aggregate result (explode of a rule-count array, driver-free). At
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -104,18 +105,48 @@ def validate(df: DataFrame, rules: list[Rule]) -> DataFrame:
                     (F.col("e.n_violations") == 0).alias("passed")))
 
 
+def key_violations(keys: list[tuple[DataFrame, str]]) -> list[int]:
+    """[not_null, unique] violation counts per (relation, key column) in
+    ONE action: block i of a stacked relation holds its key in `_k{i}`,
+    NULL elsewhere, so one group-by is by (block, key); not_null = NULL
+    group size, unique = Σ(size − 1) over the rest (count − distinct)."""
+    blocks = [df.select(F.lit(i).alias("_b"), F.col(c).alias(f"_k{i}"))
+              for i, (df, c) in enumerate(keys)]
+    stacked = reduce(lambda a, b: a.unionByName(
+        b, allowMissingColumns=True), blocks)
+    kcols = [F.col(f"_k{i}") for i in range(len(keys))]
+    groups = stacked.groupBy("_b", *kcols).agg(F.count("*").alias("_n"))
+    row = groups.agg(*[agg for i, k in enumerate(kcols) for agg in (
+        F.sum(F.when((F.col("_b") == i) & k.isNull(), F.col("_n"))),
+        F.sum(F.when(k.isNotNull(), F.col("_n") - 1)))]).first()
+    return [n or 0 for n in row]
+
+
+def fk_violations(child: DataFrame,
+                  edges: list[tuple[str, DataFrame, str]],
+                  n_parent_rows: int | None = None) -> list[int]:
+    """dbt's `relationships` test (facts → dims) for several (col,
+    parent, parent_col) edges of one child in ONE pass: per edge, child
+    rows whose non-NULL `col` misses `parent.parent_col`. FK values
+    unpivot to (edge, value) rows that LEFT-ANTI-join the parents' keys
+    tagged by edge, broadcast under `n_parent_rows` (all parents)."""
+    from ..operators.dedup import _maybe_broadcast
+
+    keys = reduce(lambda a, b: a.unionByName(b), [
+        parent.select(F.lit(i).alias("_e"), F.col(pcol).alias("_v"))
+        for i, (_, parent, pcol) in enumerate(edges)])
+    values = (child.select(F.posexplode(F.array(*[c for c, _, _ in edges]))
+                           .alias("_e", "_v"))
+              .filter(F.col("_v").isNotNull()))
+    orphans = values.join(_maybe_broadcast(keys, n_parent_rows),
+                          ["_e", "_v"], "left_anti")
+    return list(orphans.agg(*[F.count(F.when(F.col("_e") == i, 1))
+                              for i in range(len(edges))]).first())
+
+
 def referential_violations(child: DataFrame, col: str,
                            parent: DataFrame, parent_col: str,
                            n_parent_rows: int | None = None) -> int:
-    """dbt's `relationships` test: child rows whose non-NULL `col`
-    has no match in `parent.parent_col` — the star schema's FK
-    integrity (facts → dims). One LEFT ANTI equi-join; the parent key
-    projection is distinct (dim-grain) and broadcasts under the
-    module-standard attestation (`n_parent_rows`), so a fact-sized
-    child never shuffles for a dim-sized check."""
-    from ..operators.dedup import _maybe_broadcast
-
-    keys = parent.select(F.col(parent_col).alias(col)).distinct()
-    return (child.filter(F.col(col).isNotNull())
-            .join(_maybe_broadcast(keys, n_parent_rows), col,
-                  "left_anti").count())
+    """The one-edge case of `fk_violations`."""
+    return fk_violations(child, [(col, parent, parent_col)],
+                         n_parent_rows)[0]

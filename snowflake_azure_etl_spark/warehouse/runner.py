@@ -11,7 +11,8 @@ Engine shape: one SparkSession, one `EtlRun` that sequences step
 functions, logs each with wall-clock + row counts, aborts on the first
 failure (raising EtlStepError — the exit-code analog), and returns a
 summary report. Materialization is `saveAsTable` into a warehouse
-database (overwrite = CREATE OR REPLACE semantics, R6). No sleeps —
+database (overwrite = CREATE OR REPLACE semantics, R6); row accounting
+(R3) rides each write as an Observation, with no read-back. No sleeps —
 the reference's time.sleep(1) pacing is a Snowflake-API courtesy with
 no Spark analog.
 """
@@ -24,7 +25,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..plans.datedim import DIM_DATE_COLUMNS
 from . import ddl
@@ -99,12 +101,20 @@ def _materialize(spark: SparkSession, database: str, name: str,
 
     With the in-memory catalog a table dir can survive a previous JVM
     while the catalog entry didn't; drop both so REPLACE is truly
-    idempotent across sessions."""
+    idempotent across sessions. The count is an Observation on the
+    write, which reports the FIRST action on its plan: a zero is checked
+    against the table, so a count taken by some other action fails loud."""
     full = f"{database}.{name}"
     spark.sql(f"DROP TABLE IF EXISTS {full}")
     ddl.drop_orphan_location(spark, full)
-    df.write.mode("overwrite").format("parquet").saveAsTable(full)
-    return {full: spark.table(full).count()}
+    obs = Observation()
+    (df.observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.mode("overwrite").format("parquet").saveAsTable(full))
+    n = obs.get["n"]
+    if n == 0 and not spark.table(full).isEmpty():
+        raise EtlStepError(f"{full}: the write's row-count Observation "
+                           "saw 0 rows but the table is not empty")
+    return {full: n}
 
 
 def run_warehouse_build(spark: SparkSession, sf_dir: str,
@@ -134,8 +144,8 @@ def run_warehouse_build(spark: SparkSession, sf_dir: str,
 
 #: Post-build column contracts (X-DQ, warehouse.quality): the invariants
 #: the dimensional build guarantees by construction — surrogate keys
-#: present and unique, the unknown member seeded. ONE aggregate pass per
-#: table; a violation aborts the run like any failed step (R2).
+#: present and unique, the unknown member seeded. A violation aborts
+#: the run like any failed step (R2).
 WAREHOUSE_CONTRACTS: dict[str, list] = {
     "dim_customer": ["dim_customer_id"],
     "dim_supplier": ["dim_supplier_id"],
@@ -157,37 +167,35 @@ WAREHOUSE_FK_CONTRACTS: list[tuple[str, str, str, str]] = [
 
 
 def validate_warehouse(spark: SparkSession, database: str) -> dict:
-    """Run the key contracts over every built dim (one aggregate pass
-    per table) and the fact→dim FK contracts (one broadcast anti-join
-    per edge); raise on the first violated rule (the runner surfaces
-    it as a failed step), return per-rule pass counts otherwise."""
-    from .quality import Rule, referential_violations, validate
+    """Key contracts of every dim in ONE action, then each child's FK
+    contracts in one pass over it; raise on the first violated rule in
+    declaration order (a failed step), else return per-rule counts."""
+    from .quality import fk_violations, key_violations
 
-    results: dict[str, int] = {}
-    for table, key_cols in WAREHOUSE_CONTRACTS.items():
-        rules = []
-        for k in key_cols:
-            rules += [Rule("not_null", k), Rule("unique", k)]
-        for row in validate(spark.table(f"{database}.{table}"),
-                            rules).collect():
-            if not row["passed"]:
-                raise EtlStepError(
-                    f"contract violated: {table}.{row['rule']} "
-                    f"({row['n_violations']} violations)")
-            results[f"{table}.{row['rule']}"] = row["n_violations"]
-    for child, col, parent, pcol in WAREHOUSE_FK_CONTRACTS:
+    keys = [(t, k) for t, cols in WAREHOUSE_CONTRACTS.items() for k in cols]
+    names = [f"{t}.{k}_{c}" for t, k in keys for c in ("not_null", "unique")]
+    counts = key_violations([(spark.table(f"{database}.{t}"), k)
+                             for t, k in keys])
+    for name, n in zip(names, counts):
+        if n:
+            raise EtlStepError(f"contract violated: {name} ({n} violations)")
+    results = dict.fromkeys(names, 0)
+    for child in dict.fromkeys(c for c, *_ in WAREHOUSE_FK_CONTRACTS):
         try:
             child_df = spark.table(f"{database}.{child}")
         except Exception:
             continue  # contract tables are optional per-deployment
-        n = referential_violations(child_df, col,
-                                   spark.table(f"{database}.{parent}"),
-                                   pcol, n_parent_rows=1_000_000)
-        if n:
-            raise EtlStepError(
-                f"contract violated: {child}.{col} -> {parent}.{pcol} "
-                f"({n} orphaned rows)")
-        results[f"{child}.{col}__references__{parent}"] = 0
+        edges = [e[1:] for e in WAREHOUSE_FK_CONTRACTS if e[0] == child]
+        orphans = fk_violations(
+            child_df, [(col, spark.table(f"{database}.{parent}"), pcol)
+                       for col, parent, pcol in edges],
+            n_parent_rows=1_000_000)
+        for (col, parent, pcol), n in zip(edges, orphans):
+            if n:
+                raise EtlStepError(
+                    f"contract violated: {child}.{col} -> {parent}.{pcol} "
+                    f"({n} orphaned rows)")
+            results[f"{child}.{col}__references__{parent}"] = 0
     return results
 
 

@@ -123,3 +123,33 @@ def test_snapshot_diff_property_random(spark):
         assert got == want
 
     check()
+
+
+def test_self_derived_snapshots_join_two_distinct_key_attributes(spark):
+    """`new` derived from `old` shares its lineage (q65's CDC leg): the
+    join condition must compare the old side's key attribute with the
+    new side's as written — two distinct attributes — and never be
+    built as one attribute compared with itself, which Spark flags as a
+    "trivially true" predicate while it constructs the condition."""
+    import re
+
+    old = spark.createDataFrame(OLD, "k bigint, name string, city string")
+    new = old.filter(~F.col("k").eqNullSafe(5))
+    core = spark._jvm.org.apache.logging.log4j.core
+    root = (spark._jvm.org.apache.logging.log4j.LogManager
+            .getContext(False).getConfiguration().getRootLogger())
+    log = spark._jvm.java.io.StringWriter()
+    app = core.appender.WriterAppender.createAppender(
+        None, None, log, "cdc-self-join", False, True)
+    app.start()
+    root.addAppender(app, None, None)
+    try:
+        diff = cdc.snapshot_diff(old, new, ["k"], ["name", "city"])
+    finally:
+        root.removeAppender("cdc-self-join")
+    assert "trivially true" not in log.toString()
+    plan = diff._jdf.queryExecution().analyzed().toString()
+    cond = re.search(r"Join FullOuter, (.*)", plan).group(1)
+    refs = re.findall(r"\bk#(\d+)", cond)
+    assert len(refs) == 2 and refs[0] != refs[1], cond
+    assert {(r["op"], r["k"]) for r in diff.collect()} == {("D", 5)}

@@ -216,3 +216,46 @@ def test_line_dedup_separator_containing_quote_terminator(spark):
     assert got[1][0] == sep.join(["dup line", "alpha", "beta"])
     assert got[2] == ("gamma", 2, 1)          # cross-doc dup died
     assert got[3] == ("no separator here", 1, 1)
+
+
+def test_line_dedup_sink_reads_shards_back_when_observation_is_empty(
+        spark, monkeypatch):
+    """The line-dedup ingest sink takes the batch's shard set from an
+    Observation on the winner write, which reports only the FIRST action
+    on its plan. An empty set (an action that saw no rows ran first)
+    must fall back to the pruned read-back of the just-written
+    partition, not scrub against an empty index: with every Observation
+    blind, the online scrub still equals the batch operator."""
+    from pyspark.sql import Observation
+
+    from snowflake_azure_etl_spark.streaming import ingest
+    from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
+    from snowflake_azure_etl_spark.warehouse import ddl
+
+    class BlindShards(Observation):
+        @property
+        def get(self):
+            return {"sh": []}
+
+    db = "linededup_blind_obs_db"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    win_t, scrub_t = f"{db}.winners", f"{db}.scrubbed"
+    for t in (win_t, scrub_t):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        ddl.drop_orphan_location(spark, t)
+    batches = [
+        [(1, "cookie banner\nunique alpha\nnav menu"),
+         (2, "cookie banner\nunique beta")],
+        [(3, "nav menu\ncookie banner\nunique gamma"), (4, "cookie banner")],
+    ]
+    monkeypatch.setattr(ingest, "Observation", BlindShards)
+    sink = ingest.line_dedup_ingest_sink(win_t, scrub_t, n_shards=8)
+    for i, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, "doc_id long, text string"), i)
+    whole = spark.createDataFrame([r for b in batches for r in b],
+                                  "doc_id long, text string")
+    want = {r["doc_id"]: (r["text"], r["n_lines_kept"])
+            for r in dedup.line_dedup(whole).collect()}
+    got = {r["doc_id"]: (r["text"], r["n_lines_kept"])
+           for r in spark.table(scrub_t).drop(EPOCH_COL).collect()}
+    assert got == want
