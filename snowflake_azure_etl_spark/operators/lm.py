@@ -420,20 +420,8 @@ def trigram_lm_bits(docs: DataFrame, id_col: str, text_col: str,
                     ppl.alias("lm3_ppl_bits")))
 
 
-#: Above this attested scored-corpus row count the tercile cuts take
-#: the partition-parallel cumulative-count path (the packing switch's
-#: edge, `plans.surrogate.BIG_DIM_MAX_ROWS`): the distinct-score
-#: relation is bounded by min(n_docs, score-domain size ≈ 3·10⁸
-#: integers), which at 10¹⁰ documents is hundreds of millions of rows
-#: — too many for ONE task's sort (VERDICT r12 #1).
-def _big_corpus_max_rows() -> int:
-    from ..plans.surrogate import BIG_DIM_MAX_ROWS
-    return BIG_DIM_MAX_ROWS
-
-
 def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
-                n_rows: int | None = None,
-                big_max_rows: int | None = None) -> DataFrame:
+                n_rows: int | None = None) -> DataFrame:
     """ONE row (t1, t2): the exact tercile cuts of the scored
     perplexity distribution — CCNet's actual head/middle/tail split
     (Wenzek et al. 2019 §4.3), where the average-threshold `lm_keep`
@@ -447,10 +435,10 @@ def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
     broadcasts always.
 
     `n_rows` is the caller's corpus-size attestation (footer/catalog
-    count; an upper bound is fine). Above `big_max_rows` (default
-    `plans.surrogate.BIG_DIM_MAX_ROWS` — the packing/surrogate-key
-    edge) the cumulative count switches from the single global window
-    to `plans.prefix.ranged_prefix_sum` (range-repartition +
+    count; an upper bound is fine). Above `plans.prefix.
+    WINDOW_MAX_ROWS` (the packing/surrogate-key edge) the cumulative
+    count switches from the single global window to
+    `plans.prefix.ranged_prefix_sum` (range-repartition +
     per-partition window + a parallelism-bounded driver prefix), so
     the one single-partition sort this build used to carry at 100 TB
     is gone, and the scored-document total rides the prefix pass's
@@ -464,19 +452,21 @@ def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
     an unattested call here used to pick the single-task window shape
     silently, the one way the r12 scale-killer could return. Unknown
     size now means "assume big": the parallel path is correct at every
-    size, so the single-partition sort is opt-in BY attestation only."""
-    big = big_max_rows if big_max_rows is not None else _big_corpus_max_rows()
+    size, so the single-partition sort is opt-in BY attestation only.
+    The distinct-score relation is bounded by min(n_docs, score-domain
+    size ≈ 3·10⁸ integers), which at 10¹⁰ documents is hundreds of
+    millions of rows — too many for ONE task's sort (VERDICT r12 #1)."""
+    from ..plans.prefix import WINDOW_MAX_ROWS, ranged_prefix_sum
     p = F.col(ppl_col)
     dist = (scored.filter(p.isNotNull())
             .groupBy(p.alias("_p")).agg(F.count("*").alias("_c")))
-    if n_rows is None or n_rows > big:
+    if n_rows is None or n_rows > WINDOW_MAX_ROWS:
         # the grand total rides the driver-side per-partition sums
         # the prefix pass already collected — no second aggregation
         # over the distinct-score relation (r13 review), and the
         # pinned relation is session-cached so repeat maintenance
         # refreshes reuse one persisted copy
-        from ..plans.prefix import ranged_prefix_sum_and_total
-        excl, total = ranged_prefix_sum_and_total(
+        excl, total = ranged_prefix_sum(
             dist, F.col("_c"), "_excl", order_by=["_p"])
         cum = (excl.withColumn("_cum", F.col("_excl") + F.col("_c"))
                .withColumn("_n", F.lit(int(total)).cast("long")))

@@ -12,10 +12,10 @@ floor((offset + n - 1) / ctx)``.
 
 100 TB design: the only non-narrow step is the prefix sum, and a
 global running total is exactly the computation a single-partition
-window CANNOT carry at scale. The auto-switch mirrors
-`plans.surrogate.with_surrogate_key`: small corpora take the global
-window (one task, fine for test scale); above
-``BIG_CORPUS_MAX_ROWS`` attested rows, `plans.prefix.
+window CANNOT carry at scale. The switch is `plans.prefix`'s one
+size edge, as for surrogate keys: small or unattested corpora take
+the global window (one task, fine for test scale); above
+``prefix.WINDOW_MAX_ROWS`` attested rows, `plans.prefix.
 ranged_prefix_sum` computes the identical offsets partition-parallel
 (range-repartition + per-partition window + driver-side prefix of
 numPartitions partials — bounded by parallelism, not data). Every
@@ -35,17 +35,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.prefix import ranged_prefix_sum, window_prefix_sum
-from ..plans.surrogate import BIG_DIM_MAX_ROWS
+from ..plans.prefix import (WINDOW_MAX_ROWS, ranged_prefix_sum,
+                            window_prefix_sum)
 from . import text
 
 #: Context window of the sequences being packed.
 PACK_CTX = 2048
-
-#: Above this attested corpus row count the prefix sum takes the
-#: partition-parallel path (same practical single-task-sort edge as
-#: the surrogate-key switch).
-BIG_CORPUS_MAX_ROWS = BIG_DIM_MAX_ROWS
 
 
 def shuffle_order(id_col: Column | str, seed: str = "shuffle") -> Column:
@@ -64,8 +59,7 @@ def pack_offsets(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", ctx: int = PACK_CTX,
                  weight: Column | None = None,
                  n_rows: int | None = None,
-                 order_col: Column | None = None,
-                 big_max_rows: int = BIG_CORPUS_MAX_ROWS) -> DataFrame:
+                 order_col: Column | None = None) -> DataFrame:
     """docs + (n_tokens, token_offset, pack_first_seq, pack_last_seq).
 
     `weight` overrides the token counter (default: whitespace
@@ -96,9 +90,9 @@ def pack_offsets(docs: DataFrame, id_col: str = "doc_id",
                            if order_col is not None else []))
     order_by: list = (["_ord", id_col] if order_col is not None
                       else [id_col])
-    if n_rows is not None and n_rows > big_max_rows:
-        offs = ranged_prefix_sum(narrow, F.col("n_tokens"),
-                                 "token_offset", order_by)
+    if n_rows is not None and n_rows > WINDOW_MAX_ROWS:
+        offs, _ = ranged_prefix_sum(narrow, F.col("n_tokens"),
+                                    "token_offset", order_by)
     else:
         offs = window_prefix_sum(narrow, F.col("n_tokens"),
                                  "token_offset", order_by)

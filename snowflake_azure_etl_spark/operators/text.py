@@ -193,7 +193,7 @@ def token_vocab(docs, text_col: str = "text", min_doc_freq: int = 1,
     partial) — the shuffle key is the token, uniform for natural text;
     `top_k` compiles to TakeOrderedAndProject (per-partition heaps),
     never a global sort; the full-vocabulary ranking goes through the
-    partition-parallel ranged keying plan (`plans.surrogate.
+    partition-parallel ranged keying plan (`plans.prefix.
     ranged_dense_keys`) — a real vocabulary is millions of rows, and a
     single-partition rank window would be the classic hidden
     bottleneck."""
@@ -215,7 +215,7 @@ def token_vocab(docs, text_col: str = "text", min_doc_freq: int = 1,
         head = agg.orderBy(*order).limit(top_k)
         return head.withColumn(
             "rank", F.row_number().over(Window.orderBy(*order)))
-    from ..plans.surrogate import ranged_dense_keys
+    from ..plans.prefix import ranged_dense_keys
     ranked = ranged_dense_keys(agg, "rank", order_by=order, offset=0)
     return ranked.withColumn("rank", F.col("rank").cast("int"))
 

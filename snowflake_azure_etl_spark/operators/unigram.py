@@ -69,6 +69,8 @@ extends the LLM-pipeline surface beside `operators/bpe.py`
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -274,19 +276,33 @@ def viterbi_words(words: DataFrame, costs: dict[str, int],
     plan literal up to `map_lit_max` (default UNIGRAM_MAP_LIT_MAX)
     pieces and as a one-row attested-broadcast map relation above it
     (VERDICT r13 #3) — identical results, pinned in tests."""
+    return _viterbi_words(words, costs, k, unk_cost, map_lit_max,
+                          memo=True)
+
+
+def _viterbi_words(words: DataFrame, costs: dict[str, int], k: int,
+                   unk_cost: int | None, map_lit_max: int | None,
+                   memo: bool) -> DataFrame:
+    """`viterbi_words`; `memo=False` skips the literal-map expression
+    memo — for the EM loop, whose costs change every round, so each
+    round's entry would never be reused and the memo would only grow
+    (ADVICE r17)."""
     from ._cache import cached_column
     if len(costs) <= _lit_max(map_lit_max):
+        def build() -> Column:
+            return viterbi_expr(F.col("word"), _costs_map_lit(costs), k,
+                                unk_cost)
         # the fold tree costs ~100s of py4j round-trips to construct
         # (r17 profile: ~0.4-1.8 s/call under load) and is rebuilt for
         # every consumer of the SAME model (wseg lookup + encode legs,
         # and every bench attempt's cold rebuild) — a Column is pure
         # unresolved code, so it memoizes per (costs, k, unk) like the
-        # ADC/fold trees (_cache.cached_column)
-        best = cached_column(
-            ("viterbi_words_best", tuple(sorted(costs.items())), k,
-             unk_cost),
-            lambda: viterbi_expr(F.col("word"), _costs_map_lit(costs),
-                                 k, unk_cost))
+        # ADC/fold trees (_cache.cached_column), under a digest of the
+        # costs so a large model does not become a large memo key
+        digest = hashlib.md5(
+            repr(sorted(costs.items())).encode()).hexdigest()
+        best = (cached_column(("viterbi_words_best", digest, k, unk_cost),
+                              build) if memo else build())
         src = words
     else:
         src = words.crossJoin(
@@ -467,7 +483,7 @@ def _train_from_words(words: DataFrame, rounds: int, k: int,
         # (unsegmentable) word contributes to neither — exactly the
         # old sum-over-NULL semantics; posexplode of its NULL segs
         # emits nothing, matching explode.
-        agg = (viterbi_words(words, costs, k)
+        agg = (_viterbi_words(words, costs, k, None, None, memo=False)
                .select("freq", "cost",
                        F.posexplode("segs").alias("pos", "piece"))
                .groupBy("piece")

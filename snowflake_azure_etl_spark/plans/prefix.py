@@ -1,27 +1,38 @@
-"""Partition-parallel exclusive prefix sum over a global ordering.
+"""Ordered numbering over a global ordering: the engine's one
+partition-parallel pinned pass.
 
-The general form of `plans.surrogate.ranged_dense_keys` (whose keys
-are the prefix sum of weight 1): a global running total in `order_by`
-order, computed without a single-partition window.
+The reference numbers rows with Snowflake IDENTITY(1,1) (SURVEY §1.3,
+§4.3.2); the engine rebuilds every ordered numbering — surrogate keys
+(`plans.surrogate`), the vocabulary rank (`operators.text`), packing
+token offsets (`operators.packing`) and the tercile cumulative count
+(`operators.lm`) — as an exclusive prefix sum in `order_by` order.
+Dense keys are its weight-1 case.
 
-Physical plan (all JVM-side):
+Two physical plans, chosen by each caller from ONE constant
+(`WINDOW_MAX_ROWS`) against its attested row count:
 
-1. range-repartition on the order key — disjoint ordered ranges;
-2. pin membership (`_pid` = spark_partition_id) and PERSIST so the
-   two passes below see the same partitioning;
-3. per-partition weight totals (numPartitions rows) collected to the
-   driver and turned into a `_pid -> cumulative-offset` map literal —
-   bounded by cluster parallelism, never by data;
-4. per-partition exclusive window sum + the partition's offset.
+- **window** (small inputs): one global window — a single-partition
+  sort, the right plan when the whole relation fits one task;
+- **ranged** (`_pinned_offsets`, all JVM-side):
+  1. range-repartition on the order key — disjoint ordered ranges;
+  2. pin membership (`_pid` = spark_partition_id) and persist through
+     the session cache, so the two passes below see the same
+     partitioning;
+  3. per-partition weight totals (numPartitions rows) collected to the
+     driver and turned into a `_pid -> cumulative-offset` map literal —
+     bounded by cluster parallelism, never by data;
+  4. a per-partition window + the partition's offset.
 
 Global order = range order + in-partition order, so for a unique
-`order_by` the result equals the global `SUM(w) OVER (ORDER BY …
-ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)` — the oracle
-expression — with the sort fully parallel.
+`order_by` the ranged result equals the global window's —
+`SUM(w) OVER (ORDER BY … ROWS BETWEEN UNBOUNDED PRECEDING AND
+1 PRECEDING)` for the prefix sum, `ROW_NUMBER() OVER (ORDER BY …)`
+for the keys — with the sort fully parallel, regardless of where the
+sampled range boundaries fall.
 
-Partition drift between the size pass and the sum pass (impossible
-while the pinned relation stays persisted) FAILS LOUDLY through the
-same raise_error discipline as the surrogate keys.
+Partition drift between the size pass and the numbering pass
+(impossible while the pinned relation stays persisted) FAILS LOUDLY
+via raise_error instead of emitting NULL offsets.
 """
 
 from __future__ import annotations
@@ -29,40 +40,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _offset_map_expr(sums: list, what: str) -> Column:
-    prefix: dict[int, int] = {}
-    acc = 0
-    for row in sorted(sums, key=lambda r: r["_pid"]):
-        prefix[row["_pid"]] = acc
-        acc += row["_wsum"] or 0
-    mapped = F.element_at(
-        F.create_map(*[F.lit(x) for pid, base in sorted(prefix.items())
-                       for x in (pid, base)]),
-        F.col("_pid"))
-    return F.when(
-        mapped.isNull(),
-        F.raise_error(F.concat(
-            F.lit(f"{what}: partition id "),
-            F.col("_pid").cast("string"),
-            F.lit(" not seen by the size pass — partitioning drifted "
-                  "between passes"))).cast("long")
-    ).otherwise(mapped)
+#: Above this attested row count ordered numbering takes the ranged
+#: plan. ~5M rows is the practical edge of a sane single-task sort.
+WINDOW_MAX_ROWS = 5_000_000
 
 
-def _pinned_and_sums(df: DataFrame, weight: Column,
-                     order_by: list[str | Column],
-                     num_partitions: int | None) -> tuple[DataFrame, list]:
-    """The shared first phase: range-repartition, pin membership,
-    persist, collect per-partition totals. The pinned relation is
-    registered in the SESSION cache (keyed by its logical plan) so
-    (a) repeat builds of the same prefix sum reuse one persisted
-    relation instead of stacking a new entry per call — the
-    corpus.py/lm-gate leak class, found here by the r13 review on the
-    tercile maintenance path — and (b) `clear_cache` owns the release
-    (the relation must STAY persisted while its result is live: the
-    partition-drift guard's correctness depends on it, see module
-    docstring)."""
+def _pinned_offsets(df: DataFrame, weight: Column,
+                    order_by: list[str | Column],
+                    num_partitions: int | None
+                    ) -> tuple[DataFrame, Column | None, int]:
+    """The shared pass (steps 1-3 of the module docstring): returns
+    the pinned relation (`df` + `_w` + `_pid`), the drift-guarded
+    `_pid -> offset` expression (None for empty input) and the grand
+    total of `weight`.
+
+    The pinned relation is registered in the SESSION cache (keyed by
+    its logical plan) so (a) repeat builds of the same numbering reuse
+    one persisted relation instead of stacking a new entry per call,
+    and (b) `clear_cache` owns the release — the relation must STAY
+    persisted while its result is live, because the drift guard's
+    correctness depends on it."""
     from ..operators._cache import cached_relation
     spark = df.sparkSession
     nparts = num_partitions or spark.sparkContext.defaultParallelism
@@ -72,56 +69,69 @@ def _pinned_and_sums(df: DataFrame, weight: Column,
         .withColumn("_pid", F.spark_partition_id()),
         "ranged_prefix_pinned", eager=False)
     sums = pinned.groupBy("_pid").agg(F.sum("_w").alias("_wsum")).collect()
-    return pinned, sums
+    if not sums:
+        return pinned, None, 0
+    pairs: list[Column] = []
+    acc = 0
+    for row in sorted(sums, key=lambda r: r["_pid"]):
+        pairs += [F.lit(row["_pid"]), F.lit(acc)]
+        acc += row["_wsum"] or 0
+    # element_at returns NULL for a missing key: a _pid the size pass
+    # never saw must raise, not silently NULL the numbering
+    mapped = F.element_at(F.create_map(*pairs), F.col("_pid"))
+    offset = F.when(
+        mapped.isNull(),
+        F.raise_error(F.concat(
+            F.lit("ordered numbering: partition id "),
+            F.col("_pid").cast("string"),
+            F.lit(" not seen by the size pass — partitioning drifted "
+                  "between passes"))).cast("long")
+    ).otherwise(mapped)
+    return pinned, offset, acc
 
 
 def ranged_prefix_sum(df: DataFrame, weight: Column, out_col: str,
                       order_by: list[str | Column],
-                      num_partitions: int | None = None) -> DataFrame:
-    """`df` + `out_col` = exclusive prefix sum of `weight` in global
-    `order_by` order, partition-parallel (see module docstring)."""
-    pinned, sums = _pinned_and_sums(df, weight, order_by,
-                                    num_partitions)
-    if not sums:  # empty input: keep the schema, no rows
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    offset = _offset_map_expr(sums, "ranged_prefix_sum")
+                      num_partitions: int | None = None
+                      ) -> tuple[DataFrame, int]:
+    """(`df` + `out_col`, Σweight): the exclusive prefix sum of
+    `weight` in global `order_by` order, partition-parallel, plus the
+    grand total — the driver already holds the per-partition sums it
+    prefixes, so a consumer needing Σw (lm_terciles' scored-document
+    count) reads it without a second aggregation."""
+    pinned, offset, total = _pinned_offsets(df, weight, order_by,
+                                            num_partitions)
+    if offset is None:  # empty input: keep the schema, no rows
+        return df.withColumn(out_col, F.lit(None).cast("long")), 0
     w = (Window.partitionBy("_pid").orderBy(*order_by)
          .rowsBetween(Window.unboundedPreceding, -1))
     return (pinned
             .withColumn(out_col,
                         offset + F.coalesce(F.sum("_w").over(w), F.lit(0)))
+            .drop("_pid", "_w")), total
+
+
+def ranged_dense_keys(df: DataFrame, key_col: str,
+                      order_by: list[str | Column],
+                      offset: int = 1) -> DataFrame:
+    """Keys offset+1, offset+2, ... in `order_by` order: the weight-1
+    prefix sum, numbered inside each partition by row_number. For a
+    unique `order_by` the keys are exactly the global row_number."""
+    pinned, base, _ = _pinned_offsets(df, F.lit(1), order_by, None)
+    if base is None:  # empty input: keep the schema, no rows
+        return df.withColumn(key_col, F.lit(None).cast("long"))
+    w = Window.partitionBy("_pid").orderBy(*order_by)
+    return (pinned
+            .withColumn(key_col,
+                        (F.lit(offset) + base
+                         + F.row_number().over(w)).cast("long"))
             .drop("_pid", "_w"))
-
-
-def ranged_prefix_sum_and_total(df: DataFrame, weight: Column,
-                                out_col: str,
-                                order_by: list[str | Column],
-                                num_partitions: int | None = None
-                                ) -> tuple[DataFrame, int]:
-    """`ranged_prefix_sum` plus the GRAND total of `weight` — the
-    driver already holds the per-partition sums it prefixes, so a
-    consumer needing Σw (lm_terciles' scored-document count) reads it
-    for free instead of launching a second aggregation over the input
-    (r13 review)."""
-    pinned, sums = _pinned_and_sums(df, weight, order_by,
-                                    num_partitions)
-    if not sums:
-        return df.withColumn(out_col, F.lit(None).cast("long")), 0
-    total = sum(int(r["_wsum"] or 0) for r in sums)
-    offset = _offset_map_expr(sums, "ranged_prefix_sum_and_total")
-    w = (Window.partitionBy("_pid").orderBy(*order_by)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    out = (pinned
-           .withColumn(out_col,
-                       offset + F.coalesce(F.sum("_w").over(w), F.lit(0)))
-           .drop("_pid", "_w"))
-    return out, total
 
 
 def window_prefix_sum(df: DataFrame, weight: Column, out_col: str,
                       order_by: list[str | Column]) -> DataFrame:
-    """The small-input twin: one global window — a single-partition
-    sort, the right plan when the whole relation fits one task."""
+    """The small-input twin of `ranged_prefix_sum`: one global
+    window."""
     w = (Window.orderBy(*order_by)
          .rowsBetween(Window.unboundedPreceding, -1))
     return df.withColumn(

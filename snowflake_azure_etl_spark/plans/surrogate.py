@@ -13,38 +13,25 @@ has no identity columns; the engine's contract is:
   layout);
 - offset: reserves low key space for unknown members (key 1).
 
-Two physical strategies, auto-switched by an attested row count:
-
-- **small dim** (default): one global row_number window — a
-  single-partition sort, fine for reference-sized dims (the whole dim
-  fits one task);
-- **big dim** (`n_rows` > `big_dim_max_rows`): `ranged_dense_keys` —
-  range-repartition on the business key, per-partition row_number,
-  partition-count prefix sums collected to the driver (numPartitions
-  ints, bounded by cluster parallelism, not data). Same keys as the
-  window path for unique order keys (global order = range-partition
-  order + in-partition order, regardless of where the sampled range
-  boundaries fall), but the sort is fully parallel — no
-  single-partition bottleneck at 100× dim scale.
+The numbering itself is `plans.prefix`'s: dims up to
+`prefix.WINDOW_MAX_ROWS` attested rows take one global row_number
+window (a single-partition sort, fine for reference-sized dims);
+bigger ones take `prefix.ranged_dense_keys`, the partition-parallel
+plan with identical keys for unique order keys.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-#: Above this attested row count a dim takes the partition-parallel
-#: keying path. ~5M rows of dim-width data is the practical edge of a
-#: sane single-task sort.
-BIG_DIM_MAX_ROWS = 5_000_000
+from .prefix import WINDOW_MAX_ROWS, ranged_dense_keys
 
 
 def with_surrogate_key(df: DataFrame, key_col: str,
                        order_by: list[str | Column],
                        offset: int = 1,
-                       n_rows: int | None = None,
-                       big_dim_max_rows: int = BIG_DIM_MAX_ROWS) -> DataFrame:
+                       n_rows: int | None = None) -> DataFrame:
     """Assign surrogate keys offset+1, offset+2, ... in business-key order.
 
     offset=1 leaves key 1 free for the unknown member (reference seeds it
@@ -52,106 +39,12 @@ def with_surrogate_key(df: DataFrame, key_col: str,
 
     `n_rows` is the caller's size attestation (catalog/footer row count
     of the staging source — an upper bound is fine): when it exceeds
-    `big_dim_max_rows` the global-window sort is swapped for the
+    `WINDOW_MAX_ROWS` the global-window sort is swapped for the
     partition-parallel `ranged_dense_keys` plan with identical output
     (unique `order_by` assumed — true for every dim here, keyed by
-    business key).
+    business key). An absent attestation keeps the window.
     """
-    if n_rows is not None and n_rows > big_dim_max_rows:
+    if n_rows is not None and n_rows > WINDOW_MAX_ROWS:
         return ranged_dense_keys(df, key_col, order_by, offset)
     w = Window.orderBy(*order_by)
     return df.withColumn(key_col, (F.row_number().over(w) + F.lit(offset)).cast("long"))
-
-
-def _prefix_offset_expr(pinned: DataFrame, what: str) -> Column | None:
-    """Collect per-partition counts of `pinned` (must be persisted so the
-    count and key passes see the same partitioning) and return a
-    _pid -> cumulative-offset map expression. None for empty input.
-
-    A _pid outside the map would silently yield NULL keys (element_at
-    returns NULL on a missing key) — impossible while `pinned` is
-    persisted, so it FAILS LOUDLY via raise_error instead of letting a
-    partitioning drift corrupt the keys."""
-    sizes = pinned.groupBy("_pid").count().collect()
-    if not sizes:
-        return None
-    prefix: dict[int, int] = {}
-    acc = 0
-    for row in sorted(sizes, key=lambda r: r["_pid"]):
-        prefix[row["_pid"]] = acc
-        acc += row["count"]
-    mapped = F.element_at(
-        F.create_map(*[F.lit(x) for pid, base in sorted(prefix.items())
-                       for x in (pid, base)]),
-        F.col("_pid"))
-    return F.when(
-        mapped.isNull(),
-        F.raise_error(F.concat(
-            F.lit(f"surrogate {what}: partition id "),
-            F.col("_pid").cast("string"),
-            F.lit(" not seen by the size pass — partitioning drifted "
-                  "between passes"))).cast("long")
-    ).otherwise(mapped)
-
-
-def ranged_dense_keys(df: DataFrame, key_col: str,
-                      order_by: list[str | Column],
-                      offset: int = 1,
-                      num_partitions: int | None = None) -> DataFrame:
-    """Partition-parallel ORDERED key assignment for very large dims —
-    all JVM-side (no Python row path anywhere):
-
-    1. range-repartition on the business key (disjoint ordered ranges);
-    2. pin membership (`_pid` = spark_partition_id) and PERSIST, so the
-       size pass and the key pass see the same partitioning;
-    3. per-partition row_number over the business key + driver-side
-       prefix sums of the numPartitions counts.
-
-    Global key order = range order + in-partition order, so for unique
-    `order_by` the keys are exactly the global row_number — the same
-    output as the window path, with no single-partition sort."""
-    spark = df.sparkSession
-    nparts = num_partitions or spark.sparkContext.defaultParallelism
-    pinned = (df.repartitionByRange(nparts, *order_by)
-              .withColumn("_pid", F.spark_partition_id())
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    offset_expr = _prefix_offset_expr(pinned, "ranged_dense_keys")
-    if offset_expr is None:  # empty input: keep the schema, no rows
-        return df.withColumn(key_col, F.lit(None).cast("long"))
-    w = Window.partitionBy("_pid").orderBy(*order_by)
-    return (pinned
-            .withColumn(key_col,
-                        (F.lit(offset) + offset_expr
-                         + F.row_number().over(w)).cast("long"))
-            .drop("_pid"))
-
-
-def zip_with_index_keys(df: DataFrame, key_col: str, offset: int = 1) -> DataFrame:
-    """Partition-parallel key assignment in INPUT order (no business-key
-    sort — the analog of zipWithIndex): pin the partitioning, count rows
-    per partition, assign offset + prefix[pid] + local row_number
-    ordered by monotonically_increasing_id (increasing within a
-    partition, so input order is preserved).
-
-    Keys are unique and dense from offset+1; stable for a fixed
-    partitioning. Re-partitioning changes the assignment (the
-    reference's IDENTITY makes the same non-promise across reloads).
-    For deterministic business-key-ordered keys use `ranged_dense_keys`.
-
-    The input is persisted between the size pass and the key pass —
-    without that, a non-deterministic source (shuffle re-execution,
-    sampled reads) could change partition membership between the two
-    jobs and silently mis-key rows; a _pid unseen by the size pass now
-    raises instead of NULLing."""
-    pinned = (df.withColumn("_pid", F.spark_partition_id())
-              .withColumn("_mid", F.monotonically_increasing_id())
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    offset_expr = _prefix_offset_expr(pinned, "zip_with_index_keys")
-    if offset_expr is None:  # empty input: keep the schema, no rows to key
-        return df.withColumn(key_col, F.lit(None).cast("long"))
-    w = Window.partitionBy("_pid").orderBy("_mid")
-    return (pinned
-            .withColumn(key_col,
-                        (F.lit(offset) + offset_expr
-                         + F.row_number().over(w)).cast("long"))
-            .drop("_pid", "_mid"))

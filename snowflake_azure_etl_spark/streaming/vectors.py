@@ -96,6 +96,37 @@ def retrain_centroids(spark: SparkSession, index_table: str,
     land(new, int(cur) + 1)
 
 
+def _check_drift_retention(spark: SparkSession, index_table: str,
+                           drift_table: str, version: int,
+                           epoch_id: int) -> None:
+    """Fail loud when the drift baseline lost history its index kept.
+
+    The baseline sums this quantizer version's earlier drift rows, and
+    every epoch that indexes rows of a version writes drift rows for it
+    first. So an index epoch of this version earlier than the version's
+    earliest drift epoch means drift partitions were vacuumed below
+    the version's first epoch: the baseline would silently shrink."""
+    if not spark.catalog.tableExists(index_table):
+        return
+    first = (spark.table(drift_table)
+             .filter(F.col("q_version") == int(version))
+             .agg(F.min(EPOCH_COL)).collect()[0][0])
+    below = int(epoch_id) if first is None else min(int(first),
+                                                   int(epoch_id))
+    orphaned = (spark.table(index_table)
+                .filter((F.col(EPOCH_COL) < below)
+                        & (F.col("q_version") == int(version))))
+    if not orphaned.isEmpty():
+        raise ValueError(
+            f"vector_ingest_sink: drift table {drift_table} has no rows "
+            f"for q_version {version} before epoch {below}, but index "
+            f"table {index_table} does — drift epochs were vacuumed "
+            "below this version's first index epoch, so the drift "
+            "baseline would silently shrink. Vacuum the index and drift "
+            "tables to the same watermark, or retrain to start a new "
+            "baseline.")
+
+
 def vector_ingest_sink(index_table: str, drift_table: str,
                        centroids_table: str, *,
                        id_col: str = "vec_id",
@@ -180,6 +211,8 @@ def vector_ingest_sink(index_table: str, drift_table: str,
             # version (a retrain resets the baseline — fits are only
             # comparable within one set of centroids). Same longs as
             # the full-history aggregate ⇒ same doubles ⇒ same flags.
+            _check_drift_retention(spark, index_table, drift_table,
+                                   version, epoch_id)
             istat = (spark.table(drift_table)
                      .filter((F.col(EPOCH_COL) < int(epoch_id))
                              & (F.col("q_version") == int(version))

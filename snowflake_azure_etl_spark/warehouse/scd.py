@@ -42,7 +42,7 @@ read one shuffle's output instead of re-joining per branch; at lake
 scale this materialization is the MERGE's copy-on-write working set.
 The new-key pass reuses `with_surrogate_key`'s attested auto-switch
 (global window for dim-sized batches, range-partitioned parallel
-keying above `BIG_DIM_MAX_ROWS`). The max-key probe is one scalar
+keying above `prefix.WINDOW_MAX_ROWS`). The max-key probe is one scalar
 aggregate. Update batches are usually ≪ the dim: pass
 `n_update_rows` to broadcast the batch side under the same
 size-attestation contract as `operators.dedup`.

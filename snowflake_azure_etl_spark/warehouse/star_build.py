@@ -46,8 +46,19 @@ from ..sources.registry import load_tables, stage_row_count
 UNKNOWN_KEY = 1  # reference seeds the unknown member at surrogate key 1
 
 
-def _persisted_dim(df: DataFrame, name: str) -> DataFrame:
-    """Session-persisted dim relation (operators._cache, r7): the
+def _keyed_dim(attrs: DataFrame, name: str, order_by: list[str],
+               n_rows: int | None, unknown_row: dict) -> DataFrame:
+    """The shared tail of every dim build: surrogate keys `{name}_id`
+    in business-key order, the key first and then `attrs`' columns,
+    the hand-seeded unknown member prepended, then session persist.
+
+    The unknown member (key 1 — reference
+    create_dimension_tables.py:91-130) is a JVM-side one-row plan
+    (range+lit), not createDataFrame: shipping a Python row spins up a
+    Python worker for the scan — measurable fixed cost on an otherwise
+    all-JVM plan.
+
+    The result is session-persisted (operators._cache, r7): the
     warehouse PERSISTS dimensions — runner._materialize writes them as
     tables — so workload queries modeling the post-build warehouse
     re-read the same small relation instead of re-running the dim build
@@ -58,22 +69,24 @@ def _persisted_dim(df: DataFrame, name: str) -> DataFrame:
     class the cache documents — and facts are deliberately NOT cached
     (corpus-sized)."""
     from ..operators._cache import cached_relation
-    return cached_relation(df, f"warehouse:{name}", eager=False)
-
-
-def _with_unknown_member(spark: SparkSession, members: DataFrame,
-                         key_col: str, unknown_row: dict) -> DataFrame:
-    """Prepend the hand-seeded unknown member (key 1 — reference
-    create_dimension_tables.py:91-130) to a keyed dim.
-
-    Built as a JVM-side one-row plan (range+lit), not createDataFrame:
-    shipping a Python row spins up a Python worker for the scan —
-    measurable fixed cost on an otherwise all-JVM plan."""
+    key_col = f"{name}_id"
+    members = with_surrogate_key(attrs, key_col, order_by=order_by,
+                                 offset=UNKNOWN_KEY, n_rows=n_rows) \
+        .select(key_col, *attrs.columns)
     row = {**unknown_row, key_col: UNKNOWN_KEY}
-    unknown = spark.range(1).select(*[
+    unknown = attrs.sparkSession.range(1).select(*[
         F.lit(row.get(f.name)).cast(f.dataType).alias(f.name)
         for f in members.schema.fields])
-    return unknown.unionByName(members)
+    return cached_relation(unknown.unionByName(members),
+                           f"warehouse:{name}", eager=False)
+
+
+def _key_map(keys: DataFrame) -> DataFrame:
+    """A dim's (business key, surrogate key) map, broadcast under the
+    key-only attestation — every fact-side key resolution's build
+    side."""
+    return bounded_broadcast(keys, bound="dim surrogate-key map (key-only)",
+                             key_only=True, max_rows=KEY_ONLY_MAX_ROWS)
 
 
 def build_dim_location(spark: SparkSession, t: dict[str, DataFrame],
@@ -95,15 +108,9 @@ def build_dim_location(spark: SparkSession, t: dict[str, DataFrame],
                                                 "region_name").distinct())
     # UNION distinct semantics (U1) — shared locations collapse
     locs = cust_locs.union(supp_locs).distinct()
-    keyed = with_surrogate_key(locs, "dim_location_id",
-                               order_by=["nation_name", "nationkey"],
-                               offset=UNKNOWN_KEY, n_rows=n_rows)
-    return _persisted_dim(_with_unknown_member(
-        spark, keyed.select("dim_location_id", "nationkey", "nation_name",
-                            "region_name"),
-        "dim_location_id",
-        {"nationkey": -1, "nation_name": "Unknown", "region_name": "Unknown"}),
-        "dim_location")
+    return _keyed_dim(locs, "dim_location", ["nation_name", "nationkey"],
+                      n_rows, {"nationkey": -1, "nation_name": "Unknown",
+                               "region_name": "Unknown"})
 
 
 def build_dim_customer(spark: SparkSession, t: dict[str, DataFrame],
@@ -124,16 +131,10 @@ def build_dim_customer(spark: SparkSession, t: dict[str, DataFrame],
                       F.coalesce("dim_location_id",
                                  F.lit(UNKNOWN_KEY)).alias("dim_location_id"),
                       dec("c_acctbal").cast("double").alias("acct_balance")))
-    keyed = with_surrogate_key(joined, "dim_customer_id",
-                               order_by=["custkey"], offset=UNKNOWN_KEY,
-                               n_rows=n_rows)
-    return _persisted_dim(_with_unknown_member(
-        spark, keyed.select("dim_customer_id", "custkey", "customer_name",
-                            "segment", "dim_location_id", "acct_balance"),
-        "dim_customer_id",
-        {"custkey": -1, "customer_name": "Unknown", "segment": "Unknown",
-         "dim_location_id": UNKNOWN_KEY, "acct_balance": 0.0}),
-        "dim_customer")
+    return _keyed_dim(joined, "dim_customer", ["custkey"], n_rows,
+                      {"custkey": -1, "customer_name": "Unknown",
+                       "segment": "Unknown", "dim_location_id": UNKNOWN_KEY,
+                       "acct_balance": 0.0})
 
 
 def build_dim_supplier(spark: SparkSession, t: dict[str, DataFrame],
@@ -154,16 +155,10 @@ def build_dim_supplier(spark: SparkSession, t: dict[str, DataFrame],
                                ).alias("store_label"),
                       F.coalesce("dim_location_id",
                                  F.lit(UNKNOWN_KEY)).alias("dim_location_id")))
-    keyed = with_surrogate_key(joined, "dim_supplier_id",
-                               order_by=["suppkey"], offset=UNKNOWN_KEY,
-                               n_rows=n_rows)
-    return _persisted_dim(_with_unknown_member(
-        spark, keyed.select("dim_supplier_id", "suppkey", "supplier_name",
-                            "store_label", "dim_location_id"),
-        "dim_supplier_id",
-        {"suppkey": -1, "supplier_name": "Unknown", "store_label": "Unknown",
-         "dim_location_id": UNKNOWN_KEY}),
-        "dim_supplier")
+    return _keyed_dim(joined, "dim_supplier", ["suppkey"], n_rows,
+                      {"suppkey": -1, "supplier_name": "Unknown",
+                       "store_label": "Unknown",
+                       "dim_location_id": UNKNOWN_KEY})
 
 
 def build_dim_channel(spark: SparkSession, t: dict[str, DataFrame],
@@ -180,16 +175,10 @@ def build_dim_channel(spark: SparkSession, t: dict[str, DataFrame],
                       F.col("n_regionkey").alias("categorykey"),
                       coalesce_unknown("n_name").alias("channel_name"),
                       coalesce_unknown("r_name").alias("channel_category")))
-    keyed = with_surrogate_key(joined, "dim_channel_id",
-                               order_by=["channelkey"], offset=UNKNOWN_KEY,
-                               n_rows=n_rows)
-    return _persisted_dim(_with_unknown_member(
-        spark, keyed.select("dim_channel_id", "channelkey", "categorykey",
-                            "channel_name", "channel_category"),
-        "dim_channel_id",
-        {"channelkey": -1, "categorykey": -1, "channel_name": "Unknown",
-         "channel_category": "Unknown"}),
-        "dim_channel")
+    return _keyed_dim(joined, "dim_channel", ["channelkey"], n_rows,
+                      {"channelkey": -1, "categorykey": -1,
+                       "channel_name": "Unknown",
+                       "channel_category": "Unknown"})
 
 
 def build_dim_part(spark: SparkSession, t: dict[str, DataFrame],
@@ -204,16 +193,10 @@ def build_dim_part(spark: SparkSession, t: dict[str, DataFrame],
                      coalesce_unknown("p_type").alias("part_type"),
                      F.coalesce("p_size", F.lit(0)).alias("size"),
                      dec("p_retailprice").cast("double").alias("retail_price"))
-    keyed = with_surrogate_key(attrs, "dim_part_id",
-                               order_by=["partkey"], offset=UNKNOWN_KEY,
-                               n_rows=n_rows)
-    return _persisted_dim(_with_unknown_member(
-        spark, keyed.select("dim_part_id", "partkey", "part_name", "brand",
-                            "part_type", "size", "retail_price"),
-        "dim_part_id",
-        {"partkey": -1, "part_name": "Unknown", "brand": "Unknown",
-         "part_type": "Unknown", "size": 0, "retail_price": 0.0}),
-        "dim_part")
+    return _keyed_dim(attrs, "dim_part", ["partkey"], n_rows,
+                      {"partkey": -1, "part_name": "Unknown",
+                       "brand": "Unknown", "part_type": "Unknown",
+                       "size": 0, "retail_price": 0.0})
 
 
 def orderdate_span(t: dict[str, DataFrame]) -> tuple[str, str]:
@@ -253,11 +236,11 @@ def build_fact_sales(spark: SparkSession, t: dict[str, DataFrame],
     dbp = F.round(F.col("l_discount") * 10000).cast("long")         # s4
     net = (epc * (10000 - dbp)).cast("double") / F.lit(1000000.0)
     return (li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
-            .join(bounded_broadcast(cust_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
+            .join(_key_map(cust_keys),
                   orders.o_custkey == cust_keys.custkey, "left")
-            .join(bounded_broadcast(supp_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
+            .join(_key_map(supp_keys),
                   li.l_suppkey == supp_keys.suppkey, "left")
-            .join(bounded_broadcast(part_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
+            .join(_key_map(part_keys),
                   li.l_partkey == part_keys.partkey, "left")
             .select(
                 F.col("l_orderkey").alias("orderkey"),
@@ -290,8 +273,7 @@ def build_fact_sales_target(spark: SparkSession, t: dict[str, DataFrame],
                          F.year("o_orderdate").alias("target_year"))
                 .agg(F.sum(dec("l_quantity")).cast("double")
                      .alias("target_quantity")))
-    return (per_year.join(bounded_broadcast(part_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
-                          "partkey", "left")
+    return (per_year.join(_key_map(part_keys), "partkey", "left")
             .select(F.coalesce("dim_part_id",
                                F.lit(UNKNOWN_KEY)).alias("dim_part_id"),
                     (F.col("target_year") * 10000 + F.lit(101))
@@ -347,9 +329,9 @@ def build_fact_src_sales_target(spark: SparkSession, t: dict[str, DataFrame],
         .select(F.col("channel_name").alias("_channel_name"),
                 F.col("dim_channel_id").alias("_channel_id"))
     return (src
-            .join(bounded_broadcast(store_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
+            .join(_key_map(store_keys),
                   src.target_name == F.col("_store_name"), "left")
-            .join(bounded_broadcast(reseller_keys, bound="dim surrogate-key map (key-only)", key_only=True, max_rows=KEY_ONLY_MAX_ROWS),
+            .join(_key_map(reseller_keys),
                   src.target_name == F.col("_reseller_name"), "left")
             .join(bounded_broadcast(channel_keys, bound="warehouse dim (dim-grain relation)"),
                   src.channel_name == F.col("_channel_name"), "left")

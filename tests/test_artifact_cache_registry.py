@@ -81,8 +81,9 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
             "ranking itself rebuilds per invocation"),
     ("operators/unigram.py", "train_unigram", "cached_build"):
         (1, "ARTIFACT: trained unigram-LM tokenizer model"),
-    ("plans/prefix.py", "_pinned_and_sums", "cached_relation"):
-        (1, "ARTIFACT: per-split prefix-sum offsets relation"),
+    ("plans/prefix.py", "_pinned_offsets", "cached_relation"):
+        (1, "ARTIFACT: per-split prefix-sum offsets relation (every "
+            "ranged ordered numbering: prefix sums and dense keys)"),
     ("sources/registry.py", "rebalance_single_split", "cached_relation"):
         (1, "LAYOUT: the gated single-split rebalance persists the "
             "rebalanced base relation (r16 finding #2 — adjudicated; "
@@ -92,7 +93,7 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
             "keep/close/insert branches of ONE merge"),
     ("warehouse/star_build.py", "_build_star", "rebalance_single_split"):
         (1, "LAYOUT: fact-side scan split for the star build"),
-    ("warehouse/star_build.py", "_persisted_dim", "cached_relation"):
+    ("warehouse/star_build.py", "_keyed_dim", "cached_relation"):
         (1, "ARTIFACT: conformed dimension relations (the warehouse "
             "persists dims once per load)"),
     ("warehouse/star_build.py", "build_star", "cached_build"):

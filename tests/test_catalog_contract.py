@@ -7,6 +7,8 @@ adding a 51st entry."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from snowflake_azure_etl_spark.workload import QUERIES
 
 DRIVER_SWEEP_CAP = 50
@@ -29,7 +31,8 @@ def test_every_query_has_oracle_and_covers():
 def test_driver_entrypoints_expose_catalog():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py")
+        "__spark_entry__",
+        Path(__file__).resolve().parent.parent / "__spark_entry__.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     qs, oracles = mod.queries(), mod.oracle_sql()

@@ -23,7 +23,7 @@ EXPECTED = {
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(REF_DDL_DIR),
-    reason="reference private_ddl not available")
+    reason=f"reference DDL directory {REF_DDL_DIR} is absent")
 
 
 @pytest.fixture(scope="module")

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import lm
+from snowflake_azure_etl_spark.plans.prefix import WINDOW_MAX_ROWS
 
 SCALE = 1 << 20
 MAX_E = 42
@@ -273,7 +274,7 @@ def test_terciles_ranged_path_equals_window_path(spark):
     uni, bi, tri, tot = lm.trigram_lm_model(docs)
     sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
     small = lm.lm_terciles(sc, n_rows=10)      # attested small: window
-    big = lm.lm_terciles(sc, n_rows=10, big_max_rows=5)
+    big = lm.lm_terciles(sc, n_rows=WINDOW_MAX_ROWS + 1)
     assert small.collect() == big.collect()
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower()

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import packing
+from snowflake_azure_etl_spark.plans.prefix import WINDOW_MAX_ROWS
 from snowflake_azure_etl_spark.sources.registry import load_tables
 
 CTX = 64
@@ -41,7 +42,7 @@ def test_offsets_match_python_reference(spark, docs):
 def test_ranged_path_equals_window_path(spark, docs):
     small = packing.pack_offsets(docs, ctx=CTX, n_rows=10)
     big = packing.pack_offsets(docs, ctx=CTX,
-                               n_rows=10, big_max_rows=5)
+                               n_rows=WINDOW_MAX_ROWS + 1)
     cols = ["doc_id", "n_tokens", "token_offset",
             "pack_first_seq", "pack_last_seq"]
     assert sorted(map(tuple, small.select(cols).collect())) == \

@@ -5,8 +5,6 @@ oracle replays (q43's click-graph leg)."""
 
 from __future__ import annotations
 
-import pytest
-
 import random
 
 from snowflake_azure_etl_spark.operators.graph import (PAGERANK_SCALE,
@@ -37,7 +35,6 @@ def _spark_pagerank(spark, edges, **kw):
     return {r["node"]: r["rank"] for r in pagerank(df, **kw).collect()}
 
 
-@pytest.mark.slow
 def test_hub_graph_matches_reference_and_ranks_hub_first(spark):
     edges = [(i, 0) for i in range(1, 8)] + [(0, 1)]
     got = _spark_pagerank(spark, edges)
@@ -45,7 +42,6 @@ def test_hub_graph_matches_reference_and_ranks_hub_first(spark):
     assert max(got, key=got.get) == 0
 
 
-@pytest.mark.slow
 def test_cycle_is_uniform(spark):
     edges = [(i, (i + 1) % 5) for i in range(5)]
     got = _spark_pagerank(spark, edges)

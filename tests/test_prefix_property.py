@@ -27,9 +27,9 @@ def test_ranged_equals_window_equals_python(spark, ws, nparts,
     # present the input in an arbitrary partition layout
     df = (spark.createDataFrame(rows, "id bigint, w bigint")
           .repartition(2 + shuffle_seed))
-    ranged = {r["id"]: r["off"] for r in
-              ranged_prefix_sum(df, F.col("w"), "off", ["id"],
-                                num_partitions=nparts).collect()}
+    out, total = ranged_prefix_sum(df, F.col("w"), "off", ["id"],
+                                   num_partitions=nparts)
+    ranged = {r["id"]: r["off"] for r in out.collect()}
     window = {r["id"]: r["off"] for r in
               window_prefix_sum(df, F.col("w"), "off", ["id"]).collect()}
     acc, py = 0, {}
@@ -37,3 +37,4 @@ def test_ranged_equals_window_equals_python(spark, ws, nparts,
         py[i] = acc
         acc += w
     assert ranged == py == window
+    assert total == acc

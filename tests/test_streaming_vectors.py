@@ -260,6 +260,32 @@ def test_vacuum_epochs_enforces_retention(spark, tables):
     assert vacuum_epochs(spark, index_table, keep_from=1) == 0
 
 
+def test_drift_vacuum_below_version_start_fails_loud(spark, tables):
+    """ADVICE r17: the drift baseline sums this q_version's earlier
+    drift rows, so vacuuming the drift table below the version's first
+    index epoch would silently shrink it. The next epoch must fail
+    loud; vacuuming both tables to one watermark keeps it consistent."""
+    from snowflake_azure_etl_spark.streaming.sinks import vacuum_epochs
+
+    index_table, drift_table, cents_table = tables
+    bootstrap, (aligned, _) = _batches()
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(bootstrap, schema)
+    bootstrap_centroids(corpus, cents_table, n_cells=3)
+    sink = vector_ingest_sink(index_table, drift_table, cents_table)
+    sink(corpus, 0)
+    sink(spark.createDataFrame(aligned, schema), 1)
+    later = spark.createDataFrame(
+        [(i + 5000, v) for i, v in aligned], schema)
+    assert vacuum_epochs(spark, drift_table, keep_from=1) == 1
+    with pytest.raises(ValueError, match="vacuumed below"):
+        sink(later, 2)
+    assert vacuum_epochs(spark, index_table, keep_from=1) == 1
+    sink(later, 2)
+    assert {r[EPOCH_COL] for r in spark.table(drift_table)
+            .select(EPOCH_COL).distinct().collect()} == {1, 2}
+
+
 def test_vacuum_skips_unparseable_partitions(spark):
     """r9 (ADVICE r8): a partition value that doesn't parse as an
     epoch id (corruption, a manually created directory — modeled as a

@@ -12,7 +12,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from snowflake_azure_etl_spark.plans import surrogate
+from snowflake_azure_etl_spark.operators._cache import clear_cache
+from snowflake_azure_etl_spark.plans import prefix, surrogate
 from snowflake_azure_etl_spark.sources.registry import load_tables
 
 
@@ -41,7 +42,7 @@ def test_auto_switch_takes_parallel_path(spark, sf_dir):
     c = load_tables(spark, sf_dir, ("customer",))["customer"]
     keyed = surrogate.with_surrogate_key(
         c, "k", order_by=["c_custkey"], offset=1,
-        n_rows=surrogate.BIG_DIM_MAX_ROWS + 1)
+        n_rows=prefix.WINDOW_MAX_ROWS + 1)
     plan = explain_str(keyed)
     assert "rangepartitioning" in plan.lower()
     # the window partitions by _pid — never a global (unpartitioned) sort
@@ -67,7 +68,7 @@ def test_partition_drift_raises_not_nulls(spark):
     to fail loudly)."""
     df = spark.range(10).withColumn("_pid", F.spark_partition_id())
     # build the guard directly with a poisoned map (offsets only for an
-    # impossible pid), the exact shape _prefix_offset_expr emits
+    # impossible pid), the exact shape prefix._pinned_offsets emits
     mapped = F.element_at(F.create_map(F.lit(-999), F.lit(0)), F.col("_pid"))
     guarded = F.when(
         mapped.isNull(),
@@ -82,3 +83,19 @@ def test_empty_input_keeps_schema(spark):
     out = surrogate.ranged_dense_keys(df, "k", order_by=["bk"])
     assert out.count() == 0
     assert "k" in out.columns
+
+
+def test_ranged_keys_release_on_clear_cache(spark):
+    """The ranged path pins its range-partitioned input through the
+    session cache, so `clear_cache` releases it: after each distinct
+    input the persistent-RDD count is back at its baseline (a raw
+    persist outside the cache stacked one pinned copy per input)."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    clear_cache(spark)
+    baseline = persistent().size()
+    for n in (10, 20, 30):
+        df = spark.range(n).select(F.col("id").alias("bk"))
+        keyed = surrogate.ranged_dense_keys(df, "k", order_by=["bk"])
+        assert keyed.count() == n
+        clear_cache(spark)
+        assert persistent().size() == baseline

@@ -1,7 +1,7 @@
 """Python-reference checks for operators not covered by a DuckDB oracle:
 the polynomial rolling hash (q53 keeps it out of its oracle — DuckDB's
-list_reduce dialect differs) and the partition-parallel surrogate-key
-assigner (plans.surrogate.zip_with_index_keys)."""
+list_reduce dialect differs), shingling, repetition/PII signals and
+the unigram LM and BM25 scorers."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from snowflake_azure_etl_spark.operators.text import (ROLLING_BASE,
                                                       ROLLING_MOD,
                                                       rolling_hash)
 from snowflake_azure_etl_spark.operators import text
-from snowflake_azure_etl_spark.plans.surrogate import zip_with_index_keys
 from snowflake_azure_etl_spark.sources.registry import load_tables
 
 
@@ -108,31 +107,6 @@ def test_shingled_minhash_finds_planted_dups(spark, sf_dir):
             for r in docs.orderBy("doc_id").limit(10).collect()}
     missed = want - cand_pairs
     assert not missed, f"planted dups missed by shingled LSH: {missed}"
-
-
-def test_zip_with_index_keys_unique_and_offset(spark, sf_dir):
-    c = load_tables(spark, sf_dir, ("customer",))["customer"]
-    keyed = zip_with_index_keys(c.repartition(7), "k", offset=1)
-    n = c.count()
-    rows = keyed.select("k").collect()
-    keys = sorted(r["k"] for r in rows)
-    # unique, dense, starting above the unknown-member offset
-    assert keys == list(range(2, n + 2))
-
-
-def test_zip_with_index_keys_stays_jvm_side(spark, sf_dir):
-    """The big-dim key assigner must never serialize rows through
-    Python (it is the documented scale path for huge dims)."""
-    import contextlib
-    import io
-    c = load_tables(spark, sf_dir, ("customer",))["customer"]
-    keyed = zip_with_index_keys(c.repartition(7), "k", offset=1)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        keyed.explain("formatted")
-    plan = buf.getvalue()
-    assert "Python" not in plan      # no BatchEvalPython / MapInPandas
-    assert "Scan ExistingRDD" not in plan  # not rebuilt from an RDD
 
 
 def test_repetition_and_pii_signals_match_python(spark):

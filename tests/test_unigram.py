@@ -695,3 +695,21 @@ def test_unigram_property_sweep(spark, texts):
     joined = {r["doc_id"]: r["pieces"]
               for r in ug.encode_unigram(docs, model).collect()}
     assert joined == got
+
+
+def test_em_rounds_do_not_grow_column_cache(spark):
+    """ADVICE r17: each EM round scores under new costs, so an
+    expression memo keyed on them gains one never-reused entry per
+    round. Training must grow `_cache._COLUMN_CACHE` by at most a
+    constant, whatever the round count — pruning (`vocab_target`)
+    makes every round's costs distinct."""
+    from snowflake_azure_etl_spark.operators import _cache
+
+    def growth(rounds: int) -> int:
+        docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
+        before = len(_cache._COLUMN_CACHE)
+        ug.train_unigram(docs, rounds=rounds, seed_multi=40, vocab_target=4)
+        return len(_cache._COLUMN_CACHE) - before
+
+    growth(1)  # round-count-independent entries (seed/wseg legs)
+    assert growth(6) == 0
