@@ -18,7 +18,7 @@ LLM-data-pipeline tier beside `operators.dedup` / `operators.corpus`.
   The bound is still attested, never assumed: callers pass
   ``n_eval_grams`` (or the eval-doc count upper bound) and the join
   falls back to a shuffle equi-join above
-  ``dedup.BROADCAST_MAX_ROWS``, mirroring `dedup._maybe_broadcast`.
+  ``plans.attest.BROADCAST_MAX_ROWS`` (`dedup._maybe_broadcast`).
 - The probe side is one linear explode of per-doc distinct n-grams —
   no corpus self-join anywhere; grams are compared as fixed-width md5
   digests so the join key never carries n·avg_word bytes of text.
@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast, word_shingles
+from .dedup import _maybe_broadcast, word_shingles
 
 #: Published decontamination filters use 8-13 word n-grams; 8 is the
 #: conservative (highest-recall) end of that range.
@@ -79,9 +79,7 @@ def eval_gram_set(eval_docs: DataFrame, text_col: str = "text",
 def contamination_hits(docs: DataFrame, eval_docs: DataFrame,
                        id_col: str = "doc_id", text_col: str = "text",
                        n: int = DECONTAM_N,
-                       n_eval_grams: int | None = None,
-                       broadcast_max_rows: int = BROADCAST_MAX_ROWS
-                       ) -> DataFrame:
+                       n_eval_grams: int | None = None) -> DataFrame:
     """Per-contaminated-document overlap accounting:
     (id, contam_hits = number of distinct doc n-grams present in the
     benchmark). Documents with zero overlap do NOT appear — the
@@ -90,28 +88,26 @@ def contamination_hits(docs: DataFrame, eval_docs: DataFrame,
 
     ``n_eval_grams``: attested upper bound on the benchmark gram count
     (eval-doc count × max grams/doc is a fine bound); under
-    ``broadcast_max_rows`` the probe join broadcasts the benchmark
-    side, otherwise it shuffle-equi-joins on the digest."""
+    ``plans.attest.BROADCAST_MAX_ROWS`` the probe join broadcasts the
+    benchmark side, otherwise it shuffle-equi-joins on the digest."""
     return contamination_hits_against(
         docs, eval_gram_set(eval_docs, text_col, n), id_col, text_col,
-        n, n_eval_grams, broadcast_max_rows)
+        n, n_eval_grams)
 
 
 def contamination_hits_against(docs: DataFrame, eval_grams: DataFrame,
                                id_col: str = "doc_id",
                                text_col: str = "text",
                                n: int = DECONTAM_N,
-                               n_eval_grams: int | None = None,
-                               broadcast_max_rows: int =
-                               BROADCAST_MAX_ROWS) -> DataFrame:
+                               n_eval_grams: int | None = None
+                               ) -> DataFrame:
     """`contamination_hits` against an already-MATERIALIZED benchmark
     gram relation (column ``gram`` — the `eval_gram_set` artifact a
     pipeline persists once per benchmark release): the probe path for
     callers that must not re-derive the gram set per use — the
     streaming per-micro-batch sink (`streaming.ingest
     .decontam_ingest_sink`) and multi-corpus sweeps."""
-    ev = _maybe_broadcast(eval_grams.select("gram"),
-                          n_eval_grams, broadcast_max_rows)
+    ev = _maybe_broadcast(eval_grams.select("gram"), n_eval_grams)
     grams = _gram_digests(docs, id_col, text_col, n)
     return (grams.join(ev, "gram")
             .groupBy(id_col)

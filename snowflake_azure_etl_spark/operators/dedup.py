@@ -7,14 +7,18 @@ Python UDFs; the hash primitive is md5(), which is JVM-side in Spark and
 identical in DuckDB, making every stage oracle-checkable).
 
 Scale design (100 TB of documents):
-- every stage is embarrassingly parallel until the band-bucket self-join;
-  that join shuffles on the band key, whose cardinality grows with the
-  corpus, so buckets stay small for non-degenerate data;
-- bucket-size guard: `lsh_candidate_pairs` caps bucket width
-  (max_bucket) so one degenerate bucket (all-identical boilerplate docs)
-  cannot produce a quadratic pair explosion — the standard production
-  mitigation, applied before the pair join, and deterministic (overflow
-  buckets are dropped whole, not sampled);
+- every stage is embarrassingly parallel until the band probe
+  (`_band_probe`): ONE equi-join on (band, band key) covers every band,
+  and it is the only candidate join in the module — batch LSH
+  (`lsh_candidate_pairs`, also SimHash's rows=1 banding) is its
+  index-less self-probe, `incremental_near_dup_candidates` probes a
+  persisted index. Band-key cardinality grows with the corpus, so
+  buckets stay small for non-degenerate data;
+- bucket-size guard: buckets wider than ``max_bucket`` are dropped
+  whole, per band, before the pair fanout, so one degenerate bucket
+  (all-identical boilerplate docs) cannot produce a quadratic pair
+  explosion — the standard production mitigation, deterministic
+  (overflow buckets are dropped, not sampled);
 - md5 is used for portability with the DuckDB oracle; swap
   `xxhash64(...)` (cheaper, also built-in) via `hash_fn` at scale.
 """
@@ -26,31 +30,26 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Per-doc sides under this many rows may be broadcast; above it they
-#: must shuffle. ~1M rows × ~100 B/row ≈ 100 MB — the upper edge of a
-#: sane executor broadcast; corpus-scale tables are orders beyond it.
-#: One source of truth for the whole package (plans.attest); this
-#: module re-exports it because the dedup/ANN stack attested against
-#: it first and every operator signature already names it.
-from ..plans.attest import BROADCAST_MAX_ROWS, bounded_broadcast
+from ..plans.attest import bounded_broadcast
 
 
-def _maybe_broadcast(side: DataFrame, n_rows: int | None,
-                     max_rows: int = BROADCAST_MAX_ROWS) -> DataFrame:
+def _maybe_broadcast(side: DataFrame, n_rows: int | None) -> DataFrame:
     """Size-conditional broadcast hint for corpus-proportional sides.
 
     Every per-doc table in this module (band keys, bucket widths, token
     sets) grows linearly with the corpus, so an unconditional
     ``F.broadcast`` that is a win at test scale is an OOM at 100 TB.
     Hint only when the caller attests the side is small (``n_rows`` is
-    known and under ``max_rows``); otherwise return the side un-hinted
-    so the join shuffles on its equi key — AQE may still convert to a
-    broadcast at runtime if the materialized side proves tiny, but the
-    *plan* never commits to holding a corpus-sized table in memory.
+    known and under ``plans.attest.BROADCAST_MAX_ROWS`` — the package's
+    one broadcast cap, never a per-call knob); otherwise return the
+    side un-hinted so the join shuffles on its equi key — AQE may
+    still convert to a broadcast at runtime if the materialized side
+    proves tiny, but the *plan* never commits to holding a corpus-sized
+    table in memory.
     """
     if n_rows is None:
         return side
-    return bounded_broadcast(side, n_rows=n_rows, max_rows=max_rows)
+    return bounded_broadcast(side, n_rows=n_rows)
 
 
 def ws_tokens(text: Column | str) -> Column:
@@ -174,116 +173,103 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     return toks.groupBy(id_col).agg(*aggs)
 
 
+def band_key_index(sig: DataFrame, id_col: str, bands: int,
+                   rows: int) -> DataFrame:
+    """The persistable MinHash index artifact: one row per doc,
+    (_id, _k0.._k{bands-1}) with each band key an xxhash64 long of the
+    band's ``rows`` signature values — 8-byte join keys instead of
+    128-char md5 concats. Both sides of every band probe are this
+    relation; a production pipeline lands it bucketed on the band keys
+    (plans.layout.land_bucketed) and grows it per batch, the same
+    grow-the-index contract as `incremental_exact`'s content hashes."""
+    key_cols = [
+        F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+        .alias(f"_k{b}")
+        for b in range(bands)
+    ]
+    return sig.select(F.col(id_col).alias("_id"), *key_cols)
+
+
+def _band_probe(probe: DataFrame, build: DataFrame, bands: int,
+                max_bucket: int, n_probe: int | None,
+                n_build: int | None) -> DataFrame:
+    """The one band-probe join: `probe` band keys (aliased ``nw``) ×
+    `build` band keys (aliased ``ix``), both `band_key_index`-shaped,
+    joined ONCE for every band on (band, band key) — a row per (doc,
+    band) on each side (``_b``, ``_key``), carrying the doc's band keys
+    for the first-match test. The caller adds its pair predicate
+    (id order, self-match) and projection.
+
+    - **Bucket-width guard over the build side**: per-band SURVIVAL
+      FLAGS, not destructive filters — a pair whose first matching band
+      is dropped for width still emits at its first surviving matching
+      band (the oracle's semantics). A shared key's flag is the same
+      for both docs, so only the build side carries it. Skipped when
+      ``n_build`` (an upper bound is enough) attests no bucket can
+      exceed ``max_bucket``.
+    - **First-match-only emission**: a pair matching several bands
+      joins at its FIRST matching surviving band only, so the join
+      output is exactly the distinct pair set — no DISTINCT shuffle of
+      the pair set, often the largest intermediate in the pipeline.
+    - **Size-conditional broadcast**: the probe side broadcasts under
+      the ``n_probe`` attestation (``n_probe × bands`` exploded rows),
+      so the build side is read in place; the width relations broadcast
+      under ``n_build``. Unattested, both sides shuffle-equi-join on
+      (band, key) and AQE's skew-join split handles residual bucket
+      variance — the first-match test works under either strategy."""
+    band_cols = [f"_k{b}" for b in range(bands)]
+    guard = n_build is None or n_build > max_bucket
+    flagged = build
+    if guard:
+        for b in range(bands):
+            wf = (build.groupBy(f"_k{b}")
+                  .agg((F.count("*") <= max_bucket).alias(f"_ok{b}")))
+            flagged = flagged.join(_maybe_broadcast(wf, n_build), f"_k{b}")
+    by_band = [F.posexplode(F.array(*band_cols)).alias("_b", "_key")]
+    nw = probe.select("*", *by_band)
+    ix = flagged.select("*", *by_band)
+    if guard:
+        ix = ix.filter(F.get(F.array(*[f"_ok{b}" for b in range(bands)]),
+                             F.col("_b")))
+    cond = ((F.col("nw._b") == F.col("ix._b"))
+            & (F.col("nw._key") == F.col("ix._key")))
+    for i in range(bands - 1):  # no earlier band matched (and survived)
+        m = F.col(f"nw._k{i}") == F.col(f"ix._k{i}")
+        m = m & F.col(f"ix._ok{i}") if guard else m
+        cond = cond & ((F.col("nw._b") <= i) | ~m)
+    a = _maybe_broadcast(nw, None if n_probe is None else n_probe * bands)
+    return a.alias("nw").join(ix.alias("ix"), cond)
+
+
 def lsh_candidate_pairs(sig: DataFrame, id_col: str, bands: int = 2,
                         rows: int = 4, max_bucket: int = 10000,
-                        parallelism: int | None = None,
                         n_docs: int | None = None,
-                        broadcast_max_rows: int = BROADCAST_MAX_ROWS,
                         cache_keys: bool = True) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing any band bucket.
+    """Distinct candidate pairs (id_a < id_b) sharing any band bucket
+    whose width is at most ``max_bucket``: the index-less case of the
+    band probe — the corpus's `band_key_index` probes itself in the one
+    (band, key) join of `_band_probe` (first-match-only emission,
+    per-band width guard, broadcast under the ``n_docs`` attestation,
+    else a shuffle equi-join), keeping ``id_a < id_b``.
 
-    Plan choices (the pair set is the hot output — often ≫ corpus):
-
-    - **First-match-only emission, no dedup shuffle**: a pair matching
-      in several bands would classically be emitted per band and
-      DISTINCTed — a full shuffle of the pair set (the largest
-      intermediate in the whole pipeline). Instead each side carries its
-      *earlier* band keys, and band b emits a pair only if no earlier
-      band already matched — a per-row filter inside the join. The union
-      over bands is exactly the distinct pair set, and pairs stream to
-      the consumer with no exchange.
-    - **Band keys as xxhash64 longs** (internal only — never leaves the
-      operator): 8-byte join keys instead of 128-char md5 concats.
-    - **Bucket-width guard**: buckets wider than max_bucket are dropped
-      whole — deterministic quadratic-blowup protection on degenerate
-      corpora (standard production mitigation; the oracle mirrors it).
-    - **Size-conditional build-side broadcast**: the per-doc band-key
-      table and the bucket-width guard both grow with the corpus. When
-      the caller attests the corpus is small (``n_docs`` ≤
-      ``broadcast_max_rows``) they broadcast and the stream side is
-      round-robin ``repartition(parallelism)``-ed to pin the quadratic
-      pair fanout across the cluster (AQE sizes by *input* bytes and
-      would otherwise coalesce the pair build to one task). Above the
-      threshold — the 100 TB regime — nothing broadcasts: both sides
-      shuffle-equi-join on the band key, the width guard keeps any one
-      bucket's pair fanout bounded, and AQE's skew-join split handles
-      residual bucket-size variance. The first-match band filter works
-      identically under either join strategy.
-    - **Band-key relation materialized once** (``cache_keys``): the
-      (id, band keys…) table is referenced 3·bands times in this plan
-      (per-band width guard + both join sides) and again by the verify
-      query that consumes the candidates — without persistence the
-      whole upstream signature stage (explode + k min-aggregates over
-      every shingle) is re-executed per reference. The table is
-      (bands+1) fixed-width columns per doc — the MinHash *index
-      artifact* a production pipeline writes to a table — persisted
-      MEMORY_AND_DISK via the session relation cache
-      (`operators._cache`), so a same-session rebuild (e.g. the
-      Jaccard-verify stage re-deriving candidates from the same
-      signature plan) reuses the materialized relation.
+    ``cache_keys``: the band-key relation is referenced by both probe
+    sides, the width guard, and again by the verify query that consumes
+    the candidates — without persistence the whole upstream signature
+    stage (explode + k min-aggregates over every shingle) re-executes
+    per reference. It is (bands+1) fixed-width columns per doc — the
+    MinHash index artifact a production pipeline writes to a table —
+    persisted MEMORY_AND_DISK via the session relation cache
+    (`operators._cache`), so a same-session rebuild from the same
+    signature plan (q51's incremental leg, q52's verify) reuses it.
     """
     from ._cache import cached_relation
-    # the ONE key-construction definition (band_key_index) — q51's
-    # incremental leg reuses this cache entry by rebuilding the same
-    # plan, so the expression must not fork
     keys = band_key_index(sig, id_col, bands, rows)
     if cache_keys:
         keys = cached_relation(keys, "lsh_band_keys", eager=False)
-    nparts = parallelism or sig.sparkSession.sparkContext.defaultParallelism
-    small = n_docs is not None and n_docs <= broadcast_max_rows
-    # a bucket can never exceed the total corpus: with an attested
-    # n_docs <= max_bucket the width guard is provably a no-op — skip
-    # its groupBy+join instead of paying two exchanges per band for a
-    # filter that cannot trigger (at corpus scale n_docs >> max_bucket
-    # and the guard always stays)
-    guard_needed = n_docs is None or n_docs > max_bucket
-    flagged = keys
-    if guard_needed:
-        # per-band bucket-width SURVIVAL FLAGS (distinct band keys ≤
-        # docs, so the same size attestation governs each broadcast).
-        # Flags instead of destructive per-band filters so
-        # first-match emission can test band SURVIVAL: a
-        # pair whose first matching band is guard-dropped still emits
-        # at its first surviving matching band — the oracle's
-        # semantics (r7 review finding; previously such a pair was
-        # silently lost whenever the guard fired).
-        for i in range(bands):
-            wf = (keys.groupBy(f"_k{i}")
-                  .agg((F.count("*") <= max_bucket).alias(f"_ok{i}")))
-            flagged = flagged.join(
-                _maybe_broadcast(wf, n_docs, broadcast_max_rows),
-                f"_k{i}")
-    out = None
-    for b in range(bands):
-        kb = flagged.filter(F.col(f"_ok{b}")) if guard_needed else flagged
-        # the survival flag of a SHARED band key is the same on both
-        # sides, so only side a carries the earlier-band flags
-        a = kb.select(F.col("_id").alias("id_a"),
-                      *[F.col(f"_k{i}").alias(f"_ka{i}")
-                        for i in range(b + 1)],
-                      *([F.col(f"_ok{i}").alias(f"_oka{i}")
-                         for i in range(b)] if guard_needed else []))
-        bb = kb.select(F.col("_id").alias("id_b"),
-                       *[F.col(f"_k{i}").alias(f"_kb{i}") for i in range(b + 1)])
-        cond = (F.col(f"_ka{b}") == F.col(f"_kb{b}")) & \
-               (F.col("id_a") < F.col("id_b"))
-        for i in range(b):  # not already emitted by an earlier band
-            matched_i = F.col(f"_ka{i}") == F.col(f"_kb{i}")
-            if guard_needed:
-                matched_i = matched_i & F.col(f"_oka{i}")
-            cond = cond & ~matched_i
-        if small:
-            pairs_b = (a.repartition(nparts)
-                       .join(bounded_broadcast(
-                           bb, n_rows=n_docs,
-                           max_rows=broadcast_max_rows), cond)
-                       .select("id_a", "id_b"))
-        else:
-            # corpus-scale: shuffle-equi-join on the band key; the
-            # round-robin repartition would only be re-exchanged away
-            pairs_b = a.join(bb, cond).select("id_a", "id_b")
-        out = pairs_b if out is None else out.unionByName(pairs_b)
-    return out
+    return (_band_probe(keys, keys, bands, max_bucket, n_docs, n_docs)
+            .filter(F.col("nw._id") < F.col("ix._id"))
+            .select(F.col("nw._id").alias("id_a"),
+                    F.col("ix._id").alias("id_b")))
 
 
 BITSET_MAX_VOCAB = 4096  # 64 longs per doc; above this, hashed arrays win
@@ -293,7 +279,6 @@ def exact_jaccard(df: DataFrame, candidates: DataFrame, id_col: str,
                   text_col: str,
                   bitset_max_vocab: int = BITSET_MAX_VOCAB,
                   n_docs: int | None = None,
-                  broadcast_max_rows: int = BROADCAST_MAX_ROWS,
                   shingle_n: int | None = None) -> DataFrame:
     """Exact set-Jaccard for candidate pairs — adaptive plan.
 
@@ -319,13 +304,13 @@ def exact_jaccard(df: DataFrame, candidates: DataFrame, id_col: str,
 
     The per-doc token-set side is corpus-sized, so it broadcasts only
     under the same size attestation as `lsh_candidate_pairs` (``n_docs``
-    ≤ ``broadcast_max_rows``); above it both lookups are shuffle
-    equi-joins on the doc id — the candidate list hash-partitions on
-    id_a then id_b, each doc's set co-locating with its pairs. The
-    vocabulary probe is one tiny count job on data already needed for
-    the masks (the dictionary broadcast inside `_bitset_masks` is
-    bounded by ``bitset_max_vocab``, not the corpus, so it is always
-    safe).
+    ≤ ``plans.attest.BROADCAST_MAX_ROWS``); above it both lookups are
+    shuffle equi-joins on the doc id — the candidate list
+    hash-partitions on id_a then id_b, each doc's set co-locating with
+    its pairs. The vocabulary probe is one tiny count job on data
+    already needed for the masks (the dictionary broadcast inside
+    `_bitset_masks` is bounded by ``bitset_max_vocab``, not the corpus,
+    so it is always safe).
     """
     from ._cache import cached_build, cached_relation, plan_key
     unit = (word_shingles(text_col, shingle_n) if shingle_n
@@ -363,8 +348,8 @@ def exact_jaccard(df: DataFrame, candidates: DataFrame, id_col: str,
                     F.col("_n").alias("size_b") if "_n" in sets.columns
                     else F.size("_s").alias("size_b"))
     sh = shared(F.col("_sa"), F.col("_sb"))
-    a = _maybe_broadcast(a, n_docs, broadcast_max_rows)
-    b = _maybe_broadcast(b, n_docs, broadcast_max_rows)
+    a = _maybe_broadcast(a, n_docs)
+    b = _maybe_broadcast(b, n_docs)
     return (candidates.join(a, "id_a").join(b, "id_b")
             .select("id_a", "id_b", sh.cast("int").alias("shared"),
                     "size_a", "size_b")
@@ -531,7 +516,6 @@ def edit_distance_verify(docs: DataFrame, candidates: DataFrame,
                          id_col: str = "doc_id",
                          text_col: str = "text",
                          n_docs: int | None = None,
-                         broadcast_max_rows: int = BROADCAST_MAX_ROWS,
                          max_dist: int | None = None) -> DataFrame:
     """candidates + (edit_dist, edit_sim): exact Levenshtein
     verification of candidate pairs — the CHARACTER-level near-dup
@@ -567,8 +551,8 @@ def edit_distance_verify(docs: DataFrame, candidates: DataFrame,
                     F.col(text_col).alias("_txa"))
     b = docs.select(F.col(id_col).alias("id_b"),
                     F.col(text_col).alias("_txb"))
-    a = _maybe_broadcast(a, n_docs, broadcast_max_rows)
-    b = _maybe_broadcast(b, n_docs, broadcast_max_rows)
+    a = _maybe_broadcast(a, n_docs)
+    b = _maybe_broadcast(b, n_docs)
     joined = candidates.join(a, "id_a").join(b, "id_b")
     raw = (F.levenshtein(F.col("_txa"), F.col("_txb"))
            if max_dist is None
@@ -652,11 +636,10 @@ def simhash_near_dups(sig: DataFrame, id_col: str = "doc_id",
     agree exactly on at least one of `bands` equal-width bit bands, so
     candidates come from band-equality buckets and only candidates pay
     the Hamming verify (bit_count(xor) — one codegen'd op). The
-    banding IS `lsh_candidate_pairs` with rows=1 over the band bytes:
-    same first-match-only emission (no pair-set dedup shuffle), same
-    deterministic bucket-width guard, same size-attested
-    broadcast/shuffle switch — one machine for both text-LSH and
-    SimHash candidate generation."""
+    banding IS `lsh_candidate_pairs` with rows=1 over the band bytes,
+    so candidates come from the module's one band probe
+    (`_band_probe`) — the same machine for text-LSH, SimHash and
+    incremental candidate generation."""
     if not 0 <= max_hamming < bands:
         raise ValueError(
             f"max_hamming ({max_hamming}) must be < bands ({bands}) "
@@ -1233,22 +1216,6 @@ def incremental_scrub_duplicate_substrings(
 # `incremental_exact`: dedup an ingest batch against a PERSISTED corpus
 # LSH index without recomputing corpus signatures.
 
-def band_key_index(sig: DataFrame, id_col: str, bands: int,
-                   rows: int) -> DataFrame:
-    """The persistable MinHash index artifact: one row per doc,
-    (_id, _k0.._k{bands-1}) with each band key an xxhash64 long —
-    exactly the relation `lsh_candidate_pairs` builds internally. A
-    production pipeline lands it bucketed on the band keys
-    (plans.layout.land_bucketed) and grows it per batch, the same
-    grow-the-index contract as `incremental_exact`'s content hashes."""
-    key_cols = [
-        F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
-        .alias(f"_k{b}")
-        for b in range(bands)
-    ]
-    return sig.select(F.col(id_col).alias("_id"), *key_cols)
-
-
 def incremental_near_dup_candidates(new_docs: DataFrame,
                                     index_keys: DataFrame,
                                     id_col: str = "doc_id",
@@ -1258,7 +1225,7 @@ def incremental_near_dup_candidates(new_docs: DataFrame,
                                     max_bucket: int = 10000,
                                     n_new: int | None = None,
                                     n_index: int | None = None,
-                                    sig: DataFrame | None = None
+                                    keys: DataFrame | None = None
                                     ) -> DataFrame:
     """Candidate near-dup pairs of a NEW ingest batch: batch-vs-corpus
     (against the persisted `band_key_index`) plus intra-batch, as
@@ -1270,76 +1237,41 @@ def incremental_near_dup_candidates(new_docs: DataFrame,
     - corpus signatures are NEVER recomputed — the index relation is
       read in place; only the batch (ingest-sized) pays the shingle +
       MinHash stages;
-    - ONE probe join for every band and both pair families: the batch
-      keys probe index ∪ batch keys tagged by source, one row per (doc,
-      band) on each side; a batch match needs ``id_new < id_match``
-      (the intra-batch pair set). Under the ``n_new`` attestation the
-      batch side broadcasts, so the corpus-sized index is read once and
-      never reshuffles;
-    - first-match-only emission across bands (the
-      `lsh_candidate_pairs` trick): a pair matching several bands is
-      emitted by its FIRST matching band only — the union is exactly
-      the distinct pair set, no pair-set dedup shuffle;
-    - the bucket-width guard computes widths over the TOTAL corpus —
-      index keys ∪ batch keys — not over either side alone, and drops
-      degenerate buckets whole, PER BAND (a doc over-wide in band 0
-      still probes bands 1..n). Total-width survival is exactly what a
-      full re-run over the merged corpus computes, so incremental
-      pair-set parity with the full pipeline holds even with the
-      guard active — including a bucket that straddles ``max_bucket``
-      across the index/batch split (the r7 advisor counterexample).
-      Short-circuited when ``n_index + n_new`` (an upper bound is
-      enough) attests the merged corpus under ``max_bucket``. The
-      width relations follow the module's broadcast attestation.
+    - the one band probe (`_band_probe`) for every band and both pair
+      families: the batch keys probe index ∪ batch keys tagged by
+      source; a batch match needs ``id_new < id_match`` (the
+      intra-batch pair set). Under the ``n_new`` attestation the batch
+      side broadcasts, so the corpus-sized index is read once and never
+      reshuffles;
+    - the bucket-width guard runs over that build side, i.e. the TOTAL
+      corpus — index keys ∪ batch keys — not over either side alone.
+      Total-width survival is exactly what a full re-run over the
+      merged corpus computes, so incremental pair-set parity with the
+      full pipeline holds even with the guard active, including a
+      bucket that straddles ``max_bucket`` across the index/batch
+      split. Short-circuited when ``n_index + n_new`` (an upper bound
+      is enough) attests the merged corpus under ``max_bucket``.
 
-    ``sig`` lets a caller that already materialized the batch
-    signature relation (the streaming sink computes it for the
-    grow-the-index write) pass it in instead of paying the shingle +
-    MinHash stages twice.
+    ``keys`` lets a caller that already built the batch's
+    `band_key_index` (the streaming sink writes it to grow the index)
+    pass it in instead of paying the shingle + MinHash stages twice.
     """
-    if sig is None:
-        # the batch signature relation feeds both sides of every band
-        # probe; it is ingest-batch-sized, so materialize it ONCE — an
-        # eager localCheckpoint, not the session cache, because a
-        # streaming caller submits a NEW batch plan per epoch and
-        # plan-keyed cache entries would accumulate without bound
+    if keys is None:
+        # the batch signature relation feeds both probe sides; it is
+        # ingest-batch-sized, so materialize it ONCE — an eager
+        # localCheckpoint, not the session cache, because a streaming
+        # caller submits a NEW batch plan per epoch and plan-keyed
+        # cache entries would accumulate without bound
         sig = minhash_signature_shingled(new_docs, id_col, text_col,
                                          k=bands * rows, n=shingle_n
                                          ).localCheckpoint(eager=True)
-    band_cols = [f"_k{b}" for b in range(bands)]
-    nk = band_key_index(sig, id_col, bands, rows)
-    total = (index_keys.select("_id", *band_cols)
+        keys = band_key_index(sig, id_col, bands, rows)
+    total = (index_keys.select("_id", *[f"_k{b}" for b in range(bands)])
              .withColumn("source", F.lit("index"))
-             .unionByName(nk.withColumn("source", F.lit("batch"))))
+             .unionByName(keys.withColumn("source", F.lit("batch"))))
     n_total = (n_index + n_new
                if n_index is not None and n_new is not None else None)
-    guard = n_total is None or n_total > max_bucket
-    build = total
-    if guard:
-        # per-band SURVIVAL FLAGS over the TOTAL width, not a
-        # destructive filter: a pair emits at its first SURVIVING
-        # matching band. A shared key's flag is the same for both docs,
-        # so only the build side carries it.
-        for b in range(bands):
-            wf = (total.groupBy(f"_k{b}")
-                  .agg((F.count("*") <= max_bucket).alias(f"_ok{b}")))
-            build = build.join(_maybe_broadcast(wf, n_total), f"_k{b}")
-    # ONE join for all bands on (band, band key): a row per (doc, band),
-    # carrying the doc's band keys for the first-match test
-    by_band = [F.posexplode(F.array(*band_cols)).alias("_b", "_key")]
-    nw = nk.select("*", *by_band)
-    ix = build.select("*", *by_band)
-    if guard:
-        ix = ix.filter(F.get(F.array(*[f"_ok{b}" for b in range(bands)]),
-                             F.col("_b")))
-    cond = ((F.col("nw._b") == F.col("ix._b"))
-            & (F.col("nw._key") == F.col("ix._key")))
-    for i in range(bands - 1):  # no earlier band matched (and survived)
-        m = F.col(f"nw._k{i}") == F.col(f"ix._k{i}")
-        m = m & F.col(f"ix._ok{i}") if guard else m
-        cond = cond & ((F.col("nw._b") <= i) | ~m)
-    a = _maybe_broadcast(nw, None if n_new is None else n_new * bands)
-    return (a.alias("nw").join(ix.alias("ix"), cond)
+    return (_band_probe(keys, total, bands, max_bucket, n_new, n_total)
             .filter(F.when(F.col("ix.source") == "batch",
                            F.col("nw._id") < F.col("ix._id"))
                     .otherwise(F.col("nw._id") != F.col("ix._id")))

@@ -82,9 +82,9 @@ def pack_offsets(docs: DataFrame, id_col: str = "doc_id",
     # the prefix-sum exchange — and the rest of the caller's plan
     # keeps its scan-side parallelism instead of being dragged into
     # the window stage. The join broadcasts when the skinny offsets
-    # relation is attested small (`dedup.BROADCAST_MAX_ROWS`), else it
-    # equi-shuffles on the id — at most one wide exchange, same as
-    # range-partitioning the full rows, never worse.
+    # relation is attested small (`plans.attest.BROADCAST_MAX_ROWS`),
+    # else it equi-shuffles on the id — at most one wide exchange, same
+    # as range-partitioning the full rows, never worse.
     narrow = docs.select(F.col(id_col), w.cast("long").alias("n_tokens"),
                          *([order_col.alias("_ord")]
                            if order_col is not None else []))

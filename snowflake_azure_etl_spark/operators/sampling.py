@@ -461,12 +461,12 @@ def dsir_bucket_stats_from(feats: DataFrame, target_ids: DataFrame,
     the corpus is featurized exactly once across the whole DSIR
     pass. `target_ids` is corpus-proportional in the worst case, so
     it broadcasts ONLY under the module-standard size attestation
-    (``n_target`` ≤ `dedup.BROADCAST_MAX_ROWS`); unattested, the
+    (``n_target`` ≤ `plans.attest.BROADCAST_MAX_ROWS`); unattested, the
     semi-join shuffles and AQE may still broadcast at runtime."""
-    from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast
+    from .dedup import _maybe_broadcast
     raw = feats.groupBy("bucket").agg(F.sum("c").alias("_nr"))
     tgt = (feats.join(_maybe_broadcast(target_ids.select(id_col),
-                                       n_target, BROADCAST_MAX_ROWS),
+                                       n_target),
                       id_col, "left_semi")
            .groupBy("bucket").agg(F.sum("c").alias("_nt")))
     return _dsir_stats(raw, tgt, n_buckets, scale)

@@ -652,14 +652,14 @@ def embedding_near_dups(emb: DataFrame, id_col: str, vec_col: str,
       broadcasts safely.
     - **Size-attested self-join strategy**: the per-vector sides are
       corpus-sized, so the build side broadcasts only when the caller
-      attests ``n_rows`` ≤ ``dedup.BROADCAST_MAX_ROWS``; otherwise both
-      sides shuffle-equi-join on the bucket key (AQE's skew-join split
-      handles residual width variance under the cap).
+      attests ``n_rows`` ≤ ``plans.attest.BROADCAST_MAX_ROWS``;
+      otherwise both sides shuffle-equi-join on the bucket key (AQE's
+      skew-join split handles residual width variance under the cap).
     - **Corpus-scaled bits**: pass ``bits=None`` to derive the bucket
       grid from the attested corpus size (`scaled_bits`), keeping the
       expected bucket width constant as the corpus grows.
     """
-    from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast
+    from .dedup import _maybe_broadcast
     if bits is None:
         bits = scaled_bits(n_rows)
     c = emb.select(F.col(id_col).alias("_id"),
@@ -682,7 +682,7 @@ def embedding_near_dups(emb: DataFrame, id_col: str, vec_col: str,
     b = c.select(F.col("bucket"), F.col("_id").alias("id_b"),
                  F.col("v").alias("vb"),
                  l2_norm(F.col("v")).alias("_nb"))
-    return (a.join(_maybe_broadcast(b, n_rows, BROADCAST_MAX_ROWS), "bucket")
+    return (a.join(_maybe_broadcast(b, n_rows), "bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
                     (dot(F.col("va"), F.col("vb"))
@@ -719,7 +719,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
     ``max_cell`` are dropped from the pair stage whole
     (deterministic), skipped entirely when the attested ``n_rows``
     proves the guard dead; the per-vector join sides broadcast only
-    under the `dedup.BROADCAST_MAX_ROWS` attestation. Cluster
+    under the `plans.attest.BROADCAST_MAX_ROWS` attestation. Cluster
     resolution is `graph.dup_clusters` — O(log diameter) supersteps of
     equi-joins, no all-pairs anything. n_cells scales with the corpus
     (fixed expected cell width) exactly as `ivf_topk`; the index is
@@ -778,9 +778,8 @@ def _semdedup_score(a: DataFrame, b: DataFrame, n_rows: int | None,
     """The within-cell comparison join: the CHEAP id predicate runs
     before the interpreted per-pair cosine, halving the dominant
     quadratic stage."""
-    from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast
-    return (a.join(_maybe_broadcast(b, n_rows, BROADCAST_MAX_ROWS),
-                   "cell_id")
+    from .dedup import _maybe_broadcast
+    return (a.join(_maybe_broadcast(b, n_rows), "cell_id")
             .filter(id_pred)
             .filter(dot(F.col("va"), F.col("vb"))
                     / (F.col("na") * F.col("nb")) >= threshold))
@@ -893,7 +892,7 @@ def _semantic_dedup_build(emb: DataFrame, id_col: str, vec_col: str,
                           threshold: float, max_cell: int,
                           n_rows: int | None,
                           nprobe: int = 1) -> DataFrame:
-    from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast
+    from .dedup import _maybe_broadcast
     _, assigned = _ivf_index(emb, id_col, vec_col, n_cells, train_iters)
     clusters = _semdedup_clusters(emb, id_col, vec_col, n_cells,
                                   train_iters, threshold, max_cell,
@@ -901,7 +900,7 @@ def _semantic_dedup_build(emb: DataFrame, id_col: str, vec_col: str,
     return (assigned
             .join(_maybe_broadcast(
                       clusters.withColumnRenamed("id", "neighbor_id"),
-                      n_rows, BROADCAST_MAX_ROWS),
+                      n_rows),
                   "neighbor_id", "left")
             .select(F.col("neighbor_id").alias("id"), "cell_id",
                     F.coalesce("keeper", "neighbor_id").alias("keeper"))
@@ -966,7 +965,7 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
                              nprobe: int = 1) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    from .dedup import BROADCAST_MAX_ROWS, _maybe_broadcast
+    from .dedup import _maybe_broadcast
     cent_arr, assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                     train_iters)
     ev_ids = eval_ids.select(F.col(id_col).alias("_id"))
@@ -985,9 +984,7 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
     # eval) pair meets in at most one cell and count(*) stays exact
     probe_tr = tr if nprobe <= 1 else _probe_cells(tr, cent_arr, nprobe)
     cos = dot(F.col("cv"), F.col("ve")) / (F.col("_n") * F.col("ne"))
-    hits = (probe_tr.join(_maybe_broadcast(ev, n_rows,
-                                           BROADCAST_MAX_ROWS),
-                          "cell_id")
+    hits = (probe_tr.join(_maybe_broadcast(ev, n_rows), "cell_id")
             .filter(cos >= threshold)
             .groupBy("_id")
             .agg(F.count("*").alias("n_hits"),

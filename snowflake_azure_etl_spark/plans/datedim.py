@@ -62,10 +62,9 @@ def build_dim_date(spark: SparkSession, start: str | _dt.date = "2013-01-01",
     every star query broadcasts it. A date dim is O(days) rows (~3k for
     8 years), so the in-memory copy is negligible at any scale.
     """
+    from ..operators._cache import session_cache
     key = ("dim_date", str(start), str(end), fiscal_start_month)
-    cache: dict = getattr(spark, "_sae_relation_cache", None) or {}
-    if not hasattr(spark, "_sae_relation_cache"):
-        spark._sae_relation_cache = cache
+    cache = session_cache(spark)
     if cached and key in cache:
         return cache[key]
     attrs = date_attributes("d", fiscal_start_month)

@@ -3,9 +3,11 @@
 The reference opens one Snowflake connection per pipeline step
 (/root/reference/rahil/connection.py:18-35); here a single SparkSession is
 the engine. Local-mode defaults follow the bench contract (local[N] with
-N = $SPARK_GRAFT_CPUS); at cluster scale the same builder is used with a
-real master URL — every config below is sized by a knob, not hard-coded to
-the local case.
+N = $SPARK_GRAFT_CPUS, else the core count); at cluster scale the same
+builder is used with a real master URL. Sizes (cores, shuffle partitions,
+driver heap, warehouse dir) come from environment variables; the tuning
+configs below are literals, and ``get_spark(extra_conf=)`` overrides any
+of them.
 
 Scale notes (100 TB design point):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
@@ -24,7 +26,9 @@ from pyspark.sql import SparkSession
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local-mode worker threads: ``$SPARK_GRAFT_CPUS``, else the
+    machine's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
 
 def get_spark(app_name: str = "snowflake_azure_etl_spark",
@@ -70,8 +74,7 @@ def get_spark(app_name: str = "snowflake_azure_etl_spark",
         # 45s a 50-query workload absorbed 1-2 multi-second pauses per
         # sweep (measured ~15% of suite wall); 150s still bounds block
         # accumulation to ~2.5 min while cutting pause frequency 3x
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "150s"))
+        .config("spark.cleaner.periodicGC.interval", "150s")
         # Generated-code cache (r16, measured via a same-window A/B):
         # CodeGenerator's compiled-class cache is a STATIC conf with a
         # default of only 100 entries — a 50-query serving catalog
@@ -85,8 +88,7 @@ def get_spark(app_name: str = "snowflake_azure_etl_spark",
         # bounds the cache at a few hundred MB of driver heap worst
         # case — the same reasoning holds on a production driver
         # serving a catalog of prepared statements.
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Shuffle writer choice (r16, measured via thread dumps): with
         # reduce counts <= 200 Spark picks BypassMergeSortShuffleWriter,
         # which opens one file PER REDUCE PARTITION per map task and then
@@ -100,15 +102,14 @@ def get_spark(app_name: str = "snowflake_azure_etl_spark",
         # file per map task, no per-partition files, no mmap). Measured
         # warm serve at sf0.1/local[32]: q01 0.88->0.45 s,
         # q40 1.25->0.50 s, q50 2.82->1.83 s, q58 3.20->2.41 s.
-        .config("spark.shuffle.sort.bypassMergeThreshold",
-                os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "1"))
-        # Companion knob: remaining transferTo copies (spill merges)
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+        # Companion setting: remaining transferTo copies (spill merges)
         # also mmap per segment; for the many-small-segment shapes here
         # a plain stream copy is cheaper. On a cluster with multi-GB
-        # spill merges flip it back via the env knob — large sequential
-        # segments are where transferTo actually wins.
-        .config("spark.file.transferTo",
-                os.environ.get("SPARK_GRAFT_TRANSFERTO", "false"))
+        # spill merges set it back to true through
+        # ``extra_conf={"spark.file.transferTo": "true"}`` — large
+        # sequential segments are where transferTo actually wins.
+        .config("spark.file.transferTo", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -99,9 +99,8 @@ def load_tables(spark: SparkSession, sf_dir: str,
     cache dies with the session, so a restarted session (tests) never
     sees stale plans.
     """
-    cache: dict = getattr(spark, "_sae_relation_cache", None) or {}
-    if not hasattr(spark, "_sae_relation_cache"):
-        spark._sae_relation_cache = cache
+    from ..operators._cache import session_cache
+    cache = session_cache(spark)
     # Engine date/timestamp semantics are UTC (SURVEY session posture;
     # oracle timestamps are naive-UTC). get_spark pins this for its own
     # sessions, but the workload also runs on DRIVER-provided sessions

@@ -62,8 +62,8 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        # ONE materialized signature pass per epoch, shared by the
-        # probe (`sig` hand-off) and the index write
+        # ONE materialized signature pass per epoch; its band keys feed
+        # both the probe (`keys` hand-off) and the index write
         obs = Observation()
         sig = (minhash_signature_shingled(batch_df, id_col, text_col,
                                           k=bands * rows, n=shingle_n)
@@ -84,7 +84,7 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
             batch_df, index, id_col, text_col,
             bands=bands, rows=rows, shingle_n=shingle_n,
             max_bucket=max_bucket, n_new=obs.get["n"], n_index=n_index,
-            sig=sig)
+            keys=keys)
         write_cands(cands, epoch_id)
         write_keys(keys, epoch_id)
 

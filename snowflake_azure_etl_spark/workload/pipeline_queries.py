@@ -408,12 +408,12 @@ _INCR_BATCH_MOD = 5
 def q51_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=8) over word 3-gram shingles + LSH(2 bands × 4 rows)
     near-dup candidate pairs (operators.dedup):
-    shingle→minhash→band→bucket-join; portable md5-seeded hashes make
-    the whole pipeline oracle-checkable. The corpus row count for the
-    broadcast-size attestation comes from parquet footer metadata (no
-    count job) — small here, so the band join broadcasts; above
-    dedup.BROADCAST_MAX_ROWS the same plan shuffle-equi-joins on the
-    band key."""
+    shingle→minhash→band→one (band, key) probe join; portable
+    md5-seeded hashes make the whole pipeline oracle-checkable. The
+    corpus row count for the broadcast-size attestation comes from
+    parquet footer metadata (no count job) — small here, so the probe
+    side broadcasts; above plans.attest.BROADCAST_MAX_ROWS the same plan
+    shuffle-equi-joins on (band, key)."""
     docs = _docs(spark, sf_dir)
     n_docs = stage_row_count(sf_dir, "documents") or docs.count()
     sig = dedup.minhash_signature_shingled(docs, "doc_id", "text",
@@ -777,9 +777,9 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.dedup.simhash_near_dups, X-DEDUP-SIMHASH-PAIRS): the
     Manku-style leg — 4×8-bit band candidates (pigeonhole: ≤ bands-1
     flips leave ≥1 band intact), Hamming verify via one
-    bit_count(xor). Candidate generation reuses the
-    lsh_candidate_pairs machinery (first-match-only emission, width
-    guard, size-attested joins) with rows=1 over the band bytes. The
+    bit_count(xor). Candidate generation is `lsh_candidate_pairs`
+    with rows=1 over the band bytes — the one (band, key) probe join
+    (first-match-only emission, width guard, size-attested join). The
     catalog leg runs a deterministic subsample at distance 0 — see
     _SIMHASH_MAX_HAMMING for why this corpus forces that."""
     docs = _docs(spark, sf_dir)

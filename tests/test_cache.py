@@ -24,6 +24,25 @@ def test_cached_relation_reuses_and_clears(spark):
     assert len(_cache.session_cache(spark)) == 1
 
 
+def test_relation_catalog_caches_in_an_empty_session_cache(spark, sf_dir):
+    """load_tables and build_dim_date store into the one session-cache
+    dict even when it exists and is empty, as it is after clear_cache;
+    an empty dict used to be swapped for a throwaway one, so the date
+    dim was rebuilt and re-persisted on every call."""
+    from snowflake_azure_etl_spark.plans.datedim import build_dim_date
+    from snowflake_azure_etl_spark.sources.registry import load_tables
+    _cache.clear_cache(spark)
+    cache = _cache.session_cache(spark)
+    try:
+        d1 = build_dim_date(spark, "2020-01-01", "2020-01-31")
+        assert build_dim_date(spark, "2020-01-01", "2020-01-31") is d1
+        r1 = load_tables(spark, sf_dir, ("region",))["region"]
+        assert load_tables(spark, sf_dir, ("region",))["region"] is r1
+        assert len(cache) == 2
+    finally:
+        _cache.clear_cache(spark)
+
+
 def test_clear_cache_unpersists_composite_artifacts(spark):
     def build():
         x = spark.range(10).persist()

@@ -1,9 +1,14 @@
 """Incremental near-dup candidates (dedup.incremental_near_dup_candidates,
 X-DEDUP-INCR-NEAR): batch-vs-index recall parity with the full-corpus
 pipeline, intra-batch pairs, planted near-dups, and the broadcast
-index-never-reshuffles plan."""
+index-never-reshuffles plan. Both operators run the one band probe, so
+the batch operator (dedup.lsh_candidate_pairs) is also pinned against a
+brute-force Python reference that shares no code with it."""
 
 from __future__ import annotations
+
+import random
+from collections import Counter
 
 import pytest
 
@@ -181,3 +186,59 @@ def test_lsh_pairs_emit_at_first_surviving_band(spark):
         sig, "doc_id", bands=2, rows=1, max_bucket=100, n_docs=3,
         cache_keys=False).select("id_a", "id_b").collect()]
     assert sorted(got2) == [(1, 2), (1, 3), (2, 3)]
+
+
+def _reference_pairs(rows, bands, width_rows, max_bucket):
+    """Brute force over raw signature values: every id pair (a < b)
+    whose rows agree on some band whose bucket holds at most
+    ``max_bucket`` docs, listed once."""
+    def band(r, b):
+        return tuple(r[1 + b * width_rows:1 + (b + 1) * width_rows])
+    width = [Counter(band(r, b) for r in rows) for b in range(bands)]
+    return sorted(
+        (a[0], c[0]) for a in rows for c in rows if a[0] < c[0]
+        and any(band(a, b) == band(c, b)
+                and width[b][band(a, b)] <= max_bucket
+                for b in range(bands)))
+
+
+#: 3 bands × 2 rows over a 3-letter alphabet: 9 keys per band, so 40
+#: docs fill buckets of widths 1-9. Docs 1/2 share every value; 3-6
+#: widen their band-0 bucket to 6, past max_bucket 3 and 4, so the
+#: pair (1, 2) must emit at its first SURVIVING band (1), once.
+_BANDS, _ROWS = 3, 2
+
+
+def _random_sig_rows():
+    rng = random.Random(7)
+    rows = [(i, *[rng.choice("abc") for _ in range(_BANDS * _ROWS)])
+            for i in range(7, 41)]
+    planted = [(1, "x", "x", "y", "y", "z", "z"),
+               (2, "x", "x", "y", "y", "z", "z")]
+    planted += [(i, "x", "x", f"u{i}", "v", f"w{i}", "w")
+                for i in range(3, 7)]
+    return planted + rows
+
+
+@pytest.mark.parametrize("max_bucket,n_docs", [
+    (3, None), (4, 40), (100, None), (100, 40)])
+def test_lsh_pairs_equal_brute_force_reference(spark, max_bucket, n_docs):
+    """Exact equality, multiplicity included, with the reference:
+    guard active with buckets on both sides of the cap (3, 4), guard
+    run but idle (100, unattested), guard skipped by the ``n_docs``
+    attestation (100, 40)."""
+    rows = _random_sig_rows()
+    sig = spark.createDataFrame(
+        rows, "doc_id bigint, "
+        + ", ".join(f"h{i} string" for i in range(_BANDS * _ROWS)))
+    got = sorted(tuple(r) for r in dedup.lsh_candidate_pairs(
+        sig, "doc_id", bands=_BANDS, rows=_ROWS, max_bucket=max_bucket,
+        n_docs=n_docs, cache_keys=False).collect())
+    want = _reference_pairs(rows, _BANDS, _ROWS, max_bucket)
+    assert got == want
+    widths = Counter(r[1:3] for r in rows)
+    if max_bucket < 100:
+        # the cap really straddles this corpus: some buckets are kept,
+        # some dropped, and the planted pair survives only via band 1
+        assert min(widths.values()) <= max_bucket < max(widths.values())
+        assert (1, 2) in got

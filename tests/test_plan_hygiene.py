@@ -1,10 +1,10 @@
 """Catalog-wide physical-plan hygiene: EVERY registered query's
 executed plan is checked for (a) zero row-at-a-time Python
 (BatchEvalPython — the 10-100x slow path), (b) zero undeclared
-cartesian products, and (c) BroadcastNestedLoopJoin / MapInPandas
-only where the design declares them. A new query that slips a Python
-UDF or an accidental cross join into the catalog fails here, not in a
-100 TB run."""
+cartesian products, and (c) BroadcastNestedLoopJoin / MapInPandas /
+unpartitioned Window only where the design declares them. A new
+query that slips a Python UDF or an accidental cross join into the
+catalog fails here, not in a 100 TB run."""
 
 from __future__ import annotations
 
@@ -41,6 +41,62 @@ BNLJ_OK = {"q09_theta_or_isnull_join", "q45_range_join",
 #: Queries whose plan legitimately carries Arrow-batched Python
 #: (mapInPandas): the binary media pipeline.
 ARROW_OK = {"q60_multimodal_pipeline"}
+
+#: Queries whose plan carries a Window with no PARTITION BY — a
+#: single-partition sort of the window's whole input (Spark's "No
+#: Partition Defined for Window operation" warning). Seeded from the
+#: catalog as it stands. The window path of plans.prefix runs only
+#: under its WINDOW_MAX_ROWS attestation: dim surrogate keys (q23,
+#: q24 and the warehouse builds q28, q29, q64), packing offsets and LM
+#: terciles (q57). The rest rank small relations: histogram buckets
+#: and a top-5 (q47), the SQ8 error ranking (q55), vocabulary
+#: rankings (q58). A new entry needs the same kind of reason.
+WINDOW_UNPARTITIONED_OK = {
+    "q23_surrogate_keys", "q24_unknown_member_fallback",
+    "q28_fact_sales_build", "q29_warehouse_rowcounts",
+    "q64_fact_src_target_build", "q47_kmv_sketch",
+    "q55_ann_lsh_bucketed_topk", "q57_text_stats", "q58_token_vocab"}
+
+
+def unpartitioned_windows(df) -> list[str]:
+    """Window operators with an empty partition spec anywhere in the
+    executed plan tree: the adaptive plan and its query stages, cached
+    relations' plans and subqueries — read off the plan nodes, not off
+    the warnings Spark logs when such a window runs."""
+    found = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Window" in name and node.partitionSpec().isEmpty():
+            found.append(f"{name} {node.orderSpec().mkString(', ')}")
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        for seq in (node.children(), node.innerChildren(),
+                    node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return found
+
+
+def test_unpartitioned_window_is_detected(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    df = spark.range(10).withColumn("g", F.col("id") % 2)
+    planted = df.withColumn(
+        "r", F.row_number().over(Window.orderBy("id")))
+    got = unpartitioned_windows(planted)
+    assert len(got) == 1 and got[0].startswith("Window id#"), got
+    # found inside a cached relation too, and not on a partitioned one
+    cached = planted.persist()
+    try:
+        assert len(unpartitioned_windows(cached.join(df, "id"))) == 1
+    finally:
+        cached.unpersist()
+    assert unpartitioned_windows(df.withColumn(
+        "r", F.row_number().over(Window.partitionBy("g").orderBy("id")))) \
+        == []
 
 
 # --- broadcast attestation (VERDICT r11 #2) --------------------------------
@@ -164,3 +220,6 @@ def test_catalog_plan_hygiene(spark, sf_dir, name):
         assert "MapInPandas" not in plan and \
             "ArrowEvalPython" not in plan, \
             f"{name}: undeclared Python stage"
+    if name not in WINDOW_UNPARTITIONED_OK:
+        assert not unpartitioned_windows(df), \
+            f"{name}: undeclared unpartitioned Window"
