@@ -26,6 +26,13 @@ STAR_TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
+#: The fact and corpus stages: the ones `load_tables` hands out
+#: scan-balanced (see `_balanced`). Dims stay raw — they are just as
+#: monolithic in testdata, but dim-sized and broadcast, so balancing
+#: them would only add a repartition and a persisted copy to every plan.
+BALANCED_STAGES = frozenset(
+    {"orders", "lineitem", "events", "documents", "embeddings"})
+
 
 def _fix_events_ts(df: DataFrame) -> DataFrame:
     """events.parquet stores ts as TIMESTAMP(NANOS), which Spark's
@@ -88,6 +95,27 @@ class SourceRegistry:
         return reg
 
 
+def read_stage(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One testdata stage as its plain parquet read. `load_tables`
+    wraps this with the relation-catalog cache and the scan balancing;
+    a query whose contract is the scan itself (filters and column
+    pruning pushed into the parquet reader — q02) reads it directly,
+    since a balanced, persisted relation hides the scan."""
+    # Engine date/timestamp semantics are UTC (SURVEY session posture;
+    # oracle timestamps are naive-UTC). get_spark pins this for its own
+    # sessions, but the workload also runs on DRIVER-provided sessions
+    # whose tz may differ — year()/date_trunc()/window() over LTZ
+    # columns are session-tz dependent, so pin it at relation
+    # resolution — here and on every `load_tables` lookup, the gates
+    # every query passes through (runtime-settable conf, like
+    # nanosAsLong below).
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if table == "events":
+        # runtime-settable; required to read nanos-timestamp parquet
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return SourceRegistry.for_star_dir(sf_dir, (table,)).read(spark, table)
+
+
 def load_tables(spark: SparkSession, sf_dir: str,
                 tables: Iterable[str] = STAR_TABLES) -> dict[str, DataFrame]:
     """Read the testdata star as DataFrames keyed by table name.
@@ -98,26 +126,23 @@ def load_tables(spark: SparkSession, sf_dir: str,
     queries over the same stages would otherwise pay it per query. The
     cache dies with the session, so a restarted session (tests) never
     sees stale plans.
+
+    The catalog also owns the stage's scan layout: a `BALANCED_STAGES`
+    table is handed out through `_balanced`, decided once per (session,
+    stage) — every query over a fact or corpus stage reads the same
+    relation, and none re-decides its layout.
     """
     from ..operators._cache import session_cache
     cache = session_cache(spark)
-    # Engine date/timestamp semantics are UTC (SURVEY session posture;
-    # oracle timestamps are naive-UTC). get_spark pins this for its own
-    # sessions, but the workload also runs on DRIVER-provided sessions
-    # whose tz may differ — year()/date_trunc()/window() over LTZ
-    # columns are session-tz dependent, so pin it here, at relation
-    # resolution, the one gate every query passes through
-    # (runtime-settable conf, like nanosAsLong below).
+    # the UTC pin holds on every lookup, cached or not (see read_stage)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     out: dict[str, DataFrame] = {}
     for t in tables:
         key = (sf_dir, t)
         if key not in cache:
-            if t == "events":
-                # runtime-settable; required to read nanos-timestamp parquet
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            reg = SourceRegistry.for_star_dir(sf_dir, (t,))
-            cache[key] = reg.read(spark, t)
+            df = read_stage(spark, sf_dir, t)
+            cache[key] = (_balanced(spark, df, sf_dir, t)
+                          if t in BALANCED_STAGES else df)
         out[t] = cache[key]
     return out
 
@@ -181,18 +206,17 @@ def stage_scan_splits(sf_dir: str, table: str) -> tuple[int, int] | None:
         return None
 
 
-def rebalance_single_split(spark: SparkSession, df: DataFrame,
-                           sf_dir: str, table: str,
-                           max_bytes: int = REBALANCE_MAX_BYTES) -> DataFrame:
+def _balanced(spark: SparkSession, df: DataFrame,
+              sf_dir: str, table: str) -> DataFrame:
     """Round-robin-rebalance a SMALL stage relation whose parquet layout
     caps scan parallelism below the cluster (testdata files are written
     as one row group, so every downstream map-stage operator — joins,
     expands, partial aggregates — runs in ONE task while 31 cores
-    idle). The exchange moves only the pruned/pushed-down scan output
-    once, and the explicit partition count keeps AQE from coalescing
-    it back to one. Footer-attested and size-gated: inputs with proper
-    row-group layout, or above `max_bytes`, keep their natural splits
-    — at 100 TB this helper is a no-op by construction, the way a real
+    idle). The exchange moves the scan output once, and the explicit
+    partition count keeps AQE from coalescing it back to one.
+    Footer-attested and size-gated: inputs with proper row-group
+    layout, or above `REBALANCE_MAX_BYTES`, keep their natural splits
+    — at 100 TB this is a no-op by construction, the way a real
     engine's adaptive split compaction only kicks in on pathological
     small-file/monolith layouts.
 
@@ -206,7 +230,7 @@ def rebalance_single_split(spark: SparkSession, df: DataFrame,
         return df
     row_groups, nbytes = meta
     par = spark.sparkContext.defaultParallelism
-    if row_groups >= par or nbytes > max_bytes:
+    if row_groups >= par or nbytes > REBALANCE_MAX_BYTES:
         return df
     from ..operators._cache import cached_relation
     return cached_relation(df.repartition(par), "rebalanced_stage", table,

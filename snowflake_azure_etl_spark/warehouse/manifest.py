@@ -103,34 +103,10 @@ def fingerprint_sql(table: str, key_cols: tuple[str, ...]) -> str:
             f"AS HUGEINT)) % {FP_MOD} AS BIGINT) FROM {table})")
 
 
-#: Above this attested row count the key projection is repartitioned
-#: before hashing: a freshly-landed table often reads as 1-3 splits,
-#: and md5 is the manifest's dominant cost (~0.85 of ~1.3 s/600 k rows
-#: per 3-way task set, measured) — spreading the narrow (keys-only)
-#: rows across the cluster halves the wall clock for a shuffle of
-#: bare integers. Below the threshold the shuffle costs more than it
-#: buys.
-PARALLEL_HASH_MIN_ROWS = 100_000
-
-
-def manifest_input(df: DataFrame, key_cols: tuple[str, ...],
-                   n_rows: int | None = None) -> DataFrame:
-    """The keys-only relation the fingerprint pass should run over —
-    column-pruned always; repartitioned to the cluster's parallelism
-    when the caller attests it is large (fingerprints are
-    order/partition-invariant, so this is a pure wall-clock lever)."""
-    keys = df.select(*key_cols)
-    if n_rows is not None and n_rows > PARALLEL_HASH_MIN_ROWS:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        keys = keys.repartition(par)
-    return keys
-
-
 def table_manifest(df: DataFrame, name: str,
-                   key_cols: tuple[str, ...],
-                   n_rows: int | None = None) -> DataFrame:
+                   key_cols: tuple[str, ...]) -> DataFrame:
     """One manifest row: (entity, n_rows, fp)."""
-    return (manifest_input(df, key_cols, n_rows)
+    return (df.select(*key_cols)
             .agg(F.count("*").alias("n_rows"),
                  content_fingerprint(*key_cols).alias("fp"))
             .select(F.lit(name).alias("entity"), "n_rows", "fp"))

@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 
 from ..plans.attest import KEY_ONLY_MAX_ROWS, bounded_broadcast
 
-from ..functions.scalar import coalesce_unknown, date_key, dec, safe_div
+from ..functions.scalar import (coalesce_unknown, date_key, dec, safe_div,
+                                scaled_long)
 from ..plans.datedim import build_dim_date
 from ..plans.surrogate import with_surrogate_key
 from ..sources.registry import load_tables, stage_row_count
@@ -232,8 +233,8 @@ def build_fact_sales(spark: SparkSession, t: dict[str, DataFrame],
     # net on scaled longs (cents × basis-points → exact scale-6 integer):
     # per-row long codegen instead of BigDecimal; the /1e6 double convert
     # is correctly rounded, bit-identical to the decimal→double cast
-    epc = F.round(F.col("l_extendedprice") * 100).cast("long")      # s2
-    dbp = F.round(F.col("l_discount") * 10000).cast("long")         # s4
+    epc = scaled_long("l_extendedprice")
+    dbp = scaled_long("l_discount", 4)
     net = (epc * (10000 - dbp)).cast("double") / F.lit(1000000.0)
     return (li.join(orders, li.l_orderkey == orders.o_orderkey, "inner")
             .join(_key_map(cust_keys),
@@ -362,19 +363,12 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def _build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The full dimensional DAG as lazy DataFrames, in dependency order
-    (Location first — its referrers join to it, same as the reference)."""
+    (Location first — its referrers join to it, same as the reference).
+    The two fact sources (lineitem⋈orders feeds all three facts) arrive
+    scan-balanced from the stage catalog (`sources.registry.load_tables`)."""
     t = load_tables(spark, sf_dir,
                     ("region", "nation", "customer", "supplier", "part",
                      "orders", "lineitem"))
-    # single-split stage layouts serialize the fact builds' map stages
-    # (lineitem⋈orders feeds all three facts) — rebalance the two fact
-    # sources when the footer attests the layout caps parallelism (see
-    # sources.registry.rebalance_single_split; no-op on real layouts)
-    from ..sources.registry import rebalance_single_split
-    t = dict(t)
-    for fact_src in ("lineitem", "orders"):
-        t[fact_src] = rebalance_single_split(spark, t[fact_src],
-                                             sf_dir, fact_src)
     # upper-bound row attestations from parquet footers (what a catalog
     # provides for free): each dim is bounded by its staging source, so
     # a big source flips its build to the partition-parallel keying path

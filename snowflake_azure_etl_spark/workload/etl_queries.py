@@ -79,10 +79,8 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # portable natural-key hashes (warehouse.manifest), so the lake
     # manifest verifies loads and compactions by VALUE, and the
     # driver hash attests the fingerprint arithmetic itself. The md5
-    # pass runs over the keys-only projection, repartitioned under
-    # the footer row-count attestation so a big single-split landing
-    # doesn't hash on 1-3 cores (manifest.manifest_input).
-    from ..sources.registry import stage_row_count
+    # pass runs over the keys-only projection of the stage catalog's
+    # relation (scan-balanced for the fact and corpus stages).
     # data-quality sweep (X-DQ, warehouse.quality): dbt-core-style
     # column contracts. The tight l_discount range is a deliberately
     # failing rule so the FAIL path is driver-attested, not just the
@@ -116,9 +114,8 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         # documented in operators._cache)
         one = cached_build(
             spark, ("q26_manifest", sf_dir, name),
-            lambda df=df, cols=cols, keys=keys, raggs=raggs, name=name:
-            manifest.manifest_input(df, cols,
-                                    stage_row_count(sf_dir, name))
+            lambda df=df, cols=cols, keys=keys, raggs=raggs:
+            df.select(*cols)
             .agg(F.count("*").alias("n_rows"),
                  manifest.content_fingerprint(*keys).alias("fp"),
                  *raggs)

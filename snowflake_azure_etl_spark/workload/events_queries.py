@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 from ..plans.attest import bounded_broadcast
 
 from ..functions.scalar import dec
-from ..sources.registry import (load_tables,
-                                rebalance_single_split)
+from ..sources.registry import load_tables
 from ._registry import query
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -261,9 +260,7 @@ def q40_events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
       OWN first event (cohort-free retention curve): one user-keyed
       min-aggregate, one co-partitioned join back, one offset
       group-by; total_value = retained share of all users."""
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     base = (e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"),
                  F.countDistinct("user_id").alias("n_users"),
@@ -414,9 +411,7 @@ def q41_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization, unlike ln/exp-bearing scores. At scale this is a
     bucket-count-sized computation over the hourly rollup, never the
     raw events."""
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     sliding = (e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
                .agg(F.count("*").alias("n_events"),
                     F.sum(dec("value")).cast("double").alias("total_value"))
@@ -501,9 +496,7 @@ def q42_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session ids, then per-session rollup — the batch twin of streaming
     session_window(ts, '30 minutes'). Scale: both stages partition by
     user_id, so one shuffle serves the window and the final group-by."""
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     sess = (e.withColumn(
@@ -596,9 +589,7 @@ def q43_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale behavior (hubs, cycles, dangling mass, random graphs) is
     pytest-pinned against a Python reference (tests/test_pagerank.py).
     """
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     k = F.get_json_object("props", "$.k").cast("int")
     props_leg = (e.groupBy("event_type", (k % 10).alias("k_mod"))
                  .agg(F.count("*").alias("n_events"))

@@ -16,8 +16,7 @@ from ..plans.attest import bounded_broadcast
 
 from ..functions.scalar import dec
 from ..operators import asof
-from ..sources.registry import (load_tables,
-                                rebalance_single_split)
+from ..sources.registry import load_tables
 from ._registry import query
 from .pipeline_queries import _DSIR_CTES
 
@@ -85,9 +84,7 @@ def q44_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     view at-or-before it (operators.asof — union+window plan, one
     shuffle, no range blowup), checked against DuckDB's native ASOF
     JOIN."""
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     purchases = (e.filter(F.col("event_type") == "purchase")
                  .select("event_id", "user_id", "ts"))
     views = (e.filter(F.col("event_type") == "view")
@@ -148,9 +145,7 @@ def q45_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim-sized and broadcast → BroadcastNestedLoopJoin, which is the
     right plan at this shape; for big×big range joins the scale path is
     coarse-bucket equi-join + residual predicate (SCALE.md)."""
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     # one-row lower bound kept lazy (cross join, not a driver collect)
     lo = e.agg(F.date_trunc("day", F.min("ts")).alias("lo"))
     iv = (spark.range(41).crossJoin(bounded_broadcast(
@@ -650,9 +645,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       cms_estimate, cms_merge,
                                       hll_partials, hll_rollup, kmv_mins)
     from ..sources.registry import stage_row_count
-    e = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("events",))["events"],
-        sf_dir, "events")
+    e = load_tables(spark, sf_dir, ("events",))["events"]
     n_rows = stage_row_count(sf_dir, "events")
     # r12 (VERDICT r11 #4): ONE narrow events base feeds every
     # events-derived sketch family (KMV, HLL, both CMS legs, both
@@ -769,9 +762,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                           .cast("double").alias("estimate")))
         return heavy.unionByName(rollup)
 
-    docs = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("documents",))["documents"],
-        sf_dir, "documents")
+    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # r12 (VERDICT r11 #4): ONE documents feature base for the three
     # mixture legs — token counts, the qmix probe's three feature
     # doubles, and its weak label are all tokenization-heavy row-local
@@ -873,7 +864,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
            .filter(F.col("r_name") == "EUROPE")
            .select("s_suppkey").distinct())
     bloom = bloom_build(mem.select(F.col("s_suppkey").alias("k")), "k")
-    li = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
+    li = t["lineitem"]
 
     # ONE fact pass: pre-aggregate lineitem to (suppkey, returnflag)
     # counts — key-cardinality-sized — then the bloom verdicts and the
@@ -1061,9 +1052,7 @@ def q35_window_frame_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NTILE(4) revenue quartile plus PERCENT_RANK/CUME_DIST over the
     same revenue ordering (W7 — Catalyst merges all three into ONE
     extra Window stage) complete the ranked-window-function family."""
-    li = rebalance_single_split(
-        spark, load_tables(spark, sf_dir, ("lineitem",))["lineitem"],
-        sf_dir, "lineitem")
+    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     daily = (li.filter(F.col("l_suppkey") % 20 == 0)
              .groupBy(F.col("l_suppkey").alias("suppkey"),
                       F.col("l_shipdate").alias("ship_date"))
@@ -1230,13 +1219,7 @@ def q48_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle IS the plain join."""
     from ..plans.layout import salted_join
     t = load_tables(spark, sf_dir, ("lineitem", "supplier"))
-    # single-row-group stage layout caps the scan (and therefore the
-    # salted map side + partial aggregate) at one task — the same
-    # footer-attested rebalance every other lineitem consumer applies
-    # (r16: the whole 600k-row join+aggregate measured as a 3-task
-    # stage, serializing ~0.9 s of work 32 cores should share)
-    big = rebalance_single_split(
-        spark, t["lineitem"], sf_dir, "lineitem").select(
+    big = t["lineitem"].select(
         F.col("l_suppkey").alias("suppkey"),
         (dec("l_extendedprice") * (1 - dec("l_discount"))).alias("_rev"))
     small = t["supplier"].select(

@@ -19,23 +19,20 @@ from ..operators import lm as lm_ops
 from ..operators import unigram as ug_ops
 from ..operators import wordpiece as wp_ops
 from ..operators.sampling import DSIR_BUCKETS, plog2_sql
-from ..sources.registry import (load_tables, rebalance_single_split,
-                                stage_row_count)
+from ..sources.registry import load_tables, stage_row_count
 from ._registry import query
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents corpus, rebalanced when the stage layout caps scan
-    parallelism (footer-attested no-op on real layouts): every query
-    here runs corpus-wide per-row work (shingling, hashing, Arrow
-    decode), which must not serialize on a single-row-group file."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return rebalance_single_split(spark, docs, sf_dir, "documents")
+    """The documents corpus, scan-balanced by the stage catalog
+    (`load_tables`): every query here runs corpus-wide per-row work
+    (shingling, hashing, Arrow decode)."""
+    return load_tables(spark, sf_dir, ("documents",))["documents"]
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    return rebalance_single_split(spark, emb, sf_dir, "embeddings")
+    return load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
+
 
 MINHASH_K = 8
 LSH_BANDS = 2
@@ -243,9 +240,9 @@ _LINE_SEP = "the"
 def q50_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content-hash groupBy (operators.dedup): ONE
     hash shuffle (uniform 128-bit key) at any corpus size — the only
-    other exchange the plan may carry is the declared round-robin
-    split compaction on pathological test layouts (no-op at scale;
-    see sources.registry.rebalance_single_split).
+    other exchange the plan may carry is the stage catalog's
+    round-robin split compaction on pathological test layouts (no-op
+    at scale; see sources.registry.load_tables).
 
     The surviving keepers then flow through the corpus-sampling
     operators (operators.sampling, X-SAMPLE-STRATIFIED / X-QUOTA):

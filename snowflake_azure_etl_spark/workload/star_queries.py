@@ -20,9 +20,9 @@ from ..plans.attest import bounded_broadcast
 
 from ..functions.dates import oracle_date_attributes_sql
 from ..functions.scalar import (coalesce_unknown, date_key, davg, dec, dsum,
-                                safe_div, store_name)
+                                safe_div, scaled_long, store_name)
 from ..plans.datedim import build_dim_date
-from ..sources.registry import load_tables
+from ..sources.registry import load_tables, read_stage
 from ._registry import query
 
 # Dim_Date span covering the testdata's o_orderdate / l_shipdate range
@@ -84,26 +84,17 @@ def q01_sales_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-distinct-aggs-in-one-query shape (reference
     create_views.py:184-185), folded in from the former q12.
 
-    The fact scan is rebalanced when the stage file's parquet layout
-    caps scan parallelism below the cluster (footer-attested,
-    size-gated — see sources.registry.rebalance_single_split): the
-    two-distinct expand triples the rows into the partial aggregate,
-    and on a single-row-group file that whole map stage would
-    otherwise run in one task."""
+    The two-distinct expand triples the rows into the partial
+    aggregate, so the fact side relies on the stage catalog's scan
+    balancing (`sources.registry.load_tables`): on a single-row-group
+    file that whole map stage would otherwise run in one task. Money
+    math runs on exact scaled longs (`functions.scalar.scaled_long`)."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     dim_date = build_dim_date(spark, DATE_START, DATE_END)
-    from ..sources.registry import rebalance_single_split
-    li = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
-    # Money math on scaled longs (cents), not DecimalType: the per-row
-    # products stay in whole-stage-codegen long arithmetic (~2× faster
-    # than the BigDecimal path) and the results are still exact — sums
-    # are exact integers, converted to double once per *group*. Exact
-    # while |sum of cents·percent| < 2^53 (≈ $9×10^11 per group at
-    # scale 4) — far above any group in this star. Matches the oracle's
-    # DECIMAL arithmetic bit-for-bit.
-    epc = F.round(F.col("l_extendedprice") * 100).cast("long")   # scale 2
-    dc = F.round(F.col("l_discount") * 100).cast("long")         # scale 2
-    qc = F.round(F.col("l_quantity") * 100).cast("long")         # scale 2
+    li = t["lineitem"]
+    epc = scaled_long("l_extendedprice")
+    dc = scaled_long("l_discount")
+    qc = scaled_long("l_quantity")
     return (
         li.join(bounded_broadcast(t["part"], bound="TPC-H dim (dim-grain relation)"),
                 li.l_partkey == F.col("p_partkey"))
@@ -150,8 +141,9 @@ def q02_scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit projection + multi-column IS NOT NULL + range predicate
     (reference anti-SELECT* policy, create_views.py:19-98; NOT NULL
     guards, load_dimension_tables.py:84-86). Both the 4-column ReadSchema
-    and all three predicates reach the parquet scan as PushedFilters."""
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
+    and all three predicates reach the parquet scan as PushedFilters, so
+    it reads the plain stage, not the catalog's balanced relation."""
+    li = read_stage(spark, sf_dir, "lineitem")
     return li.filter(
             (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
             & F.col("l_extendedprice").isNotNull()
@@ -269,16 +261,11 @@ def q07_star_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFra
     dim sides broadcast — one shuffle total plus the final group-by."""
     t = load_tables(spark, sf_dir,
                     ("lineitem", "orders", "customer", "nation", "region"))
-    from ..sources.registry import rebalance_single_split
-    # fact side on balanced splits (r16 — the q01/q11/q14 pattern):
-    # the monolithic test layout caps the scan at its row-group count,
-    # serializing the join+aggregate map stage; no-op on real layouts
-    l = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
-    o, c = t["orders"], t["customer"]
+    l, o, c = t["lineitem"], t["orders"], t["customer"]
     n, r = t["nation"], t["region"]
-    # scaled-long revenue (see q01): exact scale-4 integer sums
-    rev = (F.round(F.col("l_extendedprice") * 100).cast("long")
-           * (100 - F.round(F.col("l_discount") * 100).cast("long")))
+    # exact scale-4 integer sums
+    rev = (scaled_long("l_extendedprice")
+           * (100 - scaled_long("l_discount")))
     return (l.join(o, l.l_orderkey == o.o_orderkey)
             .join(bounded_broadcast(c, bound="TPC-H dim (dim-grain relation)"), o.o_custkey == c.c_custkey)
             .join(bounded_broadcast(n, bound="TPC-H dim (dim-grain relation)"), c.c_nationkey == n.n_nationkey)
@@ -325,13 +312,6 @@ def q08_date_spine_left_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts left-joined through both target facts). Months with no
     orders survive with zeroed measures."""
     t = load_tables(spark, sf_dir, ("orders", "lineitem"))
-    from ..sources.registry import rebalance_single_split
-    # both month-grain aggregates on balanced splits (r16 — the
-    # q01/q11/q14 pattern; no-op on real layouts)
-    t = {"orders": rebalance_single_split(spark, t["orders"],
-                                          sf_dir, "orders"),
-         "lineitem": rebalance_single_split(spark, t["lineitem"],
-                                            sf_dir, "lineitem")}
     dim_date = build_dim_date(spark, DATE_START, DATE_END)
     spine = (dim_date
              .filter((F.col("day_num_in_month") == 1)
@@ -454,9 +434,9 @@ def q11_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key hash aggregate with 9 measures (TPC-H Q1 shape; the
     reference's A1/A2 groupings, create_views.py:167-170). Partial
     map-side aggregation makes the shuffle carry one row per
-    (flag,status) per task. The fact scan shares q01's rebalanced
-    relation when the stage layout caps scan parallelism (see
-    sources.registry.rebalance_single_split).
+    (flag,status) per task. The fact scan reads the stage catalog's
+    balanced lineitem relation, shared with q01
+    (`sources.registry.load_tables`).
 
     A10: exact interpolated percentiles (median + p95) ride the same
     aggregate — `F.percentile` is Spark's exact sort-based aggregate,
@@ -465,19 +445,13 @@ def q11_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     `approx_percentile` on the identical plan shape (t-digest, bounded
     state, mergeable partials) — equivalence within its accuracy bound
     is pinned by tests/test_percentiles.py."""
-    from ..sources.registry import rebalance_single_split
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    li = rebalance_single_split(spark, li, sf_dir, "lineitem")
-    # Scaled-long money math (see q01): the per-row products stay in
-    # whole-stage-codegen long arithmetic (~2.5× the BigDecimal path
-    # here). Sums are exact integers (scale-6 charge sums stay under
-    # 2^63 far past SF100); one double conversion per group matches the
-    # oracle's DECIMAL→DOUBLE cast bit-for-bit while the scaled sum is
-    # below 2^53 — true per (flag,status) group through bench scale.
-    epc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    txc = F.round(F.col("l_tax") * 100).cast("long")
-    qc = F.round(F.col("l_quantity") * 100).cast("long")
+    # scale-6 charge sums stay under 2^63 far past SF100, and under
+    # 2^53 per (flag,status) group through bench scale
+    epc = scaled_long("l_extendedprice")
+    dc = scaled_long("l_discount")
+    txc = scaled_long("l_tax")
+    qc = scaled_long("l_quantity")
     return (li.filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
             .groupBy("l_returnflag", "l_linestatus")
             .agg((F.sum(qc).cast("double") / 100.0).alias("sum_qty"),
@@ -529,9 +503,6 @@ def q13_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     year-grain broadcast self-join. Pivot→unpivot (melt) round-trip
     is pinned by tests/test_pivot.py."""
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    from ..sources.registry import rebalance_single_split
-    # both year-grain aggregates on balanced splits (r16, q01 pattern)
-    o = rebalance_single_split(spark, o, sf_dir, "orders")
     tp = dec("o_totalprice")
     pivoted = (o.groupBy(F.year("o_orderdate").alias("order_year"))
                .pivot("o_orderstatus", ["F", "O", "P"])
@@ -570,17 +541,15 @@ def q13_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_ratio_nullif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULLIF-guarded ratio-of-aggregates + ROUND (reference
-    create_views.py:159-160, 343-346). Shares q01's rebalanced fact
-    relation (countDistinct expands rows into the partial aggregate —
-    the map stage must not serialize on a single-split scan)."""
-    from ..sources.registry import rebalance_single_split
+    create_views.py:159-160, 343-346). Shares q01's balanced fact
+    relation from the stage catalog (countDistinct expands rows into
+    the partial aggregate — the map stage must not serialize on a
+    single-split scan)."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     li, p = t["lineitem"], t["part"]
-    li = rebalance_single_split(spark, li, sf_dir, "lineitem")
-    # scaled-long money math (see q01): exact, codegen-friendly
-    epc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    qc = F.round(F.col("l_quantity") * 100).cast("long")
+    epc = scaled_long("l_extendedprice")
+    dc = scaled_long("l_discount")
+    qc = scaled_long("l_quantity")
     return (li.join(bounded_broadcast(p, bound="TPC-H dim (dim-grain relation)"), li.l_partkey == p.p_partkey)
             .groupBy(p.p_brand.alias("brand"))
             .agg(safe_div(F.sum(epc * dc).cast("double") / 10000.0,
@@ -607,9 +576,6 @@ def q14_ratio_nullif(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ... HAVING over aggregates (create_views.py:265)."""
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    from ..sources.registry import rebalance_single_split
-    # custkey-grain aggregate on balanced splits (r16, q01 pattern)
-    o = rebalance_single_split(spark, o, sf_dir, "orders")
     agg = (o.groupBy(F.col("o_custkey").alias("custkey"))
            .agg(F.count("*").alias("n_orders"),
                 F.sum(dec("o_totalprice")).alias("_total")))
@@ -640,18 +606,14 @@ def q16_reagg_over_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     The view is created via the catalog (S8) and composes lazily —
     Catalyst inlines it like Snowflake view expansion."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
-    from ..sources.registry import rebalance_single_split
-    # fact side on balanced splits (r16 — the q01/q11/q14 pattern)
-    li = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
-    p = t["part"]
-    # view carries the exact scale-2 integer sum (see q01); the re-agg
-    # SUM/MAX over longs hits the same integers the oracle's DECIMAL does
+    li, p = t["lineitem"], t["part"]
+    # view carries the exact scale-2 integer sum; the re-agg SUM/MAX
+    # over longs hits the same integers the oracle's DECIMAL does
     inner = (li.join(bounded_broadcast(p, bound="TPC-H dim (dim-grain relation)"),
                      li.l_partkey == p.p_partkey)
              .groupBy(p.p_brand.alias("brand"),
                       F.year("l_shipdate").alias("yr"))
-             .agg(F.sum(F.round(F.col("l_extendedprice") * 100)
-                        .cast("long")).alias("revenue")))
+             .agg(F.sum(scaled_long("l_extendedprice")).alias("revenue")))
     inner.createOrReplaceTempView("vw_brand_year")
     return (spark.table("vw_brand_year")
             .groupBy("brand")
@@ -725,13 +687,10 @@ def q18_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded LIMIT output is the reference's top-N preview sink
     (view_sample_data.py:36)."""
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
-    from ..sources.registry import rebalance_single_split
-    # fact side on balanced splits (r16 — the q01/q11/q14 pattern)
-    li = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
-    o = t["orders"]
-    # scaled-long revenue (see q01/q11): exact integer sums per order
-    rev = (F.round(F.col("l_extendedprice") * 100).cast("long")
-           * (100 - F.round(F.col("l_discount") * 100).cast("long")))
+    li, o = t["lineitem"], t["orders"]
+    # exact integer revenue sums per order
+    rev = (scaled_long("l_extendedprice")
+           * (100 - scaled_long("l_discount")))
     return (li.join(o, li.l_orderkey == o.o_orderkey)
             .groupBy(o.o_orderkey.alias("orderkey"))
             .agg((F.sum(rev).cast("double") / 10000.0).alias("revenue"))
@@ -767,10 +726,7 @@ def q20_derived_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount/qty, SaleExtendedCost = cost×qty, SaleTotalProfit = amount −
     cost×qty; verified from reference log dim_etl_run:232)."""
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
-    from ..sources.registry import rebalance_single_split
-    # fact side on balanced splits (r16 — the q01/q11/q14 pattern)
-    li = rebalance_single_split(spark, t["lineitem"], sf_dir, "lineitem")
-    p = t["part"]
+    li, p = t["lineitem"], t["part"]
     cost = dec(p.p_retailprice) * dec(li.l_quantity)
     return (li.join(bounded_broadcast(p, bound="TPC-H dim (dim-grain relation)"), li.l_partkey == p.p_partkey)
             .filter(li.l_orderkey % 50 == 0)

@@ -16,26 +16,20 @@ from pyspark.sql import functions as F
 
 from ..plans.attest import bounded_broadcast
 
-from ..functions.scalar import dec
+from ..functions.scalar import dec, scaled_long
 from ..sources.registry import load_tables
 from ._registry import query
 
 
 def _brand_year_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Scaled-long money math (see star_queries.q01): `_rev` is an exact
-    # integer at scale 4 (1e4 units/dollar), `_qty` at scale 2 — same
-    # integers the oracle's DECIMAL sums carry, ~2.5× faster per row.
-    # Consumers divide once per output value.
-    from ..sources.registry import rebalance_single_split
+    # `_rev` is an exact integer at scale 4 (1e4 units/dollar), `_qty`
+    # at scale 2 (functions.scalar.scaled_long). Consumers divide once
+    # per output value.
     t = load_tables(spark, sf_dir, ("lineitem", "part"))
     li, p = t["lineitem"], t["part"]
-    # r16: the join + partial-aggregate map stage ran as ONE task on
-    # the monolithic test parquet layout (the q07/q48 finding) —
-    # same footer-attested rebalance, no-op on real layouts
-    li = rebalance_single_split(spark, li, sf_dir, "lineitem")
-    epc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    qc = F.round(F.col("l_quantity") * 100).cast("long")
+    epc = scaled_long("l_extendedprice")
+    dc = scaled_long("l_discount")
+    qc = scaled_long("l_quantity")
     return (li.join(bounded_broadcast(p, bound="TPC-H dim (dim-grain relation)"), li.l_partkey == p.p_partkey)
             .groupBy(F.year("l_shipdate").alias("yr"),
                      p.p_brand.alias("brand"))
@@ -131,11 +125,8 @@ def q33_window_conditional_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregate inside a window partitioned by year —
     cross-group comparison (reference create_views.py:475-492 compares
     each group to a CASE-selected cohort within the year partition)."""
-    from ..sources.registry import rebalance_single_split
     t = load_tables(spark, sf_dir, ("orders", "customer"))
     o, c = t["orders"], t["customer"]
-    # r16: single-split map-stage rebalance (see q30 above)
-    o = rebalance_single_split(spark, o, sf_dir, "orders")
     base = (o.join(bounded_broadcast(c, bound="TPC-H dim (dim-grain relation)"), o.o_custkey == c.c_custkey)
             .groupBy(F.year("o_orderdate").alias("yr"),
                      c.c_mktsegment.alias("segment"))

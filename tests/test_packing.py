@@ -97,7 +97,6 @@ def test_determinism_under_repartition(spark, docs):
         sorted(map(tuple, b.select(cols).collect()))
 
 
-@pytest.mark.slow
 def test_shuffled_order_is_deterministic_and_decorrelated(spark, docs):
     """shuffle_order packing: same seed → identical offsets across
     reruns and partitionings; different seed → different order; the

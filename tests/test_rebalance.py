@@ -1,28 +1,19 @@
-"""sources.registry.rebalance_single_split gates (r6): rebalance ONLY
-when the parquet footer attests the layout caps scan parallelism AND
-the input is small; proper row-group layouts and big files keep their
-natural splits — the 100 TB no-op-by-construction contract."""
+"""The stage catalog's scan balancing (sources.registry.load_tables):
+a fact/corpus stage is rebalanced ONLY when the parquet footer attests
+the layout caps scan parallelism AND the input is small; proper
+row-group layouts and big files keep their natural splits — the
+100 TB no-op-by-construction contract. Dims are never balanced."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import functions as F
-
+from snowflake_azure_etl_spark.operators._cache import plan_key
 from snowflake_azure_etl_spark.sources import registry
-
-
-def explain_str(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _write(dirpath: str, name: str, row_group_size: int | None = None):
@@ -32,44 +23,56 @@ def _write(dirpath: str, name: str, row_group_size: int | None = None):
     pq.write_table(tbl, os.path.join(dirpath, f"{name}.parquet"), **kwargs)
 
 
+def _is_raw(spark, df, d: str, name: str) -> bool:
+    """`df` is the plain stage read: no repartition, nothing persisted."""
+    return (plan_key(df) == plan_key(spark.read.parquet(f"{d}/{name}.parquet"))
+            and not df.storageLevel.useMemory)
+
+
 def test_single_row_group_is_rebalanced_and_cached(spark):
     d = tempfile.mkdtemp(prefix="rebal_")
-    _write(d, "mono")                       # one row group
-    rg, nbytes = registry.stage_scan_splits(d, "mono")
+    _write(d, "lineitem")                   # one row group
+    _write(d, "part")                       # a dim, also one row group
+    rg, _ = registry.stage_scan_splits(d, "lineitem")
     assert rg == 1
-    df = spark.read.parquet(f"{d}/mono.parquet")
-    out = registry.rebalance_single_split(spark, df, d, "mono")
-    plan = explain_str(out)
-    assert "RoundRobinPartitioning" in plan or "InMemory" in plan
-    assert out.count() == 10_000
-    # same call → same cached relation (one compaction per session)
-    again = registry.rebalance_single_split(spark, df, d, "mono")
-    assert again is out
+    t = registry.load_tables(spark, d, ("lineitem", "part"))
+    par = spark.sparkContext.defaultParallelism
+    li = t["lineitem"]
+    assert li.count() == 10_000
+    assert li.rdd.getNumPartitions() == par
+    assert _is_raw(spark, t["part"], d, "part")
+    # a second lookup hands out the same relation (one compaction per
+    # session, decided once per stage)
+    again = registry.load_tables(spark, d, ("lineitem", "part"))
+    assert again["lineitem"] is li
+    assert again["part"] is t["part"]
 
 
 def test_many_row_groups_keep_natural_splits(spark):
     d = tempfile.mkdtemp(prefix="rebal_")
-    _write(d, "split", row_group_size=100)  # 100 row groups >= parallelism
-    rg, _ = registry.stage_scan_splits(d, "split")
+    _write(d, "lineitem", row_group_size=100)  # 100 row groups >= parallelism
+    rg, _ = registry.stage_scan_splits(d, "lineitem")
     assert rg >= spark.sparkContext.defaultParallelism
-    df = spark.read.parquet(f"{d}/split.parquet")
-    out = registry.rebalance_single_split(spark, df, d, "split")
-    assert out is df                        # untouched
+    li = registry.load_tables(spark, d, ("lineitem",))["lineitem"]
+    assert _is_raw(spark, li, d, "lineitem")
 
 
-def test_big_single_split_keeps_natural_splits(spark):
+def test_big_single_split_keeps_natural_splits(spark, monkeypatch):
+    monkeypatch.setattr(registry, "REBALANCE_MAX_BYTES", 1)  # "too big"
     d = tempfile.mkdtemp(prefix="rebal_")
-    _write(d, "big")
-    df = spark.read.parquet(f"{d}/big.parquet")
-    out = registry.rebalance_single_split(spark, df, d, "big",
-                                          max_bytes=1)  # force "too big"
-    assert out is df
+    _write(d, "orders")
+    o = registry.load_tables(spark, d, ("orders",))["orders"]
+    assert _is_raw(spark, o, d, "orders")
 
 
 def test_missing_footer_is_a_noop(spark):
-    df = spark.range(10).withColumn("v", F.col("id") * 2)
-    out = registry.rebalance_single_split(spark, df, "/nonexistent", "nope")
-    assert out is df
+    """A directory-shaped stage has no single footer to attest its
+    layout, so it keeps its natural splits."""
+    d = tempfile.mkdtemp(prefix="rebal_")
+    spark.range(100).write.parquet(f"{d}/documents.parquet")
+    assert registry.stage_scan_splits(d, "documents") is None
+    docs = registry.load_tables(spark, d, ("documents",))["documents"]
+    assert _is_raw(spark, docs, d, "documents")
 
 
 def test_rebalanced_partitions_survive_aqe(spark):
@@ -78,9 +81,8 @@ def test_rebalanced_partitions_survive_aqe(spark):
     whole point): the materialized relation really has cluster-width
     partitions."""
     d = tempfile.mkdtemp(prefix="rebal_")
-    _write(d, "aqe")
-    df = spark.read.parquet(f"{d}/aqe.parquet")
-    out = registry.rebalance_single_split(spark, df, d, "aqe")
-    out.count()                             # materialize the cache
+    _write(d, "embeddings")
+    emb = registry.load_tables(spark, d, ("embeddings",))["embeddings"]
+    emb.count()                             # materialize the cache
     par = spark.sparkContext.defaultParallelism
-    assert out.rdd.getNumPartitions() == par
+    assert emb.rdd.getNumPartitions() == par

@@ -16,9 +16,8 @@ from snowflake_azure_etl_spark.streaming import ingest
 from snowflake_azure_etl_spark.streaming.dedup import dedup_stream
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
-#: next #6): the whole module is `slow` — included by default, deselect
-#: with -m 'not slow' for the fast loop (pytest.ini)
-pytestmark = pytest.mark.slow
+#: next #6): tests that wait on micro-batches are `slow` (deselected by
+#: default, pytest.ini); the quick ones run in the default lane
 
 
 SCHEMA = T.StructType([
@@ -120,6 +119,7 @@ def test_new_file_arrival_extends_stream(spark, drop_dir):
     assert n2 == n1 + 1
 
 
+@pytest.mark.slow
 def test_scored_ingest_matches_batch_probe(spark, drop_dir):
     """Train-offline / score-online: a probe trained on the batch
     corpus gates the stream, and every streamed score equals the
@@ -156,6 +156,7 @@ def test_scored_ingest_matches_batch_probe(spark, drop_dir):
     assert 0 < len(kept) < len(want)
 
 
+@pytest.mark.slow
 def test_decontam_ingest_matches_batch_operator(spark):
     """VERDICT r10 #6: per-micro-batch n-gram decontamination against
     the persisted benchmark gram index — the streamed clean corpus
@@ -233,6 +234,7 @@ def test_decontam_ingest_matches_batch_operator(spark):
             == 1)
 
 
+@pytest.mark.slow
 def test_dsir_ingest_matches_batch_operator(spark):
     """VERDICT r11 #6: per-micro-batch DSIR importance scoring against
     the persisted (bucket, lam) model — streamed scores equal the
@@ -321,6 +323,7 @@ def test_dsir_ingest_matches_batch_operator(spark):
             == 2)
 
 
+@pytest.mark.slow
 def test_lm_ingest_matches_batch_operator(spark):
     """r12: per-micro-batch bigram-LM perplexity scoring against the
     persisted model + the persisted TRAIN-corpus threshold — streamed
@@ -413,6 +416,7 @@ def test_lm_ingest_matches_batch_operator(spark):
     assert (spark.table(scored_t).filter(F.col(EPOCH_COL) == 0).count()
             == 2)
 
+@pytest.mark.slow
 def test_lm_counts_ingest_grows_model(spark):
     """r12 second pass: per-micro-batch gram-count partials grow the
     LM model artifact — the rollup equals batch counting of the
@@ -508,6 +512,7 @@ def test_lm_counts_ingest_grows_model(spark):
             .groupBy().count().collect()[0][0] > 0)
 
 
+@pytest.mark.slow
 def test_wordpiece_ingest_matches_batch(spark):
     """The WordPiece sink == the batch greedy encode over the same
     model table (stream==batch, the family law), [UNK] words landing
@@ -543,6 +548,7 @@ def test_wordpiece_ingest_matches_batch(spark):
     assert wp.WP_UNK in got[2]            # unknown word visible, kept
 
 
+@pytest.mark.slow
 def test_unigram_counts_ingest_grows_model(spark):
     """VERDICT r13 next #5: the unigram tokenizer's count-growth path —
     per-micro-batch word-frequency partials land as epoch partitions,
@@ -624,6 +630,7 @@ def test_unigram_counts_ingest_grows_model(spark):
             .groupBy().count().collect()[0][0] > 0)
 
 
+@pytest.mark.slow
 def test_lm3_ingest_matches_batch_operator(spark):
     """r12 second pass: per-micro-batch trigram-LM scoring + CCNet
     tercile bucketing against the persisted model and the persisted
@@ -727,6 +734,7 @@ def test_lm3_ingest_matches_batch_operator(spark):
             == 2)
 
 
+@pytest.mark.slow
 def test_unigram_ingest_matches_batch_operator(spark):
     """r13: per-micro-batch unigram-tokenizer segmentation against
     the PERSISTED trained piece table — stream == the batch
@@ -811,6 +819,7 @@ def test_unigram_ingest_matches_batch_operator(spark):
 
 
 
+@pytest.mark.slow
 def test_line_dedup_ingest_matches_batch(spark):
     """VERDICT r14 next #4: the line-dedup ingest twin. (a) The rolled
     winner index over per-epoch partials == the batch winner index of
@@ -901,6 +910,7 @@ def test_line_dedup_ingest_matches_batch(spark):
             == n_epochs)
 
 
+@pytest.mark.slow
 def test_wordpiece_ingest_two_set_flags_table(spark):
     """r15: a persisted piece table carrying the `fl` flags column
     (the released-BERT two-set shape, e.g. load_bert_vocab landed as
@@ -1034,6 +1044,7 @@ def test_line_dedup_ingest_rejects_preshard_winner_table(spark):
     assert not spark.catalog.tableExists(scrub_t)
 
 
+@pytest.mark.slow
 def test_line_dedup_ingest_winner_table_is_shard_pruned(spark):
     """r16 (VERDICT r15 next #2): the winner table carries a
     deterministic hash-shard partition level under the epoch, and the

@@ -22,9 +22,8 @@ from snowflake_azure_etl_spark.streaming.sketches import (
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
-#: next #6): the whole module is `slow` — included by default, deselect
-#: with -m 'not slow' for the fast loop (pytest.ini)
-pytestmark = pytest.mark.slow
+#: next #6): tests that wait on micro-batches are `slow` (deselected by
+#: default, pytest.ini); the quick ones run in the default lane
 
 
 BATCHES = [[f"k{i % 5}" for i in range(40)],
@@ -83,6 +82,7 @@ def test_cms_epoch_replay_changes_nothing(spark):
     assert sorted(map(tuple, cms_rollup(spark, t).collect())) == before
 
 
+@pytest.mark.slow
 def test_bloom_epoch_partials_roll_up_to_the_batch_filter(spark):
     t = _table(spark, "bloom_partials")
     _run(spark, bloom_ingest_sink(t, "k"), BATCHES)
@@ -120,6 +120,7 @@ def _num_stream_dir(batches):
     return d
 
 
+@pytest.mark.slow
 def test_hist_epoch_partials_roll_up_and_answer_quantiles(spark):
     """Histogram partials land per epoch, SUM-roll up to the one-shot
     batch histogram, replay is idempotent, and the rolled-up relation

@@ -21,9 +21,8 @@ from snowflake_azure_etl_spark.streaming.substr import (
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
-#: next #6): the whole module is `slow` — included by default, deselect
-#: with -m 'not slow' for the fast loop (pytest.ini)
-pytestmark = pytest.mark.slow
+#: next #6): tests that wait on micro-batches are `slow` (deselected by
+#: default, pytest.ini); the quick ones run in the default lane
 
 
 RUN = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -72,6 +71,7 @@ def _run(spark, sink, batches):
     q.awaitTermination(120)
 
 
+@pytest.mark.slow
 def test_stream_scrub_matches_batch_operator_per_epoch(spark):
     ti, ts = _table(spark, "sx_index"), _table(spark, "sx_scrub")
     _run(spark, substr_scrub_ingest_sink(ti, ts), BATCHES)
@@ -101,6 +101,7 @@ def test_stream_scrub_matches_batch_operator_per_epoch(spark):
             assert got[did] == ref[did], (ep, did)
 
 
+@pytest.mark.slow
 def test_stream_replay_and_rollup(spark):
     ti, ts = _table(spark, "sx_index_r"), _table(spark, "sx_scrub_r")
     sink = substr_scrub_ingest_sink(ti, ts)

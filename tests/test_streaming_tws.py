@@ -12,12 +12,6 @@ import pytest
 
 from snowflake_azure_etl_spark.streaming import tws
 
-#: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
-#: next #6): the whole module is `slow` — included by default, deselect
-#: with -m 'not slow' for the fast loop (pytest.ini)
-pytestmark = pytest.mark.slow
-
-
 
 class FakeValueState:
     def __init__(self):

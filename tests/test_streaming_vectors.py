@@ -21,9 +21,8 @@ from snowflake_azure_etl_spark.streaming.vectors import (
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
-#: next #6): the whole module is `slow` — included by default, deselect
-#: with -m 'not slow' for the fast loop (pytest.ini)
-pytestmark = pytest.mark.slow
+#: next #6): tests that wait on micro-batches are `slow` (deselected by
+#: default, pytest.ini); the quick ones run in the default lane
 
 
 DIM = 8
@@ -83,6 +82,7 @@ def _run(spark, tables, batches):
     return sink
 
 
+@pytest.mark.slow
 def test_ingest_grows_index_and_flags_only_drifted_epoch(spark, tables):
     index_table, drift_table, cents_table = tables
     bootstrap, batches = _batches()
@@ -111,6 +111,7 @@ def test_ingest_grows_index_and_flags_only_drifted_epoch(spark, tables):
         assert r["mean_cos_new"] < r["mean_cos_index"] - 0.02
 
 
+@pytest.mark.slow
 def test_epoch_replay_changes_nothing(spark, tables):
     index_table, drift_table, cents_table = tables
     bootstrap, batches = _batches()
@@ -130,6 +131,7 @@ def test_epoch_replay_changes_nothing(spark, tables):
     assert snap(drift_table) == before_d
 
 
+@pytest.mark.slow
 def test_retrain_on_drift_fits_new_distribution(spark, tables):
     index_table, drift_table, cents_table = tables
     bootstrap, batches = _batches()
@@ -179,6 +181,7 @@ def test_retrain_on_drift_fits_new_distribution(spark, tables):
     assert not [r for r in drift4 if r["retrain"]]
 
 
+@pytest.mark.slow
 def test_drift_baseline_from_partials_equals_index_history(spark, tables):
     """r17 (VERDICT r16 next #6): the drift baseline derives from the
     prior drift rows' exact per-cell partials (n_new + sum_fit_new)
@@ -237,6 +240,7 @@ def test_vector_sink_rejects_prepartials_drift_table(spark, tables):
     assert "sum_fit_new" in msg and drift_table in msg
 
 
+@pytest.mark.slow
 def test_vacuum_epochs_enforces_retention(spark, tables):
     from snowflake_azure_etl_spark.streaming.sinks import vacuum_epochs
 
@@ -260,6 +264,7 @@ def test_vacuum_epochs_enforces_retention(spark, tables):
     assert vacuum_epochs(spark, index_table, keep_from=1) == 0
 
 
+@pytest.mark.slow
 def test_drift_vacuum_below_version_start_fails_loud(spark, tables):
     """ADVICE r17: the drift baseline sums this q_version's earlier
     drift rows, so vacuuming the drift table below the version's first

@@ -428,7 +428,6 @@ def test_wp_two_set_property_sweep(spark, texts, init, cont):
     assert joined == got
 
 
-@pytest.mark.slow
 def test_wp_two_set_30k_vocab_broadcast_path(spark):
     """r17 (carried from VERDICT r15 next #3): a released-BERT-scale
     TWO-SET vocabulary (≥30k pieces, init and continuation sets with
