@@ -18,13 +18,21 @@ fixed-width columns — signatures, band keys, cell ids — never the text
 or media payload. MEMORY_AND_DISK spills instead of OOMing, and the
 artifact is exactly what a real pipeline would persist to the lake.
 
+One persist path: this module is the only place in the package that
+persists a relation. `cached_persist` (key-explicit) and its plan-keyed
+form `cached_relation` persist at the one storage level, `LEVEL`, and
+register the relation under its key, so `clear_cache` releases every
+persisted artifact; `cached_build` holds what is not a persisted
+relation (plans, models, scalars, checkpoint lists) and never persists.
+
 Staleness contract (ADVICE r5): entries are keyed by the LOGICAL plan
-(a digest of the analyzed-plan string), so a cached relation reflects
-the underlying files AS OF first materialization — exactly like a
-persisted index table. If source files change within a session, call
-`clear_cache(spark)` (unpersists everything and empties the registry);
-a long session sweeping many corpora/parameter combinations should do
-the same between sweeps to cap executor storage.
+(a digest of the analyzed-plan string) or by the small source plan and
+build parameters, so a cached relation reflects the underlying files
+AS OF first materialization — exactly like a persisted index table. If
+source files change within a session, call `clear_cache(spark)`
+(unpersists everything and empties the registry); a long session
+sweeping many corpora/parameter combinations should do the same
+between sweeps to cap executor storage.
 """
 
 from __future__ import annotations
@@ -36,6 +44,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+
+#: The one storage level of every persisted session artifact:
+#: serialized in memory, spilling to disk instead of failing (see the
+#: scale note above). No call site picks its own level.
+LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
 def session_cache(spark: SparkSession) -> dict:
@@ -202,32 +216,42 @@ def clear_cache(spark: SparkSession) -> int:
     return n
 
 
-def cached_relation(df: DataFrame, tag: str, *extra,
-                    eager: bool = True) -> DataFrame:
-    """Persist `df` once per (tag, plan, extra) and reuse it.
+def cached_persist(spark: SparkSession, key: tuple,
+                   build: Callable[[], DataFrame],
+                   eager: bool = False) -> DataFrame:
+    """Persist the relation `build()` returns once per `key` and reuse
+    it. `key` must fully determine the relation (source plan + build
+    parameters) — keying on a small source plan rather than the built
+    relation's own plan keeps giant expression plans from being
+    printed and digested per invocation.
 
     `eager` forces materialization with one count job so that the many
     downstream references (join sides, size guards) all hit the cache
-    instead of racing to compute partitions.
+    instead of racing to compute partitions; lazy, the relation
+    materializes inside the first job that reads it.
     """
-    spark = df.sparkSession
-    cache = session_cache(spark)
-    key = (tag, plan_key(df)) + tuple(extra)
-    if key in cache:
-        return cache[key]
-    with _key_lock(key):
-        if key not in cache:
-            p = df.persist(StorageLevel.MEMORY_AND_DISK)
-            if eager:
-                p.count()
-            cache[key] = p
-    return cache[key]
+    def persisted():
+        df = build().persist(LEVEL)
+        if eager:
+            df.count()
+        return df
+    return cached_build(spark, key, persisted)
+
+
+def cached_relation(df: DataFrame, tag: str, *extra,
+                    eager: bool = False) -> DataFrame:
+    """`cached_persist` keyed on `df`'s own plan: persist `df` once per
+    (tag, plan, extra) and reuse it."""
+    return cached_persist(df.sparkSession, (tag, plan_key(df)) + extra,
+                          lambda: df, eager=eager)
 
 
 def cached_build(spark: SparkSession, key: tuple,
                  build: Callable[[], object]) -> object:
-    """Generic memoized build for non-DataFrame index artifacts
-    (e.g. a centroid list + its assigned-corpus relation).
+    """Memoized build for session artifacts that are not persisted
+    relations: prepared plans (unmaterialized DataFrames), trained
+    models, scalars and localCheckpoint lists. The build never
+    persists — a relation to persist goes through `cached_persist`.
     Thread-safe per key (double-checked build lock — see _LOCKS)."""
     cache = session_cache(spark)
     if key in cache:

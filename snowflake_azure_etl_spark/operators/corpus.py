@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
+from ..plans.attest import bounded_broadcast, maybe_broadcast
 
 from . import dedup, text
 
@@ -199,7 +199,7 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
         # gram set (counts-as-grams — the canonical pattern from the
         # q57 leg), so scoring adds no distinct pass over positions.
         toks = cached_relation(lm_ops.tokenized(docs, id_col, text_col),
-                               "lm_tk", eager=False)
+                               "lm_tk")
         uni_all, bi_all = lm_ops.bigram_lm_counts(docs, text_col,
                                                   toks=toks)
         uni, bi, tot = lm_ops.lm_model_from_counts(uni_all, bi_all)
@@ -208,7 +208,7 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
                 lm_ops.bigram_lm_bits(docs, id_col, text_col,
                                       uni, bi, tot,
                                       toks=toks, grams=bi_all),
-                "lm_scored", eager=False)
+                "lm_scored")
             keep = (lm_ops.lm_keep(sc, lm_ops.lm_corpus_threshold(sc))
                     .select(id_col, F.col("lm_keep").alias("_lmk")))
         else:
@@ -219,7 +219,7 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
                 lm_ops.trigram_lm_bits(docs, id_col, text_col,
                                        uni, bi, tri, tot,
                                        toks=toks, grams=tri_all),
-                "lm3_scored", eager=False)
+                "lm3_scored")
             keep = (lm_ops.lm_bucket(sc, lm_ops.lm_terciles(
                         sc, n_rows=n_docs))
                     .select(id_col, F.col("lm3_keep").alias("_lmk")))
@@ -302,14 +302,13 @@ def forget_documents(artifact: DataFrame, requests: DataFrame,
     batch but NOT by ``n_requests`` itself (a doc can fan into
     thousands of sequences), so it carries its own attestation
     (``n_groups``); unattested it stays un-hinted and AQE decides."""
-    from .dedup import _maybe_broadcast
     ids = requests.select(id_col).distinct()
-    b_ids = _maybe_broadcast(ids, n_requests)
+    b_ids = maybe_broadcast(ids, n_requests)
     if group_col is None:
         return artifact.join(b_ids, id_col, "left_anti")
     groups = (artifact.join(b_ids, id_col, "left_semi")
               .select(group_col).distinct())
-    return artifact.join(_maybe_broadcast(groups, n_groups),
+    return artifact.join(maybe_broadcast(groups, n_groups),
                          group_col, "left_anti")
 
 

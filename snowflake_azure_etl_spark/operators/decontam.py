@@ -18,7 +18,7 @@ LLM-data-pipeline tier beside `operators.dedup` / `operators.corpus`.
   The bound is still attested, never assumed: callers pass
   ``n_eval_grams`` (or the eval-doc count upper bound) and the join
   falls back to a shuffle equi-join above
-  ``plans.attest.BROADCAST_MAX_ROWS`` (`dedup._maybe_broadcast`).
+  ``plans.attest.BROADCAST_MAX_ROWS`` (`attest.maybe_broadcast`).
 - The probe side is one linear explode of per-doc distinct n-grams —
   no corpus self-join anywhere; grams are compared as fixed-width md5
   digests so the join key never carries n·avg_word bytes of text.
@@ -41,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _maybe_broadcast, word_shingles
+from ..plans.attest import maybe_broadcast
+from .dedup import word_shingles
 
 #: Published decontamination filters use 8-13 word n-grams; 8 is the
 #: conservative (highest-recall) end of that range.
@@ -107,7 +108,7 @@ def contamination_hits_against(docs: DataFrame, eval_grams: DataFrame,
     callers that must not re-derive the gram set per use — the
     streaming per-micro-batch sink (`streaming.ingest
     .decontam_ingest_sink`) and multi-corpus sweeps."""
-    ev = _maybe_broadcast(eval_grams.select("gram"), n_eval_grams)
+    ev = maybe_broadcast(eval_grams.select("gram"), n_eval_grams)
     grams = _gram_digests(docs, id_col, text_col, n)
     return (grams.join(ev, "gram")
             .groupBy(id_col)
@@ -127,5 +128,5 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame,
     log know the exact count; an upper bound is fine)."""
     hits = contamination_hits(docs, eval_docs, id_col, text_col, n,
                               n_eval_grams).select(id_col)
-    return docs.join(_maybe_broadcast(hits, n_hit_docs),
+    return docs.join(maybe_broadcast(hits, n_hit_docs),
                      id_col, "left_anti")

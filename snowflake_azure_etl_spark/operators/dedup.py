@@ -30,26 +30,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
-
-
-def _maybe_broadcast(side: DataFrame, n_rows: int | None) -> DataFrame:
-    """Size-conditional broadcast hint for corpus-proportional sides.
-
-    Every per-doc table in this module (band keys, bucket widths, token
-    sets) grows linearly with the corpus, so an unconditional
-    ``F.broadcast`` that is a win at test scale is an OOM at 100 TB.
-    Hint only when the caller attests the side is small (``n_rows`` is
-    known and under ``plans.attest.BROADCAST_MAX_ROWS`` — the package's
-    one broadcast cap, never a per-call knob); otherwise return the
-    side un-hinted so the join shuffles on its equi key — AQE may
-    still convert to a broadcast at runtime if the materialized side
-    proves tiny, but the *plan* never commits to holding a corpus-sized
-    table in memory.
-    """
-    if n_rows is None:
-        return side
-    return bounded_broadcast(side, n_rows=n_rows)
+from ..plans.attest import bounded_broadcast, maybe_broadcast
 
 
 def ws_tokens(text: Column | str) -> Column:
@@ -224,7 +205,7 @@ def _band_probe(probe: DataFrame, build: DataFrame, bands: int,
         for b in range(bands):
             wf = (build.groupBy(f"_k{b}")
                   .agg((F.count("*") <= max_bucket).alias(f"_ok{b}")))
-            flagged = flagged.join(_maybe_broadcast(wf, n_build), f"_k{b}")
+            flagged = flagged.join(maybe_broadcast(wf, n_build), f"_k{b}")
     by_band = [F.posexplode(F.array(*band_cols)).alias("_b", "_key")]
     nw = probe.select("*", *by_band)
     ix = flagged.select("*", *by_band)
@@ -237,7 +218,7 @@ def _band_probe(probe: DataFrame, build: DataFrame, bands: int,
         m = F.col(f"nw._k{i}") == F.col(f"ix._k{i}")
         m = m & F.col(f"ix._ok{i}") if guard else m
         cond = cond & ((F.col("nw._b") <= i) | ~m)
-    a = _maybe_broadcast(nw, None if n_probe is None else n_probe * bands)
+    a = maybe_broadcast(nw, None if n_probe is None else n_probe * bands)
     return a.alias("nw").join(ix.alias("ix"), cond)
 
 
@@ -265,7 +246,7 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str, bands: int = 2,
     from ._cache import cached_relation
     keys = band_key_index(sig, id_col, bands, rows)
     if cache_keys:
-        keys = cached_relation(keys, "lsh_band_keys", eager=False)
+        keys = cached_relation(keys, "lsh_band_keys")
     return (_band_probe(keys, keys, bands, max_bucket, n_docs, n_docs)
             .filter(F.col("nw._id") < F.col("ix._id"))
             .select(F.col("nw._id").alias("id_a"),
@@ -340,7 +321,7 @@ def exact_jaccard(df: DataFrame, candidates: DataFrame, id_col: str,
     # the whole shingle/hash upstream executes twice per verify. Like
     # the band-key relation, it is a fixed-width-per-doc index artifact
     # (the session cache's staleness/eviction contract applies).
-    sets = cached_relation(sets, "jaccard_sets", eager=False)
+    sets = cached_relation(sets, "jaccard_sets")
     a = sets.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"),
                     F.col("_n").alias("size_a") if "_n" in sets.columns
                     else F.size("_s").alias("size_a"))
@@ -348,8 +329,8 @@ def exact_jaccard(df: DataFrame, candidates: DataFrame, id_col: str,
                     F.col("_n").alias("size_b") if "_n" in sets.columns
                     else F.size("_s").alias("size_b"))
     sh = shared(F.col("_sa"), F.col("_sb"))
-    a = _maybe_broadcast(a, n_docs)
-    b = _maybe_broadcast(b, n_docs)
+    a = maybe_broadcast(a, n_docs)
+    b = maybe_broadcast(b, n_docs)
     return (candidates.join(a, "id_a").join(b, "id_b")
             .select("id_a", "id_b", sh.cast("int").alias("shared"),
                     "size_a", "size_b")
@@ -551,8 +532,8 @@ def edit_distance_verify(docs: DataFrame, candidates: DataFrame,
                     F.col(text_col).alias("_txa"))
     b = docs.select(F.col(id_col).alias("id_b"),
                     F.col(text_col).alias("_txb"))
-    a = _maybe_broadcast(a, n_docs)
-    b = _maybe_broadcast(b, n_docs)
+    a = maybe_broadcast(a, n_docs)
+    b = maybe_broadcast(b, n_docs)
     joined = candidates.join(a, "id_a").join(b, "id_b")
     raw = (F.levenshtein(F.col("_txa"), F.col("_txb"))
            if max_dist is None
@@ -658,8 +639,8 @@ def simhash_near_dups(sig: DataFrame, id_col: str = "doc_id",
     a = keyed.select(F.col(id_col).alias("id_a"), F.col("_sim").alias("_sa"))
     b = keyed.select(F.col(id_col).alias("id_b"), F.col("_sim").alias("_sb"))
     return (cands
-            .join(_maybe_broadcast(a, n_docs), "id_a")
-            .join(_maybe_broadcast(b, n_docs), "id_b")
+            .join(maybe_broadcast(a, n_docs), "id_a")
+            .join(maybe_broadcast(b, n_docs), "id_b")
             .select("id_a", "id_b",
                     F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
                     .alias("hamming"))

@@ -105,8 +105,8 @@ def pack_offsets(docs: DataFrame, id_col: str = "doc_id",
                         F.floor((F.col("token_offset")
                                  + F.greatest(F.col("n_tokens") - 1,
                                               F.lit(0))) / ctx)))
-    from .dedup import _maybe_broadcast
-    return docs.join(_maybe_broadcast(offs, n_rows), id_col)
+    from ..plans.attest import maybe_broadcast
+    return docs.join(maybe_broadcast(offs, n_rows), id_col)
 
 
 def pack_assignments(offsets: DataFrame, id_col: str = "doc_id",

@@ -33,7 +33,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
+from ..plans.attest import bounded_broadcast, maybe_broadcast
 
 #: Hash-space resolution for fraction thresholds: fractions are exact
 #: in units of 1/10000 (md5 buckets are uniform over [0, 10000)).
@@ -445,7 +445,7 @@ def dsir_feats_artifact(docs: DataFrame, id_col: str, text_col: str,
     from ._cache import cached_relation
     return cached_relation(
         hashed_ngram_counts(docs, id_col, text_col, n, n_buckets, salt),
-        "dsir_feats", eager=False)
+        "dsir_feats")
 
 
 def dsir_bucket_stats_from(feats: DataFrame, target_ids: DataFrame,
@@ -463,9 +463,8 @@ def dsir_bucket_stats_from(feats: DataFrame, target_ids: DataFrame,
     it broadcasts ONLY under the module-standard size attestation
     (``n_target`` ≤ `plans.attest.BROADCAST_MAX_ROWS`); unattested, the
     semi-join shuffles and AQE may still broadcast at runtime."""
-    from .dedup import _maybe_broadcast
     raw = feats.groupBy("bucket").agg(F.sum("c").alias("_nr"))
-    tgt = (feats.join(_maybe_broadcast(target_ids.select(id_col),
+    tgt = (feats.join(maybe_broadcast(target_ids.select(id_col),
                                        n_target),
                       id_col, "left_semi")
            .groupBy("bucket").agg(F.sum("c").alias("_nt")))

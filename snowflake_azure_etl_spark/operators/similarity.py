@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
+from ..plans.attest import bounded_broadcast, maybe_broadcast
 
 
 def as_double_vec(c: Column | str) -> Column:
@@ -470,19 +470,19 @@ def _ivf_index(emb: DataFrame, id_col: str, vec_col: str,
     per (session, corpus plan) the way any vector store persists its
     index — every consumer (`ivf_topk` probes, `semantic_dedup`
     within-cell comparisons) pays only its own stage, not the build."""
-    from ._cache import cached_build, plan_key
+    from ._cache import cached_persist, plan_key
     spark = emb.sparkSession
-    key = ("ivf_index", plan_key(emb), id_col, vec_col, n_cells, train_iters)
-
-    def build():
-        cents = _kmeans_rounds(emb, id_col, vec_col, n_cells,
-                               train_iters)[-1]
-        cent_arr = _centroid_array(cents).persist()
-        assigned = assign_cells(emb, id_col, vec_col, cent_arr).persist()
-        assigned.count()  # materialize the index eagerly, once
-        return cent_arr, assigned
-
-    return cached_build(spark, key, build)
+    params = (plan_key(emb), id_col, vec_col, n_cells, train_iters)
+    cent_arr = cached_persist(
+        spark, ("ivf_centroids",) + params,
+        lambda: _centroid_array(_kmeans_rounds(
+            emb, id_col, vec_col, n_cells, train_iters)[-1]))
+    # the centroid array materializes inside the assignment's count:
+    # the index is built eagerly, once
+    assigned = cached_persist(
+        spark, ("ivf_index",) + params,
+        lambda: assign_cells(emb, id_col, vec_col, cent_arr), eager=True)
+    return cent_arr, assigned
 
 
 def _probe_rank_cell(rel: DataFrame, cent_arr: DataFrame,
@@ -659,7 +659,6 @@ def embedding_near_dups(emb: DataFrame, id_col: str, vec_col: str,
       grid from the attested corpus size (`scaled_bits`), keeping the
       expected bucket width constant as the corpus grows.
     """
-    from .dedup import _maybe_broadcast
     if bits is None:
         bits = scaled_bits(n_rows)
     c = emb.select(F.col(id_col).alias("_id"),
@@ -682,7 +681,7 @@ def embedding_near_dups(emb: DataFrame, id_col: str, vec_col: str,
     b = c.select(F.col("bucket"), F.col("_id").alias("id_b"),
                  F.col("v").alias("vb"),
                  l2_norm(F.col("v")).alias("_nb"))
-    return (a.join(_maybe_broadcast(b, n_rows), "bucket")
+    return (a.join(maybe_broadcast(b, n_rows), "bucket")
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
                     (dot(F.col("va"), F.col("vb"))
@@ -778,8 +777,7 @@ def _semdedup_score(a: DataFrame, b: DataFrame, n_rows: int | None,
     """The within-cell comparison join: the CHEAP id predicate runs
     before the interpreted per-pair cosine, halving the dominant
     quadratic stage."""
-    from .dedup import _maybe_broadcast
-    return (a.join(_maybe_broadcast(b, n_rows), "cell_id")
+    return (a.join(maybe_broadcast(b, n_rows), "cell_id")
             .filter(id_pred)
             .filter(dot(F.col("va"), F.col("vb"))
                     / (F.col("na") * F.col("nb")) >= threshold))
@@ -892,13 +890,12 @@ def _semantic_dedup_build(emb: DataFrame, id_col: str, vec_col: str,
                           threshold: float, max_cell: int,
                           n_rows: int | None,
                           nprobe: int = 1) -> DataFrame:
-    from .dedup import _maybe_broadcast
     _, assigned = _ivf_index(emb, id_col, vec_col, n_cells, train_iters)
     clusters = _semdedup_clusters(emb, id_col, vec_col, n_cells,
                                   train_iters, threshold, max_cell,
                                   n_rows, nprobe)
     return (assigned
-            .join(_maybe_broadcast(
+            .join(maybe_broadcast(
                       clusters.withColumnRenamed("id", "neighbor_id"),
                       n_rows),
                   "neighbor_id", "left")
@@ -947,11 +944,11 @@ def semantic_decontam(emb: DataFrame, eval_ids: DataFrame,
     (session, corpus plan, eval plan, params): the contamination
     drop-list is the artifact a pipeline persists beside its
     decontaminated corpus and applies across many downstream jobs."""
-    from ._cache import cached_build, plan_key
+    from ._cache import cached_persist, plan_key
     key = ("semantic_decontam", plan_key(emb), plan_key(eval_ids),
            id_col, vec_col, n_cells, train_iters, threshold, n_rows,
            nprobe)
-    return cached_build(
+    return cached_persist(
         emb.sparkSession, key,
         lambda: _semantic_decontam_build(emb, eval_ids, id_col,
                                          vec_col, n_cells, train_iters,
@@ -963,9 +960,6 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
                              train_iters: int, threshold: float,
                              n_rows: int | None,
                              nprobe: int = 1) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    from .dedup import _maybe_broadcast
     cent_arr, assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                     train_iters)
     ev_ids = eval_ids.select(F.col(id_col).alias("_id"))
@@ -984,7 +978,7 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
     # eval) pair meets in at most one cell and count(*) stays exact
     probe_tr = tr if nprobe <= 1 else _probe_cells(tr, cent_arr, nprobe)
     cos = dot(F.col("cv"), F.col("ve")) / (F.col("_n") * F.col("ne"))
-    hits = (probe_tr.join(_maybe_broadcast(ev, n_rows), "cell_id")
+    hits = (probe_tr.join(maybe_broadcast(ev, n_rows), "cell_id")
             .filter(cos >= threshold)
             .groupBy("_id")
             .agg(F.count("*").alias("n_hits"),
@@ -995,8 +989,7 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
                     .alias("n_hits"),
                     F.col("max_sim"),
                     (F.coalesce(F.col("n_hits"), F.lit(0)) > 0)
-                    .alias("is_contaminated"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
+                    .alias("is_contaminated")))
 
 
 def normalize_vec(vec: Column | str) -> Column:

@@ -644,7 +644,7 @@ def bm25_topk(docs, queries, id_col: str = "doc_id",
     stats = cached_relation(
         base.select(F.size(toks).alias("dl"))
             .agg(F.count("*").alias("n"), F.sum("dl").alias("tot")),
-        "bm25_stats", eager=False)
+        "bm25_stats")
     # (doc, token, tf, dl) over query-term occurrences only — the
     # candidate relation, ≪ corpus by construction; df (docs per
     # token) is a window count over it, and the stopword-class cut

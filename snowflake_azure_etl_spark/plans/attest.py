@@ -22,9 +22,9 @@ r11 #2) is to make the defect class impossible to write silently:
   :data:`BROADCAST_MAX_ROWS`; a laundered "bounded" claim with a
   10^12 cap is a ``ValueError`` at import/plan time.
 
-``n_rows``-attested sites keep the `_maybe_broadcast` semantics the
-dedup/ANN stack has always had: broadcast when the measured count fits
-the cap, otherwise return the side unhinted and let AQE pick the
+``n_rows``-attested sites keep the :func:`maybe_broadcast` semantics
+the dedup/ANN stack has always had: broadcast when the measured count
+fits the cap, otherwise return the side unhinted and let AQE pick the
 shuffle strategy.
 """
 
@@ -153,3 +153,21 @@ def bounded_broadcast(side: DataFrame, *, bound: str | None = None,
                 f"broadcast attestation '{bound}' is FALSE: side has "
                 f"> {max_rows} rows ({got} observed)")
     return F.broadcast(side)
+
+
+def maybe_broadcast(side: DataFrame, n_rows: int | None) -> DataFrame:
+    """Size-conditional broadcast hint for corpus-proportional sides.
+
+    Per-doc tables (band keys, bucket widths, token sets) grow linearly
+    with the corpus, so an unconditional ``F.broadcast`` that is a win
+    at test scale is an OOM at 100 TB. Hint only when the caller
+    attests the side is small (``n_rows`` is known and under
+    :data:`BROADCAST_MAX_ROWS` — the package's one broadcast cap, never
+    a per-call knob); otherwise return the side un-hinted so the join
+    shuffles on its equi key — AQE may still convert to a broadcast at
+    runtime if the materialized side proves tiny, but the *plan* never
+    commits to holding a corpus-sized table in memory.
+    """
+    if n_rows is None:
+        return side
+    return bounded_broadcast(side, n_rows=n_rows)

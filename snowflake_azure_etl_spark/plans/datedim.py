@@ -49,29 +49,26 @@ def date_spine(spark: SparkSession, start: str | _dt.date,
 
 def build_dim_date(spark: SparkSession, start: str | _dt.date = "2013-01-01",
                    end: str | _dt.date = "2014-12-31",
-                   fiscal_start_month: int = FISCAL_START_MONTH,
-                   cached: bool = True) -> DataFrame:
+                   fiscal_start_month: int = FISCAL_START_MONTH) -> DataFrame:
     """The reference's DIM_DATE re-expressed as a deterministic plan.
 
     Defaults reproduce the reference's 730-day 2013-2014 calendar; the
     workload catalog spans it over the testdata's o_orderdate range.
 
-    `cached` (default) materializes the dim once per (session, span) and
-    reuses it — the reference's DIM_DATE is a *table* built once
+    The dim is materialized once per (session, span) and reused — the
+    reference's DIM_DATE is a *table* built once
     (rahil/load_dim_date.py:41-61), not a view re-derived per query, and
-    every star query broadcasts it. A date dim is O(days) rows (~3k for
-    8 years), so the in-memory copy is negligible at any scale.
+    every star query broadcasts it. Keyed on the span, so a warm hit
+    builds no plan. A date dim is O(days) rows (~3k for 8 years), so
+    the in-memory copy is negligible at any scale.
     """
-    from ..operators._cache import session_cache
-    key = ("dim_date", str(start), str(end), fiscal_start_month)
-    cache = session_cache(spark)
-    if cached and key in cache:
-        return cache[key]
-    attrs = date_attributes("d", fiscal_start_month)
-    spine = date_spine(spark, start, end)
-    df = spine.select(*[attrs[name].alias(name) for name in DIM_DATE_COLUMNS])
-    if cached:
-        df = df.persist()
-        df.count()  # materialize eagerly, once
-        cache[key] = df
-    return df
+    from ..operators._cache import cached_persist
+
+    def build() -> DataFrame:
+        attrs = date_attributes("d", fiscal_start_month)
+        return date_spine(spark, start, end).select(
+            *[attrs[name].alias(name) for name in DIM_DATE_COLUMNS])
+
+    return cached_persist(
+        spark, ("dim_date", str(start), str(end), fiscal_start_month),
+        build, eager=True)

@@ -67,7 +67,7 @@ def _pinned_offsets(df: DataFrame, weight: Column,
         df.repartitionByRange(nparts, *order_by)
         .withColumn("_w", weight.cast("long"))
         .withColumn("_pid", F.spark_partition_id()),
-        "ranged_prefix_pinned", eager=False)
+        "ranged_prefix_pinned")
     sums = pinned.groupBy("_pid").agg(F.sum("_w").alias("_wsum")).collect()
     if not sums:
         return pinned, None, 0

@@ -233,8 +233,7 @@ def _balanced(spark: SparkSession, df: DataFrame,
     if row_groups >= par or nbytes > REBALANCE_MAX_BYTES:
         return df
     from ..operators._cache import cached_relation
-    return cached_relation(df.repartition(par), "rebalanced_stage", table,
-                           eager=False)
+    return cached_relation(df.repartition(par), "rebalanced_stage", table)
 
 
 def register_star_views(spark: SparkSession, sf_dir: str,

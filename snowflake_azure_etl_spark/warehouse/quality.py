@@ -130,7 +130,7 @@ def fk_violations(child: DataFrame,
     rows whose non-NULL `col` misses `parent.parent_col`. FK values
     unpivot to (edge, value) rows that LEFT-ANTI-join the parents' keys
     tagged by edge, broadcast under `n_parent_rows` (all parents)."""
-    from ..operators.dedup import _maybe_broadcast
+    from ..plans.attest import maybe_broadcast
 
     keys = reduce(lambda a, b: a.unionByName(b), [
         parent.select(F.lit(i).alias("_e"), F.col(pcol).alias("_v"))
@@ -138,7 +138,7 @@ def fk_violations(child: DataFrame,
     values = (child.select(F.posexplode(F.array(*[c for c, _, _ in edges]))
                            .alias("_e", "_v"))
               .filter(F.col("_v").isNotNull()))
-    orphans = values.join(_maybe_broadcast(keys, n_parent_rows),
+    orphans = values.join(maybe_broadcast(keys, n_parent_rows),
                           ["_e", "_v"], "left_anti")
     return list(orphans.agg(*[F.count(F.when(F.col("_e") == i, 1))
                               for i in range(len(edges))]).first())

@@ -57,7 +57,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators._cache import cached_relation
-from ..operators.dedup import _maybe_broadcast
+from ..plans.attest import maybe_broadcast
 from ..plans.surrogate import with_surrogate_key
 
 #: SCD2 bookkeeping columns, in schema order after the business/tracked
@@ -92,7 +92,7 @@ def _classified_join(current: DataFrame, updates: DataFrame,
         *[F.col(c).alias(f"_u_{c}") for c in tracked_cols],
         F.lit(True).alias("_u_present"))
     j = current.withColumn("_t_present", F.lit(True)).join(
-        _maybe_broadcast(u, n_update_rows),
+        maybe_broadcast(u, n_update_rows),
         business_keys, "full_outer")
     j = j.withColumn(
         "_action",
@@ -100,7 +100,7 @@ def _classified_join(current: DataFrame, updates: DataFrame,
          .when(F.col("_t_present").isNull(), F.lit("insert"))
          .when(_same_tracked(tracked_cols), F.lit("keep"))
          .otherwise(F.lit("change")))
-    return cached_relation(j, "scd-merge")
+    return cached_relation(j, "scd-merge", eager=True)
 
 
 def _max_key(target: DataFrame, key_col: str) -> int:

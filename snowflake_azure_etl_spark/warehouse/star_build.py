@@ -79,7 +79,7 @@ def _keyed_dim(attrs: DataFrame, name: str, order_by: list[str],
         F.lit(row.get(f.name)).cast(f.dataType).alias(f.name)
         for f in members.schema.fields])
     return cached_relation(unknown.unionByName(members),
-                           f"warehouse:{name}", eager=False)
+                           f"warehouse:{name}")
 
 
 def _key_map(keys: DataFrame) -> DataFrame:

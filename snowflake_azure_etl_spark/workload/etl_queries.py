@@ -97,9 +97,7 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                           values=("A", "N", "R")),
                      Rule("in_range", "l_discount", lo=0.0, hi=0.05)],
     }
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators._cache import cached_build
+    from ..operators._cache import cached_persist
     legs = []
     for name, df in dfs.items():
         keys = manifest.KEY_COLUMNS[name]
@@ -112,14 +110,13 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         # repeat invocations read the record instead of re-hashing the
         # table (r9 leg-memoization pattern; staleness contract as
         # documented in operators._cache)
-        one = cached_build(
+        one = cached_persist(
             spark, ("q26_manifest", sf_dir, name),
             lambda df=df, cols=cols, keys=keys, raggs=raggs:
             df.select(*cols)
             .agg(F.count("*").alias("n_rows"),
                  manifest.content_fingerprint(*keys).alias("fp"),
-                 *raggs)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+                 *raggs))
         rows = [F.struct(
             F.lit(name).alias("entity"), F.col("n_rows"),
             F.lit("Y" if name in listed else "N").alias("status"),

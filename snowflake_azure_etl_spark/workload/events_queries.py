@@ -427,7 +427,7 @@ def q41_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.date_trunc("hour", "ts").alias("bucket"))
         .agg(F.count("*").alias("n_events"),
              F.sum(dec("value")).cast("double").alias("total_value")),
-        "q41_hourly", eager=False)
+        "q41_hourly")
     hourly = hourly_full.select("bucket",
                                 F.col("n_events").alias("n"))
     an_st = hourly.agg(F.count("*").alias("b"),

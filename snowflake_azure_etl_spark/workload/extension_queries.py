@@ -654,10 +654,10 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # day) relation; each family still pays only its own aggregate.
     # At 100 TB this is the maintenance job's shared scan, persisted
     # columnar (MEMORY_AND_DISK spills).
-    from ..operators._cache import cached_relation as _crel
-    e = _crel(e.select("event_type", "user_id", "value",
-                       F.to_date("ts").alias("day")),
-              "q47_events_base", eager=False)
+    from ..operators._cache import cached_persist, cached_relation, plan_key
+    e = cached_relation(e.select("event_type", "user_id", "value",
+                                 F.to_date("ts").alias("day")),
+                        "q47_events_base")
     h = e.select("event_type",
                  F.md5(F.col("user_id").cast("string")).alias("hv"))
     # r16: the merged per-group k-minima RELATION is the KMV sketch
@@ -665,9 +665,9 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintains) — session-cached like the CMS/bloom counters below;
     # the estimate still derives per invocation. group-count-sized,
     # so it lands as one partition.
-    merged = _crel(
+    merged = cached_relation(
         kmv_mins(h, "event_type", "hv", KMV_K, n_rows=n_rows)
-        .coalesce(1), "q47_kmv_mins", eager=False)
+        .coalesce(1), "q47_kmv_mins")
     kth = F.element_at("mins", KMV_K)
     frac = (F.conv(F.substring(kth, 1, 8), 16, 10).cast("double")
             / F.lit(4294967296.0))
@@ -682,18 +682,14 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist-partials half of the documented pattern — session-cached
     # artifact ((type, day)-count-sized, one partition); the rollup to
     # event_type still runs per invocation.
-    daily = _crel(
+    daily = cached_relation(
         hll_partials(nations, ["event_type", "day"], "c_nationkey")
-        .coalesce(1), "q47_hll_daily", eager=False)
+        .coalesce(1), "q47_hll_daily")
     hll_leg = (hll_rollup(daily, ["event_type"])
                .select(F.lit("hll_nations").alias("leg"), "event_type",
                        F.col("hll_estimate").cast("long").alias("exact_n"),
                        F.col("hll_estimate").cast("double")
                        .alias("estimate")))
-    from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators._cache import cached_build, cached_relation, plan_key
     from ..operators.sampling import mixture_rates
     from ..operators.sketches import (equiwidth_histogram,
                                       histogram_quantiles)
@@ -702,15 +698,11 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every r9 leg below reduces to a LEG-COUNT-sized output; memoize
     # each on its small SOURCE plan (the q54 giant-plan lesson) with a
     # lazy persist so repeat invocations skip both the rebuild
-    # analysis and the scans. coalesce(1) (r16): a leg-count-sized
-    # relation persisted across 32 partitions made every serve-phase
-    # union scan pay 32 near-empty tasks per leg — one partition per
-    # leg is the right layout at ANY scale for a bounded artifact.
-    def leg_cache(tag, key_rel, build):
-        return cached_build(
-            spark, (tag, plan_key(key_rel)),
-            lambda: build().coalesce(1)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+    # analysis and the scans. Each build ends in coalesce(1) (r16): a
+    # leg-count-sized relation persisted across 32 partitions made
+    # every serve-phase union scan pay 32 near-empty tasks per leg —
+    # one partition per leg is the right layout at ANY scale for a
+    # bounded artifact.
 
     # ONE events pass for BOTH CMS legs: the per-(epoch, key) count
     # aggregate is the epoch-partial build input AND (summed over
@@ -760,7 +752,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                           .alias("exact_n"),
                           F.coalesce(F.col("cnt"), F.lit(0).cast("long"))
                           .cast("double").alias("estimate")))
-        return heavy.unionByName(rollup)
+        return heavy.unionByName(rollup).coalesce(1)
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # r12 (VERDICT r11 #4): ONE documents feature base for the three
@@ -773,21 +765,22 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doubles), so the oracle's replay-from-text is unchanged.
     from ..operators.text import (quality_score, stopword_ratio,
                                   type_token_ratio)
-    dbase = _crel(
+    dbase = cached_relation(
         docs.select("doc_id", "source", n_tokens("text").alias("nt"),
                     stopword_ratio("text").alias("_f1"),
                     type_token_ratio("text").alias("_f2"),
                     F.least(F.length("text").cast("double") / 200,
                             F.lit(1.0)).alias("_f3"),
                     (quality_score("text") >= F.lit(0.5)).alias("_lbl")),
-        "q47_doc_feats", eager=False)
+        "q47_doc_feats")
     def build_mix_leg():
         return (mixture_rates(dbase.select("source", "nt"),
                               "source", "nt")
                 .select(F.lit("mix").alias("leg"),
                         F.col("source").alias("event_type"),
                         F.col("toks").cast("long").alias("exact_n"),
-                        F.col("rate").alias("estimate")))
+                        F.col("rate").alias("estimate"))
+                .coalesce(1))
 
     # mix_applied leg (r10): the APPLICATION of the mixture plan —
     # apply_mixture keeps each source's docs at its rate via the
@@ -809,7 +802,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.lit("mix_applied").alias("leg"),
                         F.col("source").alias("event_type"),
                         F.col("_n").cast("long").alias("exact_n"),
-                        F.col("_t").cast("double").alias("estimate")))
+                        F.col("_t").cast("double").alias("estimate"))
+                .coalesce(1))
 
     # the grouped histogram is built first and the GLOBAL histogram
     # derived from it by the SUM merge law (r10): one events pass
@@ -819,10 +813,10 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ghist = cached_relation(
         equiwidth_histogram(e, "value", 0.0, 1024.0,
                             group_cols=("event_type",)),
-        "q47_ghist", eager=False)
+        "q47_ghist")
     hist = cached_relation(
         ghist.groupBy("bin").agg(F.sum("cnt").alias("cnt")),
-        "q47_hist", eager=False)
+        "q47_hist")
     n_rel = hist.agg(F.sum("cnt").alias("n"))
     wb = Window.orderBy("bin")
     hist_leg = (hist.withColumn("cum", F.sum("cnt").over(wb))
@@ -887,7 +881,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.lit("bloom_prune").alias("leg"),
                         F.col("l_returnflag").alias("event_type"),
                         F.col("_exact").cast("long").alias("exact_n"),
-                        F.col("_est").cast("double").alias("estimate")))
+                        F.col("_est").cast("double").alias("estimate"))
+                .coalesce(1))
 
 
     # bloom_rollup leg (r10, VERDICT r9 #2): the membership sibling of
@@ -913,7 +908,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.coalesce(F.col("_full"), F.lit(0).cast("long"))
                         .alias("exact_n"),
                         F.coalesce(F.col("word"), F.lit(0).cast("long"))
-                        .cast("double").alias("estimate")))
+                        .cast("double").alias("estimate"))
+                .coalesce(1))
 
 
     # qmix leg (r11, X-MIXTURE-QUALITY — VERDICT r10 #5): the trained
@@ -953,7 +949,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("event_type"),
                         F.coalesce(F.col("_kn"), F.lit(0).cast("long"))
                         .cast("long").alias("exact_n"),
-                        F.col("rate").alias("estimate")))
+                        F.col("rate").alias("estimate"))
+                .coalesce(1))
 
 
     # dsir_topk leg (r11, X-SAMPLE-DSIR-TOPK): the SELECTION half of
@@ -982,7 +979,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .alias("event_type"),
                         F.col("dsir_score").cast("long")
                         .alias("exact_n"),
-                        F.col("rk").cast("double").alias("estimate")))
+                        F.col("rk").cast("double").alias("estimate"))
+                .coalesce(1))
 
     # r12: the six independent leg ARTIFACTS build as CONCURRENT
     # Spark jobs (two dependency waves — mix_applied reads the mix
@@ -997,20 +995,23 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # residual shared-artifact touch safe (_cache.concurrent_builds).
     from ..operators._cache import concurrent_builds
     legs = concurrent_builds({
-        "cms": lambda: leg_cache("q47_cms_leg", e, build_cms_leg),
-        "mix": lambda: leg_cache("q47_mix_leg", docs, build_mix_leg),
-        "bloom": lambda: leg_cache("q47_bloom_leg", li,
-                                   build_bloom_leg),
-        "bloom_rollup": lambda: leg_cache("q47_bloom_rollup", mem,
-                                          build_bloom_rollup_leg),
-        "qmix": lambda: leg_cache("q47_qmix_leg", docs,
-                                  build_qmix_leg),
-        "dsir": lambda: leg_cache("q47_dsir_topk", docs,
-                                  build_dsir_topk_leg),
+        "cms": lambda: cached_persist(
+            spark, ("q47_cms_leg", plan_key(e)), build_cms_leg),
+        "mix": lambda: cached_persist(
+            spark, ("q47_mix_leg", plan_key(docs)), build_mix_leg),
+        "bloom": lambda: cached_persist(
+            spark, ("q47_bloom_leg", plan_key(li)), build_bloom_leg),
+        "bloom_rollup": lambda: cached_persist(
+            spark, ("q47_bloom_rollup", plan_key(mem)),
+            build_bloom_rollup_leg),
+        "qmix": lambda: cached_persist(
+            spark, ("q47_qmix_leg", plan_key(docs)), build_qmix_leg),
+        "dsir": lambda: cached_persist(
+            spark, ("q47_dsir_topk", plan_key(docs)), build_dsir_topk_leg),
     })
     mix_leg = legs["mix"]
-    mix_applied_leg = leg_cache("q47_mix_applied", docs,
-                                build_mix_applied)
+    mix_applied_leg = cached_persist(
+        spark, ("q47_mix_applied", plan_key(docs)), build_mix_applied)
     cms_leg, bloom_leg = legs["cms"], legs["bloom"]
     bloom_rollup_leg = legs["bloom_rollup"]
     qmix_leg, dsir_topk_leg = legs["qmix"], legs["dsir"]

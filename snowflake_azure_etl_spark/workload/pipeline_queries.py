@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
+from ..plans.attest import bounded_broadcast, maybe_broadcast
 
 from ..operators import (classifier, dedup, graph, multimodal,
                          similarity, text)
@@ -311,12 +311,12 @@ def q50_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregates per invocation, ~0.7 s of the leg's 1.1 s measured
     # solo). ≤ DSIR_BUCKETS rows → one partition. Per-doc SCORING
     # stays per-invocation — scores are results, the model is not.
-    from ..operators._cache import cached_relation as _crel50
-    dsir_stats = _crel50(
+    from ..operators._cache import cached_relation
+    dsir_stats = cached_relation(
         sampling.dsir_bucket_stats_from(
             feats, docs.filter(F.col("lang") == "en").select("doc_id"),
             "doc_id").coalesce(1),
-        "q50_dsir_model", eager=False)
+        "q50_dsir_model")
     dsir = (sampling.dsir_log_weights_from(docs.select("doc_id"),
                                            feats, dsir_stats, "doc_id")
             .withColumnRenamed("doc_id", "keeper_id"))
@@ -331,10 +331,9 @@ def q50_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The winner INDEX is the per-corpus-version artifact (the
     # streaming sink's persisted table) — session-cached so repeat
     # invocations pay the scrub join-back, not the index build
-    from ..operators._cache import cached_relation
     widx = cached_relation(
         dedup.line_winners(docs, "doc_id", "text", sep=_LINE_SEP),
-        "line_winner_idx", eager=False)
+        "line_winner_idx")
     ld = (dedup.line_dedup(docs, "doc_id", "text", sep=_LINE_SEP,
                            winners=widx)
           .select(F.col("doc_id").alias("keeper_id"),
@@ -442,7 +441,7 @@ def q51_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = (cached_relation(
                  dedup.band_key_index(sig, "doc_id",
                                       LSH_BANDS, LSH_ROWS),
-                 "lsh_band_keys", eager=False)
+                 "lsh_band_keys")
              .filter(F.col("_id") % _INCR_BATCH_MOD != 0))
     inc = dedup.incremental_near_dup_candidates(
         batch_docs, index, "doc_id", "text",
@@ -549,9 +548,7 @@ def q52_dedup_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner. The oracle mirrors the transitive closure with a recursive
     CTE — connected components is driver-attested here, not just
     pytest-verified."""
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators._cache import cached_build, plan_key
+    from ..operators._cache import cached_build, cached_persist, plan_key
     docs = _docs(spark, sf_dir)
     n_docs = stage_row_count(sf_dir, "documents") or docs.count()
     dk = plan_key(docs)
@@ -578,7 +575,6 @@ def q52_dedup_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         # family's analog of q54's recall@k. Exact ints + one /k
         # divide: hash-portable. Signature sides are doc-count-
         # attested broadcasts (the lsh_candidate_pairs contract).
-        from ..operators.dedup import _maybe_broadcast
         sa = sig.select(F.col("doc_id").alias("id_a"),
                         *[F.col(f"h{i}").alias(f"_a{i}")
                           for i in range(MINHASH_K)])
@@ -589,8 +585,8 @@ def q52_dedup_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col(f"_a{i}") == F.col(f"_b{i}")).cast("int")
             for i in range(MINHASH_K))
         p = (jac.filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-             .join(_maybe_broadcast(sa, n_docs), "id_a")
-             .join(_maybe_broadcast(sb, n_docs), "id_b")
+             .join(maybe_broadcast(sa, n_docs), "id_a")
+             .join(maybe_broadcast(sb, n_docs), "id_b")
              .withColumn("est_matches", agree)
              .withColumn("est_jaccard",
                          F.col("est_matches").cast("double")
@@ -602,15 +598,14 @@ def q52_dedup_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         # similarity per surviving pair — only verified pairs pay the
         # O(|a|·|b|) distance, text sides under the same footer-count
         # broadcast attestation
-        p = (dedup.edit_distance_verify(docs, p, "doc_id", "text",
-                                        n_docs=n_docs)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-        p.count()   # eager: many downstream references
-        return p
+        return dedup.edit_distance_verify(docs, p, "doc_id", "text",
+                                          n_docs=n_docs)
 
-    verified = cached_build(
+    # eager: many downstream references
+    verified = cached_persist(
         spark, ("verified_pairs", dk, MINHASH_K, SHINGLE_N,
-                LSH_BANDS, LSH_ROWS, JACCARD_THRESHOLD), build_verified)
+                LSH_BANDS, LSH_ROWS, JACCARD_THRESHOLD), build_verified,
+        eager=True)
     # the resolved cluster map is memoized per (session, corpus plan)
     # like the SemDeDup relation: dup_clusters' supersteps run eager
     # checkpoint/convergence jobs at BUILD time, so an unmemoized
@@ -786,22 +781,15 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair leg's band/verify sides — one (doc_id, simhash) row per doc,
     # the same index-artifact shape as the band-key/token-set caches
     sh = cached_relation(dedup.simhash32(docs, "doc_id", "text"),
-                         "simhash32", eager=False)
+                         "simhash32")
 
     # r9: every leg output here is a narrow per-doc/pair ARTIFACT of
     # the hashing-index family (simhash+md5 index rows, near-dup
     # candidates, the scrub report — what a pipeline persists beside
     # the scrubbed dataset); memoize each on the small corpus plan
     # with a lazy persist (the leg-memoization pattern)
-    from pyspark.storagelevel import StorageLevel
-
-    from ..operators._cache import cached_build, plan_key
+    from ..operators._cache import cached_persist, plan_key
     dk = plan_key(docs)
-
-    def leg_cache(tag, build):
-        return cached_build(
-            spark, (tag, dk),
-            lambda: build().persist(StorageLevel.MEMORY_AND_DISK))
 
     def build_doc_leg():
         fp = docs.select("doc_id",
@@ -813,12 +801,13 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("simhash").alias("metric"),
                         "fingerprint"))
 
-    doc_leg = leg_cache("q53_doc_leg", build_doc_leg)
+    doc_leg = cached_persist(spark, ("q53_doc_leg", dk), build_doc_leg)
 
     # cache_keys=False: the band-key side re-derives from `sh`, which IS
     # the persisted relation — a second persist of a 500-row projection
     # would only add bookkeeping latency to a broadcast-bound leg
-    pair_leg = leg_cache("q53_pair_leg", lambda: dedup.simhash_near_dups(
+    pair_leg = cached_persist(spark, ("q53_pair_leg", dk), lambda: dedup
+                              .simhash_near_dups(
         sh.filter(F.col("doc_id") % _SIMHASH_SUBSET_MOD == 0),
         "doc_id", "simhash",
         max_hamming=_SIMHASH_MAX_HAMMING,
@@ -835,14 +824,15 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scrubbed text, so the driver attests the REASSEMBLED output, not
     # just the counts. Map-variant equivalence + its fail-loud cap are
     # pytest-pinned (tests/test_span_scrub.py).
-    span_leg = leg_cache("q53_span_leg", lambda: dedup
-                         .scrub_repeated_spans(docs)
-                         .select(F.lit("span_scrub").alias("role"),
-                                 F.col("doc_id").alias("id_a"),
-                                 F.lit(None).cast("long").alias("id_b"),
-                                 F.col("n_removed").alias("metric"),
-                                 F.substring(F.md5("cleaned"), 1, 16)
-                                 .alias("fingerprint")))
+    span_leg = cached_persist(spark, ("q53_span_leg", dk), lambda: dedup
+                              .scrub_repeated_spans(docs)
+                              .select(F.lit("span_scrub").alias("role"),
+                                      F.col("doc_id").alias("id_a"),
+                                      F.lit(None).cast("long")
+                                      .alias("id_b"),
+                                      F.col("n_removed").alias("metric"),
+                                      F.substring(F.md5("cleaned"), 1, 16)
+                                      .alias("fingerprint")))
     # fourth leg (r10, X-DEDUP-SUBSTR — VERDICT r9 #3): exact
     # VARIABLE-LENGTH substring scrub, the ExactSubstr class (Lee et
     # al. 2021) — every repeated token run of length >= 8 removed
@@ -871,23 +861,24 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-hash). Corpus-token-sized × one digest column — the
     # documented scale shape; MEMORY_AND_DISK spills at 100 TB, and a
     # production pipeline lands it beside the index.
-    substr_occ = leg_cache(
-        "q53_substr_occ",
+    substr_occ = cached_persist(
+        spark, ("q53_substr_occ", dk),
         lambda: dedup._window_occurrences(docs, "doc_id", "text",
                                           dedup.SUBSTR_MIN_LEN))
-    substr_index = leg_cache("q53_substr_index",
-                             lambda: dedup.window_hash_index(
-                                 docs, occ=substr_occ))
-    substr_leg = leg_cache("q53_substr_leg", lambda: dedup
-                           .scrub_duplicate_substrings(
-                               docs, index=substr_index,
-                               occ=substr_occ)
-                           .select(F.lit("substr_scrub").alias("role"),
-                                   F.col("doc_id").alias("id_a"),
-                                   F.lit(None).cast("long").alias("id_b"),
-                                   F.col("n_removed").alias("metric"),
-                                   F.substring(F.md5("cleaned"), 1, 16)
-                                   .alias("fingerprint")))
+    substr_index = cached_persist(spark, ("q53_substr_index", dk),
+                                  lambda: dedup.window_hash_index(
+                                      docs, occ=substr_occ))
+    substr_leg = cached_persist(spark, ("q53_substr_leg", dk), lambda: dedup
+                                .scrub_duplicate_substrings(
+                                    docs, index=substr_index,
+                                    occ=substr_occ)
+                                .select(F.lit("substr_scrub").alias("role"),
+                                        F.col("doc_id").alias("id_a"),
+                                        F.lit(None).cast("long")
+                                        .alias("id_b"),
+                                        F.col("n_removed").alias("metric"),
+                                        F.substring(F.md5("cleaned"), 1, 16)
+                                        .alias("fingerprint")))
 
     # fifth leg (r10, X-DEDUP-SUBSTR-INCR — incremental-parity, the
     # q51 pattern): docs ≡0 (mod 5) replayed as an ingest batch
@@ -912,7 +903,8 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.substring(F.md5("cleaned"), 1, 16)
                         .alias("fingerprint")))
 
-    substr_incr_leg = leg_cache("q53_substr_incr_leg", build_substr_incr)
+    substr_incr_leg = cached_persist(spark, ("q53_substr_incr_leg", dk),
+                                     build_substr_incr)
     return (doc_leg.unionByName(pair_leg).unionByName(span_leg)
             .unionByName(substr_leg).unionByName(substr_incr_leg))
 
@@ -1105,26 +1097,18 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequential fold the cosine legs already attest. Exercises
     mean_pool's real plan — posexplode → (group, dim) hash aggregate,
     member-count-free state — not a test fixture."""
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators import pq
-    from ..operators._cache import cached_build, plan_key
+    from ..operators._cache import cached_build, cached_persist, plan_key
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     # Session-memoize every leg relation keyed on the SMALL input plan
-    # (cached_build on plan_key(emb) + params), NOT on the leg's own
+    # (cached_persist on plan_key(emb) + params), NOT on the leg's own
     # plan: the 64-dim fold expressions make the legs' analyzed-plan
     # strings enormous, and plan_key over them costs seconds per
     # invocation (measured: first build 15 s, rebuild 1.9 s — r9).
-    # The lazy persist inside each build makes the exact/adc
-    # relations, which feed both their own legs AND the RRF fusion,
-    # materialize once inside the one output job.
-    ek = plan_key(emb)
-
-    def leg_cache(tag, build):
-        return cached_build(
-            spark, (tag, ek, _PQ_DIM, _PQ_M, _PQ_K),
-            lambda: build().persist(StorageLevel.MEMORY_AND_DISK))
+    # The lazy persist makes each leg relation materialize once inside
+    # the one output job.
+    params = (plan_key(emb), _PQ_DIM, _PQ_M, _PQ_K)
 
     # Memoization line (VERDICT r9 #1, SCALE.md "What memoizes"):
     # only INDEX/MODEL artifacts session-memoize here (pq_codes, the
@@ -1154,8 +1138,10 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the code table IS the PQ index artifact (m ints per vector —
         # what a vector store persists); built once per (session,
         # corpus)
-        codes = leg_cache("pq_codes", lambda: pq.pq_encode(
-            emb, "vec_id", "embedding", _PQ_DIM, cb, m=_PQ_M))
+        codes = cached_persist(
+            spark, ("pq_codes",) + params,
+            lambda: pq.pq_encode(emb, "vec_id", "embedding", _PQ_DIM, cb,
+                                 m=_PQ_M))
         adc_p = (pq.pq_adc_topk(
             codes, queries, "vec_id", "embedding", _PQ_DIM,
             cb, m=_PQ_M, k_neighbors=3)
@@ -1165,8 +1151,7 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return exact_p, adc_p
 
     exact_plan, adc_plan = cached_build(
-        spark, ("q54_leg_plans", ek, _PQ_DIM, _PQ_M, _PQ_K),
-        build_leg_plans)
+        spark, ("q54_leg_plans",) + params, build_leg_plans)
     exact = exact_plan.localCheckpoint(eager=False)
     adc = adc_plan.localCheckpoint(eager=False)
 
@@ -1190,7 +1175,7 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("_v").alias("metric"),
                         (F.col("_d") + 1).cast("int").alias("rn")))
 
-    pooled = leg_cache("q54_pooled", build_pooled)
+    pooled = cached_persist(spark, ("q54_pooled",) + params, build_pooled)
     # RRF leg (r9, X-RRF): reciprocal-rank fusion of the exact and
     # PQ-ADC rankings — the standard hybrid-retrieval combiner,
     # 1/(60+rank), rational so the doubles are engine-portable and
@@ -1364,17 +1349,16 @@ def q55_ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("near_dup").alias("role"), "id_a", "id_b",
                     "cos_sim", F.lit(None).cast("int").alias("rn")))
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
-    from ..operators._cache import cached_build, plan_key
+    from ..operators._cache import cached_persist, plan_key
 
     # the whole leg is memoized on the SMALL input plan: analyzing the
     # 64-dim-wide encode projection costs seconds of driver time per
     # construction (the q54 giant-plan lesson), and the top-20 output
-    # is a bounded artifact
+    # is a bounded artifact. The one-row stats are read once, by the
+    # leg's own materialization, so the leg's persist covers them.
     def build_sq_leg():
-        stats = (similarity.sq8_stats(emb, "embedding", _PQ_DIM)
-                 .persist(StorageLevel.MEMORY_AND_DISK))
+        stats = similarity.sq8_stats(emb, "embedding", _PQ_DIM)
         sq_w = Window.orderBy(F.desc("sq8_err"), F.asc("vec_id"))
         return (similarity.sq8_encode(emb, "vec_id", "embedding",
                                       _PQ_DIM, stats)
@@ -1384,11 +1368,10 @@ def q55_ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("vec_id").alias("id_a"),
                         F.lit(None).cast("bigint").alias("id_b"),
                         F.col("sq8_err").alias("cos_sim"),
-                        F.col("rk").cast("int").alias("rn"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
+                        F.col("rk").cast("int").alias("rn")))
 
-    sq_leg = cached_build(spark, ("sq8_leg", plan_key(emb), _PQ_DIM),
-                          build_sq_leg)
+    sq_leg = cached_persist(spark, ("sq8_leg", plan_key(emb), _PQ_DIM),
+                            build_sq_leg)
     return topk.unionByName(dups).unionByName(sq_leg)
 
 
@@ -1693,8 +1676,7 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs their corpus aggregates (~1.3 s/call at sf0.1, measured)
     from ..operators._cache import cached_relation
     packed = packed.crossJoin(bounded_broadcast(
-        cached_relation(text.token_freq_map(docs), "token_freq_map",
-                        eager=False),
+        cached_relation(text.token_freq_map(docs), "token_freq_map"),
         bound="one-row token-frequency map (vocab-bounded)", max_rows=1))
     # r7, X-TEXT-TFIDF: most-characteristic term per doc by the
     # exact-integer idf-weighted score (text.tf_icf_top_terms — the
@@ -1705,13 +1687,12 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles; above the cap it falls back to ONE doc-keyed equi-join
     # — the inherent cost of attaching any (doc, token)-aggregated
     # feature back onto the doc row.
-    from ..operators.dedup import _maybe_broadcast
     top_term = cached_relation(
         text.tf_icf_top_terms(docs, "doc_id", "text", k=1,
                               n_docs=n_docs)
         .select("doc_id", F.col("token").alias("top_term"),
                 F.col("score_scaled").alias("top_term_score")),
-        "tficf_top_terms", eager=False)
+        "tficf_top_terms")
     # r8 addition (X-QUALITY-CLF, operators.classifier): a
     # one-vs-rest language classifier TRAINED in-engine — 2 full-batch
     # GD rounds per class probe (all five classes' gradients reduced
@@ -1753,7 +1734,7 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: classifier.train_one_vs_rest(
             docs, clf_feats, F.col("lang"), _CLF_CLASSES, n_iter=2))
     scored = classifier.predict_with(
-        packed.join(_maybe_broadcast(top_term, n_docs), "doc_id", "left"),
+        packed.join(maybe_broadcast(top_term, n_docs), "doc_id", "left"),
         clf_feats, clf_w, _CLF_CLASSES,
         out_col="clf_lang_pred", score_prefix="_cs_")
     # r12 addition (X-TEXT-LM-BIGRAM, operators.lm — VERDICT r11 #5):
@@ -1769,8 +1750,7 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring bags explode from it, so the corpus text decode + split
     # runs once per session instead of five times (the q53
     # `_window_occurrences` pattern applied to the LM family)
-    lm_tk = cached_relation(lm_ops.tokenized(docs), "lm_tk",
-                            eager=False)
+    lm_tk = cached_relation(lm_ops.tokenized(docs), "lm_tk")
     # the UN-floored gram-count relations are the growable model
     # artifacts (the growth/forget laws' operand) AND double as the
     # scorers' per-gram term base — their keys are exactly the
@@ -1779,19 +1759,19 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # position
     lm_bi_all = cached_relation(
         lm_ops.bigram_lm_counts(docs, toks=lm_tk)[1],
-        "lm_bi_all", eager=False)
+        "lm_bi_all")
     lm_uni_all = cached_relation(
         lm_ops.unigram_counts(docs, toks=lm_tk),
-        "lm_uni_all", eager=False)
+        "lm_uni_all")
     lm_uni, lm_bi, lm_tot = lm_ops.lm_model_from_counts(
         lm_uni_all, lm_bi_all)
-    lm_uni = cached_relation(lm_uni, "lm_uni", eager=False)
-    lm_bi = cached_relation(lm_bi, "lm_bi", eager=False)
+    lm_uni = cached_relation(lm_uni, "lm_uni")
+    lm_bi = cached_relation(lm_bi, "lm_bi")
     lm_scored = cached_relation(
         lm_ops.bigram_lm_bits(docs, "doc_id", "text",
                               lm_uni, lm_bi, lm_tot, toks=lm_tk,
                               grams=lm_bi_all),
-        "lm_scored", eager=False)
+        "lm_scored")
     # threshold and tercile cuts are train-once selection models
     # ("a bounded artifact — train once, broadcast always"): memoize
     # the one-row relations so repeat invocations skip re-aggregating
@@ -1800,7 +1780,7 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm_final = lm_ops.lm_keep(
         lm_scored,
         cached_relation(lm_ops.lm_corpus_threshold(lm_scored),
-                        "lm_thr", eager=False))
+                        "lm_thr"))
     # r12 second pass (X-TEXT-LM-TRIGRAM): the trigram tier one order
     # up — 3-way log-linear interpolation against the SAME floored
     # uni/bi artifacts plus a floored trigram relation, and CCNet's
@@ -1813,24 +1793,24 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (lm3_oracle_ctes).
     lm_tri_all = cached_relation(
         lm_ops.trigram_lm_counts(docs, toks=lm_tk),
-        "lm_tri_all", eager=False)
+        "lm_tri_all")
     lm_tri = lm_tri_all.filter(F.col("c") >= lm_ops.LM_MIN_COUNT)
     lm3_scored = cached_relation(
         lm_ops.trigram_lm_bits(docs, "doc_id", "text",
                                lm_uni, lm_bi, lm_tri, lm_tot,
                                toks=lm_tk, grams=lm_tri_all),
-        "lm3_scored", eager=False)
+        "lm3_scored")
     lm3_final = lm_ops.lm_bucket(
         lm3_scored,
         cached_relation(lm_ops.lm_terciles(lm3_scored, n_rows=n_docs),
-                        "lm3_cuts", eager=False))
+                        "lm3_cuts"))
     # join-back rides the packing/top-term pattern: the narrow per-doc
     # LM relation is the broadcast side under the footer attestation
     # so the WIDE corpus row never shuffles; above the cap it falls
     # back to one doc-keyed equi-join. Both tiers pre-join into ONE
     # per-doc relation (each is doc_id-complete by construction) so
     # the wide row pays a single join-back, not two.
-    scored = scored.join(_maybe_broadcast(
+    scored = scored.join(maybe_broadcast(
         lm_final.join(lm3_final, "doc_id"), n_docs), "doc_id", "left")
     return scored.select(
         "doc_id",
@@ -2136,10 +2116,8 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode path (`bpe.apply_merges`) and deep-merge behavior are
     pytest-pinned against an independent Python reference
     (tests/test_bpe.py)."""
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators import bpe
-    from ..operators._cache import cached_build, cached_relation, plan_key
+    from ..operators._cache import cached_persist, cached_relation, plan_key
     docs = _docs(spark, sf_dir)
     dk = plan_key(docs)
 
@@ -2148,22 +2126,17 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (what tokenizer training and word2vec/GloVe prep land beside the
     # corpus) — they memoize like the merge list; the BM25 ranking is
     # a search RESULT and rebuilds per invocation.
-    def leg_cache(tag, build):
-        # coalesce(1) (r16): every cached leg here is vocab/model-
-        # sized (top-k tokens, merge ranks, piece tables) — one
-        # partition per leg keeps the serve-phase union scan from
-        # paying 32 near-empty tasks per leg. Each leg plan ends in
-        # an aggregate/window or a local relation, so the coalesce
-        # collapses only the tiny post-shuffle (or local) stage.
-        return cached_build(
-            spark, (tag, dk),
-            lambda: build().coalesce(1)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-
-    vocab_leg = leg_cache("q58_vocab_leg", lambda: text.token_vocab(
-        docs, "text", top_k=100).select(
-        F.lit("vocab").alias("leg"), "token", "doc_freq", "total_freq",
-        "rank"))
+    # coalesce(1) (r16): every cached leg here is vocab/model-sized
+    # (top-k tokens, merge ranks, piece tables) — one partition per leg
+    # keeps the serve-phase union scan from paying 32 near-empty tasks
+    # per leg. Each leg plan ends in an aggregate/window or a local
+    # relation, so the coalesce collapses only the tiny post-shuffle
+    # (or local) stage.
+    vocab_leg = cached_persist(spark, ("q58_vocab_leg", dk), lambda: text
+                               .token_vocab(docs, "text", top_k=100)
+                               .select(F.lit("vocab").alias("leg"),
+                                       "token", "doc_freq", "total_freq",
+                                       "rank").coalesce(1))
     merges = bpe.train_bpe_merges(docs, "text", n_merges=_BPE_N_MERGES)
     # the merge TABLE is the model artifact rendered as a relation —
     # leg-cached (r16, guide §4): a createDataFrame relation executes
@@ -2171,13 +2144,13 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # →JVM round trip per task per invocation (thread dumps showed the
     # union's tasks parked in PythonRunner reads); persisting turns
     # every later scan into an in-memory JVM columnar read
-    bpe_leg = leg_cache("q58_bpe_leg", lambda: bpe.merges_table(
-        spark, merges).select(
+    bpe_leg = cached_persist(spark, ("q58_bpe_leg", dk), lambda: bpe
+                             .merges_table(spark, merges).select(
         F.lit("bpe_merge").alias("leg"),
         F.concat(F.col("left"), F.lit("+"), F.col("right")).alias("token"),
         F.lit(None).cast("long").alias("doc_freq"),
         F.col("freq").alias("total_freq"),
-        F.col("rank")))
+        F.col("rank")).coalesce(1))
     # third leg (r7, X-TEXT-COOC): top-k windowed co-occurrence pairs
     # (text.cooccurrence_pairs — the skip-gram/PMI prep relation;
     # pair construction is row-local zip_with over shifted views, the
@@ -2197,9 +2170,10 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("pair").alias("token"),
                         F.lit(None).cast("long").alias("doc_freq"),
                         F.col("n_cooc").alias("total_freq"),
-                        F.col("crank").cast("int").alias("rank")))
+                        F.col("crank").cast("int").alias("rank"))
+                .coalesce(1))
 
-    cooc_leg = leg_cache("q58_cooc_leg", build_cooc_leg)
+    cooc_leg = cached_persist(spark, ("q58_cooc_leg", dk), build_cooc_leg)
     # fourth leg (r9, X-BM25): top-5 docs per literal query by
     # quantized rational-IDF BM25 (text.bm25_topk — exp-free IDF so
     # the doubles are engine-portable, fixed-point term scores so the
@@ -2226,13 +2200,12 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge surfaces in rank order) is the shippable MODEL artifact —
     # memoized per (session, corpus, n_merges); both id maps ride as
     # one-row broadcast map columns (no explode, no shuffle).
-    vocab = cached_build(
+    vocab = cached_persist(
         spark, ("q58_vocab", dk, _BPE_N_MERGES),
         # persisted (r16): the id table is scanned twice per plan
         # (encode + decode map builds); unpersisted, each scan re-runs
         # the createDataFrame Python RDD every invocation
-        lambda: bpe.vocab_from_merges(spark, docs, merges)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        lambda: bpe.vocab_from_merges(spark, docs, merges))
     # deterministic 1-in-5 subsample (the q53 simhash-leg pattern):
     # the encode is the interpreted 8-replace expression chain per
     # word — attestation strength is per-doc regardless of how many
@@ -2261,18 +2234,18 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both model-rendering legs leg-cached (r16): same Python-RDD
     # reasoning as the merge table — the rows are pure functions of
     # the memoized model, so the relation is an artifact, not a result
-    uni_piece_leg = leg_cache(
-        "q58_uni_piece_leg", lambda: spark.createDataFrame(
+    uni_piece_leg = cached_persist(
+        spark, ("q58_uni_piece_leg", dk), lambda: spark.createDataFrame(
             [("uni_piece", p, cnt, cost, i + 1)
              for i, (p, cnt, cost) in enumerate(uni_rows)],
             "leg string, token string, doc_freq long, total_freq long, "
-            "rank int"))
-    uni_round_leg = leg_cache(
-        "q58_uni_round_leg", lambda: spark.createDataFrame(
+            "rank int").coalesce(1))
+    uni_round_leg = cached_persist(
+        spark, ("q58_uni_round_leg", dk), lambda: spark.createDataFrame(
             [("uni_round", f"round_{r + 1}", None, obj, r + 1)
              for r, obj in enumerate(uni_model.traj)],
             "leg string, token string, doc_freq long, total_freq long, "
-            "rank int"))
+            "rank int").coalesce(1))
     # the per-word segmentation relation is the derived encode
     # ARTIFACT (a lookup table beside the model — the tf-icf/top-term
     # memoization rule): session-cached over the FULL corpus words so
@@ -2280,8 +2253,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold; the subsample encode pays only the word join-back
     # (~2 s/invocation measured at sf0.1 without the cache)
     uni_wseg = cached_relation(
-        ug_ops.word_segmentations(docs, uni_model), "uni_wseg",
-        eager=False)
+        ug_ops.word_segmentations(docs, uni_model), "uni_wseg")
     uni_seg_leg = (ug_ops.encode_unigram(sub, uni_model, wseg=uni_wseg)
                    .select(F.lit("uni_seg").alias("leg"),
                            F.substring(F.md5(F.array_join("pieces", "|")),
@@ -2304,7 +2276,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp_pieces = [p for p, _, _ in uni_model.pieces]
     wp_wseg = cached_relation(
         wp_ops.word_segmentations_wp(docs, wp_pieces, uni_model.k),
-        "wp_wseg", eager=False)
+        "wp_wseg")
     wp_leg = (wp_ops.encode_wordpiece(sub, wp_pieces,
                                       k=uni_model.k, wseg=wp_wseg)
               .select(F.lit("wp_seg").alias("leg"),
@@ -2328,7 +2300,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp2_wseg = cached_relation(
         wp_ops.word_segmentations_wp(docs, _WP2_INIT, 2,
                                      cont_pieces=_WP2_CONT),
-        "wp2_wseg", eager=False)
+        "wp2_wseg")
     wp2_leg = (wp_ops.encode_wordpiece(sub, _WP2_INIT, k=2,
                                        wseg=wp2_wseg,
                                        cont_pieces=_WP2_CONT)
@@ -2720,7 +2692,7 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle resolves the components with a recursive CTE over the
     identical within-cell pair set. rn carries the cell id in this
     leg; keeper != query_id marks the rows a pipeline drops."""
-    from ..operators._cache import cached_build, plan_key
+    from ..operators._cache import cached_build, cached_persist, plan_key
     emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
 
@@ -2834,7 +2806,8 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("it").alias("query_id"),
                         F.col("inertia").alias("neighbor_id"),
                         F.col("mean_d2").alias("cos_sim"),
-                        F.col("it").cast("int").alias("rn")))
+                        F.col("it").cast("int").alias("rn"))
+                .coalesce(1))
 
     # r16: the semdedup keeper list, the decontam drop list and the
     # inertia trajectory are INDEX/MODEL artifacts (SCALE.md "What
@@ -2844,24 +2817,21 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relations; the searches (topk, exact baseline, recall) stay
     # per-invocation results. Every leg plan ends in a join/aggregate,
     # so coalesce(1) collapses only the leg-sized post-shuffle stage.
-    from pyspark.storagelevel import StorageLevel
-
-    def leg_cache(tag, build):
-        return cached_build(
-            spark, (tag, plan_key(emb), _SEMDEDUP_THRESHOLD, n_vecs),
-            lambda: build().coalesce(1)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-
+    lk = (plan_key(emb), _SEMDEDUP_THRESHOLD, n_vecs)
     legs = concurrent_builds({
         "sd": lambda: (
-            leg_cache("q63_sd1", lambda: semdedup_leg("semdedup", 1)),
-            leg_cache("q63_sd2",
-                      lambda: semdedup_leg("semdedup_mp", 2))),
-        "dc": lambda: leg_cache(
-            "q63_dc1", lambda: decontam_leg("decontam", 1)),
-        "dc2": lambda: leg_cache(
-            "q63_dc2", lambda: decontam_leg("decontam_mp", 2)),
-        "inertia": lambda: leg_cache("q63_inertia", build_inertia),
+            cached_persist(spark, ("q63_sd1",) + lk, lambda: semdedup_leg(
+                "semdedup", 1).coalesce(1)),
+            cached_persist(spark, ("q63_sd2",) + lk, lambda: semdedup_leg(
+                "semdedup_mp", 2).coalesce(1))),
+        "dc": lambda: cached_persist(
+            spark, ("q63_dc1",) + lk,
+            lambda: decontam_leg("decontam", 1).coalesce(1)),
+        "dc2": lambda: cached_persist(
+            spark, ("q63_dc2",) + lk,
+            lambda: decontam_leg("decontam_mp", 2).coalesce(1)),
+        "inertia": lambda: cached_persist(spark, ("q63_inertia",) + lk,
+                                          build_inertia),
     })
     sd, sd2 = legs["sd"]
     dc, dc2, inertia = legs["dc"], legs["dc2"], legs["inertia"]

@@ -6,10 +6,16 @@ derived corpus representations) and what must not (results: top-k
 lists, rankings, aggregation answers, anything parameterized by a
 per-request input). r16 moved several legs into the cache under that
 rule; the judge asked for the line to become BINDING: every consumer
-of `cached_relation` / `cached_build` in the engine must appear in
-the adjudicated registry below, with a one-line justification of
-WHY the cached thing is an artifact (or a prepared plan) and what
-non-trivial per-invocation computation still consumes it.
+of `cached_persist` / `cached_relation` / `cached_build` in the engine
+must appear in the adjudicated registry below, with a one-line
+justification of WHY the cached thing is an artifact (or a prepared
+plan) and what non-trivial per-invocation computation still consumes
+it. `cached_persist` and its plan-keyed form `cached_relation` are the
+package's only persist path (`tests/test_plan_hygiene.py::
+test_no_raw_persist`), so this registry sees every persisted session
+artifact; `cached_build` holds plans, models, scalars and checkpoint
+lists. A cache function imported under another name would hide its
+call sites from the inventory, so aliased imports fail too.
 
 Adding a cache call site anywhere in the engine fails this test until
 the new entry is adjudicated here — by design. Removing one fails it
@@ -31,7 +37,7 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parent.parent / \
     "snowflake_azure_etl_spark"
 
-CACHE_FNS = frozenset({"cached_relation", "cached_build"})
+CACHE_FNS = frozenset({"cached_persist", "cached_relation", "cached_build"})
 
 #: (module, enclosing function, cache fn) -> (site count, adjudication).
 #: Shorthand used in the notes — ARTIFACT: a production pipeline
@@ -60,8 +66,8 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("operators/sampling.py", "dsir_feats_artifact", "cached_relation"):
         (1, "ARTIFACT: DSIR hashed-feature relation (model input); "
             "per-doc importance scoring stays per-invocation"),
-    ("operators/similarity.py", "_ivf_index", "cached_build"):
-        (1, "ARTIFACT: IVF centroids + assigned corpus (the ANN "
+    ("operators/similarity.py", "_ivf_index", "cached_persist"):
+        (2, "ARTIFACT: IVF centroid array + assigned corpus (the ANN "
             "index); searches probe it per-invocation"),
     ("operators/similarity.py", "_kmeans_rounds", "cached_build"):
         (1, "ARTIFACT: Lloyd's-rounds centroid trajectory (training "
@@ -71,7 +77,7 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("operators/similarity.py", "ivf_inertia_trajectory", "cached_build"):
         (1, "ARTIFACT: per-round inertia objective (rounds-sized "
             "training ledger)"),
-    ("operators/similarity.py", "semantic_decontam", "cached_build"):
+    ("operators/similarity.py", "semantic_decontam", "cached_persist"):
         (1, "ARTIFACT: decontam drop list (the persisted audit "
             "artifact a decontam pass lands)"),
     ("operators/similarity.py", "semantic_dedup", "cached_build"):
@@ -81,6 +87,10 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
             "ranking itself rebuilds per invocation"),
     ("operators/unigram.py", "train_unigram", "cached_build"):
         (1, "ARTIFACT: trained unigram-LM tokenizer model"),
+    ("plans/datedim.py", "build_dim_date", "cached_persist"):
+        (1, "ARTIFACT: the generated DIM_DATE table, built once per "
+            "(session, span) — the reference's dim is a table; every "
+            "star query joins it per invocation"),
     ("plans/prefix.py", "_pinned_offsets", "cached_relation"):
         (1, "ARTIFACT: per-split prefix-sum offsets relation (every "
             "ranged ordered numbering: prefix sums and dense keys)"),
@@ -104,50 +114,70 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("workload/_registry.py", "query.deco.run", "cached_build"):
         (1, "PLAN: the prepared-statement wrapper (unmaterialized "
             "DataFrame; full DAG executes per invocation)"),
-    ("workload/etl_queries.py", "q26_stage_accounting", "cached_build"):
-        (1, "ARTIFACT: the staged/landed table build (session-managed "
-            "tables; the manifest scan re-runs per invocation)"),
+    ("workload/etl_queries.py", "q26_stage_accounting", "cached_persist"):
+        (1, "ARTIFACT: per-entity one-row manifest record (count, "
+            "content fingerprint, DQ rule counts — what a lake lands "
+            "beside the data); the entity/dq rows explode per "
+            "invocation"),
     ("workload/events_queries.py", "q41_events_sliding_window",
      "cached_relation"):
         (1, "ARTIFACT: hourly rollup (bucket-count-sized, the "
             "pre-aggregated table a warehouse persists)"),
+    ("workload/extension_queries.py", "q47_kmv_sketch", "cached_persist"):
+        (7, "ARTIFACT: one-partition CMS / Bloom / mixture-plan / "
+            "mixture-application / quality-mixture / DSIR-selection "
+            "legs (sketch state and trained sampling plans, keyed on "
+            "their small source plans); the union with the estimate "
+            "legs derives per invocation"),
     ("workload/extension_queries.py", "q47_kmv_sketch", "cached_relation"):
-        (2, "ARTIFACT: equi-width histogram bin relations (sketch "
-            "state); quantile answers derive per invocation"),
-    ("workload/extension_queries.py", "q47_kmv_sketch.leg_cache",
-     "cached_build"):
-        (1, "ARTIFACT: merged KMV k-minima + per-(type,day) HLL "
-            "partials (the persisted sketch state of the documented "
-            "merge tree); estimates derive per invocation"),
+        (6, "ARTIFACT: the shared events and doc-feature bases, merged "
+            "KMV k-minima, per-(type,day) HLL partials and equi-width "
+            "histogram bins (the persisted sketch state of the "
+            "documented merge tree); estimates and quantiles derive "
+            "per invocation"),
     ("workload/pipeline_queries.py", "q50_dedup_exact", "cached_relation"):
-        (1, "ARTIFACT: exact-dedup winner index; scrub + DSIR scoring "
-            "re-run per invocation"),
+        (2, "ARTIFACT: exact-dedup winner index + the trained DSIR "
+            "bucket model; scrub + DSIR scoring re-run per invocation"),
     ("workload/pipeline_queries.py", "q51_dedup_minhash_lsh",
      "cached_relation"):
         (1, "ARTIFACT: MinHash signature relation (the index input)"),
     ("workload/pipeline_queries.py", "q52_dedup_jaccard_verify",
      "cached_build"):
-        (2, "ARTIFACT: verified-pairs relation + connected-component "
-            "cluster index (what a dedup pass persists); the "
-            "survivor/audit legs derive per invocation"),
+        (1, "ARTIFACT: connected-component cluster index (what a "
+            "dedup pass persists); the keeper join derives per "
+            "invocation"),
+    ("workload/pipeline_queries.py", "q52_dedup_jaccard_verify",
+     "cached_persist"):
+        (1, "ARTIFACT: verified-pairs relation (the dedup pass's pair "
+            "index); the cluster and keeper legs consume it"),
     ("workload/pipeline_queries.py", "q53_dedup_simhash",
      "cached_relation"):
         (1, "ARTIFACT: simhash32 signature index"),
-    ("workload/pipeline_queries.py", "q53_dedup_simhash.leg_cache",
-     "cached_build"):
-        (1, "ARTIFACT: banded simhash index legs (hamming-candidate "
-            "tables); the verify/audit legs derive per invocation"),
+    ("workload/pipeline_queries.py", "q53_dedup_simhash",
+     "cached_persist"):
+        (7, "ARTIFACT: simhash index legs (hamming-candidate tables), "
+            "the window-occurrence + window-hash substring index and "
+            "the scrub reports a pipeline lands beside the scrubbed "
+            "set; the union derives per invocation"),
     ("workload/pipeline_queries.py", "q54_ann_brute_force_topk",
      "cached_build"):
         (1, "PLAN: exact/ADC leg plans (localCheckpoint(eager=False) "
             "per invocation — fresh RDD ids, scans re-execute)"),
-    ("workload/pipeline_queries.py", "q54_ann_brute_force_topk.leg_cache",
-     "cached_build"):
-        (1, "ARTIFACT: SQ8/PQ quantized-vector relations (derived "
-            "corpus representation); searches score per invocation"),
+    ("workload/pipeline_queries.py", "q54_ann_brute_force_topk",
+     "cached_persist"):
+        (1, "ARTIFACT: pooled doc-level embeddings (derived corpus "
+            "representation); the RRF fusion derives per invocation"),
+    ("workload/pipeline_queries.py",
+     "q54_ann_brute_force_topk.build_leg_plans", "cached_persist"):
+        (1, "ARTIFACT: PQ code table (the vector-store index, its own "
+            "key inside the leg-plan build); ADC searches score it "
+            "per invocation"),
     ("workload/pipeline_queries.py", "q55_ann_lsh_bucketed_topk",
-     "cached_build"):
-        (1, "ARTIFACT: LSH bucket index; bucket probes per invocation"),
+     "cached_persist"):
+        (1, "ARTIFACT: SQ8 hardest-to-compress monitoring view over the "
+            "quantized corpus (bounded, keyed on the small corpus "
+            "plan); the LSH top-k and near-dup legs run per "
+            "invocation"),
     ("workload/pipeline_queries.py", "q57_text_stats", "cached_relation"):
         (12, "ARTIFACT: per-doc text-feature relations (tokenized, "
              "gram, language-id, stats legs — derived corpus "
@@ -157,31 +187,31 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
         (1, "ARTIFACT: union of the static text-feature legs (one "
             "cached sub-plan; the final aggregate derives per "
             "invocation)"),
-    ("workload/pipeline_queries.py", "q58_token_vocab", "cached_build"):
-        (1, "ARTIFACT: BPE id vocabulary (the shippable model table)"),
+    ("workload/pipeline_queries.py", "q58_token_vocab", "cached_persist"):
+        (6, "ARTIFACT: one-partition vocab/merge/cooc/piece/round "
+            "model-rendering legs + the BPE id vocabulary (model "
+            "tables); the BM25 leg — the result — is NOT cached"),
     ("workload/pipeline_queries.py", "q58_token_vocab", "cached_relation"):
         (3, "ARTIFACT: unigram/wordpiece per-word segmentation lookup "
             "tables (the encode artifact beside the model); subsample "
             "encodes join back per invocation"),
-    ("workload/pipeline_queries.py", "q58_token_vocab.leg_cache",
-     "cached_build"):
-        (1, "ARTIFACT: vocab/merge/cooc/piece model-rendering legs "
-            "(model tables); the BM25 leg — the result — is NOT "
-            "cached"),
     ("workload/pipeline_queries.py", "q63_ann_ivf_topk", "cached_build"):
-        (2, "ARTIFACT: semdedup keeper / decontam drop / inertia legs "
-            "+ their unioned static sub-plan; topk/recall searches "
-            "re-run per invocation"),
-    ("workload/pipeline_queries.py", "q63_ann_ivf_topk.leg_cache",
-     "cached_build"):
-        (1, "ARTIFACT: one-partition cached static legs (see above)"),
+        (2, "PLAN: the prepared ranking/baseline/drift plans + the "
+            "unioned static-leg sub-plan; topk/recall searches re-run "
+            "per invocation"),
+    ("workload/pipeline_queries.py", "q63_ann_ivf_topk", "cached_persist"):
+        (5, "ARTIFACT: one-partition semdedup keeper / decontam drop / "
+            "inertia legs (what SemDeDup persists beside the corpus)"),
 }
 
 
 def _inventory() -> dict[tuple[str, str, str], int]:
     inv: dict[tuple[str, str, str], int] = {}
+    aliased: list[str] = []
     for py in sorted(ROOT.rglob("*.py")):
         rel = str(py.relative_to(ROOT))
+        if rel == "operators/_cache.py":  # definitions, not consumers
+            continue
         tree = ast.parse(py.read_text())
 
         class V(ast.NodeVisitor):
@@ -195,6 +225,12 @@ def _inventory() -> dict[tuple[str, str, str], int]:
 
             visit_AsyncFunctionDef = visit_FunctionDef  # type: ignore
 
+            def visit_ImportFrom(self, n: ast.ImportFrom) -> None:
+                for a in n.names:
+                    if a.name in CACHE_FNS and a.asname:
+                        aliased.append(f"{rel}:{n.lineno}: {a.name} "
+                                       f"as {a.asname}")
+
             def visit_Call(self, n: ast.Call) -> None:
                 f = n.func
                 name = (f.id if isinstance(f, ast.Name)
@@ -206,16 +242,16 @@ def _inventory() -> dict[tuple[str, str, str], int]:
                 self.generic_visit(n)
 
         V().visit(tree)
-    # definition sites are not consumers
-    inv.pop(("operators/_cache.py", "cached_relation", "cached_relation"),
-            None)
-    inv.pop(("operators/_cache.py", "cached_build", "cached_build"), None)
+    assert not aliased, (
+        "cache functions imported under another name hide their call "
+        "sites from this registry: " + "; ".join(aliased))
     return inv
 
 
 def test_every_cache_consumer_is_adjudicated():
-    """A new cached_relation/cached_build call site anywhere in the
-    engine fails here until it is adjudicated in REGISTRY with an artifact/plan justification (SCALE.md memoization
+    """A new cached_persist/cached_relation/cached_build call site
+    anywhere in the engine fails here until it is adjudicated in
+    REGISTRY with an artifact/plan justification (SCALE.md memoization
     decision rule). A removed site fails too — the registry must not
     rot."""
     inv = _inventory()

@@ -3,9 +3,11 @@ and the clear/unpersist eviction hook."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import _cache
+from snowflake_azure_etl_spark.workload import QUERIES as _Q
 
 
 def test_cached_relation_reuses_and_clears(spark):
@@ -41,6 +43,67 @@ def test_relation_catalog_caches_in_an_empty_session_cache(spark, sf_dir):
         assert len(cache) == 2
     finally:
         _cache.clear_cache(spark)
+
+
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _releases_everything(spark, build) -> bool:
+    """Build on an empty CacheManager, then clear_cache: True iff no
+    relation the build persisted outlives the clear — every persist
+    went through the session cache that clear_cache releases."""
+    _cache.clear_cache(spark)
+    spark.catalog.clearCache()
+    build()
+    _cache.clear_cache(spark)
+    return _cache_manager_empty(spark)
+
+
+def test_q55_plan_build_leaves_no_persist_after_clear(spark, sf_dir):
+    """q55's SQ8 stats used to be persisted inside the leg build but
+    never registered, so they stayed in Spark's CacheManager after
+    clear_cache. Building the plan alone persists it."""
+    raw = _Q["q55_ann_lsh_bucketed_topk"].raw
+    assert _releases_everything(spark, lambda: raw(spark, sf_dir))
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("name", sorted(_Q))
+def test_catalog_query_leaves_no_persist_after_clear(spark, sf_dir, name):
+    raw = _Q[name].raw
+    assert _releases_everything(
+        spark, lambda: raw(spark, sf_dir).write.format("noop")
+        .mode("overwrite").save())
+
+
+def test_cached_persist_keys_levels_and_counts(spark):
+    """The key-explicit primitive: one build per key, the module's one
+    storage level, and eager materialization only on request."""
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(5)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _cache.clear_cache(spark)
+    try:
+        sc.setJobGroup("cp_test_lazy", "lazy cached_persist")
+        a = _cache.cached_persist(spark, ("cp_test", 1), build)
+        sc.setJobGroup("cp_test_eager", "eager cached_persist")
+        e = _cache.cached_persist(spark, ("cp_test", 2), build, eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _cache.cached_persist(spark, ("cp_test", 1), build) is a
+    assert len(calls) == 2
+    assert a.storageLevel == e.storageLevel == _cache.LEVEL
+    assert not tracker.getJobIdsForGroup("cp_test_lazy")
+    assert tracker.getJobIdsForGroup("cp_test_eager")
+    assert _cache.clear_cache(spark) == 2
+    assert _cache_manager_empty(spark)
 
 
 def test_clear_cache_unpersists_composite_artifacts(spark):
@@ -228,14 +291,10 @@ def test_prepared_query_reinvocation_is_consistent(spark, sf_dir):
 # DataFrameWriter execution over the same logical plan) re-runs the
 # full DAG from source scans.
 
-import pytest as _pytest
-
-from snowflake_azure_etl_spark.workload import QUERIES as _Q
-
 _PREPARED = sorted(n for n, q in _Q.items() if q.prepared)
 
 
-@_pytest.mark.parametrize("name", _PREPARED)
+@pytest.mark.parametrize("name", _PREPARED)
 def test_prepared_query_plan_is_pure(spark, sf_dir, name):
     q = _Q[name]
     df = q.fn(spark, sf_dir)
@@ -264,7 +323,7 @@ def test_prepared_query_plan_is_pure(spark, sf_dir, name):
         f"{name}: prepared result registered in the cache manager"
 
 
-@_pytest.mark.parametrize("name", _PREPARED)
+@pytest.mark.parametrize("name", _PREPARED)
 def test_prepared_query_reinvocation_returns_same_plan(spark, sf_dir, name):
     q = _Q[name]
     a = q.fn(spark, sf_dir)

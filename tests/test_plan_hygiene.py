@@ -125,8 +125,9 @@ def test_no_raw_broadcast_hints():
             # \bbroadcast( catches F.broadcast / sf.broadcast / a bare
             # `from pyspark.sql.functions import broadcast` call alike
             # (review finding r12: the literal substrings missed
-            # aliased imports); bounded_/_maybe_ have a word char
-            # before 'broadcast', so the sanctioned wrappers don't
+            # aliased imports); bounded_/maybe_ have a word char
+            # before 'broadcast', so the sanctioned wrappers
+            # (attest.bounded_broadcast / attest.maybe_broadcast) don't
             # match. No space allowed before '(' — prose in docstrings
             # says "broadcast (x)" but code calls broadcast(x).
             if re.search(r"\bbroadcast\(", code):
@@ -134,6 +135,42 @@ def test_no_raw_broadcast_hints():
     assert not offenders, (
         "raw broadcast hint(s) outside plans.attest — route through "
         "bounded_broadcast with an attested bound:\n" + "\n".join(offenders))
+
+
+#: The persists allowed outside operators/_cache.py: each is scoped by
+#: a try/finally that unpersists it within the same call, so it never
+#: outlives the call and needs no session-cache key. Keyed on the code
+#: line itself, so a new persist in the same module is still caught.
+SCOPED_PERSIST_OK = {
+    # copy_accounting: the raw COPY relation across its count,
+    # per-file and landing actions
+    ("sources/csv_format.py",
+     'raw = raw.withColumn("_src_file", F.input_file_name()).cache()'),
+    # the n-gram sink's per-epoch tokens across its 2-3 writes
+    ("streaming/ingest.py",
+     "toks = tokenized(batch_df, id_col, text_col).persist()"),
+}
+
+
+def test_no_raw_persist():
+    """Every session artifact is persisted, keyed and released by
+    operators/_cache (cached_persist / cached_relation), so clear_cache
+    can release it and the storage level is one decision. A raw
+    persist elsewhere is an artifact clear_cache cannot see."""
+    offenders = []
+    for py in sorted(_PKG.rglob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        if rel == "operators/_cache.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            code = line.split("#", 1)[0].strip()
+            if ((".persist(" in code or ".cache()" in code
+                 or "StorageLevel" in code)
+                    and (rel, code) not in SCOPED_PERSIST_OK):
+                offenders.append(f"{rel}:{i}: {code}")
+    assert not offenders, (
+        "raw persist(s) outside operators/_cache — persist through "
+        "cached_persist / cached_relation:\n" + "\n".join(offenders))
 
 
 def test_bounded_broadcast_rejects_unattested_and_oversized(spark):
