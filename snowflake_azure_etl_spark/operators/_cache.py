@@ -193,23 +193,16 @@ def column_key(col) -> str:
     return pat.sub(lambda m: seen[m.group(0)], s)
 
 
-def _unpersist(obj: object) -> None:
-    if isinstance(obj, DataFrame):
-        obj.unpersist(blocking=False)
-    elif isinstance(obj, (tuple, list)):
-        for item in obj:
-            _unpersist(item)
-
-
 def clear_cache(spark: SparkSession) -> int:
-    """Unpersist every cached relation/artifact (including DataFrames
-    inside composite index artifacts) and empty the registry. Returns
-    the number of evicted entries. The hook for file-change staleness
-    and for bounding executor storage in long multi-corpus sessions."""
+    """Unpersist every cached relation (each one a `cached_persist`
+    entry) and empty the registry. Returns the number of evicted
+    entries. The hook for file-change staleness and for bounding
+    executor storage in long multi-corpus sessions."""
     cache = session_cache(spark)
     n = len(cache)
     for value in cache.values():
-        _unpersist(value)
+        if isinstance(value, DataFrame):
+            value.unpersist(blocking=False)
     cache.clear()
     with _LOCKS_GUARD:
         _LOCKS.clear()

@@ -48,8 +48,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
-
 from .text import tokens
 
 #: Symbol-boundary sentinel. Prefixing every symbol guards the LEFT
@@ -305,8 +303,12 @@ def vocab_from_merges(spark, docs: DataFrame,
 
     Two distinct merges can strip to the same surface token (the
     apply_merges_arrow docstring's pathological-list case); only the
-    FIRST (lowest-rank) occurrence gets an id, so tokens stay unique —
-    `encode_ids`' map build would otherwise die on DUPLICATED_MAP_KEY."""
+    FIRST (lowest-rank) occurrence gets an id, so tokens stay unique.
+
+    Encode to ids with `segment.encode_ids(docs, apply_merges(text,
+    merges), vocab)` and back with `segment.decode_ids`: because BPE
+    segments partition each word's characters, decode(encode(text))
+    == text with spaces removed (q58's roundtrip leg attests it)."""
     alphabet = sorted(r["token"] for r in (docs.select(F.explode(
         F.split(F.regexp_replace(F.col(text_col), " ", ""), ""))
         .alias("token"))
@@ -321,74 +323,3 @@ def vocab_from_merges(spark, docs: DataFrame,
             rows.append((tok, nxt))
             nxt += 1
     return spark.createDataFrame(rows, "token string, token_id int")
-
-
-def encode_ids(docs: DataFrame, merges: list[tuple[str, str, int]],
-               vocab: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", unk_id: int = -1) -> DataFrame:
-    """(id, token_ids, n_ids): the full ENCODE path — text → merged
-    subword segments (`apply_merges`) → vocabulary ids. The last mile
-    of the tokenizer story; compose with `operators.packing` (weight =
-    n_ids) for a fully pretokenized, packed corpus.
-
-    The vocab rides as a ONE-ROW broadcast map column (the
-    centroid-array idiom — tokenizer vocabularies are bounded at
-    ~10⁴-10⁵ entries at any corpus size), so the lookup is a row-local
-    `element_at` inside `transform`: no explode, no shuffle, plan size
-    O(1) in vocabulary size. Out-of-vocabulary segments (impossible
-    when the vocab was built from the training corpus; possible on
-    held-out text with unseen characters) map to `unk_id` — the
-    byte-fallback upgrade documents itself here."""
-    # min-id per token: a caller-supplied vocab with duplicate surface
-    # tokens must not kill the job with DUPLICATED_MAP_KEY — lowest id
-    # wins, matching vocab_from_merges' first-occurrence rule (the
-    # group-by is vocab-bounded, never corpus-bounded)
-    vmap = (vocab.groupBy("token")
-            .agg(F.min("token_id").alias("token_id"))
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token", "token_id")))
-                .alias("_vmap")))
-    segs = apply_merges(text_col, merges)
-    ids = F.transform(
-        segs,
-        lambda s: F.coalesce(F.element_at(F.col("_vmap"), s),
-                             F.lit(unk_id)))
-    return (docs.crossJoin(bounded_broadcast(
-            vmap, bound="one-row BPE vocab map (vocab-bounded)",
-            max_rows=1))
-            .select(F.col(id_col), ids.alias("token_ids"))
-            .withColumn("n_ids", F.size("token_ids")))
-
-
-def decode_ids(encoded: DataFrame, vocab: DataFrame,
-               id_col: str = "doc_id",
-               ids_col: str = "token_ids",
-               unk_token: str = "�") -> DataFrame:
-    """(id, detok): DECODE — token ids back to surface text, the
-    inverse of `encode_ids` and the last piece of the tokenizer
-    round-trip contract: because BPE segments partition each word's
-    characters and `ws_tokens` drops only spaces, decode(encode(text))
-    == text with spaces removed, an identity a driver can attest
-    WITHOUT replaying the merge loop per document (q58's roundtrip
-    leg does exactly that). Ids unknown to the vocab (possible only
-    on ids not produced by this vocab's encode) render as
-    `unk_token` — fail-visible, never silently dropped.
-
-    Same plan shape as encode: the inverse (id → token) map rides as
-    a ONE-ROW broadcast map column, the lookup is a row-local
-    element_at inside transform — no explode, no shuffle, plan size
-    O(1) in vocabulary size."""
-    imap = (vocab.groupBy("token_id")
-            .agg(F.min("token").alias("token"))
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token_id", "token")))
-                .alias("_imap")))
-    toks = F.transform(
-        F.col(ids_col),
-        lambda i: F.coalesce(F.element_at(F.col("_imap"), i),
-                             F.lit(unk_token)))
-    return (encoded.crossJoin(bounded_broadcast(
-            imap, bound="one-row BPE inverse-vocab map (vocab-bounded)",
-            max_rows=1))
-            .select(F.col(id_col),
-                    F.array_join(toks, "").alias("detok")))

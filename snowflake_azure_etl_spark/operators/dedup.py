@@ -380,7 +380,7 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
     if winners is None:
         winners = line_winners(docs, id_col, text_col, sep, min_chars,
                                _line_key=_line_key)
-    # else: a caller-supplied winner INDEX (the `encode_wordpiece
+    # else: a caller-supplied winner INDEX (the `segment.encode_pieces
     # wseg=` artifact pattern — session-cache `line_winners` once per
     # corpus version and repeat scrubs pay only the join-back; also
     # the streaming rollup's re-scrub path)

@@ -141,7 +141,7 @@ def build_sequences(enc: DataFrame, id_col: str = "doc_id",
                     order_col: Column | None = None) -> DataFrame:
     """(seq_id, token_ids, n_tokens): the materialized training rows —
     the capstone of the tokenize→pack pipeline. Input is the
-    `bpe.encode_ids` shape (one row per document with its id array);
+    `segment.encode_ids` shape (one row per document with its id array);
     output is one row per fixed-length sequence, each carrying exactly
     `ctx` ids (the final sequence may be shorter).
 

@@ -42,25 +42,24 @@ driver-side artifact collected via the bounded Pregel-probe pattern
 and memoized per (session, corpus plan, hyperparameters); per-round
 state in the cluster is vocabulary-sized, never corpus-sized.
 
-r14 additions: the model's SHIPPING SHAPE gates on vocabulary size
-(``UNIGRAM_MAP_LIT_MAX``: plan-literal map below, one-row
-attested-broadcast map relation above — VERDICT r13 #3); CHAR-FALLBACK
-encoding (``fallback=True`` / ``unk_cost_of`` — the --byte_fallback
-analog: out-of-alphabet characters become their own penalty-priced
-pieces, total coverage + exact round-trip, strict mode the pinned
-default); and the streaming maintenance path
-(`streaming.ingest.unigram_counts_ingest_sink` → `rollup_word_freqs`
-→ `train_unigram_from_words` == batch retrain exactly).
+r14 additions: CHAR-FALLBACK encoding (``fallback=True`` /
+``unk_cost_of`` — the --byte_fallback analog: out-of-alphabet
+characters become their own penalty-priced pieces, total coverage +
+exact round-trip, strict mode the pinned default) and the streaming
+maintenance path (`streaming.ingest.unigram_counts_ingest_sink` →
+`rollup_word_freqs` → `train_unigram_from_words` == batch retrain
+exactly).
 
 Scale (100 TB): the one corpus-sized pass is `bpe.word_freqs`' word
 count (map-side combined, word-keyed shuffle). Training folds run
 over the distinct-word relation (Heaps' law: ~10^8 rows at 100 TB —
-parallel, checkpointed once). Encoding (`encode_unigram`) segments
-the DISTINCT words once and joins the (word, pieces) relation back by
-word — UNhinted, so AQE broadcasts a small vocab and shuffle-joins a
-web-scale one; the per-doc reassembly is a map-side-combining
-aggregate over (doc, position). The row-local `segment_text`
-expression is the join-free alternative for subsamples and streams.
+parallel, checkpointed once). Encoding goes through the shared
+`operators.segment` path with this module's `segmenter`: the model
+ships gated on vocabulary size (plan literal below
+`segment.MAP_LIT_MAX` pieces, one-row broadcast map relation above),
+`segment.encode_pieces` segments the DISTINCT words once and joins
+them back by word, and `segment.segment_text` is the join-free
+row-local form for subsamples and streams.
 
 Reference parity: the reference repo has no tokenizer trainer; this
 extends the LLM-pipeline surface beside `operators/bpe.py`
@@ -69,15 +68,12 @@ extends the LLM-pipeline surface beside `operators/bpe.py`
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
 from .bpe import word_freqs
 from .sampling import PLOG2_SCALE, plog2_int, plog2_sql
-from .text import tokens
+from .segment import Segmenter, shipped
 
 #: Maximum candidate-piece length (characters). DP candidates per
 #: position = this constant, so it is compiled into the Viterbi fold
@@ -90,18 +86,6 @@ UNIGRAM_SEED_MULTI = 32
 
 #: Hard-EM rounds.
 UNIGRAM_ROUNDS = 2
-
-#: Above this piece count the cost model ships as a ONE-ROW broadcast
-#: map RELATION instead of a plan-literal `create_map` (VERDICT r13
-#: #3): at the catalog defaults (|alphabet| + 32 pieces) the literal
-#: is the right call — the BPE merge-list economics, no join, fastest
-#: plan — but a `vocab_target`-scale vocabulary (real SentencePiece:
-#: 32k–1M pieces) would compile 10⁵–10⁶ literals into EVERY
-#: expression that touches the model: plan-size bloat, codegen
-#: fallback, and a plan string no tool can print. Above the gate the
-#: model rides the `text.token_freq_map` pattern — one bounded
-#: broadcast, pieces live in DATA, the expression is unchanged.
-UNIGRAM_MAP_LIT_MAX = 1000
 
 #: Fallback cost for an out-of-alphabet SINGLE CHARACTER when
 #: char-fallback encoding is on (SentencePiece's --byte_fallback
@@ -164,45 +148,6 @@ def piece_costs(counts: dict[str, int], keys: list[str],
     base = plog2_int(t + v, scale)
     return {p: base - plog2_int(counts.get(p, 0) + 1, scale)
             for p in keys}
-
-
-def _costs_map_lit(costs: dict[str, int]) -> Column:
-    """The piece→cost model as a literal map column — the SMALL-vocab
-    shipping shape (<= UNIGRAM_MAP_LIT_MAX entries, gated by every
-    caller: the BPE merge-list economics, compiled once with the
-    plan). Large vocabularies ship as `_costs_map_rel` instead."""
-    entries: list[Column] = []
-    for p in sorted(costs):
-        entries.append(F.lit(p))
-        entries.append(F.lit(int(costs[p])).cast("long"))
-    return F.create_map(*entries)
-
-
-def _costs_map_rel(spark, costs: dict[str, int]) -> DataFrame:
-    """ONE-ROW (_ucm: map<string,bigint>) relation carrying the
-    piece→cost model — the LARGE-vocab shipping shape (VERDICT r13
-    #3, the `text.token_freq_map` pattern): pieces live in data, the
-    plan stays constant-size, and the single row broadcasts under the
-    standard attestation. The model is already a bounded driver
-    artifact (train collects it), so materializing it as a relation
-    adds no new driver state."""
-    rel = spark.createDataFrame(
-        [(p, int(c)) for p, c in sorted(costs.items())],
-        "piece string, cost long")
-    return rel.agg(
-        F.map_from_entries(F.collect_list(F.struct("piece", "cost")))
-        .alias("_ucm"))
-
-
-def _broadcast_costs_rel(spark, costs: dict[str, int]) -> DataFrame:
-    return bounded_broadcast(
-        _costs_map_rel(spark, costs),
-        bound="one-row unigram cost map (piece-vocab-bounded)",
-        max_rows=1)
-
-
-def _lit_max(map_lit_max: int | None) -> int:
-    return UNIGRAM_MAP_LIT_MAX if map_lit_max is None else map_lit_max
 
 
 def viterbi_expr(word: Column, costs_map: Column,
@@ -269,53 +214,45 @@ def viterbi_expr(word: Column, costs_map: Column,
 
 def viterbi_words(words: DataFrame, costs: dict[str, int],
                   k: int = UNIGRAM_MAX_PIECE_LEN,
-                  unk_cost: int | None = None,
-                  map_lit_max: int | None = None) -> DataFrame:
+                  unk_cost: int | None = None) -> DataFrame:
     """words + (cost, segs): Viterbi segmentation of the distinct-word
-    relation under a trained/interim cost model. The model ships as a
-    plan literal up to `map_lit_max` (default UNIGRAM_MAP_LIT_MAX)
-    pieces and as a one-row attested-broadcast map relation above it
-    (VERDICT r13 #3) — identical results, pinned in tests."""
-    return _viterbi_words(words, costs, k, unk_cost, map_lit_max,
-                          memo=True)
+    relation under a trained/interim cost model, the model shipped by
+    the `segment.shipped` gate (identical results either shape, pinned
+    in tests)."""
+    return _viterbi_words(words, costs, k, unk_cost, memo=True)
 
 
 def _viterbi_words(words: DataFrame, costs: dict[str, int], k: int,
-                   unk_cost: int | None, map_lit_max: int | None,
-                   memo: bool) -> DataFrame:
+                   unk_cost: int | None, memo: bool) -> DataFrame:
     """`viterbi_words`; `memo=False` skips the literal-map expression
     memo — for the EM loop, whose costs change every round, so each
     round's entry would never be reused and the memo would only grow
     (ADVICE r17)."""
-    from ._cache import cached_column
-    if len(costs) <= _lit_max(map_lit_max):
-        def build() -> Column:
-            return viterbi_expr(F.col("word"), _costs_map_lit(costs), k,
-                                unk_cost)
-        # the fold tree costs ~100s of py4j round-trips to construct
-        # (r17 profile: ~0.4-1.8 s/call under load) and is rebuilt for
-        # every consumer of the SAME model (wseg lookup + encode legs,
-        # and every bench attempt's cold rebuild) — a Column is pure
-        # unresolved code, so it memoizes per (costs, k, unk) like the
-        # ADC/fold trees (_cache.cached_column), under a digest of the
-        # costs so a large model does not become a large memo key
-        digest = hashlib.md5(
-            repr(sorted(costs.items())).encode()).hexdigest()
-        best = (cached_column(("viterbi_words_best", digest, k, unk_cost),
-                              build) if memo else build())
-        src = words
-    else:
-        src = words.crossJoin(
-            _broadcast_costs_rel(words.sparkSession, costs))
-        # map rides as the _ucm column ⇒ the expression is
-        # costs-independent
-        best = cached_column(
-            ("viterbi_words_best_rel", k, unk_cost),
-            lambda: viterbi_expr(F.col("word"), F.col("_ucm"), k,
-                                 unk_cost))
+    src, best = shipped(
+        words, tuple(sorted(costs.items())),
+        ("viterbi_words", k, unk_cost),
+        lambda m: viterbi_expr(F.col("word"), m, k, unk_cost),
+        memo_literal=memo)
     return (src.withColumn("_b", best)
             .select(*words.columns, F.col("_b.c").alias("cost"),
                     F.col("_b.s").alias("segs")))
+
+
+def segmenter(costs: dict[str, int], k: int = UNIGRAM_MAX_PIECE_LEN,
+              fallback: bool = False) -> Segmenter:
+    """The cost model as a `segment.Segmenter` — the handle every
+    shared encode (`segment.segment_text`, `segment_docs`,
+    `word_segmentations`, `encode_pieces`) takes. A document with an
+    out-of-alphabet character is NULL (fail-visible, strict mode);
+    ``fallback=True`` turns on CHAR-FALLBACK (`unk_cost_of` — the
+    --byte_fallback analog): such a character becomes its own piece at
+    the penalty cost, so every document encodes and decode still
+    round-trips. A word-grain artifact must be built with the same
+    ``fallback`` as the encode that consumes it."""
+    unk = unk_cost_of(costs) if fallback else None
+    return Segmenter(tuple(sorted(costs.items())),
+                     lambda w, m: viterbi_expr(w, m, k, unk)["s"],
+                     ("unigram", k, unk))
 
 
 class UnigramModel:
@@ -334,6 +271,9 @@ class UnigramModel:
     @property
     def costs(self) -> dict[str, int]:
         return {p: c for p, _, c in self.pieces}
+
+    def segmenter(self, fallback: bool = False) -> Segmenter:
+        return segmenter(self.costs, self.k, fallback)
 
 
 #: Vocabulary shrink factor per pruning round (SentencePiece's
@@ -483,7 +423,7 @@ def _train_from_words(words: DataFrame, rounds: int, k: int,
         # (unsegmentable) word contributes to neither — exactly the
         # old sum-over-NULL semantics; posexplode of its NULL segs
         # emits nothing, matching explode.
-        agg = (_viterbi_words(words, costs, k, None, None, memo=False)
+        agg = (_viterbi_words(words, costs, k, None, memo=False)
                .select("freq", "cost",
                        F.posexplode("segs").alias("pos", "piece"))
                .groupBy("piece")
@@ -503,160 +443,19 @@ def _train_from_words(words: DataFrame, rounds: int, k: int,
     return UnigramModel(pieces, traj, k, seed_multi)
 
 
-def _segment_expr(c: Column, cmap: Column, k: int,
-                  unk_cost: int | None = None,
-                  map_key: tuple | None = None,
-                  col_key: str | None = None) -> Column:
-    """The core per-document segmentation expression over ANY map
-    column (plan literal or a `_costs_map_rel` column — the shipping
-    shape is the caller's gate). NULL if any word is unsegmentable
-    (strict mode) — with `unk_cost` set, coverage is total and NULL
-    only survives for NULL text.
-
-    `map_key` + `col_key` (when both given) memoize the built
-    expression per JVM (_cache.cached_column — the viterbi_words
-    rule): the per-word fold inside the transform costs ~100s of py4j
-    round-trips, and per-batch consumers (the streaming unigram sink)
-    rebuilt it every epoch."""
-    def build() -> Column:
-        words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-        per_word = F.transform(
-            words, lambda w: viterbi_expr(w, cmap, k, unk_cost)["s"])
-        return F.when(F.exists(per_word, lambda s: s.isNull()),
-                      F.lit(None).cast("array<string>")
-                      ).otherwise(F.flatten(per_word))
-    if map_key is None or col_key is None:
-        return build()
-    from ._cache import cached_column
-    return cached_column(("ug_segment_expr", map_key, col_key, k,
-                          unk_cost), build)
-
-
-def segment_text(text_col: Column | str, model: UnigramModel,
-                 fallback: bool = False) -> Column:
-    """array<string>: the trained tokenizer's row-local ENCODE
-    expression — each whitespace word Viterbi-segmented under the
-    model (join-free: right for subsamples, streams, and the
-    stream==batch contract). NULL if ANY word is unsegmentable
-    (out-of-alphabet character) — fail-visible, the encode_ids
-    unk-id contract's stricter sibling. ``fallback=True`` turns on
-    CHAR-FALLBACK (`unk_cost_of` — the --byte_fallback analog): an
-    out-of-alphabet character becomes its own piece at the penalty
-    cost, so every document encodes and decode still round-trips."""
-    return segment_text_with(text_col, model.costs, model.k,
-                             fallback=fallback)
-
-
-def segment_text_with(text_col: Column | str, costs: dict[str, int],
-                      k: int = UNIGRAM_MAX_PIECE_LEN,
-                      fallback: bool = False,
-                      map_lit_max: int | None = None) -> Column:
-    """`segment_text` from a bare piece→cost dict — the form the
-    streaming sink uses after reading the PERSISTED piece table
-    (`streaming.ingest.unigram_ingest_sink`). A bare COLUMN can only
-    ship the model as a plan literal, so vocabularies above the
-    `UNIGRAM_MAP_LIT_MAX` gate fail loud here (a 10⁵-literal
-    expression is the plan-bloat defect the gate exists to prevent) —
-    use the DataFrame-level `segment_docs`, which ships the model as
-    a one-row broadcast relation instead."""
-    if len(costs) > _lit_max(map_lit_max):
-        raise ValueError(
-            f"segment_text_with: {len(costs)} pieces exceed the "
-            f"plan-literal gate ({_lit_max(map_lit_max)}) — a Column "
-            "cannot ship a large model; use segment_docs (one-row "
-            "broadcast map relation) instead")
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    unk = unk_cost_of(costs) if fallback else None
-    return _segment_expr(
-        c, _costs_map_lit(costs), k, unk,
-        map_key=("lit", tuple(sorted(costs.items()))),
-        col_key=text_col if isinstance(text_col, str) else None)
-
-
-def segment_docs(docs: DataFrame, costs: dict[str, int],
-                 text_col: str = "text",
-                 k: int = UNIGRAM_MAX_PIECE_LEN,
-                 out_col: str = "pieces",
-                 fallback: bool = False,
-                 map_lit_max: int | None = None) -> DataFrame:
-    """docs + `out_col`: the DataFrame-level row-local encode — the
-    same expression as `segment_text_with`, with the model's shipping
-    shape GATED on vocabulary size (VERDICT r13 #3): a plan-literal
-    map up to `UNIGRAM_MAP_LIT_MAX` pieces (fastest — no join), a
-    one-row attested-broadcast map relation above it (constant plan
-    size at 32k–1M-piece vocabularies). Both shapes are row-local
-    after the broadcast; results are pinned identical in tests."""
-    c = F.col(text_col)
-    unk = unk_cost_of(costs) if fallback else None
-    if len(costs) <= _lit_max(map_lit_max):
-        return docs.withColumn(
-            out_col, _segment_expr(
-                c, _costs_map_lit(costs), k, unk,
-                map_key=("lit", tuple(sorted(costs.items()))),
-                col_key=text_col))
-    return (docs.crossJoin(_broadcast_costs_rel(docs.sparkSession, costs))
-            .withColumn(out_col, _segment_expr(c, F.col("_ucm"), k, unk,
-                                               map_key=("rel",),
-                                               col_key=text_col))
-            .drop("_ucm"))
-
-
 def unigram_vocab(spark, model: UnigramModel) -> DataFrame:
     """(token, token_id): the deterministic id space the trained
     unigram tokenizer ships — pieces ordered by (cost asc, piece asc),
     ids 0.. (most-probable-first, the SentencePiece convention).
     Rebuilding from the same model yields byte-identical ids (the
-    `bpe.vocab_from_merges` reproducibility contract)."""
+    `bpe.vocab_from_merges` reproducibility contract). Every model
+    piece has an id, so `segment.encode_ids` only emits `unk_id` under
+    a restricted vocabulary or for char-fallback pieces (SentencePiece's
+    unk contract)."""
     ordered = sorted(model.pieces, key=lambda r: (r[2], r[0]))
     return spark.createDataFrame(
         [(p, i) for i, (p, _, _) in enumerate(ordered)],
         "token string, token_id int")
-
-
-def encode_ids(docs: DataFrame, model: UnigramModel,
-               vocab: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text", unk_id: int = -1,
-               fallback: bool = False,
-               map_lit_max: int | None = None) -> DataFrame:
-    """(id, token_ids, n_ids): text → Viterbi pieces → vocabulary ids
-    — the unigram twin of `bpe.encode_ids`, same one-row broadcast
-    vocab-map plan shape (row-local element_at inside transform; no
-    explode, no shuffle). Every model piece is in `unigram_vocab`, so
-    `unk_id` only surfaces under a caller-supplied restricted vocab;
-    an UNSEGMENTABLE document keeps NULL ids (segment_text's
-    fail-visible contract — distinct from unk). Decode with
-    `bpe.decode_ids` — it is tokenizer-agnostic, and because unigram
-    pieces partition each word's characters, decode(encode(text)) ==
-    text with spaces removed, the same round-trip attestation BPE
-    carries. ``fallback=True`` (char-fallback, `unk_cost_of`) makes
-    segmentation total; fallback pieces are not in the vocab, so they
-    surface as `unk_id` — SentencePiece's unk contract exactly. The
-    cost model ships gated on vocabulary size (the segment_docs
-    rule); the vocab map is one row either way."""
-    vmap = (vocab.groupBy("token")
-            .agg(F.min("token_id").alias("token_id"))
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token", "token_id")))
-                .alias("_vmap")))
-    base = docs.crossJoin(bounded_broadcast(
-        vmap, bound="one-row unigram vocab map (piece-bounded)",
-        max_rows=1))
-    unk = unk_cost_of(model.costs) if fallback else None
-    if len(model.costs) <= _lit_max(map_lit_max):
-        segs = _segment_expr(F.col(text_col),
-                             _costs_map_lit(model.costs), model.k, unk)
-    else:
-        base = base.crossJoin(
-            _broadcast_costs_rel(docs.sparkSession, model.costs))
-        segs = _segment_expr(F.col(text_col), F.col("_ucm"),
-                             model.k, unk)
-    ids = F.transform(
-        segs,
-        lambda s: F.coalesce(F.element_at(F.col("_vmap"), s),
-                             F.lit(unk_id)))
-    return (base
-            .select(F.col(id_col), ids.alias("token_ids"))
-            .withColumn("n_ids", F.size("token_ids")))
 
 
 def pieces_table_df(spark, model: UnigramModel) -> DataFrame:
@@ -665,92 +464,6 @@ def pieces_table_df(spark, model: UnigramModel) -> DataFrame:
     `bpe.merges_table` shape)."""
     return spark.createDataFrame(
         model.pieces, "piece string, cnt long, cost long")
-
-
-def word_segmentations(docs: DataFrame, model: UnigramModel,
-                       text_col: str = "text",
-                       fallback: bool = False) -> DataFrame:
-    """(word, segs): the final-model Viterbi segmentation of the
-    corpus's DISTINCT words — the derived encode ARTIFACT a pipeline
-    lands beside the model (a lookup table, like the tf-icf top-term
-    relation); session-cache it (`cached_relation`) so repeat encodes
-    reuse it instead of re-running the fold per invocation.
-    ``fallback`` must match the consuming encode's setting — a strict
-    artifact carries NULL segs for out-of-alphabet words, a fallback
-    artifact is total."""
-    c = F.col(text_col)
-    words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-    distinct = (docs.select(F.explode(words).alias("word")).distinct()
-                .withColumn("freq", F.lit(1)))
-    unk = unk_cost_of(model.costs) if fallback else None
-    return viterbi_words(distinct, model.costs, model.k,
-                         unk_cost=unk).select("word", "segs")
-
-
-def encode_unigram(docs: DataFrame, model: UnigramModel,
-                   id_col: str = "doc_id",
-                   text_col: str = "text",
-                   wseg: DataFrame | None = None,
-                   fallback: bool = False) -> DataFrame:
-    """(id, pieces, n_pieces): the scale ENCODE path — segment the
-    DISTINCT words once (`viterbi_words`), join back by word
-    (UNhinted: AQE broadcasts a small vocab, shuffle-joins a
-    web-scale one — a forced hint here would be the r11 q50 defect),
-    and reassemble per document in (doc, position) order via a
-    map-side-combining aggregate. Documents with no words keep an
-    empty pieces array (the left join + coalesce). Pass `wseg` (a
-    `word_segmentations` relation, typically session-cached) to skip
-    rebuilding the per-word artifact; it must COVER the docs' words —
-    an uncovered word surfaces exactly like an unsegmentable one
-    (NULL pieces, fail-visible) — and must have been built with the
-    SAME `fallback` setting (a strict artifact under a fallback
-    encode would NULL exactly the docs fallback exists to save)."""
-    c = F.col(text_col)
-    words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-    pos = (docs.select(F.col(id_col),
-                       F.posexplode(words).alias("_i", "word")))
-    if wseg is None:
-        unk = unk_cost_of(model.costs) if fallback else None
-        wseg = viterbi_words(
-            pos.select("word").distinct().withColumn("freq", F.lit(1)),
-            model.costs, model.k, unk_cost=unk).select("word", "segs")
-    # a NULL segs array must never reach flatten: flattening a null
-    # inner array inside an aggregate's (collapsed) result projection
-    # NPEs in Spark 4.1's generated code (verified minimal repro), so
-    # nullness is aggregated as its own flag and the collected arrays
-    # are coalesced non-null
-    per_doc = (pos.join(wseg, "word", "left")
-               .groupBy(id_col)
-               .agg(F.collect_list(F.struct(
-                       F.col("_i").alias("i"),
-                       F.coalesce(F.col("segs"),
-                                  F.array().cast("array<string>"))
-                       .alias("s"))).alias("_lst"),
-                    F.max(F.col("segs").isNull()).alias("_bad"),
-                    F.count("*").alias("_nw"))
-               .select(id_col, "_nw",
-                       F.when(F.col("_bad"),
-                              F.lit(None).cast("array<string>"))
-                       .otherwise(F.flatten(F.transform(
-                           F.array_sort("_lst"), lambda x: x["s"])))
-                       .alias("pieces")))
-    # _nw distinguishes no-words docs (empty pieces) from docs with an
-    # UNSEGMENTABLE word under a foreign model (flatten propagates the
-    # NULL segs — pieces stays NULL, fail-visible, never an empty
-    # array); a NULL text is NULL pieces too, matching segment_text's
-    # null propagation (r13 review: posexplode silently dropped such
-    # docs into the no-words bucket, so the two encode paths the
-    # module pins as equivalent disagreed on NULL-text rows)
-    base = docs.select(F.col(id_col),
-                       F.col(text_col).isNull().alias("_tnull"))
-    return (base.join(per_doc, id_col, "left")
-            .select(id_col,
-                    F.when(F.col("_tnull"),
-                           F.lit(None).cast("array<string>"))
-                    .when(F.col("_nw").isNull(),
-                          F.array().cast("array<string>"))
-                    .otherwise(F.col("pieces")).alias("pieces"))
-            .withColumn("n_pieces", F.size("pieces")))
 
 
 # --------------------------------------------------------------------------

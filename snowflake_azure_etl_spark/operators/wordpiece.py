@@ -37,13 +37,14 @@ against a given vocab is the deployed component).
 
 Scale: the encode is ONE row-local `F.aggregate` fold per word (k
 membership probes per consumed position, all JVM-side, no UDF, no
-shuffle); the piece set ships gated on vocabulary size exactly like
-the unigram cost model (plan-literal map under
-`unigram.UNIGRAM_MAP_LIT_MAX`, one-row attested-broadcast map
-relation above — VERDICT r13 #3's rule applied family-wide). The
-DuckDB mirror (`greedy_oracle_ctes`) unrolls the greedy walk as
-per-position CTEs, the `_viterbi_cte` discipline (no recursive CTEs —
-see operators.unigram for why), failing loud past the unroll.
+shuffle). `segmenter` hands it to the shared `operators.segment`
+path, which ships the piece set gated on vocabulary size like every
+family's model (plan-literal map up to `segment.MAP_LIT_MAX` items,
+one-row attested-broadcast map relation above) and owns the
+row-local, word-grain and id encodes. The DuckDB mirror
+(`greedy_cte`) unrolls the greedy walk as per-position CTEs,
+the `_viterbi_cte` discipline (no recursive CTEs — see
+operators.unigram for why), failing loud past the unroll.
 
 Reference parity: the reference repo has no tokenizer; this extends
 the LLM-pipeline surface (SURVEY §2 north-star extensions).
@@ -54,9 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast
-from .text import tokens
-from .unigram import UNIGRAM_MAX_PIECE_LEN, _lit_max
+from .segment import Segmenter
+from .unigram import UNIGRAM_MAX_PIECE_LEN
 
 #: WordPiece's whole-word unknown piece (the BERT surface form).
 WP_UNK = "[UNK]"
@@ -97,33 +97,6 @@ def _flag_items(pieces: "list[str] | set[str]",
     for p in cont:
         flags[p] = flags.get(p, 0) | WP_CONTINUATION
     return sorted(flags.items())
-
-
-def _pieces_map_lit(pieces: "list[str] | set[str]",
-                    cont_pieces: "list[str] | set[str] | None" = None
-                    ) -> Column:
-    """Membership map (piece → positional flags) as a plan literal —
-    the small-vocab shipping shape (same economics as unigram's
-    cost-map literal)."""
-    entries: list[Column] = []
-    for p, fl in _flag_items(pieces, cont_pieces):
-        entries.append(F.lit(p))
-        entries.append(F.lit(fl).cast("int"))
-    return F.create_map(*entries)
-
-
-def _pieces_map_rel(spark, pieces: "list[str] | set[str]",
-                    cont_pieces: "list[str] | set[str] | None" = None
-                    ) -> DataFrame:
-    """ONE-ROW (_wpm: map<string,int> piece → positional flags)
-    membership relation — the large-vocab shipping shape (the unigram
-    `_costs_map_rel` twin)."""
-    rel = spark.createDataFrame(_flag_items(pieces, cont_pieces),
-                                "piece string, fl int")
-    return rel.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("piece", "fl")))
-        .alias("_wpm"))
 
 
 def greedy_expr(word: Column, pieces_map: Column,
@@ -179,181 +152,19 @@ def greedy_expr(word: Column, pieces_map: Column,
             .otherwise(final["s"])
 
 
-def segment_text_wp(text_col: Column | str,
-                    pieces: "list[str] | set[str]",
-                    k: int = UNIGRAM_MAX_PIECE_LEN,
-                    map_lit_max: int | None = None,
-                    cont_pieces: "list[str] | set[str] | None" = None
-                    ) -> Column:
-    """array<string>: greedy WordPiece encode of a whole document —
-    each whitespace word independently (unmatchable words surface as
-    ``[UNK]``, so coverage is total by construction; NULL text stays
-    NULL). A bare Column ships the piece set as a plan literal only,
-    so vocabularies above the gate fail loud here — use
-    `segment_docs_wp` (one-row broadcast map relation) instead.
+def segmenter(pieces: "list[str] | set[str]",
+              k: int = UNIGRAM_MAX_PIECE_LEN,
+              cont_pieces: "list[str] | set[str] | None" = None
+              ) -> Segmenter:
+    """The piece set as a `segment.Segmenter` — the handle every shared
+    encode takes. Unmatchable words surface as ``[UNK]``, so coverage
+    is total by construction: the word-grain artifact never carries
+    NULL segs and a document is NULL only for NULL text.
     `cont_pieces` switches to two-set positional membership (released
     BERT vocab shape — see the module docstring)."""
-    items = _flag_items(pieces, cont_pieces)
-    if len(items) > _lit_max(map_lit_max):
-        raise ValueError(
-            f"segment_text_wp: {len(items)} pieces exceed the "
-            f"plan-literal gate ({_lit_max(map_lit_max)}) — use "
-            "segment_docs_wp (one-row broadcast map relation)")
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return _segment_expr_wp(
-        c, _pieces_map_lit(pieces, cont_pieces), k,
-        map_key=("lit", tuple(items)),
-        col_key=text_col if isinstance(text_col, str) else None)
-
-
-def _segment_expr_wp(c: Column, pmap: Column, k: int,
-                     map_key: tuple | None = None,
-                     col_key: str | None = None) -> Column:
-    """`map_key` + `col_key` (when both given) memoize the built
-    expression per JVM (_cache.cached_column): the greedy fold costs
-    ~100s of py4j round-trips to construct, and per-batch consumers
-    (the streaming wordpiece sink) rebuilt it every epoch. The key
-    must fully determine (map literal | map column, k, input col)."""
-    def build() -> Column:
-        words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-        return F.flatten(F.transform(words,
-                                     lambda w: greedy_expr(w, pmap, k)))
-    if map_key is None or col_key is None:
-        return build()
-    from ._cache import cached_column
-    return cached_column(("wp_segment_expr", map_key, col_key, k), build)
-
-
-def segment_docs_wp(docs: DataFrame, pieces: "list[str] | set[str]",
-                    text_col: str = "text",
-                    k: int = UNIGRAM_MAX_PIECE_LEN,
-                    out_col: str = "pieces",
-                    map_lit_max: int | None = None,
-                    cont_pieces: "list[str] | set[str] | None" = None
-                    ) -> DataFrame:
-    """docs + `out_col`: the DataFrame-level greedy encode with the
-    piece set's shipping shape GATED on vocabulary size (the unigram
-    `segment_docs` rule: plan literal under the gate, one-row
-    attested-broadcast map relation above — identical results).
-    `cont_pieces` switches to two-set positional membership."""
-    items = _flag_items(pieces, cont_pieces)
-    c = F.col(text_col)
-    if len(items) <= _lit_max(map_lit_max):
-        return docs.withColumn(
-            out_col,
-            _segment_expr_wp(c, _pieces_map_lit(pieces, cont_pieces), k,
-                             map_key=("lit", tuple(items)),
-                             col_key=text_col))
-    rel = bounded_broadcast(
-        _pieces_map_rel(docs.sparkSession, pieces, cont_pieces),
-        bound="one-row wordpiece membership map (piece-vocab-bounded)",
-        max_rows=1)
-    return (docs.crossJoin(rel)
-            .withColumn(out_col,
-                        _segment_expr_wp(c, F.col("_wpm"), k,
-                                         map_key=("rel",),
-                                         col_key=text_col))
-            .drop("_wpm"))
-
-
-def word_segmentations_wp(docs: DataFrame,
-                          pieces: "list[str] | set[str]",
-                          k: int = UNIGRAM_MAX_PIECE_LEN,
-                          text_col: str = "text",
-                          map_lit_max: int | None = None,
-                          cont_pieces: "list[str] | set[str] | None"
-                          = None) -> DataFrame:
-    """(word, segs): greedy segmentation of the corpus's DISTINCT
-    words — the derived encode ARTIFACT (a lookup table beside the
-    vocabulary, the `unigram.word_segmentations` twin); session-cache
-    it so repeat encodes pay a word join instead of re-running the
-    fold per invocation. Total by construction ([UNK] words included),
-    so consumers never see NULL segs."""
-    from ._cache import cached_column
-    items = _flag_items(pieces, cont_pieces)
-    c = F.col(text_col)
-    words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-    distinct = docs.select(F.explode(words).alias("word")).distinct()
-    # greedy fold memoized per JVM (the viterbi_words rule): identical
-    # for every consumer of the same piece set
-    if len(items) <= _lit_max(map_lit_max):
-        seg = cached_column(
-            ("wp_greedy_word", tuple(items), k),
-            lambda: greedy_expr(F.col("word"),
-                                _pieces_map_lit(pieces, cont_pieces), k))
-        src = distinct
-    else:
-        src = distinct.crossJoin(
-            bounded_broadcast(
-                _pieces_map_rel(docs.sparkSession, pieces, cont_pieces),
-                bound="one-row wordpiece membership map "
-                      "(piece-vocab-bounded)",
-                max_rows=1))
-        seg = cached_column(
-            ("wp_greedy_word_rel", k),
-            lambda: greedy_expr(F.col("word"), F.col("_wpm"), k))
-    return src.select("word", seg.alias("segs"))
-
-
-def encode_wordpiece(docs: DataFrame,
-                     pieces: "list[str] | set[str]",
-                     id_col: str = "doc_id",
-                     text_col: str = "text",
-                     k: int = UNIGRAM_MAX_PIECE_LEN,
-                     wseg: DataFrame | None = None,
-                     cont_pieces: "list[str] | set[str] | None" = None
-                     ) -> DataFrame:
-    """(id, pieces, n_pieces): the scale ENCODE path — greedy-segment
-    the DISTINCT words once, join back by word (UNhinted: AQE
-    broadcasts a small word set, shuffle-joins a web-scale one) and
-    reassemble per document in (doc, position) order — the
-    `unigram.encode_unigram` shape (greedy is total, so the trained
-    artifact never carries NULL segs — but a caller-supplied `wseg`
-    that does not COVER the docs' words surfaces each uncovered word
-    exactly like unigram's unsegmentable one: the whole document's
-    pieces go NULL, fail-visible, never a silently shorter
-    segmentation). NULL text keeps NULL pieces; no-words documents
-    keep []."""
-    c = F.col(text_col)
-    words = F.filter(tokens(c), lambda t: F.length(t) > 0)
-    pos = docs.select(F.col(id_col),
-                      F.posexplode(words).alias("_i", "word"))
-    if wseg is None:
-        wseg = word_segmentations_wp(docs, pieces, k, text_col,
-                                     cont_pieces=cont_pieces)
-    # LEFT join + the nullness-as-flag aggregation (the encode_unigram
-    # pattern): a NULL segs array must never reach flatten — flattening
-    # a null inner array inside an aggregate's result projection NPEs
-    # in Spark 4.1's generated code — so coverage failure is carried
-    # as its own boolean and the collected arrays stay non-null
-    per_doc = (pos.join(wseg, "word", "left")
-               .groupBy(id_col)
-               .agg(F.collect_list(F.struct(
-                        F.col("_i").alias("i"),
-                        F.coalesce(F.col("segs"),
-                                   F.array().cast("array<string>"))
-                        .alias("s"))).alias("_lst"),
-                    F.max(F.col("segs").isNull()).alias("_bad"),
-                    F.count("*").alias("_nw"))
-               .select(id_col, "_nw",
-                       F.when(F.col("_bad"),
-                              F.lit(None).cast("array<string>"))
-                       .otherwise(F.flatten(F.transform(
-                           F.array_sort("_lst"), lambda x: x["s"])))
-                       .alias("pieces")))
-    # _nw distinguishes no-words docs (empty pieces) from docs with an
-    # UNCOVERED word under a caller-supplied wseg (NULL pieces,
-    # fail-visible — a plain coalesce would erase the NULL back to [])
-    base = docs.select(F.col(id_col),
-                       c.isNull().alias("_tnull"))
-    return (base.join(per_doc, id_col, "left")
-            .select(id_col,
-                    F.when(F.col("_tnull"),
-                           F.lit(None).cast("array<string>"))
-                    .when(F.col("_nw").isNull(),
-                          F.array().cast("array<string>"))
-                    .otherwise(F.col("pieces")).alias("pieces"))
-            .withColumn("n_pieces", F.size("pieces")))
+    return Segmenter(tuple(_flag_items(pieces, cont_pieces)),
+                     lambda w, m: greedy_expr(w, m, k),
+                     ("wordpiece", k))
 
 
 def wordpiece_vocab(spark, pieces: "list[str] | set[str]",
@@ -366,8 +177,11 @@ def wordpiece_vocab(spark, pieces: "list[str] | set[str]",
     byte-identical ids (the `bpe.vocab_from_merges` /
     `unigram.unigram_vocab` reproducibility contract). Every surface
     `greedy_expr` can emit under the SAME (pieces, cont_pieces) is in
-    this vocabulary, so wp encode-to-ids is TOTAL — unk lives in the
-    id space, not as a missing key. With two sets, only word-initial
+    this vocabulary, so `segment.encode_ids` over it is TOTAL — unk
+    lives in the id space, not as a missing key; decode with
+    `segment.decode_ids(..., strip_mark=WP_CONT)`, exact on fully
+    covered text (an ``[UNK]`` word decodes as ``[UNK]``, WordPiece's
+    lossy-unk contract). With two sets, only word-initial
     pieces get bare rows and only continuation pieces get ``##`` rows
     (the released vocab.txt shape); raw ``##``-prefixed pieces are
     rejected loud (`_flag_items`), which keeps token surfaces
@@ -412,63 +226,6 @@ def load_bert_vocab(tokens: "list[str]"
         else:
             init.add(t)
     return init, cont
-
-
-def encode_ids_wp(docs: DataFrame, pieces: "list[str] | set[str]",
-                  vocab: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  k: int = UNIGRAM_MAX_PIECE_LEN,
-                  map_lit_max: int | None = None,
-                  cont_pieces: "list[str] | set[str] | None" = None
-                  ) -> DataFrame:
-    """(id, token_ids, n_ids): greedy WordPiece encode straight to
-    vocabulary ids — the `bpe.encode_ids` / `unigram.encode_ids`
-    family shape (one-row broadcast vocab map, row-local element_at
-    inside transform, no explode, no shuffle). Total by construction:
-    every emitted surface (including ``[UNK]`` and ``##`` forms) is
-    in `wordpiece_vocab`, so there is no unk_id knob — unknownness is
-    already a token. Decode with `decode_ids_wp`; stripping the
-    ``##`` marks makes decode(encode(text)) == text with spaces
-    removed EXCEPT for [UNK] words (WordPiece's lossy-unk contract —
-    the round-trip attestation therefore holds exactly on fully
-    covered text, pinned in tests)."""
-    vmap = (vocab.groupBy("token")
-            .agg(F.min("token_id").alias("token_id"))
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token", "token_id")))
-                .alias("_vmap")))
-    segged = segment_docs_wp(docs, pieces, text_col, k,
-                             out_col="_wps", map_lit_max=map_lit_max,
-                             cont_pieces=cont_pieces)
-    ids = F.transform(
-        F.col("_wps"),
-        lambda s: F.element_at(F.col("_vmap"), s))
-    return (segged.crossJoin(bounded_broadcast(
-            vmap, bound="one-row wordpiece vocab map (piece-bounded)",
-            max_rows=1))
-            .select(F.col(id_col), ids.alias("token_ids"))
-            .withColumn("n_ids", F.size("token_ids")))
-
-
-def decode_ids_wp(encoded: DataFrame, vocab: DataFrame,
-                  id_col: str = "doc_id",
-                  ids_col: str = "token_ids") -> DataFrame:
-    """(id, detok): ids → token surfaces → ``##`` marks stripped →
-    concatenated — the WordPiece decode (same one-row broadcast map
-    economics as the encode; NULL ids stay NULL)."""
-    imap = (vocab.groupBy("token_id")
-            .agg(F.min("token") .alias("token"))
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token_id", "token")))
-                .alias("_imap")))
-    toks = F.transform(
-        F.col(ids_col),
-        lambda i: F.regexp_replace(
-            F.element_at(F.col("_imap"), i), f"^{WP_CONT}", ""))
-    return (encoded.crossJoin(bounded_broadcast(
-            imap, bound="one-row wordpiece id map (piece-bounded)",
-            max_rows=1))
-            .select(F.col(id_col), F.array_join(toks, "").alias("detok")))
 
 
 # --------------------------------------------------------------------------

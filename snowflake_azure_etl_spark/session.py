@@ -5,7 +5,8 @@ The reference opens one Snowflake connection per pipeline step
 the engine. Local-mode defaults follow the bench contract (local[N] with
 N = $SPARK_GRAFT_CPUS, else the core count); at cluster scale the same
 builder is used with a real master URL. Sizes (cores, shuffle partitions,
-driver heap, warehouse dir) come from environment variables; the tuning
+driver heap, warehouse dir) come from environment variables, else from
+the machine (cores, a quarter of physical memory); the tuning
 configs below are literals, and ``get_spark(extra_conf=)`` overrides any
 of them.
 
@@ -31,6 +32,17 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else a quarter of the
+    machine's physical memory, capped at 16g — a 16g default on a 16 GB
+    box let two local sessions side by side exhaust it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 4 >> 20, 16 << 10)}m"
+
+
 def get_spark(app_name: str = "snowflake_azure_etl_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -52,7 +64,7 @@ def get_spark(app_name: str = "snowflake_azure_etl_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         # managed-table home for the warehouse build (kept out of the
         # repo; at cluster scale this is the lake/metastore location)
         .config("spark.sql.warehouse.dir",

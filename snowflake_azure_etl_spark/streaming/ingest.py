@@ -322,7 +322,7 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
     streaming sibling of `operators.unigram`, completing the trained-
     tokenizer family's maintenance set the way `lm3_ingest_sink`
     completes the LM's). Each micro-batch is segmented ROW-LOCALLY
-    (`segment_text_with` — no join, no shuffle: the right shape for a
+    (`segment.segment_docs` — no shuffle: the right shape for a
     stream) against the PERSISTED piece table (`pieces_table_df` of a
     `train_unigram` model — trained once per corpus version, fixed at
     ingest so segmentations never drift with batch composition); rows
@@ -344,11 +344,12 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
     ``drop_unsegmentable=True`` drops them at the door instead, and
     ``fallback=True`` (char-fallback, `unigram.unk_cost_of`) makes
     them segmentable instead — the web-ingest shape, where one emoji
-    must not NULL a whole document. The per-epoch encode routes
-    through `segment_docs`, so the model's shipping shape (plan
-    literal vs one-row broadcast map) gates on vocabulary size — a
-    32k-piece production model streams without plan bloat."""
-    from ..operators.unigram import segment_docs
+    must not NULL a whole document. `segment_docs` gates the model's
+    shipping shape (plan literal vs one-row broadcast map) on
+    vocabulary size — a 32k-piece production model streams without
+    plan bloat."""
+    from ..operators.segment import segment_docs
+    from ..operators.unigram import segmenter
     from .sinks import idempotent_epoch_sink
 
     write_seg = idempotent_epoch_sink(seg_table)
@@ -363,8 +364,8 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
                 f"unigram_ingest_sink: piece table {pieces_table} is "
                 "empty — land a trained model before streaming")
         eff_k = k if k is not None else max(len(p) for p in costs)
-        out = (segment_docs(batch_df, costs, text_col, eff_k,
-                            fallback=fallback)
+        out = (segment_docs(batch_df, segmenter(costs, eff_k, fallback),
+                            text_col)
                .withColumn("n_pieces", F.size("pieces")))
         if drop_unsegmentable:
             out = out.filter(F.col("pieces").isNotNull())
@@ -388,8 +389,8 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
     there is no drop knob — unknown material is visible IN the data.
     `k` defaults to the longest persisted piece (the unigram sink's
     derivation rule, same drift pin); the encode routes through
-    `segment_docs_wp`, so a production-scale vocabulary ships as a
-    one-row broadcast map, never plan literals. A piece table carrying
+    `segment.segment_docs`, so a production-scale vocabulary ships as
+    a one-row broadcast map, never plan literals. A piece table carrying
     a `fl` flags column (the `wordpiece._flag_items` encoding: 1 =
     word-initial, 2 = continuation, 3 = both — e.g. a released BERT
     vocab landed via `load_bert_vocab`) streams with TWO-SET
@@ -397,8 +398,9 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
     position-independent (the trained-family form). Stateless across
     batches with the table fixed — stream == batch over the
     concatenated stream (pinned in tests/test_streaming_ingest.py)."""
+    from ..operators.segment import segment_docs
     from ..operators.wordpiece import (WP_CONTINUATION, WP_INITIAL,
-                                       segment_docs_wp)
+                                       segmenter)
     from .sinks import idempotent_epoch_sink
 
     write_seg = idempotent_epoch_sink(seg_table)
@@ -442,8 +444,8 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
                 f"wordpiece_ingest_sink: piece table {pieces_table} "
                 "is empty — land a vocabulary before streaming")
         eff_k = k if k is not None else max(len(p) for p in all_pieces)
-        out = (segment_docs_wp(batch_df, pieces, text_col, eff_k,
-                               cont_pieces=cont)
+        out = (segment_docs(batch_df, segmenter(pieces, eff_k, cont),
+                            text_col)
                .withColumn("n_pieces", F.size("pieces")))
         write_seg(out, epoch_id)
 

@@ -181,10 +181,11 @@ def validate_warehouse(spark: SparkSession, database: str) -> dict:
             raise EtlStepError(f"contract violated: {name} ({n} violations)")
     results = dict.fromkeys(names, 0)
     for child in dict.fromkeys(c for c, *_ in WAREHOUSE_FK_CONTRACTS):
-        try:
-            child_df = spark.table(f"{database}.{child}")
-        except Exception:
-            continue  # contract tables are optional per-deployment
+        if not spark.catalog.tableExists(f"{database}.{child}"):
+            raise EtlStepError(
+                f"contract table missing: {database}.{child} (its FK "
+                "contracts cannot be checked)")
+        child_df = spark.table(f"{database}.{child}")
         edges = [e[1:] for e in WAREHOUSE_FK_CONTRACTS if e[0] == child]
         orphans = fk_violations(
             child_df, [(col, spark.table(f"{database}.{parent}"), pcol)

@@ -16,6 +16,7 @@ from ..plans.attest import bounded_broadcast, maybe_broadcast
 from ..operators import (classifier, dedup, graph, multimodal,
                          similarity, text)
 from ..operators import lm as lm_ops
+from ..operators import segment as seg_ops
 from ..operators import unigram as ug_ops
 from ..operators import wordpiece as wp_ops
 from ..operators.sampling import DSIR_BUCKETS, plog2_sql
@@ -932,6 +933,76 @@ _PQ_CODE_COLS = ", ".join(
     f"MAX(CASE WHEN sub = {s} THEN cell_id END) AS c{s}"
     for s in range(_PQ_M))
 
+def _recall_legs(exact: DataFrame, approx: DataFrame,
+                 queries: DataFrame, metric: str) -> DataFrame:
+    """The recall@3 legs (r10, X-ANN-RECALL) of an approximate top-3
+    ranking against the exact one over the same query set: 'recall'
+    rows carry each query's hit count (how many of the exact top-3 the
+    approximate ranking recovered) and hits/3, one 'recall_mean' row
+    the corpus total and Σhits/(3·n_q) — the quality metric every
+    vector store reports. Hit counts are exact integers from one small
+    equi-join of the two rankings; the only doubles are one divide
+    each with pinned parenthesization, so both hash-match the oracle
+    (`_recall_sql`). `metric` names the value column of the caller's
+    union."""
+    hits = (exact.select("query_id", "neighbor_id")
+            .join(approx.select("query_id", "neighbor_id"),
+                  ["query_id", "neighbor_id"])
+            .groupBy("query_id").agg(F.count("*").alias("hits")))
+    per_q = (queries.select(F.col("vec_id").alias("query_id"))
+             .join(hits, "query_id", "left")
+             .select("query_id",
+                     F.coalesce(F.col("hits"), F.lit(0).cast("long"))
+                     .alias("hits")))
+    recall = per_q.select(
+        F.lit("recall").alias("leg"), "query_id",
+        F.col("hits").cast("long").alias("neighbor_id"),
+        (F.col("hits").cast("double") / F.lit(3.0)).alias(metric),
+        F.lit(1).cast("int").alias("rn"))
+    recall_mean = (per_q.agg(F.sum("hits").alias("th"),
+                             F.count("*").alias("nq"))
+                   .select(F.lit("recall_mean").alias("leg"),
+                           F.lit(-1).cast("bigint").alias("query_id"),
+                           F.col("th").cast("long").alias("neighbor_id"),
+                           (F.col("th").cast("double")
+                            / (F.lit(3.0) * F.col("nq").cast("double")))
+                           .alias(metric),
+                           F.lit(1).cast("int").alias("rn")))
+    return recall.unionByName(recall_mean)
+
+
+def _recall_sql(exact: str, approx: str, queries: str) -> str:
+    """The oracle rows of `_recall_legs`: `exact` and `approx` name
+    (query_id, neighbor_id, rn) rankings, `queries` a (query_id)
+    relation; queries the approximate ranking missed entirely still
+    appear (LEFT from the query set) with 0 hits."""
+    return f"""
+    SELECT leg, query_id, neighbor_id, metric, rn FROM (
+        WITH rc_hit AS (
+            SELECT e.query_id, COUNT(*) AS hits
+            FROM (SELECT query_id, neighbor_id FROM {exact}
+                  WHERE rn <= 3) e
+            JOIN (SELECT query_id, neighbor_id FROM {approx}
+                  WHERE rn <= 3) a USING (query_id, neighbor_id)
+            GROUP BY 1),
+        rc AS (
+            SELECT q.query_id, COALESCE(r.hits, CAST(0 AS BIGINT)) AS hits
+            FROM (SELECT query_id FROM {queries}) q
+            LEFT JOIN rc_hit r USING (query_id))
+        SELECT 'recall' AS leg, query_id,
+               CAST(hits AS BIGINT) AS neighbor_id,
+               CAST(hits AS DOUBLE) / CAST(3.0 AS DOUBLE) AS metric,
+               CAST(1 AS INT) AS rn
+        FROM rc
+        UNION ALL
+        SELECT 'recall_mean', CAST(-1 AS BIGINT),
+               CAST(SUM(hits) AS BIGINT),
+               CAST(SUM(hits) AS DOUBLE)
+               / (CAST(3.0 AS DOUBLE) * CAST(COUNT(*) AS DOUBLE)),
+               CAST(1 AS INT)
+        FROM rc)"""
+
+
 _COS_ORACLE = f"""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
                FROM embeddings WHERE vec_id % 50 = 0),
@@ -1023,20 +1094,7 @@ _COS_ORACLE = f"""
         SELECT query_id, neighbor_id, fs,
                ROW_NUMBER() OVER (PARTITION BY query_id
                                   ORDER BY fs DESC, neighbor_id) AS rr
-        FROM rrf),
-    -- recall@3 legs (r10): exact-integer hit counts from joining the
-    -- two top-3 rankings; queries the ADC ranking missed entirely
-    -- still appear (LEFT from the query set) with 0 hits
-    rec AS (
-        SELECT e.query_id, COUNT(*) AS hits
-        FROM (SELECT query_id, neighbor_id FROM ranked WHERE rn <= 3) e
-        JOIN (SELECT query_id, neighbor_id FROM pq_ranked
-              WHERE rn <= 3) a
-          USING (query_id, neighbor_id)
-        GROUP BY 1),
-    rec_q AS (
-        SELECT q.query_id, COALESCE(r.hits, CAST(0 AS BIGINT)) AS hits
-        FROM q LEFT JOIN rec r USING (query_id))
+        FROM rrf)
     SELECT 'exact' AS leg, query_id, neighbor_id, cos_sim AS metric,
            CAST(rn AS INT) AS rn
     FROM ranked WHERE rn <= 3
@@ -1050,15 +1108,7 @@ _COS_ORACLE = f"""
     SELECT 'rrf', query_id, neighbor_id, fs, CAST(rr AS INT)
     FROM rrf_rk WHERE rr <= 3
     UNION ALL
-    SELECT 'recall', query_id, CAST(hits AS BIGINT),
-           CAST(hits AS DOUBLE) / CAST(3.0 AS DOUBLE), CAST(1 AS INT)
-    FROM rec_q
-    UNION ALL
-    SELECT 'recall_mean', CAST(-1 AS BIGINT), CAST(SUM(hits) AS BIGINT),
-           CAST(SUM(hits) AS DOUBLE)
-           / (CAST(3.0 AS DOUBLE) * CAST(COUNT(*) AS DOUBLE)),
-           CAST(1 AS INT)
-    FROM rec_q
+    {_recall_sql("ranked", "pq_ranked", "q")}
 """
 
 
@@ -1193,39 +1243,11 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.lit("rrf").alias("leg"), "query_id", "neighbor_id",
                    F.col("fs").alias("metric"),
                    F.col("rr").cast("int").alias("rn")))
-    # recall@3 legs (r10, X-ANN-RECALL — VERDICT r9 #4): the quality
-    # metric every vector store reports — per query, how many of the
-    # exact top-3 the ADC ranking recovered, plus the corpus mean.
-    # Hit counts are exact integers from one small equi-join of the
-    # two (already materialized) rankings; the only doubles are one
-    # divide each (hits/3, Σhits/(3·n_q)) with pinned
-    # parenthesization, so both hash-match the oracle.
-    hits = (exact.select("query_id", "neighbor_id")
-            .join(adc.select("query_id", "neighbor_id"),
-                  ["query_id", "neighbor_id"])
-            .groupBy("query_id").agg(F.count("*").alias("hits")))
-    per_q = (queries.select(F.col("vec_id").alias("query_id"))
-             .join(hits, "query_id", "left")
-             .select("query_id",
-                     F.coalesce(F.col("hits"), F.lit(0).cast("long"))
-                     .alias("hits")))
-    recall = per_q.select(
-        F.lit("recall").alias("leg"), "query_id",
-        F.col("hits").cast("long").alias("neighbor_id"),
-        (F.col("hits").cast("double") / F.lit(3.0)).alias("metric"),
-        F.lit(1).cast("int").alias("rn"))
-    recall_mean = (per_q.agg(F.sum("hits").alias("th"),
-                             F.count("*").alias("nq"))
-                   .select(F.lit("recall_mean").alias("leg"),
-                           F.lit(-1).cast("bigint").alias("query_id"),
-                           F.col("th").cast("long").alias("neighbor_id"),
-                           (F.col("th").cast("double")
-                            / (F.lit(3.0) * F.col("nq").cast("double")))
-                           .alias("metric"),
-                           F.lit(1).cast("int").alias("rn")))
+    # recall@3 legs (r10, X-ANN-RECALL — VERDICT r9 #4): the ADC
+    # ranking's recall of the exact (already materialized) top-3
     return (exact.unionByName(adc).unionByName(pooled)
-            .unionByName(rrf).unionByName(recall)
-            .unionByName(recall_mean))
+            .unionByName(rrf)
+            .unionByName(_recall_legs(exact, adc, queries, "metric")))
 
 
 _BUCKET_SQL = "(" + " || ".join(
@@ -2213,8 +2235,8 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench invocation; the full-corpus encode path stays pinned by
     # tests/test_bpe.py (expression == Arrow == Python reference)
     sub = docs.filter(F.col("doc_id") % 5 == 0)
-    enc = bpe.encode_ids(sub, merges, vocab)
-    rt_leg = (bpe.decode_ids(enc, vocab)
+    enc = seg_ops.encode_ids(sub, bpe.apply_merges("text", merges), vocab)
+    rt_leg = (seg_ops.decode_ids(enc, vocab)
               .select(F.lit("roundtrip").alias("leg"),
                       F.substring(F.md5("detok"), 1, 16).alias("token"),
                       F.col("doc_id").alias("doc_freq"),
@@ -2252,9 +2274,10 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeat invocations (and any other consumer) skip the Viterbi
     # fold; the subsample encode pays only the word join-back
     # (~2 s/invocation measured at sf0.1 without the cache)
+    uni_seg = uni_model.segmenter()
     uni_wseg = cached_relation(
-        ug_ops.word_segmentations(docs, uni_model), "uni_wseg")
-    uni_seg_leg = (ug_ops.encode_unigram(sub, uni_model, wseg=uni_wseg)
+        seg_ops.word_segmentations(docs, uni_seg), "uni_wseg")
+    uni_seg_leg = (seg_ops.encode_pieces(sub, uni_seg, wseg=uni_wseg)
                    .select(F.lit("uni_seg").alias("leg"),
                            F.substring(F.md5(F.array_join("pieces", "|")),
                                        1, 16).alias("token"),
@@ -2273,12 +2296,11 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the FULL corpus words, so repeat invocations pay the word
     # join-back, not the fold; the oracle replays the same word-grain
     # shape (greedy_cte over distinct subsample words + join-back).
-    wp_pieces = [p for p, _, _ in uni_model.pieces]
+    wp_seg = wp_ops.segmenter([p for p, _, _ in uni_model.pieces],
+                              uni_model.k)
     wp_wseg = cached_relation(
-        wp_ops.word_segmentations_wp(docs, wp_pieces, uni_model.k),
-        "wp_wseg")
-    wp_leg = (wp_ops.encode_wordpiece(sub, wp_pieces,
-                                      k=uni_model.k, wseg=wp_wseg)
+        seg_ops.word_segmentations(docs, wp_seg), "wp_wseg")
+    wp_leg = (seg_ops.encode_pieces(sub, wp_seg, wseg=wp_wseg)
               .select(F.lit("wp_seg").alias("leg"),
                       F.substring(F.md5(F.array_join("pieces", "|")),
                                   1, 16).alias("token"),
@@ -2297,13 +2319,10 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran the fold), so it runs once per DISTINCT corpus word into
     # a session-cached lookup and the serve path pays the word
     # join-back only
+    wp2_seg = wp_ops.segmenter(_WP2_INIT, 2, cont_pieces=_WP2_CONT)
     wp2_wseg = cached_relation(
-        wp_ops.word_segmentations_wp(docs, _WP2_INIT, 2,
-                                     cont_pieces=_WP2_CONT),
-        "wp2_wseg")
-    wp2_leg = (wp_ops.encode_wordpiece(sub, _WP2_INIT, k=2,
-                                       wseg=wp2_wseg,
-                                       cont_pieces=_WP2_CONT)
+        seg_ops.word_segmentations(docs, wp2_seg), "wp2_wseg")
+    wp2_leg = (seg_ops.encode_pieces(sub, wp2_seg, wseg=wp2_wseg)
                .select(F.lit("wp2_seg").alias("leg"),
                        F.substring(F.md5(F.array_join("pieces", "|")),
                                    1, 16).alias("token"),
@@ -2605,17 +2624,6 @@ _SEMDEDUP_THRESHOLD = 0.4
                             neighbor_id) AS rn
         FROM (SELECT nid AS neighbor_id, v FROM corpus) c
         CROSS JOIN qset q WHERE neighbor_id != query_id),
-    rc_hit AS (
-        SELECT e.query_id, COUNT(*) AS hits
-        FROM (SELECT query_id, neighbor_id FROM ex_ranked
-              WHERE rn <= 3) e
-        JOIN (SELECT query_id, neighbor_id FROM ranked
-              WHERE rn <= 3) a USING (query_id, neighbor_id)
-        GROUP BY 1),
-    rc AS (SELECT q.query_id,
-                  COALESCE(r.hits, CAST(0 AS BIGINT)) AS hits
-           FROM (SELECT DISTINCT query_id FROM qset) q
-           LEFT JOIN rc_hit r USING (query_id)),
     -- quantizer-quality attestation (r12, VERDICT r11 #7): the
     -- k-means inertia trajectory replayed round for round from the
     -- SAME training CTEs
@@ -2655,15 +2663,8 @@ _SEMDEDUP_THRESHOLD = 0.4
            CAST(a.cell_id AS INT)
     FROM dc2_hit h JOIN assigned a ON a.neighbor_id = h.tid
     UNION ALL
-    SELECT 'recall', query_id, CAST(hits AS BIGINT),
-           CAST(hits AS DOUBLE) / CAST(3.0 AS DOUBLE), CAST(1 AS INT)
-    FROM rc
-    UNION ALL
-    SELECT 'recall_mean', CAST(-1 AS BIGINT), CAST(SUM(hits) AS BIGINT),
-           CAST(SUM(hits) AS DOUBLE)
-           / (CAST(3.0 AS DOUBLE) * CAST(COUNT(*) AS DOUBLE)),
-           CAST(1 AS INT)
-    FROM rc
+    {_recall_sql("ex_ranked", "ranked",
+                 "(SELECT DISTINCT query_id FROM qset)")}
     UNION ALL
     SELECT 'inertia', it, inertia,
            (CAST(inertia AS DOUBLE) / CAST(n_vec AS DOUBLE))
@@ -2835,36 +2836,6 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     })
     sd, sd2 = legs["sd"]
     dc, dc2, inertia = legs["dc"], legs["dc2"], legs["inertia"]
-    # fifth leg (r10, X-ANN-RECALL): IVF recall@3 against the exact
-    # brute-force ranking over the same query subset — q54 attests
-    # the PQ-ADC family's recall, this attests the cell-probe
-    # family's, so BOTH approximate indexes carry a driver-hashed
-    # quality metric. Exact-integer hit counts; the exact baseline is
-    # a search result, re-executed per invocation (only its PLAN is
-    # the prepared statement cached above — the memoization rule).
-    hits = (ex.select("query_id", "neighbor_id")
-            .join(topk.select("query_id", "neighbor_id"),
-                  ["query_id", "neighbor_id"])
-            .groupBy("query_id").agg(F.count("*").alias("hits")))
-    per_q = (queries.select(F.col("vec_id").alias("query_id"))
-             .join(hits, "query_id", "left")
-             .select("query_id",
-                     F.coalesce(F.col("hits"), F.lit(0).cast("long"))
-                     .alias("hits")))
-    recall = per_q.select(
-        F.lit("recall").alias("leg"), "query_id",
-        F.col("hits").cast("long").alias("neighbor_id"),
-        (F.col("hits").cast("double") / F.lit(3.0)).alias("cos_sim"),
-        F.lit(1).cast("int").alias("rn"))
-    recall_mean = (per_q.agg(F.sum("hits").alias("th"),
-                             F.count("*").alias("nq"))
-                   .select(F.lit("recall_mean").alias("leg"),
-                           F.lit(-1).cast("bigint").alias("query_id"),
-                           F.col("th").cast("long").alias("neighbor_id"),
-                           (F.col("th").cast("double")
-                            / (F.lit(3.0) * F.col("nq").cast("double")))
-                           .alias("cos_sim"),
-                           F.lit(1).cast("int").alias("rn")))
     # r16: the seven static legs (cached artifact relations + the
     # drift projections over the prepared drift plan) union into ONE
     # session-cached prepared sub-plan — their per-invocation
@@ -2877,5 +2848,12 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (sd.unionByName(sd2).unionByName(dnew)
                  .unionByName(dbase).unionByName(dc).unionByName(dc2)
                  .unionByName(inertia)))
-    return (topk.unionByName(static).unionByName(recall)
-            .unionByName(recall_mean))
+    # fifth leg (r10, X-ANN-RECALL): IVF recall@3 against the exact
+    # brute-force ranking over the same query subset — q54 attests
+    # the PQ-ADC family's recall, this attests the cell-probe
+    # family's, so BOTH approximate indexes carry a driver-hashed
+    # quality metric. The exact baseline is a search result,
+    # re-executed per invocation (only its PLAN is the prepared
+    # statement cached above — the memoization rule).
+    return (topk.unionByName(static)
+            .unionByName(_recall_legs(ex, topk, queries, "cos_sim")))

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import bpe
+from snowflake_azure_etl_spark.operators import segment as sg
 
 
 # ---------------------------------------------------------------------------
@@ -219,6 +220,11 @@ def test_vocab_from_merges_is_deterministic_and_complete(spark):
     assert sorted(v1.values()) == list(range(len(v1)))
 
 
+def encode_ids(docs, merges, vocab, unk_id=-1):
+    return sg.encode_ids(docs, bpe.apply_merges("text", merges), vocab,
+                         unk_id=unk_id)
+
+
 def test_encode_ids_roundtrip_and_unk(spark):
     docs = spark.createDataFrame(
         [(0, "low lower lowest"), (1, "new newer lowest")],
@@ -227,7 +233,7 @@ def test_encode_ids_roundtrip_and_unk(spark):
     vocab = bpe.vocab_from_merges(spark, docs, merges)
     inv = {r["token_id"]: r["token"] for r in vocab.collect()}
 
-    out = bpe.encode_ids(docs, merges, vocab)
+    out = encode_ids(docs, merges, vocab)
     segs = {r["doc_id"]: r["segs"] for r in docs.select(
         "doc_id", bpe.apply_merges("text", merges).alias("segs")).collect()}
     for r in out.collect():
@@ -238,7 +244,7 @@ def test_encode_ids_roundtrip_and_unk(spark):
     # held-out text with an unseen character maps to unk_id
     held = spark.createDataFrame([(9, "low quiz")],
                                  "doc_id bigint, text string")
-    ids = bpe.encode_ids(held, merges, vocab, unk_id=-7).collect()[0]
+    ids = encode_ids(held, merges, vocab, unk_id=-7).collect()[0]
     assert -7 in ids["token_ids"]
 
 
@@ -246,7 +252,7 @@ def test_encode_ids_is_shuffle_free(spark):
     docs = spark.createDataFrame([(0, "a b")], "doc_id bigint, text string")
     merges = bpe.train_bpe_merges(docs, n_merges=1)
     vocab = bpe.vocab_from_merges(spark, docs, merges)
-    plan = (bpe.encode_ids(docs, merges, vocab)
+    plan = (encode_ids(docs, merges, vocab)
             ._jdf.queryExecution().executedPlan().toString())
     # the vocab map arrives as a one-row broadcast; every Exchange in
     # the plan belongs to the alphabet-bounded vocab build UNDER the
@@ -268,7 +274,7 @@ def test_encode_ids_composes_with_packing(spark):
         "doc_id bigint, text string")
     merges = bpe.train_bpe_merges(docs, n_merges=3)
     vocab = bpe.vocab_from_merges(spark, docs, merges)
-    enc = bpe.encode_ids(docs, merges, vocab)
+    enc = encode_ids(docs, merges, vocab)
     packed = packing.pack_offsets(enc, text_col="unused",
                                   weight=F.col("n_ids"), ctx=16)
     rows = sorted((r["doc_id"], r["n_ids"], r["token_offset"])
@@ -287,7 +293,7 @@ def test_encode_ids_survives_duplicate_vocab_tokens(spark):
         [("a", 0), ("b", 1), ("ab", 2), ("ab", 9)],
         "token string, token_id int")
     merges = bpe.train_bpe_merges(docs, n_merges=1)
-    out = bpe.encode_ids(docs, merges, vocab).collect()[0]
+    out = encode_ids(docs, merges, vocab).collect()[0]
     assert out["token_ids"] == [2]
 
 
@@ -333,12 +339,12 @@ def test_decode_ids_roundtrip_and_unk(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     merges = bpe.train_bpe_merges(docs, "text", n_merges=4)
     vocab = bpe.vocab_from_merges(spark, docs, merges)
-    enc = bpe.encode_ids(docs, merges, vocab)
+    enc = encode_ids(docs, merges, vocab)
     got = {r["doc_id"]: r["detok"]
-           for r in bpe.decode_ids(enc, vocab).collect()}
+           for r in sg.decode_ids(enc, vocab).collect()}
     assert got == {did: t.replace(" ", "") for did, t in rows}
     # unknown id -> unk glyph
     bad = spark.createDataFrame([(9, [0, 10**6])],
                                 "doc_id bigint, token_ids array<int>")
-    out = bpe.decode_ids(bad, vocab).collect()[0]["detok"]
+    out = sg.decode_ids(bad, vocab).collect()[0]["detok"]
     assert "\N{REPLACEMENT CHARACTER}" in out

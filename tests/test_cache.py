@@ -106,18 +106,6 @@ def test_cached_persist_keys_levels_and_counts(spark):
     assert _cache_manager_empty(spark)
 
 
-def test_clear_cache_unpersists_composite_artifacts(spark):
-    def build():
-        x = spark.range(10).persist()
-        y = spark.range(20).persist()
-        x.count(), y.count()
-        return x, y
-    x, y = _cache.cached_build(spark, ("composite", "k"), build)
-    assert x.storageLevel.useMemory and y.storageLevel.useMemory
-    _cache.clear_cache(spark)
-    assert _cache.session_cache(spark) == {}
-
-
 def test_plan_key_is_digest_sized(spark):
     wide = spark.range(1000)
     for i in range(30):

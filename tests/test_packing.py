@@ -133,6 +133,7 @@ def test_build_sequences_materializes_exact_ctx_rows(spark):
     exactly ctx ids (last may be short) and the ordered concatenation
     of all sequences equals the ordered concatenation of all docs."""
     from snowflake_azure_etl_spark.operators import bpe
+    from snowflake_azure_etl_spark.operators import segment as sg
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{j % 7}" for j in range(i + 3)))
@@ -140,7 +141,7 @@ def test_build_sequences_materializes_exact_ctx_rows(spark):
         "doc_id bigint, text string")
     merges = bpe.train_bpe_merges(docs, n_merges=3)
     vocab = bpe.vocab_from_merges(spark, docs, merges)
-    enc = bpe.encode_ids(docs, merges, vocab)
+    enc = sg.encode_ids(docs, bpe.apply_merges("text", merges), vocab)
     CTX2 = 10
     seqs = {r["seq_id"]: r["token_ids"] for r in
             packing.build_sequences(enc, ctx=CTX2).collect()}

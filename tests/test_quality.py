@@ -80,17 +80,17 @@ def test_warehouse_contracts_pass_and_fail_loudly(spark, sf_dir):
     assert results and all(v == 0 for v in results.values())
     assert "dim_customer.dim_customer_id_unique" in results
 
-    # a poisoned table trips the gate
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}_dqtest")
-    poisoned = spark.table(f"{db}.dim_customer").limit(2)
-    dup = poisoned.unionByName(poisoned.limit(1))
     from snowflake_azure_etl_spark.warehouse.ddl import \
         drop_orphan_location
-    spark.sql(f"DROP TABLE IF EXISTS {db}_dqtest.dim_customer")
-    drop_orphan_location(spark, f"{db}_dqtest.dim_customer")
-    dup.write.mode("overwrite").saveAsTable(f"{db}_dqtest.dim_customer")
-    import pytest as _pytest
-    with _pytest.raises(runner.EtlStepError) as e:
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}_dqtest")
+
+    def validate_with_dim_customer(rows):
+        """Validate a db holding only `rows` as dim_customer, under
+        dim_customer's contracts alone."""
+        spark.sql(f"DROP TABLE IF EXISTS {db}_dqtest.dim_customer")
+        drop_orphan_location(spark, f"{db}_dqtest.dim_customer")
+        rows.write.mode("overwrite").saveAsTable(
+            f"{db}_dqtest.dim_customer")
         old = dict(runner.WAREHOUSE_CONTRACTS)
         try:
             runner.WAREHOUSE_CONTRACTS.clear()
@@ -100,7 +100,18 @@ def test_warehouse_contracts_pass_and_fail_loudly(spark, sf_dir):
         finally:
             runner.WAREHOUSE_CONTRACTS.clear()
             runner.WAREHOUSE_CONTRACTS.update(old)
+
+    # a poisoned table trips the gate
+    poisoned = spark.table(f"{db}.dim_customer").limit(2)
+    with pytest.raises(runner.EtlStepError) as e:
+        validate_with_dim_customer(
+            poisoned.unionByName(poisoned.limit(1)))
     assert "unique" in str(e.value)
+    # clean dims but no fact_sales: its FK contracts cannot run, and a
+    # missing contract table fails the step instead of passing it
+    spark.sql(f"DROP TABLE IF EXISTS {db}_dqtest.fact_sales")
+    with pytest.raises(runner.EtlStepError, match="fact_sales"):
+        validate_with_dim_customer(poisoned)
 
 
 def test_referential_violations(spark):

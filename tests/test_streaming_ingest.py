@@ -11,6 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import types as T
 
+from snowflake_azure_etl_spark.operators import segment as sg
 from snowflake_azure_etl_spark.sources import jsonl_format
 from snowflake_azure_etl_spark.streaming import ingest
 from snowflake_azure_etl_spark.streaming.dedup import dedup_stream
@@ -542,7 +543,7 @@ def test_wordpiece_ingest_matches_batch(spark):
     pieces = [p for p, _, _ in model.pieces]
     want = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", pieces, 6).alias("p")).collect()}
+        sg.segment_text("text", wp.segmenter(pieces, 6)).alias("p")).collect()}
     assert got == want
     assert "planet" in got[1]             # the 6-char piece in play
     assert wp.WP_UNK in got[2]            # unknown word visible, kept
@@ -801,7 +802,7 @@ def test_unigram_ingest_matches_batch_operator(spark):
     all_rows = [r for b in batches for r in b]
     whole = spark.createDataFrame(all_rows, "doc_id long, text string")
     want = {r["doc_id"]: r["segs"] for r in whole.select(
-        "doc_id", ug.segment_text("text", model).alias("segs"))
+        "doc_id", sg.segment_text("text", model.segmenter()).alias("segs"))
         .collect()}
     got = {r["doc_id"]: r["pieces"]
            for r in spark.table(seg_t).collect()}
@@ -939,8 +940,8 @@ def test_wordpiece_ingest_two_set_flags_table(spark):
     got = {r["doc_id"]: r["pieces"]
            for r in spark.table(f"{db}.seg").collect()}
     want = {r["doc_id"]: r["p"] for r in docs.select(
-        "doc_id", wp.segment_text_wp("text", init, 7,
-                                     cont_pieces=cont).alias("p"))
+        "doc_id",
+        sg.segment_text("text", wp.segmenter(init, 7, cont)).alias("p"))
         .collect()}
     assert got == want
     assert got[1] == ["un", "##a", "##ff", "##able", wp.WP_UNK]
@@ -948,7 +949,7 @@ def test_wordpiece_ingest_two_set_flags_table(spark):
     # the single-set union over the same strings would read 'able'
     flat = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", init | cont, 7).alias("p"))
+        sg.segment_text("text", wp.segmenter(init | cont, 7)).alias("p"))
         .collect()}
     assert flat[1] != got[1]
 

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from snowflake_azure_etl_spark.operators import segment as sg
 from snowflake_azure_etl_spark.operators import unigram as ug
 
 SCALE = 1 << 20
@@ -106,6 +107,12 @@ def trained(spark):
     return docs, ug.train_unigram(docs)
 
 
+def encode_ids(docs, model, vocab, fallback=False):
+    """text -> unigram pieces -> vocabulary ids through the shared path."""
+    return sg.encode_ids(sg.segment_docs(docs, model.segmenter(fallback)),
+                         "pieces", vocab)
+
+
 def test_model_matches_python_reference(trained):
     _, model = trained
     pieces, traj, _, _ = py_train(CORPUS)
@@ -117,7 +124,8 @@ def test_segment_text_matches_python(trained):
     docs, model = trained
     _, _, costs, _ = py_train(CORPUS)
     got = {r["doc_id"]: r["segs"] for r in docs.select(
-        "doc_id", ug.segment_text("text", model).alias("segs")).collect()}
+        "doc_id",
+        sg.segment_text("text", model.segmenter()).alias("segs")).collect()}
     for doc_id, text in CORPUS:
         want = [p for w in text.split(" ") if w
                 for p in py_viterbi(w, costs, model.k)[1]]
@@ -127,9 +135,10 @@ def test_segment_text_matches_python(trained):
 def test_encode_unigram_matches_segment_text(trained):
     docs, model = trained
     join_path = {r["doc_id"]: (r["pieces"], r["n_pieces"])
-                 for r in ug.encode_unigram(docs, model).collect()}
+                 for r in sg.encode_pieces(docs, model.segmenter()).collect()}
     row_local = {r["doc_id"]: r["segs"] for r in docs.select(
-        "doc_id", ug.segment_text("text", model).alias("segs")).collect()}
+        "doc_id",
+        sg.segment_text("text", model.segmenter()).alias("segs")).collect()}
     assert set(join_path) == {d for d, _ in CORPUS}
     for d in join_path:
         pieces, n = join_path[d]
@@ -146,9 +155,9 @@ def test_unsegmentable_word_is_null_not_dropped(spark, trained):
     held_out = spark.createDataFrame([(10, "the ééé")],
                                      "doc_id long, text string")
     row = held_out.select(
-        ug.segment_text("text", model).alias("s")).collect()[0]
+        sg.segment_text("text", model.segmenter()).alias("s")).collect()[0]
     assert row["s"] is None
-    enc = ug.encode_unigram(held_out, model).collect()[0]
+    enc = sg.encode_pieces(held_out, model.segmenter()).collect()[0]
     assert enc["pieces"] is None
 
 
@@ -204,9 +213,10 @@ def test_null_text_parity_between_encode_paths(spark, trained):
     d = spark.createDataFrame([(20, None), (21, "")],
                               "doc_id long, text string")
     st = {r["doc_id"]: r["s"] for r in d.select(
-        "doc_id", ug.segment_text("text", model).alias("s")).collect()}
+        "doc_id",
+        sg.segment_text("text", model.segmenter()).alias("s")).collect()}
     enc = {r["doc_id"]: (r["pieces"], r["n_pieces"])
-           for r in ug.encode_unigram(d, model).collect()}
+           for r in sg.encode_pieces(d, model.segmenter()).collect()}
     assert st[20] is None and enc[20][0] is None
     assert st[21] == [] and enc[21] == ([], 0)
 
@@ -234,7 +244,7 @@ def test_sink_derives_k_from_persisted_pieces(spark, tmp_path):
     got = {r["doc_id"]: r["pieces"]
            for r in spark.table(f"{db}.seg").collect()}
     want = {r["doc_id"]: r["segs"] for r in docs.select(
-        "doc_id", ug.segment_text("text", model).alias("segs"))
+        "doc_id", sg.segment_text("text", model.segmenter()).alias("segs"))
         .collect()}
     assert got == want
     assert "planet" in got[1]          # the 6-char piece was in play
@@ -242,16 +252,15 @@ def test_sink_derives_k_from_persisted_pieces(spark, tmp_path):
 
 def test_encode_ids_roundtrip_and_unk(trained):
     """text → pieces → ids → back: decode (the tokenizer-agnostic
-    bpe.decode_ids) reconstructs the space-stripped text exactly
+    segment.decode_ids) reconstructs the space-stripped text exactly
     (pieces partition each word's characters); a restricted vocab
     surfaces unk ids; an unsegmentable doc keeps NULL ids."""
-    from snowflake_azure_etl_spark.operators.bpe import decode_ids
     docs, model = trained
     vocab = ug.unigram_vocab(docs.sparkSession, model)
     assert vocab.count() == len(model.pieces)
-    enc = ug.encode_ids(docs, model, vocab)
+    enc = encode_ids(docs, model, vocab)
     dec = {r["doc_id"]: r["detok"]
-           for r in decode_ids(enc, vocab).collect()}
+           for r in sg.decode_ids(enc, vocab).collect()}
     for d, t in CORPUS:
         assert dec[d] == t.replace(" ", ""), d
     # ids are the (cost asc, piece asc) order — most probable = 0
@@ -261,12 +270,12 @@ def test_encode_ids_roundtrip_and_unk(trained):
     # restricted vocab (single chars only): the doc's multi-char
     # segments surface as unk
     small = vocab.filter(F.length("token") == 1)
-    unk = ug.encode_ids(docs.filter(F.col("doc_id") == 1), model,
+    unk = encode_ids(docs.filter(F.col("doc_id") == 1), model,
                         small).collect()[0]
     assert -1 in unk["token_ids"]
     held = docs.sparkSession.createDataFrame(
         [(99, "ééé")], "doc_id long, text string")
-    assert ug.encode_ids(held, model,
+    assert encode_ids(held, model,
                          vocab).collect()[0]["token_ids"] is None
 
 
@@ -312,7 +321,7 @@ def test_vocab_target_pruning_schedule(spark):
     n_multis = sum(1 for p, _, _ in model.pieces if len(p) > 1)
     assert n_multis < 24
     # totality: every corpus word still segments under the pruned model
-    segs = docs.select(ug.segment_text("text", model).alias("s"))
+    segs = docs.select(sg.segment_text("text", model.segmenter()).alias("s"))
     assert all(r["s"] is not None for r in segs.collect())
 
 
@@ -380,7 +389,7 @@ def test_sentencepiece_real_hyperparameters_512(spark):
     wf = py_word_freqs(rows)
     seeds = py_seed(wf, K, M)
     n0 = sum(1 for p in seeds if len(p) > 1)
-    assert n0 > ug.UNIGRAM_MAP_LIT_MAX    # broadcast-map training path
+    assert n0 > sg.MAP_LIT_MAX    # broadcast-map training path
     keys = sorted(seeds)
     costs = py_costs(seeds, keys)
     counts, traj = dict(seeds), []
@@ -400,7 +409,7 @@ def test_sentencepiece_real_hyperparameters_512(spark):
     n_multis = sum(1 for p, _, _ in model.pieces if len(p) > 1)
     assert T <= n_multis < n0             # really pruned toward target
     # the pruned model still segments the whole corpus (totality)
-    segs = docs.select(ug.segment_text("text", model).alias("s"))
+    segs = docs.select(sg.segment_text("text", model.segmenter()).alias("s"))
     assert all(r["s"] is not None for r in segs.collect())
 
 
@@ -414,7 +423,7 @@ def test_unigram_packing_composition(trained):
     from snowflake_azure_etl_spark.operators import packing
     docs, model = trained
     vocab = ug.unigram_vocab(docs.sparkSession, model)
-    enc = ug.encode_ids(docs, model, vocab)
+    enc = encode_ids(docs, model, vocab)
     packed = packing.pack_offsets(enc, weight=F.col("n_ids"), ctx=8)
     rows = {r["doc_id"]: r for r in packed.collect()}
     n = {r["doc_id"]: r["n_ids"] for r in enc.collect()}
@@ -426,7 +435,7 @@ def test_unigram_packing_composition(trained):
 
 
 def _big_costs():
-    """A planted >UNIGRAM_MAP_LIT_MAX piece model over the lowercase
+    """A planted >segment.MAP_LIT_MAX piece model over the lowercase
     alphabet (26 singles + all 676 bigrams + enough trigrams), with a
     sentinel piece whose presence in a plan string marks literal
     shipping."""
@@ -439,12 +448,13 @@ def _big_costs():
             itertools.product("abcdefghij", repeat=3), 400):
         costs["".join(t)] = 18
     costs["zqj"] = 18          # sentinel: appears in NO test word
-    assert len(costs) > ug.UNIGRAM_MAP_LIT_MAX
+    assert len(costs) > sg.MAP_LIT_MAX
     return costs
 
 
-def test_large_vocab_ships_as_broadcast_map_not_literal(spark):
-    """VERDICT r13 #3: above UNIGRAM_MAP_LIT_MAX pieces the cost
+def test_large_vocab_ships_as_broadcast_map_not_literal(spark,
+                                                        monkeypatch):
+    """VERDICT r13 #3: above segment.MAP_LIT_MAX pieces the cost
     model ships as a one-row broadcast map RELATION — the analyzed
     plan carries no piece literals (a 32k-piece model would otherwise
     compile 10⁵ literals into every expression) — while results stay
@@ -453,8 +463,14 @@ def test_large_vocab_ships_as_broadcast_map_not_literal(spark):
     costs = _big_costs()
     words = spark.createDataFrame(
         [("the", 1), ("cat", 2), ("abba", 1)], "word string, freq long")
+    docs = spark.createDataFrame(
+        [(1, "the cat"), (2, "abba abba cat")], "doc_id long, text string")
     big = ug.viterbi_words(words, costs)
-    lit = ug.viterbi_words(words, costs, map_lit_max=10**9)
+    seg_big = sg.segment_docs(docs, ug.segmenter(costs))
+    # a raised gate forces the literal shape on the same model
+    monkeypatch.setattr(sg, "MAP_LIT_MAX", 10**9)
+    lit = ug.viterbi_words(words, costs)
+    seg_lit = sg.segment_docs(docs, ug.segmenter(costs))
     rows_big = {r["word"]: (r["cost"], r["segs"])
                 for r in big.collect()}
     rows_lit = {r["word"]: (r["cost"], r["segs"])
@@ -469,13 +485,9 @@ def test_large_vocab_ships_as_broadcast_map_not_literal(spark):
     # truncation on the literal path — 'zqj' additionally pins the
     # tail); pieces live in data behind the one-row map column
     assert "aaa" not in plan_big and "zqj" not in plan_big
-    assert "_ucm" in plan_big
+    assert sg.MAP_COL in plan_big
     assert "aaa" in plan_lit              # literal path really is one
     # segment_docs: same gate, same identity, at the document grain
-    docs = spark.createDataFrame(
-        [(1, "the cat"), (2, "abba abba cat")], "doc_id long, text string")
-    seg_big = ug.segment_docs(docs, costs)
-    seg_lit = ug.segment_docs(docs, costs, map_lit_max=10**9)
     assert "zqj" not in seg_big._jdf.queryExecution().analyzed().toString()
     got_b = {r["doc_id"]: r["pieces"] for r in seg_big.collect()}
     got_l = {r["doc_id"]: r["pieces"] for r in seg_lit.collect()}
@@ -484,28 +496,28 @@ def test_large_vocab_ships_as_broadcast_map_not_literal(spark):
 
 
 def test_large_vocab_column_form_fails_loud(spark, trained):
-    """segment_text_with is a bare Column — it cannot ship a large
+    """segment_text is a bare Column — it cannot ship a large
     model without the literal, so above the gate it raises with a
     pointer at segment_docs instead of silently compiling plan bloat;
     encode paths gate internally and keep working."""
     costs = _big_costs()
     with pytest.raises(ValueError, match="segment_docs"):
-        ug.segment_text_with("text", costs)
-    # encode_ids / encode_unigram over a large-vocab model stay green
+        sg.segment_text("text", ug.segmenter(costs))
+    # encode_ids / encode_pieces over a large-vocab model stay green
     # (gated internally) and agree with each other
     docs, _ = trained
     model = ug.UnigramModel([(p, 1, c) for p, c in sorted(costs.items())],
                             [0], 4, 32)
     vocab = ug.unigram_vocab(docs.sparkSession, model)
-    enc = ug.encode_ids(docs.filter(F.col("doc_id") == 1), model, vocab)
+    enc = encode_ids(docs.filter(F.col("doc_id") == 1), model, vocab)
     plan = enc._jdf.queryExecution().analyzed().toString()
     assert "zqj" not in plan
     row = enc.collect()[0]
     assert row["n_ids"] == len(row["token_ids"])
-    eu = {r["doc_id"]: r["pieces"] for r in ug.encode_unigram(
-        docs, model).collect()}
-    sd = {r["doc_id"]: r["pieces"] for r in ug.segment_docs(
-        docs, model.costs).collect()}
+    eu = {r["doc_id"]: r["pieces"] for r in sg.encode_pieces(
+        docs, model.segmenter()).collect()}
+    sd = {r["doc_id"]: r["pieces"] for r in sg.segment_docs(
+        docs, model.segmenter()).collect()}
     assert eu == sd
 
 
@@ -531,12 +543,13 @@ def test_char_fallback_total_coverage_and_roundtrip(spark, trained):
 
     # strict: every multilingual doc is NULL (pinned unchanged)
     strict = {r["doc_id"]: r["s"] for r in multi.select(
-        "doc_id", ug.segment_text("text", model).alias("s")).collect()}
+        "doc_id",
+        sg.segment_text("text", model.segmenter()).alias("s")).collect()}
     assert all(v is None for v in strict.values())
     # fallback: total coverage, exact round-trip, reference parity
     fb = {r["doc_id"]: r["s"] for r in multi.select(
         "doc_id",
-        ug.segment_text("text", model, fallback=True).alias("s"))
+        sg.segment_text("text", model.segmenter(fallback=True)).alias("s"))
         .collect()}
     texts = {r["doc_id"]: r["text"] for r in multi.collect()}
     for d, segs in fb.items():
@@ -546,13 +559,13 @@ def test_char_fallback_total_coverage_and_roundtrip(spark, trained):
         assert segs == want, d
     assert "é" in fb[30] and "🙂" in fb[32]
     # join-path encode agrees under fallback (incl. its wseg build)
-    enc = {r["doc_id"]: r["pieces"] for r in ug.encode_unigram(
-        multi, model, fallback=True).collect()}
+    enc = {r["doc_id"]: r["pieces"] for r in sg.encode_pieces(
+        multi, model.segmenter(fallback=True)).collect()}
     assert enc == fb
     # ids: fallback pieces are outside the vocab -> unk_id, the
     # SentencePiece unk contract; known pieces keep their ids
     vocab = ug.unigram_vocab(spark, model)
-    ids = ug.encode_ids(multi, model, vocab, fallback=True).collect()
+    ids = encode_ids(multi, model, vocab, fallback=True).collect()
     by_id = {r["doc_id"]: r["token_ids"] for r in ids}
     assert all(v is not None for v in by_id.values())
     assert -1 in by_id[30] and -1 in by_id[31]
@@ -615,7 +628,7 @@ def test_fallback_streaming_sink_matches_batch(spark):
            for r in spark.table(f"{db}.seg").collect()}
     want = {r["doc_id"]: r["s"] for r in docs.select(
         "doc_id",
-        ug.segment_text("text", model, fallback=True).alias("s"))
+        sg.segment_text("text", model.segmenter(fallback=True)).alias("s"))
         .collect()}
     assert got == want
     assert all(v is not None for v in got.values())
@@ -657,7 +670,7 @@ def test_fallback_property_sweep(spark, trained, texts):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["s"] for r in docs.select(
         "doc_id",
-        ug.segment_text("text", model, fallback=True).alias("s"))
+        sg.segment_text("text", model.segmenter(fallback=True)).alias("s"))
         .collect()}
     for d, t in rows:
         want = [p for w in t.split(" ") if w for p in py_fb(w)[1]]
@@ -685,7 +698,8 @@ def test_unigram_property_sweep(spark, texts):
     assert model.traj == traj
     assert model.pieces == pieces
     got = {r["doc_id"]: r["segs"] for r in docs.select(
-        "doc_id", ug.segment_text("text", model).alias("segs")).collect()}
+        "doc_id",
+        sg.segment_text("text", model.segmenter()).alias("segs")).collect()}
     for d, t in rows:
         want = [p for w in t.split(" ") if w
                 for p in py_viterbi(w, costs, model.k)[1]]
@@ -693,7 +707,7 @@ def test_unigram_property_sweep(spark, texts):
     # and the join-path encoder agrees with the row-local one on the
     # same random corpus (empty docs land as [] on both)
     joined = {r["doc_id"]: r["pieces"]
-              for r in ug.encode_unigram(docs, model).collect()}
+              for r in sg.encode_pieces(docs, model.segmenter()).collect()}
     assert joined == got
 
 

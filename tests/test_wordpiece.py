@@ -9,8 +9,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from snowflake_azure_etl_spark.operators import segment as sg
 from snowflake_azure_etl_spark.operators import unigram as ug
 from snowflake_azure_etl_spark.operators import wordpiece as wp
+
+
+def pmap(pieces, cont_pieces=None):
+    """The membership map as the plan literal the shared path ships."""
+    return sg._map_lit(wp.segmenter(pieces, cont_pieces=cont_pieces).items)
 
 
 def py_greedy(word: str, pieces: set, k: int):
@@ -38,7 +44,7 @@ def test_greedy_matches_python_reference(spark):
     df = spark.createDataFrame(words, "word string")
     got = {r["word"]: r["segs"] for r in df.select(
         "word", wp.greedy_expr(F.col("word"),
-                               wp._pieces_map_lit(PIECES), 3)
+                               pmap(PIECES), 3)
         .alias("segs")).collect()}
     for (w,) in words:
         assert got[w] == py_greedy(w, PIECES, 3), w
@@ -61,7 +67,7 @@ def test_oracle_greedy_cte_matches_engine(spark):
     df = spark.createDataFrame(words, "word string")
     eng = {r["word"]: r["segs"] for r in df.select(
         "word", wp.greedy_expr(F.col("word"),
-                               wp._pieces_map_lit(PIECES), 3)
+                               pmap(PIECES), 3)
         .alias("segs")).collect()}
     con = duckdb.connect()
     con.register("wpw", pd.DataFrame([w for (w,) in words],
@@ -85,14 +91,14 @@ def test_segment_text_wp_document_grain(spark):
         "doc_id long, text string")
     got = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", PIECES, 3).alias("p")).collect()}
+        sg.segment_text("text", wp.segmenter(PIECES, 3)).alias("p")).collect()}
     assert got[1] == ["the", "mat"]
     assert got[2] == ["[UNK]", "mat"]     # unk is per-WORD, not per-doc
     assert got[3] == []                   # no words: empty
     assert got[4] is None                 # NULL text stays NULL
 
 
-def test_wp_shipping_gate(spark):
+def test_wp_shipping_gate(spark, monkeypatch):
     """The piece set ships gated on vocabulary size like the unigram
     cost model: literal under the gate, one-row broadcast map relation
     above — identical results, no piece literal in the big plan, and
@@ -106,18 +112,20 @@ def test_wp_shipping_gate(spark):
             itertools.islice(itertools.product("abcdefghij", repeat=3),
                              400)}
     big.add("zqj")
-    assert len(big) > ug.UNIGRAM_MAP_LIT_MAX
+    assert len(big) > sg.MAP_LIT_MAX
     docs = spark.createDataFrame(
         [(1, "the cat"), (2, "abba zq")], "doc_id long, text string")
-    b = wp.segment_docs_wp(docs, big, k=3)
-    l = wp.segment_docs_wp(docs, big, k=3, map_lit_max=10**9)
+    b = sg.segment_docs(docs, wp.segmenter(big, 3))
+    with monkeypatch.context() as m:
+        m.setattr(sg, "MAP_LIT_MAX", 10**9)
+        l = sg.segment_docs(docs, wp.segmenter(big, 3))
     assert ({r["doc_id"]: r["pieces"] for r in b.collect()}
             == {r["doc_id"]: r["pieces"] for r in l.collect()})
     plan_b = b._jdf.queryExecution().analyzed().toString()
     assert "aaa" not in plan_b and "zqj" not in plan_b
-    assert "_wpm" in plan_b
-    with pytest.raises(ValueError, match="segment_docs_wp"):
-        wp.segment_text_wp("text", big, 3)
+    assert sg.MAP_COL in plan_b
+    with pytest.raises(ValueError, match="segment_docs"):
+        sg.segment_text("text", wp.segmenter(big, 3))
 
 
 def test_wp_over_trained_unigram_vocab(spark):
@@ -133,7 +141,7 @@ def test_wp_over_trained_unigram_vocab(spark):
     pieces = [p for p, _, _ in model.pieces]
     got = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", pieces, model.k).alias("p"))
+        sg.segment_text("text", wp.segmenter(pieces, model.k)).alias("p"))
         .collect()}
     for d, t in corpus:
         assert wp.WP_UNK not in got[d], d
@@ -143,7 +151,7 @@ def test_wp_over_trained_unigram_vocab(spark):
     held = spark.createDataFrame([(9, "the émat")],
                                  "doc_id long, text string")
     hp = held.select(
-        wp.segment_text_wp("text", pieces, model.k).alias("p")
+        sg.segment_text("text", wp.segmenter(pieces, model.k)).alias("p")
     ).collect()[0]["p"]
     assert wp.WP_UNK in hp                # the OOA word went unk whole
     assert hp[0] == "the"                 # per-word isolation holds
@@ -161,17 +169,17 @@ def test_encode_wordpiece_matches_row_local(spark):
         "doc_id long, text string")
     row_local = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", PIECES, 3).alias("p")).collect()}
+        sg.segment_text("text", wp.segmenter(PIECES, 3)).alias("p")).collect()}
     joined = {r["doc_id"]: r["pieces"] for r in
-              wp.encode_wordpiece(docs, PIECES, k=3).collect()}
+              sg.encode_pieces(docs, wp.segmenter(PIECES, 3)).collect()}
     assert joined == row_local
-    wseg = wp.word_segmentations_wp(docs, PIECES, 3)
+    wseg = sg.word_segmentations(docs, wp.segmenter(PIECES, 3))
     reused = {r["doc_id"]: r["pieces"] for r in
-              wp.encode_wordpiece(docs, PIECES, k=3,
+              sg.encode_pieces(docs, wp.segmenter(PIECES, 3),
                                   wseg=wseg).collect()}
     assert reused == row_local
     enc = {r["doc_id"]: (r["pieces"], r["n_pieces"]) for r in
-           wp.encode_wordpiece(docs, PIECES, k=3).collect()}
+           sg.encode_pieces(docs, wp.segmenter(PIECES, 3)).collect()}
     assert enc[3] == ([], 0)              # no-words doc: empty
     assert enc[4][0] is None              # NULL text: NULL pieces
     # a caller-supplied wseg that does NOT cover the docs' words
@@ -179,7 +187,7 @@ def test_encode_wordpiece_matches_row_local(spark):
     # segmentation — the encode_unigram coverage contract
     partial = wseg.filter(F.col("word") != "mat")
     bad = {r["doc_id"]: r["pieces"] for r in
-           wp.encode_wordpiece(docs, PIECES, k=3,
+           sg.encode_pieces(docs, wp.segmenter(PIECES, 3),
                                wseg=partial).collect()}
     assert bad[1] is None and bad[2] is None    # 'mat' uncovered
     assert bad[5] == row_local[5]               # covered doc intact
@@ -204,17 +212,49 @@ def test_wp_ids_roundtrip(spark):
     assert all(vm[p] == i + 1 for i, p in enumerate(toks))
     assert all(vm["##" + p] == len(toks) + 1 + i
                for i, p in enumerate(toks))
-    enc = wp.encode_ids_wp(docs, PIECES, vocab, k=3)
+    enc = sg.encode_ids(sg.segment_docs(docs, wp.segmenter(PIECES, 3)),
+                        "pieces", vocab)
     ids = {r["doc_id"]: r["token_ids"] for r in enc.collect()}
     assert ids[4] is None                     # NULL text -> NULL ids
     assert all(i is not None for i in ids[1])  # total: no missing keys
     assert vm[wp.WP_UNK] in ids[3]             # unk IS an id
     dec = {r["doc_id"]: r["detok"]
-           for r in wp.decode_ids_wp(enc, vocab).collect()}
+           for r in sg.decode_ids(enc, vocab,
+                                  strip_mark=wp.WP_CONT).collect()}
     assert dec[1] == "themat"                 # covered: exact
     assert dec[2] == "mathat"                 # ## marks stripped
     assert dec[3] == "[UNK]mat"               # the lossy-unk contract
     assert dec[4] is None
+
+
+def test_decode_renders_unknown_ids_visibly(spark):
+    """The shared decode is fail-visible for every family: an id the
+    vocabulary lacks renders as the unk glyph (WordPiece's decode used
+    to drop it silently, so [1, 999, 2] read back as 'abc')."""
+    vocab = wp.wordpiece_vocab(spark, {"ab", "c"})
+    enc = spark.createDataFrame([(1, [1, 999, 2]), (2, None)],
+                                "doc_id long, token_ids array<int>")
+    got = {r["doc_id"]: r["detok"] for r in sg.decode_ids(
+        enc, vocab, strip_mark=wp.WP_CONT).collect()}
+    assert got == {1: "ab\N{REPLACEMENT CHARACTER}c", 2: None}
+    assert sg.decode_ids(enc, vocab, unk_token=wp.WP_UNK).collect()[0][
+        "detok"] == "ab[UNK]c"
+
+
+def test_encode_maps_missing_surface_to_unk_id(spark):
+    """Against a caller-supplied vocabulary that lacks a surface the
+    segmenter emits, the shared encode maps it to `unk_id` instead of
+    a NULL id (the WordPiece path used to leave a NULL in the array)."""
+    docs = spark.createDataFrame([(1, "ab c abc")],
+                                 "doc_id long, text string")
+    vocab = wp.wordpiece_vocab(spark, {"ab", "c"}).filter(
+        F.col("token") != "##c")
+    seg = sg.segment_docs(docs, wp.segmenter({"ab", "c"}, 3))
+    row = sg.encode_ids(seg, "pieces", vocab, unk_id=0).collect()[0]
+    assert row["token_ids"] == [1, 2, 1, 0]    # ab, c, ab ##c
+    assert row["n_ids"] == 4
+    assert sg.encode_ids(seg, "pieces", vocab).collect()[0][
+        "token_ids"][-1] == -1
 
 
 from hypothesis import HealthCheck, given, settings
@@ -239,7 +279,7 @@ def test_wp_property_sweep(spark, texts, vocab):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["p"] for r in docs.select(
         "doc_id",
-        wp.segment_text_wp("text", vocab, 3).alias("p")).collect()}
+        sg.segment_text("text", wp.segmenter(vocab, 3)).alias("p")).collect()}
     for d, t in rows:
         want = [p for w in t.split(" ") if w
                 for p in py_greedy(w, vocab, 3)]
@@ -247,7 +287,7 @@ def test_wp_property_sweep(spark, texts, vocab):
     # and the word-grain join-back encoder agrees with the row-local
     # expression on the same random corpus (empty docs land as [])
     joined = {r["doc_id"]: r["pieces"] for r in
-              wp.encode_wordpiece(docs, vocab, k=3).collect()}
+              sg.encode_pieces(docs, wp.segmenter(vocab, 3)).collect()}
     assert joined == got
 
 
@@ -277,7 +317,7 @@ INIT2 = {"un", "affable", "aff", "a"}
 CONT2 = {"able", "ff", "a"}
 
 
-def test_two_set_membership_changes_the_encode(spark):
+def test_two_set_membership_changes_the_encode(spark, monkeypatch):
     """Planted vocab where initial != continuation membership changes
     the result — pinned against the hand-computed BERT rule. The
     single-set union encodes 'unaffable' differently ('##aff' is
@@ -287,8 +327,8 @@ def test_two_set_membership_changes_the_encode(spark):
         [(1, "unaffable"), (2, "able"), (3, "affable a")],
         "doc_id long, text string")
     got = {r["doc_id"]: r["p"] for r in docs.select(
-        "doc_id", wp.segment_text_wp("text", INIT2, 7,
-                                     cont_pieces=CONT2).alias("p"))
+        "doc_id",
+        sg.segment_text("text", wp.segmenter(INIT2, 7, CONT2)).alias("p"))
         .collect()}
     # hand-computed under the BERT rule:
     assert got[1] == ["un", "##a", "##ff", "##able"]
@@ -301,20 +341,18 @@ def test_two_set_membership_changes_the_encode(spark):
         assert got[d] == want
     # and the union single-set form genuinely differs on both words
     uni = {r["doc_id"]: r["p"] for r in docs.select(
-        "doc_id", wp.segment_text_wp("text", INIT2 | CONT2, 7)
+        "doc_id", sg.segment_text("text", wp.segmenter(INIT2 | CONT2, 7))
         .alias("p")).collect()}
     assert uni[1] == ["un", "##affable"] != got[1]
     assert uni[2] == ["able"] != got[2]
     # the word-grain join-back encoder carries the same semantics
     joined = {r["doc_id"]: r["pieces"] for r in
-              wp.encode_wordpiece(docs, INIT2, k=7,
-                                  cont_pieces=CONT2).collect()}
+              sg.encode_pieces(docs, wp.segmenter(INIT2, 7, CONT2)).collect()}
     assert joined == got
     # and the large-vocab one-row-map relation shape is identical
-    rel = {r["doc_id"]: r["p"] for r in
-           wp.segment_docs_wp(docs, INIT2, k=7, out_col="p",
-                              map_lit_max=2,
-                              cont_pieces=CONT2).collect()}
+    monkeypatch.setattr(sg, "MAP_LIT_MAX", 2)
+    rel = {r["doc_id"]: r["pieces"] for r in
+           sg.segment_docs(docs, wp.segmenter(INIT2, 7, CONT2)).collect()}
     assert rel == got
 
 
@@ -328,7 +366,7 @@ def test_two_set_duckdb_parity(spark):
     df = spark.createDataFrame(words, "word string")
     eng = {r["word"]: r["segs"] for r in df.select(
         "word", wp.greedy_expr(F.col("word"),
-                               wp._pieces_map_lit(INIT2, CONT2), 7)
+                               pmap(INIT2, CONT2), 7)
         .alias("segs")).collect()}
     con = duckdb.connect()
     con.register("wpw", pd.DataFrame([w for (w,) in words],
@@ -368,13 +406,14 @@ def test_load_bert_vocab_and_two_set_id_space(spark):
         [(1, "unaffable affable"), (2, "able")],
         "doc_id long, text string")
     ids = {r["doc_id"]: r["token_ids"] for r in
-           wp.encode_ids_wp(docs, init, vocab,
-                            cont_pieces=cont).collect()}
+           sg.encode_ids(sg.segment_docs(
+               docs, wp.segmenter(init, cont_pieces=cont)),
+               "pieces", vocab).collect()}
     assert None not in {i for v in ids.values() for i in v}  # total
-    deco = {r["doc_id"]: r["detok"] for r in wp.decode_ids_wp(
+    deco = {r["doc_id"]: r["detok"] for r in sg.decode_ids(
         spark.createDataFrame([(k, v) for k, v in ids.items()],
                               "doc_id long, token_ids array<int>"),
-        vocab).collect()}
+        vocab, strip_mark=wp.WP_CONT).collect()}
     assert deco[1] == "unaffableaffable"       # covered: exact
     assert deco[2] == wp.WP_UNK                # lossy-unk contract
 
@@ -382,20 +421,16 @@ def test_load_bert_vocab_and_two_set_id_space(spark):
 def test_raw_hash_prefixed_piece_rejected_everywhere(spark):
     """ADVICE r14 #3: a trained piece literally starting with '##'
     would collide with the continuation surface of its suffix piece
-    (duplicate vocab tokens, broken round-trip) — every entry point
-    fails loud instead."""
+    (duplicate vocab tokens, broken round-trip) — both entry points
+    fail loud instead: the segmenter every shared encode takes, and the
+    id space."""
     bad = {"ma", "##t", "a"}
     with pytest.raises(ValueError, match="##"):
-        wp.segment_text_wp("text", bad, 3)
-    docs = spark.createDataFrame([(1, "mat")], "doc_id long, text string")
+        wp.segmenter(bad, 3)
     with pytest.raises(ValueError, match="##"):
-        wp.segment_docs_wp(docs, bad)
-    with pytest.raises(ValueError, match="##"):
-        wp.word_segmentations_wp(docs, bad)
+        wp.segmenter({"ok"}, cont_pieces=bad)
     with pytest.raises(ValueError, match="##"):
         wp.wordpiece_vocab(spark, {"ok"}, bad)
-    with pytest.raises(ValueError, match="##"):
-        wp.encode_wordpiece(docs, bad)
 
 
 @settings(max_examples=6, deadline=None,
@@ -415,16 +450,15 @@ def test_wp_two_set_property_sweep(spark, texts, init, cont):
     rows = list(enumerate(texts))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r["p"] for r in docs.select(
-        "doc_id", wp.segment_text_wp("text", init, 3,
-                                     cont_pieces=cont).alias("p"))
+        "doc_id",
+        sg.segment_text("text", wp.segmenter(init, 3, cont)).alias("p"))
         .collect()}
     for d, t in rows:
         want = [p for w in t.split(" ") if w
                 for p in py_greedy2(w, init, cont, 3)]
         assert got[d] == want, (d, t, sorted(init), sorted(cont))
     joined = {r["doc_id"]: r["pieces"] for r in
-              wp.encode_wordpiece(docs, init, k=3,
-                                  cont_pieces=cont).collect()}
+              sg.encode_pieces(docs, wp.segmenter(init, 3, cont)).collect()}
     assert joined == got
 
 
@@ -432,7 +466,7 @@ def test_wp_two_set_30k_vocab_broadcast_path(spark):
     """r17 (carried from VERDICT r15 next #3): a released-BERT-scale
     TWO-SET vocabulary (≥30k pieces, init and continuation sets with
     genuine membership asymmetry) through the NATURAL gate — the
-    one-row broadcast map relation path, not a forced map_lit_max —
+    one-row broadcast map relation path, not a forced gate —
     pinned against an independent Python greedy reference. Closes the
     audit hole that the two-set rel path had only run at toy size."""
     import itertools
@@ -452,7 +486,7 @@ def test_wp_two_set_30k_vocab_broadcast_path(spark):
     init = singles | pairs | set(triples)
     cont = singles | set(quads)
     assert len(set(wp._flag_items(init, cont))) >= 30000
-    assert len(init | cont) > ug.UNIGRAM_MAP_LIT_MAX  # natural rel gate
+    assert len(init | cont) > sg.MAP_LIT_MAX  # natural rel gate
 
     k = 4
     flags = dict(wp._flag_items(init, cont))
@@ -477,10 +511,10 @@ def test_wp_two_set_30k_vocab_broadcast_path(spark):
              "thequickbrown", "aaa", string.ascii_lowercase]
     docs = spark.createDataFrame(
         [(i, w) for i, w in enumerate(words)], "doc_id long, text string")
-    seg = wp.segment_docs_wp(docs, init, k=k, cont_pieces=cont)
+    seg = sg.segment_docs(docs, wp.segmenter(init, k, cont))
     # the natural shipping shape is the one-row broadcast map relation
     plan = seg._jdf.queryExecution().analyzed().toString()
-    assert "_wpm" in plan
+    assert sg.MAP_COL in plan
     got = {r["doc_id"]: r["pieces"] for r in seg.collect()}
     want = {i: ref_word(w) for i, w in enumerate(words)}
     assert got == want
