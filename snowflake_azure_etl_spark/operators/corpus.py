@@ -198,31 +198,19 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
         # release path. The un-floored counts double as the scorers'
         # gram set (counts-as-grams — the canonical pattern from the
         # q57 leg), so scoring adds no distinct pass over positions.
+        order = 2 if lm_gate == "mean" else 3
+        p = lm_ops.LM_PREFIX[order]
         toks = cached_relation(lm_ops.tokenized(docs, id_col, text_col),
                                "lm_tk")
-        uni_all, bi_all = lm_ops.bigram_lm_counts(docs, text_col,
-                                                  toks=toks)
-        uni, bi, tot = lm_ops.lm_model_from_counts(uni_all, bi_all)
-        if lm_gate == "mean":
-            sc = cached_relation(
-                lm_ops.bigram_lm_bits(docs, id_col, text_col,
-                                      uni, bi, tot,
-                                      toks=toks, grams=bi_all),
-                "lm_scored")
-            keep = (lm_ops.lm_keep(sc, lm_ops.lm_corpus_threshold(sc))
-                    .select(id_col, F.col("lm_keep").alias("_lmk")))
-        else:
-            tri_all = lm_ops.trigram_lm_counts(docs, text_col,
-                                               toks=toks)
-            tri = tri_all.filter(F.col("c") >= lm_ops.LM_MIN_COUNT)
-            sc = cached_relation(
-                lm_ops.trigram_lm_bits(docs, id_col, text_col,
-                                       uni, bi, tri, tot,
-                                       toks=toks, grams=tri_all),
-                "lm3_scored")
-            keep = (lm_ops.lm_bucket(sc, lm_ops.lm_terciles(
-                        sc, n_rows=n_docs))
-                    .select(id_col, F.col("lm3_keep").alias("_lmk")))
+        counts = [lm_ops.gram_counts(toks, n) for n in range(1, order + 1)]
+        model, tot = lm_ops.lm_model_from_counts(counts)
+        sc = cached_relation(
+            lm_ops.lm_bits(docs, id_col, text_col, model, tot, order,
+                           toks=toks, grams=counts[-1]),
+            f"{p}_scored")
+        keep = (lm_ops.lm_select(
+                    sc, lm_ops.lm_selection(sc, order, n_rows=n_docs), order)
+                .select(id_col, F.col(f"{p}_keep").alias("_lmk")))
         kept = kept.join(keep, id_col).filter(F.col("_lmk")).drop("_lmk")
     if lang_temperature is not None:
         # temperature-scaled rebalancing (mT5/CC-100): derive the

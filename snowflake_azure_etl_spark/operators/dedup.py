@@ -726,17 +726,6 @@ def incremental_exact(new_docs: DataFrame, seen_hashes: DataFrame,
 
 SPAN_TOKENS = 3
 SPAN_MIN_DOCS = 2
-#: Fail-loud cap on the row-local common-span map
-#: (`scrub_repeated_spans_bcast`). Deliberately TINY: Catalyst's
-#: GetMapValue on a map column is a LINEAR scan, so each span lookup
-#: costs O(map entries) — measured: a ~25k-entry map made the q53 leg
-#: ~5x slower than the anti-join plan at sf0.1. The map path only wins
-#: when the boilerplate set is attested-small enough that per-row scans
-#: beat a corpus shuffle; beyond the cap the guard raises (inside the
-#: map expression, so column pruning cannot disarm it) and the caller
-#: uses `scrub_repeated_spans` — whose broadcast-hash anti-join IS the
-#: O(1) lookup the map cannot provide.
-SPAN_MAP_MAX_ENTRIES = 1_024
 
 
 def doc_spans(text: Column | str, span_tokens: int = SPAN_TOKENS) -> Column:
@@ -770,54 +759,6 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
             .filter(F.col("n_docs") >= min_docs))
 
 
-def repeated_span_map(common: DataFrame,
-                      max_entries: int = SPAN_MAP_MAX_ENTRIES) -> DataFrame:
-    """ONE-ROW span -> n_docs map of the common-span relation (the
-    token_freq_map shape), with the size guard folded into the map
-    expression itself: an over-cap boilerplate set raises at execution
-    instead of silently OOM-ing the broadcast."""
-    m = F.map_from_entries(F.collect_list(F.struct("span", "n_docs")))
-    guarded = F.when(
-        F.size(m) > max_entries,
-        F.raise_error(F.lit(
-            f"repeated_span_map: common-span set exceeds {max_entries} "
-            "entries; use scrub_repeated_spans")),
-    ).otherwise(m)
-    return common.agg(guarded.alias("_cs"))
-
-
-def scrub_repeated_spans_bcast(docs: DataFrame, id_col: str = "doc_id",
-                               text_col: str = "text",
-                               span_tokens: int = SPAN_TOKENS,
-                               min_docs: int = SPAN_MIN_DOCS,
-                               max_entries: int = SPAN_MAP_MAX_ENTRIES,
-                               ) -> DataFrame:
-    """Row-local scrub variant for ATTESTED-TINY boilerplate sets:
-    crossJoin with the one-row broadcast span map + a higher-order
-    filter — zero corpus shuffles, no reassembly round trip.
-
-    Only sane under the map cap: GetMapValue is a linear scan, so each
-    span lookup costs O(map entries) — at ~25k entries this path
-    measured ~5x SLOWER than `scrub_repeated_spans` despite shuffling
-    nothing. The fail-loud cap (raised inside the map expression, so
-    pruning cannot disarm it) keeps the trap closed; the anti-join
-    plan's broadcast hash table is the O(1) lookup this path lacks."""
-    common = repeated_spans(docs, id_col, text_col, span_tokens, min_docs)
-    spans = doc_spans(text_col, span_tokens)
-    kept = F.filter(spans, lambda s: F.element_at(F.col("_cs"), s).isNull())
-    return (docs
-            .crossJoin(bounded_broadcast(
-                repeated_span_map(common, max_entries),
-                bound="one-row span map (fail-loud max_entries cap)",
-                max_rows=1))
-            .select(
-                F.col(id_col),
-                F.size(spans).alias("n_spans"),
-                (F.size(spans) - F.size(kept)).cast("long")
-                .alias("n_removed"),
-                F.array_join(kept, " ").alias("cleaned")))
-
-
 def scrub_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text",
                          span_tokens: int = SPAN_TOKENS,
@@ -834,9 +775,8 @@ def scrub_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     corpus-sized — which AQE converts to a broadcast hash anti-join at
     runtime when it materializes small (the plan never commits to
     holding it in memory); reassembly is the one corpus shuffle, keyed
-    on the doc id. For attested-tiny boilerplate sets the shuffle-free
-    `scrub_repeated_spans_bcast` variant exists; pytest pins the two
-    row-equal."""
+    on the doc id. pytest pins it row-equal to an independent Python
+    reference."""
     common = repeated_spans(docs, id_col, text_col, span_tokens, min_docs)
     sp = docs.select(
         F.col(id_col),

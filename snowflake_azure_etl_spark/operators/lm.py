@@ -1,4 +1,4 @@
-"""Interpolated bigram/trigram language-model perplexity filter — the
+"""Interpolated n-gram language-model perplexity filter — the
 CCNet/KenLM quality tier above the unigram corpus LM (VERDICT r11 #5).
 
 CCNet (Wenzek et al. 2019) scores every document with a KenLM n-gram
@@ -9,51 +9,49 @@ per-token scores, the keep decision — is oracle-replayable
 hash-for-hash (ln/exp are NOT bit-portable across engines; integer
 shifts and string length are — see `sampling.plog2`).
 
-Model. Token unigram counts c1(w) and adjacent-bigram counts
-c2(w1,w2) over the corpus, each with a min-count floor (rare grams
-drop to 0 — the KenLM pruning analog that bounds the artifact). The
-per-position score is the LOG-LINEAR interpolation (product-of-
-experts smoothing — portable where the classic linear interpolation
-is not, because log(a+b) has no exact-integer form):
+Model. Adjacent-gram counts c_j over the corpus for j = 1..n (`gram_
+counts`), each with a min-count floor (rare grams drop to 0 — the
+KenLM pruning analog that bounds the artifact). The per-position
+score of an order-n position w1..wn is the LOG-LINEAR interpolation
+(product-of-experts smoothing — portable where the classic linear
+interpolation is not, because log(a+b) has no exact-integer form):
 
-    score(w1,w2) = lam · [plog2(c2+1) − plog2(c1(w1)+V)]
-                 + (LAM_DEN−lam) · [plog2(c1(w2)+1) − plog2(N+V)]
+    score = Σ_{j=1..n} λ_j · [plog2(c_j(last j tokens) + 1)
+                              − plog2(c_{j−1}(first j−1 of those) + V)]
 
-with add-one smoothing over the vocab V, N = total tokens. Both
-bracketed terms are ≤ 0 (c2 ≤ c1(w1) and c1 ≤ N, and a floored-out
-w1 floors every bigram it leads), so per-document totals are exact
-non-positive longs. The per-document perplexity proxy is
+with c_0 = N (total tokens), add-one smoothing over the vocab V, and
+the integer weights `LM_WEIGHTS[n]` — (3, 1) at order 2, (4, 3, 1) at
+order 3. Every bracketed term is ≤ 0 (a gram's count never exceeds
+its prefix's, and floor monotonicity keeps that true after pruning:
+a gram that clears the floor forces its prefix over the same floor),
+so per-document totals are exact non-positive longs. The per-document
+perplexity proxy is
 
     ppl_bits = (−Σ score) div n_positions
 
-— average cost per position in units of LAM_DEN·PLOG2_SCALE·log2 —
-and the keep decision compares it to the CORPUS-average cost (one
-one-row aggregate): keep ≡ ppl_bits ≤ (Σ_corpus −score) div
-(Σ_corpus positions), CCNet's "head+middle of the distribution" with
-an exact-integer cut.
+— average cost per position in units of Σλ·PLOG2_SCALE·log2. Each
+order carries its own selection rule (`lm_selection` / `lm_select`):
+order 2 keeps documents at or below the CORPUS-average cost (one
+one-row aggregate, `lm_keep`); order 3 applies CCNet's actual rule —
+exact-integer tercile cuts of the perplexity distribution
+(`lm_terciles`) with head/middle kept and tail dropped (`lm_bucket`).
 
 Scale (100 TB):
-- training = two grouped counts over exploded tokens/bigrams with
-  map-side combine; the floor bounds the persisted artifact (the
+- training = one grouped count per order over exploded tokens/grams
+  with map-side combine; the floor bounds the persisted artifact (the
   model a pipeline trains once per corpus version);
-- scoring = one (doc, w1, w2) bag aggregate (uniform keys), then
-  equi-joins against the model relations — UNhinted, so AQE
-  broadcasts them when they fit and shuffle-joins on token keys when
-  a 100 TB vocab does not (a forced broadcast here would be the
-  r11 q50 defect); the totals/threshold relations are one-row
-  attested broadcasts;
-- the keep decision is row-local against the one-row threshold — no
-  global sort, no rank window over the corpus.
+- scoring = the model joins evaluate once per DISTINCT gram, then the
+  corpus-sized position relation pays one gram-keyed equi-join; the
+  model joins are UNhinted, so AQE broadcasts them when they fit and
+  shuffle-joins on token keys when a 100 TB vocab does not (a forced
+  broadcast here would be the r11 q50 defect); the totals/threshold
+  relations are one-row attested broadcasts;
+- the keep decision is row-local against the one-row selection model
+  — no global sort, no rank window over the corpus.
 
-The trigram tier (`trigram_lm_model` / `trigram_lm_bits`) is the same
-construction one order up — 3-way log-linear interpolation of
-tri/bi/uni experts — and carries CCNet's ACTUAL selection rule:
-exact-integer tercile cuts of the perplexity distribution
-(`lm_terciles`) with head/middle kept and tail dropped (`lm_bucket`);
-the average-threshold `lm_keep` is the two-way approximation. All
-gram families and scoring bags can explode from ONE shared
+All gram families and scoring bags can explode from ONE shared
 `tokenized` relation, so the corpus text is decoded and split once
-per session across every tier.
+per session across every order.
 
 Reference parity note: the reference repo (rahil911/snowflake-azure-etl)
 has no LM tier — this extends the LLM-pipeline surface
@@ -63,11 +61,13 @@ DSIR fixed-point conventions.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.attest import bounded_broadcast
-from .sampling import PLOG2_SCALE, plog2, plog2_sql
+from .sampling import plog2, plog2_sql
 
 #: Interpolation weight lam/LAM_DEN on the bigram expert (0.75 — the
 #: conventional heavy-bigram mix); exact integers so both engines
@@ -80,13 +80,20 @@ LM_LAMBDA_DEN = 4
 #: KenLM pruning does.
 LM_MIN_COUNT = 2
 
-#: Trigram-tier interpolation weights (tri/bi/uni experts, summing to
-#: LM3_DEN) — the heavy-high-order mix one tier above the bigram
-#: model's 3/4-1/4. Exact integers, same portability contract.
+#: Trigram interpolation weights (tri/bi/uni experts) — the
+#: heavy-high-order mix one order above the bigram model's 3/4-1/4.
+#: Exact integers, same portability contract.
 LM3_L3 = 4
 LM3_L2 = 3
 LM3_L1 = 1
-LM3_DEN = LM3_L3 + LM3_L2 + LM3_L1
+
+#: Per-order expert weights, highest order first: (λ_n, …, λ_1).
+LM_WEIGHTS = {2: (LM_LAMBDA_NUM, LM_LAMBDA_DEN - LM_LAMBDA_NUM),
+              3: (LM3_L3, LM3_L2, LM3_L1)}
+
+#: Per-order output-column prefix: <p>_bits, <p>_n_pos, <p>_ppl_bits
+#: and the selection columns (lm_keep; lm3_bucket/lm3_keep).
+LM_PREFIX = {2: "lm", 3: "lm3"}
 
 
 def _toks(text_col: Column | str) -> Column:
@@ -96,32 +103,30 @@ def _toks(text_col: Column | str) -> Column:
     return tokens(text_col)
 
 
-def _pairs_of(toks: Column) -> Column:
-    """array<struct<w1,w2>> of adjacent pairs from a token-array
-    column (empty under 2 tokens) — two shifted views zipped, the
-    word_shingles construction specialized to n=2 with the pair kept
-    structured."""
-    return F.when(
-        F.size(toks) >= 2,
-        F.zip_with(F.slice(toks, 1, F.size(toks) - 1),
-                   F.slice(toks, 2, F.size(toks) - 1),
-                   lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+def _gram_keys(n: int) -> list[str]:
+    """Key columns of an order-n count relation: `tok` for unigrams
+    (the key ingest tables already landed with), w1..wn above."""
+    return ["tok"] if n == 1 else [f"w{k}" for k in range(1, n + 1)]
 
 
-def _triples_of(toks: Column) -> Column:
-    """array<struct<w1,w2,w3>> of adjacent triples from a token-array
-    column (empty under 3 tokens) — index-transform, `_pairs_of` one
-    order up."""
+def _grams_of(toks: Column, n: int) -> Column:
+    """array<struct<w1..wn>> of adjacent n-grams (n ≥ 2) from a
+    token-array column, empty under n tokens — an index transform
+    over the n shifted views."""
+    keys = _gram_keys(n)
     return F.when(
-        F.size(toks) >= 3,
+        F.size(toks) >= n,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.struct(F.element_at(toks, i).alias("w1"),
-                               F.element_at(toks, i + 1).alias("w2"),
-                               F.element_at(toks, i + 2).alias("w3"))),
-    ).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string,w3:string>>"))
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.struct(*(F.element_at(toks, i + k).alias(w)
+                                 for k, w in enumerate(keys)))),
+    ).otherwise(F.array().cast(
+        "array<struct<" + ",".join(f"{w}:string" for w in keys) + ">>"))
+
+
+def _key_cols(counts: DataFrame) -> list[str]:
+    # a count relation is its gram keys plus `c`
+    return [c for c in counts.columns if c != "c"]
 
 
 def tokenized(docs: DataFrame, id_col: str = "doc_id",
@@ -130,124 +135,61 @@ def tokenized(docs: DataFrame, id_col: str = "doc_id",
     the whole LM family (the q53 `_window_occurrences` pattern).
     Every gram family and scoring bag is an explode over this one
     relation, so a session/pipeline that caches it pays the corpus
-    text decode + split exactly once across unigram, bigram, and
-    trigram tiers. Corpus-token-sized × one array column;
-    MEMORY_AND_DISK spills at 100 TB."""
+    text decode + split exactly once across every order.
+    Corpus-token-sized × one array column; MEMORY_AND_DISK spills at
+    100 TB."""
     return docs.select(F.col(id_col), _toks(text_col).alias("tk"))
 
 
-def unigram_counts(docs: DataFrame, text_col: str = "text",
-                   toks: DataFrame | None = None) -> DataFrame:
-    """(tok, c): UN-floored unigram counts. Not derivable from the
-    pair bag (each document's LAST token leads no pair), so the
-    unigram family keeps its own explode over the shared tokens."""
-    base = (toks if toks is not None
-            else docs.select(_toks(text_col).alias("tk")))
-    return (base.select(F.explode("tk").alias("tok"))
-            .groupBy("tok").agg(F.count("*").alias("c")))
-
-
-def bigram_lm_counts(docs: DataFrame, text_col: str = "text",
-                     toks: DataFrame | None = None
-                     ) -> tuple[DataFrame, DataFrame]:
-    """(uni_all, bi_all): the UN-floored gram counts — the growable
+def gram_counts(toks: DataFrame, n: int) -> DataFrame:
+    """(tok, c) at n = 1, (w1, …, wn, c) above: the UN-floored
+    adjacent-gram counts of a `tokenized` relation — the growable
     artifact. Counts are additive, so a pipeline lands THESE per
     corpus version/batch and grows them with `merge_gram_counts` (or
     forgets with `subtract_gram_counts`); the floored serving model
     derives by `lm_model_from_counts`. The floor itself is NOT
     additive (a gram under the floor in two batches can clear it in
     their union), which is why the floored relations never merge.
-    Pass `toks` (a `tokenized` relation, typically session-cached) to
-    count from the shared tokenize-once scan."""
-    base = (toks if toks is not None
-            else docs.select(_toks(text_col).alias("tk")))
-    uni_all = unigram_counts(docs, text_col, toks=base)
-    bi_all = (base.select(F.explode(_pairs_of(F.col("tk"))).alias("p"))
-              .groupBy(F.col("p.w1").alias("w1"),
-                       F.col("p.w2").alias("w2"))
-              .agg(F.count("*").alias("c")))
-    return uni_all, bi_all
+    Unigrams are not derivable from the pair bag (each document's
+    LAST token leads no pair), so every order explodes the shared
+    tokens itself."""
+    if n == 1:
+        grams = toks.select(F.explode("tk").alias("tok"))
+    else:
+        grams = toks.select(F.inline(_grams_of(F.col("tk"), n)))
+    return grams.groupBy(*_gram_keys(n)).agg(F.count("*").alias("c"))
 
 
-def lm_model_from_counts(uni_all: DataFrame, bi_all: DataFrame,
-                         min_count: int = LM_MIN_COUNT
-                         ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The serving model from (possibly merged) raw counts:
-    (uni floored, bi floored, one-row totals). Totals come BEFORE the
-    floor — the smoothing denominator must cover the full
-    distribution, not the pruned artifact."""
-    totals = uni_all.agg(F.sum("c").cast("long").alias("n"),
-                         F.count("*").alias("v"))
-    return (uni_all.filter(F.col("c") >= min_count),
-            bi_all.filter(F.col("c") >= min_count),
-            totals)
+def lm_model_from_counts(counts: Sequence[DataFrame]
+                         ) -> tuple[list[DataFrame], DataFrame]:
+    """The serving model from (possibly merged) raw counts
+    [c_1, …, c_n]: (the floored relations in the same order, one-row
+    totals (n = N tokens, v = V vocab) from the unigram counts).
+    Totals come BEFORE the floor — the smoothing denominator must
+    cover the full distribution, not the pruned artifact."""
+    totals = counts[0].agg(F.sum("c").cast("long").alias("n"),
+                           F.count("*").alias("v"))
+    return [c.filter(F.col("c") >= LM_MIN_COUNT) for c in counts], totals
 
 
-def bigram_lm_model(docs: DataFrame, text_col: str = "text",
-                    min_count: int = LM_MIN_COUNT,
-                    toks: DataFrame | None = None
-                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train the model in one shot: (uni, bi, totals) =
-    `lm_model_from_counts(*bigram_lm_counts(docs))`."""
-    uni_all, bi_all = bigram_lm_counts(docs, text_col, toks=toks)
-    return lm_model_from_counts(uni_all, bi_all, min_count)
-
-
-def trigram_lm_counts(docs: DataFrame, text_col: str = "text",
-                      toks: DataFrame | None = None) -> DataFrame:
-    """(w1, w2, w3, c): UN-floored adjacent-trigram counts — the
-    third growable gram artifact beside `bigram_lm_counts`' two.
-    Grows with `merge_gram_counts(..., key_cols=("w1","w2","w3"))`
-    and forgets with `subtract_gram_counts` — the laws are key-generic
-    by construction."""
-    base = (toks if toks is not None
-            else docs.select(_toks(text_col).alias("tk")))
-    return (base.select(F.explode(_triples_of(F.col("tk"))).alias("t"))
-            .groupBy(F.col("t.w1").alias("w1"),
-                     F.col("t.w2").alias("w2"),
-                     F.col("t.w3").alias("w3"))
-            .agg(F.count("*").alias("c")))
-
-
-def trigram_lm_model(docs: DataFrame, text_col: str = "text",
-                     min_count: int = LM_MIN_COUNT,
-                     toks: DataFrame | None = None
-                     ) -> tuple[DataFrame, DataFrame, DataFrame,
-                                DataFrame]:
-    """Train the trigram tier in one shot: (uni, bi, tri, totals) —
-    the bigram model's relations plus the floored trigram counts.
-    Floor monotonicity keeps every interpolation term ≤ 0: a trigram
-    that clears the floor forces its prefix bigram (c2_all ≥ c3_all)
-    and its suffix bigram's lead unigram (c1_all ≥ c2_all) over the
-    same floor, so no surviving numerator ever exceeds its
-    denominator's count."""
-    uni_all, bi_all = bigram_lm_counts(docs, text_col, toks=toks)
-    uni, bi, totals = lm_model_from_counts(uni_all, bi_all, min_count)
-    tri = (trigram_lm_counts(docs, text_col, toks=toks)
-           .filter(F.col("c") >= min_count))
-    return uni, bi, tri, totals
-
-
-def merge_gram_counts(a: DataFrame, b: DataFrame,
-                      key_cols: "tuple[str, ...]" = ("tok",)
-                      ) -> DataFrame:
-    """SUM-merge of raw gram-count relations — counts(A) ⊎ counts(B)
-    == counts(A ∪ B), the law that grows the LM artifact per ingest
-    batch without re-scanning the corpus (the `merge_window_index`
-    contract, pinned in tests/test_lm.py). Use ("w1", "w2") for the
-    bigram relation."""
-    return (a.unionByName(b).groupBy(*key_cols)
+def merge_gram_counts(a: DataFrame, b: DataFrame) -> DataFrame:
+    """SUM-merge of raw gram-count relations of one order — counts(A)
+    ⊎ counts(B) == counts(A ∪ B), the law that grows the LM artifact
+    per ingest batch without re-scanning the corpus (the
+    `merge_window_index` contract, pinned in tests/test_lm.py). The
+    key columns are every column but `c`."""
+    return (a.unionByName(b).groupBy(*_key_cols(a))
             .agg(F.sum("c").cast("long").alias("c")))
 
 
-def subtract_gram_counts(index: DataFrame, removed: DataFrame,
-                         key_cols: "tuple[str, ...]" = ("tok",)
-                         ) -> DataFrame:
+def subtract_gram_counts(index: DataFrame,
+                         removed: DataFrame) -> DataFrame:
     """Decremental maintenance — counts(corpus) ⊖ counts(removed ⊆
     corpus) == counts(corpus \\ removed) exactly: the LM artifact's
     right-to-be-forgotten path (the `subtract_window_index` law).
     Over-subtraction (removed not a subset) fails loud instead of
     landing a silently wrong model; zeroed grams leave the relation.
+    The key columns are every column of `index` but `c`.
 
     r12 review hardening: the join is FULL OUTER (a left join dropped
     removed-only grams before the guard could see them — a removed
@@ -255,6 +197,7 @@ def subtract_gram_counts(index: DataFrame, removed: DataFrame,
     and the removed side pre-aggregates by key (duplicate keys would
     both fan out the output and evade the per-row guard by splitting
     one over-subtraction across rows)."""
+    key_cols = _key_cols(index)
     r = (removed.groupBy(*key_cols)
          .agg(F.sum("c").cast("long").alias("_cr")))
     n = F.when(
@@ -266,161 +209,90 @@ def subtract_gram_counts(index: DataFrame, removed: DataFrame,
             "is not a subset of the indexed corpus")).cast("long"),
     ).otherwise(F.coalesce(F.col("c"), F.lit(0).cast("long"))
                 - F.coalesce(F.col("_cr"), F.lit(0).cast("long")))
-    return (index.join(r, list(key_cols), "full_outer")
+    return (index.join(r, key_cols, "full_outer")
             .select(*key_cols, n.alias("c"))
             .filter(F.col("c") > 0))
 
 
-def bigram_lm_bits(docs: DataFrame, id_col: str, text_col: str,
-                   uni: DataFrame, bi: DataFrame, totals: DataFrame,
-                   lam_num: int = LM_LAMBDA_NUM,
-                   lam_den: int = LM_LAMBDA_DEN,
-                   scale: int = PLOG2_SCALE,
-                   toks: DataFrame | None = None,
-                   grams: DataFrame | None = None) -> DataFrame:
-    """(id, lm_bits, lm_n_pos, lm_ppl_bits): per-document interpolated
-    log2-likelihood (exact long, ≤ 0) over adjacent-token positions,
-    the position count, and the per-position perplexity proxy
-    (NULL for documents under 2 tokens — nothing to score).
+def lm_bits(docs: DataFrame, id_col: str, text_col: str,
+            model: Sequence[DataFrame], totals: DataFrame, order: int,
+            toks: DataFrame | None = None,
+            grams: DataFrame | None = None) -> DataFrame:
+    """(id, <p>_bits, <p>_n_pos, <p>_ppl_bits), p = LM_PREFIX[order]:
+    per-document interpolated log2-likelihood (exact long, ≤ 0) over
+    adjacent order-gram positions, the position count, and the
+    per-position perplexity proxy (NULL for documents under `order`
+    tokens — nothing to score). `model` is the floored [c_1, …] of
+    `lm_model_from_counts` (its first `order` relations are used),
+    `totals` its one-row (n, v).
 
     Score-per-GRAM shape (r12 second pass): the per-position term
-    depends only on (w1, w2), so the model joins and the plog2
-    expression trees evaluate once per DISTINCT gram (Zipf-bounded —
-    ≪ positions at corpus scale) and the corpus-sized position
-    relation pays exactly ONE gram-keyed equi-join, then a per-doc
-    aggregate whose map-side combine collapses each partition's
-    positions before the doc-keyed shuffle. Pass `grams` — any
-    relation whose (w1, w2) rows COVER the corpus's observed pairs,
-    canonically the un-floored `bigram_lm_counts` relation already
-    built for the model — to skip the fallback distinct; the model
-    joins stay unhinted (AQE picks broadcast vs shuffle by real
-    size), the one-row totals broadcast is attested. `toks`: optional
-    pre-tokenized (id, tk) relation (the shared tokenize-once scan).
-    """
-    src = (toks if toks is not None
-           else docs.select(F.col(id_col), _toks(text_col).alias("tk")))
-    pos = (src.select(F.col(id_col),
-                      F.explode(_pairs_of(F.col("tk"))).alias("p"))
-           .select(id_col, F.col("p.w1").alias("w1"),
-                   F.col("p.w2").alias("w2")))
+    depends only on the gram, so the 2·order − 1 model joins and the
+    plog2 expression trees evaluate once per DISTINCT gram
+    (Zipf-bounded — ≪ positions at corpus scale) and the corpus-sized
+    position relation pays exactly ONE gram-keyed equi-join, then a
+    per-doc aggregate whose map-side combine collapses each
+    partition's positions before the doc-keyed shuffle. Pass `grams`
+    — any relation whose gram rows COVER the corpus's observed grams,
+    canonically the un-floored `gram_counts(toks, order)` relation
+    already built for the model — to skip the fallback distinct; the
+    model joins stay unhinted (AQE picks broadcast vs shuffle by real
+    size — a vocab³ artifact at 100 TB must be allowed to
+    shuffle-join), the one-row totals broadcast is attested. `toks`:
+    optional pre-tokenized (id, tk) relation (the shared
+    tokenize-once scan)."""
+    p = LM_PREFIX[order]
+    keys = _gram_keys(order)
+    src = toks if toks is not None else tokenized(docs, id_col, text_col)
+    pos = src.select(F.col(id_col), F.inline(_grams_of(F.col("tk"), order)))
     # distinct also on the caller's relation: duplicate gram keys
     # would fan out the position join and silently multiply scores —
     # the canonical input (a groupBy output) is already distinct, so
     # this is a vocab-side no-op in data, a correctness guard in kind
-    gkeys = (grams.select("w1", "w2").distinct() if grams is not None
-             else pos.select("w1", "w2").distinct())
-    u1 = uni.select(F.col("tok").alias("w1"), F.col("c").alias("_c1"))
-    u2 = uni.select(F.col("tok").alias("w2"), F.col("c").alias("_c2"))
-    b = bi.select("w1", "w2", F.col("c").alias("_cb"))
-    zero = F.lit(0).cast("long")
-    g = (gkeys.join(u1, "w1", "left").join(u2, "w2", "left")
-         .join(b, ["w1", "w2"], "left")
-         .crossJoin(bounded_broadcast(
-             totals, bound="one-row LM totals (N tokens, V vocab)",
-             max_rows=1)))
-    term = (F.lit(lam_num)
-            * (plog2(F.coalesce(F.col("_cb"), zero) + 1, scale)
-               - plog2(F.coalesce(F.col("_c1"), zero) + F.col("v"),
-                       scale))
-            + F.lit(lam_den - lam_num)
-            * (plog2(F.coalesce(F.col("_c2"), zero) + 1, scale)
-               - plog2(F.col("n") + F.col("v"), scale)))
-    gterm = g.select("w1", "w2", term.alias("_t"))
+    g = (grams if grams is not None else pos).select(*keys).distinct()
+    # expert j reads c_j over the window of the last j keys (start
+    # order − j) and c_{j−1} over that window's first j − 1 keys;
+    # each (length m, start s) window joins once, as column _c{s}_{m}
+    for m, s in sorted({(m, order - j) for j in range(1, order + 1)
+                        for m in (j - 1, j) if m >= 1}):
+        win = keys[s:s + m]
+        g = g.join(model[m - 1].select(
+            *(F.col(a).alias(b) for a, b in zip(_gram_keys(m), win)),
+            F.col("c").alias(f"_c{s}_{m}")), win, "left")
+    g = g.crossJoin(bounded_broadcast(
+        totals, bound="one-row LM totals (N tokens, V vocab)",
+        max_rows=1))
+
+    def c(s: int, m: int) -> Column:
+        return F.coalesce(F.col(f"_c{s}_{m}"), F.lit(0).cast("long"))
+
+    term = None
+    for j, lam in zip(range(order, 0, -1), LM_WEIGHTS[order]):
+        s = order - j
+        ctx = c(s, j - 1) if j > 1 else F.col("n")
+        t = F.lit(lam) * (plog2(c(s, j) + 1) - plog2(ctx + F.col("v")))
+        term = t if term is None else term + t
+    gterm = g.select(*keys, term.alias("_t"))
     # LEFT join + per-row raise: an under-covering `grams` relation
     # must fail loud, not silently drop scored positions (the
     # subtract_gram_counts guard discipline)
     checked = F.when(F.col("_t").isNull(), F.raise_error(F.lit(
-        "bigram_lm_bits: grams does not cover an observed corpus "
-        "pair — pass the un-floored counts relation or None"))
+        f"lm_bits: grams does not cover an observed corpus {order}-gram"
+        " — pass the un-floored counts relation or None"))
         .cast("long")).otherwise(F.col("_t"))
-    per_doc = (pos.join(gterm, ["w1", "w2"], "left")
+    per_doc = (pos.join(gterm, keys, "left")
                .groupBy(id_col)
-               .agg(F.sum(checked).alias("lm_bits"),
-                    F.count("*").alias("lm_n_pos")))
-    ppl = F.call_function("div", -F.col("lm_bits"), F.col("lm_n_pos"))
+               .agg(F.sum(checked).alias(f"{p}_bits"),
+                    F.count("*").alias(f"{p}_n_pos")))
+    ppl = F.call_function("div", -F.col(f"{p}_bits"),
+                          F.col(f"{p}_n_pos"))
     return (docs.select(id_col).join(per_doc, id_col, "left")
-            .select(id_col, "lm_bits",
-                    F.col("lm_n_pos").cast("long").alias("lm_n_pos"),
-                    ppl.alias("lm_ppl_bits")))
+            .select(id_col, f"{p}_bits",
+                    F.col(f"{p}_n_pos").cast("long").alias(f"{p}_n_pos"),
+                    ppl.alias(f"{p}_ppl_bits")))
 
 
-def trigram_lm_bits(docs: DataFrame, id_col: str, text_col: str,
-                    uni: DataFrame, bi: DataFrame, tri: DataFrame,
-                    totals: DataFrame,
-                    l3: int = LM3_L3, l2: int = LM3_L2,
-                    l1: int = LM3_L1,
-                    scale: int = PLOG2_SCALE,
-                    toks: DataFrame | None = None,
-                    grams: DataFrame | None = None) -> DataFrame:
-    """(id, lm3_bits, lm3_n_pos, lm3_ppl_bits): the trigram tier's
-    per-document interpolated log2-likelihood over adjacent-triple
-    positions (NULL for documents under 3 tokens). Same score-per-
-    gram shape as `bigram_lm_bits` one order up: the five model
-    joins and the plog2 trees evaluate once per distinct triple
-    (`grams` — canonically the un-floored trigram counts already
-    built for the model; Zipf-bounded), unhinted so AQE picks
-    broadcast vs shuffle by real size — a vocab³ artifact at 100 TB
-    must be allowed to shuffle-join; the corpus-sized position
-    relation pays ONE gram-keyed join, then the map-side-combining
-    per-doc aggregate.
-
-        score = l3·[plog2(c3+1) − plog2(c2(w1,w2)+V)]
-              + l2·[plog2(c2(w2,w3)+1) − plog2(c1(w2)+V)]
-              + l1·[plog2(c1(w3)+1) − plog2(N+V)]
-    """
-    src = (toks if toks is not None
-           else docs.select(F.col(id_col), _toks(text_col).alias("tk")))
-    pos = (src.select(F.col(id_col),
-                      F.explode(_triples_of(F.col("tk"))).alias("t"))
-           .select(id_col, F.col("t.w1").alias("w1"),
-                   F.col("t.w2").alias("w2"),
-                   F.col("t.w3").alias("w3")))
-    gkeys = (grams.select("w1", "w2", "w3").distinct()
-             if grams is not None
-             else pos.select("w1", "w2", "w3").distinct())
-    u2 = uni.select(F.col("tok").alias("w2"), F.col("c").alias("_cu2"))
-    u3 = uni.select(F.col("tok").alias("w3"), F.col("c").alias("_cu3"))
-    b12 = bi.select("w1", F.col("w2").alias("w2"),
-                    F.col("c").alias("_c12"))
-    b23 = bi.select(F.col("w1").alias("w2"), F.col("w2").alias("w3"),
-                    F.col("c").alias("_c23"))
-    t3 = tri.select("w1", "w2", "w3", F.col("c").alias("_c123"))
-    zero = F.lit(0).cast("long")
-    g = (gkeys.join(u2, "w2", "left").join(u3, "w3", "left")
-         .join(b12, ["w1", "w2"], "left")
-         .join(b23, ["w2", "w3"], "left")
-         .join(t3, ["w1", "w2", "w3"], "left")
-         .crossJoin(bounded_broadcast(
-             totals, bound="one-row LM totals (N tokens, V vocab)",
-             max_rows=1)))
-    term = (F.lit(l3)
-            * (plog2(F.coalesce(F.col("_c123"), zero) + 1, scale)
-               - plog2(F.coalesce(F.col("_c12"), zero) + F.col("v"),
-                       scale))
-            + F.lit(l2)
-            * (plog2(F.coalesce(F.col("_c23"), zero) + 1, scale)
-               - plog2(F.coalesce(F.col("_cu2"), zero) + F.col("v"),
-                       scale))
-            + F.lit(l1)
-            * (plog2(F.coalesce(F.col("_cu3"), zero) + 1, scale)
-               - plog2(F.col("n") + F.col("v"), scale)))
-    gterm = g.select("w1", "w2", "w3", term.alias("_t"))
-    checked = F.when(F.col("_t").isNull(), F.raise_error(F.lit(
-        "trigram_lm_bits: grams does not cover an observed corpus "
-        "triple — pass the un-floored counts relation or None"))
-        .cast("long")).otherwise(F.col("_t"))
-    per_doc = (pos.join(gterm, ["w1", "w2", "w3"], "left")
-               .groupBy(id_col)
-               .agg(F.sum(checked).alias("lm3_bits"),
-                    F.count("*").alias("lm3_n_pos")))
-    ppl = F.call_function("div", -F.col("lm3_bits"), F.col("lm3_n_pos"))
-    return (docs.select(id_col).join(per_doc, id_col, "left")
-            .select(id_col, "lm3_bits",
-                    F.col("lm3_n_pos").cast("long").alias("lm3_n_pos"),
-                    ppl.alias("lm3_ppl_bits")))
-
-
-def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
+def lm_terciles(scored: DataFrame,
                 n_rows: int | None = None) -> DataFrame:
     """ONE row (t1, t2): the exact tercile cuts of the scored
     perplexity distribution — CCNet's actual head/middle/tail split
@@ -457,7 +329,7 @@ def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
     size ≈ 3·10⁸ integers), which at 10¹⁰ documents is hundreds of
     millions of rows — too many for ONE task's sort (VERDICT r12 #1)."""
     from ..plans.prefix import WINDOW_MAX_ROWS, ranged_prefix_sum
-    p = F.col(ppl_col)
+    p = F.col("lm3_ppl_bits")
     dist = (scored.filter(p.isNotNull())
             .groupBy(p.alias("_p")).agg(F.count("*").alias("_c")))
     if n_rows is None or n_rows > WINDOW_MAX_ROWS:
@@ -490,15 +362,12 @@ def lm_terciles(scored: DataFrame, ppl_col: str = "lm3_ppl_bits",
                      F.col("_p"))).alias("t2"))
 
 
-def lm_bucket(scored: DataFrame, cuts: DataFrame,
-              ppl_col: str = "lm3_ppl_bits",
-              bucket_col: str = "lm3_bucket",
-              keep_col: str = "lm3_keep") -> DataFrame:
-    """scored + (bucket, keep): row-local head/middle/tail label
+def lm_bucket(scored: DataFrame, cuts: DataFrame) -> DataFrame:
+    """scored + (lm3_bucket, lm3_keep): row-local head/middle/tail label
     against the one-row tercile cuts; CCNet keeps head+middle.
     Unscorable documents (NULL ppl) label 'unscorable' and are kept —
     the length gates own that regime (the `lm_keep` contract)."""
-    p = F.col(ppl_col)
+    p = F.col("lm3_ppl_bits")
     # NULL cuts (terciles over a corpus with no scorable documents)
     # must fail loud on the first scorable row — under p <= NULL both
     # WHEN branches are NULL-falsy, so every document would silently
@@ -515,48 +384,9 @@ def lm_bucket(scored: DataFrame, cuts: DataFrame,
               .otherwise(F.lit("tail")))
     return (scored.crossJoin(bounded_broadcast(
                 cuts, bound="one-row LM tercile cuts", max_rows=1))
-            .withColumn(bucket_col, bucket)
-            .withColumn(keep_col, F.col(bucket_col) != "tail")
+            .withColumn("lm3_bucket", bucket)
+            .withColumn("lm3_keep", F.col("lm3_bucket") != "tail")
             .drop("t1", "t2"))
-
-
-def lm_cuts_from_rollup(docs: DataFrame, uni_all: DataFrame,
-                        bi_all: DataFrame, tri_all: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        min_count: int = LM_MIN_COUNT,
-                        n_rows: int | None = None,
-                        toks: DataFrame | None = None) -> DataFrame:
-    """Refresh the tercile cuts from ROLLED-UP gram counts — the
-    sanctioned selection-model maintenance path for a pipeline that
-    grows its LM via `lm_counts_ingest_sink` + `rollup_gram_counts`
-    (VERDICT r12 #7). Derives the floored serving model from the raw
-    counts (the floor is not additive — it must re-apply to the
-    merged relation), re-scores the LANDED corpus against it, and
-    trains fresh cuts; stream-grown counts + this call equal a batch
-    retrain over the concatenated corpus exactly (pinned in
-    tests/test_streaming_ingest.py). `n_rows` attests the landed
-    corpus size for `lm_terciles`' parallel-path gate."""
-    uni, bi, tot = lm_model_from_counts(uni_all, bi_all, min_count)
-    tri = tri_all.filter(F.col("c") >= min_count)
-    sc = trigram_lm_bits(docs, id_col, text_col, uni, bi, tri, tot,
-                         toks=toks, grams=tri_all)
-    return lm_terciles(sc, n_rows=n_rows)
-
-
-def lm_thr_from_rollup(docs: DataFrame, uni_all: DataFrame,
-                       bi_all: DataFrame,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       min_count: int = LM_MIN_COUNT,
-                       toks: DataFrame | None = None) -> DataFrame:
-    """The bigram (mean-threshold) tier's maintenance twin of
-    `lm_cuts_from_rollup`: refresh the corpus-average keep threshold
-    from ROLLED-UP gram counts against the landed corpus — stream-
-    grown counts + this call equal a batch retrain exactly (pinned in
-    tests/test_lm.py)."""
-    uni, bi, tot = lm_model_from_counts(uni_all, bi_all, min_count)
-    sc = bigram_lm_bits(docs, id_col, text_col, uni, bi, tot,
-                        toks=toks, grams=bi_all)
-    return lm_corpus_threshold(sc)
 
 
 def lm_corpus_threshold(scored: DataFrame) -> DataFrame:
@@ -585,6 +415,50 @@ def lm_keep(scored: DataFrame, threshold: DataFrame) -> DataFrame:
                         F.coalesce(F.col("lm_ppl_bits") <= F.col("thr"),
                                    F.lit(True)))
             .drop("thr"))
+
+
+def lm_selection(scored: DataFrame, order: int,
+                 n_rows: int | None = None) -> DataFrame:
+    """The order's one-row selection model over its scored relation —
+    a bounded artifact (train once, broadcast always): the
+    corpus-average threshold (thr) at order 2, the tercile cuts
+    (t1, t2) at order 3 (`n_rows` attests the corpus size for
+    `lm_terciles`' parallel-path gate)."""
+    if order == 2:
+        return lm_corpus_threshold(scored)
+    return lm_terciles(scored, n_rows=n_rows)
+
+
+def lm_select(scored: DataFrame, selection: DataFrame,
+              order: int) -> DataFrame:
+    """scored + the order's row-local keep decision against its
+    one-row selection model: `lm_keep` at order 2, `lm3_bucket` +
+    `lm3_keep` at order 3 (`lm_bucket`). The keep column is
+    <LM_PREFIX[order]>_keep; unscorable documents are kept."""
+    if order == 2:
+        return lm_keep(scored, selection)
+    return lm_bucket(scored, selection)
+
+
+def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
+                             order: int, id_col: str = "doc_id",
+                             text_col: str = "text",
+                             n_rows: int | None = None,
+                             toks: DataFrame | None = None) -> DataFrame:
+    """Refresh the order's selection model from ROLLED-UP raw counts
+    [c_1, …] — the sanctioned maintenance path for a pipeline that
+    grows its LM via `lm_counts_ingest_sink` + `rollup_gram_counts`
+    (VERDICT r12 #7). Derives the floored serving model from the raw
+    counts (the floor is not additive — it must re-apply to the
+    merged relation), re-scores the LANDED corpus against it, and
+    trains a fresh `lm_selection`; stream-grown counts + this call
+    equal a batch retrain over the concatenated corpus exactly
+    (pinned in tests/test_lm.py and tests/test_streaming_ingest.py).
+    `n_rows` attests the landed corpus size for `lm_terciles`."""
+    model, tot = lm_model_from_counts(counts[:order])
+    sc = lm_bits(docs, id_col, text_col, model, tot, order,
+                 toks=toks, grams=counts[order - 1])
+    return lm_selection(sc, order, n_rows)
 
 
 # --------------------------------------------------------------------------

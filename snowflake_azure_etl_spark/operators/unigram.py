@@ -373,8 +373,7 @@ def subtract_word_freqs(index: DataFrame,
     from .lm import subtract_gram_counts
     out = subtract_gram_counts(
         index.select("word", F.col("freq").alias("c")),
-        removed.select("word", F.col("freq").alias("c")),
-        key_cols=("word",))
+        removed.select("word", F.col("freq").alias("c")))
     return out.select("word", F.col("c").alias("freq"))
 
 

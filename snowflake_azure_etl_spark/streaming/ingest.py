@@ -25,6 +25,8 @@ Scale design:
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -186,126 +188,83 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     return write
 
 
-def lm_ingest_sink(uni_table: str, bi_table: str, totals_table: str,
-                   thr_table: str, scored_table: str, *,
+def lm_ingest_sink(order: int, count_tables: Sequence[str],
+                   totals_table: str, selection_table: str,
+                   scored_table: str, *,
                    id_col: str = "doc_id", text_col: str = "text",
                    keep_only: bool = False):
-    """Arrival-time bigram-LM perplexity scoring (r12 — the streaming
-    sibling of `operators.lm`, completing the new quality tier's
+    """Arrival-time n-gram-LM perplexity scoring (r12 — the streaming
+    sibling of `operators.lm`, completing the quality tier's
     maintenance family exactly like `dsir_ingest_sink` does DSIR's).
-    Returns a foreachBatch function: each micro-batch is scored
-    against the PERSISTED model (floored unigram/bigram counts +
-    one-row totals — what `lm.bigram_lm_model` trains once per corpus
-    version) and gated against the PERSISTED corpus-average threshold
-    (`lm.lm_corpus_threshold` over the training corpus — fixed at
-    ingest so the cut never drifts with batch composition); rows land
-    in `scored_table` with lm_bits/lm_n_pos/lm_ppl_bits/lm_keep via
-    the idempotent epoch sink.
+    Returns a foreachBatch function: each micro-batch is scored at
+    `order` against the PERSISTED model (`count_tables` = the floored
+    [c_1, …] of `lm.lm_model_from_counts`, trained once per corpus
+    version, plus its one-row totals) and labeled by the order's
+    selection rule (`lm.lm_select`) against the PERSISTED train-corpus
+    selection model (`lm.lm_selection` — the corpus-average threshold
+    at order 2, the tercile cuts at order 3; fixed at ingest so the
+    cut never drifts with batch composition). Rows land in
+    `scored_table` with the order's score and keep columns
+    (lm_*/lm_keep; lm3_*/lm3_bucket/lm3_keep) via the idempotent
+    epoch sink.
 
-    Stateless across batches (fixed model, fixed threshold), so the
+    Stateless across batches (fixed model, fixed selection), so the
     stream output equals the batch scoring of the concatenated stream
-    — pinned in tests/test_streaming_ingest.py. ``keep_only=True``
-    drops over-threshold (high-perplexity) documents at the door;
-    unscorable short documents are kept (the batch operator's
-    contract)."""
-    from ..operators.lm import bigram_lm_bits, lm_keep
+    — pinned in tests/test_streaming_ingest.py at both orders.
+    ``keep_only=True`` drops the unkept (high-perplexity) documents
+    at the door; unscorable short documents are kept (the batch
+    operator's contract)."""
+    from ..operators.lm import LM_PREFIX, lm_bits, lm_select
     from .sinks import idempotent_epoch_sink
 
     write_scored = idempotent_epoch_sink(scored_table)
+    keep_col = f"{LM_PREFIX[order]}_keep"
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        scored = bigram_lm_bits(batch_df, id_col, text_col,
-                                spark.table(uni_table),
-                                spark.table(bi_table),
-                                spark.table(totals_table))
-        out = batch_df.join(lm_keep(scored, spark.table(thr_table)),
-                            id_col)
+        scored = lm_bits(batch_df, id_col, text_col,
+                         [spark.table(t) for t in count_tables],
+                         spark.table(totals_table), order)
+        out = batch_df.join(
+            lm_select(scored, spark.table(selection_table), order),
+            id_col)
         if keep_only:
-            out = out.filter(F.col("lm_keep"))
+            out = out.filter(F.col(keep_col))
         write_scored(out, epoch_id)
 
     return write
 
 
-def lm3_ingest_sink(uni_table: str, bi_table: str, tri_table: str,
-                    totals_table: str, cuts_table: str,
-                    scored_table: str, *,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    keep_only: bool = False):
-    """Arrival-time trigram-LM scoring with CCNet tercile buckets —
-    the trigram tier's streaming sibling (`lm_ingest_sink` one order
-    up). Each micro-batch scores against the PERSISTED model (floored
-    uni/bi/tri counts + one-row totals) and labels against the
-    PERSISTED train-corpus tercile cuts (`lm.lm_terciles` over the
-    training corpus — fixed at ingest so head/middle/tail never
-    drifts with batch composition); rows land in `scored_table` with
-    lm3_bits/lm3_n_pos/lm3_ppl_bits/lm3_bucket/lm3_keep via the
-    idempotent epoch sink. Stateless across batches, so stream ==
-    batch over the concatenated stream (pinned in
-    tests/test_streaming_ingest.py); ``keep_only=True`` drops tail
-    documents at the door, unscorable short documents are kept."""
-    from ..operators.lm import lm_bucket, trigram_lm_bits
-    from .sinks import idempotent_epoch_sink
-
-    write_scored = idempotent_epoch_sink(scored_table)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        scored = trigram_lm_bits(batch_df, id_col, text_col,
-                                 spark.table(uni_table),
-                                 spark.table(bi_table),
-                                 spark.table(tri_table),
-                                 spark.table(totals_table))
-        out = batch_df.join(lm_bucket(scored, spark.table(cuts_table)),
-                            id_col)
-        if keep_only:
-            out = out.filter(F.col("lm3_keep"))
-        write_scored(out, epoch_id)
-
-    return write
-
-
-def lm_counts_ingest_sink(uni_table: str, bi_table: str,
-                          tri_table: str | None = None, *,
+def lm_counts_ingest_sink(count_tables: Sequence[str], *,
                           id_col: str = "doc_id",
                           text_col: str = "text"):
     """GROW the LM model artifact at ingest — the maintenance sibling
-    of the scoring sinks above, completing the LM family's streaming
+    of the scoring sink above, completing the LM family's streaming
     set the way `streaming.substr` completes the window index's. Each
-    micro-batch lands its own raw gram-count PARTIALS (unigram +
-    bigram, trigram when `tri_table` is given) as idempotent epoch
-    partitions; the stream-lifetime counts derive by the SUM merge law
-    (`rollup_gram_counts` ≡ n-way `lm.merge_gram_counts`), and the
-    floored serving model derives from the rollup
+    micro-batch lands its own raw order-n gram-count PARTIAL in
+    `count_tables[n - 1]` (unigram, bigram, trigram, …) as idempotent
+    epoch partitions; the stream-lifetime counts derive by the SUM
+    merge law (`rollup_gram_counts` ≡ n-way `lm.merge_gram_counts`),
+    and the floored serving model derives from the rollup
     (`lm.lm_model_from_counts` — the floor is NOT additive, so only
     raw counts ever land). The batch tokenizes ONCE (`lm.tokenized`)
     across all gram families. Counts are additive, so stream == batch
     over the concatenated stream (pinned in
     tests/test_streaming_ingest.py) and a replayed epoch overwrites
     its own partitions with identical rows."""
-    from ..operators.lm import (bigram_lm_counts, tokenized,
-                                trigram_lm_counts)
+    from ..operators.lm import gram_counts, tokenized
     from .sinks import idempotent_epoch_sink
 
-    write_uni = idempotent_epoch_sink(uni_table)
-    write_bi = idempotent_epoch_sink(bi_table)
-    write_tri = (idempotent_epoch_sink(tri_table)
-                 if tri_table is not None else None)
+    writers = [idempotent_epoch_sink(t) for t in count_tables]
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # persist for the duration of the 2-3 write actions — each is
-        # its own job, and an unpersisted toks would re-read and
-        # re-split the batch source per gram family (review finding)
+        # persist for the duration of the write actions — each is its
+        # own job, and an unpersisted toks would re-read and re-split
+        # the batch source per gram family (review finding)
         toks = tokenized(batch_df, id_col, text_col).persist()
         try:
-            uni_p, bi_p = bigram_lm_counts(batch_df, text_col,
-                                           toks=toks)
-            write_uni(uni_p, epoch_id)
-            write_bi(bi_p, epoch_id)
-            if write_tri is not None:
-                write_tri(trigram_lm_counts(batch_df, text_col,
-                                            toks=toks), epoch_id)
+            for n, write_n in enumerate(writers, 1):
+                write_n(gram_counts(toks, n), epoch_id)
         finally:
             toks.unpersist()
 
@@ -320,7 +279,7 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
                         fallback: bool = False):
     """Arrival-time unigram-tokenizer segmentation (r13 — the
     streaming sibling of `operators.unigram`, completing the trained-
-    tokenizer family's maintenance set the way `lm3_ingest_sink`
+    tokenizer family's maintenance set the way `lm_ingest_sink`
     completes the LM's). Each micro-batch is segmented ROW-LOCALLY
     (`segment.segment_docs` — no shuffle: the right shape for a
     stream) against the PERSISTED piece table (`pieces_table_df` of a
@@ -490,17 +449,16 @@ def rollup_word_freqs(spark: SparkSession, table: str) -> DataFrame:
             .agg(F.sum("freq").cast("long").alias("freq")))
 
 
-def rollup_gram_counts(spark: SparkSession, table: str,
-                       key_cols: "tuple[str, ...]" = ("tok",)
-                       ) -> DataFrame:
+def rollup_gram_counts(spark: SparkSession, table: str) -> DataFrame:
     """The stream-lifetime raw gram counts: SUM over all epoch
     partials — identical to counting the concatenated stream (the
-    `merge_gram_counts` law applied n-ways). Use ("w1","w2") /
-    ("w1","w2","w3") for the bigram/trigram tables; feed the rollups
-    to `lm.lm_model_from_counts` for the floored serving model."""
+    `merge_gram_counts` law applied n-ways). The key columns are
+    every column but `c` once the epoch column is dropped, so one
+    call serves every order's table; feed the rollups to
+    `lm.lm_model_from_counts` for the floored serving model."""
     from .sinks import EPOCH_COL
-    return (spark.table(table).drop(EPOCH_COL)
-            .groupBy(*key_cols)
+    counts = spark.table(table).drop(EPOCH_COL)
+    return (counts.groupBy(*(c for c in counts.columns if c != "c"))
             .agg(F.sum("c").cast("long").alias("c")))
 
 

@@ -261,6 +261,28 @@ _QMIX_SQL = f"""
         FROM qrt r LEFT JOIN qk USING (source, qb))"""
 
 
+#: q47 oracle histogram fragments — the DuckDB replay of the engine's
+#: `equiwidth_histogram` (HIST_BINS = 16 bins over [0, 1024)) and
+#: `histogram_quantiles`:
+#: the clamped equi-width bin of `value`, and the in-bin linear
+#: quantile estimate over a cumulative relation (bin, cnt, cum, prev,
+#: n) joined to a probe row q(lbl, p) on the bin that brackets rank
+#: p·(n − 1). Shared by the global and per-event-type quantile legs.
+_HIST_BIN_SQL = """GREATEST(CAST(0 AS BIGINT), LEAST(CAST(floor(
+        ((CAST(value AS DOUBLE) - CAST(0.0 AS DOUBLE)) * CAST(16.0 AS DOUBLE))
+        / (CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE)))
+        AS BIGINT), CAST(15 AS BIGINT)))"""
+_HIST_QUANTILE_SQL = """(CAST(0.0 AS DOUBLE)
+        + (CAST(bin AS DOUBLE)
+           + ((q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
+               - CAST(prev AS DOUBLE)) / CAST(cnt AS DOUBLE)))
+          * ((CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE))
+             / CAST(16.0 AS DOUBLE)))"""
+_HIST_BRACKET_SQL = """CAST(prev AS DOUBLE)
+        <= q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
+        AND q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
+        < CAST(cum AS DOUBLE)"""
+
 @query(
     "q47_kmv_sketch",
     covers=("X-SKETCH-KMV", "X-SKETCH-HLL", "X-SKETCH-CMS",
@@ -341,11 +363,7 @@ _QMIX_SQL = f"""
            CAST(cum AS DOUBLE) / CAST(n AS DOUBLE)
     FROM (
         WITH hb AS (
-            SELECT GREATEST(CAST(0 AS BIGINT), LEAST(CAST(floor(
-                       ((CAST(value AS DOUBLE) - CAST(0.0 AS DOUBLE))
-                        * CAST(16.0 AS DOUBLE))
-                       / (CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE)))
-                       AS BIGINT), CAST(15 AS BIGINT))) AS bin
+            SELECT {_HIST_BIN_SQL} AS bin
             FROM events),
         hc AS (SELECT bin, COUNT(*) AS cnt FROM hb GROUP BY 1)
         SELECT bin, cnt, SUM(cnt) OVER (ORDER BY bin) AS cum,
@@ -355,11 +373,7 @@ _QMIX_SQL = f"""
     SELECT 'hist_quantile', lbl, CAST(NULL AS BIGINT), est
     FROM (
         WITH hb2 AS (
-            SELECT GREATEST(CAST(0 AS BIGINT), LEAST(CAST(floor(
-                       ((CAST(value AS DOUBLE) - CAST(0.0 AS DOUBLE))
-                        * CAST(16.0 AS DOUBLE))
-                       / (CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE)))
-                       AS BIGINT), CAST(15 AS BIGINT))) AS bin
+            SELECT {_HIST_BIN_SQL} AS bin
             FROM events),
         hc2 AS (SELECT bin, COUNT(*) AS cnt FROM hb2 GROUP BY 1),
         hm AS (SELECT bin, cnt,
@@ -368,20 +382,12 @@ _QMIX_SQL = f"""
                FROM hc2),
         hn AS (SELECT SUM(cnt) AS n FROM hc2)
         SELECT q.lbl,
-               CAST(0.0 AS DOUBLE)
-               + (CAST(bin AS DOUBLE)
-                  + ((q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-                      - CAST(prev AS DOUBLE)) / CAST(cnt AS DOUBLE)))
-                 * ((CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE))
-                    / CAST(16.0 AS DOUBLE)) AS est
+               {_HIST_QUANTILE_SQL} AS est
         FROM hm CROSS JOIN hn
         JOIN (VALUES ('p50', CAST(0.5 AS DOUBLE)),
                      ('p90', CAST(0.9 AS DOUBLE)),
                      ('p99', CAST(0.99 AS DOUBLE))) q(lbl, p)
-          ON CAST(prev AS DOUBLE)
-                 <= q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-         AND q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-                 < CAST(cum AS DOUBLE))
+          ON {_HIST_BRACKET_SQL})
     UNION ALL
     SELECT 'bloom_prune', l_returnflag, CAST(exact_n AS BIGINT),
            CAST(est AS DOUBLE)
@@ -506,11 +512,7 @@ _QMIX_SQL = f"""
     FROM (
         WITH gb AS (
             SELECT event_type,
-                   GREATEST(CAST(0 AS BIGINT), LEAST(CAST(floor(
-                       ((CAST(value AS DOUBLE) - CAST(0.0 AS DOUBLE))
-                        * CAST(16.0 AS DOUBLE))
-                       / (CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE)))
-                       AS BIGINT), CAST(15 AS BIGINT))) AS bin
+                   {_HIST_BIN_SQL} AS bin
             FROM events),
         gc2 AS (SELECT event_type, bin, COUNT(*) AS cnt
                 FROM gb GROUP BY 1, 2),
@@ -522,19 +524,11 @@ _QMIX_SQL = f"""
                       SUM(cnt) OVER (PARTITION BY event_type) AS n
                FROM gc2)
         SELECT gm.event_type, q.lbl,
-               CAST(0.0 AS DOUBLE)
-               + (CAST(bin AS DOUBLE)
-                  + ((q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-                      - CAST(prev AS DOUBLE)) / CAST(cnt AS DOUBLE)))
-                 * ((CAST(1024.0 AS DOUBLE) - CAST(0.0 AS DOUBLE))
-                    / CAST(16.0 AS DOUBLE)) AS est
+               {_HIST_QUANTILE_SQL} AS est
         FROM gm
         JOIN (VALUES ('p50', CAST(0.5 AS DOUBLE)),
                      ('p95', CAST(0.95 AS DOUBLE))) q(lbl, p)
-          ON CAST(prev AS DOUBLE)
-                 <= q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-         AND q.p * (CAST(n AS DOUBLE) - CAST(1.0 AS DOUBLE))
-                 < CAST(cum AS DOUBLE))
+          ON {_HIST_BRACKET_SQL})
     UNION ALL
     {_QMIX_SQL}
     UNION ALL

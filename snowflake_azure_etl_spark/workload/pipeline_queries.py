@@ -1759,19 +1759,21 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         packed.join(maybe_broadcast(top_term, n_docs), "doc_id", "left"),
         clf_feats, clf_w, _CLF_CLASSES,
         out_col="clf_lang_pred", score_prefix="_cs_")
-    # r12 addition (X-TEXT-LM-BIGRAM, operators.lm — VERDICT r11 #5):
-    # the CCNet/KenLM perplexity tier. The trained model (floored
-    # unigram/bigram counts + one-row totals) and the per-doc score
-    # relation are session artifacts (train once per corpus version —
-    # the token_freq_map/_ivf_index contract); the keep decision is
-    # row-local against the one-row corpus-average threshold. The
-    # oracle replays training, scoring, AND the threshold as CTEs
-    # (lm_oracle_ctes), so the driver hash attests the whole tier.
+    # r12 addition (X-TEXT-LM-BIGRAM / X-TEXT-LM-TRIGRAM, operators.lm
+    # — VERDICT r11 #5): the CCNet/KenLM perplexity tier at orders 2
+    # and 3. The trained model (floored gram counts + one-row totals),
+    # each order's per-doc score relation and its one-row selection
+    # model (corpus-average threshold at order 2, exact tercile cuts
+    # at order 3 — CCNet's actual head/middle/tail rule) are session
+    # artifacts (train once per corpus version — the
+    # token_freq_map/_ivf_index contract); the keep/bucket labels are
+    # row-local per-invocation results. The oracle replays counts,
+    # scores, selection AND labels as CTEs (lm_oracle_ctes /
+    # lm3_oracle_ctes), so the driver hash attests the whole tier.
     # the tokenize-once relation (lm_ops.tokenized) is THE shared scan
-    # under all three gram tiers — both models' counts AND both
-    # scoring bags explode from it, so the corpus text decode + split
-    # runs once per session instead of five times (the q53
-    # `_window_occurrences` pattern applied to the LM family)
+    # under every order — all gram counts AND both scoring bags
+    # explode from it, so the corpus text decode + split runs once
+    # per session (the q53 `_window_occurrences` pattern)
     lm_tk = cached_relation(lm_ops.tokenized(docs), "lm_tk")
     # the UN-floored gram-count relations are the growable model
     # artifacts (the growth/forget laws' operand) AND double as the
@@ -1779,53 +1781,27 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus's observed grams, so scoring needs no extra distinct
     # pass and the plog2 trees evaluate once per gram, not per
     # position
-    lm_bi_all = cached_relation(
-        lm_ops.bigram_lm_counts(docs, toks=lm_tk)[1],
-        "lm_bi_all")
-    lm_uni_all = cached_relation(
-        lm_ops.unigram_counts(docs, toks=lm_tk),
-        "lm_uni_all")
-    lm_uni, lm_bi, lm_tot = lm_ops.lm_model_from_counts(
-        lm_uni_all, lm_bi_all)
-    lm_uni = cached_relation(lm_uni, "lm_uni")
-    lm_bi = cached_relation(lm_bi, "lm_bi")
-    lm_scored = cached_relation(
-        lm_ops.bigram_lm_bits(docs, "doc_id", "text",
-                              lm_uni, lm_bi, lm_tot, toks=lm_tk,
-                              grams=lm_bi_all),
-        "lm_scored")
-    # threshold and tercile cuts are train-once selection models
-    # ("a bounded artifact — train once, broadcast always"): memoize
-    # the one-row relations so repeat invocations skip re-aggregating
-    # the scored corpus (~0.5-0.9 s/call measured); the keep/bucket
-    # label legs stay per-invocation results
-    lm_final = lm_ops.lm_keep(
-        lm_scored,
-        cached_relation(lm_ops.lm_corpus_threshold(lm_scored),
-                        "lm_thr"))
-    # r12 second pass (X-TEXT-LM-TRIGRAM): the trigram tier one order
-    # up — 3-way log-linear interpolation against the SAME floored
-    # uni/bi artifacts plus a floored trigram relation, and CCNet's
-    # actual head/middle/tail tercile split (lm_terciles — the
-    # average-threshold lm_keep is its two-way approximation) with
-    # keep ≡ head+middle. The tercile cuts derive from the grouped
-    # INTEGER score distribution (distinct-value-bounded, the
-    # rank-over-aggregate window family), so the whole tier — counts,
-    # scores, cuts, labels — replays exactly in the oracle
-    # (lm3_oracle_ctes).
-    lm_tri_all = cached_relation(
-        lm_ops.trigram_lm_counts(docs, toks=lm_tk),
-        "lm_tri_all")
-    lm_tri = lm_tri_all.filter(F.col("c") >= lm_ops.LM_MIN_COUNT)
-    lm3_scored = cached_relation(
-        lm_ops.trigram_lm_bits(docs, "doc_id", "text",
-                               lm_uni, lm_bi, lm_tri, lm_tot,
-                               toks=lm_tk, grams=lm_tri_all),
-        "lm3_scored")
-    lm3_final = lm_ops.lm_bucket(
-        lm3_scored,
-        cached_relation(lm_ops.lm_terciles(lm3_scored, n_rows=n_docs),
-                        "lm3_cuts"))
+    lm_all = [cached_relation(lm_ops.gram_counts(lm_tk, n), tag)
+              for n, tag in ((1, "lm_uni_all"), (2, "lm_bi_all"),
+                             (3, "lm_tri_all"))]
+    model, lm_tot = lm_ops.lm_model_from_counts(lm_all)
+    # the floored unigram/bigram relations feed both orders' scorers
+    model[:2] = [cached_relation(rel, tag)
+                 for rel, tag in zip(model, ("lm_uni", "lm_bi"))]
+    lm_legs = []
+    for order in (2, 3):
+        p = lm_ops.LM_PREFIX[order]
+        sc = cached_relation(
+            lm_ops.lm_bits(docs, "doc_id", "text", model, lm_tot, order,
+                           toks=lm_tk, grams=lm_all[order - 1]),
+            f"{p}_scored")
+        # the selection model is a train-once one-row artifact:
+        # memoized so repeat invocations skip re-aggregating the
+        # scored corpus (~0.5-0.9 s/call measured)
+        lm_legs.append(lm_ops.lm_select(
+            sc, cached_relation(lm_ops.lm_selection(sc, order,
+                                                    n_rows=n_docs),
+                                f"{p}_selection"), order))
     # join-back rides the packing/top-term pattern: the narrow per-doc
     # LM relation is the broadcast side under the footer attestation
     # so the WIDE corpus row never shuffles; above the cap it falls
@@ -1833,7 +1809,7 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc relation (each is doc_id-complete by construction) so
     # the wide row pays a single join-back, not two.
     scored = scored.join(maybe_broadcast(
-        lm_final.join(lm3_final, "doc_id"), n_docs), "doc_id", "left")
+        lm_legs[0].join(lm_legs[1], "doc_id"), n_docs), "doc_id", "left")
     return scored.select(
         "doc_id",
         "token_offset", "pack_first_seq", "pack_last_seq",

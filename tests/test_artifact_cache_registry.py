@@ -53,8 +53,8 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
     ("operators/bpe.py", "train_bpe_merges", "cached_build"):
         (1, "ARTIFACT: learned BPE merge list (trained model)"),
     ("operators/corpus.py", "prepare_training_corpus", "cached_relation"):
-        (3, "ARTIFACT: tokenized corpus + LM score relations reused "
-            "across the prep pipeline's dials"),
+        (2, "ARTIFACT: tokenized corpus + the gate order's LM score "
+            "relation reused across the prep pipeline's dials"),
     ("operators/dedup.py", "exact_jaccard", "cached_build"):
         (1, "ARTIFACT: corpus vocab size (one int per corpus version)"),
     ("operators/dedup.py", "exact_jaccard", "cached_relation"):
@@ -179,7 +179,7 @@ REGISTRY: dict[tuple[str, str, str], tuple[int, str]] = {
             "plan); the LSH top-k and near-dup legs run per "
             "invocation"),
     ("workload/pipeline_queries.py", "q57_text_stats", "cached_relation"):
-        (12, "ARTIFACT: per-doc text-feature relations (tokenized, "
+        (7, "ARTIFACT: per-doc text-feature relations (tokenized, "
              "gram, language-id, stats legs — derived corpus "
              "representations the prep pipeline lands once); the "
              "summary aggregate re-runs per invocation"),

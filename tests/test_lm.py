@@ -1,6 +1,7 @@
-"""Interpolated bigram LM perplexity filter (operators.lm, VERDICT
-r11 #5): engine scores vs an independent pure-Python reference, edge
-cases (short docs, floors, unseen grams), and the keep contract."""
+"""Interpolated n-gram LM perplexity filter (operators.lm, VERDICT
+r11 #5) at orders 2 and 3: engine scores vs independent pure-Python
+references, edge cases (short docs, floors, unseen grams, grams that
+do not cover the corpus), and each order's keep contract."""
 
 from __future__ import annotations
 
@@ -15,6 +16,18 @@ from snowflake_azure_etl_spark.plans.prefix import WINDOW_MAX_ROWS
 
 SCALE = 1 << 20
 MAX_E = 42
+
+
+def model_of(docs, order):
+    """(floored model, totals) trained in one shot at `order`."""
+    toks = lm.tokenized(docs)
+    return lm.lm_model_from_counts(
+        [lm.gram_counts(toks, n) for n in range(1, order + 1)])
+
+
+def score(docs, order):
+    model, tot = model_of(docs, order)
+    return lm.lm_bits(docs, "doc_id", "text", model, tot, order)
 
 
 def py_plog2(n: int, scale: int = SCALE) -> int:
@@ -75,8 +88,7 @@ CORPUS = [
 @pytest.fixture(scope="module")
 def scored(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tot = lm.bigram_lm_model(docs)
-    sc = lm.bigram_lm_bits(docs, "doc_id", "text", uni, bi, tot)
+    sc = score(docs, 2)
     kept = lm.lm_keep(sc, lm.lm_corpus_threshold(sc))
     return {r["doc_id"]: r for r in kept.collect()}
 
@@ -174,8 +186,7 @@ def py_lm3(docs, min_count=lm.LM_MIN_COUNT, l3=lm.LM3_L3,
 @pytest.fixture(scope="module")
 def scored3(spark):
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
+    sc = score(docs, 3)
     labeled = lm.lm_bucket(sc, lm.lm_terciles(sc))
     return {r["doc_id"]: r for r in labeled.collect()}
 
@@ -212,14 +223,14 @@ def test_lm3_gram_laws_hold_on_trigram_keys(spark):
     da = spark.createDataFrame(half_a, "doc_id long, text string")
     db = spark.createDataFrame(half_b, "doc_id long, text string")
     dall = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    ta = lm.trigram_lm_counts(da)
-    tb = lm.trigram_lm_counts(db)
-    tall = lm.trigram_lm_counts(dall)
-    merged = lm.merge_gram_counts(ta, tb, key_cols=keys)
+    ta = lm.gram_counts(lm.tokenized(da), 3)
+    tb = lm.gram_counts(lm.tokenized(db), 3)
+    tall = lm.gram_counts(lm.tokenized(dall), 3)
+    merged = lm.merge_gram_counts(ta, tb)
     want = {tuple(r[k] for k in keys): r["c"] for r in tall.collect()}
     got = {tuple(r[k] for k in keys): r["c"] for r in merged.collect()}
     assert got == want
-    back = lm.subtract_gram_counts(merged, tb, key_cols=keys)
+    back = lm.subtract_gram_counts(merged, tb)
     got_a = {tuple(r[k] for k in keys): r["c"] for r in back.collect()}
     assert got_a == {tuple(r[k] for k in keys): r["c"]
                      for r in ta.collect()}
@@ -236,32 +247,39 @@ _doc_strategy = st.lists(st.sampled_from(_WORDS), min_size=0,
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(texts=st.lists(_doc_strategy, min_size=2, max_size=6))
+@pytest.mark.parametrize("order", [2, 3])
 @pytest.mark.slow
-def test_lm3_property_sweep(spark, texts):
-    """Engine trigram tier == Python reference over random small
-    corpora from a 6-word alphabet (forces gram collisions, floor
-    edges, short/empty docs, and tercile ties) — scores, position
-    counts, perplexity, AND bucket labels."""
+def test_lm_property_sweep(spark, order, texts):
+    """Engine tier == Python reference (`py_lm` at order 2, `py_lm3`
+    at order 3) over random small corpora from a 6-word alphabet
+    (forces gram collisions, floor edges, short/empty docs, and
+    threshold/tercile ties) — scores, position counts, perplexity,
+    AND the order's selection labels (lm_keep; lm3 buckets)."""
     docs_rows = list(enumerate(texts))
     docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
-    ref, _, buckets = py_lm3(docs_rows)
-    scorable = any(p is not None for _, _, p in ref.values())
-    if not scorable:
-        # NULL cuts: labeling must still work for all-unscorable
-        got = {r["doc_id"]: r for r in
-               lm.lm_bucket(sc, lm.lm_terciles(sc)).collect()}
-        assert all(g["lm3_bucket"] == "unscorable"
-                   for g in got.values())
-        return
+    sc = score(docs, order)
     got = {r["doc_id"]: r for r in
-           lm.lm_bucket(sc, lm.lm_terciles(sc)).collect()}
+           lm.lm_select(sc, lm.lm_selection(sc, order), order).collect()}
+    p = lm.LM_PREFIX[order]
+    if order == 2:
+        ref, thr = py_lm(docs_rows)
+        keep = {d: ppl is None or ppl <= thr
+                for d, (_, _, ppl) in ref.items()}
+    else:
+        ref, _, buckets = py_lm3(docs_rows)
+        if all(ppl is None for _, _, ppl in ref.values()):
+            # NULL cuts: labeling must still work for all-unscorable
+            assert all(g["lm3_bucket"] == "unscorable"
+                       for g in got.values())
+            return
+        keep = {d: b != "tail" for d, b in buckets.items()}
     for doc_id, (bits, npos, ppl) in ref.items():
         row = got[doc_id]
-        assert (row["lm3_bits"], row["lm3_n_pos"],
-                row["lm3_ppl_bits"]) == (bits, npos, ppl), doc_id
-        assert row["lm3_bucket"] == buckets[doc_id], doc_id
+        assert (row[f"{p}_bits"], row[f"{p}_n_pos"],
+                row[f"{p}_ppl_bits"]) == (bits, npos, ppl), doc_id
+        assert row[f"{p}_keep"] == keep[doc_id], doc_id
+        if order == 3:
+            assert row["lm3_bucket"] == buckets[doc_id], doc_id
 
 
 def test_terciles_ranged_path_equals_window_path(spark):
@@ -271,8 +289,7 @@ def test_terciles_ranged_path_equals_window_path(spark):
     executed plan really range-partitions the cumulative count
     (the packing-switch identity, applied to lm_terciles)."""
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
+    sc = score(docs, 3)
     small = lm.lm_terciles(sc, n_rows=10)      # attested small: window
     big = lm.lm_terciles(sc, n_rows=WINDOW_MAX_ROWS + 1)
     assert small.collect() == big.collect()
@@ -295,8 +312,7 @@ def test_terciles_unattested_default_takes_parallel_path(spark):
     an explicit small attestation, never silently (the
     bounded_broadcast fail-safe philosophy, inverted for a default)."""
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
+    sc = score(docs, 3)
     cuts = lm.lm_terciles(sc)                  # n_rows=None: unknown
     plan = cuts._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower()
@@ -309,30 +325,24 @@ def test_terciles_unattested_default_takes_parallel_path(spark):
 
 @pytest.mark.slow
 def test_cuts_from_rollup_matches_batch_retrain(spark):
-    """lm_cuts_from_rollup over MERGED half-corpus counts == batch
-    tercile training over the whole corpus — the operator-grain law
-    under the streaming maintenance path (VERDICT r12 #7)."""
+    """lm_selection_from_rollup over MERGED half-corpus counts ==
+    batch selection training over the whole corpus at both orders —
+    the operator-grain law under the streaming maintenance path
+    (VERDICT r12 #7): tercile cuts at order 3, the corpus-average
+    threshold at order 2."""
     half_a = [c for c in CORPUS if c[0] % 2 == 0]
     half_b = [c for c in CORPUS if c[0] % 2 == 1]
     da = spark.createDataFrame(half_a, "doc_id long, text string")
     db = spark.createDataFrame(half_b, "doc_id long, text string")
     dall = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    ua, ba = lm.bigram_lm_counts(da)
-    ub, bb = lm.bigram_lm_counts(db)
-    uni_m = lm.merge_gram_counts(ua, ub)
-    bi_m = lm.merge_gram_counts(ba, bb, key_cols=("w1", "w2"))
-    tri_m = lm.merge_gram_counts(lm.trigram_lm_counts(da),
-                                 lm.trigram_lm_counts(db),
-                                 key_cols=("w1", "w2", "w3"))
-    got = lm.lm_cuts_from_rollup(dall, uni_m, bi_m, tri_m)
-    uni, bi, tri, tot = lm.trigram_lm_model(dall)
-    sc = lm.trigram_lm_bits(dall, "doc_id", "text", uni, bi, tri, tot)
-    assert got.collect() == lm.lm_terciles(sc).collect()
-    # the mean-threshold tier's twin law
-    got_thr = lm.lm_thr_from_rollup(dall, uni_m, bi_m)
-    uni2, bi2, tot2 = lm.bigram_lm_model(dall)
-    sc2 = lm.bigram_lm_bits(dall, "doc_id", "text", uni2, bi2, tot2)
-    assert got_thr.collect() == lm.lm_corpus_threshold(sc2).collect()
+    merged = [lm.merge_gram_counts(lm.gram_counts(lm.tokenized(da), n),
+                                   lm.gram_counts(lm.tokenized(db), n))
+              for n in (1, 2, 3)]
+    got = lm.lm_selection_from_rollup(dall, merged, 3)
+    assert got.collect() == lm.lm_terciles(score(dall, 3)).collect()
+    got_thr = lm.lm_selection_from_rollup(dall, merged, 2)
+    assert got_thr.collect() == \
+        lm.lm_corpus_threshold(score(dall, 2)).collect()
 
 
 def test_lm_bucket_null_cuts_fail_loud(spark):
@@ -343,16 +353,31 @@ def test_lm_bucket_null_cuts_fail_loud(spark):
     otherwise drop the whole stream)."""
     short = [(1, "a"), (2, "b c")]            # nothing >= 3 tokens
     docs = spark.createDataFrame(short, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
+    model, tot = model_of(docs, 3)
+    sc = lm.lm_bits(docs, "doc_id", "text", model, tot, 3)
     cuts = lm.lm_terciles(sc)
     labeled = lm.lm_bucket(sc, cuts)
     assert {r["lm3_bucket"] for r in labeled.collect()} == {"unscorable"}
     docs2 = spark.createDataFrame([(3, "x y z x y z")],
                                   "doc_id long, text string")
-    sc2 = lm.trigram_lm_bits(docs2, "doc_id", "text", uni, bi, tri, tot)
+    sc2 = lm.lm_bits(docs2, "doc_id", "text", model, tot, 3)
     with pytest.raises(Exception, match="tercile cuts are NULL"):
         lm.lm_bucket(sc2, cuts).collect()
+
+
+@pytest.mark.parametrize("order", [2, 3])
+def test_lm_bits_grams_must_cover_corpus(spark, order):
+    """The coverage guard: `grams` must hold every gram the corpus
+    observes. The FLOORED relation does not — the gibberish doc's
+    grams all sit below LM_MIN_COUNT — so passing it as `grams` must
+    raise instead of silently dropping those scored positions."""
+    docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    model, tot = model_of(docs, order)
+    floored = model[order - 1]
+    sc = lm.lm_bits(docs, "doc_id", "text", model, tot, order,
+                    grams=floored)
+    with pytest.raises(Exception, match="does not cover"):
+        sc.collect()
 
 
 def test_lm3_oracle_ctes_match_engine(spark):
@@ -367,8 +392,7 @@ def test_lm3_oracle_ctes_match_engine(spark):
            "FROM lm3_scored s CROSS JOIN lm3_cuts lmc")
     got = {int(r[0]): tuple(r[1:]) for r in con.execute(sql).fetchall()}
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(docs)
-    sc = lm.trigram_lm_bits(docs, "doc_id", "text", uni, bi, tri, tot)
+    sc = score(docs, 3)
     labeled = lm.lm_bucket(sc, lm.lm_terciles(sc))
     for r in labeled.collect():
         o = got[r["doc_id"]]
@@ -391,8 +415,7 @@ def test_lm_oracle_ctes_match_engine(spark, tmp_path):
            "FROM lm_scored s CROSS JOIN lm_thr t")
     got = {int(r[0]): tuple(r[1:]) for r in con.execute(sql).fetchall()}
     docs = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    uni, bi, tot = lm.bigram_lm_model(docs)
-    sc = lm.bigram_lm_bits(docs, "doc_id", "text", uni, bi, tot)
+    sc = score(docs, 2)
     kept = lm.lm_keep(sc, lm.lm_corpus_threshold(sc))
     for r in kept.collect():
         o = got[r["doc_id"]]
@@ -415,12 +438,12 @@ def test_lm_count_merge_and_subtract_laws(spark):
     B = spark.createDataFrame(b_rows, "doc_id long, text string")
     U = spark.createDataFrame(CORPUS, "doc_id long, text string")
 
-    ua, ba = lm.bigram_lm_counts(A)
-    ub, bb = lm.bigram_lm_counts(B)
-    uu, bu = lm.bigram_lm_counts(U)
+    ua, ba = (lm.gram_counts(lm.tokenized(A), n) for n in (1, 2))
+    ub, bb = (lm.gram_counts(lm.tokenized(B), n) for n in (1, 2))
+    uu, bu = (lm.gram_counts(lm.tokenized(U), n) for n in (1, 2))
 
     merged_u = lm.merge_gram_counts(ua, ub)
-    merged_b = lm.merge_gram_counts(ba, bb, key_cols=("w1", "w2"))
+    merged_b = lm.merge_gram_counts(ba, bb)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
@@ -429,15 +452,15 @@ def test_lm_count_merge_and_subtract_laws(spark):
     assert rows(merged_b) == rows(bu)
 
     # the derived serving model and scores are therefore identical
-    m1 = lm.lm_model_from_counts(merged_u, merged_b)
-    m2 = lm.bigram_lm_model(U)
-    s1 = rows(lm.bigram_lm_bits(U, "doc_id", "text", *m1))
-    s2 = rows(lm.bigram_lm_bits(U, "doc_id", "text", *m2))
+    m1 = lm.lm_model_from_counts([merged_u, merged_b])
+    m2 = model_of(U, 2)
+    s1 = rows(lm.lm_bits(U, "doc_id", "text", *m1, 2))
+    s2 = rows(lm.lm_bits(U, "doc_id", "text", *m2, 2))
     assert s1 == s2
 
     # subtraction inverts the merge exactly
     back_u = lm.subtract_gram_counts(merged_u, ub)
-    back_b = lm.subtract_gram_counts(merged_b, bb, key_cols=("w1", "w2"))
+    back_b = lm.subtract_gram_counts(merged_b, bb)
     assert rows(back_u) == rows(ua)
     assert rows(back_b) == rows(ba)
 

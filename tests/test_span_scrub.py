@@ -1,13 +1,10 @@
 """Repeated-span scrub (operators.dedup.scrub_repeated_spans,
-X-DEDUP-SPAN): semantics vs a Python reference on planted boilerplate,
-primary (anti-join) == broadcast-map variant equivalence, the fail-loud
-map cap, and the no-corpus-shuffle plan shape of the map variant."""
+X-DEDUP-SPAN): semantics vs a Python reference on planted boilerplate
+and on the sf corpus, and the fully-scrubbed-document edge."""
 
 from __future__ import annotations
 
 from collections import Counter
-
-import pytest
 
 from snowflake_azure_etl_spark.operators import dedup
 
@@ -49,14 +46,6 @@ def test_scrub_matches_python_reference(spark):
     assert got[1][1] > 0 and got[3][1] == 0
 
 
-def test_bcast_variant_equals_primary(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-    a = sorted(map(tuple, dedup.scrub_repeated_spans(docs).collect()))
-    b = sorted(map(tuple,
-                   dedup.scrub_repeated_spans_bcast(docs).collect()))
-    assert a == b
-
-
 def test_sf_corpus_matches_python_reference(spark, sf_dir):
     rows = [(r["doc_id"], r["text"])
             for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -70,25 +59,7 @@ def test_sf_corpus_matches_python_reference(spark, sf_dir):
 def test_fully_scrubbed_doc_yields_empty_cleaned(spark):
     rows = [(1, "x y z"), (2, "x y z")]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for fn in (dedup.scrub_repeated_spans, dedup.scrub_repeated_spans_bcast):
-        got = {r["doc_id"]: r for r in fn(docs).collect()}
-        assert got[1]["cleaned"] == "" and got[1]["n_removed"] == 1
+    got = {r["doc_id"]: r
+           for r in dedup.scrub_repeated_spans(docs).collect()}
+    assert got[1]["cleaned"] == "" and got[1]["n_removed"] == 1
 
-
-def test_map_cap_raises_loudly(spark):
-    docs = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-    capped = dedup.scrub_repeated_spans_bcast(docs, max_entries=1)
-    with pytest.raises(Exception, match="common-span set exceeds"):
-        capped.collect()
-
-
-def test_bcast_variant_plan_has_no_corpus_exchange(spark):
-    """The scrub side of the map variant must not shuffle the corpus:
-    the only Exchange in the plan belongs to the span-count aggregation
-    feeding the one-row broadcast map."""
-    docs = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-    plan = (dedup.scrub_repeated_spans_bcast(docs)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    probe = plan.split("BroadcastNestedLoopJoin")[0]
-    assert "Exchange hashpartitioning" not in probe

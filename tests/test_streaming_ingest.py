@@ -363,8 +363,10 @@ def test_lm_ingest_matches_batch_operator(spark):
         return t
 
     corpus = spark.createDataFrame(train, "doc_id long, text string")
-    uni, bi, tot = lm.bigram_lm_model(corpus)
-    sc_train = lm.bigram_lm_bits(corpus, "doc_id", "text", uni, bi, tot)
+    tk = lm.tokenized(corpus)
+    (uni, bi), tot = lm.lm_model_from_counts(
+        [lm.gram_counts(tk, n) for n in (1, 2)])
+    sc_train = lm.lm_bits(corpus, "doc_id", "text", [uni, bi], tot, 2)
     thr = lm.lm_corpus_threshold(sc_train)
     uni_t, bi_t = table("lm_uni"), table("lm_bi")
     tot_t, thr_t = table("lm_tot"), table("lm_thr")
@@ -383,7 +385,7 @@ def test_lm_ingest_matches_batch_operator(spark):
 
     scored_t, kept_t = table("lm_scored_t"), table("lm_kept_t")
     for tgt, keep in ((scored_t, False), (kept_t, True)):
-        sink = ingest.lm_ingest_sink(uni_t, bi_t, tot_t, thr_t, tgt,
+        sink = ingest.lm_ingest_sink(2, [uni_t, bi_t], tot_t, thr_t, tgt,
                                      keep_only=keep)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
@@ -397,9 +399,9 @@ def test_lm_ingest_matches_batch_operator(spark):
     whole = spark.createDataFrame(all_rows, "doc_id long, text string")
     want = {(r["doc_id"], r["lm_bits"], r["lm_ppl_bits"], r["lm_keep"])
             for r in lm.lm_keep(
-                lm.bigram_lm_bits(whole, "doc_id", "text",
-                                  spark.table(uni_t), spark.table(bi_t),
-                                  spark.table(tot_t)),
+                lm.lm_bits(whole, "doc_id", "text",
+                           [spark.table(uni_t), spark.table(bi_t)],
+                           spark.table(tot_t), 2),
                 spark.table(thr_t)).collect()}
     got = {(r["doc_id"], r["lm_bits"], r["lm_ppl_bits"], r["lm_keep"])
            for r in spark.table(scored_t)
@@ -411,7 +413,8 @@ def test_lm_ingest_matches_batch_operator(spark):
     assert 11 not in kept          # gibberish cut at the door
     assert 13 in kept              # unscorable short doc kept
     # replaying epoch 0 overwrites its partition — nothing duplicates
-    sink0 = ingest.lm_ingest_sink(uni_t, bi_t, tot_t, thr_t, scored_t)
+    sink0 = ingest.lm_ingest_sink(2, [uni_t, bi_t], tot_t, thr_t,
+                                  scored_t)
     sink0(spark.createDataFrame(batches[0], "doc_id long, text string"), 0)
     assert spark.table(scored_t).count() == 4
     assert (spark.table(scored_t).filter(F.col(EPOCH_COL) == 0).count()
@@ -461,7 +464,7 @@ def test_lm_counts_ingest_grows_model(spark):
         }), p)
         os.utime(p, (base + i, base + i))
 
-    sink = ingest.lm_counts_ingest_sink(uni_t, bi_t, tri_t)
+    sink = ingest.lm_counts_ingest_sink([uni_t, bi_t, tri_t])
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))
     q = (stream.writeStream.foreachBatch(sink)
@@ -471,24 +474,24 @@ def test_lm_counts_ingest_grows_model(spark):
 
     all_rows = [r for b in batches for r in b]
     whole = spark.createDataFrame(all_rows, "doc_id long, text string")
-    uni_want, bi_want = lm.bigram_lm_counts(whole)
-    tri_want = lm.trigram_lm_counts(whole)
+    tk = lm.tokenized(whole)
+    uni_want, bi_want, tri_want = (lm.gram_counts(tk, n)
+                                   for n in (1, 2, 3))
 
     def asmap(df, keys):
         return {tuple(r[k] for k in keys): r["c"] for r in df.collect()}
 
     uni_roll = ingest.rollup_gram_counts(spark, uni_t)
-    bi_roll = ingest.rollup_gram_counts(spark, bi_t, ("w1", "w2"))
-    tri_roll = ingest.rollup_gram_counts(spark, tri_t,
-                                         ("w1", "w2", "w3"))
+    bi_roll = ingest.rollup_gram_counts(spark, bi_t)
+    tri_roll = ingest.rollup_gram_counts(spark, tri_t)
     assert asmap(uni_roll, ("tok",)) == asmap(uni_want, ("tok",))
     assert asmap(bi_roll, ("w1", "w2")) == asmap(bi_want, ("w1", "w2"))
     assert asmap(tri_roll, ("w1", "w2", "w3")) == \
         asmap(tri_want, ("w1", "w2", "w3"))
 
     # floored serving model from the rollup == batch-trained model
-    uni_m, bi_m, tot_m = lm.lm_model_from_counts(uni_roll, bi_roll)
-    uni_b, bi_b, tot_b = lm.bigram_lm_model(whole)
+    (uni_m, bi_m), tot_m = lm.lm_model_from_counts([uni_roll, bi_roll])
+    (uni_b, bi_b), tot_b = lm.lm_model_from_counts([uni_want, bi_want])
     assert asmap(uni_m, ("tok",)) == asmap(uni_b, ("tok",))
     assert asmap(bi_m, ("w1", "w2")) == asmap(bi_b, ("w1", "w2"))
     assert tot_m.collect() == tot_b.collect()
@@ -498,11 +501,10 @@ def test_lm_counts_ingest_grows_model(spark):
     # equal a batch retrain over the concatenated stream exactly, so a
     # pipeline growing its model via this sink has a sanctioned cuts-
     # refresh path instead of a frozen train-time selection
-    cuts_roll = lm.lm_cuts_from_rollup(whole, uni_roll, bi_roll,
-                                       tri_roll)
-    uni3, bi3, tri3, tot3 = lm.trigram_lm_model(whole)
-    sc_b = lm.trigram_lm_bits(whole, "doc_id", "text",
-                              uni3, bi3, tri3, tot3)
+    cuts_roll = lm.lm_selection_from_rollup(
+        whole, [uni_roll, bi_roll, tri_roll], 3)
+    model3, tot3 = lm.lm_model_from_counts([uni_want, bi_want, tri_want])
+    sc_b = lm.lm_bits(whole, "doc_id", "text", model3, tot3, 3)
     assert cuts_roll.collect() == lm.lm_terciles(sc_b).collect()
 
     # replaying epoch 0 overwrites its partitions — rollup unchanged
@@ -669,9 +671,11 @@ def test_lm3_ingest_matches_batch_operator(spark):
         return t
 
     corpus = spark.createDataFrame(train, "doc_id long, text string")
-    uni, bi, tri, tot = lm.trigram_lm_model(corpus)
-    sc_train = lm.trigram_lm_bits(corpus, "doc_id", "text",
-                                  uni, bi, tri, tot)
+    tk = lm.tokenized(corpus)
+    (uni, bi, tri), tot = lm.lm_model_from_counts(
+        [lm.gram_counts(tk, n) for n in (1, 2, 3)])
+    sc_train = lm.lm_bits(corpus, "doc_id", "text", [uni, bi, tri], tot,
+                          3)
     cuts = lm.lm_terciles(sc_train)
     uni_t, bi_t, tri_t = table("lm_uni"), table("lm_bi"), table("lm_tri")
     tot_t, cuts_t = table("lm_tot"), table("lm_cuts")
@@ -691,8 +695,8 @@ def test_lm3_ingest_matches_batch_operator(spark):
 
     scored_t, kept_t = table("lm3_scored_t"), table("lm3_kept_t")
     for tgt, keep in ((scored_t, False), (kept_t, True)):
-        sink = ingest.lm3_ingest_sink(uni_t, bi_t, tri_t, tot_t,
-                                      cuts_t, tgt, keep_only=keep)
+        sink = ingest.lm_ingest_sink(3, [uni_t, bi_t, tri_t], tot_t,
+                                     cuts_t, tgt, keep_only=keep)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q = (stream.writeStream.foreachBatch(sink)
@@ -706,11 +710,10 @@ def test_lm3_ingest_matches_batch_operator(spark):
     want = {(r["doc_id"], r["lm3_bits"], r["lm3_ppl_bits"],
              r["lm3_bucket"], r["lm3_keep"])
             for r in lm.lm_bucket(
-                lm.trigram_lm_bits(whole, "doc_id", "text",
-                                   spark.table(uni_t),
-                                   spark.table(bi_t),
-                                   spark.table(tri_t),
-                                   spark.table(tot_t)),
+                lm.lm_bits(whole, "doc_id", "text",
+                           [spark.table(uni_t), spark.table(bi_t),
+                            spark.table(tri_t)],
+                           spark.table(tot_t), 3),
                 spark.table(cuts_t)).collect()}
     got = {(r["doc_id"], r["lm3_bits"], r["lm3_ppl_bits"],
             r["lm3_bucket"], r["lm3_keep"])
@@ -727,8 +730,8 @@ def test_lm3_ingest_matches_batch_operator(spark):
     assert 11 not in kept          # tail cut at the door
     assert 13 in kept              # unscorable short doc kept
     # replaying epoch 0 overwrites its partition — nothing duplicates
-    sink0 = ingest.lm3_ingest_sink(uni_t, bi_t, tri_t, tot_t, cuts_t,
-                                   scored_t)
+    sink0 = ingest.lm_ingest_sink(3, [uni_t, bi_t, tri_t], tot_t, cuts_t,
+                                  scored_t)
     sink0(spark.createDataFrame(batches[0], "doc_id long, text string"), 0)
     assert spark.table(scored_t).count() == 4
     assert (spark.table(scored_t).filter(F.col(EPOCH_COL) == 0).count()
