@@ -6,29 +6,13 @@ local[$SPARK_GRAFT_CPUS] and prints TWO JSON lines:
 1. a DETAIL line carrying the per-query maps
    ({"detail": "per_query", "queries": {...}, "queries_cold_sweep": ...,
      "queries_serve": ..., "queries_artifact_build": ...,
-     "serve_complete": ..., "chosen_attempt": ..., "attempts": [...]});
+     "serve_complete": ...});
 2. a compact totals-only SUMMARY line printed LAST
    ({"metric", "value", "unit", "value_cold_sweep", "value_serve",
-     "value_artifact_build", "sf", "n_queries",
-     "noise_median_ratio_vs_prev", "noise_vs", "bench_attempts"}).
+     "value_artifact_build", "sf", "n_queries"}).
 
-Quiet-window policy (VERDICT r13 next #3): the whole two-phase
-measurement re-runs — session caches cleared so each attempt's cold
-sweep is honest — until the embedded noise index is <=
-$SPARK_GRAFT_BENCH_NOISE_MAX (default 1.05), up to
-$SPARK_GRAFT_BENCH_ATTEMPTS (default 3) attempts within
-$SPARK_GRAFT_BENCH_RETRY_BUDGET seconds (default 900). All attempts
-land in the detail file; the reported numbers are the lowest-noise
-attempt's, so a co-tenant block can no longer become the official
-record (it became one in r12 AND r13).
-
-The noise reference is the committed per-query STEADY FLOOR
-(BENCH_STEADY.json, a min-ratchet every attempt folds into): the
-previous-run chain alone masked elevation twice — an elevated
-official run became the next run's reference, and equal elevation
-read as ~1.0. A floor a noisy run cannot raise always reads an
-elevated window as elevated. Chain fallback (BENCH_DETAIL_LAST →
-BENCH_r*.json) covers fresh checkouts and new sf values.
+`perfbench/run.py` is the benchmark of record; this script keeps the
+sf0.1 per-query split it lacks. It writes nothing into the checkout.
 
 The serve/artifact split is the two-phase cold instrument (VERDICT
 r12 #2): the cold sweep's first invocation of each query pays both
@@ -39,11 +23,9 @@ own serving work; `queries_serve` is the post-cold per-query minimum
 contract), and `queries_artifact_build` = cold − serve attributes the
 difference.
 
-The summary line is last and small by contract (VERDICT r10 #1): the
-driver records only the tail of stdout, and round 10's single fat line
-(50 warm + 50 cold per-query entries) overflowed that capture, making
-the official record unparseable. The per-query detail still prints —
-one line earlier — for humans and BENCH_NOTES.
+The summary line is last and small by contract (VERDICT r10 #1): a
+tail capture of stdout must still parse it. The per-query detail
+prints one line earlier.
 
 Each query is forced with a noop-sink write (full plan execution, no
 driver collect); reported per-query time is the best of up to three executions
@@ -118,116 +100,33 @@ def main() -> None:
     # contention.
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "420"))
 
-    def run_measurement() -> dict:
-        """One full two-phase measurement: a COLD sweep against an
-        empty session cache (honest per-query artifact-build + serve
-        cost, VERDICT r9 #1), then up to 2 SERVE sweeps with
-        session-memoized artifacts in place but — per the
-        prepared-statement contract — results never memoized
-        (VERDICT r12 #2: cold − serve attributes the one-off
-        artifact-build work)."""
-        timings: dict[str, float] = {}
-        serve: dict[str, float] = {}
-        t_all = time.perf_counter()
+    # One two-phase measurement: a COLD sweep against an empty
+    # session cache (honest per-query artifact-build + serve cost,
+    # VERDICT r9 #1), then up to 2 SERVE sweeps with session-memoized
+    # artifacts in place but — per the prepared-statement contract —
+    # results never memoized (VERDICT r12 #2: cold − serve attributes
+    # the one-off artifact-build work).
+    timings: dict[str, float] = {}
+    serve: dict[str, float] = {}
+    t_all = time.perf_counter()
+    for name in sorted(QUERIES):
+        timings[name] = run_once(name)
+    cold = {k: round(v, 3) for k, v in timings.items()}
+    for _sweep in range(2):  # up to 2 more full sweeps in budget
         for name in sorted(QUERIES):
-            timings[name] = run_once(name)
-        cold = {k: round(v, 3) for k, v in timings.items()}
-        for _sweep in range(2):  # up to 2 more full sweeps in budget
-            for name in sorted(QUERIES):
-                if time.perf_counter() - t_all > budget_s:
-                    break
-                t = run_once(name)
-                serve[name] = min(serve.get(name, t), t)
-                timings[name] = min(timings[name], t)
-        serve_complete = set(serve) == set(timings)
-        timings = {k: round(v, 3) for k, v in timings.items()}
-        noise_ratio, noise_vs = _noise_vs_prev(timings, sf)
-        return {
-            "queries": timings,
-            "queries_cold_sweep": cold,
-            "queries_serve": {k: round(v, 3) for k, v in serve.items()},
-            "queries_artifact_build": {
-                k: round(max(cold[k] - serve[k], 0.0), 3)
-                for k in sorted(serve)},
-            "serve_complete": serve_complete,
-            "noise_median_ratio_vs_prev": noise_ratio,
-            "noise_vs": noise_vs,
-        }
-
-    # Quiet-window policy (VERDICT r13 next #3): the official artifact
-    # landed in a co-tenant window two rounds running, diverging from
-    # the steady state the committed chain documents. The bench now
-    # re-runs the WHOLE two-phase measurement (session caches cleared,
-    # so every attempt's cold sweep is honest) until the embedded
-    # noise index — the median per-query warm ratio vs the previous
-    # run at the same sf (VERDICT r10 #7; ~1.0 = comparable box,
-    # >1.1 = co-tenant load, memory: bench-noise-protocol) — is at or
-    # under the quiet threshold, up to N attempts within a retry
-    # budget. Every attempt is recorded in the detail file; the
-    # REPORTED numbers are the lowest-noise attempt's, so one noisy
-    # block can no longer become the round's official record.
-    noise_max = float(os.environ.get("SPARK_GRAFT_BENCH_NOISE_MAX",
-                                     "1.05"))
-    max_attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3"))
-    retry_budget = float(os.environ.get("SPARK_GRAFT_BENCH_RETRY_BUDGET",
-                                        "900"))
-    from snowflake_azure_etl_spark.operators._cache import clear_cache
-
-    # floor-refresh rule (VERDICT r14 next #5): a query whose CATALOG
-    # DEFINITION changed (new leg, re-priced plan) must not keep its
-    # pre-change floor entry — it would read as permanent pseudo-noise
-    # (q58's wp_seg leg did exactly that in r14). Fingerprint every
-    # query's definition (oracle SQL + engine source) and drop the
-    # floor entries of any query whose fingerprint moved; the next
-    # quiet run re-seeds them. First-ever fingerprints seed without
-    # dropping anything.
-    _refresh_floor_fps(_catalog_fingerprints(QUERIES))
-
-    t_bench = time.perf_counter()
-    attempts: list[dict] = []
-    for _att in range(max(1, max_attempts)):
-        if attempts:
-            # an honest re-attempt: drop every session-memoized
-            # artifact (indexes, LM/tokenizer models, sketches) so the
-            # next cold sweep rebuilds from scratch like the first
-            clear_cache(spark)
-            gc.collect()
-        attempts.append(run_measurement())
-        nr = attempts[-1]["noise_median_ratio_vs_prev"]
-        if nr is None or nr <= noise_max:
-            break  # quiet window (or no comparable chain): done
-        if time.perf_counter() - t_bench > retry_budget:
-            break  # all-attempts-noisy ledger: report the quietest
-
-    # every attempt is an honest best-of-N measurement: fold them all
-    # into the committed steady floor (min-ratchet — see _steady_floor)
-    _steady_update(sf, [a["queries"] for a in attempts])
-
-    def _noise_key(a: dict) -> float:
-        nr = a["noise_median_ratio_vs_prev"]
-        return nr if nr is not None else -1.0  # no chain = acceptable
-    chosen_i = min(range(len(attempts)),
-                   key=lambda i: _noise_key(attempts[i]))
-    chosen = attempts[chosen_i]
-    timings = chosen["queries"]
-    cold = chosen["queries_cold_sweep"]
-    serve = chosen["queries_serve"]
-    artifact = chosen["queries_artifact_build"]
-    serve_complete = chosen["serve_complete"]
-    total = round(sum(timings.values()), 3)
-    noise_ratio = chosen["noise_median_ratio_vs_prev"]
-    noise_vs = chosen["noise_vs"]
+            if time.perf_counter() - t_all > budget_s:
+                break
+            t = run_once(name)
+            serve[name] = min(serve.get(name, t), t)
+            timings[name] = min(timings[name], t)
+    serve_complete = set(serve) == set(timings)
+    timings = {k: round(v, 3) for k, v in timings.items()}
+    serve = {k: round(v, 3) for k, v in serve.items()}
+    artifact = {k: round(max(cold[k] - serve[k], 0.0), 3)
+                for k in sorted(serve)}
 
     # detail line FIRST (humans / BENCH_NOTES), compact summary LAST
-    # (the driver's tail capture parses the final line — keep it
-    # small). The detail also lands in BENCH_DETAIL_LAST.json —
-    # written AFTER the noise computation read the previous run's
-    # copy — because the driver artifact keeps only a ~2000-char
-    # stdout tail that truncates the detail line's front: without the
-    # file, no round after r10 would have a machine-readable
-    # per-query map and the noise index would pin to ever-older
-    # artifacts (review finding r11).
-    detail = {
+    print(json.dumps({
         "detail": "per_query",
         "sf": sf,
         "queries": timings,
@@ -235,21 +134,10 @@ def main() -> None:
         "queries_serve": serve,
         "queries_artifact_build": artifact,
         "serve_complete": serve_complete,
-        # the quiet-window ledger: every attempt's full measurement,
-        # the chosen (lowest-noise) one mirrored at top level for the
-        # noise chain's reader
-        "chosen_attempt": chosen_i,
-        "attempts": attempts,
-    }
-    print(json.dumps(detail))
-    try:
-        with open(_detail_path(), "w") as fh:
-            json.dump(detail, fh)
-    except OSError:
-        pass  # read-only checkout: stdout still carries the detail
+    }))
     print(json.dumps({
         "metric": "workload_total_wall_clock",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf,
         "n_queries": len(timings),
@@ -262,209 +150,9 @@ def main() -> None:
                         if serve_complete else None),
         "value_artifact_build": (round(sum(artifact.values()), 3)
                                  if serve_complete else None),
-        "noise_median_ratio_vs_prev": noise_ratio,
-        "noise_vs": noise_vs,
-        # quiet-window policy (r14): attempts run until the noise
-        # index <= SPARK_GRAFT_BENCH_NOISE_MAX (default 1.05); > 1
-        # attempts with noise above it = an all-attempts-noisy ledger
-        # (read the detail file's `attempts`)
-        "bench_attempts": len(attempts),
     }))
     sys.stdout.flush()
     spark.stop()
-
-
-def _detail_path() -> str:
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BENCH_DETAIL_LAST.json")
-
-
-def _steady_path() -> str:
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "BENCH_STEADY.json")
-
-
-def _steady_floor(sf: float | None) -> dict | None:
-    """The committed per-query STEADY FLOOR for this sf — the noise
-    index's preferred reference (r14). The chain's previous-run
-    reference failed twice in a row for the same reason: the driver's
-    official run landed in a co-tenant window, BENCH_DETAIL_LAST
-    carried the elevated numbers, and the NEXT equally-elevated run
-    read as noise ~1.0 against them. The floor is a min-ratchet
-    (every attempt's warm map folds in via per-query min), so a noisy
-    run can never raise it — an elevated window always reads elevated.
-    A query whose price legitimately rises (a new attested leg) moves
-    the MEDIAN negligibly among 50 queries; a deliberate engine-wide
-    re-pricing is the one case that needs a curated refresh (delete
-    the sf's entries and let the next quiet run re-seed)."""
-    try:
-        with open(_steady_path()) as fh:
-            d = json.load(fh)
-        m = d.get(str(sf))
-        return m if isinstance(m, dict) and m else None
-    except (OSError, json.JSONDecodeError):
-        return None
-
-
-#: BENCH_STEADY.json key carrying per-query definition fingerprints
-#: (sibling of the per-sf floor maps; never a valid str(sf)).
-FP_KEY = "_fp"
-
-
-def _catalog_fingerprints(queries) -> "dict[str, str]":
-    """{query name: md5 of its DEFINITION} — oracle SQL plus the
-    engine function's source, so a new oracle leg or a QUERY-FUNCTION-
-    LEVEL re-pricing moves the fingerprint (a re-pricing inside a
-    called operator module does not — such floors re-seed via the
-    min-ratchet on the next quiet run instead of being dropped). The
-    source basis is the RAW query body (``q.raw``), not the registered
-    ``q.fn``: for prepared queries ``fn`` is the shared cache wrapper,
-    whose source is identical across queries. Source extraction is
-    best-effort (oracle-only when unavailable): a conservative
-    fingerprint that drops one floor entry too many merely re-seeds
-    it on the next quiet run."""
-    import hashlib
-    import inspect
-
-    fps = {}
-    for name in sorted(queries):
-        q = queries[name]
-        basis = getattr(q, "oracle", "") or ""
-        try:
-            basis += inspect.getsource(getattr(q, "raw", None) or q.fn)
-        except (OSError, TypeError):
-            pass
-        fps[name] = hashlib.md5(basis.encode()).hexdigest()[:16]
-    return fps
-
-
-def _refresh_floor_fps(fps: "dict[str, str]") -> None:
-    """Compare the catalog fingerprints with the stored ones and DROP
-    every changed query's floor entry from every sf map (min-ratchet
-    floors cannot re-price upward on their own — see _steady_floor);
-    store the new fingerprints. Queries seen for the first time seed
-    their fingerprint without dropping (their floor, if any, predates
-    fingerprinting and is refreshed only when the definition next
-    moves — one curated deletion covers the transition)."""
-    try:
-        with open(_steady_path()) as fh:
-            d = json.load(fh)
-        if not isinstance(d, dict):
-            d = {}
-    except (OSError, json.JSONDecodeError):
-        d = {}
-    stored = d.get(FP_KEY)
-    if not isinstance(stored, dict):
-        stored = {}
-    changed = [q for q in fps if q in stored and stored[q] != fps[q]]
-    for sf_key, m in d.items():
-        if sf_key == FP_KEY or not isinstance(m, dict):
-            continue
-        for q in changed:
-            m.pop(q, None)
-    d[FP_KEY] = {**stored, **fps}
-    try:
-        with open(_steady_path(), "w") as fh:
-            json.dump(d, fh, indent=0, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: floors stay as committed
-
-
-def _steady_update(sf: float | None, attempt_maps: "list[dict]") -> None:
-    """Fold every attempt's warm per-query map into the floor
-    (per-query min — monotone, so co-tenant inflation never
-    pollutes it; new queries enter at their first measured value)."""
-    try:
-        with open(_steady_path()) as fh:
-            d = json.load(fh)
-        if not isinstance(d, dict):
-            d = {}
-    except (OSError, json.JSONDecodeError):
-        d = {}
-    m = d.get(str(sf))
-    if not isinstance(m, dict):
-        m = {}
-    for q in attempt_maps:
-        for k, v in q.items():
-            m[k] = round(min(m.get(k, v), v), 3)
-    d[str(sf)] = m
-    try:
-        with open(_steady_path(), "w") as fh:
-            json.dump(d, fh, indent=0, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: the chain fallback still works
-
-
-def _noise_vs_prev(timings: dict[str, float], sf: float | None):
-    """(median current/previous per-query ratio, source name): the
-    previous run's per-query map at the SAME sf — a cross-sf ratio
-    would measure data scale, not box noise. Sources, newest-first:
-    BENCH_DETAIL_LAST.json (written by the most recent bench run —
-    the only reliable carrier since r11's two-line stdout contract,
-    whose detail line overflows the driver's tail capture), then the
-    BENCH_r*.json artifacts' parsed payloads or tail-embedded detail
-    lines. Returns (None, None) when nothing comparable is
-    recoverable. The committed STEADY FLOOR (`_steady_floor`) takes
-    precedence over all of them when it covers enough of the catalog —
-    see its docstring for why the chain alone is not enough."""
-    import glob
-    import statistics
-
-    floor = _steady_floor(sf)
-    if floor:
-        ratios = [timings[q] / floor[q] for q in timings
-                  if q in floor and floor[q] > 0]
-        # enough shared queries that the median means something (new
-        # catalogs re-seed through the chain fallback below)
-        if len(ratios) >= min(10, len(timings)):
-            return (round(statistics.median(ratios), 3),
-                    os.path.basename(_steady_path()))
-
-    try:
-        with open(_detail_path()) as fh:
-            d = json.load(fh)
-        if (isinstance(d, dict) and d.get("sf") == sf
-                and isinstance(d.get("queries"), dict)):
-            prev = d["queries"]
-            ratios = [timings[q] / prev[q] for q in timings
-                      if q in prev and prev[q] > 0]
-            if ratios:
-                return (round(statistics.median(ratios), 3),
-                        os.path.basename(_detail_path()))
-    except (OSError, json.JSONDecodeError):
-        pass
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")),
-                       reverse=True):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(rec, dict):
-            continue
-        prev, prev_sf = None, None
-        parsed = rec.get("parsed")
-        if isinstance(parsed, dict) and isinstance(parsed.get("queries"),
-                                                   dict):
-            prev, prev_sf = parsed["queries"], parsed.get("sf")
-        else:
-            # r11+ artifacts may carry the detail line in the tail
-            for mm in re.finditer(r'\{"detail": "per_query".*?\}\}',
-                                  rec.get("tail", "")):
-                try:
-                    d = json.loads(mm.group(0))
-                    prev, prev_sf = d.get("queries"), d.get("sf")
-                except json.JSONDecodeError:
-                    prev = None
-        if not prev or prev_sf != sf:
-            continue
-        ratios = [timings[q] / prev[q] for q in timings
-                  if q in prev and prev[q] > 0]
-        if ratios:
-            return round(statistics.median(ratios), 3), os.path.basename(path)
-    return None, None
 
 
 if __name__ == "__main__":

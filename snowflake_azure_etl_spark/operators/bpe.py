@@ -62,6 +62,8 @@ from .text import tokens
 #: plain literal replace of "a b " → "ab " is a correct single-pass
 #: greedy merge.
 SENT = "\x01"
+#: The merge law of `word_freqs` partials (`streaming.sinks.read_epochs`).
+WORD_FREQ_MERGE = {"freq": "sum"}
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -94,6 +94,8 @@ LM_WEIGHTS = {2: (LM_LAMBDA_NUM, LM_LAMBDA_DEN - LM_LAMBDA_NUM),
 #: Per-order output-column prefix: <p>_bits, <p>_n_pos, <p>_ppl_bits
 #: and the selection columns (lm_keep; lm3_bucket/lm3_keep).
 LM_PREFIX = {2: "lm", 3: "lm3"}
+#: The merge law of raw `gram_counts` partials (`merge_gram_counts`).
+GRAM_MERGE = {"c": "sum"}
 
 
 def _toks(text_col: Column | str) -> Column:
@@ -447,7 +449,8 @@ def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
                              toks: DataFrame | None = None) -> DataFrame:
     """Refresh the order's selection model from ROLLED-UP raw counts
     [c_1, …] — the sanctioned maintenance path for a pipeline that
-    grows its LM via `lm_counts_ingest_sink` + `rollup_gram_counts`
+    grows its LM via `streaming.ingest.lm_counts_ingest_sink` +
+    `rollup_gram_counts` (the epoch partials merged by `GRAM_MERGE`)
     (VERDICT r12 #7). Derives the floored serving model from the raw
     counts (the floor is not additive — it must re-apply to the
     merged relation), re-scores the LANDED corpus against it, and

@@ -157,6 +157,8 @@ def hll_rollup(partials: DataFrame, group_cols: list[str]) -> DataFrame:
 
 CMS_DEPTH = 4
 CMS_WIDTH = 512
+#: The merge law of CMS partials (`streaming.sinks.read_epochs`).
+CMS_MERGE = {"cnt": "sum"}
 
 
 def cms_bucket(key: Column, j: int, width: int = CMS_WIDTH) -> Column:
@@ -273,6 +275,8 @@ def cms_estimate(sketch: DataFrame, candidates: DataFrame,
 BLOOM_BITS = 4096
 BLOOM_HASHES = 3
 _BLOOM_WORD = 32
+#: The merge law of Bloom partials: aligned words OR together.
+BLOOM_MERGE = {"word": "bit_or"}
 
 
 def _bloom_pos(key: Column, j: int, bits: int) -> Column:
@@ -368,6 +372,8 @@ def bloom_probe(bloom: DataFrame, candidates: DataFrame, key_col: str,
 # ---------------------------------------------------------------------------
 
 HIST_BINS = 16
+#: The merge law of histogram partials: bin counts add.
+HIST_MERGE = {"cnt": "sum"}
 
 
 def equiwidth_histogram(df: DataFrame, value: Column | str,

@@ -47,7 +47,8 @@ r14 additions: CHAR-FALLBACK encoding (``fallback=True`` /
 characters become their own penalty-priced pieces, total coverage +
 exact round-trip, strict mode the pinned default) and the streaming
 maintenance path (`streaming.ingest.unigram_counts_ingest_sink` →
-`rollup_word_freqs` → `train_unigram_from_words` == batch retrain
+`rollup_word_freqs` (the epoch partials merged by
+`bpe.WORD_FREQ_MERGE`) → `train_unigram_from_words` == batch retrain
 exactly).
 
 Scale (100 TB): the one corpus-sized pass is `bpe.word_freqs`' word
@@ -344,12 +345,12 @@ def train_unigram_from_words(words: DataFrame,
     """Train from a (word, freq) RELATION instead of a document
     corpus — the sanctioned MAINTENANCE path for a pipeline that
     grows its word counts via `streaming.ingest.unigram_counts_
-    ingest_sink` + `rollup_word_freqs` (the `lm_cuts_from_rollup`
-    pattern, VERDICT r13 next #5). Training depends on the corpus
-    ONLY through its word frequencies and word counts are additive,
-    so stream-grown counts + this call equal `train_unigram` over the
-    concatenated corpus EXACTLY (pinned in
-    tests/test_streaming_ingest.py). Not memoized — a maintenance
+    ingest_sink` + `rollup_word_freqs` (the
+    `lm.lm_selection_from_rollup` pattern, VERDICT r13 next #5).
+    Training depends on the corpus ONLY through its word frequencies
+    and word counts are additive, so stream-grown counts + this call
+    equal `train_unigram` over the concatenated corpus EXACTLY (pinned
+    in tests/test_streaming_ingest.py). Not memoized — a maintenance
     job retrains once per rollup, and the rollup is not a stable
     session-plan key the way a corpus plan is."""
     sc = words.sparkSession.sparkContext

@@ -97,9 +97,7 @@ def decontam_ingest_sink(eval_gram_table: str, clean_table: str, *,
     benchmark release — `eval_gram_table`), contaminated docs are
     dropped, clean docs land in `clean_table`, and the
     hit-proportional overlap accounting optionally lands in
-    `audit_table`. Both writes ride `sinks.idempotent_epoch_sink`, so
-    an at-least-once replay overwrites its own epoch partition —
-    exactly-once-in-effect.
+    `audit_table`. Both land through `sinks.epoch_sink` (replay-safe).
 
     Decontamination is stateless across batches (every doc is judged
     against the same fixed benchmark), so the stream output equals
@@ -109,33 +107,27 @@ def decontam_ingest_sink(eval_gram_table: str, clean_table: str, *,
     ``n_eval_grams`` attestation (the batch operator's contract)."""
     from ..operators.decontam import (DECONTAM_N,
                                       contamination_hits_against)
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
     width = DECONTAM_N if n is None else n
-    write_clean = idempotent_epoch_sink(clean_table)
-    write_audit = (idempotent_epoch_sink(audit_table)
-                   if audit_table else None)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ev = spark.table(eval_gram_table)
+    def step(batch_df: DataFrame, epoch_id: int):
+        ev = batch_df.sparkSession.table(eval_gram_table)
         hits = contamination_hits_against(
             batch_df, ev, id_col, text_col, width, n_eval_grams)
-        if write_audit is not None:
-            # hits feeds BOTH sinks — materialize once (eager, an
+        if audit_table:
+            # hits feeds BOTH outputs — materialize once (eager, an
             # epoch-bounded relation) so the gram hashing + eval join
-            # run once per epoch, not once per sink; not the session
+            # run once per epoch, not once per output; not the session
             # cache, because a long-running stream submits a new plan
             # per epoch and plan-keyed entries would accumulate
             hits = hits.localCheckpoint(eager=True)
         # hit ids are hit-proportional (bounded by the batch); the
         # anti-join drops contaminated docs from the clean leg
         clean = batch_df.join(hits.select(id_col), id_col, "left_anti")
-        write_clean(clean, epoch_id)
-        if write_audit is not None:
-            write_audit(hits, epoch_id)
+        return clean, (hits if audit_table else None)
 
-    return write
+    return epoch_sink(step, clean_table, audit_table)
 
 
 def dsir_ingest_sink(model_table: str, scored_table: str, *,
@@ -152,8 +144,7 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     (`model_table`, the (bucket, lam) artifact `dsir_bucket_stats*`
     trains once per (target, corpus version) — the same shared
     artifact q50/q47 read), and lands in `scored_table` with its
-    `dsir_score` column via `sinks.idempotent_epoch_sink` (at-least-
-    once replays overwrite their own epoch partition).
+    `dsir_score` column via `sinks.epoch_sink` (replay-safe).
 
     Scoring is stateless across batches (every doc is judged against
     the same fixed model), so the stream output equals the batch
@@ -167,14 +158,12 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     gram hashing; nothing accumulates driver- or executor-side."""
     from ..operators.sampling import (DSIR_BUCKETS, dsir_log_weights_from,
                                       hashed_ngram_counts)
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
     buckets = DSIR_BUCKETS if n_buckets is None else n_buckets
-    write_scored = idempotent_epoch_sink(scored_table)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        stats = spark.table(model_table)
+    def step(batch_df: DataFrame, epoch_id: int):
+        stats = batch_df.sparkSession.table(model_table)
         feats = hashed_ngram_counts(batch_df, id_col, text_col, n,
                                     buckets, salt)
         scored = dsir_log_weights_from(batch_df.select(id_col), feats,
@@ -183,9 +172,9 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
         out = batch_df.join(scored, id_col)
         if keep_only:
             out = out.filter(F.col("dsir_score") > 0)
-        write_scored(out, epoch_id)
+        return [out]
 
-    return write
+    return epoch_sink(step, scored_table)
 
 
 def lm_ingest_sink(order: int, count_tables: Sequence[str],
@@ -205,8 +194,7 @@ def lm_ingest_sink(order: int, count_tables: Sequence[str],
     at order 2, the tercile cuts at order 3; fixed at ingest so the
     cut never drifts with batch composition). Rows land in
     `scored_table` with the order's score and keep columns
-    (lm_*/lm_keep; lm3_*/lm3_bucket/lm3_keep) via the idempotent
-    epoch sink.
+    (lm_*/lm_keep; lm3_*/lm3_bucket/lm3_keep) via `sinks.epoch_sink`.
 
     Stateless across batches (fixed model, fixed selection), so the
     stream output equals the batch scoring of the concatenated stream
@@ -215,12 +203,11 @@ def lm_ingest_sink(order: int, count_tables: Sequence[str],
     at the door; unscorable short documents are kept (the batch
     operator's contract)."""
     from ..operators.lm import LM_PREFIX, lm_bits, lm_select
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
-    write_scored = idempotent_epoch_sink(scored_table)
     keep_col = f"{LM_PREFIX[order]}_keep"
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
         scored = lm_bits(batch_df, id_col, text_col,
                          [spark.table(t) for t in count_tables],
@@ -230,9 +217,9 @@ def lm_ingest_sink(order: int, count_tables: Sequence[str],
             id_col)
         if keep_only:
             out = out.filter(F.col(keep_col))
-        write_scored(out, epoch_id)
+        return [out]
 
-    return write
+    return epoch_sink(step, scored_table)
 
 
 def lm_counts_ingest_sink(count_tables: Sequence[str], *,
@@ -250,25 +237,22 @@ def lm_counts_ingest_sink(count_tables: Sequence[str], *,
     raw counts ever land). The batch tokenizes ONCE (`lm.tokenized`)
     across all gram families. Counts are additive, so stream == batch
     over the concatenated stream (pinned in
-    tests/test_streaming_ingest.py) and a replayed epoch overwrites
-    its own partitions with identical rows."""
+    tests/test_streaming_ingest.py)."""
     from ..operators.lm import gram_counts, tokenized
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
-    writers = [idempotent_epoch_sink(t) for t in count_tables]
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         # persist for the duration of the write actions — each is its
         # own job, and an unpersisted toks would re-read and re-split
         # the batch source per gram family (review finding)
         toks = tokenized(batch_df, id_col, text_col).persist()
         try:
-            for n, write_n in enumerate(writers, 1):
-                write_n(gram_counts(toks, n), epoch_id)
+            for n in range(1, len(count_tables) + 1):
+                yield gram_counts(toks, n)
         finally:
             toks.unpersist()
 
-    return write
+    return epoch_sink(step, *count_tables)
 
 
 def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
@@ -285,21 +269,14 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
     stream) against the PERSISTED piece table (`pieces_table_df` of a
     `train_unigram` model — trained once per corpus version, fixed at
     ingest so segmentations never drift with batch composition); rows
-    land in `seg_table` with (pieces, n_pieces) via the idempotent
-    epoch sink.
+    land in `seg_table` with (pieces, n_pieces) via `sinks.epoch_sink`.
 
-    The bounded model is read from the table per micro-batch (a
-    piece-vocab-sized collect — the bpe merge-list economics), so a
-    maintenance job CAN land a retrained table mid-stream and later
-    batches pick it up; with the table fixed the sink is stateless
-    and stream == batch over the concatenated stream (pinned in
-    tests/test_streaming_ingest.py). `k` defaults to the LONGEST
-    persisted piece — deriving it from the table itself, not the
-    module constant, so a model trained with a non-default
-    max-piece-length segments identically at ingest (r13 review: a
-    k=4 default silently dropped a k=6 model's long candidates —
-    exactly the drift this sink pins against). Unsegmentable
-    documents carry NULL pieces (fail-visible);
+    The model is read per micro-batch (`_piece_rows`: a maintenance
+    job CAN land a retrained table mid-stream and later batches pick
+    it up; `k` defaults to the longest persisted piece); with the
+    table fixed the sink is stateless and stream == batch over the
+    concatenated stream (pinned in tests/test_streaming_ingest.py).
+    Unsegmentable documents carry NULL pieces (fail-visible);
     ``drop_unsegmentable=True`` drops them at the door instead, and
     ``fallback=True`` (char-fallback, `unigram.unk_cost_of`) makes
     them segmentable instead — the web-ingest shape, where one emoji
@@ -309,28 +286,37 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
     plan bloat."""
     from ..operators.segment import segment_docs
     from ..operators.unigram import segmenter
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
-    write_seg = idempotent_epoch_sink(seg_table)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        costs = {r["piece"]: int(r["cost"])
-                 for r in spark.table(pieces_table)
-                 .select("piece", "cost").collect()}
-        if not costs:
-            raise ValueError(
-                f"unigram_ingest_sink: piece table {pieces_table} is "
-                "empty — land a trained model before streaming")
-        eff_k = k if k is not None else max(len(p) for p in costs)
+    def step(batch_df: DataFrame, epoch_id: int):
+        rows, eff_k = _piece_rows(batch_df.sparkSession, pieces_table,
+                                  ("piece", "cost"), k,
+                                  "unigram_ingest_sink", "trained model")
+        costs = {r["piece"]: int(r["cost"]) for r in rows}
         out = (segment_docs(batch_df, segmenter(costs, eff_k, fallback),
                             text_col)
                .withColumn("n_pieces", F.size("pieces")))
         if drop_unsegmentable:
             out = out.filter(F.col("pieces").isNotNull())
-        write_seg(out, epoch_id)
+        return [out]
 
-    return write
+    return epoch_sink(step, seg_table)
+
+
+def _piece_rows(spark: SparkSession, table: str, cols: Sequence[str],
+                k: int | None, sink: str, what: str):
+    """(rows, k) of a tokenizer sink's PERSISTED piece table: a
+    piece-vocab-sized collect per micro-batch; empty fails loud. `k`
+    defaults to the LONGEST persisted piece, so a model trained with a
+    non-default max piece length segments identically at ingest (r13
+    review: a k=4 default silently dropped a k=6 model's long
+    candidates). NULL pieces are left to the family's validation."""
+    rows = spark.table(table).select(*cols).collect()
+    if not rows:
+        raise ValueError(f"{sink}: piece table {table} is empty — land "
+                         f"a {what} before streaming")
+    return rows, (k if k is not None
+                  else max(len(r["piece"] or "") for r in rows))
 
 
 def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
@@ -343,7 +329,7 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
     PERSISTED piece table (any (piece, …) relation — the unigram
     `pieces_table_df`, a BPE vocab, or a hand-landed list: greedy
     matching needs membership only); rows land in `seg_table` with
-    (pieces, n_pieces) via the idempotent epoch sink. WordPiece's
+    (pieces, n_pieces) via `sinks.epoch_sink`. WordPiece's
     whole-word ``[UNK]`` makes coverage total by construction, so
     there is no drop knob — unknown material is visible IN the data.
     `k` defaults to the longest persisted piece (the unigram sink's
@@ -360,15 +346,15 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
     from ..operators.segment import segment_docs
     from ..operators.wordpiece import (WP_CONTINUATION, WP_INITIAL,
                                        segmenter)
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
-    write_seg = idempotent_epoch_sink(seg_table)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
-        tbl = spark.table(pieces_table)
-        if "fl" in tbl.columns:
-            rows = tbl.select("piece", "fl").collect()
+        flagged = "fl" in spark.table(pieces_table).columns
+        rows, eff_k = _piece_rows(spark, pieces_table,
+                                  ("piece", "fl") if flagged else ("piece",),
+                                  k, "wordpiece_ingest_sink", "vocabulary")
+        if flagged:
             # a malformed landed vocabulary fails LOUD like the
             # empty-table case: a NULL fl would TypeError below, and a
             # row with no membership bit (fl & 3 == 0) would silently
@@ -393,22 +379,14 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
                       if r["fl"] & WP_INITIAL}
             cont = {r["piece"] for r in rows
                     if r["fl"] & WP_CONTINUATION}
-            all_pieces = {r["piece"] for r in rows}
         else:
-            rows = tbl.select("piece").collect()
-            pieces = all_pieces = {r["piece"] for r in rows}
-            cont = None
-        if not all_pieces:
-            raise ValueError(
-                f"wordpiece_ingest_sink: piece table {pieces_table} "
-                "is empty — land a vocabulary before streaming")
-        eff_k = k if k is not None else max(len(p) for p in all_pieces)
+            pieces, cont = {r["piece"] for r in rows}, None
         out = (segment_docs(batch_df, segmenter(pieces, eff_k, cont),
                             text_col)
                .withColumn("n_pieces", F.size("pieces")))
-        write_seg(out, epoch_id)
+        return [out]
 
-    return write
+    return epoch_sink(step, seg_table)
 
 
 def unigram_counts_ingest_sink(words_table: str, *,
@@ -424,17 +402,12 @@ def unigram_counts_ingest_sink(words_table: str, *,
     derive by the SUM merge law, and because training depends on the
     corpus only through these counts, rollup → retrain yields the
     model a batch train over the concatenated corpus yields EXACTLY
-    (pinned in tests/test_streaming_ingest.py). A replayed epoch
-    overwrites its own partition with identical rows."""
+    (pinned in tests/test_streaming_ingest.py)."""
     from ..operators.bpe import word_freqs
-    from .sinks import idempotent_epoch_sink
+    from .sinks import epoch_sink
 
-    write_words = idempotent_epoch_sink(words_table)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        write_words(word_freqs(batch_df, text_col), epoch_id)
-
-    return write
+    return epoch_sink(
+        lambda batch_df, _: [word_freqs(batch_df, text_col)], words_table)
 
 
 def rollup_word_freqs(spark: SparkSession, table: str) -> DataFrame:
@@ -443,10 +416,9 @@ def rollup_word_freqs(spark: SparkSession, table: str) -> DataFrame:
     stream (counts are additive). Feed to
     `unigram.train_unigram_from_words` (or `bpe` trainers — the same
     relation drives both tokenizer families' maintenance)."""
-    from .sinks import EPOCH_COL
-    return (spark.table(table).drop(EPOCH_COL)
-            .groupBy("word")
-            .agg(F.sum("freq").cast("long").alias("freq")))
+    from ..operators.bpe import WORD_FREQ_MERGE
+    from .sinks import read_epochs
+    return read_epochs(spark, table, merge=WORD_FREQ_MERGE)
 
 
 def rollup_gram_counts(spark: SparkSession, table: str) -> DataFrame:
@@ -456,10 +428,9 @@ def rollup_gram_counts(spark: SparkSession, table: str) -> DataFrame:
     every column but `c` once the epoch column is dropped, so one
     call serves every order's table; feed the rollups to
     `lm.lm_model_from_counts` for the floored serving model."""
-    from .sinks import EPOCH_COL
-    counts = spark.table(table).drop(EPOCH_COL)
-    return (counts.groupBy(*(c for c in counts.columns if c != "c"))
-            .agg(F.sum("c").cast("long").alias("c")))
+    from ..operators.lm import GRAM_MERGE
+    from .sinks import read_epochs
+    return read_epochs(spark, table, merge=GRAM_MERGE)
 
 
 #: Shard column of the streaming line-winner table — a deterministic
@@ -520,13 +491,9 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
     few hundred MB at the design point."""
     from ..operators.dedup import (line_winners, rollup_line_winners,
                                    scrub_with_line_winners)
-    from .sinks import EPOCH_COL, idempotent_epoch_sink
+    from .sinks import EPOCH_COL, epoch_sink, read_epochs, require_columns
 
-    write_win = idempotent_epoch_sink(
-        winner_table, sub_partition_cols=(LINE_SHARD_COL,))
-    write_scrub = idempotent_epoch_sink(scrubbed_table)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
         # layout guard (ADVICE r16 #3): a winner table created by the
         # pre-shard sink is partitioned by epoch only — insertInto
@@ -534,18 +501,15 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
         # write and the shard read-back below would then raise an
         # opaque AnalysisException every epoch, wedging the stream.
         # Fail at the first write with the migration named instead.
-        if spark.catalog.tableExists(winner_table):
-            part_cols = [c.name for c in spark.catalog.listColumns(
-                winner_table) if c.isPartition]
-            if LINE_SHARD_COL not in part_cols:
-                raise ValueError(
-                    f"line_dedup_ingest_sink: winner table "
-                    f"{winner_table} is partitioned by {part_cols} "
-                    f"without the shard column {LINE_SHARD_COL!r} — it "
-                    "was created by a pre-shard sink version. Migrate "
-                    "it (re-land the winner partials into a table "
-                    f"partitioned by (_epoch_id, {LINE_SHARD_COL})) or "
-                    "point the sink at a fresh table name.")
+        require_columns(
+            spark, winner_table, (LINE_SHARD_COL,),
+            f"line_dedup_ingest_sink: winner table "
+            f"{winner_table} is partitioned by {{have}} "
+            f"without the shard column {LINE_SHARD_COL!r} — it "
+            "was created by a pre-shard sink version. Migrate "
+            "it (re-land the winner partials into a table "
+            f"partitioned by (_epoch_id, {LINE_SHARD_COL})) or "
+            "point the sink at a fresh table name.", partition=True)
         part = line_winners(batch_df, id_col, text_col, sep,
                             min_chars).withColumn(
             LINE_SHARD_COL,
@@ -558,9 +522,7 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
         # action that saw no rows, read the partition back instead.
         existed = spark.catalog.tableExists(winner_table)
         obs = Observation()
-        write_win(part.observe(obs, F.collect_set(LINE_SHARD_COL)
-                               .alias("sh")),
-                  epoch_id)
+        yield part.observe(obs, F.collect_set(LINE_SHARD_COL).alias("sh"))
         shards = (existed and sorted(obs.get["sh"])) or sorted(
             r[0] for r in spark.table(winner_table)
             .filter(F.col(EPOCH_COL) == int(epoch_id))
@@ -570,16 +532,15 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
         # batch line is in `part` — just written); unhinted semi-join:
         # AQE broadcasts a small batch side, shuffle-joins a huge one
         idx = rollup_line_winners(
-            spark.table(winner_table)
-            .filter((F.col(EPOCH_COL) <= int(epoch_id))
-                    & F.col(LINE_SHARD_COL).isin(shards))
-            .drop(EPOCH_COL, LINE_SHARD_COL)
+            read_epochs(spark, winner_table, before=epoch_id + 1)
+            .filter(F.col(LINE_SHARD_COL).isin(shards))
+            .drop(LINE_SHARD_COL)
             .join(part.select("_h"), "_h", "semi"))
-        write_scrub(scrub_with_line_winners(batch_df, idx, id_col,
-                                            text_col, sep, min_chars),
-                    epoch_id)
+        yield scrub_with_line_winners(batch_df, idx, id_col, text_col,
+                                      sep, min_chars)
 
-    return write
+    return epoch_sink(step, (winner_table, (LINE_SHARD_COL,)),
+                      scrubbed_table)
 
 
 def scored_ingest(stream: DataFrame, weights: list[float],

@@ -5,13 +5,10 @@ twin of `operators.dedup.incremental_near_dup_candidates`, composing
 the drop-directory ingest (`streaming.ingest`) with the incremental
 dedup contract.
 
-Replay safety (at-least-once foreachBatch): both writes ride the
-epoch-partitioned dynamic-overwrite pattern (`sinks.
-idempotent_epoch_sink`), and the candidate computation probes only
-index rows from STRICTLY EARLIER epochs — so a replayed epoch N never
-pairs the batch against its own half-written keys, and overwrites both
-of its partitions with identical rows. At-least-once becomes
-exactly-once-in-effect, pinned by tests/test_streaming_neardup.py
+Replay safety: both outputs land through `sinks.epoch_sink` and the
+candidate probe reads only STRICTLY EARLIER index epochs
+(`sinks.read_epochs`) — the package's one epoch discipline, argued in
+`streaming.sinks` and pinned here by tests/test_streaming_neardup.py
 including a deliberate replay.
 
 Scale notes: per epoch the corpus-sized index is READ IN PLACE (land
@@ -24,7 +21,6 @@ partition-pruned read of epochs ≤ v.
 
 from __future__ import annotations
 
-import re
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
@@ -34,7 +30,7 @@ from ..operators.dedup import (band_key_index,
                                incremental_near_dup_candidates,
                                minhash_signature_shingled)
 from ..sources.registry import footer_row_count
-from .sinks import EPOCH_COL, idempotent_epoch_sink
+from .sinks import epoch_sink, read_epochs
 
 
 def near_dup_ingest_sink(index_table: str, cand_table: str, *,
@@ -57,10 +53,8 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
     guard drops out under ``max_bucket``; an overcount only keeps it
     on, and an unreadable footer (None) attests nothing.
     """
-    write_cands = idempotent_epoch_sink(cand_table)
-    write_keys = idempotent_epoch_sink(index_table)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
         # ONE materialized signature pass per epoch; its band keys feed
         # both the probe (`keys` hand-off) and the index write
@@ -70,22 +64,17 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
                .observe(obs, F.count(F.lit(1)).alias("n"))
                .localCheckpoint(eager=True))
         keys = band_key_index(sig, id_col, bands, rows)
-        if spark.catalog.tableExists(index_table):
-            index = spark.table(index_table)
-            n_index = footer_row_count([
-                f for f in index.inputFiles()
-                if int(re.search(rf"/{EPOCH_COL}=(\d+)/", f)[1])
-                < int(epoch_id)])
-            index = (index.filter(F.col(EPOCH_COL) < int(epoch_id))
-                     .drop(EPOCH_COL))
-        else:
+        index = read_epochs(spark, index_table, before=epoch_id)
+        if index is None:
             index, n_index = keys.limit(0), 0
+        else:
+            # the epoch filter prunes the listing to the probed files
+            n_index = footer_row_count(index.inputFiles())
         cands = incremental_near_dup_candidates(
             batch_df, index, id_col, text_col,
             bands=bands, rows=rows, shingle_n=shingle_n,
             max_bucket=max_bucket, n_new=obs.get["n"], n_index=n_index,
             keys=keys)
-        write_cands(cands, epoch_id)
-        write_keys(keys, epoch_id)
+        return cands, keys
 
-    return write
+    return epoch_sink(step, cand_table, index_table)

@@ -1,75 +1,158 @@
-"""Streaming sinks with replay-safe (effectively-once) semantics.
+"""Streaming sinks with replay-safe (effectively-once) semantics: the
+one epoch discipline every epoch sink in this package follows.
 
 Structured Streaming guarantees at-least-once delivery to foreachBatch:
 after a failure the last epoch is REPLAYED, so a naive append sink
 duplicates it. The canonical fix (Structured Streaming programming
 guide, foreachBatch section) is to make the write idempotent on
-`epoch_id`. `idempotent_epoch_sink` lands each micro-batch into an
-epoch-partitioned parquet table with DYNAMIC partition overwrite:
-replaying epoch N overwrites partition N in place — same rows, no
-duplicates — while other epochs are untouched.
+`epoch_id`. Two rules make a sink replay-safe, and this module is the
+one place that implements them:
+
+1. **Idempotent per-epoch write.** `write_epoch` lands a relation into
+   an epoch-partitioned parquet table with DYNAMIC partition
+   overwrite: replaying epoch N overwrites partition N in place — same
+   rows, no duplicates — while other epochs are untouched.
+2. **Strictly-earlier reads.** A sink that probes its own tables
+   (the near-dup band index, the substring window index, the vector
+   drift baseline) reads them through `read_epochs(..., before=N)`,
+   so a replayed epoch N never sees its own half-written rows and
+   recomputes identical outputs.
+
+`epoch_sink(step, *outputs)` builds the foreachBatch function: the
+per-epoch `step` returns its output relations in the declared order
+and each lands through `write_epoch`. Per-epoch PARTIALS of a linear
+artifact (sketch counters, gram/word counts) never read-modify-write
+the table, so the rollup — `read_epochs(..., merge=LAW)` with the
+family's merge law — never double-counts a replayed epoch.
 
 Scale notes: one directory per epoch keeps the overwrite scoped to the
-replayed batch (not the table); downstream readers prune on the epoch
-column like any partition key; compaction (re-landing many small epoch
-partitions into date-grain partitions via plans.layout.land_partitioned)
-is an offline concern, not a sink concern.
+replayed batch (not the table); readers prune on the epoch column like
+any partition key. The table lifecycle is offline: `compact_epochs`
+merges old partials into one baseline partition and `vacuum_epochs`
+drops epochs below a retention watermark. Epoch ids are only monotone
+within one checkpoint lineage: a NEW checkpoint restarts at epoch 0
+and would overwrite historical partitions, so sink tables are 1:1
+with a checkpoint — reuse it to resume, or point the sink at fresh
+tables to start a new lineage.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EPOCH_COL = "_epoch_id"
 
 
-def idempotent_epoch_sink(table: str,
-                          epoch_col: str = EPOCH_COL,
-                          sub_partition_cols: "tuple[str, ...]" = ()
-                          ) -> Callable[[DataFrame, int], None]:
-    """Build a foreachBatch function whose writes are idempotent per
-    epoch: `writeStream.foreachBatch(idempotent_epoch_sink("db.t"))`.
-
-    Replays of a failed epoch overwrite that epoch's partition instead
-    of appending a second copy — the exactly-once-in-effect contract
-    for non-transactional parquet targets.
+def write_epoch(df: DataFrame, table: str, epoch_id: int, *,
+                epoch_col: str = EPOCH_COL,
+                sub_partition_cols: "tuple[str, ...]" = ()) -> None:
+    """Land `df` as partition `epoch_id` of `table`, idempotently:
+    a replay overwrites that partition instead of appending a second
+    copy — the exactly-once-in-effect contract for non-transactional
+    parquet targets.
 
     `sub_partition_cols` adds partition levels UNDER the epoch (e.g.
     a deterministic hash-shard column) so later readers can prune the
     table below epoch grain; a deterministic batch re-lands the same
-    sub-partitions on replay, so dynamic overwrite keeps the
-    exactly-once-in-effect contract unchanged.
-    """
+    sub-partitions on replay, so dynamic overwrite keeps the contract
+    unchanged."""
+    spark = df.sparkSession
+    out = df.withColumn(epoch_col, F.lit(int(epoch_id)).cast("long"))
+    if not spark.catalog.tableExists(table):
+        # Bootstrap = schema DDL only (ADVICE r4): register the
+        # table EMPTY (overwrite clears any half-written leftovers
+        # from a crashed earlier bootstrap), then fall through to
+        # the same per-epoch overwrite path as every other epoch —
+        # so a replayed first epoch is idempotent too, with no
+        # ErrorIfExists window between data write and registration.
+        (out.limit(0).write.mode("overwrite")
+         .partitionBy(epoch_col, *sub_partition_cols)
+         .format("parquet")
+         .saveAsTable(table))
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(mode_key, "static")
+    spark.conf.set(mode_key, "dynamic")
+    try:
+        # insertInto is position-based; align to the table layout
+        cols = spark.table(table).columns
+        out.select(*cols).write.mode("overwrite").insertInto(table)
+    finally:
+        spark.conf.set(mode_key, prev)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = batch_df.withColumn(epoch_col,
-                                  F.lit(int(epoch_id)).cast("long"))
-        if not spark.catalog.tableExists(table):
-            # Bootstrap = schema DDL only (ADVICE r4): register the
-            # table EMPTY (overwrite clears any half-written leftovers
-            # from a crashed earlier bootstrap), then fall through to
-            # the same per-epoch overwrite path as every other epoch —
-            # so a replayed first epoch is idempotent too, with no
-            # ErrorIfExists window between data write and registration.
-            (out.limit(0).write.mode("overwrite")
-             .partitionBy(epoch_col, *sub_partition_cols)
-             .format("parquet")
-             .saveAsTable(table))
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            # insertInto is position-based; align to the table layout
-            cols = spark.table(table).columns
-            out.select(*cols).write.mode("overwrite").insertInto(table)
-        finally:
-            spark.conf.set(mode_key, prev)
 
-    return write
+def epoch_sink(step: Callable[[DataFrame, int],
+                              Iterable["DataFrame | None"]],
+               *outputs: "str | tuple[str, tuple[str, ...]] | None"
+               ) -> Callable[[DataFrame, int], None]:
+    """Build a foreachBatch function from a per-epoch `step`:
+    `writeStream.foreachBatch(epoch_sink(step, "db.a", "db.b"))`.
+
+    `step(batch_df, epoch_id)` returns its output relations in the
+    order of `outputs`, as any iterable; each lands in its table
+    through `write_epoch` as soon as it is produced, so a step that
+    must act between two writes (read back what the first landed,
+    release a persisted input after the last) is a generator. An
+    output is a table name, or a `(table, sub_partition_cols)` pair;
+    a `None` relation skips its write (an optional table). A step
+    that yields more or fewer relations than declared outputs fails
+    loud."""
+    specs = [(o, ()) if o is None or isinstance(o, str) else o
+             for o in outputs]
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        for (table, sub), df in zip(specs, step(batch_df, epoch_id),
+                                    strict=True):
+            if df is not None:
+                write_epoch(df, table, epoch_id, sub_partition_cols=sub)
+
+    return sink
+
+
+def read_epochs(spark: SparkSession, table: str, *,
+                before: int | None = None,
+                merge: "dict[str, str] | None" = None
+                ) -> DataFrame | None:
+    """A sink's own epoch table, epoch column dropped.
+
+    `before=N` keeps only epochs strictly below N — the replay-safe
+    probe of epoch N — and returns None while the table does not exist
+    yet (the probe of a sink's first epoch). `merge` maps each value
+    column to the aggregate of its family's merge law
+    (`{"cnt": "sum"}`, `{"word": "bit_or"}`); every other column is a
+    group key, so the epoch partials fold into the artifact of the
+    concatenated stream."""
+    if before is not None and not spark.catalog.tableExists(table):
+        return None
+    df = spark.table(table)
+    if before is not None:
+        df = df.filter(F.col(EPOCH_COL) < int(before))
+    df = df.drop(EPOCH_COL)
+    if merge:
+        df = (df.groupBy(*(c for c in df.columns if c not in merge))
+              .agg(*(getattr(F, how)(c).alias(c)
+                     for c, how in merge.items())))
+    return df
+
+
+def require_columns(spark: SparkSession, table: str,
+                    cols: "Iterable[str]", message: str, *,
+                    partition: bool = False) -> None:
+    """Fail loud when an existing `table` lacks any of `cols` (among
+    its PARTITION columns with `partition=True`): an older sink version
+    created it, and the position-based `write_epoch` would silently
+    drop the new columns. `message` is formatted with `have` (the
+    table's columns of that kind) and `missing` (the absent ones)."""
+    if not spark.catalog.tableExists(table):
+        return
+    # listColumns runs Spark jobs; the schema read runs none
+    have = ([c.name for c in spark.catalog.listColumns(table)
+             if c.isPartition] if partition else spark.table(table).columns)
+    missing = sorted(set(cols) - set(have))
+    if missing:
+        raise ValueError(message.format(have=have, missing=missing))
 
 
 def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
@@ -105,10 +188,9 @@ def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
     for p in parts:
         if not p.startswith(f"{epoch_col}="):
             continue
-        # sub-partitioned sinks (idempotent_epoch_sink's
-        # sub_partition_cols) list one row PER LEAF partition —
-        # '_epoch_id=N/_hb=K' — so parse the epoch from the FIRST path
-        # level (ADVICE r16 #1: the full string failed int() and
+        # sub-partitioned sinks (write_epoch's sub_partition_cols)
+        # list one row PER LEAF partition — '_epoch_id=N/_hb=K' — so
+        # parse the epoch from the FIRST path level (ADVICE r16 #1: the full string failed int() and
         # retention silently no-op'd on exactly the sharded winner
         # tables) and drop by FULL leaf spec: a partial
         # PARTITION (_epoch_id = e) spec under DROP IF EXISTS matches
@@ -140,3 +222,21 @@ def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
     if leaves:
         spark.catalog.refreshTable(table)
     return len(eps_set)
+
+
+def compact_epochs(spark: SparkSession, table: str, upto_epoch: int,
+                   merge_cols: "dict[str, str]") -> int:
+    """Merge all epoch partials BELOW `upto_epoch` into ONE baseline
+    partition at id `upto_epoch - 1` (the newest slot being replaced,
+    so later ids stay monotone), then vacuum the older partials.
+    Returns partitions dropped. `merge_cols` is the family's merge law
+    (`operators.sketches.CMS_MERGE`; `{"n_occurrences": "sum"}` for a
+    substring window index), so rollup cost stays O(recent epochs).
+    Same watermark discipline as vacuum_epochs — only compact below the
+    checkpoint's committed offset. The merged partial is eagerly
+    localCheckpointed BEFORE the write: the baseline overwrites a
+    partition of the same table it was computed from."""
+    merged = read_epochs(spark, table, before=upto_epoch,
+                         merge=merge_cols).localCheckpoint(eager=True)
+    write_epoch(merged, table, upto_epoch - 1)
+    return vacuum_epochs(spark, table, keep_from=upto_epoch - 1)

@@ -1,29 +1,22 @@
 """Streaming sketch maintenance (north-star extension): per-epoch
-Count-Min and Bloom PARTIALS landed idempotently, rolled up on read —
-completing the per-artifact streaming-maintenance set (exact dedup →
-`streaming.dedup`, near-dup → `streaming.neardup`, vector index →
-`streaming.vectors`, frequency/membership sketches → here).
+Count-Min, Bloom and histogram PARTIALS landed idempotently, rolled up
+on read — completing the per-artifact streaming-maintenance set (exact
+dedup → `streaming.dedup`, near-dup → `streaming.neardup`, vector
+index → `streaming.vectors`, frequency/membership/quantile sketches →
+here).
 
-Why partials-per-epoch is the right streaming shape: both sketches
-are LINEAR — CMS merges by counter SUM, Bloom by word bit_or
-(`operators.sketches.cms_merge`/`bloom_merge`, laws pinned in
-tests/test_sketches.py) — so a micro-batch only ever appends its own
-d·w-row (or m/32-row) partial. No read-modify-write against the
-table, which is what makes the write replay-safe: the partial rides
-`sinks.idempotent_epoch_sink`, so a replayed epoch overwrites ITS OWN
-partition with identical rows and the rollup never double-counts.
-A read-modify-write "update the global sketch" sink would double-add
-on every at-least-once replay — exactly the class of bug the epoch
-discipline exists to prevent.
+Why partials-per-epoch is the right streaming shape: the sketches are
+LINEAR — CMS and histograms merge by counter SUM, Bloom by word bit_or
+(`operators.sketches.CMS_MERGE` / `BLOOM_MERGE` / `HIST_MERGE`, laws
+pinned in tests/test_sketches.py) — so a micro-batch only ever lands
+its own d·w-row (or m/32-row, or bins-row) partial. A read-modify-write
+"update the global sketch" sink would double-add on every at-least-once
+replay; the replay-safety argument is `streaming.sinks`'.
 
 Scale notes: per-epoch state is the batch-local sketch (bounded by
 d·w / m/32, independent of stream size); the rollup is an aggregate
-over (epochs × sketch rows) — thousands of epochs × 2048 rows — and
-`sinks.vacuum_epochs` + re-landing a merged baseline epoch (plain
-`cms_merge` output written as one epoch) bounds even that. The same
-checkpoint-lifetime contract as `streaming.vectors` applies: epoch
-ids are only monotone within one checkpoint lineage, so sketch tables
-are 1:1 with a checkpoint.
+over (epochs × sketch rows), and `sinks.compact_epochs` bounds even
+that.
 """
 
 from __future__ import annotations
@@ -31,11 +24,12 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.sketches import (BLOOM_BITS, BLOOM_HASHES, CMS_DEPTH,
-                                  CMS_WIDTH, bloom_build, cms_build)
-from .sinks import EPOCH_COL, idempotent_epoch_sink
+from ..operators.sketches import (BLOOM_BITS, BLOOM_HASHES, BLOOM_MERGE,
+                                  CMS_DEPTH, CMS_MERGE, CMS_WIDTH,
+                                  HIST_BINS, HIST_MERGE, bloom_build,
+                                  cms_build, equiwidth_histogram)
+from .sinks import epoch_sink, read_epochs
 
 
 def cms_ingest_sink(table: str, key_col: str,
@@ -44,20 +38,16 @@ def cms_ingest_sink(table: str, key_col: str,
                                                         None]:
     """foreachBatch function: land each micro-batch's Count-Min
     PARTIAL (j, bucket, cnt) as its own epoch partition."""
-    write = idempotent_epoch_sink(table)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        write(cms_build(batch_df, key_col, depth, width), epoch_id)
-
-    return sink
+    return epoch_sink(
+        lambda batch_df, _: [cms_build(batch_df, key_col, depth, width)],
+        table)
 
 
 def cms_rollup(spark: SparkSession, table: str) -> DataFrame:
     """(j, bucket, cnt): the stream-lifetime sketch — SUM over all
     epoch partials (linearity; identical to having built one sketch
     over the concatenated stream, pinned in tests)."""
-    return (spark.table(table).groupBy("j", "bucket")
-            .agg(F.sum("cnt").alias("cnt")))
+    return read_epochs(spark, table, merge=CMS_MERGE)
 
 
 def bloom_ingest_sink(table: str, key_col: str,
@@ -66,19 +56,15 @@ def bloom_ingest_sink(table: str, key_col: str,
                       ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: land each micro-batch's Bloom PARTIAL
     (word_idx, word) as its own epoch partition."""
-    write = idempotent_epoch_sink(table)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        write(bloom_build(batch_df, key_col, bits, hashes), epoch_id)
-
-    return sink
+    return epoch_sink(
+        lambda batch_df, _: [bloom_build(batch_df, key_col, bits, hashes)],
+        table)
 
 
 def bloom_rollup(spark: SparkSession, table: str) -> DataFrame:
     """(word_idx, word): the stream-lifetime filter — bit_or over all
     epoch partials."""
-    return (spark.table(table).groupBy("word_idx")
-            .agg(F.bit_or("word").alias("word")))
+    return read_epochs(spark, table, merge=BLOOM_MERGE)
 
 
 def hist_ingest_sink(table: str, value_col: str, lo: float, hi: float,
@@ -90,15 +76,11 @@ def hist_ingest_sink(table: str, value_col: str, lo: float, hi: float,
     exact integers, merge law = SUM, same linearity as CMS). Bounds
     are the caller's catalog bounds, fixed for the table's lifetime:
     partials with different bounds would merge into nonsense."""
-    from ..operators.sketches import HIST_BINS, equiwidth_histogram
     bins = HIST_BINS if bins is None else bins
-    write = idempotent_epoch_sink(table)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        write(equiwidth_histogram(batch_df, value_col, lo, hi, bins),
-              epoch_id)
-
-    return sink
+    return epoch_sink(
+        lambda batch_df, _: [equiwidth_histogram(batch_df, value_col,
+                                                 lo, hi, bins)],
+        table)
 
 
 def hist_rollup(spark: SparkSession, table: str) -> DataFrame:
@@ -106,34 +88,4 @@ def hist_rollup(spark: SparkSession, table: str) -> DataFrame:
     partials; feed it straight to
     `operators.sketches.histogram_quantiles` for stream-lifetime
     p50/p95 without ever sorting (or even retaining) the stream."""
-    return (spark.table(table).groupBy("bin")
-            .agg(F.sum("cnt").alias("cnt")))
-
-
-def compact_epochs(spark: SparkSession, table: str, upto_epoch: int,
-                   merge_cols: dict[str, str]) -> int:
-    """Merge all epoch partials BELOW `upto_epoch` into ONE baseline
-    partition at id `upto_epoch - 1` (the newest slot being replaced,
-    so later ids stay monotone), then vacuum the older partials.
-    Returns partitions dropped. `merge_cols` maps value column →
-    aggregate name per the sketch's merge law ({'cnt': 'sum'} for
-    CMS, {'word': 'bit_or'} for Bloom); every other non-epoch column
-    is a group key. The sketch-table lifecycle bound: rollup cost
-    stays O(recent epochs), not O(stream lifetime). Same watermark
-    discipline as vacuum_epochs — only compact below the checkpoint's
-    committed offset. The merged partial is eagerly localCheckpointed
-    BEFORE the write: the baseline overwrites a partition of the same
-    table it was computed from."""
-    from .sinks import vacuum_epochs
-
-    cols = spark.table(table).columns
-    group = [c for c in cols if c not in merge_cols and c != EPOCH_COL]
-    merged = (spark.table(table)
-              .filter(F.col(EPOCH_COL) < int(upto_epoch))
-              .groupBy(*group)
-              .agg(*[getattr(F, how)(c).alias(c)
-                     for c, how in merge_cols.items()])
-              .localCheckpoint(eager=True))
-    write = idempotent_epoch_sink(table)
-    write(merged, upto_epoch - 1)
-    return vacuum_epochs(spark, table, keep_from=upto_epoch - 1)
+    return read_epochs(spark, table, merge=HIST_MERGE)

@@ -7,11 +7,10 @@ completing the per-artifact streaming-maintenance set (exact dedup →
 `streaming.vectors`, frequency/membership/quantile sketches →
 `streaming.sketches`, substring runs → here).
 
-Replay safety (at-least-once foreachBatch): both writes ride
-`sinks.idempotent_epoch_sink`, and the scrub probes only index
-partials from STRICTLY EARLIER epochs — so a replayed epoch never
-counts its own half-written windows and overwrites both of its
-partitions with identical rows.
+Replay safety: both outputs land through `sinks.epoch_sink` and the
+scrub probes only STRICTLY EARLIER index partials
+(`sinks.read_epochs`) — the epoch discipline argued in
+`streaming.sinks`.
 
 Streaming semantics (inherent, documented): a batch is scrubbed
 against everything seen BEFORE it plus its own internal repeats —
@@ -20,7 +19,7 @@ the batch result is pinned equal to the BATCH operator probing the
 merged earlier-epoch index (tests/test_streaming_substr.py).
 
 Scale notes: the index partial is (distinct batch windows × one
-32-hex digest) rows; counts merge by SUM, so `sketches.compact_epochs`
+32-hex digest) rows; counts merge by SUM, so `sinks.compact_epochs`
 with {'n_occurrences': 'sum'} bounds the rollup exactly like the CMS
 table; per epoch only the batch pays the window hashing."""
 
@@ -34,7 +33,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import (SUBSTR_MIN_COUNT, SUBSTR_MIN_LEN,
                                incremental_scrub_duplicate_substrings,
                                merge_window_index, window_hash_index)
-from .sinks import EPOCH_COL, idempotent_epoch_sink
+from .sinks import epoch_sink, read_epochs
 
 
 def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
@@ -47,28 +46,21 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
     scrub report vs the rolled-up earlier-epoch index → `scrub_table`;
     (2) the batch's own window-hash counts → `index_table`. Both
     epoch-idempotent."""
-    write_scrub = idempotent_epoch_sink(scrub_table)
-    write_index = idempotent_epoch_sink(index_table)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, epoch_id: int):
         partial = window_hash_index(batch_df, id_col, text_col, min_len)
-        if spark.catalog.tableExists(index_table):
-            # merge_window_index carries the min_len provenance column
-            # and fails loud if the table holds mixed-width partials
-            # (e.g. two sinks configured differently — ADVICE r10)
-            index = merge_window_index(_ensure_min_len(
-                spark.table(index_table)
-                .filter(F.col(EPOCH_COL) < int(epoch_id))
-                .drop(EPOCH_COL), min_len))
-        else:
-            index = partial.limit(0)
+        index = read_epochs(batch_df.sparkSession, index_table,
+                            before=epoch_id)
+        # merge_window_index carries the min_len provenance column
+        # and fails loud if the table holds mixed-width partials
+        # (e.g. two sinks configured differently — ADVICE r10)
+        index = (partial.limit(0) if index is None else
+                 merge_window_index(_ensure_min_len(index, min_len)))
         report = incremental_scrub_duplicate_substrings(
             batch_df, index, id_col, text_col, min_len, min_count)
-        write_scrub(report, epoch_id)
-        write_index(partial, epoch_id)
+        return report, partial
 
-    return write
+    return epoch_sink(step, scrub_table, index_table)
 
 
 def substr_index_rollup(spark: SparkSession, table: str,
@@ -78,14 +70,14 @@ def substr_index_rollup(spark: SparkSession, table: str,
     `window_hash_index` over the concatenated stream; the
     `merge_window_index` law, width-guarded). ``min_len`` is only the
     legacy-table assumption (see `_ensure_min_len`)."""
-    return merge_window_index(_ensure_min_len(
-        spark.table(table).drop(EPOCH_COL), min_len))
+    return merge_window_index(_ensure_min_len(read_epochs(spark, table),
+                                              min_len))
 
 
 def _ensure_min_len(index: DataFrame, min_len: int) -> DataFrame:
     """Legacy shim: an index table created before the min_len
     provenance column existed (pre-r11) — or one whose first epoch was
-    bootstrapped without it, which also makes `idempotent_epoch_sink`
+    bootstrapped without it, which also makes `sinks.write_epoch`
     silently align newer partials to the old schema — reads as the
     caller's configured width. A sink enforces ONE width by
     construction, so the assumption is sound for tables it wrote;

@@ -17,12 +17,10 @@ only same-version history, and a retrain therefore RESETS the drift
 baseline instead of comparing new-centroid fits against old-centroid
 ones.
 
-Replay safety (at-least-once foreachBatch): both writes ride the
-epoch-partitioned dynamic-overwrite pattern (`sinks.
-idempotent_epoch_sink`), and the drift baseline aggregates only index
-rows from STRICTLY EARLIER epochs — a replayed epoch N never compares
-the batch against its own half-written fits, and overwrites both of
-its partitions with identical rows.
+Replay safety: both outputs land through `sinks.epoch_sink` and the
+drift baseline reads only STRICTLY EARLIER drift epochs
+(`sinks.read_epochs`) — the epoch discipline argued in
+`streaming.sinks`.
 
 Scale notes: assignment is the broadcast-centroid projection (vectors
 never shuffle); the index stores the fit PRE-QUANTIZED
@@ -44,7 +42,8 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (KMEANS_SCALE, _centroid_array,
                                     assign_cells_scored, cell_fit_stats,
                                     drift_flags, kmeans_centroids)
-from .sinks import EPOCH_COL, idempotent_epoch_sink
+from .sinks import (EPOCH_COL, epoch_sink, read_epochs,
+                    require_columns, write_epoch)
 
 
 def bootstrap_centroids(corpus: DataFrame, centroids_table: str, *,
@@ -92,8 +91,7 @@ def retrain_centroids(spark: SparkSession, index_table: str,
                     F.col("_v").alias("embedding")))
     new = kmeans_centroids(vecs, "vec_id", "embedding", n_cells,
                            n_iter=train_iters)
-    land = idempotent_epoch_sink(centroids_table, epoch_col="q_version")
-    land(new, int(cur) + 1)
+    write_epoch(new, centroids_table, int(cur) + 1, epoch_col="q_version")
 
 
 def _check_drift_retention(spark: SparkSession, index_table: str,
@@ -113,9 +111,8 @@ def _check_drift_retention(spark: SparkSession, index_table: str,
              .agg(F.min(EPOCH_COL)).collect()[0][0])
     below = int(epoch_id) if first is None else min(int(first),
                                                    int(epoch_id))
-    orphaned = (spark.table(index_table)
-                .filter((F.col(EPOCH_COL) < below)
-                        & (F.col("q_version") == int(version))))
+    orphaned = (read_epochs(spark, index_table, before=below)
+                .filter(F.col("q_version") == int(version)))
     if not orphaned.isEmpty():
         raise ValueError(
             f"vector_ingest_sink: drift table {drift_table} has no rows "
@@ -144,16 +141,9 @@ def vector_ingest_sink(index_table: str, drift_table: str,
     `(cell_id, n_index, mean_cos_index, n_new, mean_cos_new, retrain)`
     to `drift_table`. Both epoch-idempotent.
 
-    CHECKPOINT-LIFETIME CONTRACT (ADVICE r8, the same discipline as
-    the vacuum watermark): epoch ids come from the stream's
-    checkpoint and are only monotone WITHIN one checkpoint lineage.
-    Restarting the stream with a NEW checkpoint resets epoch_id to 0
-    — against an existing table that would overwrite historical
-    epoch partitions and void the strictly-earlier drift baseline.
-    Tables are 1:1 with a checkpoint: reuse the checkpoint to resume;
-    to start a new lineage, point the sink at fresh tables (or vacuum
-    + drop the old ones). This is foreachBatch's general epoch
-    contract, not a quirk of this sink.
+    CHECKPOINT-LIFETIME CONTRACT (ADVICE r8): tables are 1:1 with a
+    checkpoint (`streaming.sinks`); a new lineage against old tables
+    would void the strictly-earlier drift baseline.
 
     PARTIALS-BASED BASELINE (r17, VERDICT r16 next #6 — guide §6):
     the drift baseline was re-aggregated from the FULL index history
@@ -170,24 +160,19 @@ def vector_ingest_sink(index_table: str, drift_table: str,
     stats. A drift table created by the pre-partials sink fails the
     first write with a migration error (the line-dedup layout-guard
     discipline) — its rows cannot seed an exact baseline."""
-    write_index = idempotent_epoch_sink(index_table)
-    write_drift = idempotent_epoch_sink(drift_table)
     scale = float(cos_scale)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
+    def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
-        if spark.catalog.tableExists(drift_table):
-            cols = set(spark.table(drift_table).columns)
-            missing = {"sum_fit_new", "q_version"} - cols
-            if missing:
-                raise ValueError(
-                    f"vector_ingest_sink: drift table {drift_table} "
-                    f"lacks the partials columns {sorted(missing)} — "
-                    "it was created by a pre-partials sink version "
-                    "and cannot seed an exact baseline. Migrate it "
-                    "(recompute per-epoch per-cell n_new/sum_fit_new "
-                    "from the index table) or point the sink at a "
-                    "fresh table name.")
+        require_columns(
+            spark, drift_table, ("sum_fit_new", "q_version"),
+            f"vector_ingest_sink: drift table {drift_table} "
+            "lacks the partials columns {missing} — "
+            "it was created by a pre-partials sink version "
+            "and cannot seed an exact baseline. Migrate it "
+            "(recompute per-epoch per-cell n_new/sum_fit_new "
+            "from the index table) or point the sink at a "
+            "fresh table name.")
         cents = spark.table(centroids_table)
         version = int(cents.agg(F.max("q_version").alias("v"))
                       .collect()[0]["v"])
@@ -205,7 +190,8 @@ def vector_ingest_sink(index_table: str, drift_table: str,
                   .drop("cell_cos")
                   .withColumn("q_version", F.lit(version).cast("long"))
                   .localCheckpoint(eager=True))
-        if spark.catalog.tableExists(drift_table):
+        prior = read_epochs(spark, drift_table, before=epoch_id)
+        if prior is not None:
             # baseline = the prior drift rows' exact per-cell partials,
             # strictly-earlier epochs scored against the SAME quantizer
             # version (a retrain resets the baseline — fits are only
@@ -213,9 +199,8 @@ def vector_ingest_sink(index_table: str, drift_table: str,
             # the full-history aggregate ⇒ same doubles ⇒ same flags.
             _check_drift_retention(spark, index_table, drift_table,
                                    version, epoch_id)
-            istat = (spark.table(drift_table)
-                     .filter((F.col(EPOCH_COL) < int(epoch_id))
-                             & (F.col("q_version") == int(version))
+            istat = (prior
+                     .filter((F.col("q_version") == int(version))
                              & F.col("n_new").isNotNull())
                      .groupBy("cell_id")
                      .agg(F.sum("n_new").alias("n_index"),
@@ -243,8 +228,7 @@ def vector_ingest_sink(index_table: str, drift_table: str,
                .join(braw.select("cell_id", "sum_fit_new"), "cell_id",
                      "left")
                .withColumn("q_version", F.lit(version).cast("long")))
-        write_drift(rep, epoch_id)
-        write_index(scored.select("_id", "cell_id", "fit_q", "_v",
-                                  "q_version"), epoch_id)
+        return rep, scored.select("_id", "cell_id", "fit_q", "_v",
+                                  "q_version")
 
-    return write
+    return epoch_sink(step, drift_table, index_table)

@@ -173,6 +173,48 @@ def test_no_raw_persist():
         "cached_persist / cached_relation:\n" + "\n".join(offenders))
 
 
+#: streaming/ lines that land data outside `sinks.epoch_sink` without
+#: writing a stream epoch partition.
+EPOCH_WRITE_OK = {
+    # a retrain lands a quantizer VERSION partition through the same
+    # idempotent write
+    ("streaming/vectors.py",
+     'write_epoch(new, centroids_table, int(cur) + 1, epoch_col="q_version")'),
+    # the SCD2 snapshot overwrite, replay-safe through scd2_apply's
+    # idempotency rather than epoch partitions
+    ("streaming/scd.py",
+     "def write(batch_df: DataFrame, epoch_id: int) -> None:"),
+}
+
+_PER_EPOCH_DEF = re.compile(r"def (\w+)\(batch_df\b[^,]*, epoch_id\b")
+
+
+def test_only_sinks_writes_epoch_partitions():
+    """The epoch discipline (idempotent per-epoch write, strictly-earlier
+    reads) lives in streaming/sinks.py. A streaming module that writes
+    an epoch partition itself — insertInto, the partition-overwrite
+    mode, a direct write_epoch call, or a (batch_df, epoch_id) function
+    that is not a step handed to epoch_sink — bypasses it."""
+    offenders = []
+    for py in sorted((_PKG / "streaming").glob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        if rel == "streaming/sinks.py":
+            continue
+        text = py.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
+            code = line.split("#", 1)[0].strip()
+            m = _PER_EPOCH_DEF.search(code)
+            if ((any(k in code for k in ("insertInto", "write_epoch(",
+                                         "partitionOverwriteMode"))
+                 or (m and f"epoch_sink({m[1]}" not in text))
+                    and (rel, code) not in EPOCH_WRITE_OK):
+                offenders.append(f"{rel}:{i}: {code}")
+    assert not offenders, (
+        "epoch partition write(s) outside streaming/sinks.py — return "
+        "the outputs from a step and land them through epoch_sink:\n"
+        + "\n".join(offenders))
+
+
 def test_bounded_broadcast_rejects_unattested_and_oversized(spark):
     df = spark.range(3).toDF("x")
     with pytest.raises(ValueError, match="unattested"):

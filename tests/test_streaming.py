@@ -116,18 +116,18 @@ def test_session_window_stream_runs(spark, staged_events_dir):
     assert got.filter(F.col("session_end") < F.col("session_start")).count() == 0
 
 
-def test_idempotent_epoch_sink_survives_replay(spark, staged_events_dir):
+def test_epoch_sink_survives_replay(spark, staged_events_dir):
     """foreachBatch exactly-once-in-effect contract: a replayed epoch
     overwrites its own partition instead of duplicating rows."""
     from snowflake_azure_etl_spark.streaming.sinks import (
-        EPOCH_COL, idempotent_epoch_sink)
+        EPOCH_COL, epoch_sink)
 
     table = "default.sink_events_test"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     from snowflake_azure_etl_spark.warehouse import ddl
     ddl.drop_orphan_location(spark, table)
 
-    sink = idempotent_epoch_sink(table)
+    sink = epoch_sink(lambda batch_df, _: [batch_df], table)
     stream = (spark.readStream.format("parquet")
               .schema(sev.EVENTS_SCHEMA)
               .option("maxFilesPerTrigger", "1")

@@ -16,9 +16,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import sketches as sk
+from snowflake_azure_etl_spark.streaming.sinks import compact_epochs
 from snowflake_azure_etl_spark.streaming.sketches import (
-    bloom_ingest_sink, bloom_rollup, cms_ingest_sink, cms_rollup,
-    compact_epochs)
+    bloom_ingest_sink, bloom_rollup, cms_ingest_sink, cms_rollup)
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
