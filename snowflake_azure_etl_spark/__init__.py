@@ -15,7 +15,7 @@ Layout:
     functions    scalar/date expression library (NULL defaulting, safe
                  ratios, date attributes, deterministic-hash helpers)
     plans        warehouse build DAG: date dim, surrogate keys, star build
-    operators    dedup, similarity search, text analysis, multimodal stubs
+    operators    dedup, similarity search, text analysis, multimodal media
     streaming    Structured Streaming over the events table
     workload     the named query catalog (Spark fn + DuckDB oracle pairs)
 """

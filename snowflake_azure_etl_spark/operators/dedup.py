@@ -19,13 +19,12 @@ Scale design (100 TB of documents):
   (all-identical boilerplate docs) cannot produce a quadratic pair
   explosion — the standard production mitigation, deterministic
   (overflow buckets are dropped, not sampled);
-- md5 is used for portability with the DuckDB oracle; swap
-  `xxhash64(...)` (cheaper, also built-in) via `hash_fn` at scale.
+- md5 is used for portability with the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -38,11 +37,6 @@ def ws_tokens(text: Column | str) -> Column:
     string_split(text, ' ') exactly (no regex dialect drift)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, " ")
-
-
-def md5_seeded(seed: int, token: Column) -> Column:
-    """Portable seeded hash: md5('<seed>:' || token)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), token))
 
 
 def md5_digest_seeded(seed: int, digest: Column) -> Column:
@@ -98,12 +92,11 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 
 
 def minhash_signature_shingled(df: DataFrame, id_col: str, text_col: str,
-                               k: int = 8, n: int = 3,
-                               hash_fn: Callable[[int, Column], Column]
-                               = md5_digest_seeded) -> DataFrame:
-    """MinHash over word n-gram shingles instead of unigram tokens —
-    same k-min-aggregate plan shape (one shuffle on the doc id) as
-    `minhash_signature`, composable with the same LSH banding.
+                               k: int = 8, n: int = 3) -> DataFrame:
+    """k-permutation MinHash over distinct word n-gram shingles: k
+    min-aggregates of seeded hashes, one shuffle on the doc id. The min
+    of a fixed-width hex string is the min of the hash value, so
+    signatures are portable across engines.
 
     Each shingle is md5'd once; the k seeded hashes derive from that
     fixed-width digest (`md5_digest_seeded`), so widening the shingle
@@ -112,7 +105,8 @@ def minhash_signature_shingled(df: DataFrame, id_col: str, text_col: str,
         F.col(id_col),
         F.explode(F.transform(word_shingles(text_col, n), F.md5))
         .alias("dig"))
-    aggs = [F.min(hash_fn(i, F.col("dig"))).alias(f"h{i}") for i in range(k)]
+    aggs = [F.min(md5_digest_seeded(i, F.col("dig"))).alias(f"h{i}")
+            for i in range(k)]
     return sh.groupBy(id_col).agg(*aggs)
 
 
@@ -134,24 +128,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str,
     aggs += [F.min_by(c, id_col).alias(c) for c in carry_cols]
     return (df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
             .agg(*aggs))
-
-
-def minhash_signature(df: DataFrame, id_col: str, text_col: str,
-                      k: int = 8,
-                      hash_fn: Callable[[int, Column], Column] = md5_seeded
-                      ) -> DataFrame:
-    """k-permutation MinHash over distinct whitespace shingles.
-
-    Explode distinct tokens, then k min-aggregates of seeded hashes —
-    one shuffle on the doc id, k JVM-side min(md5) aggregations. The
-    min of a hex string is the min of the hash value (fixed-width hex),
-    so signatures are totally portable across engines.
-    """
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(ws_tokens(text_col))).alias("tok"))
-    aggs = [F.min(hash_fn(i, F.col("tok"))).alias(f"h{i}") for i in range(k)]
-    return toks.groupBy(id_col).agg(*aggs)
 
 
 def band_key_index(sig: DataFrame, id_col: str, bands: int,

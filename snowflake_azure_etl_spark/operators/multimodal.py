@@ -1,26 +1,32 @@
 """Multimodal column handling (north-star extension).
 
-Images / audio / video are opaque `binary` columns with typed metadata.
-The Spark-side plumbing — schemas, Arrow-batched mapInPandas operators,
-partitioning, per-item fan-out — is real and tested, and the decode step
-has two paths:
+Images, audio and video are opaque `binary` columns. Each modality has
+ONE per-payload body, a plain-Python function from (doc_id, payload)
+to rows in q60's 11-column `PIPELINE_SCHEMA` shape:
 
-- ``stub=True``: deterministic fake derived from the payload md5 (so any
-  payload, including wrapped text corpora, runs end-to-end and is
-  oracle-checkable);
-- ``stub=False``: a REAL pure-Python decoder for the two classic
-  uncompressed raster formats, binary PPM (P6) and BMP — header parse,
-  pixel extraction, nearest-neighbor resample, frame/row sampling — no
-  media libraries required. Compressed formats (JPEG/PNG/MP4) would
-  need codec libs not present in this container and raise ValueError;
-  swapping `_real_decode` for a PIL/ffmpeg call changes nothing in the
-  Spark plan shape.
+- `_image_rows`: binary PPM (P6) or 24-bit BMP decode, aspect-
+  preserving nearest-neighbor resize to `MAX_DIM`, `N_FRAMES` row
+  frames;
+- `_audio_rows`: RIFF/WAV PCM16 decode, integer decimation towards
+  `TARGET_RATE`, `AUDIO_FRAMES` windows of `FRAME_LEN` samples;
+- `_video_rows`: YUV4MPEG2 decode, every-`EVERY_K` temporal frame
+  sampling.
 
-Scale design: mapInPandas streams Arrow batches through Python — the
-only sane shape for per-blob CPU work (decode, resize, frame-sample) at
-100 TB. Batch size is governed by
-spark.sql.execution.arrow.maxRecordsPerBatch; blobs never hit the
-driver. Feature extraction downstream of decode stays columnar.
+Every codec is pure Python over the uncompressed classic formats, so
+no media library is needed. Compressed formats (JPEG/PNG, MP3/AAC,
+MP4/H.264) need codec libraries the engine does not ship and raise
+ValueError; swapping a body's parser for a PIL/ffmpeg call changes
+nothing in the Spark plan.
+
+The Spark side is one pass: `fused_media_table` builds all three
+payloads from each document in one codegen'd projection, and
+`fused_modalities_pipeline` ships them through ONE Arrow-batched
+Python map that calls the three bodies per document. Each such map
+costs one JVM↔Arrow↔Python round-trip whatever it does (an identity
+leg measured ~0.4-0.5 s at sf0.1, as much as a real one), so one pass
+over the shared input replaces one scan and one worker pass per
+modality. Batch size is spark.sql.execution.arrow.maxRecordsPerBatch;
+blobs never reach the driver.
 """
 
 from __future__ import annotations
@@ -35,62 +41,33 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = ("doc_id long, media_type string, byte_len int, "
-                "feature_sig string, width int, height int")
+#: Longest side of a resized image; the image rows' resize geometry.
+MAX_DIM = 64
+#: Row frames sampled per image.
+N_FRAMES = 4
+#: Audio decimates by k = rate div TARGET_RATE (at least 1).
+TARGET_RATE = 4000
+#: Samples per audio frame window, and windows per clip.
+FRAME_LEN = 256
+AUDIO_FRAMES = 2
+#: Every EVERY_K-th video frame is kept.
+EVERY_K = 2
+
+PIPELINE_SCHEMA = ("doc_id long, media_type string, byte_len int, "
+                   "feature_sig string, width int, height int, "
+                   "out_width int, out_height int, resized_sig string, "
+                   "frame_idx int, frame_sig string")
+_COLUMNS = [f.split()[0] for f in PIPELINE_SCHEMA.split(", ")]
 
 
-def to_media_table(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
-    """Wrap a text corpus as a fake media table: payload = utf-8 bytes of
-    the text (stands in for image bytes), plus declared metadata."""
-    return docs.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
-        F.lit("image/fake").alias("media_type"),
-    )
+def _sig(data: bytes) -> str:
+    """8-hex-char fingerprint: the md5 prefix every signature column
+    carries (and the q60 oracle mirrors)."""
+    return hashlib.md5(data).hexdigest()[:8]
 
 
-def _ppm_dims(text_col: str) -> "tuple[Column, Column]":
-    """md5-derived PPM dimensions (the `_fake_decode` formula)."""
-    dig = F.md5(F.col(text_col))
-    w = F.lit(64) + F.conv(F.substring(dig, 1, 2), 16, 10).cast("int") % 64
-    h = F.lit(64) + F.conv(F.substring(dig, 3, 2), 16, 10).cast("int") % 64
-    return w, h
-
-
-def _ppm_payload() -> Column:
-    """P6 payload over pre-projected `_pw`/`_ph` dimension columns."""
-    return F.encode(F.concat(
-        F.lit("P6\n"), F.col("_pw").cast("string"), F.lit(" "),
-        F.col("_ph").cast("string"), F.lit("\n255\n"),
-        F.expr("repeat('x', _pw * _ph * 3)")), "UTF-8")
-
-
-def to_ppm_media_table(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Wrap a text corpus as a table of VALID binary-PPM (P6) payloads,
-    built entirely JVM-side (concat/repeat — no UDF): dimensions follow
-    the same md5-derived formula as `_fake_decode` (64 + digest-byte %
-    64, so oracles stay aligned), pixel body is a constant fill of
-    exactly w·h·3 bytes. The payloads exercise the REAL decoder path
-    (`decode_media(stub=False)`) end-to-end without media libraries."""
-    w, h = _ppm_dims(text_col)
-    d = docs.select(F.col(id_col), F.col(text_col),
-                    w.alias("_pw"), h.alias("_ph"))
-    return d.select(
-        F.col(id_col),
-        _ppm_payload().alias("payload"),
-        F.lit("image/ppm").alias("media_type"))
-
-
-def _fake_decode(payload: bytes) -> tuple[str, int, int]:
-    """Deterministic stand-in for a real decoder: 8-hex-char feature
-    signature + fake dimensions, all derived from the payload md5."""
-    digest = hashlib.md5(payload).hexdigest()
-    width = 64 + int(digest[0:2], 16) % 64
-    height = 64 + int(digest[2:4], 16) % 64
-    return digest[:8], width, height
-
+# ---------------------------------------------------------------------------
+# Image: binary PPM (P6) and uncompressed 24-bit BMP.
 
 def _parse_ppm(payload: bytes) -> tuple[int, int, bytes]:
     """Binary PPM (P6) header parse: magic, then width/height/maxval as
@@ -129,14 +106,13 @@ def _parse_bmp(payload: bytes) -> tuple[int, int, bytes]:
     """Uncompressed 24-bit BMP → (w, h, pixels) with the pixels
     NORMALIZED to the PPM convention — top-down rows, RGB channel
     order, no row padding — so the same image re-encoded as PPM or BMP
-    fingerprints identically (the claim `_real_decode` makes).
+    fingerprints identically.
 
-    Standards handling (ADVICE r5): bpp at offset 28 must be 24
-    (16/32-bpp layouts would silently mis-slice), each stored row is
-    padded to a 4-byte stride (((w·3+3)//4)·4) and sliced back to w·3,
-    positive height means bottom-up row order (flipped here; negative
-    height is already top-down), and BMP's BGR channels are swapped to
-    RGB."""
+    Standards handling: bpp at offset 28 must be 24 (16/32-bpp layouts
+    would silently mis-slice), each stored row is padded to a 4-byte
+    stride (((w·3+3)//4)·4) and sliced back to w·3, positive height
+    means bottom-up row order (flipped here; negative height is
+    already top-down), and BMP's BGR channels are swapped to RGB."""
     if not payload.startswith(b"BM") or len(payload) < 54:
         raise ValueError("not a BMP payload")
     data_off = struct.unpack_from("<I", payload, 10)[0]
@@ -169,69 +145,13 @@ def _parse_bmp(payload: bytes) -> tuple[int, int, bytes]:
     return w, h, bytes(rgb)
 
 
-def _real_decode(payload: bytes) -> tuple[str, str, int, int, bytes]:
-    """(media_type, feature_sig, width, height, pixels) from real bytes.
-    feature_sig = md5 of the decoded pixel data (not the container), so
-    re-encodings of the same image fingerprint identically."""
-    if payload.startswith(b"P6"):
-        w, h, px = _parse_ppm(payload)
-        return "image/ppm", hashlib.md5(px).hexdigest()[:8], w, h, px
-    if payload.startswith(b"BM"):
-        w, h, px = _parse_bmp(payload)
-        return "image/bmp", hashlib.md5(px).hexdigest()[:8], w, h, px
-    raise ValueError(
-        "unsupported media format (pure-Python path decodes PPM/BMP; "
-        "compressed formats need codec libraries)")
-
-
-def decode_media(media: DataFrame, stub: bool = True) -> DataFrame:
-    """Decode/feature-extract pass over a media table via mapInPandas.
-
-    stub=True runs the deterministic md5 fake over any payload;
-    stub=False runs the real PPM/BMP decoder (`_real_decode`) — header
-    parse + pixel-data fingerprint. Either way the plan is one
-    Arrow-batched narrow map, no shuffle, payloads never on the driver.
-    """
-    if stub:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                decoded = pdf["payload"].map(_fake_decode)
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "byte_len": pdf["payload"].map(len).astype("int32"),
-                    "feature_sig": decoded.map(lambda t: t[0]),
-                    "width": decoded.map(lambda t: t[1]).astype("int32"),
-                    "height": decoded.map(lambda t: t[2]).astype("int32"),
-                })
-    else:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                decoded = pdf["payload"].map(_real_decode)
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"],
-                    "media_type": decoded.map(lambda t: t[0]),
-                    "byte_len": pdf["payload"].map(len).astype("int32"),
-                    "feature_sig": decoded.map(lambda t: t[1]),
-                    "width": decoded.map(lambda t: t[2]).astype("int32"),
-                    "height": decoded.map(lambda t: t[3]).astype("int32"),
-                })
-
-    return media.mapInPandas(op, schema=MEDIA_SCHEMA)
-
-
-RESIZED_SCHEMA = ("doc_id long, media_type string, width int, height int, "
-                  "out_width int, out_height int, resized_sig string")
-
-
 def _resize_nn(pixels: bytes, w: int, h: int, ow: int, oh: int) -> bytes:
     """Nearest-neighbor RGB resample. Vectorized with numpy fancy
     indexing (source row = oy·h//oh, source col = ox·w//ow — the same
     truncating-division grid as the scalar definition, which the test
     suite checks against an independent Python loop); the per-item
-    cost is what lets the REAL resample run inside q60's Arrow batches
-    at bench scale instead of only in unit tests."""
-    import numpy as np
+    cost is what lets the resample run inside q60's Arrow batches at
+    bench scale."""
     arr = np.frombuffer(pixels, dtype=np.uint8)[:w * h * 3]
     arr = arr.reshape(h, w, 3)
     rows = (np.arange(oh) * h) // oh
@@ -239,173 +159,37 @@ def _resize_nn(pixels: bytes, w: int, h: int, ow: int, oh: int) -> bytes:
     return arr[rows][:, cols].tobytes()
 
 
-def resize_media(media: DataFrame, max_dim: int = 64,
-                 stub: bool = True) -> DataFrame:
-    """Resize pass: scale each item so its longest side is max_dim,
-    preserving aspect ratio (truncating division — engine-portable).
+def _image_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """decode → resize → row frames for one PPM/BMP payload.
 
-    stub=True fakes dimensions from the payload md5 and fingerprints
-    the geometry; stub=False really decodes (PPM/BMP) and really
-    resamples (nearest-neighbor), fingerprinting the resampled pixels.
-    """
-
-    def geometry(w: pd.Series, h: pd.Series) -> tuple[pd.Series, pd.Series]:
-        longest = pd.concat([w, h], axis=1).max(axis=1)
-        return (w * max_dim // longest), (h * max_dim // longest)
-
-    if stub:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                decoded = pdf["payload"].map(_fake_decode)
-                w = decoded.map(lambda t: t[1])
-                h = decoded.map(lambda t: t[2])
-                ow, oh = geometry(w, h)
-                sig = pdf["payload"].map(
-                    lambda p: hashlib.md5(p + b":resize").hexdigest()[:8])
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "width": w.astype("int32"),
-                    "height": h.astype("int32"),
-                    "out_width": ow.astype("int32"),
-                    "out_height": oh.astype("int32"),
-                    "resized_sig": sig,
-                })
+    feature_sig fingerprints the decoded pixels (not the container),
+    so re-encodings of one image agree; the resize keeps the aspect
+    ratio with its longest side at `MAX_DIM` (truncating division, as
+    the oracle computes it) and resized_sig fingerprints the resampled
+    pixels; one row per frame, frame i being pixel row i·h div
+    `N_FRAMES` (the raster analog of video frame sampling)."""
+    if payload.startswith(b"P6"):
+        mt, (w, h, px) = "image/ppm", _parse_ppm(payload)
+    elif payload.startswith(b"BM"):
+        mt, (w, h, px) = "image/bmp", _parse_bmp(payload)
     else:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    mt, _, w, h, px = _real_decode(payload)
-                    longest = max(w, h)
-                    ow, oh = w * max_dim // longest, h * max_dim // longest
-                    resized = _resize_nn(px, w, h, ow, oh)
-                    rows.append((doc_id, mt, w, h, ow, oh,
-                                 hashlib.md5(resized).hexdigest()[:8]))
-                yield pd.DataFrame(rows, columns=[
-                    "doc_id", "media_type", "width", "height",
-                    "out_width", "out_height", "resized_sig"])
-
-    return media.mapInPandas(op, schema=RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = "doc_id long, frame_idx int, frame_sig string"
-
-
-def frame_sample(media: DataFrame, n_frames: int = 4,
-                 stub: bool = True) -> DataFrame:
-    """Frame-sampling pass (video analog): emit n_frames rows per item,
-    each with a deterministic per-frame signature. One input batch → n×
-    output rows, all inside the Arrow stream — the fan-out never touches
-    the driver.
-
-    stub=True: frame_sig = md5(payload ++ ':i'). stub=False: frames are
-    n evenly-spaced pixel ROWS of the really-decoded image (the raster
-    analog of video frame sampling), frame_sig = md5 of that row's
-    bytes."""
-    if stub:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                frames = []
-                for i in range(n_frames):
-                    sig = pdf["payload"].map(
-                        lambda p, i=i: hashlib.md5(p + f":{i}".encode())
-                        .hexdigest()[:8])
-                    frames.append(pd.DataFrame({
-                        "doc_id": pdf["doc_id"],
-                        "frame_idx": i,
-                        "frame_sig": sig,
-                    }))
-                yield pd.concat(frames, ignore_index=True)
-    else:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                    _, _, w, h, px = _real_decode(payload)
-                    for i in range(n_frames):
-                        y = i * h // n_frames
-                        row = px[y * w * 3:(y + 1) * w * 3]
-                        rows.append((doc_id, i,
-                                     hashlib.md5(row).hexdigest()[:8]))
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "frame_idx", "frame_sig"])
-
-    return media.mapInPandas(op, schema=FRAMES_SCHEMA)
-
-
-PIPELINE_SCHEMA = ("doc_id long, media_type string, byte_len int, "
-                   "feature_sig string, width int, height int, "
-                   "out_width int, out_height int, resized_sig string, "
-                   "frame_idx int, frame_sig string")
-
-
-def media_pipeline(media: DataFrame, max_dim: int = 64, n_frames: int = 4,
-                   stub: bool = True) -> DataFrame:
-    """decode → resize → frame-sample FUSED into one Arrow pass.
-
-    Row-for-row equivalent to joining `decode_media` ⋈ `resize_media` ⋈
-    `frame_sample` on doc_id (pytest-pinned), but each payload is
-    materialized and decoded ONCE instead of three times, and the two
-    joins disappear — the per-item stages of a media pipeline are a
-    single narrow map over the blobs, which is exactly how a 100 TB
-    run wants them: one scan, one Python worker pass, no shuffle at
-    all (the join-based composition shuffles three stage outputs to
-    co-locate them). The separate operators remain for pipelines that
-    genuinely need only one stage or interleave JVM-side filters
-    between stages."""
-    def emit(doc_id, mt, blen, fsig, w, h, ow, oh, rsig, fsigs):
-        return [(doc_id, mt, blen, fsig, w, h, ow, oh, rsig, i, s)
-                for i, s in enumerate(fsigs)]
-
-    cols = ["doc_id", "media_type", "byte_len", "feature_sig", "width",
-            "height", "out_width", "out_height", "resized_sig",
-            "frame_idx", "frame_sig"]
-
-    if stub:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for doc_id, mt, p in zip(pdf["doc_id"], pdf["media_type"],
-                                         pdf["payload"]):
-                    fsig, w, h = _fake_decode(p)
-                    longest = max(w, h)
-                    ow, oh = w * max_dim // longest, h * max_dim // longest
-                    rsig = hashlib.md5(p + b":resize").hexdigest()[:8]
-                    fsigs = [hashlib.md5(p + f":{i}".encode()).hexdigest()[:8]
-                             for i in range(n_frames)]
-                    rows += emit(doc_id, mt, len(p), fsig, w, h, ow, oh,
-                                 rsig, fsigs)
-                yield pd.DataFrame(rows, columns=cols)
-    else:
-        def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                    mt, fsig, w, h, px = _real_decode(p)
-                    longest = max(w, h)
-                    ow, oh = w * max_dim // longest, h * max_dim // longest
-                    rsig = hashlib.md5(
-                        _resize_nn(px, w, h, ow, oh)).hexdigest()[:8]
-                    fsigs = []
-                    for i in range(n_frames):
-                        y = i * h // n_frames
-                        fsigs.append(hashlib.md5(
-                            px[y * w * 3:(y + 1) * w * 3]).hexdigest()[:8])
-                    rows += emit(doc_id, mt, len(p), fsig, w, h, ow, oh,
-                                 rsig, fsigs)
-                yield pd.DataFrame(rows, columns=cols)
-
-    return media.mapInPandas(op, schema=PIPELINE_SCHEMA)
+        raise ValueError(
+            "unsupported media format (pure-Python path decodes PPM/BMP; "
+            "compressed formats need codec libraries)")
+    longest = max(w, h)
+    ow, oh = w * MAX_DIM // longest, h * MAX_DIM // longest
+    head = (doc_id, mt, len(payload), _sig(px), w, h, ow, oh,
+            _sig(_resize_nn(px, w, h, ow, oh)))
+    rows = []
+    for i in range(N_FRAMES):
+        y = i * h // N_FRAMES
+        rows.append(head + (i, _sig(px[y * w * 3:(y + 1) * w * 3])))
+    return rows
 
 
 # ---------------------------------------------------------------------------
-# Audio (X-AUDIO) — the second modality with a REAL pure-Python codec:
-# canonical RIFF/WAV PCM16. Same design as the raster path: payloads
-# are opaque binary, every operator is an Arrow-batched narrow map,
-# decode → resample (integer decimation) → frame windows mirror
-# decode → resize → frame-sample, and compressed audio (MP3/AAC/OGG)
-# stays honestly gated behind the same ValueError contract.
+# Audio: canonical RIFF/WAV PCM16. decode → decimate → frame windows
+# mirror the image's decode → resize → row frames.
 
 def _parse_wav(payload: bytes) -> tuple[int, int, int, bytes]:
     """Canonical-WAV parse → (sample_rate, n_channels, n_samples,
@@ -413,7 +197,9 @@ def _parse_wav(payload: bytes) -> tuple[int, int, int, bytes]:
     PCM uncompressed, 16-bit) and 'data'. Pure struct, no libs."""
     if len(payload) < 12 or payload[0:4] != b"RIFF" \
             or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
+        raise ValueError(
+            "unsupported audio format (pure-Python path decodes PCM WAV; "
+            "compressed formats need codec libraries)")
     i, fmt, data = 12, None, None
     while i + 8 <= len(payload):
         cid = payload[i:i + 4]
@@ -443,122 +229,35 @@ def _parse_wav(payload: bytes) -> tuple[int, int, int, bytes]:
     return rate, n_ch, n_samples, data[:n_samples * 2 * n_ch]
 
 
-def _real_decode_audio(payload: bytes) -> tuple[str, int, int, int, bytes]:
-    if payload.startswith(b"RIFF"):
-        rate, n_ch, n_samples, data = _parse_wav(payload)
-        return "audio/wav", rate, n_ch, n_samples, data
-    raise ValueError(
-        "unsupported audio format (pure-Python path decodes PCM WAV; "
-        "compressed formats need codec libraries)")
+def _audio_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """decode → decimate → frame windows for one WAV payload, in the
+    image columns: sample_rate/n_samples → width/height, out_rate/
+    out_samples → out_width/out_height, the decimated-bytes sig →
+    resized_sig.
 
-
-def _wav_params(text_col: str) -> "tuple[Column, Column]":
-    """md5-derived (sample_rate, n_samples) — mirrored by the oracle."""
-    dig = F.md5(F.col(text_col))
-    rate = F.lit(8000) + (F.conv(F.substring(dig, 1, 2), 16, 10)
-                          .cast("int") % 8) * F.lit(1000)
-    ns = (F.lit(1000)
-          + F.conv(F.substring(dig, 5, 4), 16, 10).cast("int") % 4000)
-    return rate, ns
-
-
-def _le32(col):
-    hx = F.lpad(F.conv(col.cast("string"), 10, 16), 8, "0")
-    return F.unhex(F.concat(
-        F.substring(hx, 7, 2), F.substring(hx, 5, 2),
-        F.substring(hx, 3, 2), F.substring(hx, 1, 2)))
-
-
-def _le16(col):
-    hx = F.lpad(F.conv(col.cast("string"), 10, 16), 4, "0")
-    return F.unhex(F.concat(F.substring(hx, 3, 2),
-                            F.substring(hx, 1, 2)))
-
-
-def _wav_payload() -> Column:
-    """RIFF/PCM16 payload over pre-projected `_ar`/`_an` columns."""
-    data_len = F.col("_an") * 2
-    byte_rate = F.col("_ar") * 2         # mono, 2 bytes per sample
-    return F.concat(
-        F.encode(F.lit("RIFF"), "UTF-8"), _le32(data_len + 36),
-        F.encode(F.lit("WAVEfmt "), "UTF-8"), _le32(F.lit(16)),
-        _le16(F.lit(1)), _le16(F.lit(1)),        # PCM, mono
-        _le32(F.col("_ar")), _le32(byte_rate),
-        _le16(F.lit(2)), _le16(F.lit(16)),       # block align, bits
-        F.encode(F.lit("data"), "UTF-8"), _le32(data_len),
-        F.encode(F.expr("repeat('x', _an * 2)"), "UTF-8"))
-
-
-def to_wav_media_table(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Wrap a text corpus as VALID mono PCM16 WAV payloads, built
-    entirely JVM-side: sample_rate and sample count follow md5-derived
-    formulas (mirrored by the q60 oracle), the sample body is a
-    constant fill of exactly n·2 bytes ('x' = 0x78 per byte), and the
-    RIFF/fmt/data headers are assembled with a little-endian
-    int→unhex byte-swap expression — no UDF anywhere, so building a
-    billion WAV wrappers is a narrow codegen'd projection."""
-    rate, ns = _wav_params(text_col)
-    d = docs.select(F.col(id_col), rate.alias("_ar"), ns.alias("_an"))
-    return d.select(F.col(id_col), _wav_payload().alias("payload"),
-                    F.lit("audio/wav").alias("media_type"))
-
-
-AUDIO_PIPELINE_SCHEMA = ("doc_id long, media_type string, byte_len int, "
-                         "feature_sig string, sample_rate int, "
-                         "n_samples int, out_rate int, out_samples int, "
-                         "resampled_sig string, frame_idx int, "
-                         "frame_sig string")
-
-
-def audio_pipeline(media: DataFrame, target_rate: int = 4000,
-                   frame_len: int = 256, n_frames: int = 2) -> DataFrame:
-    """decode → decimate-resample → frame-window FUSED into one Arrow
-    pass (the audio twin of `media_pipeline`, REAL codec only):
-
-    - decode: RIFF/PCM16 parse; feature_sig = md5 of the raw sample
-      bytes (container-independent, like the raster pixel sig);
-    - resample: integer decimation by k = rate div target_rate
-      (min 1) — every k-th sample, out_rate = rate div k; the sig
-      fingerprints the decimated bytes;
-    - frames: `n_frames` windows of `frame_len` samples at offsets
-      f·(n_samples div n_frames), clamped; one row per frame.
-
-    One payload materialization, one parse, no stage joins; payloads
-    never reach the driver."""
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                mt, rate, n_ch, ns, data = _real_decode_audio(bytes(payload))
-                fsig = hashlib.md5(data).hexdigest()[:8]
-                bp = 2 * n_ch                  # bytes per sample frame
-                k = max(1, rate // target_rate)
-                dec = (np.frombuffer(data[:ns * bp], dtype=np.uint8)
-                       .reshape(ns, bp)[::k].tobytes())
-                out_samples = (ns + k - 1) // k
-                rsig = hashlib.md5(dec).hexdigest()[:8]
-                for f in range(n_frames):
-                    off = f * (ns // n_frames)
-                    frame = data[off * bp:(off + frame_len) * bp]
-                    rows.append((doc_id, mt, len(payload), fsig,
-                                 rate, ns, rate // k, out_samples, rsig,
-                                 f, hashlib.md5(frame).hexdigest()[:8]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "media_type", "byte_len", "feature_sig",
-                "sample_rate", "n_samples", "out_rate", "out_samples",
-                "resampled_sig", "frame_idx", "frame_sig"])
-
-    return media.mapInPandas(op, schema=AUDIO_PIPELINE_SCHEMA)
+    feature_sig fingerprints the raw sample bytes; decimation keeps
+    every k-th whole sample frame (all channels), k = rate div
+    `TARGET_RATE` (at least 1); frame f is `FRAME_LEN` samples from
+    f·(n_samples div `AUDIO_FRAMES`), clamped at the end."""
+    rate, n_ch, ns, data = _parse_wav(payload)
+    bp = 2 * n_ch                       # bytes per sample frame
+    k = max(1, rate // TARGET_RATE)
+    dec = (np.frombuffer(data, dtype=np.uint8).reshape(ns, bp)[::k]
+           .tobytes())
+    head = (doc_id, "audio/wav", len(payload), _sig(data), rate, ns,
+            rate // k, (ns + k - 1) // k, _sig(dec))
+    rows = []
+    for f in range(AUDIO_FRAMES):
+        off = f * (ns // AUDIO_FRAMES)
+        rows.append(head + (f, _sig(data[off * bp:(off + FRAME_LEN) * bp])))
+    return rows
 
 
 # ---------------------------------------------------------------------------
-# Video (X-VIDEO) — the third modality with a REAL pure-Python codec:
-# YUV4MPEG2 (.y4m), the canonical uncompressed video interchange format
-# (a plain-text stream header, then FRAME-delimited raw planes — what
-# ffmpeg emits for codec-free pipelines). Frame SAMPLING here is real
-# temporal sampling over real container frames, not the raster
-# row-sampling analog. Compressed video (MP4/H.264/VP9) stays gated.
+# Video: YUV4MPEG2 (.y4m), the canonical uncompressed video interchange
+# format (a plain-text stream header, then FRAME-delimited raw planes —
+# what ffmpeg emits for codec-free pipelines). Frame sampling here is
+# temporal sampling over real container frames.
 
 def _parse_y4m(payload: bytes) -> tuple[int, int, str, list[bytes]]:
     """(width, height, colorspace, frames): YUV4MPEG2 stream header
@@ -567,7 +266,9 @@ def _parse_y4m(payload: bytes) -> tuple[int, int, str, list[bytes]]:
     plane size (C420 family: w·h·3/2; C444: w·h·3)."""
     nl = payload.find(b"\n")
     if not payload.startswith(b"YUV4MPEG2") or nl < 0:
-        raise ValueError("not a YUV4MPEG2 payload")
+        raise ValueError(
+            "unsupported video format (pure-Python path decodes "
+            "YUV4MPEG2; compressed formats need codec libraries)")
     w = h = None
     cs = "420jpeg"
     for tok in payload[10:nl].split(b" "):
@@ -602,27 +303,65 @@ def _parse_y4m(payload: bytes) -> tuple[int, int, str, list[bytes]]:
     return w, h, cs, frames
 
 
-def _real_decode_video(payload: bytes
-                       ) -> tuple[str, int, int, list[bytes]]:
-    if payload.startswith(b"YUV4MPEG2"):
-        w, h, _, frames = _parse_y4m(payload)
-        return "video/y4m", w, h, frames
-    raise ValueError(
-        "unsupported video format (pure-Python path decodes YUV4MPEG2; "
-        "compressed formats need codec libraries)")
+def _video_rows(doc_id: int, payload: bytes) -> list[tuple]:
+    """decode → every-`EVERY_K` temporal sampling for one Y4M payload,
+    in the image columns: n_frames/n_sampled → out_width/out_height,
+    the kept-subset sig → resized_sig.
+
+    feature_sig fingerprints the full frame stream; one row per kept
+    frame carries its original frame index and its own fingerprint."""
+    w, h, _, frames = _parse_y4m(payload)
+    kept = range(0, len(frames), EVERY_K)
+    head = (doc_id, "video/y4m", len(payload), _sig(b"".join(frames)),
+            w, h, len(frames), len(kept),
+            _sig(b"".join(frames[i] for i in kept)))
+    return [head + (i, _sig(frames[i])) for i in kept]
 
 
-def _y4m_params(text_col: str) -> "tuple[Column, Column, Column]":
-    """md5-derived (width, height, n_frames) — mirrored by the oracle."""
-    dig = F.md5(F.col(text_col))
-    w = F.lit(8) + F.conv(F.substring(dig, 11, 2), 16, 10).cast("int") % 16
-    h = F.lit(8) + F.conv(F.substring(dig, 13, 2), 16, 10).cast("int") % 16
-    nf = F.lit(3) + F.conv(F.substring(dig, 9, 2), 16, 10).cast("int") % 6
-    return w, h, nf
+# ---------------------------------------------------------------------------
+# The one Spark pass.
+
+def _ppm_payload() -> Column:
+    """P6 payload over pre-projected `_pw`/`_ph` dimension columns;
+    the pixel body is a constant fill of exactly w·h·3 bytes."""
+    return F.encode(F.concat(
+        F.lit("P6\n"), F.col("_pw").cast("string"), F.lit(" "),
+        F.col("_ph").cast("string"), F.lit("\n255\n"),
+        F.expr("repeat('x', _pw * _ph * 3)")), "UTF-8")
+
+
+def _le32(col):
+    hx = F.lpad(F.conv(col.cast("string"), 10, 16), 8, "0")
+    return F.unhex(F.concat(
+        F.substring(hx, 7, 2), F.substring(hx, 5, 2),
+        F.substring(hx, 3, 2), F.substring(hx, 1, 2)))
+
+
+def _le16(col):
+    hx = F.lpad(F.conv(col.cast("string"), 10, 16), 4, "0")
+    return F.unhex(F.concat(F.substring(hx, 3, 2),
+                            F.substring(hx, 1, 2)))
+
+
+def _wav_payload() -> Column:
+    """Mono RIFF/PCM16 payload over pre-projected `_ar`/`_an` columns:
+    headers assembled with a little-endian int→unhex byte-swap, the
+    sample body a constant fill of exactly n·2 bytes ('x' = 0x78)."""
+    data_len = F.col("_an") * 2
+    byte_rate = F.col("_ar") * 2         # mono, 2 bytes per sample
+    return F.concat(
+        F.encode(F.lit("RIFF"), "UTF-8"), _le32(data_len + 36),
+        F.encode(F.lit("WAVEfmt "), "UTF-8"), _le32(F.lit(16)),
+        _le16(F.lit(1)), _le16(F.lit(1)),        # PCM, mono
+        _le32(F.col("_ar")), _le32(byte_rate),
+        _le16(F.lit(2)), _le16(F.lit(16)),       # block align, bits
+        F.encode(F.lit("data"), "UTF-8"), _le32(data_len),
+        F.encode(F.expr("repeat('x', _an * 2)"), "UTF-8"))
 
 
 def _y4m_payload() -> Column:
-    """Y4M payload over pre-projected `_vw`/`_vh`/`_vnf` columns."""
+    """C444 Y4M payload over pre-projected `_vw`/`_vh`/`_vnf` columns:
+    constant plane fill, FRAME markers via repeat(concat(...))."""
     return F.encode(F.concat(
         F.lit("YUV4MPEG2 W"), F.col("_vw").cast("string"),
         F.lit(" H"), F.col("_vh").cast("string"),
@@ -631,151 +370,48 @@ def _y4m_payload() -> Column:
                "_vnf)")), "UTF-8")
 
 
-def to_y4m_media_table(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Wrap a text corpus as VALID C444 YUV4MPEG2 payloads, built
-    entirely JVM-side: md5-derived geometry and frame count (mirrored
-    by the q60 oracle), constant plane fill, FRAME markers assembled
-    with repeat(concat(...)) — a narrow codegen'd projection."""
-    w, h, nf = _y4m_params(text_col)
-    d = docs.select(F.col(id_col), w.alias("_vw"), h.alias("_vh"),
-                    nf.alias("_vnf"))
-    return d.select(F.col(id_col),
-                    _y4m_payload().alias("payload"),
-                    F.lit("video/y4m").alias("media_type"))
+def fused_media_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, p_img, p_wav, p_y4m): a valid P6 image, mono PCM16 WAV
+    clip and C444 Y4M stream per (doc_id, text) document, all three
+    built in ONE narrow codegen'd projection — no UDF, so a billion
+    media wrappers is a JVM-side scan. Geometry, sample rate/count and
+    frame count are digits of md5(text), mirrored by the q60 oracle."""
+    dig = F.md5(F.col("text"))
 
+    def hex_int(pos: int, n: int = 2) -> Column:
+        return F.conv(F.substring(dig, pos, n), 16, 10).cast("int")
 
-VIDEO_PIPELINE_SCHEMA = ("doc_id long, media_type string, byte_len int, "
-                         "feature_sig string, width int, height int, "
-                         "n_frames int, n_sampled int, "
-                         "sampled_sig string, frame_idx int, "
-                         "frame_sig string")
-
-
-def video_pipeline(media: DataFrame, every_k: int = 2) -> DataFrame:
-    """decode → temporal frame sampling FUSED in one Arrow pass (the
-    video twin of media_pipeline/audio_pipeline, REAL codec only):
-    every k-th container frame is kept; feature_sig fingerprints the
-    full frame stream, sampled_sig the kept subset, and one output row
-    per kept frame carries its original frame index and per-frame
-    fingerprint. One payload materialization, one parse; payloads
-    never reach the driver."""
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                mt, w, h, frames = _real_decode_video(bytes(payload))
-                fsig = hashlib.md5(b"".join(frames)).hexdigest()[:8]
-                kept = list(range(0, len(frames), every_k))
-                ssig = hashlib.md5(
-                    b"".join(frames[i] for i in kept)).hexdigest()[:8]
-                for i in kept:
-                    rows.append((doc_id, mt, len(payload), fsig, w, h,
-                                 len(frames), len(kept), ssig, i,
-                                 hashlib.md5(frames[i]).hexdigest()[:8]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "media_type", "byte_len", "feature_sig",
-                "width", "height", "n_frames", "n_sampled",
-                "sampled_sig", "frame_idx", "frame_sig"])
-
-    return media.mapInPandas(op, schema=VIDEO_PIPELINE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Fused cross-modality pass (r17, VERDICT r16 next #4): ONE Arrow
-# round-trip for all three modality pipelines. Each modality's
-# mapInPandas leg measured ~0.4-0.5 s per invocation at sf0.1 with the
-# IDENTITY function costing the same as the real pipeline — the
-# JVM↔Arrow↔Python round-trip itself is the cost, tripled by running
-# three legs over the same corpus. At 100 TB the fusion is the same
-# win in scan form: one pass over the documents builds all three
-# payloads in one projection and ships them through Python once,
-# instead of three scans and three worker passes.
-
-def fused_media_table(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-    """(id, p_img, p_wav, p_y4m): all three modality payloads built in
-    ONE narrow codegen'd projection — byte-identical to the three
-    to_*_media_table payload columns (shared expression builders)."""
-    pw, ph = _ppm_dims(text_col)
-    ar, an = _wav_params(text_col)
-    vw, vh, vnf = _y4m_params(text_col)
-    d = docs.select(F.col(id_col), F.col(text_col),
-                    pw.alias("_pw"), ph.alias("_ph"),
-                    ar.alias("_ar"), an.alias("_an"),
-                    vw.alias("_vw"), vh.alias("_vh"), vnf.alias("_vnf"))
-    return d.select(F.col(id_col),
+    d = docs.select(
+        "doc_id",
+        (F.lit(64) + hex_int(1) % 64).alias("_pw"),
+        (F.lit(64) + hex_int(3) % 64).alias("_ph"),
+        (F.lit(8000) + (hex_int(1) % 8) * F.lit(1000)).alias("_ar"),
+        (F.lit(1000) + hex_int(5, 4) % 4000).alias("_an"),
+        (F.lit(8) + hex_int(11) % 16).alias("_vw"),
+        (F.lit(8) + hex_int(13) % 16).alias("_vh"),
+        (F.lit(3) + hex_int(9) % 6).alias("_vnf"))
+    return d.select("doc_id",
                     _ppm_payload().alias("p_img"),
                     _wav_payload().alias("p_wav"),
                     _y4m_payload().alias("p_y4m"))
 
 
-def fused_modalities_pipeline(docs: DataFrame, *,
-                              max_dim: int = 64, n_frames: int = 4,
-                              target_rate: int = 4000,
-                              frame_len: int = 256,
-                              audio_frames: int = 2,
-                              every_k: int = 2,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """media_pipeline ∪ audio_pipeline ∪ video_pipeline in ONE Arrow
-    pass, rows emitted directly in the common q60 11-column shape
-    (audio: rate/samples → width/height, out_rate/out_samples →
-    out_width/out_height, resampled_sig → resized_sig; video:
-    n_frames/n_sampled → out_width/out_height, sampled_sig →
-    resized_sig). Row-for-row equal to the three-leg union
-    (pytest-pinned): each modality's per-payload body is the same code
-    path as its standalone pipeline."""
-    media = fused_media_table(docs, id_col, text_col)
-
+def fused_modalities_pipeline(docs: DataFrame) -> DataFrame:
+    """Image, audio and video rows of every (doc_id, text) document in
+    ONE Arrow pass over `fused_media_table`: each document's three
+    payloads go through `_image_rows`, `_audio_rows` and `_video_rows`,
+    and the rows land in the common `PIPELINE_SCHEMA` shape. One
+    payload projection, one decode per payload, no stage joins, no
+    shuffle; payloads never reach the driver."""
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, p_img, p_wav, p_y4m in zip(
                     pdf["doc_id"], pdf["p_img"], pdf["p_wav"],
                     pdf["p_y4m"]):
-                # image — the media_pipeline(stub=False) body
-                mt, fsig, w, h, px = _real_decode(p_img)
-                longest = max(w, h)
-                ow, oh = w * max_dim // longest, h * max_dim // longest
-                rsig = hashlib.md5(
-                    _resize_nn(px, w, h, ow, oh)).hexdigest()[:8]
-                for i in range(n_frames):
-                    y = i * h // n_frames
-                    rows.append((doc_id, mt, len(p_img), fsig, w, h,
-                                 ow, oh, rsig, i,
-                                 hashlib.md5(px[y * w * 3:(y + 1) * w * 3])
-                                 .hexdigest()[:8]))
-                # audio — the audio_pipeline body
-                amt, rate, n_ch, ns, data = _real_decode_audio(
-                    bytes(p_wav))
-                afsig = hashlib.md5(data).hexdigest()[:8]
-                bp = 2 * n_ch
-                k = max(1, rate // target_rate)
-                dec = (np.frombuffer(data[:ns * bp], dtype=np.uint8)
-                       .reshape(ns, bp)[::k].tobytes())
-                out_samples = (ns + k - 1) // k
-                arsig = hashlib.md5(dec).hexdigest()[:8]
-                for f in range(audio_frames):
-                    off = f * (ns // audio_frames)
-                    frame = data[off * bp:(off + frame_len) * bp]
-                    rows.append((doc_id, amt, len(p_wav), afsig,
-                                 rate, ns, rate // k, out_samples,
-                                 arsig, f,
-                                 hashlib.md5(frame).hexdigest()[:8]))
-                # video — the video_pipeline body
-                vmt, vw, vh, frames = _real_decode_video(bytes(p_y4m))
-                vfsig = hashlib.md5(b"".join(frames)).hexdigest()[:8]
-                kept = list(range(0, len(frames), every_k))
-                ssig = hashlib.md5(
-                    b"".join(frames[i] for i in kept)).hexdigest()[:8]
-                for i in kept:
-                    rows.append((doc_id, vmt, len(p_y4m), vfsig, vw, vh,
-                                 len(frames), len(kept), ssig, i,
-                                 hashlib.md5(frames[i]).hexdigest()[:8]))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "media_type", "byte_len", "feature_sig",
-                "width", "height", "out_width", "out_height",
-                "resized_sig", "frame_idx", "frame_sig"])
+                rows += _image_rows(doc_id, p_img)
+                rows += _audio_rows(doc_id, p_wav)
+                rows += _video_rows(doc_id, p_y4m)
+            yield pd.DataFrame(rows, columns=_COLUMNS)
 
-    return media.mapInPandas(op, schema=PIPELINE_SCHEMA)
+    return fused_media_table(docs).mapInPandas(op, schema=PIPELINE_SCHEMA)

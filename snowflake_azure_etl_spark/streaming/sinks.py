@@ -147,9 +147,14 @@ def require_columns(spark: SparkSession, table: str,
     table's columns of that kind) and `missing` (the absent ones)."""
     if not spark.catalog.tableExists(table):
         return
-    # listColumns runs Spark jobs; the schema read runs none
-    have = ([c.name for c in spark.catalog.listColumns(table)
-             if c.isPartition] if partition else spark.table(table).columns)
+    # neither read runs a Spark job: PySpark's catalog.listColumns
+    # iterates its result with toLocalIterator, which launches jobs,
+    # while the JVM catalog's listColumns Dataset is a local relation
+    # and collects driver-side
+    have = ([c.name() for c in
+             spark._jsparkSession.catalog().listColumns(table).collect()
+             if c.isPartition()] if partition
+            else spark.table(table).columns)
     missing = sorted(set(cols) - set(have))
     if missing:
         raise ValueError(message.format(have=have, missing=missing))

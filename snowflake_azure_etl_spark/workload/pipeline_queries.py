@@ -1,5 +1,5 @@
 """LLM-data-pipeline workload: dedup, similarity search, text analysis,
-multimodal stubs (north-star extensions — first-class components).
+multimodal media pipeline (north-star extensions — first-class components).
 
 Every query here is a thin wrapper over operators/* with a DuckDB oracle
 built from the same portable primitives (md5, list functions), so even
@@ -2381,38 +2381,25 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     prepared=True)
 def q60_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole binary-media pipeline (operators.multimodal) in one plan
-    — formerly q60/q61/q62: payload as opaque bytes → Arrow-batched
-    mapInPandas decode (typed metadata) → aspect-preserving
-    nearest-neighbor resample → per-item frame-sampling fan-out
-    (4 frames/item, fanned out inside the Arrow stream).
+    """The whole binary-media pipeline (operators.multimodal) in one
+    plan: every document becomes an engine-built P6 image, PCM16 WAV
+    clip and C444 Y4M stream (`fused_media_table`, one JVM-side
+    projection), and ONE Arrow pass runs each modality's body over its
+    payload — image decode → aspect-preserving nearest-neighbor resize
+    → row frames (4 per item), audio decode → decimation → frame
+    windows, video decode → every-2nd frame sampling — emitting all
+    rows in one 11-column shape. One payload materialization, one
+    decode per payload, no stage joins, no shuffle; payloads never
+    reach the driver.
 
-    ALL THREE stages run the REAL codec (r6; decode alone was real in
-    r5): each doc is wrapped as a valid binary PPM
-    (`to_ppm_media_table`, JVM-side construction), parsed by the
-    pure-Python P6 decoder, resampled by the numpy nearest-neighbor
-    grid, and row-frame sampled — and every stage's output is
-    oracle-mirrored, because the constant pixel fill makes the real
-    resample/frame signatures closed-form (md5 of 'x'·n). The varied-
-    pixel behavior of the same code paths is pytest-verified against
-    an independent scalar reference (`test_multimodal_real`).
-    Compressed formats (JPEG/MP4) stay honestly gated — no codec libs
-    in the container. Payloads never reach the driver; the three
-    stages are FUSED into one Arrow pass (operators.multimodal.
-    media_pipeline) — one payload materialization, one decode, zero
-    stage joins — pytest-pinned equal to the three-operator join
-    composition."""
-    docs = _docs(spark, sf_dir)
-    # r17 (VERDICT r16 next #4): the three modality legs fused into ONE
-    # Arrow pass (multimodal.fused_modalities_pipeline) — measured at
-    # sf0.1, each mapInPandas leg cost ~0.4-0.5 s with the IDENTITY
-    # function costing the same as the real pipeline (the Arrow
-    # round-trip IS the cost); at 100 TB it is one corpus scan and one
-    # Python worker pass instead of three. Rows pinned equal to the
-    # three-leg union (tests/test_multimodal_real.py).
-    return multimodal.fused_modalities_pipeline(
-        docs, max_dim=64, n_frames=4, target_rate=4000, frame_len=256,
-        audio_frames=2, every_k=2)
+    Every codec is the real pure-Python one, and every signature is
+    oracle-mirrored, because the constant payload fill makes them
+    closed-form (md5 of 'x'·n). The bodies' behavior on varied pixels,
+    samples and frames is pytest-verified against independent scalar
+    references (`test_multimodal_real`, `test_audio_real`,
+    `test_video_real`). Compressed formats (JPEG/MP3/MP4) stay gated:
+    the engine ships no codec libraries."""
+    return multimodal.fused_modalities_pipeline(_docs(spark, sf_dir))
 
 
 

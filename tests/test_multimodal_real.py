@@ -1,10 +1,13 @@
-"""Real (non-stubbed) media decode path: pure-Python PPM/BMP parsing,
-nearest-neighbor resample, frame/row sampling — verified bit-for-bit
-against hand-built binary payloads."""
+"""Image body of the media pipeline (`multimodal._image_rows`): pure-
+Python PPM/BMP parsing, nearest-neighbor resample and row frames —
+verified bit-for-bit against hand-built binary payloads and an
+independent scalar reference; plus the engine-built P6 payload's
+validity."""
 
 from __future__ import annotations
 
 import hashlib
+import random
 import struct
 
 import pytest
@@ -79,18 +82,26 @@ def test_parse_bmp_top_down_matches_bottom_up():
     assert mm._parse_bmp(up) == mm._parse_bmp(down) == (5, 4, pixels)
 
 
+def image_rows(payload: bytes) -> list[dict]:
+    """`_image_rows` of one payload, each row keyed by column name."""
+    return [dict(zip(mm._COLUMNS, r)) for r in mm._image_rows(1, payload)]
+
+
 def test_bmp_and_ppm_reencodings_fingerprint_identically():
-    """The _real_decode contract: feature_sig hashes the DECODED
-    pixels, so the same image as PPM and as BMP (padded, bottom-up,
-    BGR) yields the same signature."""
+    """feature_sig hashes the DECODED pixels, so the same image as PPM
+    and as BMP (padded, bottom-up, BGR) yields the same rows apart from
+    the container's media type and byte length."""
     w, h = 7, 5                        # 21 bytes/row → stride 24
     rgb = bytes((x * 7 + 13) % 256 for x in range(w * h * 3))
     ppm = b"P6\n" + f"{w} {h}\n255\n".encode() + rgb
     bmp, _ = make_bmp(w, h, rgb=rgb)
-    ppm_dec = mm._real_decode(ppm)
-    bmp_dec = mm._real_decode(bmp)
-    assert ppm_dec[1] == bmp_dec[1]    # feature_sig
-    assert ppm_dec[2:] == bmp_dec[2:]  # (w, h, pixels)
+    container = ("media_type", "byte_len")
+
+    def decoded(rows):
+        return [{k: v for k, v in r.items() if k not in container}
+                for r in rows]
+
+    assert decoded(image_rows(ppm)) == decoded(image_rows(bmp))
 
 
 def test_parse_bmp_rejects_non_24bpp():
@@ -103,23 +114,21 @@ def test_parse_bmp_rejects_non_24bpp():
 
 def test_real_decode_rejects_unknown():
     with pytest.raises(ValueError, match="unsupported"):
-        mm._real_decode(b"\x89PNG....")
+        mm._image_rows(1, b"\x89PNG....")
 
 
-def test_decode_media_real_on_generated_payloads(spark):
+def test_decode_media_real_on_generated_payloads():
     ppm, ppm_px = make_ppm(8, 6)
     bmp, bmp_px = make_bmp(4, 4)
-    df = spark.createDataFrame(
-        [(1, ppm, "?"), (2, bmp, "?")],
-        "doc_id long, payload binary, media_type string")
-    rows = {r.doc_id: r for r in mm.decode_media(df, stub=False).collect()}
-    assert rows[1].media_type == "image/ppm"
-    assert (rows[1].width, rows[1].height) == (8, 6)
-    assert rows[1].byte_len == len(ppm)
-    assert rows[1].feature_sig == hashlib.md5(ppm_px).hexdigest()[:8]
-    assert rows[2].media_type == "image/bmp"
-    assert (rows[2].width, rows[2].height) == (4, 4)
-    assert rows[2].feature_sig == hashlib.md5(bmp_px).hexdigest()[:8]
+    p, b = image_rows(ppm)[0], image_rows(bmp)[0]
+    assert p["media_type"] == "image/ppm"
+    assert (p["width"], p["height"]) == (8, 6)
+    assert p["byte_len"] == len(ppm)
+    assert p["feature_sig"] == hashlib.md5(ppm_px).hexdigest()[:8]
+    assert b["media_type"] == "image/bmp"
+    assert (b["width"], b["height"]) == (4, 4)
+    assert b["byte_len"] == len(bmp)
+    assert b["feature_sig"] == hashlib.md5(bmp_px).hexdigest()[:8]
 
 
 def py_resize_nn(pixels: bytes, w: int, h: int, ow: int, oh: int) -> bytes:
@@ -133,17 +142,15 @@ def py_resize_nn(pixels: bytes, w: int, h: int, ow: int, oh: int) -> bytes:
     return bytes(out)
 
 
-def test_resize_media_real_nearest_neighbor(spark):
-    payload, pixels = make_ppm(8, 4)
-    df = spark.createDataFrame([(1, payload, "?")],
-                               "doc_id long, payload binary, media_type string")
-    row = mm.resize_media(df, max_dim=4, stub=False).collect()[0]
-    assert (row.width, row.height) == (8, 4)
-    assert (row.out_width, row.out_height) == (4, 2)
-    expected = py_resize_nn(pixels, 8, 4, 4, 2)
-    assert len(expected) == 4 * 2 * 3
-    assert mm._resize_nn(pixels, 8, 4, 4, 2) == expected
-    assert row.resized_sig == hashlib.md5(expected).hexdigest()[:8]
+def test_resize_media_real_nearest_neighbor():
+    # 96x40 → longest side 64: 64x26, a non-integer 1.5x downscale
+    payload, pixels = make_ppm(96, 40)
+    rows = image_rows(payload)
+    assert {(r["out_width"], r["out_height"]) for r in rows} == {(64, 26)}
+    expected = py_resize_nn(pixels, 96, 40, 64, 26)
+    assert len(expected) == 64 * 26 * 3
+    assert mm._resize_nn(pixels, 96, 40, 64, 26) == expected
+    assert rows[0]["resized_sig"] == hashlib.md5(expected).hexdigest()[:8]
 
 
 def test_resize_nn_matches_loop_reference_property():
@@ -164,26 +171,23 @@ def test_resize_nn_matches_loop_reference_property():
     check()
 
 
-def test_frame_sample_real_rows(spark):
+def test_frame_sample_real_rows():
     payload, pixels = make_ppm(5, 8)
-    df = spark.createDataFrame([(1, payload, "?")],
-                               "doc_id long, payload binary, media_type string")
-    rows = sorted(mm.frame_sample(df, n_frames=4, stub=False).collect(),
-                  key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]
+    rows = image_rows(payload)
+    assert [r["frame_idx"] for r in rows] == [0, 1, 2, 3]
     for i, r in enumerate(rows):
         y = i * 8 // 4
         expected_row = pixels[y * 5 * 3:(y + 1) * 5 * 3]
-        assert r.frame_sig == hashlib.md5(expected_row).hexdigest()[:8]
+        assert r["frame_sig"] == hashlib.md5(expected_row).hexdigest()[:8]
 
 
-def test_to_ppm_media_table_produces_valid_ppm(spark, sf_dir):
+def test_fused_media_table_produces_valid_ppm(spark, sf_dir):
     from snowflake_azure_etl_spark.sources.registry import load_tables
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].limit(5)
-    payloads = mm.to_ppm_media_table(docs).collect()
+    payloads = mm.fused_media_table(docs).collect()
     assert payloads
     for r in payloads:
-        w, h, px = mm._parse_ppm(bytes(r.payload))
+        w, h, px = mm._parse_ppm(bytes(r.p_img))
         assert 64 <= w < 128 and 64 <= h < 128
         assert px == b"x" * (w * h * 3)
 
@@ -206,66 +210,42 @@ def test_parse_bmp_property_roundtrip():
     check()
 
 
-@pytest.mark.parametrize("stub", [True, False])
-def test_media_pipeline_fusion_equals_join_composition(spark, stub):
-    """The fused one-pass media_pipeline must be row-equal to the
-    decode ⋈ resize ⋈ frame_sample composition it replaces (q60's
-    plan shape) — on both the stub and real codec paths."""
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} body text {'y' * (i + 3)}") for i in range(12)],
-        "doc_id long, text string")
-    media = mm.to_ppm_media_table(docs) if not stub \
-        else mm.to_media_table(docs)
-    fused = mm.media_pipeline(media, max_dim=64, n_frames=4, stub=stub)
-    joined = (mm.decode_media(media, stub=stub)
-              .join(mm.resize_media(media, max_dim=64, stub=stub)
-                    .select("doc_id", "out_width", "out_height",
-                            "resized_sig"), "doc_id")
-              .join(mm.frame_sample(media, n_frames=4, stub=stub),
-                    "doc_id")
-              .select(*fused.columns))
-    key = ["doc_id", "frame_idx"]
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, joined.collect()))
-    assert a == b and len(a) == 48
+def ref_image_rows(doc_id, media_type, byte_len, w, h, rgb):
+    """Scalar reference for `_image_rows` from the source pixels:
+    longest side scaled to 64 by truncating division, the loop
+    resample, and 4 evenly spaced pixel rows as frames."""
+    def sig(b):
+        return hashlib.md5(b).hexdigest()[:8]
+
+    ow, oh = w * 64 // max(w, h), h * 64 // max(w, h)
+    head = (doc_id, media_type, byte_len, sig(rgb), w, h, ow, oh,
+            sig(py_resize_nn(rgb, w, h, ow, oh)))
+    rows = []
+    for i in range(4):
+        y = i * h // 4
+        rows.append(head + (i, sig(rgb[y * w * 3:(y + 1) * w * 3])))
+    return rows
 
 
-def test_fused_modalities_equals_three_leg_union(spark):
-    """r17 (VERDICT r16 next #4): the single-Arrow-pass
-    fused_modalities_pipeline must be row-equal to the three-leg
-    img ∪ audio ∪ video union it replaces in q60 — same per-payload
-    code paths, one JVM↔Python round-trip instead of three."""
-    from pyspark.sql import functions as F
+def test_image_rows_match_scalar_reference_property():
+    """Random PPM and BMP images, up- and downscaled around the 64-px
+    target, give exactly the scalar reference's rows."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
 
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} body text {'y' * (i + 3)}") for i in range(12)],
-        "doc_id long, text string")
-    fused = mm.fused_modalities_pipeline(
-        docs, max_dim=64, n_frames=4, target_rate=4000, frame_len=256,
-        audio_frames=2, every_k=2)
-    img = mm.media_pipeline(mm.to_ppm_media_table(docs), max_dim=64,
-                            n_frames=4, stub=False)
-    audio = (mm.audio_pipeline(mm.to_wav_media_table(docs),
-                               target_rate=4000, frame_len=256,
-                               n_frames=2)
-             .select("doc_id", "media_type", "byte_len", "feature_sig",
-                     F.col("sample_rate").alias("width"),
-                     F.col("n_samples").alias("height"),
-                     F.col("out_rate").alias("out_width"),
-                     F.col("out_samples").alias("out_height"),
-                     F.col("resampled_sig").alias("resized_sig"),
-                     "frame_idx", "frame_sig"))
-    video = (mm.video_pipeline(mm.to_y4m_media_table(docs), every_k=2)
-             .select("doc_id", "media_type", "byte_len", "feature_sig",
-                     "width", "height",
-                     F.col("n_frames").alias("out_width"),
-                     F.col("n_sampled").alias("out_height"),
-                     F.col("sampled_sig").alias("resized_sig"),
-                     "frame_idx", "frame_sig"))
-    union = img.unionByName(audio).unionByName(video)
-    a = sorted(map(tuple, fused.collect()))
-    b = sorted(map(tuple, union.collect()))
-    assert a == b
-    # every modality present, image fan-out intact
-    kinds = {r[1] for r in a}
-    assert kinds == {"image/ppm", "audio/wav", "video/y4m"}
+    @settings(max_examples=30, deadline=None)
+    @given(w=st.integers(1, 90), h=st.integers(1, 90),
+           fmt=st.sampled_from(["ppm", "bmp", "bmp_top_down"]),
+           seed=st.integers(0, 2 ** 32 - 1))
+    def check(w, h, fmt, seed):
+        rgb = random.Random(seed).randbytes(w * h * 3)
+        if fmt == "ppm":
+            payload = b"P6\n" + f"{w} {h}\n255\n".encode() + rgb
+        else:
+            payload, _ = make_bmp(w, h, top_down=fmt == "bmp_top_down",
+                                  rgb=rgb)
+        mt = "image/ppm" if fmt == "ppm" else "image/bmp"
+        assert mm._image_rows(7, payload) == ref_image_rows(
+            7, mt, len(payload), w, h, rgb)
+
+    check()

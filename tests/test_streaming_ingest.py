@@ -1048,6 +1048,44 @@ def test_line_dedup_ingest_rejects_preshard_winner_table(spark):
     assert not spark.catalog.tableExists(scrub_t)
 
 
+def test_line_dedup_layout_guard_launches_no_job(spark):
+    """The per-epoch layout guard reads the winner table's partition
+    columns from the catalog without a Spark job: PySpark's
+    catalog.listColumns iterates with toLocalIterator, which launches
+    jobs on every line-dedup epoch."""
+    from snowflake_azure_etl_spark.streaming.ingest import LINE_SHARD_COL
+    from snowflake_azure_etl_spark.streaming.sinks import (
+        EPOCH_COL, require_columns)
+    from snowflake_azure_etl_spark.warehouse import ddl
+
+    win_t = "linededup_guard_db.winners"
+    spark.sql("CREATE DATABASE IF NOT EXISTS linededup_guard_db")
+    spark.sql(f"DROP TABLE IF EXISTS {win_t}")
+    ddl.drop_orphan_location(spark, win_t)
+    (spark.createDataFrame(
+        [(11, 1, 0, "cookie banner", 0, 3)],
+        f"_h long, d long, i int, t string, {EPOCH_COL} long, "
+        f"{LINE_SHARD_COL} int")
+     .write.partitionBy(EPOCH_COL, LINE_SHARD_COL).format("parquet")
+     .saveAsTable(win_t))
+    sc = spark.sparkContext
+    group = "line_dedup_layout_guard"
+    sc.setJobGroup(group, "layout guard")
+    try:
+        require_columns(spark, win_t, (LINE_SHARD_COL,), "{missing}",
+                        partition=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    # the jobless read still sees exactly the partition columns
+    with pytest.raises(ValueError) as ei:
+        require_columns(spark, win_t, (LINE_SHARD_COL, "ghost"),
+                        "have {have} missing {missing}", partition=True)
+    assert str(ei.value) == (
+        f"have ['{EPOCH_COL}', '{LINE_SHARD_COL}'] missing ['ghost']")
+
+
 @pytest.mark.slow
 def test_line_dedup_ingest_winner_table_is_shard_pruned(spark):
     """r16 (VERDICT r15 next #2): the winner table carries a
