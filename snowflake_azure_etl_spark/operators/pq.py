@@ -244,58 +244,3 @@ def pq_adc_topk(codes: DataFrame, queries: DataFrame, id_col: str,
                       _adc_expr(m).alias("adc_dist")))
     return _ranked_topk(scored, k_neighbors)
 
-
-def ivf_pq_topk(emb: DataFrame, queries: DataFrame, id_col: str,
-                vec_col: str, dim: int, n_cells: int = 8,
-                m: int = 4, codebook_k: int = 16,
-                k_neighbors: int = 3, train_iters: int = 0,
-                codebook_iters: int = 1) -> DataFrame:
-    """The composed IVF-PQ probe — the standard billion-vector search
-    stack as ONE set-wise plan (no per-query driver loop):
-
-    1. coarse quantizer (`similarity` centroids, optionally
-       `train_iters` Lloyd rounds) assigns every corpus vector a
-       `cell_id`;
-    2. fine quantizer (`pq_codebooks` / `pq_encode`) collapses each
-       vector to m small ints, KEEPING cell_id on the code table;
-    3. each query is assigned its own cell and joined to ONLY that
-       cell's codes — an equi-join on cell_id, so the candidate set is
-       ~1/n_cells of the corpus and the corpus never shuffles (the
-       query-cell and LUT relations are query-sized broadcasts);
-    4. ADC scores the pruned pairs row-locally; the per-query top-k
-       rank window runs over candidate rows only.
-
-    Returns (query_id, neighbor_id, adc_dist, rn). Self-matches are
-    excluded. At 100 TB this is RAM-resident search: the code table is
-    dim·32/m× smaller than the vectors, and the probe reads 1/n_cells
-    of it per query."""
-    from . import similarity
-
-    if train_iters > 0:
-        cents_df = similarity.kmeans_centroids(
-            emb, id_col, vec_col, n_cells, n_iter=train_iters)
-    else:
-        cents_df = similarity._centroid_frame(emb, id_col, vec_col,
-                                              n_cells)
-    cents = similarity._centroid_array(cents_df)
-    assigned = similarity.assign_cells(emb, id_col, vec_col, cents)
-    books = pq_codebooks(emb, id_col, vec_col, dim, m=m,
-                         k=codebook_k, n_iter=codebook_iters)
-    codes = (pq_encode(emb, id_col, vec_col, dim, books, m=m)
-             .join(assigned.select("neighbor_id", "cell_id"),
-                   "neighbor_id"))
-    q_cells = (similarity.assign_cells(queries, id_col, vec_col, cents)
-               .select(F.col("neighbor_id").alias("query_id"),
-                       "cell_id"))
-    luts = _query_luts(queries, id_col, vec_col, dim, books, m)
-    probe = (codes
-             .join(bounded_broadcast(
-                 q_cells, bound="per-query probe cells (eval-set-bounded)"),
-                 "cell_id")
-             .join(bounded_broadcast(
-                 luts, bound="per-query ADC LUTs (eval-set-bounded)"),
-                 "query_id")
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .select("query_id", "neighbor_id",
-                     _adc_expr(m).alias("adc_dist")))
-    return _ranked_topk(probe, k_neighbors)

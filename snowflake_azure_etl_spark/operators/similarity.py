@@ -171,13 +171,28 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
     Cells that attract no vectors in a round are dropped (both engines
     mirror this); ties in assignment resolve to the smaller cell id.
     Fixed iteration count (no convergence probe) keeps the whole
-    training loop oracle-expressible in SQL."""
-    cents = _centroid_frame(emb, id_col, vec_col, n_cells)
+    training loop oracle-expressible in SQL.
+
+    Not session-cached (the index build caches through
+    `_kmeans_rounds`): `streaming.vectors.retrain_centroids` trains on
+    a table whose analyzed plan stays the same while epochs land, so a
+    plan-keyed entry would hand back the old quantizer."""
+    return _lloyd_rounds(emb, id_col, vec_col, n_cells, n_iter, scale)[-1]
+
+
+def _lloyd_rounds(emb: DataFrame, id_col: str, vec_col: str,
+                  n_cells: int, n_iter: int, scale: int) -> list[DataFrame]:
+    """[c0, c1, …, c_n_iter]: the seed centroids and every round's
+    (cell_id, ctv), each an eager quantizer-sized (k-row) checkpoint,
+    so a round never replays the rounds before it."""
+    rounds = [_centroid_frame(emb, id_col, vec_col, n_cells)
+              .localCheckpoint(eager=True)]
     for _ in range(n_iter):
         assigned = assign_cells(emb, id_col, vec_col,
-                                _centroid_array(cents))
-        cents = _kmeans_update(assigned, scale)
-    return cents
+                                _centroid_array(rounds[-1]))
+        rounds.append(_kmeans_update(assigned, scale)
+                      .localCheckpoint(eager=True))
+    return rounds
 
 
 def _kmeans_update(assigned: DataFrame, scale: int) -> DataFrame:
@@ -313,50 +328,57 @@ def _cell_scores(vec: Column, cents: Column, nv: Column) -> Column:
             (-c.getField("cell_id")).alias("nid")))
 
 
+def _nearest_cells(rel: DataFrame, cent_arr: DataFrame,
+                   n: int) -> DataFrame:
+    """`rel` (carrying the double vector `cv` and its l2 norm `nv`)
+    with its `n` nearest cells: one row per (row, cell) carrying
+    `cell_id`, its cosine `cell_cos` and `cell_rank` (1 = nearest),
+    replacing any prior columns of those names. The ONE place rows are
+    ranked against the centroid array: a crossJoin with the one-row
+    broadcast array scored row-locally (the rows never shuffle), then
+    for n > 1 an explode (×n fan-out, narrow). Rank 1 is an array_max,
+    so corpus-wide assignment never sorts. Ties resolve by the
+    (cos, -cell_id) struct order, so each rank is a DISTINCT cell; n ≥
+    the number of cells yields every cell, and a row gets no r-th cell
+    when fewer than r exist."""
+    from ._cache import cached_column
+
+    def build() -> Column:
+        scores = _cell_scores(F.col("cv"), F.col("_cents"), F.col("nv"))
+        if n == 1:
+            return F.array_max(scores)
+        return F.slice(F.sort_array(scores, asc=False), 1, n)
+
+    ranked = cached_column(("nearest_cells", n), build)
+    rel = rel.drop("cell_id", "cell_cos", "cell_rank")
+    j = rel.crossJoin(bounded_broadcast(
+        cent_arr, bound="one-row centroid array", max_rows=1))
+    if n == 1:
+        j = j.select(*rel.columns, F.lit(0).alias("_pos"),
+                     ranked.alias("_best"))
+    else:
+        j = j.select(*rel.columns,
+                     F.posexplode(ranked).alias("_pos", "_best"))
+    return j.select(*rel.columns,
+                    (-F.col("_best.nid")).cast("int").alias("cell_id"),
+                    F.col("_best.s").alias("cell_cos"),
+                    (F.col("_pos") + 1).alias("cell_rank"))
+
+
 def assign_cells(emb: DataFrame, id_col: str, vec_col: str,
                  cent_arr: DataFrame) -> DataFrame:
-    """IVF cell assignment: argmax-cosine centroid per vector — a
-    narrow map over the corpus (crossJoin with the ONE-row broadcast
-    centroid array adds no exchange on the corpus side). At 100 TB this
-    is the property that matters: the corpus vectors are scored in
-    place and never shuffle."""
-    from ._cache import cached_column
+    """IVF cell assignment: (neighbor_id, cv, nv, cell_id, cell_cos) —
+    the argmax-cosine centroid per vector and that cosine, the
+    quantization fit drift monitoring averages per cell. A narrow map
+    over the corpus (the ONE-row broadcast centroid array adds no
+    exchange on the corpus side): at 100 TB, the corpus vectors are
+    scored in place and never shuffle."""
     v = as_double_vec(vec_col)
-    cell_id = cached_column(
-        ("assign_cell_id_normed",),
-        lambda: (-F.array_max(_cell_scores(F.col("cv"), F.col("_cents"),
-                                           F.col("_anv")))
-                 .getField("nid")).cast("int"))
     # norms-once pre-projection BELOW the crossJoin (see _cell_scores):
     # the double-cast vector and its norm compute once per row
     pre = emb.select(F.col(id_col).alias("neighbor_id"), v.alias("cv"),
-                     l2_norm(v).alias("_anv"))
-    return (pre.crossJoin(bounded_broadcast(cent_arr, bound="one-row centroid array", max_rows=1))
-            .select("neighbor_id", "cv", cell_id.alias("cell_id")))
-
-
-def assign_cells_scored(emb: DataFrame, id_col: str, vec_col: str,
-                        cent_arr: DataFrame,
-                        keep_vec: bool = False) -> DataFrame:
-    """`assign_cells` plus the WINNING cosine: (_id, cell_id,
-    cell_cos[, _v]). The cosine to the assigned centroid is the
-    quantization fit — the quantity drift monitoring averages per
-    cell; `keep_vec` carries the vector through for index sinks that
-    persist it (retrain needs the vectors back). Same shuffle-free
-    shape: one broadcast crossJoin projection."""
-    from ._cache import cached_column
-    v = as_double_vec(vec_col)
-    best = cached_column(
-        ("assign_best_normed",),
-        lambda: F.array_max(_cell_scores(F.col("_acv"), F.col("_cents"),
-                                         F.col("_anv"))))
-    pre = emb.select(F.col(id_col).alias("_id"), v.alias("_acv"),
-                     l2_norm(v).alias("_anv"))
-    return (pre.crossJoin(bounded_broadcast(cent_arr, bound="one-row centroid array", max_rows=1))
-            .select(F.col("_id"),
-                    (-best.getField("nid")).cast("int").alias("cell_id"),
-                    best.getField("s").alias("cell_cos"),
-                    *([F.col("_acv").alias("_v")] if keep_vec else [])))
+                     l2_norm(v).alias("nv"))
+    return _nearest_cells(pre, cent_arr, 1).drop("cell_rank")
 
 
 def ivf_drift_report(emb: DataFrame, batch: DataFrame, id_col: str,
@@ -370,16 +392,20 @@ def ivf_drift_report(emb: DataFrame, batch: DataFrame, id_col: str,
     `incremental_near_dup_candidates` establish for the dedup indexes,
     completed here for the vector index — and report per-cell drift:
 
-      (cell_id, n_index, mean_cos_index, n_new, mean_cos_new, retrain)
+      (cell_id, n_index, mean_cos_index, n_new, mean_cos_new, retrain,
+       sum_fit_new)
 
     `mean_cos_*` is the mean quantization fit (cosine of each vector
     to its assigned centroid); a cell whose NEW arrivals fit worse
     than the index baseline by more than `cos_drop` is flagged
     `retrain` — the standard trigger for re-running Lloyd's rounds on
-    a stale quantizer.
+    a stale quantizer. `sum_fit_new` is the batch's exact partial (the
+    sum of its fixed-point fits), the input a later baseline sums.
 
-    Scale shape: both sides are shuffle-free broadcast projections
-    (`assign_cells_scored` — vectors never move) feeding per-cell
+    Scale shape: the index side reads the fits the persisted
+    `_ivf_index` already holds (`cell_cos`), so only the batch is
+    scored against the centroids — a shuffle-free broadcast projection
+    (`assign_cells`, vectors never move). Both feed per-cell
     aggregates whose state and output are quantizer-sized; the final
     join is cells × cells. Determinism: per-vector fits are quantized
     to fixed-point longs before the mean (the `KMEANS_SCALE` trick),
@@ -389,32 +415,35 @@ def ivf_drift_report(emb: DataFrame, batch: DataFrame, id_col: str,
     subset of the index corpus) still surfaces; full-outer can't
     broadcast, so that one join sort-merges — two quantizer-sized
     relations, ≤ n_cells rows a side."""
-    cent_arr, _ = _ivf_index(emb, id_col, vec_col, n_cells, train_iters)
+    cent_arr, assigned = _ivf_index(emb, id_col, vec_col, n_cells,
+                                    train_iters)
 
-    def stats(side: DataFrame, pref: str) -> DataFrame:
-        sc = assign_cells_scored(side, id_col, vec_col, cent_arr)
-        fits = sc.select("cell_id",
-                         F.floor(F.col("cell_cos") * F.lit(float(cos_scale)))
-                         .cast("long").alias("fit_q"))
-        return cell_fit_stats(fits, pref, cos_scale)
+    def stats(scored: DataFrame, pref: str) -> DataFrame:
+        fit_q = F.floor(F.col("cell_cos") * F.lit(float(cos_scale)))
+        parts = (scored.groupBy("cell_id")
+                 .agg(F.count("*").alias("n"),
+                      F.sum(fit_q.cast("long")).alias("s")))
+        return cell_fit_stats(parts, pref, cos_scale)
 
-    return drift_flags(stats(emb, "index"), stats(batch, "new"), cos_drop)
+    return drift_flags(
+        stats(assigned, "index"),
+        stats(assign_cells(batch, id_col, vec_col, cent_arr), "new"),
+        cos_drop)
 
 
-def cell_fit_stats(fits: DataFrame, pref: str,
+def cell_fit_stats(parts: DataFrame, pref: str,
                    cos_scale: int = KMEANS_SCALE) -> DataFrame:
-    """Per-cell fixed-point mean over a (cell_id, fit_q) relation:
-    (cell_id, n_{pref}, mean_cos_{pref}) — the ONE definition of the
-    drift statistics, shared by the batch operator above and the
-    streaming sink (streaming/vectors.py), which stores `fit_q`
-    pre-quantized in its index."""
-    return (fits.groupBy("cell_id")
-            .agg(F.count("*").alias(f"n_{pref}"),
-                 F.sum("fit_q").alias("_s"))
-            .select("cell_id", f"n_{pref}",
-                    ((F.col("_s").cast("double") / F.col(f"n_{pref}"))
-                     / F.lit(float(cos_scale)))
-                    .alias(f"mean_cos_{pref}")))
+    """(cell_id, n_{pref}, mean_cos_{pref}, sum_fit_{pref}) from
+    per-cell exact partials (cell_id, n, s): `n` fits whose fixed-point
+    longs floor(cos·cos_scale) sum to `s`. The ONE definition of the drift
+    statistics, shared by the batch operator above and both sides of
+    the streaming sink (streaming/vectors.py), whose baseline sums the
+    partials of earlier epochs."""
+    return parts.select(
+        "cell_id", F.col("n").alias(f"n_{pref}"),
+        ((F.col("s").cast("double") / F.col("n"))
+         / F.lit(float(cos_scale))).alias(f"mean_cos_{pref}"),
+        F.col("s").alias(f"sum_fit_{pref}"))
 
 
 def drift_flags(istat: DataFrame, bstat: DataFrame,
@@ -433,43 +462,35 @@ def drift_flags(istat: DataFrame, bstat: DataFrame,
                         F.col("n_new").isNotNull()
                         & (F.col("mean_cos_new")
                            < F.col("mean_cos_index") - F.lit(cos_drop)),
-                        F.lit(False)).alias("retrain")))
+                        F.lit(False)).alias("retrain"),
+                    "sum_fit_new"))
 
 
 def _kmeans_rounds(emb: DataFrame, id_col: str, vec_col: str,
                    n_cells: int, n_iter: int,
                    scale: int = KMEANS_SCALE) -> list[DataFrame]:
-    """[c0, c1, …, c_n_iter] — every training round's (cell_id, ctv),
-    each materialized as a quantizer-sized (k-row) eager checkpoint
-    and session-cached. ONE training pass serves every consumer of
-    any round: the index build takes the last element, the inertia
-    trajectory reads each round WITHOUT replaying the preceding
-    updates (r12 — the trajectory previously re-ran the round-1
-    update to reconstruct round 2's entering centroids)."""
+    """`_lloyd_rounds`, session-cached: ONE training pass serves every
+    consumer of any round — the index build takes the last element,
+    the inertia trajectory reads each round without replaying the
+    preceding updates."""
     from ._cache import cached_build, plan_key
     key = ("kmeans_rounds", plan_key(emb), id_col, vec_col, n_cells,
            n_iter, scale)
-
-    def build():
-        rounds = [_centroid_frame(emb, id_col, vec_col, n_cells)
-                  .localCheckpoint(eager=True)]
-        for _ in range(n_iter):
-            assigned = assign_cells(emb, id_col, vec_col,
-                                    _centroid_array(rounds[-1]))
-            rounds.append(_kmeans_update(assigned, scale)
-                          .localCheckpoint(eager=True))
-        return rounds
-
-    return cached_build(emb.sparkSession, key, build)
+    return cached_build(
+        emb.sparkSession, key,
+        lambda: _lloyd_rounds(emb, id_col, vec_col, n_cells, n_iter,
+                              scale))
 
 
 def _ivf_index(emb: DataFrame, id_col: str, vec_col: str,
                n_cells: int, train_iters: int):
     """(cent_arr, assigned) — the IVF index: the one-row broadcast
-    centroid array plus the cell-assigned corpus. Built once and cached
-    per (session, corpus plan) the way any vector store persists its
-    index — every consumer (`ivf_topk` probes, `semantic_dedup`
-    within-cell comparisons) pays only its own stage, not the build."""
+    centroid array plus the cell-assigned corpus in `assign_cells`'
+    shape, so every row's norm `nv` and fit `cell_cos` are stored
+    beside its cell. Built once and cached per (session, corpus plan)
+    the way any vector store persists its index — every consumer
+    (`ivf_topk` probes, `semantic_dedup` within-cell comparisons, the
+    drift baseline) pays only its own stage, not the build."""
     from ._cache import cached_persist, plan_key
     spark = emb.sparkSession
     params = (plan_key(emb), id_col, vec_col, n_cells, train_iters)
@@ -483,59 +504,6 @@ def _ivf_index(emb: DataFrame, id_col: str, vec_col: str,
         spark, ("ivf_index",) + params,
         lambda: assign_cells(emb, id_col, vec_col, cent_arr), eager=True)
     return cent_arr, assigned
-
-
-def _probe_rank_cell(rel: DataFrame, cent_arr: DataFrame,
-                     rank: int) -> DataFrame:
-    """`rel` with `cell_id` replaced by the row's `rank`-th nearest
-    cell (1 = the primary assignment). Rows with fewer than `rank`
-    cells available drop out. Same shuffle-free shape as assignment;
-    ties resolve by the (-cos, cell_id) struct order, so every rank
-    is a DISTINCT cell."""
-    from ._cache import cached_column
-    best = cached_column(
-        ("probe_rank_cell_cv_normed", rank),
-        lambda: F.element_at(
-            F.array_sort(_cell_scores(F.col("cv"), F.col("_cents"),
-                                      F.col("_pnv"))),
-            -rank))
-    return (rel.drop("cell_id")
-            .withColumn("_pnv", l2_norm(F.col("cv")))
-            .crossJoin(bounded_broadcast(
-                cent_arr, bound="one-row centroid array", max_rows=1))
-            .withColumn("cell_id",
-                        (-best.getField("nid")).cast("int"))
-            .filter(F.col("cell_id").isNotNull())
-            .drop("_cents", "_pnv"))
-
-
-def _probe_cells(rel: DataFrame, cent_arr: DataFrame,
-                 nprobe: int) -> DataFrame:
-    """`rel` (carrying a `cv` double-vector column) exploded to one
-    row per (row, probe cell): the row's `nprobe` nearest cells as
-    `cell_id`, replacing any prior cell column. The comparison-stage
-    half of multi-probe (VERDICT r10 #3): index/report semantics keep
-    the single primary assignment; only the candidate JOIN widens.
-    Same shuffle-free shape as assignment — a one-row broadcast
-    crossJoin scored row-locally, then an explode (×nprobe fan-out,
-    narrow). nprobe ≥ n_cells degrades gracefully to exhaustive cell
-    coverage (slice of a shorter array returns the whole array —
-    verified live)."""
-    from ._cache import cached_column
-    best = cached_column(
-        ("probe_cells_cv_normed", nprobe),
-        lambda: F.slice(F.array_sort(_cell_scores(F.col("cv"),
-                                                  F.col("_cents"),
-                                                  F.col("_pnv"))),
-                        -nprobe, nprobe))
-    return (rel.drop("cell_id")
-            .withColumn("_pnv", l2_norm(F.col("cv")))
-            .crossJoin(bounded_broadcast(cent_arr, bound="one-row centroid array", max_rows=1))
-            .withColumn(
-                "cell_id",
-                F.explode(F.transform(best, lambda s: -s.getField("nid"))))
-            .withColumn("cell_id", F.col("cell_id").cast("int"))
-            .drop("_cents", "_pnv"))
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
@@ -567,31 +535,17 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
     """
     from pyspark.sql import Window
 
-    from ._cache import cached_column
     cent_arr, assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                     train_iters)
     qv = as_double_vec(vec_col)
-    # ascending struct sort ⇒ the last `nprobe` entries are
-    # the best cells (ties to the smaller cell id via -id)
-    best = cached_column(
-        ("ivf_probe_best_normed", nprobe),
-        lambda: F.slice(F.array_sort(_cell_scores(F.col("qv"),
-                                                  F.col("_cents"),
-                                                  F.col("_nq"))),
-                        -nprobe, nprobe))
-    # norms-once: _nq computed below the crossJoin feeds BOTH the
-    # probe scoring and the candidate pair scoring (_cos_normed)
-    probes = (queries.select(F.col(id_col).alias("query_id"),
-                             qv.alias("qv"), l2_norm(qv).alias("_nq"))
-              .crossJoin(bounded_broadcast(
-        cent_arr, bound="one-row centroid array", max_rows=1))
-              .select("query_id", "qv", "_nq", best.alias("best"))
-              .select("query_id", "qv", "_nq",
-                      F.explode(F.transform(
-                          "best", lambda s: -s.getField("nid")))
-                      .alias("cell_id"))
-              .withColumn("cell_id", F.col("cell_id").cast("int")))
-    scored = (assigned.withColumn("_nc", l2_norm(F.col("cv")))
+    # norms-once: the query norm computed below the crossJoin feeds
+    # BOTH the probe scoring and the candidate pair scoring
+    probes = (_nearest_cells(
+        queries.select(F.col(id_col).alias("query_id"), qv.alias("cv"),
+                       l2_norm(qv).alias("nv")), cent_arr, nprobe)
+              .select("query_id", F.col("cv").alias("qv"),
+                      F.col("nv").alias("_nq"), "cell_id"))
+    scored = (assigned.withColumnRenamed("nv", "_nc")
               .join(bounded_broadcast(
         probes, bound="eval query set x nprobe (query-set-bounded)"),
         "cell_id")
@@ -707,7 +661,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
     split across two cells is never compared (the published recipe,
     ``nprobe=1``). ``nprobe > 1`` is the recall/cost dial (VERDICT
     r10 #3): the COMPARISON stage assigns each row to its ``nprobe``
-    nearest cells (`_probe_cells`), so a boundary pair is compared
+    nearest cells (`_nearest_cells`), so a boundary pair is compared
     whenever either member's probe set covers the other's primary
     cell — cost ×nprobe, still cell-bounded; index semantics (one
     primary cell per row, the persisted artifact) are unchanged. The
@@ -758,7 +712,7 @@ def _semdedup_sides(emb: DataFrame, id_col: str, vec_col: str,
     cent_arr, assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                     train_iters)
     c = assigned.select(F.col("neighbor_id").alias("_id"), "cv", "cell_id",
-                        l2_norm(F.col("cv")).alias("_n"))
+                        "nv")
     guard = n_rows is None or n_rows > max_cell
     widths = None
     if guard:
@@ -818,12 +772,12 @@ def _semdedup_clusters(emb: DataFrame, id_col: str, vec_col: str,
         cent_arr, _, c, widths, guard = _semdedup_sides(
             emb, id_col, vec_col, n_cells, train_iters, max_cell, n_rows)
         b = c.select("cell_id", F.col("_id").alias("id_b"),
-                     F.col("cv").alias("vb"), F.col("_n").alias("nb"))
+                     F.col("cv").alias("vb"), F.col("nv").alias("nb"))
         if nprobe <= 1:
             # one cell per row ⇒ each unordered pair meets exactly
             # once under id_a < id_b — no dedup shuffle
             a = c.select("cell_id", F.col("_id").alias("id_a"),
-                         F.col("cv").alias("va"), F.col("_n").alias("na"))
+                         F.col("cv").alias("va"), F.col("nv").alias("na"))
             pairs = (_semdedup_score(a, b, n_rows, threshold,
                                      F.col("id_a") < F.col("id_b"))
                      .select("id_a", "id_b"))
@@ -833,14 +787,13 @@ def _semdedup_clusters(emb: DataFrame, id_col: str, vec_col: str,
                                   n_rows, nprobe - 1)
         # EXTRA visits only: exactly the nprobe-th nearest cell —
         # ranks 1..nprobe-1 are the cached base level's coverage, so
-        # each recursion level pays ONE probe rank, not nprobe-1
-        # (review finding r12: filtering probe_cells(nprobe) by
-        # != primary re-scored ranks 2..nprobe-1 at every level).
+        # each recursion level joins ONE probe rank, not nprobe-1.
         # Both pair directions survive (a pair whose only coverage is
         # the larger-id member probing the smaller's primary cell
         # must too). Rows whose corpus has fewer than nprobe cells
         # have no nprobe-th cell and contribute no extras.
-        extra_src = _probe_rank_cell(c, cent_arr, nprobe)
+        extra_src = (_nearest_cells(c, cent_arr, nprobe)
+                     .filter(F.col("cell_rank") == nprobe))
         if guard:
             extra_src = extra_src.join(
                 bounded_broadcast(widths,
@@ -848,7 +801,7 @@ def _semdedup_clusters(emb: DataFrame, id_col: str, vec_col: str,
                 "cell_id")
         a = extra_src.select("cell_id", F.col("_id").alias("id_a"),
                              F.col("cv").alias("va"),
-                             F.col("_n").alias("na"))
+                             F.col("nv").alias("na"))
         extra = (_semdedup_score(a, b, n_rows, threshold,
                                  F.col("id_a") != F.col("id_b"))
                  .select(F.least("id_a", "id_b").alias("id_a"),
@@ -964,20 +917,20 @@ def _semantic_decontam_build(emb: DataFrame, eval_ids: DataFrame,
                                     train_iters)
     ev_ids = eval_ids.select(F.col(id_col).alias("_id"))
     c = assigned.select(F.col("neighbor_id").alias("_id"), "cv",
-                        "cell_id", l2_norm(F.col("cv")).alias("_n"))
+                        "cell_id", "nv")
     ev = (c.join(bounded_broadcast(
         ev_ids, bound="benchmark eval id set (caller-bounded)"),
         "_id", "left_semi")
           .select("cell_id", F.col("cv").alias("ve"),
-                  F.col("_n").alias("ne")))
+                  F.col("nv").alias("ne")))
     tr = c.join(bounded_broadcast(
         ev_ids, bound="benchmark eval id set (caller-bounded)"),
         "_id", "left_anti")
     # multi-probe widens only the train side of the COMPARISON join;
     # the eval side keeps its unique primary cell, so each (train,
     # eval) pair meets in at most one cell and count(*) stays exact
-    probe_tr = tr if nprobe <= 1 else _probe_cells(tr, cent_arr, nprobe)
-    cos = dot(F.col("cv"), F.col("ve")) / (F.col("_n") * F.col("ne"))
+    probe_tr = tr if nprobe <= 1 else _nearest_cells(tr, cent_arr, nprobe)
+    cos = dot(F.col("cv"), F.col("ve")) / (F.col("nv") * F.col("ne"))
     hits = (probe_tr.join(maybe_broadcast(ev, n_rows), "cell_id")
             .filter(cos >= threshold)
             .groupBy("_id")

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import (KMEANS_SCALE, _centroid_array,
-                                    assign_cells_scored, cell_fit_stats,
+                                    assign_cells, cell_fit_stats,
                                     drift_flags, kmeans_centroids)
 from .sinks import (EPOCH_COL, epoch_sink, read_epochs,
                     require_columns, write_epoch)
@@ -138,7 +138,8 @@ def vector_ingest_sink(index_table: str, drift_table: str,
     append `(_id, cell_id, fit_q, _v)` to `index_table`; (2) compare
     the batch's per-cell mean fit against the strictly-earlier index
     baseline and write the drift report
-    `(cell_id, n_index, mean_cos_index, n_new, mean_cos_new, retrain)`
+    `(cell_id, n_index, mean_cos_index, n_new, mean_cos_new, retrain,
+    sum_fit_new, q_version)`
     to `drift_table`. Both epoch-idempotent.
 
     CHECKPOINT-LIFETIME CONTRACT (ADVICE r8): tables are 1:1 with a
@@ -160,7 +161,6 @@ def vector_ingest_sink(index_table: str, drift_table: str,
     stats. A drift table created by the pre-partials sink fails the
     first write with a migration error (the line-dedup layout-guard
     discipline) — its rows cannot seed an exact baseline."""
-    scale = float(cos_scale)
 
     def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
@@ -182,14 +182,17 @@ def vector_ingest_sink(index_table: str, drift_table: str,
         # ONE materialized assignment pass per epoch — shared by the
         # index write and the drift aggregate (batch-sized by
         # definition, the neardup-sink localCheckpoint contract)
-        scored = (assign_cells_scored(batch_df, id_col, vec_col,
-                                      cent_arr, keep_vec=True)
-                  .withColumn("fit_q",
-                              F.floor(F.col("cell_cos") * F.lit(scale))
-                              .cast("long"))
-                  .drop("cell_cos")
-                  .withColumn("q_version", F.lit(version).cast("long"))
+        scored = (assign_cells(batch_df, id_col, vec_col, cent_arr)
+                  .select(F.col("neighbor_id").alias("_id"), "cell_id",
+                          F.floor(F.col("cell_cos") * F.lit(float(cos_scale)))
+                          .cast("long").alias("fit_q"),
+                          F.col("cv").alias("_v"),
+                          F.lit(version).cast("long").alias("q_version"))
                   .localCheckpoint(eager=True))
+        # the batch's exact per-cell partials: its own stats and the
+        # next epochs' baseline input
+        braw = (scored.groupBy("cell_id")
+                .agg(F.count("*").alias("n"), F.sum("fit_q").alias("s")))
         prior = read_epochs(spark, drift_table, before=epoch_id)
         if prior is not None:
             # baseline = the prior drift rows' exact per-cell partials,
@@ -199,36 +202,20 @@ def vector_ingest_sink(index_table: str, drift_table: str,
             # the full-history aggregate ⇒ same doubles ⇒ same flags.
             _check_drift_retention(spark, index_table, drift_table,
                                    version, epoch_id)
-            istat = (prior
-                     .filter((F.col("q_version") == int(version))
-                             & F.col("n_new").isNotNull())
-                     .groupBy("cell_id")
-                     .agg(F.sum("n_new").alias("n_index"),
-                          F.sum("sum_fit_new").alias("_s"))
-                     .select("cell_id", "n_index",
-                             ((F.col("_s").cast("double")
-                               / F.col("n_index"))
-                              / F.lit(scale)).alias("mean_cos_index")))
+            iraw = (prior
+                    .filter((F.col("q_version") == int(version))
+                            & F.col("n_new").isNotNull())
+                    .groupBy("cell_id")
+                    .agg(F.sum("n_new").alias("n"),
+                         F.sum("sum_fit_new").alias("s")))
         else:
-            istat = cell_fit_stats(
-                scored.select("cell_id", "fit_q").limit(0), "index",
-                cos_scale)
+            iraw = braw.limit(0)
         # the shared stats/flag definitions (operators.similarity) so
-        # the batch operator and this sink cannot silently diverge;
-        # the batch side additionally keeps its exact partial sum —
-        # the next epochs' baseline input
-        braw = (scored.groupBy("cell_id")
-                .agg(F.count("*").alias("n_new"),
-                     F.sum("fit_q").alias("sum_fit_new")))
-        bstat = braw.select(
-            "cell_id", "n_new",
-            ((F.col("sum_fit_new").cast("double") / F.col("n_new"))
-             / F.lit(scale)).alias("mean_cos_new"))
-        rep = (drift_flags(istat, bstat, cos_drop)
-               .join(braw.select("cell_id", "sum_fit_new"), "cell_id",
-                     "left")
+        # the batch operator and this sink cannot silently diverge
+        rep = (drift_flags(cell_fit_stats(iraw, "index", cos_scale),
+                           cell_fit_stats(braw, "new", cos_scale),
+                           cos_drop)
                .withColumn("q_version", F.lit(version).cast("long")))
-        return rep, scored.select("_id", "cell_id", "fit_q", "_v",
-                                  "q_version")
+        return rep, scored
 
     return epoch_sink(step, drift_table, index_table)

@@ -69,15 +69,43 @@ def test_no_plan_blowup_at_256_cells(spark, sf_dir):
 
 def test_probes_respect_nprobe_and_ties(spark, sf_dir):
     emb, queries = _emb_queries(spark, sf_dir)
-    out = similarity.ivf_topk(emb, queries, "vec_id", "embedding",
-                              k=3, n_cells=8, nprobe=3)
-    # every query returns at most k ranked neighbors, ranks contiguous
-    rows = out.collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r.rn)
-    for q, rns in by_q.items():
-        assert sorted(rns) == list(range(1, len(rns) + 1))
+    exact = similarity.brute_force_topk(emb, queries, "vec_id",
+                                        "embedding", k=3).collect()
+    for nprobe in (3, 12):
+        out = similarity.ivf_topk(emb, queries, "vec_id", "embedding",
+                                  k=3, n_cells=8, nprobe=nprobe)
+        # every query returns at most k ranked neighbors, ranks contiguous
+        rows = out.collect()
+        by_q = {}
+        for r in rows:
+            by_q.setdefault(r.query_id, []).append(r.rn)
+        for q, rns in by_q.items():
+            assert sorted(rns) == list(range(1, len(rns) + 1))
+    # a probe rank beyond the number of cells probes every cell: the
+    # answer is the brute-force one, not an empty probe set
+    assert rows and sorted(rows) == sorted(exact)
+
+
+def test_probe_rank_beyond_cells_adds_nothing(spark):
+    """Once nprobe covers every cell, widening it changes no answer:
+    a row has no third-nearest of two cells, so it contributes no
+    extra probe (not an out-of-bounds array index, and not an empty
+    probe set)."""
+    rows = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]),
+            (2, [0.9, 0.1, 0.0]), (3, [0.1, 0.9, 0.0]),
+            (4, [0.7, 0.7, 0.1])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    eval_ids = emb.filter("vec_id = 4").select("vec_id")
+
+    def run(nprobe):
+        kw = dict(n_cells=2, train_iters=0, threshold=0.5, nprobe=nprobe)
+        return (sorted(similarity.semantic_dedup(emb, **kw).collect()),
+                sorted(similarity.semantic_decontam(emb, eval_ids,
+                                                    **kw).collect()))
+
+    dedup2, decontam2 = run(2)
+    assert run(3) == (dedup2, decontam2)
+    assert sum(r.is_contaminated for r in decontam2) == 4
 
 
 def test_embed_near_dup_bucket_guard(spark):

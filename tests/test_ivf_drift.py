@@ -60,12 +60,12 @@ def test_subset_batch_stats_match_numpy_replay(spark, corpus_rows):
     clear_cache(spark)
     cent_arr, _ = similarity._ivf_index(corpus, "vec_id", "embedding",
                                         3, 2)
-    sc = similarity.assign_cells_scored(
+    sc = similarity.assign_cells(
         corpus, "vec_id", "embedding", cent_arr).collect()
     by_cell: dict[int, list] = {}
     for r in sc:
         by_cell.setdefault(r["cell_id"], []).append(
-            (r["_id"], r["cell_cos"]))
+            (r["neighbor_id"], r["cell_cos"]))
     for rep in rows:
         members = by_cell[rep["cell_id"]]
         assert rep["n_index"] == len(members)
@@ -118,3 +118,26 @@ def test_assignment_is_shuffle_free(spark, corpus_rows):
     import re
     for m in re.finditer(r"hashpartitioning\((\w+)", plan):
         assert m.group(1) == "cell_id", plan
+
+
+def test_only_the_batch_is_scored(spark, corpus_rows):
+    """The index side's fits come from the persisted `_ivf_index`
+    (`cell_cos`), so the report crossJoins the centroid array once —
+    for the batch. Lines under an InMemoryRelation are the cached
+    index's own build plan, not work this report runs."""
+    corpus = _df(spark, corpus_rows)
+    batch = corpus.filter(F.col("vec_id") % 5 == 0)
+    clear_cache(spark)
+    rep = similarity.ivf_drift_report(corpus, batch, "vec_id",
+                                      "embedding", n_cells=3,
+                                      train_iters=2)
+    plan = rep._jdf.queryExecution().executedPlan().toString()
+    live, cached_at = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cached_at is not None and depth > cached_at:
+            continue
+        cached_at = depth if "InMemoryRelation" in line else None
+        live.append(line)
+    assert sum("BroadcastNestedLoopJoin" in ln for ln in live) == 1, plan
+    assert any("InMemoryTableScan" in ln for ln in live), plan

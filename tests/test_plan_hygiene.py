@@ -174,6 +174,32 @@ def test_no_raw_persist():
         "cached_persist / cached_relation:\n" + "\n".join(offenders))
 
 
+def test_one_centroid_ranking_site():
+    """Rows are scored against the IVF centroid array in ONE function,
+    similarity._nearest_cells: assignment, probes and drift all go
+    through it. A second caller of _cell_scores, or a second crossJoin
+    of the centroid array, is a hand-kept copy of that path."""
+    import ast
+    cent = re.compile(r"\b(cent_arr|cents|_centroid_array)\b")
+    sites = []
+    for py in sorted(_PKG.rglob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        for top in ast.parse(py.read_text()).body:
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None)
+                if name == "_cell_scores" or (
+                        name == "crossJoin"
+                        and cent.search(ast.unparse(n.args[0]))):
+                    sites.append((rel, getattr(top, "name", "<module>")))
+    assert set(sites) == {("operators/similarity.py", "_nearest_cells")}, (
+        sites)
+    assert sites.count(sites[0]) == 2  # one _cell_scores, one crossJoin
+
+
 #: streaming/ lines that land data outside `sinks.epoch_sink` without
 #: writing a stream epoch partition.
 EPOCH_WRITE_OK = {

@@ -236,38 +236,6 @@ def test_ivf_pq_composition_prunes_and_recalls(spark):
         assert all(r["neighbor_id"] % 4 == qid % 4 for r in got)
 
 
-def test_ivf_pq_topk_public_composition(spark):
-    """The one-call IVF-PQ probe: set-wise (no per-query loop),
-    prunes to the query's coarse cell, recalls the planted cluster
-    mates, and matches the hand-wired composition above."""
-    from pyspark.sql import functions as F
-
-    rng = random.Random(5)
-    vecs = {}
-    for c in range(4):
-        center = [12.0 if d % 4 == c else 1.0 for d in range(8)]
-        for j in range(6):
-            vecs[j * 4 + c] = [x + rng.uniform(-0.2, 0.2) for x in center]
-    emb = spark.createDataFrame(sorted(vecs.items()),
-                                "vec_id long, embedding array<double>")
-    queries = emb.filter("vec_id < 4")
-    got = pq.ivf_pq_topk(emb, queries, "vec_id", "embedding", dim=8,
-                         n_cells=4, m=4, codebook_k=4,
-                         k_neighbors=3).collect()
-    assert len(got) == 12          # 4 queries × top-3
-    by_q: dict[int, list] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-        assert r["neighbor_id"] != r["query_id"]
-        # every neighbor comes from the query's own planted cluster
-        assert r["neighbor_id"] % 4 == r["query_id"] % 4
-    for q, rows in by_q.items():
-        assert sorted(r["rn"] for r in rows) == [1, 2, 3]
-        dists = [r["adc_dist"] for r in sorted(rows,
-                                               key=lambda r: r["rn"])]
-        assert dists == sorted(dists)
-
-
 def test_sq8_codes_bounded_and_reconstruction_tight(spark):
     """Codes live in [0,255]; per-dim extremes code to 0/255; the
     squared reconstruction error is bounded by d*(range/255)^2 (each

@@ -240,6 +240,36 @@ def test_vector_sink_rejects_prepartials_drift_table(spark, tables):
     assert "sum_fit_new" in msg and drift_table in msg
 
 
+def test_vector_sink_epoch_job_counts_are_pinned(spark, tables):
+    """Each epoch launches a fixed number of Spark jobs. Epoch 0 (no
+    baseline): the version read (2), the centroid array and the
+    checkpointed assignment (3), the drift bootstrap DDL (1), the
+    drift write (2), the index DDL and write (2). Epoch 1 adds the
+    retention check (2) and the baseline probe (1) and drops the two
+    DDLs; its drift write aggregates the baseline partials too (3).
+    A join of the batch partials back onto the report once made the
+    count race on adaptive execution's join re-planning (12 or 13)."""
+    index_table, drift_table, cents_table = tables
+    bootstrap, (aligned, _) = _batches()
+    schema = "vec_id long, embedding array<double>"
+    bootstrap_centroids(spark.createDataFrame(bootstrap, schema),
+                        cents_table, n_cells=3)
+    sink = vector_ingest_sink(index_table, drift_table, cents_table)
+    sc = spark.sparkContext
+    counts = []
+    for epoch, rows in enumerate((bootstrap, aligned)):
+        batch = spark.createDataFrame(rows, schema)
+        group = f"vector_sink_epoch_{epoch}"
+        sc.setJobGroup(group, group)
+        try:
+            sink(batch, epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [10, 12]
+
+
 @pytest.mark.slow
 def test_vacuum_epochs_enforces_retention(spark, tables):
     from snowflake_azure_etl_spark.streaming.sinks import vacuum_epochs
