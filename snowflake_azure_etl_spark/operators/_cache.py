@@ -255,41 +255,6 @@ def cached_build(spark: SparkSession, key: tuple,
     return cache[key]
 
 
-def concurrent_builds(thunks: "dict[str, Callable[[], object]]"
-                      ) -> "dict[str, object]":
-    """Run independent artifact builds as CONCURRENT Spark jobs —
-    the driver-side pattern for saturating a cluster with independent
-    maintenance work (q47's sketch families, q63's dedup dials).
-
-    `pyspark.InheritableThread`, not a raw ThreadPoolExecutor
-    (r12 review): under PySpark's default pinned-thread mode every
-    Python worker thread owns a paired JVM thread + py4j connection
-    that a raw executor thread leaks until finalizer GC;
-    InheritableThread releases it on join and inherits the session's
-    local properties. All shared memoized artifacts must be
-    pre-built (or rely on cached_build's per-key locks); exceptions
-    re-raise after every thread joins."""
-    from pyspark import InheritableThread
-    results: dict = {}
-    errors: dict = {}
-
-    def run(name, fn):
-        try:
-            results[name] = fn()
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errors[name] = e
-
-    threads = [InheritableThread(target=run, args=(n, f))
-               for n, f in thunks.items()]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise next(iter(errors.values()))
-    return results
-
-
 #: Module-scope cache of built Column EXPRESSIONS (VERDICT r10 #2).
 #: Constructing a deep higher-order expression tree (a 64-dim fold, an
 #: m-subspace ADC sum) costs hundreds of py4j round-trips — ~2 s per

@@ -405,34 +405,6 @@ def hashed_ngram_counts(df: DataFrame, id_col: str, text_col: str,
             .groupBy(id_col, "bucket").agg(F.count("*").alias("c")))
 
 
-def dsir_bucket_stats(df: DataFrame, target: DataFrame, id_col: str,
-                      text_col: str, n: int = 2,
-                      n_buckets: int = DSIR_BUCKETS,
-                      salt: str = "dsir",
-                      scale: int = PLOG2_SCALE) -> DataFrame:
-    """(bucket, lam): the DSIR importance model — per hashed bucket,
-    the fixed-point log2 likelihood ratio of the add-one-smoothed
-    TARGET model over the RAW model:
-
-        lam_b = plog2(n_T[b]+1) − plog2(N_T + B)
-              − plog2(n_R[b]+1) + plog2(N_R + B)
-
-    Exact longs end to end. Bounded by observed buckets (≤ B rows) —
-    the persistable artifact a pipeline trains once per (target,
-    corpus version) and broadcasts to every scoring pass. Buckets the
-    raw corpus never emits are irrelevant (no document references
-    them), so the relation is built on the raw bucket set with the
-    target counts left-joined."""
-    feats = hashed_ngram_counts(df, id_col, text_col, n, n_buckets,
-                                salt)
-    tgt = (hashed_ngram_counts(target, id_col, text_col, n, n_buckets,
-                               salt)
-           .groupBy("bucket").agg(F.sum("c").alias("_nt")))
-    return _dsir_stats(feats.groupBy("bucket")
-                       .agg(F.sum("c").alias("_nr")),
-                       tgt, n_buckets, scale)
-
-
 def dsir_feats_artifact(docs: DataFrame, id_col: str, text_col: str,
                         n: int = 2, n_buckets: int = DSIR_BUCKETS,
                         salt: str = "dsir") -> DataFrame:
@@ -448,31 +420,38 @@ def dsir_feats_artifact(docs: DataFrame, id_col: str, text_col: str,
         "dsir_feats")
 
 
-def dsir_bucket_stats_from(feats: DataFrame, target_ids: DataFrame,
-                           id_col: str,
-                           n_buckets: int = DSIR_BUCKETS,
-                           scale: int = PLOG2_SCALE,
-                           n_target: int | None = None) -> DataFrame:
-    """`dsir_bucket_stats` for the common case where the TARGET is a
-    subset of the raw corpus, over an already-built feature map
-    (`hashed_ngram_counts` output — the derived corpus representation
-    a pipeline computes once and shares between model training and
-    scoring): target counts come from a semi-join on `target_ids`, so
-    the corpus is featurized exactly once across the whole DSIR
-    pass. `target_ids` is corpus-proportional in the worst case, so
-    it broadcasts ONLY under the module-standard size attestation
-    (``n_target`` ≤ `plans.attest.BROADCAST_MAX_ROWS`); unattested, the
-    semi-join shuffles and AQE may still broadcast at runtime."""
+def dsir_bucket_stats(feats: DataFrame, target_ids: DataFrame,
+                      id_col: str,
+                      n_buckets: int = DSIR_BUCKETS,
+                      scale: int = PLOG2_SCALE,
+                      n_target: int | None = None) -> DataFrame:
+    """(bucket, lam): the DSIR importance model over a feature map
+    (`hashed_ngram_counts` output, built once and shared between model
+    training and scoring) — per hashed bucket, the fixed-point log2
+    likelihood ratio of the add-one-smoothed TARGET model over the RAW
+    model:
+
+        lam_b = plog2(n_T[b]+1) − plog2(N_T + B)
+              − plog2(n_R[b]+1) + plog2(N_R + B)
+
+    The RAW model is the whole feature map; the TARGET is the corpus
+    subset `target_ids`, counted through a semi-join, so the corpus is
+    featurized exactly once across the whole DSIR pass. Exact longs end
+    to end. Bounded by observed buckets (≤ B rows) — the persistable
+    artifact a pipeline trains once per (target, corpus version) and
+    broadcasts to every scoring pass. Buckets the raw corpus never
+    emits are irrelevant (no document references them), so the
+    relation is built on the raw bucket set with the target counts
+    left-joined. `target_ids` is corpus-proportional in the worst
+    case, so it broadcasts ONLY under the module-standard size
+    attestation (``n_target`` ≤ `plans.attest.BROADCAST_MAX_ROWS`);
+    unattested, the semi-join shuffles and AQE may still broadcast at
+    runtime."""
     raw = feats.groupBy("bucket").agg(F.sum("c").alias("_nr"))
     tgt = (feats.join(maybe_broadcast(target_ids.select(id_col),
                                        n_target),
                       id_col, "left_semi")
            .groupBy("bucket").agg(F.sum("c").alias("_nt")))
-    return _dsir_stats(raw, tgt, n_buckets, scale)
-
-
-def _dsir_stats(raw: DataFrame, tgt: DataFrame, n_buckets: int,
-                scale: int) -> DataFrame:
     joined = (raw.join(tgt, "bucket", "left")
               .select("bucket", "_nr",
                       F.coalesce("_nt", F.lit(0).cast("long"))
@@ -489,28 +468,18 @@ def _dsir_stats(raw: DataFrame, tgt: DataFrame, n_buckets: int,
             .select("bucket", lam.alias("lam")))
 
 
-def dsir_log_weights(df: DataFrame, stats: DataFrame, id_col: str,
-                     text_col: str, n: int = 2,
-                     n_buckets: int = DSIR_BUCKETS,
-                     salt: str = "dsir") -> DataFrame:
+def dsir_log_weights(ids: DataFrame, feats: DataFrame,
+                     stats: DataFrame, id_col: str,
+                     n_buckets: int = DSIR_BUCKETS) -> DataFrame:
     """(id_col, dsir_score): per-document importance score
-    Σ_b c_b·lam_b as an exact long (0 for docs with no full-width
-    gram — the neutral log-ratio). One narrow broadcast join of the
+    Σ_b c_b·lam_b as an exact long over the feature map `feats`. `ids`
+    is the id universe: docs with no full-width gram coalesce to score
+    0 (the neutral log-ratio). One narrow broadcast join of the
     feature map against the bucket stats, one doc-keyed aggregate;
-    documents never shuffle their text."""
-    feats = hashed_ngram_counts(df, id_col, text_col, n, n_buckets, salt)
-    return dsir_log_weights_from(df.select(id_col), feats, stats, id_col)
-
-
-def dsir_log_weights_from(ids: DataFrame, feats: DataFrame,
-                          stats: DataFrame, id_col: str,
-                          n_buckets: int = DSIR_BUCKETS) -> DataFrame:
-    """`dsir_log_weights` over an already-built feature map — the
-    share-one-featurization sibling of `dsir_bucket_stats_from`.
-    `ids` is the id universe (docs with no full-width gram coalesce
-    to score 0). ``n_buckets`` is the model's bucket count — the
-    broadcast attestation bound (review finding r12: a hardcoded
-    DSIR_BUCKETS bound was FALSE for callers with wider models)."""
+    documents never shuffle their text. ``n_buckets`` is the model's
+    bucket count — the broadcast attestation bound (review finding
+    r12: a hardcoded DSIR_BUCKETS bound was FALSE for callers with
+    wider models)."""
     scored = (feats.join(bounded_broadcast(
         stats, bound="DSIR bucket model (<= n_buckets rows)",
         max_rows=min(n_buckets, 1_000_000)), "bucket")
@@ -522,24 +491,23 @@ def dsir_log_weights_from(ids: DataFrame, feats: DataFrame,
                     .alias("dsir_score")))
 
 
-def dsir_resample(df: DataFrame, target: DataFrame, id_col: str,
-                  text_col: str, k: int, n: int = 2,
-                  n_buckets: int = DSIR_BUCKETS,
-                  salt: str = "dsir") -> DataFrame:
+def dsir_resample(ids: DataFrame, feats: DataFrame,
+                  target_ids: DataFrame, id_col: str, k: int,
+                  n_buckets: int = DSIR_BUCKETS) -> DataFrame:
     """Deterministic DSIR selection: the `k` highest-importance
-    documents (score desc, id asc — the engine's reproducibility
-    contract; the paper's Gumbel-noise variant needs ln(), which is
-    not engine-portable, so the deterministic top-k is the offered
-    path). Returns (id_col, dsir_score, dsir_rank).
+    documents of `ids` (score desc, id asc — the engine's
+    reproducibility contract; the paper's Gumbel-noise variant needs
+    ln(), which is not engine-portable, so the deterministic top-k is
+    the offered path), scored over the feature map `feats` against the
+    target subset `target_ids`. Returns (id_col, dsir_score,
+    dsir_rank).
 
     Selection is sort+limit — TakeOrderedAndProject, the distributed
     per-partition top-k merge, NOT a global rank window (which would
     drag every (id, score) row to one partition); the rank attaches
     after the limit, over k rows."""
-    stats = dsir_bucket_stats(df, target, id_col, text_col, n,
-                              n_buckets, salt)
-    top = (dsir_log_weights(df, stats, id_col, text_col, n,
-                            n_buckets, salt)
+    stats = dsir_bucket_stats(feats, target_ids, id_col, n_buckets)
+    top = (dsir_log_weights(ids, feats, stats, id_col, n_buckets)
            .orderBy(F.desc("dsir_score"), F.asc(id_col))
            .limit(k))
     w = Window.orderBy(F.desc("dsir_score"), F.asc(id_col))

@@ -177,41 +177,51 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
     `_kmeans_rounds`): `streaming.vectors.retrain_centroids` trains on
     a table whose analyzed plan stays the same while epochs land, so a
     plan-keyed entry would hand back the old quantizer."""
-    return _lloyd_rounds(emb, id_col, vec_col, n_cells, n_iter, scale)[-1]
+    return _lloyd_rounds(emb, id_col, vec_col, n_cells, n_iter,
+                         scale)[-1].select("cell_id", "ctv")
 
 
 def _lloyd_rounds(emb: DataFrame, id_col: str, vec_col: str,
                   n_cells: int, n_iter: int, scale: int) -> list[DataFrame]:
-    """[c0, c1, …, c_n_iter]: the seed centroids and every round's
-    (cell_id, ctv), each an eager quantizer-sized (k-row) checkpoint,
-    so a round never replays the rounds before it."""
+    """[c0, c1, …, c_n_iter]: the seed centroids (cell_id, ctv) and
+    every round's (cell_id, ctv, ssd, n) (see `_kmeans_update`), each
+    an eager quantizer-sized (k-row) checkpoint, so a round never
+    replays the rounds before it."""
     rounds = [_centroid_frame(emb, id_col, vec_col, n_cells)
               .localCheckpoint(eager=True)]
     for _ in range(n_iter):
         assigned = assign_cells(emb, id_col, vec_col,
                                 _centroid_array(rounds[-1]))
-        rounds.append(_kmeans_update(assigned, scale)
+        rounds.append(_kmeans_update(assigned, rounds[-1], scale)
                       .localCheckpoint(eager=True))
     return rounds
 
 
-def _kmeans_update(assigned: DataFrame, scale: int) -> DataFrame:
-    """One Lloyd's update step: (cell_id, ctv) fixed-point means over
-    the round's assignments (see `kmeans_centroids` for the plan
-    shape and the exactness contract)."""
-    ex = assigned.select(
-        "cell_id", F.posexplode("cv").alias("dim", "val"))
+def _kmeans_update(assigned: DataFrame, cents: DataFrame,
+                   scale: int) -> DataFrame:
+    """One Lloyd's update step: (cell_id, ctv, ssd, n) — the
+    fixed-point means over the round's assignments (see
+    `kmeans_centroids` for the plan shape and the exactness contract),
+    plus the round's inertia partials: per cell, the exact SSD `ssd`
+    of its `n` members to the centroid of `cents` they were assigned
+    against. Each vector's distance is computed once, below the
+    per-dimension explode, and summed on its dim-0 row only."""
+    ex = _sq_dists(assigned, cents, scale).select(
+        "cell_id", "d2", F.posexplode("cv").alias("dim", "val"))
     mean = ((F.col("s").cast("double") / F.col("n"))
             / F.lit(float(scale))).alias("v")
+    ctv = F.transform(
+        F.array_sort(F.collect_list(F.struct(F.col("dim"), mean))),
+        lambda st: st.getField("v"))
     return (ex.groupBy("cell_id", "dim")
             .agg(F.sum(F.floor(F.col("val") * scale).cast("long"))
                  .alias("s"),
-                 F.count("*").alias("n"))
+                 F.count("*").alias("n"),
+                 F.sum(F.when(F.col("dim") == 0, F.col("d2")))
+                 .alias("ssd"))
             .groupBy("cell_id")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("dim"), mean))),
-                lambda st: st.getField("v")).alias("ctv")))
+            .agg(ctv.alias("ctv"), F.sum("ssd").alias("ssd"),
+                 F.max("n").alias("n")))
 
 
 def _l2sq_cols(a: Column, b: Column) -> Column:
@@ -222,22 +232,27 @@ def _l2sq_cols(a: Column, b: Column) -> Column:
     return dot(a, a) - F.lit(2.0) * dot(a, b) + dot(b, b)
 
 
-def _inertia_row(it: int, assigned: DataFrame, cents: DataFrame,
-                 scale: int) -> DataFrame:
-    """ONE row (it, inertia, n_vec, mean_d2): the round's sum of
-    squared distances to the assigned centroids as an exact long
-    (per-vector floor(|v−c|²·scale) summed — order-invariant,
-    engine-portable), plus the derived mean. `cents` is the
-    quantizer-sized (cell_id, ctv) relation the round assigned
-    against."""
-    j = assigned.join(
-        bounded_broadcast(
-            cents, bound="quantizer centroids (<= n_cells rows)"),
-        "cell_id")
+def _sq_dists(assigned: DataFrame, cents: DataFrame,
+              scale: int) -> DataFrame:
+    """(cell_id, cv, d2): each assigned vector's squared distance to
+    its centroid in the quantizer-sized (cell_id, ctv, …) relation
+    `cents`, as the exact long floor(|v−c|²·scale) — order-invariant
+    and engine-portable, the term every inertia sums."""
     d2 = _l2sq_cols(F.col("cv"), F.col("ctv"))
-    return (j.agg(F.sum(F.floor(d2 * F.lit(float(scale)))
-                        .cast("long")).alias("inertia"),
-                  F.count("*").alias("n_vec"))
+    return (assigned.join(bounded_broadcast(
+                cents.select("cell_id", "ctv"),
+                bound="quantizer centroids (<= n_cells rows)"), "cell_id")
+            .select("cell_id", "cv",
+                    F.floor(d2 * F.lit(float(scale))).cast("long")
+                    .alias("d2")))
+
+
+def _inertia_row(it: int, parts: DataFrame, scale: int) -> DataFrame:
+    """ONE row (it, inertia, n_vec, mean_d2) from inertia partials
+    (ssd, n): the summed squared distances as an exact long, the
+    vector count and the derived mean."""
+    return (parts.agg(F.sum("ssd").alias("inertia"),
+                      F.sum("n").alias("n_vec"))
             .select(F.lit(it).cast("long").alias("it"), "inertia",
                     F.col("n_vec").cast("long").alias("n_vec"),
                     (F.col("inertia").cast("double")
@@ -253,17 +268,15 @@ def ivf_inertia_trajectory(emb: DataFrame, id_col: str, vec_col: str,
     exact fixed-point longs, one row per training round (SSD of the
     round's assignments to the centroids the round ENTERED with) plus
     the FINAL row — the shipped index's quantization error, computed
-    over `_ivf_index`'s already-materialized assignment (no extra
-    corpus pass for the index itself). Lloyd's guarantees the
+    over `_ivf_index`'s already-materialized assignment. The round
+    rows sum the partials each Lloyd's update already carries, so
+    only the final row reads the corpus. Lloyd's guarantees the
     per-round means minimize SSD for their assignments, so a healthy
     trajectory is non-increasing — the oracle replays every round, so
     a broken update (wrong flooring, dropped cells, a stale cache)
     hash-mismatches instead of silently degrading recall.
 
-    Session-cached like the index (tiny: train_iters+1 rows); the
-    per-round rows replay the training prefix once per session —
-    production pipelines emit these rows from the training job
-    itself."""
+    Session-cached like the index (tiny: train_iters+1 rows)."""
     from ._cache import cached_build, plan_key
     spark = emb.sparkSession
     key = ("ivf_inertia", plan_key(emb), id_col, vec_col, n_cells,
@@ -272,16 +285,15 @@ def ivf_inertia_trajectory(emb: DataFrame, id_col: str, vec_col: str,
     def build():
         rounds = _kmeans_rounds(emb, id_col, vec_col, n_cells,
                                 train_iters, scale)
-        legs = []
-        for it in range(1, train_iters + 1):
-            assigned = assign_cells(emb, id_col, vec_col,
-                                    _centroid_array(rounds[it - 1]))
-            legs.append(_inertia_row(it, assigned, rounds[it - 1],
-                                     scale))
         _, final_assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                        train_iters)
-        legs.append(_inertia_row(train_iters + 1, final_assigned,
-                                 rounds[train_iters], scale))
+        final = _sq_dists(final_assigned, rounds[train_iters], scale)
+        legs = [_inertia_row(it, rounds[it], scale)
+                for it in range(1, train_iters + 1)]
+        legs.append(_inertia_row(
+            train_iters + 1,
+            final.select(F.col("d2").alias("ssd"),
+                         F.lit(1).cast("long").alias("n")), scale))
         out = legs[0]
         for leg in legs[1:]:
             out = out.unionByName(leg)

@@ -141,14 +141,14 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     each micro-batch is featurized once (`hashed_ngram_counts` — the
     only corpus-side work, row-local until the per-doc bucket
     aggregate), scored against the PERSISTED importance model
-    (`model_table`, the (bucket, lam) artifact `dsir_bucket_stats*`
+    (`model_table`, the (bucket, lam) artifact `dsir_bucket_stats`
     trains once per (target, corpus version) — the same shared
     artifact q50/q47 read), and lands in `scored_table` with its
     `dsir_score` column via `sinks.epoch_sink` (replay-safe).
 
     Scoring is stateless across batches (every doc is judged against
     the same fixed model), so the stream output equals the batch
-    `dsir_log_weights_from` over the concatenated stream — pinned in
+    `dsir_log_weights` over the concatenated stream — pinned in
     tests/test_streaming_ingest.py. ``keep_only=True`` additionally
     applies the row-local selection decision (score > 0: more
     target-like than raw) at ingest — the filter-at-the-door shape.
@@ -156,7 +156,7 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     Scale: the model is ≤ n_buckets rows (bounded broadcast via the
     scoring operator's attestation); per epoch only the batch pays
     gram hashing; nothing accumulates driver- or executor-side."""
-    from ..operators.sampling import (DSIR_BUCKETS, dsir_log_weights_from,
+    from ..operators.sampling import (DSIR_BUCKETS, dsir_log_weights,
                                       hashed_ngram_counts)
     from .sinks import epoch_sink
 
@@ -166,9 +166,8 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
         stats = batch_df.sparkSession.table(model_table)
         feats = hashed_ngram_counts(batch_df, id_col, text_col, n,
                                     buckets, salt)
-        scored = dsir_log_weights_from(batch_df.select(id_col), feats,
-                                       stats, id_col,
-                                       n_buckets=buckets)
+        scored = dsir_log_weights(batch_df.select(id_col), feats,
+                                  stats, id_col, n_buckets=buckets)
         out = batch_df.join(scored, id_col)
         if keep_only:
             out = out.filter(F.col("dsir_score") > 0)

@@ -6,6 +6,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -54,3 +55,55 @@ def query(name: str, covers: tuple[str, ...] | list[str],
             fn=run, oracle=oracle, raw=fn, prepared=prepared)
         return fn
     return deco
+
+
+def union_legs(tag_col: str,
+               legs: dict[str, DataFrame | Callable[[], DataFrame]]
+               ) -> DataFrame:
+    """The one leg assembly of a multi-leg query: every leg named by
+    its tag, built, tagged and unioned here.
+
+    A leg is a DataFrame or a zero-argument build. The builds run as
+    CONCURRENT Spark jobs — a leg whose build runs eager actions
+    (checkpoints, training rounds, table writes) overlaps its
+    scheduling gaps with the other legs' tasks, so a cold query pays
+    its slowest leg rather than the sum. Each build runs on a
+    `pyspark.InheritableThread`, not a raw executor thread: under
+    PySpark's pinned-thread mode every Python thread owns a JVM thread
+    and py4j connection that InheritableThread releases on join, and
+    it inherits the caller's local properties, so a job launched in a
+    leg carries the caller's job group. Legs may share memoized
+    artifacts: `_cache`'s per-key build locks make the first leg to
+    touch one build it while the others wait. A failing build
+    re-raises after every thread has joined.
+
+    Each leg gets its tag as the leading `tag_col` column, except a leg
+    that already carries `tag_col` (a multi-row leg that tags its own
+    rows, or a nested union of legs), which passes through unchanged.
+    The legs union by name in dict order."""
+    from pyspark import InheritableThread
+    built: dict = {}
+    errors: list = []
+
+    def run(tag: str, build: Callable[[], DataFrame]) -> None:
+        try:
+            built[tag] = build()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [InheritableThread(target=run, args=(tag, leg))
+               for tag, leg in legs.items()
+               if not isinstance(leg, DataFrame)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    out = None
+    for tag, leg in legs.items():
+        df = built.get(tag, leg)
+        if tag_col not in df.columns:
+            df = df.select(F.lit(tag).alias(tag_col), "*")
+        out = df if out is None else out.unionByName(df)
+    return out

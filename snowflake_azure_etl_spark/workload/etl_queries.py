@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..sources.registry import STAR_TABLES, load_tables, register_star_views
 from ..warehouse import manifest, star_build
-from ._registry import query
+from ._registry import query, union_legs
 
 
 _DQ_ORACLE = """
@@ -98,7 +98,7 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                      Rule("in_range", "l_discount", lo=0.0, hi=0.05)],
     }
     from ..operators._cache import cached_persist
-    legs = []
+    legs = {}
     for name, df in dfs.items():
         keys = manifest.KEY_COLUMNS[name]
         rules = dq_specs.get(name, [])
@@ -128,12 +128,9 @@ def q26_stage_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("status"),
             F.lit(None).cast("long").alias("fp"))
             for i, rn in enumerate(rnames)]
-        legs.append(one.select(F.explode(F.array(*rows)).alias("e"))
-                    .select("e.entity", "e.n_rows", "e.status", "e.fp"))
-    out = legs[0]
-    for c in legs[1:]:
-        out = out.unionByName(c)
-    return out
+        legs[name] = (one.select(F.explode(F.array(*rows)).alias("e"))
+                      .select("e.entity", "e.n_rows", "e.status", "e.fp"))
+    return union_legs("entity", legs)
 
 
 _FACT_ORACLE = """
@@ -366,7 +363,6 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates; the planted every-77th rows catch it). Deletes carry the
     last known values, inserts/updates the new — every op row checked
     against a DuckDB full-outer IS-DISTINCT-FROM mirror."""
-    from ..operators._cache import concurrent_builds
     from ..plans.surrogate import with_surrogate_key
     from ..warehouse.incremental import append_new_members
     from ..warehouse import ddl, scd
@@ -375,13 +371,10 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl.create_database(spark, db)
 
     # The append and SCD2 legs are independent write pipelines into
-    # DIFFERENT tables — each is a chain of driver-blocking actions
-    # (drop, seed write, max-key probe, accounting counts, append
-    # write). Run them as concurrent jobs (guide §2.6 / the q47
-    # concurrent_builds pattern) so one leg's scheduling gaps backfill
-    # with the other's tasks: the query's serve cost is the slower
-    # leg, not the sum (r16; measured ~2.1 s sequential at sf0.1 with
-    # ~0.2 s of executor work — pure action latency).
+    # DIFFERENT tables, each a chain of driver-blocking actions (drop,
+    # seed write, max-key probe, accounting counts, append write), so
+    # they build concurrently in union_legs (r16: ~2.1 s sequential at
+    # sf0.1 with ~0.2 s of executor work — pure action latency).
     def build_append_leg():
         c = load_tables(spark, sf_dir, ("customer",))["customer"]
         members = c.select(F.col("c_custkey").alias("custkey"))
@@ -400,7 +393,6 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"inserted and skipped rows, got inserted={rep.inserted} "
                 f"skipped={rep.skipped}")
         return spark.table(table).select(
-            F.lit("append").alias("leg"),
             F.col("dim_customer_id").alias("surrogate_id"),
             F.col("custkey").alias("business_key"),
             F.lit(None).cast("string").alias("attr"),
@@ -430,7 +422,6 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").format("parquet") \
             .saveAsTable(scd_table)
         return spark.table(scd_table).select(
-            F.lit("scd2").alias("leg"),
             F.col("k").alias("surrogate_id"),
             F.col("bk").alias("business_key"),
             F.col("segment").alias("attr"),
@@ -438,9 +429,6 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("phase"),
             "valid_from", "valid_to", "is_current")
 
-    legs = concurrent_builds({"append": build_append_leg,
-                              "scd2": build_scd2_leg})
-    append_leg, scd2_leg = legs["append"], legs["scd2"]
     s = load_tables(spark, sf_dir, ("supplier",))["supplier"]
 
     from ..warehouse import cdc
@@ -458,7 +446,6 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 F.lit("born").alias("segment"))))
     diff = cdc.snapshot_diff(old, new, ["bk"], ["segment"])
     cdc_leg = diff.select(
-        F.lit("cdc").alias("leg"),
         F.lit(None).cast("bigint").alias("surrogate_id"),
         F.col("bk").alias("business_key"),
         F.col("segment").alias("attr"),
@@ -466,7 +453,8 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("int").alias("valid_from"),
         F.lit(None).cast("int").alias("valid_to"),
         F.lit(True).alias("is_current"))
-    return append_leg.unionByName(scd2_leg).unionByName(cdc_leg)
+    return union_legs("leg", {"append": build_append_leg,
+                              "scd2": build_scd2_leg, "cdc": cdc_leg})
 
 
 @query(
@@ -509,10 +497,6 @@ def q29_warehouse_rowcounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (incl. the channel⋈channelcategory Dim_Channel, J1) and all 3 facts
     (incl. Fact_SRCSalesTarget)."""
     star = star_build.build_star(spark, sf_dir)
-    counts = [df.agg(F.count("*").alias("n_rows"))
-              .select(F.lit(name).alias("table_name"), "n_rows")
-              for name, df in star.items()]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out
+    return union_legs("table_name", {
+        name: df.agg(F.count("*").alias("n_rows"))
+        for name, df in star.items()})

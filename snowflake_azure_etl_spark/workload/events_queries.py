@@ -20,7 +20,7 @@ from ..plans.attest import bounded_broadcast
 
 from ..functions.scalar import dec
 from ..sources.registry import load_tables
-from ._registry import query
+from ._registry import query, union_legs
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -415,8 +415,7 @@ def q41_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding = (e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
                .agg(F.count("*").alias("n_events"),
                     F.sum(dec("value")).cast("double").alias("total_value"))
-               .select(F.lit("sliding_1h_15m").alias("grain"),
-                       F.date_format("w.start", TS_FMT).alias("bucket_start"),
+               .select(F.date_format("w.start", TS_FMT).alias("bucket_start"),
                        "n_events", "total_value"))
     # the hourly rollup is shared by the 'hour' grain leg and the
     # anomaly leg (the continuous-aggregate pattern the docstring
@@ -446,23 +445,21 @@ def q41_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("n").alias("n_events"), z.alias("z"))
                .orderBy(F.abs(F.col("z")).desc(), F.asc("bucket_start"))
                .limit(5)
-               .select(F.lit("anomaly_hour").alias("grain"),
-                       "bucket_start", "n_events",
+               .select("bucket_start", "n_events",
                        F.col("z").alias("total_value")))
-    out = sliding.unionByName(anomaly).unionByName(
-        hourly_full.select(F.lit("hour").alias("grain"),
-                           F.date_format("bucket", TS_FMT)
-                           .alias("bucket_start"),
-                           "n_events", "total_value"))
-    for grain in ("day", "month"):
-        out = out.unionByName(
+
+    def rollup(rel: DataFrame) -> DataFrame:
+        return rel.select(F.date_format("bucket", TS_FMT)
+                          .alias("bucket_start"), "n_events", "total_value")
+
+    return union_legs("grain", {
+        "sliding_1h_15m": sliding, "anomaly_hour": anomaly,
+        "hour": rollup(hourly_full),
+        **{grain: rollup(
             e.groupBy(F.date_trunc(grain, "ts").alias("bucket"))
             .agg(F.count("*").alias("n_events"),
-                 F.sum(dec("value")).cast("double").alias("total_value"))
-            .select(F.lit(grain).alias("grain"),
-                    F.date_format("bucket", TS_FMT).alias("bucket_start"),
-                    "n_events", "total_value"))
-    return out
+                 F.sum(dec("value")).cast("double").alias("total_value")))
+           for grain in ("day", "month")}})
 
 
 @query(
@@ -592,9 +589,7 @@ def q43_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, ("events",))["events"]
     k = F.get_json_object("props", "$.k").cast("int")
     props_leg = (e.groupBy("event_type", (k % 10).alias("k_mod"))
-                 .agg(F.count("*").alias("n_events"))
-                 .select(F.lit("props").alias("leg"), "event_type",
-                         "k_mod", "n_events"))
+                 .agg(F.count("*").alias("n_events")))
     from ..operators.graph import pagerank
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -608,8 +603,7 @@ def q43_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the re-analysis they save (the BPE cadence trade, measured);
     # deep/convergence runs keep the default per-round cut
     pr_leg = (pagerank(edges, n_iter=_PR_N_ITER, checkpoint_every=0)
-              .select(F.lit("pagerank").alias("leg"),
-                      F.col("node").alias("event_type"),
+              .select(F.col("node").alias("event_type"),
                       F.lit(None).cast("int").alias("k_mod"),
                       F.col("rank").alias("n_events")))
-    return props_leg.unionByName(pr_leg)
+    return union_legs("leg", {"props": props_leg, "pagerank": pr_leg})

@@ -17,7 +17,7 @@ from ..plans.attest import bounded_broadcast
 from ..functions.scalar import dec
 from ..operators import asof
 from ..sources.registry import load_tables
-from ._registry import query
+from ._registry import query, union_legs
 from .pipeline_queries import _DSIR_CTES
 
 
@@ -94,7 +94,6 @@ def q44_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = asof.asof_join_backward(purchases, views, ["user_id"],
                                      "ts", "ts")
     asof_leg = joined.select(
-        F.lit("asof").alias("leg"),
         "event_id", "user_id",
         _epoch_us(joined, "ts").alias("purchase_ts_us"),
         _epoch_us(joined, "asof_ts").alias("view_ts_us"),
@@ -111,13 +110,12 @@ def q44_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = obs.select("user_id", _epoch_us(obs, "ts").alias("tsu"), "val")
     gap_leg = (resample_ffill(obs, ["user_id"], "tsu", "val",
                               _GAPFILL_STEP_US)
-               .select(F.lit("gapfill").alias("leg"),
-                       F.lit(None).cast("long").alias("event_id"),
+               .select(F.lit(None).cast("long").alias("event_id"),
                        "user_id",
                        F.col("grid_ts").alias("purchase_ts_us"),
                        F.col("src_ts").alias("view_ts_us"),
                        F.col("value").alias("view_value")))
-    return asof_leg.unionByName(gap_leg)
+    return union_legs("leg", {"asof": asof_leg, "gapfill": gap_leg})
 
 
 @query(
@@ -666,7 +664,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     frac = (F.conv(F.substring(kth, 1, 8), 16, 10).cast("double")
             / F.lit(4294967296.0))
     kmv_leg = (merged.filter(F.size("mins") >= KMV_K)
-               .select(F.lit("kmv_users").alias("leg"), "event_type",
+               .select("event_type",
                        F.col("n_exact").cast("long").alias("exact_n"),
                        (F.lit(float(KMV_K - 1)) / frac).alias("estimate")))
     c = load_tables(spark, sf_dir, ("customer",))["customer"]
@@ -680,7 +678,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_partials(nations, ["event_type", "day"], "c_nationkey")
         .coalesce(1), "q47_hll_daily")
     hll_leg = (hll_rollup(daily, ["event_type"])
-               .select(F.lit("hll_nations").alias("leg"), "event_type",
+               .select("event_type",
                        F.col("hll_estimate").cast("long").alias("exact_n"),
                        F.col("hll_estimate").cast("double")
                        .alias("estimate")))
@@ -728,8 +726,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms = cms_build(exact, "k", weight="n")
         heavy = (cms_estimate(cms, exact, "k")
                  .filter(F.col("cms_estimate") >= CMS_HEAVY_MIN)
-                 .select(F.lit("cms_heavy").alias("leg"),
-                         F.col("k").alias("event_type"),
+                 .select(F.col("k").alias("event_type"),
                          F.col("n").cast("long").alias("exact_n"),
                          F.col("cms_estimate").cast("double")
                          .alias("estimate")))
@@ -738,15 +735,15 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = cms_merge(partials.select("j", "bucket", "cnt"))
         rollup = (merged.join(cms.withColumnRenamed("cnt", "_full"),
                               ["j", "bucket"], "full")
-                  .select(F.lit("cms_rollup").alias("leg"),
-                          F.concat(F.col("j").cast("string"), F.lit(":"),
+                  .select(F.concat(F.col("j").cast("string"), F.lit(":"),
                                    F.col("bucket").cast("string"))
                           .alias("event_type"),
                           F.coalesce(F.col("_full"), F.lit(0).cast("long"))
                           .alias("exact_n"),
                           F.coalesce(F.col("cnt"), F.lit(0).cast("long"))
                           .cast("double").alias("estimate")))
-        return heavy.unionByName(rollup).coalesce(1)
+        return union_legs("leg", {"cms_heavy": heavy,
+                                  "cms_rollup": rollup}).coalesce(1)
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     # r12 (VERDICT r11 #4): ONE documents feature base for the three
@@ -767,14 +764,13 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.lit(1.0)).alias("_f3"),
                     (quality_score("text") >= F.lit(0.5)).alias("_lbl")),
         "q47_doc_feats")
-    def build_mix_leg():
-        return (mixture_rates(dbase.select("source", "nt"),
-                              "source", "nt")
-                .select(F.lit("mix").alias("leg"),
-                        F.col("source").alias("event_type"),
-                        F.col("toks").cast("long").alias("exact_n"),
-                        F.col("rate").alias("estimate"))
-                .coalesce(1))
+    mix_leg = cached_persist(
+        spark, ("q47_mix_leg", plan_key(docs)),
+        lambda: mixture_rates(dbase.select("source", "nt"), "source", "nt")
+        .select(F.col("source").alias("event_type"),
+                F.col("toks").cast("long").alias("exact_n"),
+                F.col("rate").alias("estimate"))
+        .coalesce(1))
 
     # mix_applied leg (r10): the APPLICATION of the mixture plan —
     # apply_mixture keeps each source's docs at its rate via the
@@ -793,8 +789,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (kept.groupBy("source")
                 .agg(F.count("*").alias("_n"),
                      F.sum("nt").alias("_t"))
-                .select(F.lit("mix_applied").alias("leg"),
-                        F.col("source").alias("event_type"),
+                .select(F.col("source").alias("event_type"),
                         F.col("_n").cast("long").alias("exact_n"),
                         F.col("_t").cast("double").alias("estimate"))
                 .coalesce(1))
@@ -816,16 +811,14 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_leg = (hist.withColumn("cum", F.sum("cnt").over(wb))
                 .crossJoin(bounded_broadcast(
                     n_rel, bound="one-row histogram total", max_rows=1))
-                .select(F.lit("hist_value").alias("leg"),
-                        F.col("bin").cast("string").alias("event_type"),
+                .select(F.col("bin").cast("string").alias("event_type"),
                         F.col("cnt").cast("long").alias("exact_n"),
                         (F.col("cum").cast("double")
                          / F.col("n").cast("double")).alias("estimate")))
     lbl = (F.when(F.col("p") == 0.5, "p50")
            .when(F.col("p") == 0.9, "p90").otherwise("p99"))
     q_leg = (histogram_quantiles(hist, 0.0, 1024.0, [0.5, 0.9, 0.99])
-             .select(F.lit("hist_quantile").alias("leg"),
-                     lbl.alias("event_type"),
+             .select(lbl.alias("event_type"),
                      F.lit(None).cast("long").alias("exact_n"),
                      F.col("est").alias("estimate")))
     # grouped quantile leg (r10, VERDICT r9 #7): per-event-type value
@@ -837,8 +830,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     glbl = F.when(F.col("p") == 0.5, "p50").otherwise("p95")
     gq_leg = (histogram_quantiles(ghist, 0.0, 1024.0, [0.5, 0.95],
                                   group_cols=("event_type",))
-              .select(F.lit("hist_group_quantile").alias("leg"),
-                      F.concat(F.col("event_type"), F.lit(":"), glbl)
+              .select(F.concat(F.col("event_type"), F.lit(":"), glbl)
                       .alias("event_type"),
                       F.lit(None).cast("long").alias("exact_n"),
                       F.col("est").alias("estimate")))
@@ -872,8 +864,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                      .alias("_exact"),
                      F.sum(F.when(F.col("bloom_pass"), F.col("_n"))
                            .otherwise(0)).alias("_est"))
-                .select(F.lit("bloom_prune").alias("leg"),
-                        F.col("l_returnflag").alias("event_type"),
+                .select(F.col("l_returnflag").alias("event_type"),
                         F.col("_exact").cast("long").alias("exact_n"),
                         F.col("_est").cast("double").alias("estimate"))
                 .coalesce(1))
@@ -896,8 +887,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = bloom_merge(partials.select("word_idx", "word"))
         return (merged.join(bloom.withColumnRenamed("word", "_full"),
                             ["word_idx"], "full")
-                .select(F.lit("bloom_rollup").alias("leg"),
-                        F.col("word_idx").cast("string")
+                .select(F.col("word_idx").cast("string")
                         .alias("event_type"),
                         F.coalesce(F.col("_full"), F.lit(0).cast("long"))
                         .alias("exact_n"),
@@ -937,8 +927,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       "doc_id")
                 .groupBy("source", "qb").agg(F.count("*").alias("_kn")))
         return (rates.join(kept, ["source", "qb"], "left")
-                .select(F.lit("qmix").alias("leg"),
-                        F.concat(F.col("source"), F.lit(":"),
+                .select(F.concat(F.col("source"), F.lit(":"),
                                  F.col("qb").cast("string"))
                         .alias("event_type"),
                         F.coalesce(F.col("_kn"), F.lit(0).cast("long"))
@@ -948,73 +937,48 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
     # dsir_topk leg (r11, X-SAMPLE-DSIR-TOPK): the SELECTION half of
-    # DSIR — the k most target-like documents by the exact-integer
-    # importance score, via sort+limit (TakeOrderedAndProject, never a
-    # global rank window; ranks attach over the k survivors). The
-    # feature map is the session artifact SHARED with q50's scoring
-    # legs (sampling.dsir_feats_artifact — one corpus featurization
-    # across both queries), and the oracle ranks the identical scores.
+    # DSIR — sampling.dsir_resample's k most target-like documents by
+    # the exact-integer importance score. The feature map is the
+    # session artifact SHARED with q50's scoring legs
+    # (sampling.dsir_feats_artifact — one corpus featurization across
+    # both queries), and the oracle ranks the identical scores.
     def build_dsir_topk_leg():
-        from ..operators.sampling import (dsir_bucket_stats_from,
-                                          dsir_feats_artifact,
-                                          dsir_log_weights_from)
-        feats = dsir_feats_artifact(docs, "doc_id", "text")
-        stats = dsir_bucket_stats_from(
-            feats, docs.filter(F.col("lang") == "en").select("doc_id"),
-            "doc_id")
-        top = (dsir_log_weights_from(docs.select("doc_id"), feats,
-                                     stats, "doc_id")
-               .orderBy(F.desc("dsir_score"), F.asc("doc_id"))
-               .limit(5))
-        w = Window.orderBy(F.desc("dsir_score"), F.asc("doc_id"))
-        return (top.withColumn("rk", F.row_number().over(w))
-                .select(F.lit("dsir_topk").alias("leg"),
-                        F.col("doc_id").cast("string")
-                        .alias("event_type"),
-                        F.col("dsir_score").cast("long")
-                        .alias("exact_n"),
-                        F.col("rk").cast("double").alias("estimate"))
+        from ..operators.sampling import dsir_feats_artifact, dsir_resample
+        top = dsir_resample(
+            docs.select("doc_id"),
+            dsir_feats_artifact(docs, "doc_id", "text"),
+            docs.filter(F.col("lang") == "en").select("doc_id"),
+            "doc_id", k=5)
+        return (top.select(F.col("doc_id").cast("string")
+                           .alias("event_type"),
+                           F.col("dsir_score").cast("long")
+                           .alias("exact_n"),
+                           F.col("dsir_rank").cast("double")
+                           .alias("estimate"))
                 .coalesce(1))
 
-    # r12: the six independent leg ARTIFACTS build as CONCURRENT
-    # Spark jobs (two dependency waves — mix_applied reads the mix
-    # leg's rates) instead of serially on the driver: the eager
-    # builds (the CMS epoch checkpoint, the qmix GD training rounds)
-    # were the cold sweep's serial driver-side tail, and independent
-    # job submission is exactly how a production driver saturates a
-    # 1000-executor cluster with independent maintenance jobs. Warm
-    # invocations hit the session cache inside each thread at ~0
-    # cost. Shared bases (ebase/dbase/the DSIR feature artifact) are
-    # pre-registered above; cached_build's per-key locks make any
-    # residual shared-artifact touch safe (_cache.concurrent_builds).
-    from ..operators._cache import concurrent_builds
-    legs = concurrent_builds({
-        "cms": lambda: cached_persist(
-            spark, ("q47_cms_leg", plan_key(e)), build_cms_leg),
-        "mix": lambda: cached_persist(
-            spark, ("q47_mix_leg", plan_key(docs)), build_mix_leg),
-        "bloom": lambda: cached_persist(
+    # the cached leg artifacts build concurrently in union_legs (the
+    # CMS epoch checkpoint and the qmix GD training rounds run eager
+    # jobs while they build); warm invocations hit the session cache
+    # inside their thread at ~0 cost.
+    return union_legs("leg", {
+        "kmv_users": kmv_leg, "hll_nations": hll_leg, "mix": mix_leg,
+        "mix_applied": lambda: cached_persist(
+            spark, ("q47_mix_applied", plan_key(docs)), build_mix_applied),
+        "hist_value": hist_leg, "hist_quantile": q_leg,
+        "hist_group_quantile": gq_leg,
+        "bloom_prune": lambda: cached_persist(
             spark, ("q47_bloom_leg", plan_key(li)), build_bloom_leg),
         "bloom_rollup": lambda: cached_persist(
             spark, ("q47_bloom_rollup", plan_key(mem)),
             build_bloom_rollup_leg),
+        "cms": lambda: cached_persist(
+            spark, ("q47_cms_leg", plan_key(e)), build_cms_leg),
         "qmix": lambda: cached_persist(
             spark, ("q47_qmix_leg", plan_key(docs)), build_qmix_leg),
-        "dsir": lambda: cached_persist(
+        "dsir_topk": lambda: cached_persist(
             spark, ("q47_dsir_topk", plan_key(docs)), build_dsir_topk_leg),
     })
-    mix_leg = legs["mix"]
-    mix_applied_leg = cached_persist(
-        spark, ("q47_mix_applied", plan_key(docs)), build_mix_applied)
-    cms_leg, bloom_leg = legs["cms"], legs["bloom"]
-    bloom_rollup_leg = legs["bloom_rollup"]
-    qmix_leg, dsir_topk_leg = legs["qmix"], legs["dsir"]
-    return (kmv_leg.unionByName(hll_leg).unionByName(mix_leg)
-            .unionByName(mix_applied_leg)
-            .unionByName(hist_leg).unionByName(q_leg)
-            .unionByName(gq_leg).unionByName(bloom_leg)
-            .unionByName(bloom_rollup_leg).unionByName(cms_leg)
-            .unionByName(qmix_leg).unionByName(dsir_topk_leg))
 
 
 @query(
@@ -1130,16 +1094,12 @@ def q37_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                            F.col("n_name").alias("dim2"),
                            "c_custkey", "c_acctbal")
                   .rollup("dim1", "dim2")
-                  .agg(gid.alias("gid"), *measures())
-                  .select(F.lit("rollup").alias("scope"), "dim1", "dim2",
-                          "gid", "n_customers", "total_balance"))
+                  .agg(gid.alias("gid"), *measures()))
     cube_leg = (j.select(F.col("c_mktsegment").alias("dim1"),
                          F.col("r_name").alias("dim2"),
                          "c_custkey", "c_acctbal")
                 .cube("dim1", "dim2")
-                .agg(gid.alias("gid"), *measures())
-                .select(F.lit("cube").alias("scope"), "dim1", "dim2",
-                        "gid", "n_customers", "total_balance"))
+                .agg(gid.alias("gid"), *measures()))
     # explicit GROUPING SETS (X-GROUPING-SETS): the per-dimension
     # totals + grand total WITHOUT the cross cells — the shape neither
     # rollup nor cube expresses; same single Expand + hash aggregate,
@@ -1148,10 +1108,9 @@ def q37_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("r_name").alias("dim2"),
                          "c_custkey", "c_acctbal")
                 .groupingSets([["dim1"], ["dim2"], []], "dim1", "dim2")
-                .agg(gid.alias("gid"), *measures())
-                .select(F.lit("sets").alias("scope"), "dim1", "dim2",
-                        "gid", "n_customers", "total_balance"))
-    return rollup_leg.unionByName(cube_leg).unionByName(sets_leg)
+                .agg(gid.alias("gid"), *measures()))
+    return union_legs("scope", {"rollup": rollup_leg, "cube": cube_leg,
+                                "sets": sets_leg})
 
 
 @query(
@@ -1183,13 +1142,10 @@ def q38_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_n = (t["nation"].join(
         t["supplier"].select(F.col("s_nationkey").alias("n_nationkey"))
         .distinct(), "n_nationkey", "leftsemi").select("n_nationkey"))
-    both = (cust_n.intersect(supp_n)
-            .select(F.lit("both").alias("op"),
-                    F.col("n_nationkey").alias("nationkey")))
-    conly = (cust_n.exceptAll(supp_n).distinct()
-             .select(F.lit("customer_only").alias("op"),
-                     F.col("n_nationkey").alias("nationkey")))
-    return both.unionByName(conly)
+    return union_legs("op", {
+        "both": cust_n.intersect(supp_n),
+        "customer_only": cust_n.exceptAll(supp_n).distinct(),
+    }).withColumnRenamed("n_nationkey", "nationkey")
 
 
 @query(

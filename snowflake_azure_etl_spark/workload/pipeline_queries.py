@@ -21,7 +21,7 @@ from ..operators import unigram as ug_ops
 from ..operators import wordpiece as wp_ops
 from ..operators.sampling import DSIR_BUCKETS, plog2_sql
 from ..sources.registry import load_tables, stage_row_count
-from ._registry import query
+from ._registry import query, union_legs
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,12 +314,12 @@ def q50_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays per-invocation — scores are results, the model is not.
     from ..operators._cache import cached_relation
     dsir_stats = cached_relation(
-        sampling.dsir_bucket_stats_from(
+        sampling.dsir_bucket_stats(
             feats, docs.filter(F.col("lang") == "en").select("doc_id"),
             "doc_id").coalesce(1),
         "q50_dsir_model")
-    dsir = (sampling.dsir_log_weights_from(docs.select("doc_id"),
-                                           feats, dsir_stats, "doc_id")
+    dsir = (sampling.dsir_log_weights(docs.select("doc_id"),
+                                      feats, dsir_stats, "doc_id")
             .withColumnRenamed("doc_id", "keeper_id"))
     # line-dedup leg (r15, X-DEDUP-LINE): corpus-wide chunk dedup at
     # the frequent-token grain (operators.dedup.line_dedup — the CCNet
@@ -418,7 +418,7 @@ def q51_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_leg = (dedup.lsh_candidate_pairs(sig, "doc_id",
                                          bands=LSH_BANDS, rows=LSH_ROWS,
                                          n_docs=n_docs)
-               .select(F.lit("all").alias("leg"), "id_a", "id_b",
+               .select("id_a", "id_b",
                        F.lit(None).cast("string").alias("src")))
     # second leg (r7, X-DEDUP-INCR-NEAR): the same candidate set
     # reproduced INCREMENTALLY — docs ≡ 0 (mod 5) arrive as an ingest
@@ -449,11 +449,10 @@ def q51_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=LSH_BANDS, rows=LSH_ROWS, shingle_n=SHINGLE_N,
         n_new=n_docs, n_index=n_docs)
     incr_leg = inc.select(
-        F.lit("incr").alias("leg"),
         F.least("id_new", "id_match").alias("id_a"),
         F.greatest("id_new", "id_match").alias("id_b"),
         F.col("source").alias("src"))
-    return all_leg.unionByName(incr_leg)
+    return union_legs("leg", {"all": all_leg, "incr": incr_leg})
 
 
 @query(
@@ -796,8 +795,7 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp = docs.select("doc_id",
                          text.md5_fingerprint("text").alias("fingerprint"))
         return (sh.join(fp, "doc_id")
-                .select(F.lit("doc").alias("role"),
-                        F.col("doc_id").alias("id_a"),
+                .select(F.col("doc_id").alias("id_a"),
                         F.lit(None).cast("long").alias("id_b"),
                         F.col("simhash").alias("metric"),
                         "fingerprint"))
@@ -814,7 +812,7 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_hamming=_SIMHASH_MAX_HAMMING,
         bands=_SIMHASH_BANDS, n_docs=n_docs,
         cache_keys=False)
-        .select(F.lit("near_dup").alias("role"), "id_a", "id_b",
+        .select("id_a", "id_b",
                 F.col("hamming").cast("long").alias("metric"),
                 F.lit(None).cast("string").alias("fingerprint")))
     # third leg (r7, X-DEDUP-SPAN): C4/RefinedWeb-style repeated-span
@@ -827,8 +825,7 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pytest-pinned (tests/test_span_scrub.py).
     span_leg = cached_persist(spark, ("q53_span_leg", dk), lambda: dedup
                               .scrub_repeated_spans(docs)
-                              .select(F.lit("span_scrub").alias("role"),
-                                      F.col("doc_id").alias("id_a"),
+                              .select(F.col("doc_id").alias("id_a"),
                                       F.lit(None).cast("long")
                                       .alias("id_b"),
                                       F.col("n_removed").alias("metric"),
@@ -873,8 +870,7 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 .scrub_duplicate_substrings(
                                     docs, index=substr_index,
                                     occ=substr_occ)
-                                .select(F.lit("substr_scrub").alias("role"),
-                                        F.col("doc_id").alias("id_a"),
+                                .select(F.col("doc_id").alias("id_a"),
                                         F.lit(None).cast("long")
                                         .alias("id_b"),
                                         F.col("n_removed").alias("metric"),
@@ -897,8 +893,7 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             substr_index, dedup.window_hash_index(batch, occ=batch_occ))
         return (dedup.incremental_scrub_duplicate_substrings(
                     batch, idx, occ=batch_occ)
-                .select(F.lit("substr_incr").alias("role"),
-                        F.col("doc_id").alias("id_a"),
+                .select(F.col("doc_id").alias("id_a"),
                         F.lit(None).cast("long").alias("id_b"),
                         F.col("n_removed").alias("metric"),
                         F.substring(F.md5("cleaned"), 1, 16)
@@ -906,8 +901,9 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     substr_incr_leg = cached_persist(spark, ("q53_substr_incr_leg", dk),
                                      build_substr_incr)
-    return (doc_leg.unionByName(pair_leg).unionByName(span_leg)
-            .unionByName(substr_leg).unionByName(substr_incr_leg))
+    return union_legs("role", {
+        "doc": doc_leg, "near_dup": pair_leg, "span_scrub": span_leg,
+        "substr_scrub": substr_leg, "substr_incr": substr_incr_leg})
 
 
 _PQ_M, _PQ_K, _PQ_DIM = 4, 8, 64
@@ -955,20 +951,20 @@ def _recall_legs(exact: DataFrame, approx: DataFrame,
                      F.coalesce(F.col("hits"), F.lit(0).cast("long"))
                      .alias("hits")))
     recall = per_q.select(
-        F.lit("recall").alias("leg"), "query_id",
+        "query_id",
         F.col("hits").cast("long").alias("neighbor_id"),
         (F.col("hits").cast("double") / F.lit(3.0)).alias(metric),
         F.lit(1).cast("int").alias("rn"))
     recall_mean = (per_q.agg(F.sum("hits").alias("th"),
                              F.count("*").alias("nq"))
-                   .select(F.lit("recall_mean").alias("leg"),
-                           F.lit(-1).cast("bigint").alias("query_id"),
+                   .select(F.lit(-1).cast("bigint").alias("query_id"),
                            F.col("th").cast("long").alias("neighbor_id"),
                            (F.col("th").cast("double")
                             / (F.lit(3.0) * F.col("nq").cast("double")))
                            .alias(metric),
                            F.lit(1).cast("int").alias("rn")))
-    return recall.unionByName(recall_mean)
+    return union_legs("leg", {"recall": recall,
+                              "recall_mean": recall_mean})
 
 
 def _recall_sql(exact: str, approx: str, queries: str) -> str:
@@ -1180,9 +1176,8 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build_leg_plans():
         exact_p = (similarity.brute_force_topk(
             emb, queries, "vec_id", "embedding", k=3)
-            .select(F.lit("exact").alias("leg"), "query_id",
-                    "neighbor_id", F.col("cos_sim").alias("metric"),
-                    "rn"))
+            .select("query_id", "neighbor_id",
+                    F.col("cos_sim").alias("metric"), "rn"))
         cb = pq.pq_codebooks(emb, "vec_id", "embedding", dim=_PQ_DIM,
                              m=_PQ_M, k=_PQ_K, n_iter=0)
         # the code table IS the PQ index artifact (m ints per vector —
@@ -1195,9 +1190,8 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc_p = (pq.pq_adc_topk(
             codes, queries, "vec_id", "embedding", _PQ_DIM,
             cb, m=_PQ_M, k_neighbors=3)
-            .select(F.lit("pq_adc").alias("leg"), "query_id",
-                    "neighbor_id", F.col("adc_dist").alias("metric"),
-                    "rn"))
+            .select("query_id", "neighbor_id",
+                    F.col("adc_dist").alias("metric"), "rn"))
         return exact_p, adc_p
 
     exact_plan, adc_plan = cached_build(
@@ -1218,8 +1212,7 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("grp",
                        similarity.normalize_vec("embedding").alias("nv")))
         return (sig.select("grp", F.posexplode("nv").alias("_d", "_v"))
-                .select(F.lit("pooled").alias("leg"),
-                        F.col("grp").alias("query_id"),
+                .select(F.col("grp").alias("query_id"),
                         (F.col("_d") + 1).cast("bigint")
                         .alias("neighbor_id"),
                         F.col("_v").alias("metric"),
@@ -1240,14 +1233,13 @@ def q54_ann_brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("fs"), F.asc("neighbor_id"))
     rrf = (fused.withColumn("rr", F.row_number().over(w_rrf))
            .filter(F.col("rr") <= 3)
-           .select(F.lit("rrf").alias("leg"), "query_id", "neighbor_id",
-                   F.col("fs").alias("metric"),
+           .select("query_id", "neighbor_id", F.col("fs").alias("metric"),
                    F.col("rr").cast("int").alias("rn")))
     # recall@3 legs (r10, X-ANN-RECALL — VERDICT r9 #4): the ADC
     # ranking's recall of the exact (already materialized) top-3
-    return (exact.unionByName(adc).unionByName(pooled)
-            .unionByName(rrf)
-            .unionByName(_recall_legs(exact, adc, queries, "metric")))
+    return union_legs("leg", {
+        "exact": exact, "pq_adc": adc, "pooled": pooled, "rrf": rrf,
+        "recall": _recall_legs(exact, adc, queries, "metric")})
 
 
 _BUCKET_SQL = "(" + " || ".join(
@@ -1361,15 +1353,14 @@ def q55_ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     topk = (similarity.lsh_bucketed_topk(emb, queries, "vec_id", "embedding",
                                          k=3, bits=8)
-            .select(F.lit("topk").alias("role"),
-                    F.col("query_id").alias("id_a"),
+            .select(F.col("query_id").alias("id_a"),
                     F.col("neighbor_id").alias("id_b"),
                     "cos_sim", "rn"))
     dups = (similarity.embedding_near_dups(emb, "vec_id", "embedding",
                                            threshold=0.8, bits=8,
                                            n_rows=n_vecs)
-            .select(F.lit("near_dup").alias("role"), "id_a", "id_b",
-                    "cos_sim", F.lit(None).cast("int").alias("rn")))
+            .select("id_a", "id_b", "cos_sim",
+                    F.lit(None).cast("int").alias("rn")))
     from pyspark.sql import Window
 
     from ..operators._cache import cached_persist, plan_key
@@ -1386,15 +1377,15 @@ def q55_ann_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       _PQ_DIM, stats)
                 .orderBy(F.desc("sq8_err"), F.asc("vec_id")).limit(20)
                 .withColumn("rk", F.row_number().over(sq_w))
-                .select(F.lit("sq8").alias("role"),
-                        F.col("vec_id").alias("id_a"),
+                .select(F.col("vec_id").alias("id_a"),
                         F.lit(None).cast("bigint").alias("id_b"),
                         F.col("sq8_err").alias("cos_sim"),
                         F.col("rk").cast("int").alias("rn")))
 
     sq_leg = cached_persist(spark, ("sq8_leg", plan_key(emb), _PQ_DIM),
                             build_sq_leg)
-    return topk.unionByName(dups).unionByName(sq_leg)
+    return union_legs("role", {"topk": topk, "near_dup": dups,
+                               "sq8": sq_leg})
 
 
 _BPE_PAT_SQL = text.BPE_PRETOKEN_PATTERN.replace("'", "''")
@@ -2132,8 +2123,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (or local) stage.
     vocab_leg = cached_persist(spark, ("q58_vocab_leg", dk), lambda: text
                                .token_vocab(docs, "text", top_k=100)
-                               .select(F.lit("vocab").alias("leg"),
-                                       "token", "doc_freq", "total_freq",
+                               .select("token", "doc_freq", "total_freq",
                                        "rank").coalesce(1))
     merges = bpe.train_bpe_merges(docs, "text", n_merges=_BPE_N_MERGES)
     # the merge TABLE is the model artifact rendered as a relation —
@@ -2144,7 +2134,6 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every later scan into an in-memory JVM columnar read
     bpe_leg = cached_persist(spark, ("q58_bpe_leg", dk), lambda: bpe
                              .merges_table(spark, merges).select(
-        F.lit("bpe_merge").alias("leg"),
         F.concat(F.col("left"), F.lit("+"), F.col("right")).alias("token"),
         F.lit(None).cast("long").alias("doc_freq"),
         F.col("freq").alias("total_freq"),
@@ -2164,8 +2153,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (cooc_head
                 .withColumn("crank",
                             F.row_number().over(_W.orderBy(*cooc_order)))
-                .select(F.lit("cooc").alias("leg"),
-                        F.col("pair").alias("token"),
+                .select(F.col("pair").alias("token"),
                         F.lit(None).cast("long").alias("doc_freq"),
                         F.col("n_cooc").alias("total_freq"),
                         F.col("crank").cast("int").alias("rank"))
@@ -2182,8 +2170,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the persisted corpus stats (bm25_topk's one-row stats relation
     # rides the session cache registry; that part IS the artifact).
     bm_leg = (text.bm25_topk(docs, _BM25_QUERIES, k=5)
-              .select(F.lit("bm25").alias("leg"),
-                      F.col("query").alias("token"),
+              .select(F.col("query").alias("token"),
                       F.col("doc_id").alias("doc_freq"),
                       F.col("score_q").alias("total_freq"),
                       F.col("rank").cast("int").alias("rank")))
@@ -2213,8 +2200,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub = docs.filter(F.col("doc_id") % 5 == 0)
     enc = seg_ops.encode_ids(sub, bpe.apply_merges("text", merges), vocab)
     rt_leg = (seg_ops.decode_ids(enc, vocab)
-              .select(F.lit("roundtrip").alias("leg"),
-                      F.substring(F.md5("detok"), 1, 16).alias("token"),
+              .select(F.substring(F.md5("detok"), 1, 16).alias("token"),
                       F.col("doc_id").alias("doc_freq"),
                       F.length("detok").cast("long").alias("total_freq"),
                       F.lit(1).cast("int").alias("rank")))
@@ -2234,15 +2220,15 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the memoized model, so the relation is an artifact, not a result
     uni_piece_leg = cached_persist(
         spark, ("q58_uni_piece_leg", dk), lambda: spark.createDataFrame(
-            [("uni_piece", p, cnt, cost, i + 1)
+            [(p, cnt, cost, i + 1)
              for i, (p, cnt, cost) in enumerate(uni_rows)],
-            "leg string, token string, doc_freq long, total_freq long, "
+            "token string, doc_freq long, total_freq long, "
             "rank int").coalesce(1))
     uni_round_leg = cached_persist(
         spark, ("q58_uni_round_leg", dk), lambda: spark.createDataFrame(
-            [("uni_round", f"round_{r + 1}", None, obj, r + 1)
+            [(f"round_{r + 1}", None, obj, r + 1)
              for r, obj in enumerate(uni_model.traj)],
-            "leg string, token string, doc_freq long, total_freq long, "
+            "token string, doc_freq long, total_freq long, "
             "rank int").coalesce(1))
     # the per-word segmentation relation is the derived encode
     # ARTIFACT (a lookup table beside the model — the tf-icf/top-term
@@ -2253,14 +2239,18 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni_seg = uni_model.segmenter()
     uni_wseg = cached_relation(
         seg_ops.word_segmentations(docs, uni_seg), "uni_wseg")
-    uni_seg_leg = (seg_ops.encode_pieces(sub, uni_seg, wseg=uni_wseg)
-                   .select(F.lit("uni_seg").alias("leg"),
-                           F.substring(F.md5(F.array_join("pieces", "|")),
-                                       1, 16).alias("token"),
-                           F.col("doc_id").alias("doc_freq"),
-                           F.col("n_pieces").cast("long")
-                           .alias("total_freq"),
-                           F.lit(1).cast("int").alias("rank")))
+
+    def seg_leg(seg, wseg: DataFrame) -> DataFrame:
+        """The subsample's per-doc piece digest and count under one
+        segmenter."""
+        return (seg_ops.encode_pieces(sub, seg, wseg=wseg)
+                .select(F.substring(F.md5(F.array_join("pieces", "|")),
+                                    1, 16).alias("token"),
+                        F.col("doc_id").alias("doc_freq"),
+                        F.col("n_pieces").cast("long").alias("total_freq"),
+                        F.lit(1).cast("int").alias("rank")))
+
+    uni_seg_leg = seg_leg(uni_seg, uni_wseg)
     # ninth leg (r14, X-WORDPIECE-SEG, operators.wordpiece): greedy
     # maximal-munch (BERT's WordPiece inference rule — longest piece
     # first, ## continuations, whole-word [UNK]) over the SAME
@@ -2276,14 +2266,7 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                               uni_model.k)
     wp_wseg = cached_relation(
         seg_ops.word_segmentations(docs, wp_seg), "wp_wseg")
-    wp_leg = (seg_ops.encode_pieces(sub, wp_seg, wseg=wp_wseg)
-              .select(F.lit("wp_seg").alias("leg"),
-                      F.substring(F.md5(F.array_join("pieces", "|")),
-                                  1, 16).alias("token"),
-                      F.col("doc_id").alias("doc_freq"),
-                      F.col("n_pieces").cast("long")
-                      .alias("total_freq"),
-                      F.lit(1).cast("int").alias("rank")))
+    wp_leg = seg_leg(wp_seg, wp_wseg)
     # tenth leg (r15, X-WORDPIECE-TWOSET): the same subsample encoded
     # against the PLANTED two-set vocabulary (_WP2_INIT/_WP2_CONT —
     # the released-BERT membership asymmetry: a mid-word 'y' goes
@@ -2298,19 +2281,12 @@ def q58_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp2_seg = wp_ops.segmenter(_WP2_INIT, 2, cont_pieces=_WP2_CONT)
     wp2_wseg = cached_relation(
         seg_ops.word_segmentations(docs, wp2_seg), "wp2_wseg")
-    wp2_leg = (seg_ops.encode_pieces(sub, wp2_seg, wseg=wp2_wseg)
-               .select(F.lit("wp2_seg").alias("leg"),
-                       F.substring(F.md5(F.array_join("pieces", "|")),
-                                   1, 16).alias("token"),
-                       F.col("doc_id").alias("doc_freq"),
-                       F.col("n_pieces").cast("long")
-                       .alias("total_freq"),
-                       F.lit(1).cast("int").alias("rank")))
-    return (vocab_leg.unionByName(bm_leg).unionByName(bpe_leg)
-            .unionByName(cooc_leg).unionByName(rt_leg)
-            .unionByName(uni_piece_leg).unionByName(uni_round_leg)
-            .unionByName(uni_seg_leg).unionByName(wp_leg)
-            .unionByName(wp2_leg))
+    wp2_leg = seg_leg(wp2_seg, wp2_wseg)
+    return union_legs("leg", {
+        "vocab": vocab_leg, "bm25": bm_leg, "bpe_merge": bpe_leg,
+        "cooc": cooc_leg, "roundtrip": rt_leg, "uni_piece": uni_piece_leg,
+        "uni_round": uni_round_leg, "uni_seg": uni_seg_leg, "wp_seg": wp_leg,
+        "wp2_seg": wp2_leg})
 
 
 @query(
@@ -2669,11 +2645,9 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cached plan lazily — a FRESH RDD per call (search RESULT,
     # never session-cached), computed once inside the output job.
     def build_prepared():
-        topk_p = (similarity.ivf_topk(emb, queries, "vec_id",
-                                      "embedding", k=3, n_cells=8,
-                                      nprobe=2, train_iters=2)
-                  .select(F.lit("topk").alias("leg"), "query_id",
-                          "neighbor_id", "cos_sim", "rn"))
+        topk_p = similarity.ivf_topk(emb, queries, "vec_id",
+                                     "embedding", k=3, n_cells=8,
+                                     nprobe=2, train_iters=2)
         ex_p = similarity.brute_force_topk(emb, queries, "vec_id",
                                            "embedding", k=3)
         drift_p = similarity.ivf_drift_report(
@@ -2686,13 +2660,12 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = topk_plan.localCheckpoint(eager=False)
     n_vecs = stage_row_count(sf_dir, "embeddings") or emb.count()
 
-    def semdedup_leg(tag: str, nprobe: int) -> DataFrame:
+    def semdedup_leg(nprobe: int) -> DataFrame:
         return (similarity.semantic_dedup(emb, "vec_id", "embedding",
                                           n_cells=8, train_iters=2,
                                           threshold=_SEMDEDUP_THRESHOLD,
                                           n_rows=n_vecs, nprobe=nprobe)
-                .select(F.lit(tag).alias("leg"),
-                        F.col("id").alias("query_id"),
+                .select(F.col("id").alias("query_id"),
                         F.col("keeper").alias("neighbor_id"),
                         F.lit(None).cast("double").alias("cos_sim"),
                         F.col("cell_id").cast("int").alias("rn")))
@@ -2706,13 +2679,11 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tagged rows per cell attest both sides of the comparison AND
     # the flag itself. (drift is the prepared plan built above.)
     dnew = drift.select(
-        F.lit("ivf_drift").alias("leg"),
         F.col("cell_id").cast("long").alias("query_id"),
         F.col("n_new").cast("long").alias("neighbor_id"),
         F.col("mean_cos_new").alias("cos_sim"),
         F.col("retrain").cast("int").alias("rn"))
     dbase = drift.select(
-        F.lit("ivf_cells").alias("leg"),
         F.col("cell_id").cast("long").alias("query_id"),
         F.col("n_index").cast("long").alias("neighbor_id"),
         F.col("mean_cos_index").alias("cos_sim"),
@@ -2732,42 +2703,28 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inertia trajectory (exact fixed-point SSD per training round +
     # the shipped index's final row; the oracle replays every round
     # from the SAME a1/a2/assigned CTEs that replay training, so
-    # index QUALITY is driver-hashed the way recall@3 is) — builds in
-    # the concurrent block below; its quantizer/rounds dependencies
-    # are eagerly cached by the prepared-plan construction above.
+    # index QUALITY is driver-hashed the way recall@3 is) — builds
+    # beside the other static legs below; its quantizer/rounds
+    # dependencies are eagerly cached by the prepared-plan
+    # construction above.
 
-    def decontam_leg(tag: str, nprobe: int) -> DataFrame:
+    def decontam_leg(nprobe: int) -> DataFrame:
         return (similarity.semantic_decontam(
                     emb, eval_ids, "vec_id", "embedding",
                     n_cells=8, train_iters=2,
                     threshold=_SEMDEDUP_THRESHOLD,
                     n_rows=n_vecs, nprobe=nprobe)
                 .filter("is_contaminated")
-                .select(F.lit(tag).alias("leg"),
-                        F.col("id").alias("query_id"),
+                .select(F.col("id").alias("query_id"),
                         F.col("n_hits").cast("long").alias("neighbor_id"),
                         F.col("max_sim").alias("cos_sim"),
                         F.col("cell_id").cast("int").alias("rn")))
-
-    # r12: the per-leg ARTIFACT builds run as concurrent Spark jobs
-    # where independent (the q47 pattern, _cache.concurrent_builds):
-    # the decontam legs (both nprobe dials — r11 VERDICT r10 #3: the
-    # multi-probe recall dial driver-hashed; the report keeps the
-    # PRIMARY cell so all legs share `_ivf_index`) and the inertia
-    # trajectory's training-round replays overlap the semdedup
-    # resolution chain, whose two levels stay serial INSIDE one
-    # thread because nprobe=2 SEEDS from the cached nprobe=1
-    # components. The shared quantizer + rounds are already eagerly
-    # cached by build_prepared's ivf_topk construction above, and
-    # cached_build's per-key locks cover any residual overlap.
-    from ..operators._cache import concurrent_builds
 
     def build_inertia():
         return (similarity.ivf_inertia_trajectory(
                     emb, "vec_id", "embedding", n_cells=8,
                     train_iters=2)
-                .select(F.lit("inertia").alias("leg"),
-                        F.col("it").alias("query_id"),
+                .select(F.col("it").alias("query_id"),
                         F.col("inertia").alias("neighbor_id"),
                         F.col("mean_d2").alias("cos_sim"),
                         F.col("it").cast("int").alias("rn"))
@@ -2781,36 +2738,32 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relations; the searches (topk, exact baseline, recall) stay
     # per-invocation results. Every leg plan ends in a join/aggregate,
     # so coalesce(1) collapses only the leg-sized post-shuffle stage.
+    # They build concurrently in union_legs: nprobe=2 SEEDS from the
+    # nprobe=1 semdedup components, so whichever semdedup leg comes
+    # first builds them while the other waits on their key lock. The
+    # union of these static legs is ONE session-cached prepared
+    # sub-plan (r16): only the search results (topk checkpoint, recall
+    # legs) build fresh per invocation.
     lk = (plan_key(emb), _SEMDEDUP_THRESHOLD, n_vecs)
-    legs = concurrent_builds({
-        "sd": lambda: (
-            cached_persist(spark, ("q63_sd1",) + lk, lambda: semdedup_leg(
-                "semdedup", 1).coalesce(1)),
-            cached_persist(spark, ("q63_sd2",) + lk, lambda: semdedup_leg(
-                "semdedup_mp", 2).coalesce(1))),
-        "dc": lambda: cached_persist(
-            spark, ("q63_dc1",) + lk,
-            lambda: decontam_leg("decontam", 1).coalesce(1)),
-        "dc2": lambda: cached_persist(
-            spark, ("q63_dc2",) + lk,
-            lambda: decontam_leg("decontam_mp", 2).coalesce(1)),
-        "inertia": lambda: cached_persist(spark, ("q63_inertia",) + lk,
-                                          build_inertia),
-    })
-    sd, sd2 = legs["sd"]
-    dc, dc2, inertia = legs["dc"], legs["dc2"], legs["inertia"]
-    # r16: the seven static legs (cached artifact relations + the
-    # drift projections over the prepared drift plan) union into ONE
-    # session-cached prepared sub-plan — their per-invocation
-    # unionByName chain was pure py4j/analysis chatter. Only the
-    # search results (topk checkpoint, recall legs) build fresh.
-    # Union order moved the static legs ahead of the recall legs;
-    # the driver compare is order-insensitive.
     static = cached_build(
         spark, ("q63_static_legs", plan_key(emb)),
-        lambda: (sd.unionByName(sd2).unionByName(dnew)
-                 .unionByName(dbase).unionByName(dc).unionByName(dc2)
-                 .unionByName(inertia)))
+        lambda: union_legs("leg", {
+            "semdedup": lambda: cached_persist(
+                spark, ("q63_sd1",) + lk,
+                lambda: semdedup_leg(1).coalesce(1)),
+            "semdedup_mp": lambda: cached_persist(
+                spark, ("q63_sd2",) + lk,
+                lambda: semdedup_leg(2).coalesce(1)),
+            "ivf_drift": dnew, "ivf_cells": dbase,
+            "decontam": lambda: cached_persist(
+                spark, ("q63_dc1",) + lk,
+                lambda: decontam_leg(1).coalesce(1)),
+            "decontam_mp": lambda: cached_persist(
+                spark, ("q63_dc2",) + lk,
+                lambda: decontam_leg(2).coalesce(1)),
+            "inertia": lambda: cached_persist(
+                spark, ("q63_inertia",) + lk, build_inertia),
+        }))
     # fifth leg (r10, X-ANN-RECALL): IVF recall@3 against the exact
     # brute-force ranking over the same query subset — q54 attests
     # the PQ-ADC family's recall, this attests the cell-probe
@@ -2818,5 +2771,6 @@ def q63_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality metric. The exact baseline is a search result,
     # re-executed per invocation (only its PLAN is the prepared
     # statement cached above — the memoization rule).
-    return (topk.unionByName(static)
-            .unionByName(_recall_legs(ex, topk, queries, "cos_sim")))
+    return union_legs("leg", {
+        "topk": topk, "static": static,
+        "recall": _recall_legs(ex, topk, queries, "cos_sim")})

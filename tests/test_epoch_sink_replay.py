@@ -51,8 +51,9 @@ def _decontam(spark, t):
 def _dsir(spark, t):
     from snowflake_azure_etl_spark.operators import sampling
     corpus = _docs(spark, TRAIN)
-    sampling.dsir_bucket_stats(corpus, corpus.filter("doc_id < 3"),
-                               "doc_id", "text").write.saveAsTable(t("model"))
+    sampling.dsir_bucket_stats(
+        sampling.hashed_ngram_counts(corpus, "doc_id", "text"),
+        corpus.filter("doc_id < 3"), "doc_id").write.saveAsTable(t("model"))
     return ingest.dsir_ingest_sink(t("model"), t("scored")), [t("scored")]
 
 

@@ -200,6 +200,52 @@ def test_one_centroid_ranking_site():
     assert sites.count(sites[0]) == 2  # one _cell_scores, one crossJoin
 
 
+#: (module, top-level function) -> the unionByName calls it may make in
+#: workload/. Each joins UNTAGGED inputs; a union of tagged legs goes
+#: through `_registry.union_legs`, the one place that names every leg.
+UNTAGGED_UNION_OK = {
+    ("_registry.py", "union_legs"): 1,
+    # q65's SCD2 change batch and CDC snapshot: moved + new members
+    ("etl_queries.py", "q65_incremental_append"): 2,
+    # q40's hourly base rows carry DATA in window_start, beside the
+    # funnel/retention rows' labels
+    ("events_queries.py", "q40_events_tumbling_window"): 2,
+    # q54's RRF input: the exact and ADC rankings fused by rank
+    ("pipeline_queries.py", "q54_ann_brute_force_topk"): 1,
+    # the unknown member row ahead of the dimension's members
+    ("warehouse_queries.py", "q23_surrogate_keys"): 1,
+}
+
+
+def test_one_leg_assembly_path():
+    """Legs are built concurrently in ONE function, union_legs: no other
+    package function starts an InheritableThread. A unionByName in a
+    workload module outside UNTAGGED_UNION_OK is a hand-rolled leg
+    union whose legs no single place names."""
+    import ast
+    threads, unions = set(), {}
+    for py in sorted(_PKG.rglob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        for top in ast.parse(py.read_text()).body:
+            where = getattr(top, "name", "<module>")
+            for n in ast.walk(top):
+                if "InheritableThread" in (getattr(n, "id", None),
+                                           getattr(n, "attr", None),
+                                           getattr(n, "name", None)):
+                    threads.add((rel, where))
+                if (rel.startswith("workload/") and isinstance(n, ast.Call)
+                        and getattr(n.func, "attr", None) == "unionByName"):
+                    key = (py.name, where)
+                    unions[key] = unions.get(key, 0) + 1
+    assert threads == {("workload/_registry.py", "union_legs")}, threads
+    drift = {k: (unions.get(k), UNTAGGED_UNION_OK.get(k))
+             for k in unions.keys() | UNTAGGED_UNION_OK.keys()
+             if unions.get(k) != UNTAGGED_UNION_OK.get(k)}
+    assert not drift, (
+        "unionByName sites in workload/ as (found, allowed) — build "
+        f"tagged legs through union_legs: {drift}")
+
+
 #: streaming/ lines that land data outside `sinks.epoch_sink` without
 #: writing a stream epoch partition.
 EPOCH_WRITE_OK = {

@@ -299,7 +299,8 @@ def test_dsir_scores_match_python_reference(spark):
     not approximately) and rank target-like docs above source-like
     ones."""
     from snowflake_azure_etl_spark.operators.sampling import (
-        dsir_bucket_stats, dsir_log_weights, dsir_resample)
+        dsir_bucket_stats, dsir_log_weights, dsir_resample,
+        hashed_ngram_counts)
     rows = [
         (1, "the cat sat on the mat"),
         (2, "the cat sat on the hat"),
@@ -310,17 +311,19 @@ def test_dsir_scores_match_python_reference(spark):
     ]
     target_ids = {1, 2, 5}                 # "cat/dog prose" target
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    tgt = docs.filter(docs.doc_id.isin(*target_ids))
-    stats = dsir_bucket_stats(docs, tgt, "doc_id", "text")
+    tgt = docs.filter(docs.doc_id.isin(*target_ids)).select("doc_id")
+    ids = docs.select("doc_id")
+    feats = hashed_ngram_counts(docs, "doc_id", "text")
+    stats = dsir_bucket_stats(feats, tgt, "doc_id")
     got = {r["doc_id"]: r["dsir_score"] for r in
-           dsir_log_weights(docs, stats, "doc_id", "text").collect()}
+           dsir_log_weights(ids, feats, stats, "doc_id").collect()}
     ref = _py_dsir_scores(rows, target_ids)
     ref[6] = 0                             # featureless doc
     assert got == ref
     # prose docs outscore the market docs under the prose target
     assert min(got[1], got[2], got[5]) > max(got[3], got[4])
     # deterministic top-k: ranks follow (score desc, id asc)
-    top = dsir_resample(docs, tgt, "doc_id", "text", k=3).collect()
+    top = dsir_resample(ids, feats, tgt, "doc_id", k=3).collect()
     expect = sorted(ref.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
     assert [(r["doc_id"], r["dsir_score"], r["dsir_rank"])
             for r in sorted(top, key=lambda r: r["dsir_rank"])] \
@@ -371,37 +374,6 @@ def test_quality_mixture_tilts_toward_high_buckets(spark):
         quality_bucket(F.lit(0.0), 4).alias("lo"),
         quality_bucket(F.lit(0.49), 4).alias("mid")).collect()[0]
     assert (probe["b"], probe["lo"], probe["mid"]) == (3, 0, 1)
-
-
-def test_dsir_from_variants_share_one_featurization(spark):
-    """dsir_bucket_stats_from / dsir_log_weights_from (one shared
-    feature map) == the two-relation API when the target is a corpus
-    subset."""
-    from snowflake_azure_etl_spark.operators.sampling import (
-        dsir_bucket_stats, dsir_bucket_stats_from, dsir_log_weights,
-        dsir_log_weights_from, hashed_ngram_counts)
-    rows = [
-        (1, "the cat sat on the mat"),
-        (2, "stock market prices fell sharply today"),
-        (3, "the dog sat on the mat"),
-        (4, "market prices rose sharply yesterday"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    tgt = docs.filter(docs.doc_id.isin(1, 3))
-    a = {r["bucket"]: r["lam"] for r in
-         dsir_bucket_stats(docs, tgt, "doc_id", "text").collect()}
-    feats = hashed_ngram_counts(docs, "doc_id", "text")
-    b = {r["bucket"]: r["lam"] for r in
-         dsir_bucket_stats_from(feats, tgt.select("doc_id"),
-                                "doc_id").collect()}
-    assert a == b
-    stats = dsir_bucket_stats(docs, tgt, "doc_id", "text")
-    wa = {r["doc_id"]: r["dsir_score"] for r in
-          dsir_log_weights(docs, stats, "doc_id", "text").collect()}
-    wb = {r["doc_id"]: r["dsir_score"] for r in
-          dsir_log_weights_from(docs.select("doc_id"), feats,
-                                stats, "doc_id").collect()}
-    assert wa == wb
 
 
 @settings(max_examples=40, deadline=None,

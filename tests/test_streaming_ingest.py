@@ -277,7 +277,8 @@ def test_dsir_ingest_matches_batch_operator(spark):
     corpus = spark.createDataFrame(train,
                                    "doc_id long, text string, lang string")
     stats = sampling.dsir_bucket_stats(
-        corpus, corpus.filter(F.col("lang") == "en"), "doc_id", "text")
+        sampling.hashed_ngram_counts(corpus, "doc_id", "text"),
+        corpus.filter(F.col("lang") == "en"), "doc_id")
     model_t = table("dsir_model")
     stats.write.saveAsTable(model_t)
 
@@ -305,8 +306,10 @@ def test_dsir_ingest_matches_batch_operator(spark):
     all_rows = [r for b in batches for r in b]
     whole = spark.createDataFrame(all_rows, "doc_id long, text string")
     want = {(r["doc_id"], r["dsir_score"]) for r in
-            sampling.dsir_log_weights(whole, stats, "doc_id", "text")
-            .collect()}
+            sampling.dsir_log_weights(
+                whole.select("doc_id"),
+                sampling.hashed_ngram_counts(whole, "doc_id", "text"),
+                stats, "doc_id").collect()}
     got = {(r["doc_id"], r["dsir_score"]) for r in
            spark.table(scored_t).collect()}
     assert got == want and len(got) == 4
