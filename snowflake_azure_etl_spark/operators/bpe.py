@@ -62,7 +62,7 @@ from .text import tokens
 #: plain literal replace of "a b " → "ab " is a correct single-pass
 #: greedy merge.
 SENT = "\x01"
-#: The merge law of `word_freqs` partials (`streaming.sinks.read_epochs`).
+#: The merge law of `word_freqs` partials (`sketches.merge_partials`).
 WORD_FREQ_MERGE = {"freq": "sum"}
 
 

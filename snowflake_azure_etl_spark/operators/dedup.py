@@ -364,6 +364,11 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
                                min_chars, _line_key=_line_key)
 
 
+#: The merge law of `line_winners` partials: the (doc, position)-minimal
+#: occurrence wins.
+LINE_WINNER_MERGE = {"_w": "min"}
+
+
 def line_winners(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", sep: str = "\n",
                  min_chars: int = 1, _line_key=None) -> DataFrame:
@@ -372,8 +377,9 @@ def line_winners(docs: DataFrame, id_col: str = "doc_id",
     exposed because it is also the streaming sink's persisted
     artifact. MIN over the (d, i, t) struct is associative and
     commutative, so per-epoch partial winners min-merge
-    (`rollup_line_winners`) into EXACTLY the batch winners regardless
-    of arrival order — the maintenance law the streaming twin rides."""
+    (`sketches.merge_partials` under `LINE_WINNER_MERGE`) into EXACTLY
+    the batch winners regardless of arrival order — the maintenance
+    law the streaming twin rides."""
     key = _line_key if _line_key is not None else F.md5
     lines = _exploded_lines(docs, id_col, text_col, sep)
     # one winner per distinct line: the struct min orders by doc then
@@ -385,14 +391,6 @@ def line_winners(docs: DataFrame, id_col: str = "doc_id",
                                 F.col("_i").alias("i"),
                                 F.col("_ln").alias("t")))
                  .alias("_w")))
-
-
-def rollup_line_winners(partials: DataFrame) -> DataFrame:
-    """Min-merge winner partials (any union of `line_winners` outputs,
-    e.g. the streaming sink's per-epoch partitions) back into one
-    winner per line hash — equal to `line_winners` over the
-    concatenated corpus EXACTLY (struct-min associativity)."""
-    return partials.groupBy("_h").agg(F.min("_w").alias("_w"))
 
 
 def _sep_regex(sep: str) -> str:
@@ -801,6 +799,9 @@ def scrub_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
 
 SUBSTR_MIN_LEN = 8
 SUBSTR_MIN_COUNT = 2
+#: The merge law of `window_hash_index` partials: occurrence counts
+#: add; the window width `min_len` is a key like the digest.
+WINDOW_INDEX_MERGE = {"n_occurrences": "sum"}
 
 
 def _window_occurrences(docs: DataFrame, id_col: str, text_col: str,
@@ -849,8 +850,8 @@ def repeated_window_positions(docs: DataFrame, id_col: str = "doc_id",
     this min_len (the persisted artifact). When given, the repeated
     set is its min_count filter — no second corpus-wide count
     shuffle; the corpus is re-scanned only for the (cheap, narrow)
-    position relation. Width provenance is checked exactly as in the
-    incremental probe.
+    position relation. Its width is checked by
+    `window_width_checked`.
 
     ``occ``: an already-built `_window_occurrences` relation of THIS
     corpus at this min_len (the position-level shared scan, r12 —
@@ -864,19 +865,9 @@ def repeated_window_positions(docs: DataFrame, id_col: str = "doc_id",
         rep = (occ.groupBy("_h").agg(F.count("*").alias("_c"))
                .filter(F.col("_c") >= int(min_count)))
     else:
-        chk = index.agg(F.countDistinct("min_len").alias("_nml"),
-                        F.max("min_len").alias("_iml"))
-        bad = (F.col("_nml") > 1) | (F.col("_iml") != int(min_len))
-        n = F.when(
-            F.coalesce(bad, F.lit(False)),
-            F.raise_error(F.lit(
-                "repeated_window_positions: the supplied index was "
-                f"built at a different min_len than {min_len}"))
-            .cast("long"),
-        ).otherwise(F.col("n_occurrences"))
-        rep = (index.crossJoin(bounded_broadcast(
-            chk, bound="one-row min_len provenance check", max_rows=1))
-               .select(F.col("window_hash").alias("_h"), n.alias("_c"))
+        rep = (window_width_checked(index, min_len)
+               .select(F.col("window_hash").alias("_h"),
+                       F.col("n_occurrences").alias("_c"))
                .filter(F.col("_c") >= int(min_count)))
     return _covered_positions(occ, rep, id_col, min_len)
 
@@ -958,17 +949,18 @@ def window_hash_index(docs: DataFrame, id_col: str = "doc_id",
     substring-dedup INDEX artifact — corpus-wide occurrence counts per
     sliding min_len-window digest. Bounded by distinct windows × one
     32-hex column; merge law = plain SUM (the CMS/histogram
-    linearity), so a pipeline grows it per ingest batch —
-    `merge_window_index` — the same grow-the-index contract as
-    `incremental_exact`'s content hashes and the band-key index. Land
-    it bucketed on window_hash (`plans.layout.land_bucketed`) so batch
-    probes join co-located.
+    linearity), so a pipeline grows it per ingest batch
+    (`sketches.merge_partials` under `WINDOW_INDEX_MERGE`) and forgets
+    documents (`sketches.subtract_partials`) — the same grow-the-index
+    contract as `incremental_exact`'s content hashes and the band-key
+    index. Land it bucketed on window_hash (`plans.layout.land_bucketed`)
+    so batch probes join co-located.
 
     `min_len` rides IN the artifact (ADVICE r10): two indexes built
     with different window widths count incomparable things, and a
-    probe at the wrong width silently misses every digest — so the
-    merge and the incremental scrub fail loud on a width mismatch
-    instead of trusting a docstring."""
+    probe at the wrong width silently misses every digest — so every
+    reader checks it (`window_width_checked`) and fails loud on a width
+    mismatch instead of trusting a docstring."""
     if occ is None:
         occ = _window_occurrences(docs, id_col, text_col, min_len)
     return (occ.groupBy(F.col("_h").alias("window_hash"))
@@ -976,79 +968,34 @@ def window_hash_index(docs: DataFrame, id_col: str = "doc_id",
             .withColumn("min_len", F.lit(int(min_len))))
 
 
-def merge_window_index(*indexes: DataFrame) -> DataFrame:
-    """SUM-merge of window-hash indexes built with the SAME min_len —
-    index(A) ⊎ index(B) == index(A ∪ B), the law that grows the
-    artifact per batch without re-scanning the corpus (pinned in
-    tests/test_substr_scrub.py).
+def window_width_checked(index: DataFrame, min_len: int,
+                         rows: DataFrame | None = None,
+                         count_col: str = "n_occurrences") -> DataFrame:
+    """`rows` (default: `index` itself) with `count_col` raising unless
+    every window of `index` is `min_len` tokens wide — the ONE width
+    check of the substring family: the repeated-set read, the
+    incremental probe, both sides of a subtraction and (through the
+    probe) the streaming sink's index read.
 
-    Mixed-min_len input fails loud (ADVICE r10): the widths need not
-    share a single digest, so a per-row check could never fire — the
-    guard is GLOBAL (one index-bounded aggregate, broadcast as one
-    row) and lives inside the merged count expression itself, where
-    column pruning cannot disarm it."""
-    out = indexes[0]
-    for ix in indexes[1:]:
-        out = out.unionByName(ix)
-    chk = out.agg(F.countDistinct("min_len").alias("_nml"))
-    merged = F.when(
-        F.max("_nml") > 1,
-        F.raise_error(F.lit(
-            "merge_window_index: inputs were built with different "
-            "min_len window widths — their counts are incomparable; "
-            "rebuild one side at the other's width")).cast("long"),
-    ).otherwise(F.sum("n_occurrences"))
-    return (out.crossJoin(bounded_broadcast(
-            chk, bound="one-row min_len provenance check", max_rows=1))
-            .groupBy("window_hash")
-            .agg(merged.alias("n_occurrences"),
-                 F.max("min_len").alias("min_len")))
-
-
-def subtract_window_index(index: DataFrame,
-                          removed: DataFrame) -> DataFrame:
-    """Decremental index maintenance — the deletion-side merge law:
-    index(corpus) ⊖ index(removed ⊆ corpus) == index(corpus \\ removed),
-    hash for hash (counts are additive, so they subtract exactly).
-    This is the right-to-be-forgotten path for the substring artifact
-    (`corpus.forget_documents`' sibling): drop the forgotten docs'
-    window counts without re-scanning the surviving corpus. Hashes
-    whose count reaches zero leave the index entirely.
-
-    Fail-loud contract (the module's discipline): a `removed` hash
-    the index never held, an over-subtraction (removed count >
-    indexed count — both mean `removed` was not a subset of the
-    indexed corpus), and a min_len width mismatch all raise, with the
-    guards inside the output count expression."""
-    chk = (index.select("min_len").unionByName(removed.select("min_len"))
-           .agg(F.countDistinct("min_len").alias("_nml")))
-    # each hash appears at most once per side (both are grouped
-    # indexes), so the full-outer join is 1:1 and the subtraction is
-    # a projection — no extra aggregate
-    j = (index.select("window_hash",
-                      F.col("n_occurrences").alias("_ci"), "min_len")
-         .join(removed.select("window_hash",
-                              F.col("n_occurrences").alias("_cr")),
-               "window_hash", "full_outer"))
-    n = (F.when(F.col("_nml") > 1, F.raise_error(F.lit(
-            "subtract_window_index: inputs were built with different "
-            "min_len window widths")).cast("long"))
-         .when(F.col("_ci").isNull(), F.raise_error(F.lit(
-            "subtract_window_index: removed docs contain a window the "
-            "index never held — they are not a subset of the indexed "
-            "corpus")).cast("long"))
-         .when(F.coalesce(F.col("_cr"), F.lit(0).cast("long"))
-               > F.col("_ci"),
-               F.raise_error(F.lit(
-                   "subtract_window_index: over-subtraction — a window "
-                   "is removed more times than the index counted it"))
-               .cast("long"))
-         .otherwise(F.col("_ci")
-                    - F.coalesce(F.col("_cr"), F.lit(0).cast("long"))))
-    return (j.crossJoin(bounded_broadcast(
-            chk, bound="one-row subtraction-law check", max_rows=1))
-            .select("window_hash", n.alias("n_occurrences"), "min_len")
-            .filter(F.col("n_occurrences") > 0))
+    An index of another width shares (almost) no digests with this
+    width's windows, so a per-row or per-join check could never fire:
+    the check is GLOBAL (one index-bounded min/max aggregate, broadcast
+    as one row; an empty index passes) and lives inside the count
+    expression, where column pruning cannot disarm it. Pass the rows
+    every probe evaluates as `rows` (the incremental probe's batch
+    totals), so the guard fires even when no digest matches."""
+    rows = index if rows is None else rows
+    chk = index.agg(F.min("min_len").alias("_lo"),
+                    F.max("min_len").alias("_hi"))
+    bad = (F.col("_lo") != int(min_len)) | (F.col("_hi") != int(min_len))
+    n = F.when(F.coalesce(bad, F.lit(False)), F.raise_error(F.lit(
+        f"window index built at a different min_len than {min_len} — "
+        "its digests cannot match this width's windows; rebuild it at "
+        "this width")).cast("long")).otherwise(F.col(count_col))
+    return (rows.crossJoin(bounded_broadcast(
+                chk, bound="one-row min_len provenance check", max_rows=1))
+            .select(*(n.alias(c) if c == count_col else c
+                      for c in rows.columns)))
 
 
 def incremental_scrub_duplicate_substrings(
@@ -1066,8 +1013,8 @@ def incremental_scrub_duplicate_substrings(
     additive), so the output equals the full-corpus
     `scrub_duplicate_substrings(corpus ∪ batch)` restricted to the
     batch docs — pinned in tests. Returns the batch's scrub report;
-    the caller grows the index with
-    `merge_window_index(index, window_hash_index(new_docs))`.
+    the caller grows the index with `sketches.merge_partials([index,
+    window_hash_index(new_docs)], WINDOW_INDEX_MERGE)`.
 
     Scale shape: the batch side is hashed once; the only
     corpus-sized relation is the index, probed by ONE equi-join on
@@ -1079,31 +1026,15 @@ def incremental_scrub_duplicate_substrings(
     if occ is None:
         occ = _window_occurrences(new_docs, id_col, text_col, min_len)
     batch = occ.groupBy("_h").agg(F.count("*").alias("_cb"))
-    # width-provenance guard (ADVICE r10): an index built at another
-    # min_len shares (almost) no digests with the batch windows, so a
-    # per-row check could never fire — the check is GLOBAL (one
-    # index-bounded aggregate, broadcast as one row; empty index ⇒
-    # NULLs ⇒ pass) and folds into the total-count expression so
-    # pruning cannot disarm it
-    chk = index.agg(F.countDistinct("min_len").alias("_nml"),
-                    F.max("min_len").alias("_iml"))
-    bad = (F.col("_nml") > 1) | (F.col("_iml") != int(min_len))
-    total = F.when(
-        F.coalesce(bad, F.lit(False)),
-        F.raise_error(F.lit(
-            "incremental_scrub_duplicate_substrings: the persisted "
-            f"index was built at a different min_len than {min_len} — "
-            "its digests cannot match this batch's windows; rebuild "
-            "the index at this width")).cast("long"),
-    ).otherwise(F.col("_cb")
-                + F.coalesce(F.col("_ci"), F.lit(0).cast("long")))
+    # the width guard rides the batch totals, which every batch window
+    # evaluates, matched or not
     tot = (batch.join(index.select(F.col("window_hash").alias("_h"),
                                    F.col("n_occurrences").alias("_ci")),
                       "_h", "left")
-           .crossJoin(bounded_broadcast(
-               chk, bound="one-row min_len provenance check", max_rows=1))
-           .select("_h", total.alias("_c")))
-    rep = tot.filter(F.col("_c") >= int(min_count))
+           .select("_h", (F.col("_cb") + F.coalesce(
+               F.col("_ci"), F.lit(0).cast("long"))).alias("_c")))
+    rep = (window_width_checked(index, min_len, rows=tot, count_col="_c")
+           .filter(F.col("_c") >= int(min_count)))
     covered = _covered_positions(occ, rep, id_col, min_len)
     return _scrub_report(new_docs, covered, id_col, text_col)
 

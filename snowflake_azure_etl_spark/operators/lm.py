@@ -94,7 +94,7 @@ LM_WEIGHTS = {2: (LM_LAMBDA_NUM, LM_LAMBDA_DEN - LM_LAMBDA_NUM),
 #: Per-order output-column prefix: <p>_bits, <p>_n_pos, <p>_ppl_bits
 #: and the selection columns (lm_keep; lm3_bucket/lm3_keep).
 LM_PREFIX = {2: "lm", 3: "lm3"}
-#: The merge law of raw `gram_counts` partials (`merge_gram_counts`).
+#: The merge law of raw `gram_counts` partials (`sketches.merge_partials`).
 GRAM_MERGE = {"c": "sum"}
 
 
@@ -126,11 +126,6 @@ def _grams_of(toks: Column, n: int) -> Column:
         "array<struct<" + ",".join(f"{w}:string" for w in keys) + ">>"))
 
 
-def _key_cols(counts: DataFrame) -> list[str]:
-    # a count relation is its gram keys plus `c`
-    return [c for c in counts.columns if c != "c"]
-
-
 def tokenized(docs: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> DataFrame:
     """(id, tk): the tokenize-once relation — THE shared scan under
@@ -147,8 +142,9 @@ def gram_counts(toks: DataFrame, n: int) -> DataFrame:
     """(tok, c) at n = 1, (w1, …, wn, c) above: the UN-floored
     adjacent-gram counts of a `tokenized` relation — the growable
     artifact. Counts are additive, so a pipeline lands THESE per
-    corpus version/batch and grows them with `merge_gram_counts` (or
-    forgets with `subtract_gram_counts`); the floored serving model
+    corpus version/batch and grows them with `sketches.merge_partials`
+    under `GRAM_MERGE` (or forgets with `sketches.subtract_partials`);
+    the floored serving model
     derives by `lm_model_from_counts`. The floor itself is NOT
     additive (a gram under the floor in two batches can clear it in
     their union), which is why the floored relations never merge.
@@ -172,48 +168,6 @@ def lm_model_from_counts(counts: Sequence[DataFrame]
     totals = counts[0].agg(F.sum("c").cast("long").alias("n"),
                            F.count("*").alias("v"))
     return [c.filter(F.col("c") >= LM_MIN_COUNT) for c in counts], totals
-
-
-def merge_gram_counts(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SUM-merge of raw gram-count relations of one order — counts(A)
-    ⊎ counts(B) == counts(A ∪ B), the law that grows the LM artifact
-    per ingest batch without re-scanning the corpus (the
-    `merge_window_index` contract, pinned in tests/test_lm.py). The
-    key columns are every column but `c`."""
-    return (a.unionByName(b).groupBy(*_key_cols(a))
-            .agg(F.sum("c").cast("long").alias("c")))
-
-
-def subtract_gram_counts(index: DataFrame,
-                         removed: DataFrame) -> DataFrame:
-    """Decremental maintenance — counts(corpus) ⊖ counts(removed ⊆
-    corpus) == counts(corpus \\ removed) exactly: the LM artifact's
-    right-to-be-forgotten path (the `subtract_window_index` law).
-    Over-subtraction (removed not a subset) fails loud instead of
-    landing a silently wrong model; zeroed grams leave the relation.
-    The key columns are every column of `index` but `c`.
-
-    r12 review hardening: the join is FULL OUTER (a left join dropped
-    removed-only grams before the guard could see them — a removed
-    batch containing a gram the index never held passed silently),
-    and the removed side pre-aggregates by key (duplicate keys would
-    both fan out the output and evade the per-row guard by splitting
-    one over-subtraction across rows)."""
-    key_cols = _key_cols(index)
-    r = (removed.groupBy(*key_cols)
-         .agg(F.sum("c").cast("long").alias("_cr")))
-    n = F.when(
-        F.coalesce(F.col("_cr"), F.lit(0).cast("long"))
-        > F.coalesce(F.col("c"), F.lit(0).cast("long")),
-        F.raise_error(F.lit(
-            "subtract_gram_counts: over-subtraction — the removed "
-            "side counts a gram more times than the index does; it "
-            "is not a subset of the indexed corpus")).cast("long"),
-    ).otherwise(F.coalesce(F.col("c"), F.lit(0).cast("long"))
-                - F.coalesce(F.col("_cr"), F.lit(0).cast("long")))
-    return (index.join(r, key_cols, "full_outer")
-            .select(*key_cols, n.alias("c"))
-            .filter(F.col("c") > 0))
 
 
 def lm_bits(docs: DataFrame, id_col: str, text_col: str,
@@ -277,7 +231,7 @@ def lm_bits(docs: DataFrame, id_col: str, text_col: str,
     gterm = g.select(*keys, term.alias("_t"))
     # LEFT join + per-row raise: an under-covering `grams` relation
     # must fail loud, not silently drop scored positions (the
-    # subtract_gram_counts guard discipline)
+    # subtract_partials guard discipline)
     checked = F.when(F.col("_t").isNull(), F.raise_error(F.lit(
         f"lm_bits: grams does not cover an observed corpus {order}-gram"
         " — pass the un-floored counts relation or None"))
@@ -449,13 +403,13 @@ def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
                              toks: DataFrame | None = None) -> DataFrame:
     """Refresh the order's selection model from ROLLED-UP raw counts
     [c_1, …] — the sanctioned maintenance path for a pipeline that
-    grows its LM via `streaming.ingest.lm_counts_ingest_sink` +
-    `rollup_gram_counts` (the epoch partials merged by `GRAM_MERGE`)
-    (VERDICT r12 #7). Derives the floored serving model from the raw
-    counts (the floor is not additive — it must re-apply to the
-    merged relation), re-scores the LANDED corpus against it, and
-    trains a fresh `lm_selection`; stream-grown counts + this call
-    equal a batch retrain over the concatenated corpus exactly
+    grows its LM via `streaming.ingest.lm_counts_ingest_sink` (its
+    epoch partials read back by `sinks.read_epochs(...,
+    merge=GRAM_MERGE)`) (VERDICT r12 #7). Derives the floored serving
+    model from the raw counts (the floor is not additive — it must
+    re-apply to the merged relation), re-scores the LANDED corpus
+    against it, and trains a fresh `lm_selection`; stream-grown counts
+    + this call equal a batch retrain over the concatenated corpus exactly
     (pinned in tests/test_lm.py and tests/test_streaming_ingest.py).
     `n_rows` attests the landed corpus size for `lm_terciles`."""
     model, tot = lm_model_from_counts(counts[:order])

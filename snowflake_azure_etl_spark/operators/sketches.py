@@ -35,7 +35,9 @@ double-counting.
 
 from __future__ import annotations
 
+import functools
 import math
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -136,6 +138,71 @@ def hll_rollup(partials: DataFrame, group_cols: list[str]) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Merge laws (the mergeable-summaries property, Agarwal et al. PODS
+# 2012). Every additive artifact of the package — CMS counters, Bloom
+# words, histogram bins, window-index and gram/word counts, line
+# winners — is a relation whose partials merge by union → groupBy(keys)
+# → agg(law). A LAW maps each value column to its aggregate
+# (`CMS_MERGE = {"cnt": "sum"}`, `BLOOM_MERGE = {"word": "bit_or"}`);
+# every other column is a key. These two functions are the only code
+# that merges or subtracts such a relation.
+# ---------------------------------------------------------------------------
+
+
+def merge_partials(parts: "DataFrame | Sequence[DataFrame]",
+                   law: "dict[str, str]") -> DataFrame:
+    """Fold partials of one artifact (one relation, or several that
+    union by name) into the artifact of their concatenated input:
+    every column not named in `law` is a group key, and each law
+    column aggregates by its `pyspark.sql.functions` name. The input
+    column order is kept."""
+    if not isinstance(parts, DataFrame):
+        parts = functools.reduce(DataFrame.unionByName, parts)
+    return (parts.groupBy(*(c for c in parts.columns if c not in law))
+            .agg(*(getattr(F, how)(c).alias(c) for c, how in law.items()))
+            .select(*parts.columns))
+
+
+def subtract_partials(index: DataFrame, removed: DataFrame,
+                      law: "dict[str, str]") -> DataFrame:
+    """index ⊖ removed under a SUM law: artifact(corpus) ⊖
+    artifact(removed ⊆ corpus) == artifact(corpus ∖ removed), key for
+    key — the right-to-be-forgotten path of every count artifact.
+    Keys whose counts reach zero leave the relation.
+
+    Fail-loud contract: `removed` pre-aggregates by key (duplicate keys
+    would split one over-subtraction across rows), the join is FULL
+    OUTER (a left join would drop removed-only keys before the guard
+    sees them), and a key the index never held or a count driven below
+    zero raises inside the output count expression. Only sum laws
+    subtract; any other law raises ValueError."""
+    if set(law.values()) != {"sum"}:
+        raise ValueError(f"subtract_partials: law {law} is not a sum law "
+                         "— only additive counts subtract")
+    keys = [c for c in index.columns if c not in law]
+    zero = F.lit(0).cast("long")
+    r = merge_partials(removed.select(*keys, *law), law).select(
+        *keys, *(F.col(c).alias(f"_r_{c}") for c in law))
+
+    def left(c: str) -> Column:
+        ci, cr = F.col(c), F.coalesce(F.col(f"_r_{c}"), zero)
+        return (F.when(ci.isNull(), F.raise_error(F.lit(
+                    "subtract_partials: over-subtraction — the removed "
+                    "side holds a key the index never held; it is not a "
+                    "subset of the indexed corpus")).cast("long"))
+                .when(cr > ci, F.raise_error(F.lit(
+                    "subtract_partials: over-subtraction — the removed "
+                    "side counts a key more times than the index "
+                    "does")).cast("long"))
+                .otherwise(ci - cr))
+
+    out = index.join(r, keys, "full_outer").select(
+        *(left(c).alias(c) if c in law else c for c in index.columns))
+    return out.filter(functools.reduce(
+        lambda a, b: a | b, (F.col(c) > 0 for c in law)))
+
+
+# ---------------------------------------------------------------------------
 # Count-Min sketch (X-SKETCH-CMS) — the frequency-estimation sibling of
 # the distinct sketches: a d×w counter matrix where estimate(key) =
 # min_j cm[j][h_j(key)], always ≥ the true count (one-sided error
@@ -157,7 +224,7 @@ def hll_rollup(partials: DataFrame, group_cols: list[str]) -> DataFrame:
 
 CMS_DEPTH = 4
 CMS_WIDTH = 512
-#: The merge law of CMS partials (`streaming.sinks.read_epochs`).
+#: The merge law of CMS partials (`merge_partials`).
 CMS_MERGE = {"cnt": "sum"}
 
 
@@ -193,9 +260,10 @@ def cms_build(df: DataFrame, key: Column | str,
 
     `group_cols` builds one PARTIAL per group in the same single
     aggregate — the epoch/day/partition partials that
-    `streaming.sketches` lands per micro-batch; `cms_merge` (plain
-    SUM) rolls them up to the full-stream sketch (linearity, the
-    merge law pinned in tests and driver-attested in q47)."""
+    `streaming.sketches` lands per micro-batch; `merge_partials`
+    under `CMS_MERGE` (plain SUM) rolls them up to the full-stream
+    sketch (linearity, the merge law pinned in tests and
+    driver-attested in q47)."""
     key = F.col(key) if isinstance(key, str) else key
     w = (F.lit(1).cast("long") if weight is None
          else (F.col(weight) if isinstance(weight, str) else weight))
@@ -208,17 +276,6 @@ def cms_build(df: DataFrame, key: Column | str,
             .select(*gc, "_p.j", "_p.bucket", "_w")
             .groupBy(*gc, "j", "bucket")
             .agg(F.sum("_w").alias("cnt")))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Element-wise sum of sketches built with the SAME (depth, width)
-    — the linearity that lets per-partition / per-day partials be
-    persisted tiny and rolled up without re-scanning base data (the
-    hll_rollup contract; merge law pinned in tests/test_sketches.py)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(sketch: DataFrame, candidates: DataFrame,
@@ -297,8 +354,9 @@ def bloom_build(df: DataFrame, key: Column | str,
     distinct set — one pass, one bit_or hash aggregate; absent words
     are implicit zeros, so the relation is at most bits/32 rows (per
     group). `group_cols` builds one PARTIAL per group — the epoch
-    partials of `streaming.sketches` — which `bloom_merge` (aligned
-    bit_or) rolls up to filter(∪ groups), word for word."""
+    partials of `streaming.sketches` — which `merge_partials` under
+    `BLOOM_MERGE` (aligned bit_or) rolls up to filter(∪ groups),
+    word for word."""
     key = F.col(key) if isinstance(key, str) else key
     gc = list(group_cols)
     pos = F.explode(F.array(*[
@@ -313,16 +371,6 @@ def bloom_build(df: DataFrame, key: Column | str,
                     .alias("_bit"))
             .groupBy(*gc, "word_idx")
             .agg(F.bit_or("_bit").alias("word")))
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Aligned bit_or of filters built with the SAME (bits, hashes):
-    filter(A) ∪-merged with filter(B) == filter(A ∪ B), word for word
-    (pinned in tests/test_sketches.py)."""
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
 
 
 def bloom_probe(bloom: DataFrame, candidates: DataFrame, key_col: str,

@@ -47,9 +47,9 @@ r14 additions: CHAR-FALLBACK encoding (``fallback=True`` /
 characters become their own penalty-priced pieces, total coverage +
 exact round-trip, strict mode the pinned default) and the streaming
 maintenance path (`streaming.ingest.unigram_counts_ingest_sink` →
-`rollup_word_freqs` (the epoch partials merged by
-`bpe.WORD_FREQ_MERGE`) → `train_unigram_from_words` == batch retrain
-exactly).
+the epoch partials merged by `bpe.WORD_FREQ_MERGE` →
+`train_unigram_from_words` == batch retrain exactly; forgetting
+documents is `sketches.subtract_partials` under the same law).
 
 Scale (100 TB): the one corpus-sized pass is `bpe.word_freqs`' word
 count (map-side combined, word-keyed shuffle). Training folds run
@@ -345,7 +345,7 @@ def train_unigram_from_words(words: DataFrame,
     """Train from a (word, freq) RELATION instead of a document
     corpus — the sanctioned MAINTENANCE path for a pipeline that
     grows its word counts via `streaming.ingest.unigram_counts_
-    ingest_sink` + `rollup_word_freqs` (the
+    ingest_sink` + `sinks.read_epochs(..., merge=WORD_FREQ_MERGE)` (the
     `lm.lm_selection_from_rollup` pattern, VERDICT r13 next #5).
     Training depends on the corpus ONLY through its word frequencies
     and word counts are additive, so stream-grown counts + this call
@@ -358,24 +358,6 @@ def train_unigram_from_words(words: DataFrame,
     pinned = words.coalesce(n_parts).localCheckpoint(eager=True)
     return _train_from_words(pinned, rounds, k, seed_multi,
                              vocab_target)
-
-
-def subtract_word_freqs(index: DataFrame,
-                        removed: DataFrame) -> DataFrame:
-    """Decremental maintenance of the tokenizer's (word, freq) count
-    artifact: counts(corpus) ⊖ counts(removed ⊆ corpus) ==
-    counts(corpus ∖ removed) exactly — the right-to-be-forgotten path
-    for a pipeline growing counts via `unigram_counts_ingest_sink`,
-    completing the artifact's law set (grow by SUM, forget by
-    subtraction, retrain == batch). Delegates to
-    `lm.subtract_gram_counts`, the shared fail-loud law
-    (over-subtraction raises; zeroed words leave the relation), so
-    the tokenizer and LM count families cannot drift."""
-    from .lm import subtract_gram_counts
-    out = subtract_gram_counts(
-        index.select("word", F.col("freq").alias("c")),
-        removed.select("word", F.col("freq").alias("c")))
-    return out.select("word", F.col("c").alias("freq"))
 
 
 def _train(docs: DataFrame, text_col: str, rounds: int, k: int,

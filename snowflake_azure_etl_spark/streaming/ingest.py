@@ -230,7 +230,7 @@ def lm_counts_ingest_sink(count_tables: Sequence[str], *,
     micro-batch lands its own raw order-n gram-count PARTIAL in
     `count_tables[n - 1]` (unigram, bigram, trigram, …) as idempotent
     epoch partitions; the stream-lifetime counts derive by the SUM
-    merge law (`rollup_gram_counts` ≡ n-way `lm.merge_gram_counts`),
+    merge law (`sinks.read_epochs(..., merge=lm.GRAM_MERGE)`),
     and the floored serving model derives from the rollup
     (`lm.lm_model_from_counts` — the floor is NOT additive, so only
     raw counts ever land). The batch tokenizes ONCE (`lm.tokenized`)
@@ -394,7 +394,8 @@ def unigram_counts_ingest_sink(words_table: str, *,
     the `lm_counts_ingest_sink` twin the trained-tokenizer family was
     missing (VERDICT r13 next #5), completing its maintenance set:
     score at the door (`unigram_ingest_sink`), grow here, retrain via
-    `rollup_word_freqs` + `unigram.train_unigram_from_words`. Each
+    `sinks.read_epochs(..., merge=bpe.WORD_FREQ_MERGE)` +
+    `unigram.train_unigram_from_words`. Each
     micro-batch lands its own raw WORD-FREQUENCY partial (the one
     corpus-sized statistic unigram training reads — `bpe.word_freqs`)
     as an idempotent epoch partition; the stream-lifetime counts
@@ -407,29 +408,6 @@ def unigram_counts_ingest_sink(words_table: str, *,
 
     return epoch_sink(
         lambda batch_df, _: [word_freqs(batch_df, text_col)], words_table)
-
-
-def rollup_word_freqs(spark: SparkSession, table: str) -> DataFrame:
-    """The stream-lifetime (word, freq) relation: SUM over all epoch
-    partials — identical to `bpe.word_freqs` of the concatenated
-    stream (counts are additive). Feed to
-    `unigram.train_unigram_from_words` (or `bpe` trainers — the same
-    relation drives both tokenizer families' maintenance)."""
-    from ..operators.bpe import WORD_FREQ_MERGE
-    from .sinks import read_epochs
-    return read_epochs(spark, table, merge=WORD_FREQ_MERGE)
-
-
-def rollup_gram_counts(spark: SparkSession, table: str) -> DataFrame:
-    """The stream-lifetime raw gram counts: SUM over all epoch
-    partials — identical to counting the concatenated stream (the
-    `merge_gram_counts` law applied n-ways). The key columns are
-    every column but `c` once the epoch column is dropped, so one
-    call serves every order's table; feed the rollups to
-    `lm.lm_model_from_counts` for the floored serving model."""
-    from ..operators.lm import GRAM_MERGE
-    from .sinks import read_epochs
-    return read_epochs(spark, table, merge=GRAM_MERGE)
 
 
 #: Shard column of the streaming line-winner table — a deterministic
@@ -454,7 +432,7 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
     - `winner_table`: the batch's line-winner PARTIAL
       (`dedup.line_winners` — one (hash, (doc, pos, text)-min) row per
       distinct dedupable line). Struct-min is associative and
-      commutative, so `dedup.rollup_line_winners` over all partials
+      commutative, so `LINE_WINNER_MERGE` over all partials
       equals the batch winner index of the concatenated stream
       EXACTLY, in any arrival order — the family's maintenance law;
       re-scrubbing any corpus against the rolled index reproduces the
@@ -488,8 +466,9 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
     pruning makes it epoch-bounded). `n_shards` trades pruning grain
     against files-per-epoch: size it so index_bytes / n_shards is a
     few hundred MB at the design point."""
-    from ..operators.dedup import (line_winners, rollup_line_winners,
+    from ..operators.dedup import (LINE_WINNER_MERGE, line_winners,
                                    scrub_with_line_winners)
+    from ..operators.sketches import merge_partials
     from .sinks import EPOCH_COL, epoch_sink, read_epochs, require_columns
 
     def step(batch_df: DataFrame, epoch_id: int):
@@ -530,11 +509,11 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
         # and narrowed to hashes the batch can touch (every dedupable
         # batch line is in `part` — just written); unhinted semi-join:
         # AQE broadcasts a small batch side, shuffle-joins a huge one
-        idx = rollup_line_winners(
+        idx = merge_partials(
             read_epochs(spark, winner_table, before=epoch_id + 1)
             .filter(F.col(LINE_SHARD_COL).isin(shards))
             .drop(LINE_SHARD_COL)
-            .join(part.select("_h"), "_h", "semi"))
+            .join(part.select("_h"), "_h", "semi"), LINE_WINNER_MERGE)
         yield scrub_with_line_winners(batch_df, idx, id_col, text_col,
                                       sep, min_chars)
 

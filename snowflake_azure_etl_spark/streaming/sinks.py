@@ -43,6 +43,8 @@ from typing import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketches import merge_partials
+
 EPOCH_COL = "_epoch_id"
 
 
@@ -121,8 +123,8 @@ def read_epochs(spark: SparkSession, table: str, *,
     probe of epoch N — and returns None while the table does not exist
     yet (the probe of a sink's first epoch). `merge` maps each value
     column to the aggregate of its family's merge law
-    (`{"cnt": "sum"}`, `{"word": "bit_or"}`); every other column is a
-    group key, so the epoch partials fold into the artifact of the
+    (`CMS_MERGE`, `BLOOM_MERGE`, ...): the epoch partials fold through
+    `operators.sketches.merge_partials` into the artifact of the
     concatenated stream."""
     if before is not None and not spark.catalog.tableExists(table):
         return None
@@ -130,11 +132,7 @@ def read_epochs(spark: SparkSession, table: str, *,
     if before is not None:
         df = df.filter(F.col(EPOCH_COL) < int(before))
     df = df.drop(EPOCH_COL)
-    if merge:
-        df = (df.groupBy(*(c for c in df.columns if c not in merge))
-              .agg(*(getattr(F, how)(c).alias(c)
-                     for c, how in merge.items())))
-    return df
+    return merge_partials(df, merge) if merge else df
 
 
 def require_columns(spark: SparkSession, table: str,
@@ -235,8 +233,8 @@ def compact_epochs(spark: SparkSession, table: str, upto_epoch: int,
     partition at id `upto_epoch - 1` (the newest slot being replaced,
     so later ids stay monotone), then vacuum the older partials.
     Returns partitions dropped. `merge_cols` is the family's merge law
-    (`operators.sketches.CMS_MERGE`; `{"n_occurrences": "sum"}` for a
-    substring window index), so rollup cost stays O(recent epochs).
+    (`operators.sketches.CMS_MERGE`, `operators.dedup.WINDOW_INDEX_MERGE`,
+    ...), so rollup cost stays O(recent epochs).
     Same watermark discipline as vacuum_epochs — only compact below the
     checkpoint's committed offset. The merged partial is eagerly
     localCheckpointed BEFORE the write: the baseline overwrites a

@@ -1,15 +1,17 @@
 """Streaming sketch maintenance (north-star extension): per-epoch
 Count-Min, Bloom and histogram PARTIALS landed idempotently, rolled up
-on read — completing the per-artifact streaming-maintenance set (exact
-dedup → `streaming.dedup`, near-dup → `streaming.neardup`, vector
-index → `streaming.vectors`, frequency/membership/quantile sketches →
-here).
+on read by `sinks.read_epochs(spark, table, merge=LAW)` with the
+family's law — completing the per-artifact streaming-maintenance set
+(exact dedup → `streaming.dedup`, near-dup → `streaming.neardup`,
+vector index → `streaming.vectors`, frequency/membership/quantile
+sketches → here).
 
 Why partials-per-epoch is the right streaming shape: the sketches are
 LINEAR — CMS and histograms merge by counter SUM, Bloom by word bit_or
-(`operators.sketches.CMS_MERGE` / `BLOOM_MERGE` / `HIST_MERGE`, laws
-pinned in tests/test_sketches.py) — so a micro-batch only ever lands
-its own d·w-row (or m/32-row, or bins-row) partial. A read-modify-write
+(`operators.sketches.CMS_MERGE` / `BLOOM_MERGE` / `HIST_MERGE`, folded
+by `operators.sketches.merge_partials`, laws pinned in
+tests/test_sketches.py) — so a micro-batch only ever lands its own
+d·w-row (or m/32-row, or bins-row) partial. A read-modify-write
 "update the global sketch" sink would double-add on every at-least-once
 replay; the replay-safety argument is `streaming.sinks`'.
 
@@ -23,13 +25,12 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ..operators.sketches import (BLOOM_BITS, BLOOM_HASHES, BLOOM_MERGE,
-                                  CMS_DEPTH, CMS_MERGE, CMS_WIDTH,
-                                  HIST_BINS, HIST_MERGE, bloom_build,
+from ..operators.sketches import (BLOOM_BITS, BLOOM_HASHES, CMS_DEPTH,
+                                  CMS_WIDTH, HIST_BINS, bloom_build,
                                   cms_build, equiwidth_histogram)
-from .sinks import epoch_sink, read_epochs
+from .sinks import epoch_sink
 
 
 def cms_ingest_sink(table: str, key_col: str,
@@ -43,13 +44,6 @@ def cms_ingest_sink(table: str, key_col: str,
         table)
 
 
-def cms_rollup(spark: SparkSession, table: str) -> DataFrame:
-    """(j, bucket, cnt): the stream-lifetime sketch — SUM over all
-    epoch partials (linearity; identical to having built one sketch
-    over the concatenated stream, pinned in tests)."""
-    return read_epochs(spark, table, merge=CMS_MERGE)
-
-
 def bloom_ingest_sink(table: str, key_col: str,
                       bits: int = BLOOM_BITS,
                       hashes: int = BLOOM_HASHES
@@ -61,12 +55,6 @@ def bloom_ingest_sink(table: str, key_col: str,
         table)
 
 
-def bloom_rollup(spark: SparkSession, table: str) -> DataFrame:
-    """(word_idx, word): the stream-lifetime filter — bit_or over all
-    epoch partials."""
-    return read_epochs(spark, table, merge=BLOOM_MERGE)
-
-
 def hist_ingest_sink(table: str, value_col: str, lo: float, hi: float,
                      bins: int | None = None
                      ) -> Callable[[DataFrame, int], None]:
@@ -75,17 +63,12 @@ def hist_ingest_sink(table: str, value_col: str, lo: float, hi: float,
     quantile-sketch member of the maintenance family (bin counts are
     exact integers, merge law = SUM, same linearity as CMS). Bounds
     are the caller's catalog bounds, fixed for the table's lifetime:
-    partials with different bounds would merge into nonsense."""
+    partials with different bounds would merge into nonsense. The
+    `HIST_MERGE` rollup feeds `operators.sketches.histogram_quantiles`
+    for stream-lifetime quantiles without sorting (or even retaining)
+    the stream."""
     bins = HIST_BINS if bins is None else bins
     return epoch_sink(
         lambda batch_df, _: [equiwidth_histogram(batch_df, value_col,
                                                  lo, hi, bins)],
         table)
-
-
-def hist_rollup(spark: SparkSession, table: str) -> DataFrame:
-    """(bin, cnt): the stream-lifetime histogram — SUM over all epoch
-    partials; feed it straight to
-    `operators.sketches.histogram_quantiles` for stream-lifetime
-    p50/p95 without ever sorting (or even retaining) the stream."""
-    return read_epochs(spark, table, merge=HIST_MERGE)

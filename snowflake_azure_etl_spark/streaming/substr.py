@@ -19,20 +19,25 @@ the batch result is pinned equal to the BATCH operator probing the
 merged earlier-epoch index (tests/test_streaming_substr.py).
 
 Scale notes: the index partial is (distinct batch windows × one
-32-hex digest) rows; counts merge by SUM, so `sinks.compact_epochs`
-with {'n_occurrences': 'sum'} bounds the rollup exactly like the CMS
-table; per epoch only the batch pays the window hashing."""
+32-hex digest) rows; counts merge by SUM (`dedup.WINDOW_INDEX_MERGE`),
+so the stream-lifetime index is `sinks.read_epochs(spark, table,
+merge=WINDOW_INDEX_MERGE)` and `sinks.compact_epochs` with the same
+law bounds the epoch count exactly like the CMS table. Per epoch only
+the batch pays the window hashing, and the index probe is narrowed to
+the batch's own window hashes."""
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (SUBSTR_MIN_COUNT, SUBSTR_MIN_LEN,
+                               WINDOW_INDEX_MERGE,
                                incremental_scrub_duplicate_substrings,
-                               merge_window_index, window_hash_index)
+                               window_hash_index)
+from ..operators.sketches import merge_partials
 from .sinks import epoch_sink, read_epochs
 
 
@@ -43,35 +48,38 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
                              min_count: int = SUBSTR_MIN_COUNT
                              ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function. Per epoch: (1) the batch's
-    scrub report vs the rolled-up earlier-epoch index → `scrub_table`;
-    (2) the batch's own window-hash counts → `index_table`. Both
-    epoch-idempotent."""
+    scrub report vs the earlier-epoch index → `scrub_table`; (2) the
+    batch's own window-hash counts → `index_table`. Both
+    epoch-idempotent.
+
+    The probe reads only what the batch can touch: earlier partials
+    semi-join the batch's own window hashes BEFORE the SUM merge, so
+    the per-epoch aggregate is batch-bounded, not stream-lifetime
+    sized (the line-dedup sink's narrowing). Rows of a foreign width
+    ride along unnarrowed — a healthy table has none, and parquet can
+    skip its row groups by their min/max statistics — so the probe's
+    width check (`dedup.window_width_checked`) still fails loud on a
+    mixed-width table (e.g. two sinks configured differently —
+    ADVICE r10)."""
 
     def step(batch_df: DataFrame, epoch_id: int):
         partial = window_hash_index(batch_df, id_col, text_col, min_len)
-        index = read_epochs(batch_df.sparkSession, index_table,
-                            before=epoch_id)
-        # merge_window_index carries the min_len provenance column
-        # and fails loud if the table holds mixed-width partials
-        # (e.g. two sinks configured differently — ADVICE r10)
-        index = (partial.limit(0) if index is None else
-                 merge_window_index(_ensure_min_len(index, min_len)))
+        earlier = read_epochs(batch_df.sparkSession, index_table,
+                              before=epoch_id)
+        if earlier is None:
+            index = partial.limit(0)
+        else:
+            earlier = _ensure_min_len(earlier, min_len)
+            index = merge_partials(
+                [earlier.join(partial.select("window_hash"),
+                              "window_hash", "semi"),
+                 earlier.filter(F.col("min_len") != int(min_len))],
+                WINDOW_INDEX_MERGE)
         report = incremental_scrub_duplicate_substrings(
             batch_df, index, id_col, text_col, min_len, min_count)
         return report, partial
 
     return epoch_sink(step, scrub_table, index_table)
-
-
-def substr_index_rollup(spark: SparkSession, table: str,
-                        min_len: int = SUBSTR_MIN_LEN) -> DataFrame:
-    """(window_hash, n_occurrences, min_len): the stream-lifetime
-    index — SUM over all epoch partials (identical to
-    `window_hash_index` over the concatenated stream; the
-    `merge_window_index` law, width-guarded). ``min_len`` is only the
-    legacy-table assumption (see `_ensure_min_len`)."""
-    return merge_window_index(_ensure_min_len(read_epochs(spark, table),
-                                              min_len))
 
 
 def _ensure_min_len(index: DataFrame, min_len: int) -> DataFrame:

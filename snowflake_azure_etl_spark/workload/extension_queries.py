@@ -602,8 +602,9 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus; error ≤ one bin width. All inputs to the divides are
     exact longs, so the estimate doubles hash-match unquantized.
 
-    **Rollup legs** (cms_build/bloom_build `group_cols` + cms_merge/
-    bloom_merge, X-SKETCH-ROLLUP — r10, VERDICT r9 #2): the streaming
+    **Rollup legs** (cms_build/bloom_build `group_cols` +
+    merge_partials under CMS_MERGE/BLOOM_MERGE, X-SKETCH-ROLLUP — r10,
+    VERDICT r9 #2): the streaming
     maintenance claim, driver-attested. Rows/keys land in 3 epochs;
     each epoch's bounded PARTIAL (d×w counters / m∕32 words — the
     relation `streaming.sketches` lands per micro-batch) is built in
@@ -632,10 +633,11 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the build side is too big to broadcast raw, broadcast its m/32
     words instead (Spark's runtime bloom join, as a persistable,
     mergeable, attestable relation)."""
-    from ..operators.sketches import (bloom_build, bloom_merge,
-                                      bloom_probe, cms_build,
-                                      cms_estimate, cms_merge,
-                                      hll_partials, hll_rollup, kmv_mins)
+    from ..operators.sketches import (BLOOM_MERGE, CMS_MERGE,
+                                      bloom_build, bloom_probe,
+                                      cms_build, cms_estimate,
+                                      hll_partials, hll_rollup,
+                                      kmv_mins, merge_partials)
     from ..sources.registry import stage_row_count
     e = load_tables(spark, sf_dir, ("events",))["events"]
     n_rows = stage_row_count(sf_dir, "events")
@@ -710,7 +712,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition); each epoch's d×w PARTIAL is built in one grouped
     # aggregate (cms_build group_cols — the relation
     # streaming.sketches.cms_ingest_sink lands per micro-batch) and
-    # cms_merge (plain SUM) rolls them up. The leg emits the merged
+    # merge_partials under CMS_MERGE (plain SUM) rolls them up. The
+    # leg emits the merged
     # counter BESIDE the full-stream build's counter for every
     # non-empty cell, and the DuckDB oracle replays the partial-union
     # independently — linearity, the whole reason per-epoch partials
@@ -732,7 +735,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias("estimate")))
         partials = cms_build(ep_exact, "k", weight="n",
                              group_cols=("ep",))
-        merged = cms_merge(partials.select("j", "bucket", "cnt"))
+        merged = merge_partials(partials.select("j", "bucket", "cnt"),
+                                CMS_MERGE)
         rollup = (merged.join(cms.withColumnRenamed("cnt", "_full"),
                               ["j", "bucket"], "full")
                   .select(F.concat(F.col("j").cast("string"), F.lit(":"),
@@ -874,7 +878,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cms_rollup — the build keys land in 3 epochs (suppkey mod 3),
     # each epoch's m/32-word PARTIAL comes from one grouped bit_or
     # (bloom_build group_cols — streaming.sketches.bloom_ingest_sink's
-    # per-micro-batch relation) and bloom_merge rolls them up; the leg
+    # per-micro-batch relation) and merge_partials under BLOOM_MERGE
+    # rolls them up; the leg
     # emits the merged word BESIDE the full build's word for every
     # non-empty word_idx, oracle-replayed word for word:
     # filter(∪ epochs) == ∪ filter(epoch), the law that lets a stream
@@ -884,7 +889,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pmod(F.col("s_suppkey"), F.lit(3)).alias("ep"),
             F.col("s_suppkey").cast("string").alias("k"))
         partials = bloom_build(keyed, "k", group_cols=("ep",))
-        merged = bloom_merge(partials.select("word_idx", "word"))
+        merged = merge_partials(partials.select("word_idx", "word"),
+                                BLOOM_MERGE)
         return (merged.join(bloom.withColumnRenamed("word", "_full"),
                             ["word_idx"], "full")
                 .select(F.col("word_idx").cast("string")

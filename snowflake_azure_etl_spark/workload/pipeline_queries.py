@@ -20,6 +20,7 @@ from ..operators import segment as seg_ops
 from ..operators import unigram as ug_ops
 from ..operators import wordpiece as wp_ops
 from ..operators.sampling import DSIR_BUCKETS, plog2_sql
+from ..operators.sketches import subtract_partials
 from ..sources.registry import load_tables, stage_row_count
 from ._registry import query, union_legs
 
@@ -881,16 +882,20 @@ def q53_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q51 pattern): docs ≡0 (mod 5) replayed as an ingest batch
     # scrubbed against the REST-of-corpus window_hash_index. Since
     # r11 the rest index is DERIVED from the shared full-corpus
-    # artifact by `subtract_window_index` (the deletion-side merge
-    # law — only the batch is re-hashed), so the leg additionally
+    # artifact by `subtract_partials` under WINDOW_INDEX_MERGE (the
+    # deletion-side merge law, both sides width-checked — only the
+    # batch is re-hashed), so the leg additionally
     # attests the subtraction law end-to-end: the ORACLE still
     # restricts the full-corpus scrub to the batch docs, so a wrong
     # subtraction would hash-mismatch.
     def build_substr_incr():
         batch = docs.filter(F.col("doc_id") % 5 == 0)
         batch_occ = substr_occ.filter(F.col("doc_id") % 5 == 0)
-        idx = dedup.subtract_window_index(
-            substr_index, dedup.window_hash_index(batch, occ=batch_occ))
+        idx = subtract_partials(*(
+            dedup.window_width_checked(ix, dedup.SUBSTR_MIN_LEN)
+            for ix in (substr_index,
+                       dedup.window_hash_index(batch, occ=batch_occ))),
+            dedup.WINDOW_INDEX_MERGE)
         return (dedup.incremental_scrub_duplicate_substrings(
                     batch, idx, occ=batch_occ)
                 .select(F.col("doc_id").alias("id_a"),

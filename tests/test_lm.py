@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import lm
+from snowflake_azure_etl_spark.operators.sketches import (merge_partials,
+                                                          subtract_partials)
 from snowflake_azure_etl_spark.plans.prefix import WINDOW_MAX_ROWS
 
 SCALE = 1 << 20
@@ -226,11 +228,11 @@ def test_lm3_gram_laws_hold_on_trigram_keys(spark):
     ta = lm.gram_counts(lm.tokenized(da), 3)
     tb = lm.gram_counts(lm.tokenized(db), 3)
     tall = lm.gram_counts(lm.tokenized(dall), 3)
-    merged = lm.merge_gram_counts(ta, tb)
+    merged = merge_partials([ta, tb], lm.GRAM_MERGE)
     want = {tuple(r[k] for k in keys): r["c"] for r in tall.collect()}
     got = {tuple(r[k] for k in keys): r["c"] for r in merged.collect()}
     assert got == want
-    back = lm.subtract_gram_counts(merged, tb)
+    back = subtract_partials(merged, tb, lm.GRAM_MERGE)
     got_a = {tuple(r[k] for k in keys): r["c"] for r in back.collect()}
     assert got_a == {tuple(r[k] for k in keys): r["c"]
                      for r in ta.collect()}
@@ -335,8 +337,9 @@ def test_cuts_from_rollup_matches_batch_retrain(spark):
     da = spark.createDataFrame(half_a, "doc_id long, text string")
     db = spark.createDataFrame(half_b, "doc_id long, text string")
     dall = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merged = [lm.merge_gram_counts(lm.gram_counts(lm.tokenized(da), n),
-                                   lm.gram_counts(lm.tokenized(db), n))
+    merged = [merge_partials([lm.gram_counts(lm.tokenized(da), n),
+                              lm.gram_counts(lm.tokenized(db), n)],
+                             lm.GRAM_MERGE)
               for n in (1, 2, 3)]
     got = lm.lm_selection_from_rollup(dall, merged, 3)
     assert got.collect() == lm.lm_terciles(score(dall, 3)).collect()
@@ -442,8 +445,8 @@ def test_lm_count_merge_and_subtract_laws(spark):
     ub, bb = (lm.gram_counts(lm.tokenized(B), n) for n in (1, 2))
     uu, bu = (lm.gram_counts(lm.tokenized(U), n) for n in (1, 2))
 
-    merged_u = lm.merge_gram_counts(ua, ub)
-    merged_b = lm.merge_gram_counts(ba, bb)
+    merged_u = merge_partials([ua, ub], lm.GRAM_MERGE)
+    merged_b = merge_partials([ba, bb], lm.GRAM_MERGE)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
@@ -459,14 +462,14 @@ def test_lm_count_merge_and_subtract_laws(spark):
     assert s1 == s2
 
     # subtraction inverts the merge exactly
-    back_u = lm.subtract_gram_counts(merged_u, ub)
-    back_b = lm.subtract_gram_counts(merged_b, bb)
+    back_u = subtract_partials(merged_u, ub, lm.GRAM_MERGE)
+    back_b = subtract_partials(merged_b, bb, lm.GRAM_MERGE)
     assert rows(back_u) == rows(ua)
     assert rows(back_b) == rows(ba)
 
     # over-subtraction (removing a non-subset) fails loud
     with pt.raises(Exception, match="over-subtraction"):
-        lm.subtract_gram_counts(ua, merged_u).collect()
+        subtract_partials(ua, merged_u, lm.GRAM_MERGE).collect()
 
 
 def test_lm_subtract_guard_closes_review_holes(spark):
@@ -480,12 +483,13 @@ def test_lm_subtract_guard_closes_review_holes(spark):
     # (a) removed-only gram
     alien = spark.createDataFrame([("zz", 1)], "tok string, c long")
     with pt.raises(Exception, match="over-subtraction"):
-        lm.subtract_gram_counts(idx, alien).collect()
+        subtract_partials(idx, alien, lm.GRAM_MERGE).collect()
     # (b) duplicate keys summing past the index count
     dup = spark.createDataFrame([("a", 3), ("a", 3)], "tok string, c long")
     with pt.raises(Exception, match="over-subtraction"):
-        lm.subtract_gram_counts(idx, dup).collect()
+        subtract_partials(idx, dup, lm.GRAM_MERGE).collect()
     # duplicate keys that sum WITHIN the index count subtract once
     ok = spark.createDataFrame([("a", 2), ("a", 2)], "tok string, c long")
-    got = sorted(map(tuple, lm.subtract_gram_counts(idx, ok).collect()))
+    got = sorted(map(tuple, subtract_partials(
+        idx, ok, lm.GRAM_MERGE).collect()))
     assert got == [("a", 1), ("b", 2)]

@@ -8,6 +8,7 @@ catalog fails here, not in a 100 TB run."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -179,7 +180,6 @@ def test_one_centroid_ranking_site():
     similarity._nearest_cells: assignment, probes and drift all go
     through it. A second caller of _cell_scores, or a second crossJoin
     of the centroid array, is a hand-kept copy of that path."""
-    import ast
     cent = re.compile(r"\b(cent_arr|cents|_centroid_array)\b")
     sites = []
     for py in sorted(_PKG.rglob("*.py")):
@@ -222,7 +222,6 @@ def test_one_leg_assembly_path():
     package function starts an InheritableThread. A unionByName in a
     workload module outside UNTAGGED_UNION_OK is a hand-rolled leg
     union whose legs no single place names."""
-    import ast
     threads, unions = set(), {}
     for py in sorted(_PKG.rglob("*.py")):
         rel = str(py.relative_to(_PKG))
@@ -244,6 +243,95 @@ def test_one_leg_assembly_path():
     assert not drift, (
         "unionByName sites in workload/ as (found, allowed) — build "
         f"tagged legs through union_legs: {drift}")
+
+
+#: (module, top-level function) -> the merge-law sites it may hold in
+#: operators/ or streaming/. Outside the law-keyed pair, each refolds
+#: an intermediate column of its own plan, not a landed artifact.
+MERGE_LAW_OK = {
+    ("operators/sketches.py", "merge_partials"): 1,
+    ("operators/sketches.py", "subtract_partials"): 1,
+    # the KMV merge tree's level-1 fold of per-bucket distinct counts
+    ("operators/sketches.py", "kmv_mins"): 1,
+    # label propagation: each superstep keeps the minimum label
+    ("operators/graph.py", "connected_components"): 1,
+    # Lloyd's update: per-(cell, dim) sums refold per cell
+    ("operators/similarity.py", "_kmeans_update"): 2,
+}
+
+_LAW_AGGS = {"sum", "bit_or", "min", "max"}
+_FULL_JOINS = {"full", "outer", "full_outer", "fullouter"}
+
+
+def _call_attr(n):
+    return getattr(n.func, "attr", None) if isinstance(n, ast.Call) else None
+
+
+def _merge_law_sites(source: str) -> "dict[str, int]":
+    """Top-level function -> its hand-kept merge or subtraction laws:
+    a column re-aggregated under its own name (`F.sum("cnt")
+    .alias("cnt")`, casts allowed between), a law applied by name
+    (`getattr(F, how)`), or a full outer join in a function that
+    subtracts one non-literal column from another."""
+    sites = {}
+    for top in ast.parse(source).body:
+        where = getattr(top, "name", "<module>")
+        n_sites, full_join, subtracts = 0, False, False
+        for n in ast.walk(top):
+            if (_call_attr(n) == "alias" and n.args
+                    and isinstance(n.args[0], ast.Constant)):
+                agg = n.func.value
+                while _call_attr(agg) == "cast":
+                    agg = agg.func.value
+                n_sites += (_call_attr(agg) in _LAW_AGGS and bool(agg.args)
+                            and isinstance(agg.args[0], ast.Constant)
+                            and agg.args[0].value == n.args[0].value)
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+                    and n.func.id == "getattr" and n.args
+                    and getattr(n.args[0], "id", None) == "F"):
+                n_sites += 1
+            if _call_attr(n) == "join":
+                how = n.args[2] if len(n.args) > 2 else next(
+                    (k.value for k in n.keywords if k.arg == "how"), None)
+                full_join |= (isinstance(how, ast.Constant)
+                              and how.value in _FULL_JOINS)
+            if (isinstance(n, ast.BinOp) and isinstance(n.op, ast.Sub)
+                    and not isinstance(n.right, ast.Constant)
+                    and _call_attr(n.right) != "lit"):
+                subtracts = True
+        n_sites += full_join and subtracts
+        if n_sites:
+            sites[where] = n_sites
+    return sites
+
+
+def test_one_merge_law_site():
+    """Every merge, rollup and subtraction of an additive artifact
+    (sketch counters, window/gram/word counts, line winners) goes
+    through operators.sketches.merge_partials / subtract_partials with
+    the family's law constant. A module under operators/ or streaming/
+    that re-aggregates a law column itself, or subtracts counts across
+    a full outer join, is a hand-kept copy of that law."""
+    planted = ('def rollup(a, b):\n'
+               '    return (a.unionByName(b).groupBy("j", "bucket")\n'
+               '            .agg(F.sum("cnt").cast("long").alias("cnt")))\n'
+               'def forget(ix, r):\n'
+               '    return ix.join(r, "k", "full_outer").select(\n'
+               '        (F.col("c") - F.coalesce(F.col("_r"), F.lit(0)))'
+               '.alias("c"))\n')
+    assert _merge_law_sites(planted) == {"rollup": 1, "forget": 1}
+    found = {}
+    for py in sorted(_PKG.rglob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        if rel.split("/")[0] in ("operators", "streaming"):
+            for where, n in _merge_law_sites(py.read_text()).items():
+                found[(rel, where)] = n
+    drift = {k: (found.get(k), MERGE_LAW_OK.get(k))
+             for k in found.keys() | MERGE_LAW_OK.keys()
+             if found.get(k) != MERGE_LAW_OK.get(k)}
+    assert not drift, (
+        "merge-law sites as (found, allowed) — merge or subtract through "
+        f"sketches.merge_partials / subtract_partials: {drift}")
 
 
 #: streaming/ lines that land data outside `sinks.epoch_sink` without

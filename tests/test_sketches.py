@@ -177,11 +177,26 @@ def test_cms_merge_is_linear(spark):
                               "k string")
     b = spark.createDataFrame([(f"k{i % 9}",) for i in range(300)],
                               "k string")
-    merged = sketches.cms_merge(sketches.cms_build(a, "k"),
-                                sketches.cms_build(b, "k"))
+    merged = sketches.merge_partials(
+        [sketches.cms_build(a, "k"), sketches.cms_build(b, "k")],
+        sketches.CMS_MERGE)
     direct = sketches.cms_build(a.unionByName(b), "k")
     assert (sorted(map(tuple, merged.collect()))
             == sorted(map(tuple, direct.collect())))
+
+
+def test_subtract_partials_accepts_sum_laws_only(spark):
+    """A bit_or or min law has no inverse: subtracting under it raises
+    before any plan is built, instead of landing a silently wrong
+    artifact."""
+    import pytest
+    from snowflake_azure_etl_spark.operators import sketches
+    a = sketches.bloom_build(
+        spark.createDataFrame([("a",)], "k string"), "k")
+    for law in (sketches.BLOOM_MERGE, {"_w": "min"},
+                {"cnt": "sum", "word": "bit_or"}):
+        with pytest.raises(ValueError, match="not a sum law"):
+            sketches.subtract_partials(a, a, law)
 
 
 def test_cms_unseen_key_estimates_from_implicit_zeros(spark):
@@ -218,8 +233,9 @@ def test_bloom_merge_is_union(spark):
     from snowflake_azure_etl_spark.operators import sketches
     a = spark.createDataFrame([(f"a{i}",) for i in range(30)], "k string")
     b = spark.createDataFrame([(f"b{i}",) for i in range(30)], "k string")
-    merged = sketches.bloom_merge(sketches.bloom_build(a, "k"),
-                                  sketches.bloom_build(b, "k"))
+    merged = sketches.merge_partials(
+        [sketches.bloom_build(a, "k"), sketches.bloom_build(b, "k")],
+        sketches.BLOOM_MERGE)
     direct = sketches.bloom_build(a.unionByName(b), "k")
     assert (sorted(map(tuple, merged.collect()))
             == sorted(map(tuple, direct.collect())))
@@ -262,9 +278,8 @@ def test_histogram_merges_by_sum_and_clamps_strays(spark):
     b = spark.createDataFrame([(-5.0,), (999.0,), (120.0,)], "v double")
     ha = sketches.equiwidth_histogram(a, "v", 0.0, 100.0, bins=10)
     hb = sketches.equiwidth_histogram(b, "v", 0.0, 100.0, bins=10)
-    merged = {r["bin"]: r["cnt"] for r in
-              ha.unionByName(hb).groupBy("bin")
-              .agg(F.sum("cnt").alias("cnt")).collect()}
+    merged = {r["bin"]: r["cnt"] for r in sketches.merge_partials(
+        [ha, hb], sketches.HIST_MERGE).collect()}
     direct = {r["bin"]: r["cnt"] for r in sketches.equiwidth_histogram(
         a.unionByName(b), "v", 0.0, 100.0, bins=10).collect()}
     assert merged == direct
@@ -342,9 +357,8 @@ def test_grouped_histogram_quantiles_match_per_group_reference(spark):
         for p, est in ref.items():
             assert got[(g, p)] == est
     # grouped bins merge by SUM back to the global histogram
-    regrouped = {r["bin"]: r["cnt"] for r in
-                 hist.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
-                 .collect()}
+    regrouped = {r["bin"]: r["cnt"] for r in sketches.merge_partials(
+        hist.drop("g"), sketches.HIST_MERGE).collect()}
     direct = {r["bin"]: r["cnt"] for r in sketches.equiwidth_histogram(
         df, "v", 0.0, 100.0, bins=10).collect()}
     assert regrouped == direct
@@ -352,7 +366,7 @@ def test_grouped_histogram_quantiles_match_per_group_reference(spark):
 
 def test_grouped_cms_partials_equal_per_group_builds_and_merge(spark):
     """cms_build(group_cols) builds each group's partial exactly as a
-    standalone per-group build would, and cms_merge over the partials
+    standalone per-group build would, and merge_partials over the partials
     equals the full-stream sketch (the q47 rollup legs' law, pinned
     engine-side)."""
     from snowflake_azure_etl_spark.operators import sketches
@@ -367,8 +381,9 @@ def test_grouped_cms_partials_equal_per_group_builds_and_merge(spark):
         grouped = sorted(map(tuple, partials.filter(F.col("ep") == ep)
                              .drop("ep").collect()))
         assert grouped == standalone
-    merged = sorted(map(tuple, sketches.cms_merge(
-        partials.select("j", "bucket", "cnt")).collect()))
+    merged = sorted(map(tuple, sketches.merge_partials(
+        partials.select("j", "bucket", "cnt"), sketches.CMS_MERGE)
+        .collect()))
     full = sorted(map(tuple, sketches.cms_build(
         df, "k", depth=2, width=32).collect()))
     assert merged == full
@@ -380,8 +395,9 @@ def test_grouped_bloom_partials_merge_to_full_filter(spark):
     df = spark.createDataFrame(rows, "ep int, k string")
     partials = sketches.bloom_build(df, "k", bits=256, hashes=2,
                                     group_cols=("ep",))
-    merged = sorted(map(tuple, sketches.bloom_merge(
-        partials.select("word_idx", "word")).collect()))
+    merged = sorted(map(tuple, sketches.merge_partials(
+        partials.select("word_idx", "word"), sketches.BLOOM_MERGE)
+        .collect()))
     full = sorted(map(tuple, sketches.bloom_build(
         df, "k", bits=256, hashes=2).collect()))
     assert merged == full

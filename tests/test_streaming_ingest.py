@@ -437,7 +437,8 @@ def test_lm_counts_ingest_grows_model(spark):
     from pyspark.sql import functions as F
 
     from snowflake_azure_etl_spark.operators import lm
-    from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
+    from snowflake_azure_etl_spark.streaming.sinks import (EPOCH_COL,
+                                                           read_epochs)
     from snowflake_azure_etl_spark.warehouse import ddl
 
     batches = [
@@ -484,9 +485,9 @@ def test_lm_counts_ingest_grows_model(spark):
     def asmap(df, keys):
         return {tuple(r[k] for k in keys): r["c"] for r in df.collect()}
 
-    uni_roll = ingest.rollup_gram_counts(spark, uni_t)
-    bi_roll = ingest.rollup_gram_counts(spark, bi_t)
-    tri_roll = ingest.rollup_gram_counts(spark, tri_t)
+    uni_roll = read_epochs(spark, uni_t, merge=lm.GRAM_MERGE)
+    bi_roll = read_epochs(spark, bi_t, merge=lm.GRAM_MERGE)
+    tri_roll = read_epochs(spark, tri_t, merge=lm.GRAM_MERGE)
     assert asmap(uni_roll, ("tok",)) == asmap(uni_want, ("tok",))
     assert asmap(bi_roll, ("w1", "w2")) == asmap(bi_want, ("w1", "w2"))
     assert asmap(tri_roll, ("w1", "w2", "w3")) == \
@@ -512,8 +513,8 @@ def test_lm_counts_ingest_grows_model(spark):
 
     # replaying epoch 0 overwrites its partitions — rollup unchanged
     sink(spark.createDataFrame(batches[0], "doc_id long, text string"), 0)
-    assert asmap(ingest.rollup_gram_counts(spark, uni_t), ("tok",)) == \
-        asmap(uni_want, ("tok",))
+    assert asmap(read_epochs(spark, uni_t, merge=lm.GRAM_MERGE),
+                 ("tok",)) == asmap(uni_want, ("tok",))
     assert (spark.table(uni_t).filter(F.col(EPOCH_COL) == 0)
             .groupBy().count().collect()[0][0] > 0)
 
@@ -571,8 +572,10 @@ def test_unigram_counts_ingest_grows_model(spark):
     from pyspark.sql import functions as F
 
     from snowflake_azure_etl_spark.operators import unigram as ug
-    from snowflake_azure_etl_spark.operators.bpe import word_freqs
-    from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
+    from snowflake_azure_etl_spark.operators.bpe import (WORD_FREQ_MERGE,
+                                                         word_freqs)
+    from snowflake_azure_etl_spark.streaming.sinks import (EPOCH_COL,
+                                                           read_epochs)
     from snowflake_azure_etl_spark.warehouse import ddl
 
     batches = [
@@ -609,7 +612,7 @@ def test_unigram_counts_ingest_grows_model(spark):
 
     all_rows = [r for b in batches for r in b]
     whole = spark.createDataFrame(all_rows, "doc_id long, text string")
-    roll = ingest.rollup_word_freqs(spark, words_t)
+    roll = read_epochs(spark, words_t, merge=WORD_FREQ_MERGE)
     want_wf = {r["word"]: r["freq"] for r in word_freqs(whole).collect()}
     assert {r["word"]: r["freq"] for r in roll.collect()} == want_wf
 
@@ -630,7 +633,7 @@ def test_unigram_counts_ingest_grows_model(spark):
 
     # replaying epoch 1 overwrites its partition — rollup unchanged
     sink(spark.createDataFrame(batches[1], "doc_id long, text string"), 1)
-    roll2 = ingest.rollup_word_freqs(spark, words_t)
+    roll2 = read_epochs(spark, words_t, merge=WORD_FREQ_MERGE)
     assert {r["word"]: r["freq"] for r in roll2.collect()} == want_wf
     assert (spark.table(words_t).filter(F.col(EPOCH_COL) == 1)
             .groupBy().count().collect()[0][0] > 0)
@@ -843,6 +846,7 @@ def test_line_dedup_ingest_matches_batch(spark):
     from pyspark.sql import functions as F
 
     from snowflake_azure_etl_spark.operators import dedup
+    from snowflake_azure_etl_spark.operators.sketches import merge_partials
     from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
     from snowflake_azure_etl_spark.warehouse import ddl
 
@@ -885,8 +889,8 @@ def test_line_dedup_ingest_matches_batch(spark):
             for r in dedup.line_dedup(whole).collect()}
 
     # (a) rolled index == batch winner index; full re-scrub == batch
-    idx = dedup.rollup_line_winners(
-        spark.table(win_t).drop(EPOCH_COL))
+    idx = merge_partials(spark.table(win_t).drop(EPOCH_COL),
+                         dedup.LINE_WINNER_MERGE)
     got_idx = {r["_h"]: (r["_w"]["d"], r["_w"]["i"], r["_w"]["t"])
                for r in idx.collect()}
     want_idx = {r["_h"]: (r["_w"]["d"], r["_w"]["i"], r["_w"]["t"])
@@ -1099,6 +1103,7 @@ def test_line_dedup_ingest_winner_table_is_shard_pruned(spark):
     from pyspark.sql import functions as F
 
     from snowflake_azure_etl_spark.operators import dedup
+    from snowflake_azure_etl_spark.operators.sketches import merge_partials
     from snowflake_azure_etl_spark.streaming.ingest import LINE_SHARD_COL
     from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
     from snowflake_azure_etl_spark.warehouse import ddl
@@ -1145,8 +1150,8 @@ def test_line_dedup_ingest_winner_table_is_shard_pruned(spark):
               for r in spark.table(scrub_t).drop(EPOCH_COL).collect()}
     assert online == want
     # and the rolled index still equals the batch winner index
-    idx = dedup.rollup_line_winners(
-        spark.table(win_t).drop(EPOCH_COL, LINE_SHARD_COL))
+    idx = merge_partials(spark.table(win_t).drop(EPOCH_COL, LINE_SHARD_COL),
+                         dedup.LINE_WINNER_MERGE)
     got_idx = {r["_h"]: (r["_w"]["d"], r["_w"]["i"], r["_w"]["t"])
                for r in idx.collect()}
     want_idx = {r["_h"]: (r["_w"]["d"], r["_w"]["i"], r["_w"]["t"])

@@ -16,9 +16,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import sketches as sk
-from snowflake_azure_etl_spark.streaming.sinks import compact_epochs
+from snowflake_azure_etl_spark.streaming.sinks import (compact_epochs,
+                                                       read_epochs)
 from snowflake_azure_etl_spark.streaming.sketches import (
-    bloom_ingest_sink, bloom_rollup, cms_ingest_sink, cms_rollup)
+    bloom_ingest_sink, cms_ingest_sink)
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
@@ -60,6 +61,11 @@ def _run(spark, sink, batches):
     q.awaitTermination(120)
 
 
+def _rolled(spark, t, law):
+    """The table's stream-lifetime sketch, as sorted row tuples."""
+    return sorted(map(tuple, read_epochs(spark, t, merge=law).collect()))
+
+
 def _all_rows(spark, keys):
     return spark.createDataFrame([(k,) for k in keys], "k string")
 
@@ -67,7 +73,7 @@ def _all_rows(spark, keys):
 def test_cms_epoch_partials_roll_up_to_the_batch_sketch(spark):
     t = _table(spark, "cms_partials")
     _run(spark, cms_ingest_sink(t, "k"), BATCHES)
-    rolled = sorted(map(tuple, cms_rollup(spark, t).collect()))
+    rolled = _rolled(spark, t, sk.CMS_MERGE)
     whole = _all_rows(spark, [k for b in BATCHES for k in b])
     direct = sorted(map(tuple, sk.cms_build(whole, "k").collect()))
     assert rolled == direct  # linearity: partial sums == one-shot
@@ -77,16 +83,16 @@ def test_cms_epoch_replay_changes_nothing(spark):
     t = _table(spark, "cms_replay")
     sink = cms_ingest_sink(t, "k")
     _run(spark, sink, BATCHES)
-    before = sorted(map(tuple, cms_rollup(spark, t).collect()))
+    before = _rolled(spark, t, sk.CMS_MERGE)
     sink(_all_rows(spark, BATCHES[1]), 1)  # at-least-once replay
-    assert sorted(map(tuple, cms_rollup(spark, t).collect())) == before
+    assert _rolled(spark, t, sk.CMS_MERGE) == before
 
 
 @pytest.mark.slow
 def test_bloom_epoch_partials_roll_up_to_the_batch_filter(spark):
     t = _table(spark, "bloom_partials")
     _run(spark, bloom_ingest_sink(t, "k"), BATCHES)
-    rolled = bloom_rollup(spark, t)
+    rolled = read_epochs(spark, t, merge=sk.BLOOM_MERGE)
     whole = _all_rows(spark, [k for b in BATCHES for k in b])
     direct = sorted(map(tuple, sk.bloom_build(whole, "k").collect()))
     assert sorted(map(tuple, rolled.collect())) == direct
@@ -100,13 +106,13 @@ def test_bloom_epoch_partials_roll_up_to_the_batch_filter(spark):
 def test_compaction_preserves_every_rollup_answer(spark):
     t = _table(spark, "cms_compact")
     _run(spark, cms_ingest_sink(t, "k"), BATCHES)
-    before = sorted(map(tuple, cms_rollup(spark, t).collect()))
-    dropped = compact_epochs(spark, t, upto_epoch=2, merge_cols={"cnt": "sum"})
+    before = _rolled(spark, t, sk.CMS_MERGE)
+    dropped = compact_epochs(spark, t, upto_epoch=2, merge_cols=sk.CMS_MERGE)
     assert dropped == 1  # epoch 0 folded into the baseline at id 1
     eps = {r[0] for r in spark.table(t)
            .select("_epoch_id").distinct().collect()}
     assert eps == {1, 2}
-    assert sorted(map(tuple, cms_rollup(spark, t).collect())) == before
+    assert _rolled(spark, t, sk.CMS_MERGE) == before
 
 
 def _num_stream_dir(batches):
@@ -127,7 +133,7 @@ def test_hist_epoch_partials_roll_up_and_answer_quantiles(spark):
     feeds histogram_quantiles directly — stream-lifetime p50 without
     retaining the stream."""
     from snowflake_azure_etl_spark.streaming.sketches import (
-        hist_ingest_sink, hist_rollup)
+        hist_ingest_sink)
     batches = [[float(i % 50) for i in range(40)],
                [float(i % 97) for i in range(60)],
                [float(i % 13) for i in range(30)]]
@@ -140,7 +146,7 @@ def test_hist_epoch_partials_roll_up_and_answer_quantiles(spark):
          .option("checkpointLocation", tempfile.mkdtemp(prefix="skh_ck_"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
-    rolled = sorted(map(tuple, hist_rollup(spark, t).collect()))
+    rolled = _rolled(spark, t, sk.HIST_MERGE)
     whole = spark.createDataFrame(
         [(v,) for b in batches for v in b], "v double")
     direct = sorted(map(tuple, sk.equiwidth_histogram(
@@ -148,10 +154,11 @@ def test_hist_epoch_partials_roll_up_and_answer_quantiles(spark):
     assert rolled == direct
     # replay changes nothing
     sink(spark.createDataFrame([(v,) for v in batches[1]], "v double"), 1)
-    assert sorted(map(tuple, hist_rollup(spark, t).collect())) == rolled
+    assert _rolled(spark, t, sk.HIST_MERGE) == rolled
     # the rollup answers quantiles directly
     got = {r["p"]: r["est"] for r in sk.histogram_quantiles(
-        hist_rollup(spark, t), 0.0, 100.0, [0.5], bins=10).collect()}
+        read_epochs(spark, t, merge=sk.HIST_MERGE), 0.0, 100.0, [0.5],
+        bins=10).collect()}
     ref = {r["p"]: r["est"] for r in sk.histogram_quantiles(
         sk.equiwidth_histogram(whole, "v", 0.0, 100.0, bins=10),
         0.0, 100.0, [0.5], bins=10).collect()}

@@ -1,7 +1,9 @@
 """Streaming substring-scrub maintenance (streaming/substr.py): each
 epoch's scrub equals the batch operator probing the merged
 earlier-epoch index, cross-epoch planted runs are caught, epoch replay
-changes nothing, and the index rollup equals the one-shot build."""
+changes nothing, the index rollup equals the one-shot build, a
+mixed-width index table fails loud, and each epoch's Spark job count
+is pinned."""
 
 from __future__ import annotations
 
@@ -15,9 +17,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from snowflake_azure_etl_spark.operators import dedup
-from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL
+from snowflake_azure_etl_spark.streaming.sinks import EPOCH_COL, read_epochs
 from snowflake_azure_etl_spark.streaming.substr import (
-    substr_index_rollup, substr_scrub_ingest_sink)
+    substr_scrub_ingest_sink)
 from snowflake_azure_etl_spark.warehouse import ddl
 
 #: streaming micro-batch waits dominate the suite wall-clock (VERDICT r13
@@ -107,13 +109,13 @@ def test_stream_replay_and_rollup(spark):
     sink = substr_scrub_ingest_sink(ti, ts)
     _run(spark, sink, BATCHES)
     before_scrub = sorted(map(tuple, spark.table(ts).collect()))
-    before_idx = sorted(map(tuple, substr_index_rollup(spark, ti)
-                            .collect()))
+    before_idx = sorted(map(tuple, read_epochs(
+        spark, ti, merge=dedup.WINDOW_INDEX_MERGE).collect()))
     # deliberate at-least-once replay of epoch 1
     sink(spark.createDataFrame(BATCHES[1], "doc_id long, text string"), 1)
     assert sorted(map(tuple, spark.table(ts).collect())) == before_scrub
-    assert sorted(map(tuple, substr_index_rollup(spark, ti)
-                      .collect())) == before_idx
+    assert sorted(map(tuple, read_epochs(
+        spark, ti, merge=dedup.WINDOW_INDEX_MERGE).collect())) == before_idx
     # rollup == one-shot index over the concatenated stream
     whole = spark.createDataFrame(
         [r for b in BATCHES for r in b], "doc_id long, text string")
@@ -121,17 +123,62 @@ def test_stream_replay_and_rollup(spark):
     assert before_idx == direct
 
 
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_rollup_reads_legacy_table_without_min_len(spark):
     """Review finding r11: a pre-provenance index table (no min_len
-    column) must still roll up — the shim assumes the caller's
-    configured width instead of crashing the stream."""
-    t = _table(spark, "sx_legacy")
-    docs = spark.createDataFrame(BATCHES[0], "doc_id long, text string")
+    column) must still be read — the sink assumes its configured
+    width instead of crashing the stream, so its next epoch scrubs
+    against the legacy counts and the rollup keeps summing them."""
+    t, ts = _table(spark, "sx_legacy"), _table(spark, "sx_legacy_scrub")
+    docs = _batch(spark, BATCHES[0])
     legacy = (dedup.window_hash_index(docs).drop("min_len")
               .withColumn(EPOCH_COL, F.lit(0).cast("long")))
     legacy.write.partitionBy(EPOCH_COL).format("parquet").saveAsTable(t)
-    got = {r["window_hash"]: (r["n_occurrences"], r["min_len"])
-           for r in substr_index_rollup(spark, t).collect()}
-    want = {r["window_hash"]: (r["n_occurrences"], 8)
-            for r in dedup.window_hash_index(docs).collect()}
-    assert got == want
+    substr_scrub_ingest_sink(t, ts)(_batch(spark, BATCHES[1]), 1)
+    got = {r["doc_id"]: r["n_removed"] for r in spark.table(ts).collect()}
+    assert got == {10: 10, 11: 0}  # the epoch-0 run, scrubbed at epoch 1
+    rolled = {r["window_hash"]: r["n_occurrences"]
+              for r in read_epochs(spark, t,
+                                   merge=dedup.WINDOW_INDEX_MERGE).collect()}
+    want = {r["window_hash"]: r["n_occurrences"]
+            for r in dedup.window_hash_index(docs.unionByName(
+                _batch(spark, BATCHES[1]))).collect()}
+    assert rolled == want
+
+
+def test_sink_fails_loud_on_mixed_width_index_table(spark):
+    """An index table holding partials of another width (two sinks
+    configured differently) fails the next epoch instead of probing
+    digests that can never match — even though the batch-narrowed
+    read shares no window hash with the foreign partials."""
+    t, ts = _table(spark, "sx_mixed"), _table(spark, "sx_mixed_scrub")
+    substr_scrub_ingest_sink(t, ts, min_len=4)(_batch(spark, BATCHES[0]), 0)
+    with pytest.raises(Exception, match="different min_len"):
+        substr_scrub_ingest_sink(t, ts)(_batch(spark, BATCHES[1]), 1)
+
+
+def test_substr_sink_epoch_job_counts_are_pinned(spark):
+    """Each epoch launches a fixed number of Spark jobs. Epoch 0 has
+    no index to probe; epochs 1 and 2 add the index read, its SUM
+    merge and the width check, and stay level as the index grows: the
+    earlier partials are semi-joined to the batch's own window hashes
+    before the merge, so per-epoch work is bounded by the batch, not
+    by the stream's lifetime. Merging the whole earlier index instead
+    launched 13, 21 and 21 jobs on this fixture."""
+    ti, ts = _table(spark, "sx_jobs"), _table(spark, "sx_jobs_scrub")
+    sink = substr_scrub_ingest_sink(ti, ts)
+    sc = spark.sparkContext
+    counts = []
+    for epoch, rows in enumerate(BATCHES):
+        group = f"substr_sink_epoch_{epoch}"
+        sc.setJobGroup(group, group)
+        try:
+            sink(_batch(spark, rows), epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [13, 18, 18], counts

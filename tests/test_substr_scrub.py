@@ -15,6 +15,10 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from snowflake_azure_etl_spark.operators import dedup
+from snowflake_azure_etl_spark.operators.sketches import (merge_partials,
+                                                          subtract_partials)
+
+LAW = dedup.WINDOW_INDEX_MERGE
 
 
 def _py_scrub(rows, min_len, min_count=2):
@@ -125,9 +129,9 @@ def test_window_index_merge_law(spark):
     b = spark.createDataFrame(DOCS[3:], "doc_id bigint, text string")
     full = spark.createDataFrame(DOCS, "doc_id bigint, text string")
     merged = {r["window_hash"]: r["n_occurrences"]
-              for r in dedup.merge_window_index(
-                  dedup.window_hash_index(a),
-                  dedup.window_hash_index(b)).collect()}
+              for r in merge_partials(
+                  [dedup.window_hash_index(a), dedup.window_hash_index(b)],
+                  LAW).collect()}
     direct = {r["window_hash"]: r["n_occurrences"]
               for r in dedup.window_hash_index(full).collect()}
     assert merged == direct
@@ -164,10 +168,10 @@ def test_incremental_scrub_equals_full_corpus_restriction(spark):
 
 def test_window_index_min_len_provenance_fail_loud(spark):
     """ADVICE r10: the index artifact records its window width; a
-    mixed-width merge and a wrong-width incremental probe both raise
-    instead of silently producing wrong scrubs (the widths share no
-    digests, so a per-row check could never fire — the guard is
-    global)."""
+    mixed-width merge read through the width check and a wrong-width
+    incremental probe both raise instead of silently producing wrong
+    scrubs (the widths share no digests, so a per-row check could
+    never fire — the guard is global)."""
     import pytest
     docs = spark.createDataFrame(DOCS, "doc_id bigint, text string")
     ix8 = dedup.window_hash_index(docs, min_len=8)
@@ -175,7 +179,8 @@ def test_window_index_min_len_provenance_fail_loud(spark):
     assert {r["min_len"] for r in ix8.select("min_len").distinct()
             .collect()} == {8}
     with pytest.raises(Exception, match="different min_len"):
-        dedup.merge_window_index(ix8, ix4).collect()
+        dedup.window_width_checked(
+            merge_partials([ix8, ix4], LAW), 8).collect()
     batch = spark.createDataFrame(
         [(10, RUN + " fresh tail words here")],
         "doc_id bigint, text string")
@@ -198,9 +203,9 @@ def test_window_index_subtraction_law_and_guards(spark):
     part = spark.createDataFrame(DOCS[:2], "doc_id bigint, text string")
     rest = spark.createDataFrame(DOCS[2:], "doc_id bigint, text string")
     got = {r["window_hash"]: r["n_occurrences"]
-           for r in dedup.subtract_window_index(
+           for r in subtract_partials(
                dedup.window_hash_index(full),
-               dedup.window_hash_index(part)).collect()}
+               dedup.window_hash_index(part), LAW).collect()}
     want = {r["window_hash"]: r["n_occurrences"]
             for r in dedup.window_hash_index(rest).collect()}
     assert got == want
@@ -208,18 +213,21 @@ def test_window_index_subtraction_law_and_guards(spark):
         [(99, "totally novel words never indexed anywhere at all ok")],
         "doc_id bigint, text string")
     with pytest.raises(Exception, match="never held"):
-        dedup.subtract_window_index(
+        subtract_partials(
             dedup.window_hash_index(full),
-            dedup.window_hash_index(foreign)).collect()
+            dedup.window_hash_index(foreign), LAW).collect()
     with pytest.raises(Exception, match="over-subtraction"):
-        dedup.subtract_window_index(
+        subtract_partials(
             dedup.window_hash_index(part),
-            dedup.window_hash_index(
-                part.unionByName(part))).collect()
+            dedup.window_hash_index(part.unionByName(part)),
+            LAW).collect()
+    # a window-index subtraction checks both sides' width first
     with pytest.raises(Exception, match="different min_len"):
-        dedup.subtract_window_index(
-            dedup.window_hash_index(full, min_len=8),
-            dedup.window_hash_index(part, min_len=4)).collect()
+        subtract_partials(*(
+            dedup.window_width_checked(ix, 8)
+            for ix in (dedup.window_hash_index(full, min_len=8),
+                       dedup.window_hash_index(part, min_len=4))),
+            LAW).collect()
 
 
 def test_scrub_from_prebuilt_index_identical(spark):
@@ -250,11 +258,11 @@ def test_window_index_subtraction_property(spark, case, cut):
     removed = rows[:min(cut, len(rows))]
     rest = rows[min(cut, len(rows)):]
     full_df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got_rel = dedup.subtract_window_index(
+    got_rel = subtract_partials(
         dedup.window_hash_index(full_df, min_len=min_len),
         dedup.window_hash_index(
             spark.createDataFrame(removed, "doc_id bigint, text string")
-            if removed else full_df.limit(0), min_len=min_len))
+            if removed else full_df.limit(0), min_len=min_len), LAW)
     got = {r["window_hash"]: r["n_occurrences"]
            for r in got_rel.collect()}
     want = {r["window_hash"]: r["n_occurrences"]

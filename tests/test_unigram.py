@@ -330,15 +330,19 @@ def test_subtract_word_freqs_forget_law(spark):
     counts(B) == counts(A) exactly, retraining from the subtracted
     relation == training on the surviving corpus (trajectory and
     all), and over-subtraction fails loud (the shared
-    subtract_gram_counts guard)."""
-    from snowflake_azure_etl_spark.operators.bpe import word_freqs
+    subtract_partials guard)."""
+    from snowflake_azure_etl_spark.operators.bpe import (WORD_FREQ_MERGE,
+                                                         word_freqs)
+    from snowflake_azure_etl_spark.operators.sketches import (
+        subtract_partials)
     a_rows = [(1, "the cat sat on the mat"), (2, "a dog sat on a log")]
     b_rows = [(3, "the cat sat on the hat"), (4, "mat mat mat")]
     da = spark.createDataFrame(a_rows, "doc_id long, text string")
     dall = spark.createDataFrame(a_rows + b_rows,
                                  "doc_id long, text string")
     db = spark.createDataFrame(b_rows, "doc_id long, text string")
-    left = ug.subtract_word_freqs(word_freqs(dall), word_freqs(db))
+    left = subtract_partials(word_freqs(dall), word_freqs(db),
+                             WORD_FREQ_MERGE)
     want = {r["word"]: r["freq"] for r in word_freqs(da).collect()}
     assert {r["word"]: r["freq"] for r in left.collect()} == want
     got = ug.train_unigram_from_words(left)
@@ -347,8 +351,8 @@ def test_subtract_word_freqs_forget_law(spark):
     assert got.pieces == ref.pieces and got.traj == ref.traj
     # not-a-subset fails loud, never a silently wrong model
     with pytest.raises(Exception, match="over-subtraction"):
-        ug.subtract_word_freqs(
-            word_freqs(da), word_freqs(dall)).collect()
+        subtract_partials(word_freqs(da), word_freqs(dall),
+                          WORD_FREQ_MERGE).collect()
 
 
 @pytest.mark.slow
