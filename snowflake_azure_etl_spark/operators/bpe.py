@@ -65,6 +65,12 @@ SENT = "\x01"
 #: The merge law of `word_freqs` partials (`sketches.merge_partials`).
 WORD_FREQ_MERGE = {"freq": "sum"}
 
+#: Training rounds between lineage cuts of the words relation: a
+#: round adds one vocab-local `replace` to the plan, so a few rounds
+#: of re-derived lineage are cheaper than a checkpoint per round.
+#: Catalog training runs 8 merges, so no cut fires mid-loop there.
+CHECKPOINT_EVERY = 8
+
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the one corpus-sized pass
@@ -111,8 +117,7 @@ def _adjacent_pair_counts(words: DataFrame) -> DataFrame:
 
 
 def train_bpe_merges(docs: DataFrame, text_col: str = "text",
-                     n_merges: int = 8,
-                     checkpoint_every: int = 8) -> list[tuple[str, str, int]]:
+                     n_merges: int = 8) -> list[tuple[str, str, int]]:
     """Learn the first `n_merges` BPE merges; returns
     ``[(a, b, cnt), ...]`` in merge order, where a/b are
     sentinel-prefixed symbol strings and cnt the pair frequency at
@@ -125,18 +130,18 @@ def train_bpe_merges(docs: DataFrame, text_col: str = "text",
     adds only one vocab-local `replace` to the plan, so re-deriving a
     few rounds of lineage is cheaper than materializing the vocab
     relation per round (measured ~3x at catalog scale) —
-    `checkpoint_every` bounds the growth for deep merge runs."""
+    `CHECKPOINT_EVERY` bounds the growth for deep merge runs."""
     if n_merges < 1:
         raise ValueError(f"n_merges ({n_merges}) must be >= 1")
     from ._cache import cached_build, plan_key
     key = ("bpe_merges", plan_key(docs.select(text_col)), n_merges)
     return cached_build(
         docs.sparkSession, key,
-        lambda: _train(docs, text_col, n_merges, checkpoint_every))
+        lambda: _train(docs, text_col, n_merges))
 
 
-def _train(docs: DataFrame, text_col: str, n_merges: int,
-           checkpoint_every: int) -> list[tuple[str, str, int]]:
+def _train(docs: DataFrame, text_col: str,
+           n_merges: int) -> list[tuple[str, str, int]]:
     # the learned merge list is the MODEL artifact (k tuples) — memoized
     # per (session, corpus plan, k) by train_bpe_merges the way
     # similarity.ivf_topk memoizes its index: a tokenizer is trained
@@ -171,7 +176,7 @@ def _train(docs: DataFrame, text_col: str, n_merges: int,
             "symstr",
             F.replace(F.col("symstr"), F.lit(f"{a} {b} "),
                       F.lit(a + b[len(SENT):] + " ")))
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_merges:
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < n_merges:
             words = words.localCheckpoint(eager=True)
     return merges
 

@@ -27,11 +27,18 @@ hash-checkable across engines:
   fold order an engine is free to fuse differently), matching SQL's
   left-associated ``+``.
 
+One trainer, one margin chain: `train_probes` trains K probes (one
+per label column) in one GD loop — the binary quality probe is the
+K=1 case, the one-vs-rest language probe one label per class — and
+training, `score_with`/`predict_with` (broadcast weights relation) and
+`score_with_literals` (a shipped model, for streaming) all build their
+margins from `_margin`, so no two paths can diverge.
+
 Scale design (the 100 TB story): one GD round = one narrow projection
 over the corpus (features + per-doc gradient quantization, all
 codegen'd scalar expressions) feeding a SINGLE-ROW hash aggregate of
-d+1 long sums — map-side partial combine reduces each task to d+1
-longs, the classic all-reduce. The weights live in a ONE-ROW broadcast
+K·(d+1) long sums — map-side partial combine reduces each task to
+K·(d+1) longs, the classic all-reduce. The weights live in a ONE-ROW broadcast
 relation (never collected to the driver, never a literal in the plan),
 and each round's weights are eagerly `localCheckpoint`ed (r9, VERDICT
 r8 #1): the checkpoint cuts the lineage so round N's plan references
@@ -40,7 +47,7 @@ corpus scans — without it, `n_iter` lazily-chained rounds cost
 n_iter(n_iter+1)/2 scans when finally materialized (the same lesson
 as the lsh band-key relations). With it, `n_iter` rounds are exactly
 `n_iter` corpus scans and nothing else: no corpus shuffle, no driver
-loop over rows, per-round executor state is d+1 doubles. Scoring is
+loop over rows, per-round executor state is K·(d+1) doubles. Scoring is
 one more broadcast-crossJoin projection. Production trains on a
 sample; pass a filtered `df` — the plan is source-agnostic.
 
@@ -85,14 +92,22 @@ def _slots(feature_cols: Sequence[Column]) -> list[Column]:
     return [F.lit(1.0)] + [c.cast("double") for c in feature_cols]
 
 
-def _margin(w: Column, slots: Sequence[Column]) -> Column:
-    """Explicit left-associated dot product w·[1, f…] (weights array
-    1-indexed via element_at) — the one place fold order could
-    diverge between engines, pinned by construction."""
-    z = F.element_at(w, 1) * slots[0]
-    for i, f in enumerate(slots[1:], start=2):
-        z = z + F.element_at(w, i) * f
+def _margin(ws: Sequence[Column], slots: Sequence[Column]) -> Column:
+    """Explicit left-associated dot product w·[1, f…] over one weight
+    Column per slot — `element_at(_w{k}, i)` of a weights relation
+    (`_probe`) or the literal weights of a shipped model. The one
+    place fold order could diverge between engines, pinned by
+    construction, and the one chain training, batch scoring and
+    literal scoring all build their margins from."""
+    z = ws[0] * slots[0]
+    for w, f in zip(ws[1:], slots[1:]):
+        z = z + w * f
     return z
+
+
+def _probe(k: int, n_slots: int) -> list[Column]:
+    """Probe k's weights, `element_at(_w{k}, i)` per slot (1-indexed)."""
+    return [F.element_at(F.col(f"_w{k}"), i) for i in range(1, n_slots + 1)]
 
 
 def squash(z: Column) -> Column:
@@ -114,71 +129,93 @@ def _empty_corpus_guarded(arr: Column, what: str) -> Column:
         .cast("array<double>"))
 
 
-def train_margin_classifier(df: DataFrame,
-                            feature_cols: Sequence[Column],
-                            label: Column,
-                            n_iter: int = 2,
-                            lr: float = CLS_LR,
-                            scale: int = CLS_SCALE,
-                            eager: bool = True) -> DataFrame:
-    """Train a linear probe by `n_iter` full-batch GD rounds from zero
-    weights; returns a ONE-ROW DataFrame with `_w`: array<double> of
-    length d+1 (bias first).
-
-    Per round:
-      z    = w · [1, f…]          (explicit chain, broadcast weights)
-      p    = squash(z)
-      g_i  = (p − y) · f_i        (y = `label` cast to double)
-      s_i  = Σ floor(g_i · scale) (exact long sum, map-side combined)
-      w_i ← w_i − lr · ((s_i / n) / scale)
-
-    The mean uses n = COUNT(*) over gradient-bearing rows of the full
-    relation, so every engine divides by the same count.
-
-    `eager` (default) localCheckpoints each round's one-row weights,
-    cutting lineage so round N costs exactly one corpus scan — the
-    lazily-chained alternative (`eager=False`, kept for plan
-    inspection and trivially-cheap relations) re-runs rounds 1..N−1's
-    scans per round: n_iter(n_iter+1)/2 total, quadratic at the
-    tens-of-rounds a real probe trains (VERDICT r8 #1). Training with
-    `eager` runs at call time; the checkpointed values are
-    bit-identical to the lazy chain's.
-    """
-    d = len(feature_cols)
-    spark = df.sparkSession
-    w = spark.range(1).select(
-        F.array(*[F.lit(0.0) for _ in range(d + 1)]).alias("_w"))
-    # one evaluation per feature per row per round — see the
-    # equivalent projection boundary in train_one_vs_rest
-    df = df.select(
+def _training_frame(df: DataFrame, feature_cols: Sequence[Column],
+                    labels: Sequence[Column]) -> DataFrame:
+    """(_f0 … _f{d-1}, _y0 … _y{K-1}) doubles: each feature and label
+    expression evaluated ONCE per row per round. The gradient aggregate
+    references every slot K+1 times (K margins + the per-probe gradient
+    columns), and feature expressions are typically split/regex-heavy —
+    without this projection boundary a round re-evaluates them per
+    reference (measured 1.5× on the q57 fold). Values are unchanged
+    doubles, so the recurrence stays bit-identical."""
+    return df.select(
         *[c.cast("double").alias(f"_f{i}")
           for i, c in enumerate(feature_cols)],
-        label.cast("double").alias("_y"))
-    slots = [F.lit(1.0)] + [F.col(f"_f{i}") for i in range(d)]
-    y = F.col("_y")
+        *[y.cast("double").alias(f"_y{k}") for k, y in enumerate(labels)])
+
+
+def _gd_round(base: DataFrame, w: DataFrame, lr: float) -> DataFrame:
+    """One full-batch GD round of every probe over `_training_frame`
+    rows, from the one-row weights `w` (`_w0` … `_w{K-1}`):
+
+      z    = w_k · [1, f…]          (explicit chain, broadcast weights)
+      p    = squash(z)
+      g_i  = (p − y_k) · f_i
+      s_i  = Σ floor(g_i · CLS_SCALE) (exact long sum, map-side combined)
+      w_i ← w_i − lr · ((s_i / n) / CLS_SCALE)
+
+    The mean uses n = COUNT(*) over gradient-bearing rows of the full
+    relation, so every engine divides by the same count. Lazy: the
+    returned one-row relation is the round's plan."""
+    k_n = len(w.columns)
+    n_slots = len(base.columns) - k_n + 1
+    slots = [F.lit(1.0)] + [F.col(f"_f{i}") for i in range(n_slots - 1)]
+    scale = F.lit(float(CLS_SCALE))
+    grads = []
+    for k in range(k_n):
+        r = squash(_margin(_probe(k, n_slots), slots)) - F.col(f"_y{k}")
+        grads += [F.floor((r * slots[i]) * scale).cast("long")
+                  .alias(f"_g{k}_{i}") for i in range(n_slots)]
+    joined = base.crossJoin(bounded_broadcast(
+        w, bound="one-row weight vector", max_rows=1)).select(
+        *[F.col(f"_w{k}") for k in range(k_n)], *grads)
+    agg = joined.agg(
+        # the weights are constant across rows (one-row broadcast);
+        # min() re-surfaces them past the aggregate boundary
+        *[F.min(F.element_at(f"_w{k}", i + 1)).alias(f"_w{k}_{i}")
+          for k in range(k_n) for i in range(n_slots)],
+        *[F.sum(f"_g{k}_{i}").alias(f"_s{k}_{i}")
+          for k in range(k_n) for i in range(n_slots)],
+        F.count("*").alias("_n"))
+    return agg.select(*[
+        _empty_corpus_guarded(F.array(*[
+            F.col(f"_w{k}_{i}")
+            - F.lit(lr) * ((F.col(f"_s{k}_{i}").cast("double")
+                            / F.col("_n")) / scale)
+            for i in range(n_slots)]), "train_probes")
+        .alias(f"_w{k}")
+        for k in range(k_n)])
+
+
+def train_probes(df: DataFrame, feature_cols: Sequence[Column],
+                 labels: Sequence[Column], n_iter: int = 2,
+                 lr: float = CLS_LR) -> DataFrame:
+    """K independent linear probes, one per label column (each cast to
+    double), trained TOGETHER by `n_iter` full-batch GD rounds from
+    zero weights. Returns a ONE-ROW DataFrame with `_w0` … `_w{K-1}`:
+    array<double> weight vectors of length d+1 (bias first), in
+    `labels` order. A binary quality probe passes ``[label]``; a
+    one-vs-rest language probe passes ``[lang == c for c in classes]``.
+
+    Every round is ONE corpus scan and ONE single-row aggregate — the
+    per-probe gradients are just more sum columns in the same
+    all-reduce (K·(d+1) longs). Probes never interact, so probe k is
+    bit-identical to training ``[labels[k]]`` alone (pinned in
+    tests/test_classifier.py), and an oracle replay of the one-label
+    recurrence per probe covers any K.
+
+    Each round's one-row weights are localCheckpointed, cutting
+    lineage so round N costs exactly one corpus scan — a lazily
+    chained loop re-runs rounds 1..N−1's scans per round, n_iter(n_iter
+    +1)/2 in total (VERDICT r8 #1). Training therefore runs at call
+    time."""
+    spark = df.sparkSession
+    base = _training_frame(df, feature_cols, labels)
+    w = spark.range(1).select(
+        *[F.array(*[F.lit(0.0) for _ in range(len(feature_cols) + 1)])
+          .alias(f"_w{k}") for k in range(len(labels))])
     for _ in range(n_iter):
-        z = _margin(F.col("_w"), slots)
-        r = squash(z) - y
-        joined = df.crossJoin(bounded_broadcast(w, bound="one-row weight vector", max_rows=1)).select(
-            F.col("_w"),
-            *[F.floor((r * slots[i]) * F.lit(float(scale)))
-              .cast("long").alias(f"_g{i}")
-              for i in range(d + 1)])
-        agg = joined.agg(
-            # the weights are constant across rows (one-row broadcast);
-            # min() re-surfaces them past the aggregate boundary
-            *[F.min(F.element_at("_w", i + 1)).alias(f"_w{i}")
-              for i in range(d + 1)],
-            *[F.sum(f"_g{i}").alias(f"_s{i}") for i in range(d + 1)],
-            F.count("*").alias("_n"))
-        w = agg.select(_empty_corpus_guarded(F.array(*[
-            F.col(f"_w{i}")
-            - F.lit(lr) * ((F.col(f"_s{i}").cast("double") / F.col("_n"))
-                           / F.lit(float(scale)))
-            for i in range(d + 1)]), "train_margin_classifier")
-            .alias("_w"))
-        if eager:
-            w = w.localCheckpoint(eager=True)
+        w = _gd_round(base, w, lr).localCheckpoint(eager=True)
     return w
 
 
@@ -195,26 +232,54 @@ def _arity_guarded(expr: Column, w: Column, n_slots: int,
 
 
 def score_with(df: DataFrame, feature_cols: Sequence[Column],
-               weights: DataFrame, out_col: str = "clf_score"
-               ) -> DataFrame:
-    """Append `out_col` = squash(w · [1, f…]) via the one-row broadcast
-    weights relation — a pure projection, the corpus never shuffles."""
+               weights: DataFrame,
+               out_cols: Sequence[str] = ("clf_score",)) -> DataFrame:
+    """Append `out_cols[k]` = squash(w_k · [1, f…]) for each probe k of
+    the one-row broadcast weights relation — a pure projection, the
+    corpus never shuffles."""
     slots = _slots(feature_cols)
-    score = squash(_margin(F.col("_w"), slots))
-    return (df.crossJoin(bounded_broadcast(weights, bound="one-row weight vector", max_rows=1))
-            .withColumn(out_col,
-                        _arity_guarded(score, F.col("_w"), len(slots),
-                                       "score_with"))
-            .drop("_w"))
+    n = len(slots)
+    return (df.crossJoin(bounded_broadcast(
+                weights, bound="one-row weight vector", max_rows=1))
+            .withColumns({
+                c: _arity_guarded(squash(_margin(_probe(k, n), slots)),
+                                  F.col(f"_w{k}"), n, "score_with")
+                for k, c in enumerate(out_cols)})
+            .drop(*weights.columns))
+
+
+def predict_with(df: DataFrame, feature_cols: Sequence[Column],
+                 weights: DataFrame, classes: Sequence[str],
+                 out_col: str = "clf_pred",
+                 score_prefix: str | None = None) -> DataFrame:
+    """Argmax prediction over the one-vs-rest probes: `score_with` all
+    K classes, then pick the first class (in `classes` order) whose
+    score is >= every later class's — a chained >=-comparison, NOT a
+    float argmax helper, so the tie rule (earliest class wins) is
+    trivially portable to the SQL oracle. `score_prefix` additionally
+    keeps each per-class score as `{prefix}{class}`."""
+    prefix = "_clf_s_" if score_prefix is None else score_prefix
+    names = [f"{prefix}{c}" for c in classes]
+    s = [F.col(n) for n in names]
+    pred = F.lit(classes[-1])
+    for k in range(len(classes) - 2, -1, -1):
+        cond = s[k] >= s[k + 1]
+        for j in range(k + 2, len(classes)):
+            cond = cond & (s[k] >= s[j])
+        pred = F.when(cond, F.lit(classes[k])).otherwise(pred)
+    out = score_with(df, feature_cols, weights, names).withColumn(out_col,
+                                                                  pred)
+    return out if score_prefix is not None else out.drop(*names)
 
 
 def weights_as_literals(weights: DataFrame) -> list[float]:
-    """Collect the trained weight vector — d+1 doubles, the model
-    artifact a deployment ships. This is the one legitimate collect in
-    the module: it is the TRAINING OUTPUT, bounded by the feature
-    count, and exists so a consumer that cannot join a batch relation
-    (a streaming micro-batch pipeline) can score via literals."""
-    return [float(v) for v in weights.collect()[0]["_w"]]
+    """Collect a one-probe weights relation's vector (`_w0`) — d+1
+    doubles, the model artifact a deployment ships. This is the one
+    legitimate collect in the module: it is the TRAINING OUTPUT,
+    bounded by the feature count, and exists so a consumer that cannot
+    join a batch relation (a streaming micro-batch pipeline) can score
+    via literals."""
+    return [float(v) for v in weights.collect()[0]["_w0"]]
 
 
 def score_with_literals(df: DataFrame, feature_cols: Sequence[Column],
@@ -224,11 +289,11 @@ def score_with_literals(df: DataFrame, feature_cols: Sequence[Column],
     the deployment path (streaming ingest, cross-session scoring): a
     pure row-local projection with the weights folded in as literals,
     legal on a streaming DataFrame where the broadcast-relation
-    crossJoin of `score_with` is not. Arithmetic is the identical
-    left-associated chain, so batch and literal scoring agree
-    bit-for-bit on the same weights. A weight/feature arity mismatch
-    (a probe trained on d features deployed with d' columns — a stale
-    model artifact) raises instead of silently scoring a prefix."""
+    crossJoin of `score_with` is not. The margin is the same `_margin`
+    chain, so batch and literal scoring agree bit-for-bit on the same
+    weights. A weight/feature arity mismatch (a probe trained on d
+    features deployed with d' columns — a stale model artifact) raises
+    instead of silently scoring a prefix."""
     slots = _slots(feature_cols)
     if len(w) != len(slots):
         raise ValueError(
@@ -236,112 +301,5 @@ def score_with_literals(df: DataFrame, feature_cols: Sequence[Column],
             f"{len(feature_cols)} feature columns were passed "
             f"(need {len(feature_cols) + 1} incl. bias) — stale or "
             f"mismatched model artifact")
-    z = F.lit(float(w[0])) * slots[0]
-    for i in range(1, len(w)):
-        z = z + F.lit(float(w[i])) * slots[i]
-    return df.withColumn(out_col, squash(z))
-
-
-def train_one_vs_rest(df: DataFrame,
-                      feature_cols: Sequence[Column],
-                      label_col: Column,
-                      classes: Sequence[str],
-                      n_iter: int = 2,
-                      lr: float = CLS_LR,
-                      scale: int = CLS_SCALE,
-                      eager: bool = True) -> DataFrame:
-    """K independent binary probes (class k vs rest) trained TOGETHER:
-    every GD round is still ONE corpus scan and ONE single-row
-    aggregate — the per-class gradients are just more sum columns in
-    the same all-reduce (K·(d+1) longs instead of d+1; with fastText-
-    style K and d that is still bytes per task). Returns a ONE-ROW
-    DataFrame with `_w0` … `_w{K-1}`: array<double> weight vectors in
-    `classes` order.
-
-    Each class's probe runs the EXACT loop `train_margin_classifier`
-    runs for the label `label_col == classes[k]` — same arithmetic,
-    same quantization — so the k-th output is bit-identical to a
-    standalone binary train on that label (pinned in
-    tests/test_classifier.py), and an oracle replay of the binary
-    recurrence per class covers the multiclass trainer too. `eager`
-    checkpoints each round (linear scans — see
-    train_margin_classifier)."""
-    d = len(feature_cols)
-    k_n = len(classes)
-    spark = df.sparkSession
-    w = spark.range(1).select(
-        *[F.array(*[F.lit(0.0) for _ in range(d + 1)]).alias(f"_w{k}")
-          for k in range(k_n)])
-    # evaluate each feature/label expression ONCE per row per round:
-    # the gradient aggregate references every slot K+1 times (K
-    # margins + the per-class gradient columns), and feature
-    # expressions are typically split/regex-heavy — without this
-    # projection boundary the round re-evaluates them per reference
-    # (measured 1.5× on the q57 fold). Values are unchanged doubles,
-    # so the recurrence stays bit-identical.
-    base = df.select(
-        *[c.cast("double").alias(f"_f{i}")
-          for i, c in enumerate(feature_cols)],
-        *[(label_col == F.lit(c)).cast("double").alias(f"_y{k}")
-          for k, c in enumerate(classes)])
-    slots = [F.lit(1.0)] + [F.col(f"_f{i}") for i in range(d)]
-    ys = [F.col(f"_y{k}") for k in range(k_n)]
-    df = base
-    for _ in range(n_iter):
-        grads = []
-        for k in range(k_n):
-            r = squash(_margin(F.col(f"_w{k}"), slots)) - ys[k]
-            grads += [F.floor((r * slots[i]) * F.lit(float(scale)))
-                      .cast("long").alias(f"_g{k}_{i}")
-                      for i in range(d + 1)]
-        joined = df.crossJoin(bounded_broadcast(w, bound="one-row weight vector", max_rows=1)).select(
-            *[F.col(f"_w{k}") for k in range(k_n)], *grads)
-        agg = joined.agg(
-            *[F.min(F.element_at(f"_w{k}", i + 1)).alias(f"_w{k}_{i}")
-              for k in range(k_n) for i in range(d + 1)],
-            *[F.sum(f"_g{k}_{i}").alias(f"_s{k}_{i}")
-              for k in range(k_n) for i in range(d + 1)],
-            F.count("*").alias("_n"))
-        w = agg.select(*[
-            _empty_corpus_guarded(F.array(*[
-                F.col(f"_w{k}_{i}")
-                - F.lit(lr) * ((F.col(f"_s{k}_{i}").cast("double")
-                                / F.col("_n")) / F.lit(float(scale)))
-                for i in range(d + 1)]), "train_one_vs_rest")
-            .alias(f"_w{k}")
-            for k in range(k_n)])
-        if eager:
-            w = w.localCheckpoint(eager=True)
-    return w
-
-
-def predict_with(df: DataFrame, feature_cols: Sequence[Column],
-                 weights: DataFrame, classes: Sequence[str],
-                 out_col: str = "clf_pred",
-                 score_prefix: str | None = None) -> DataFrame:
-    """Argmax prediction over the one-vs-rest probes: scores all K
-    classes row-locally against the one-row broadcast weights and
-    picks the first class (in `classes` order) whose score is >= every
-    later class's — a chained >=-comparison, NOT a float argmax
-    helper, so the tie rule (earliest class wins) is trivially
-    portable to the SQL oracle. `score_prefix` additionally keeps each
-    per-class score as `{prefix}{class}`."""
-    slots = _slots(feature_cols)
-    k_n = len(classes)
-    out = df.crossJoin(bounded_broadcast(weights, bound="one-row weight vector", max_rows=1))
-    scores = [squash(_margin(F.col(f"_w{k}"), slots))
-              for k in range(k_n)]
-    if score_prefix is not None:
-        for c, s in zip(classes, scores):
-            out = out.withColumn(f"{score_prefix}{c}", s)
-        scores = [F.col(f"{score_prefix}{c}") for c in classes]
-    pred = F.lit(classes[-1])
-    for k in range(k_n - 2, -1, -1):
-        cond = scores[k] >= scores[k + 1]
-        for j in range(k + 2, k_n):
-            cond = cond & (scores[k] >= scores[j])
-        pred = F.when(cond, F.lit(classes[k])).otherwise(pred)
-    # one arity guard covers all probes (trained together, equal length)
-    pred = _arity_guarded(pred, F.col("_w0"), len(slots), "predict_with")
-    out = out.withColumn(out_col, pred)
-    return out.drop(*[f"_w{k}" for k in range(k_n)])
+    return df.withColumn(
+        out_col, squash(_margin([F.lit(float(v)) for v in w], slots)))

@@ -104,8 +104,8 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
        `min_mean_tok_freq`, None disables), and the TRAINED-probe
        gate (`operators.classifier.score_with` ≥ `clf_min_score`
        when `clf_weights`+`clf_feature_cols` are given — the learned
-       upgrade of the hand-tuned `min_quality` floor; train the
-       probe with `classifier.train_margin_classifier`, typically on
+       upgrade of the hand-tuned `min_quality` floor; train a
+       one-label probe with `classifier.train_probes`, typically on
        a labeled sample, and pass its one-row weights relation), and
        the CCNet perplexity gate (`lm_gate` — `operators.lm`:
        "mean" trains the bigram tier on the ORIGINAL corpus and
@@ -176,7 +176,7 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
     if clf_weights is not None:
         from .classifier import score_with
         kept = (score_with(kept, clf_feature_cols, clf_weights,
-                           out_col="_clf_score")
+                           out_cols=["_clf_score"])
                 .filter(F.col("_clf_score") >= clf_min_score)
                 .drop("_clf_score"))
     if lm_gate is not None:

@@ -39,9 +39,6 @@ from pyspark.sql import functions as F
 
 from ..plans.attest import bounded_broadcast
 
-CHECKPOINT_EVERY = 1
-
-
 def connected_components(edges: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 20) -> DataFrame:
     """(id, component) for every node in `edges`, component = min node
@@ -83,14 +80,11 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                    .select(F.col("a.id").alias("id"),
                            F.col("b.label").alias("label")))
             parts = parts.unionByName(hop)
-        new_labels = (parts
-                      .groupBy("id").agg(F.min("label").alias("label")))
-        if it % CHECKPOINT_EVERY == CHECKPOINT_EVERY - 1:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        labels = new_labels
+        labels = (parts.groupBy("id").agg(F.min("label").alias("label"))
+                  .localCheckpoint(eager=True))
         # decimal sum: 10^12 nodes × 10^12-sized ids overflows a long.
         # The probe reads the just-checkpointed labels — cached, cheap.
-        cur_sum = new_labels.agg(
+        cur_sum = labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
         if cur_sum == prev_sum:
             return labels.select("id", F.col("label").alias("component"))

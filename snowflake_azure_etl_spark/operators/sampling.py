@@ -15,6 +15,11 @@ Training-corpus pipelines sample in two shapes:
   (docs per domain, images per site — the CommonCrawl-style
   anti-domination rule). Deterministic: the NTH smallest by an
   explicit order column, not "first N seen".
+- **Token-budget mixing** (`mixture_rates` → `apply_mixture`):
+  temperature-2 per-key rates that hit a token budget, applied by the
+  same id-hash threshold. ONE pair serves every mixture: keys
+  ``[source]`` for the per-source mix, ``[source, stratum]`` with a
+  ``tilt`` for the quality-weighted one.
 
 Scale (100 TB): the keep-decisions are row-local projections — no
 shuffle, no state. `quota_cap` is one rank window on the class key
@@ -28,7 +33,7 @@ batches in bounded N×classes memory), so the window's shuffle carries
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -206,22 +211,35 @@ def _local_precap(df: DataFrame, class_cols: list[str],
 MIX_SCALE = 1 << 20
 
 
-def mixture_rates(df: DataFrame, source_col: str, weight: Column | str,
+def mixture_rates(df: DataFrame, keys: Sequence[str], weight: Column | str,
                   budget_fraction: float = 0.5,
-                  temperature: float = 2.0) -> DataFrame:
-    """(source, toks, rate): per-source sampling rates that hit a
-    total token budget with temperature-flattened shares — the
-    data-mixing step every multilingual/multi-domain LM pipeline runs
-    (share_s ∝ toks_s^(1/τ); τ=2 ⇒ sqrt, the standard flattening that
-    upsamples small domains without letting any one domain dominate).
+                  temperature: float = 2.0,
+                  tilt: Column | None = None) -> DataFrame:
+    """(*keys, toks, rate): per-key sampling rates that hit a total
+    token budget with temperature-flattened shares — the data-mixing
+    step every multilingual/multi-domain LM pipeline runs (share_k ∝
+    toks_k^(1/τ); τ=2 ⇒ sqrt, the standard flattening that upsamples
+    small domains without letting any one domain dominate). Keys are
+    ``[source]`` for a per-source mixture or ``[source, stratum]`` for
+    a per-cell one.
 
-    rate_s = min(1, (share_s · budget) / toks_s), where budget =
+    rate_k = min(1, (share_k · budget) / toks_k), where budget =
     budget_fraction · Σ toks. Engine-portable by the fixed-point
-    contract: per-source weights are floor(sqrt(toks)·2^20) LONGS
-    (sqrt is IEEE correctly-rounded, ·2^20 exact, floor unambiguous),
-    so the share denominator is an order-invariant integer sum; the
-    remaining arithmetic is +,×,÷ doubles with pinned parenthesization.
-    The whole computation is source-count-sized after ONE weighted
+    contract: per-key weights are floor(sqrt(toks)·2^20) LONGS (sqrt
+    is IEEE correctly-rounded, ·2^20 exact, floor unambiguous), so the
+    share denominator is an order-invariant integer sum; the remaining
+    arithmetic is +,×,÷ doubles with pinned parenthesization.
+
+    `tilt` (X-MIXTURE-QUALITY): an integer expression over the key
+    columns that multiplies the fixed-point weight — with the quality
+    stratum qb as a key, ``tilt = qb + 1`` gives a top-of-4 stratum 4×
+    the share of an equal-sized bottom one, upsampling the
+    higher-quality strata of every source while the total stays on
+    budget (quality-classifier-weighted sampling, the fastText-filter
+    tier of C4/CCNet-style pipelines). The share stays an exact
+    integer sum.
+
+    The whole computation is key-count-sized after ONE weighted
     aggregate over the corpus. τ must currently be 2 — other
     temperatures need pow(), which is not bit-portable across
     engines; fail loud rather than silently unportable."""
@@ -229,25 +247,26 @@ def mixture_rates(df: DataFrame, source_col: str, weight: Column | str,
         raise ValueError("mixture_rates: only temperature=2.0 (sqrt) "
                          "is engine-portable; pow() is not")
     w = F.col(weight) if isinstance(weight, str) else weight
-    src = df.groupBy(source_col).agg(F.sum(w).alias("toks"))
-    # fail loud on a non-positive source total (ADVICE r9): toks=0
-    # would make rate = 0.0/0.0 = NaN (double division is IEEE even
-    # under ANSI mode) and silently poison the mixture downstream;
-    # the guard lives inside the weight expression so column pruning
-    # cannot disarm it
+    src = df.groupBy(*keys).agg(F.sum(w).alias("toks"))
+    # fail loud on a non-positive key total (ADVICE r9): toks=0 would
+    # make rate = 0.0/0.0 = NaN (double division is IEEE even under
+    # ANSI mode) and silently poison the mixture downstream; the guard
+    # lives inside the weight expression so column pruning cannot
+    # disarm it
+    qs = F.floor(F.sqrt(F.col("toks").cast("double"))
+                 * F.lit(float(MIX_SCALE))).cast("long")
+    if tilt is not None:
+        qs = qs * tilt.cast("long")
     q = F.when(
         F.col("toks") <= 0,
         F.raise_error(F.concat(
-            F.lit("mixture_rates: source "),
-            F.col(source_col).cast("string"),
+            F.lit("mixture_rates: key "), _key_label(keys),
             F.lit(" has non-positive token total "),
             F.col("toks").cast("string"),
             F.lit(" — its share is undefined (0/0); filter it out "
                   "or fix the weight column"))).cast("long"),
-    ).otherwise(
-        F.floor(F.sqrt(F.col("toks").cast("double"))
-                * F.lit(float(MIX_SCALE))).cast("long"))
-    per = src.select(source_col, "toks", q.alias("qs"))
+    ).otherwise(qs)
+    per = src.select(*keys, "toks", q.alias("qs"))
     tot = per.agg(F.sum("toks").alias("tot"), F.sum("qs").alias("qq"))
     rate = F.least(
         F.lit(1.0),
@@ -257,43 +276,48 @@ def mixture_rates(df: DataFrame, source_col: str, weight: Column | str,
         / F.col("toks").cast("double"))
     return (per.crossJoin(bounded_broadcast(
                 tot, bound="one-row corpus token total", max_rows=1))
-            .select(source_col, "toks", rate.alias("rate")))
+            .select(*keys, "toks", rate.alias("rate")))
 
 
-def apply_mixture(df: DataFrame, rates: DataFrame, source_col: str,
+def _key_label(keys: Sequence[str]) -> Column:
+    """"(k1, k2, …)" — a mixture key for a fail-loud message."""
+    return F.concat(F.lit("("), F.concat_ws(
+        ", ", *[F.col(k).cast("string") for k in keys]), F.lit(")"))
+
+
+def apply_mixture(df: DataFrame, rates: DataFrame, keys: Sequence[str],
                   id_col: Column | str,
                   salt: str = "mixture") -> DataFrame:
-    """APPLY a mixture plan: keep each source's rows at that source's
-    rate — the sampling step that turns `mixture_rates`' plan into the
-    mixed corpus. Per-row decision = deterministic md5-bucket
-    thresholding (the `hash_keep` semantics, so the sample is exact in
-    expected rate, order/partitioning-independent, and replayable),
-    with the threshold coming from the BROADCAST rates relation
-    (source-count-sized) instead of a Python literal — one row-local
-    filter over the corpus, zero shuffles. round(rate·10⁴) is
-    half-up on both engines (positive rates), so the kept set is
-    engine-portable and oracle-attestable.
+    """APPLY a mixture plan: keep each key's rows at that key's rate —
+    the sampling step that turns `mixture_rates`' plan into the mixed
+    corpus. Per-row decision = deterministic md5-bucket thresholding
+    (the `hash_keep` semantics, so the sample is exact in expected
+    rate, order/partitioning-independent, and replayable), with the
+    threshold coming from the BROADCAST rates relation (key-count-
+    sized) instead of a Python literal — one row-local filter over the
+    corpus, zero shuffles. round(rate·10⁴) is half-up on both engines
+    (positive rates), so the kept set is engine-portable and
+    oracle-attestable.
 
-    A source ABSENT from `rates` fails loud (ADVICE r10): the join is
+    A key ABSENT from `rates` fails loud (ADVICE r10): the join is
     LEFT and a null rate raises, rather than the inner-join behavior
-    of silently dropping every row of an unplanned source — the same
+    of silently dropping every row of an unplanned key — the same
     fail-loud contract as `mixture_rates`' non-positive-total guard.
     The raise lives inside the threshold expression so column pruning
     cannot disarm it."""
     thr = F.when(
         F.col("rate").isNull(),
         F.raise_error(F.concat(
-            F.lit("apply_mixture: source "),
-            F.col(source_col).cast("string"),
+            F.lit("apply_mixture: key "), _key_label(keys),
             F.lit(" has no rate in the mixture plan — rebuild "
                   "mixture_rates over the full corpus or filter the "
-                  "source out explicitly"))).cast("long"),
+                  "key out explicitly"))).cast("long"),
     ).otherwise(
         F.round(F.col("rate") * F.lit(float(FRACTION_DENOM))).cast("long"))
     return (df.join(bounded_broadcast(
-                    rates.select(source_col, "rate"),
-                    bound="mixture rates (one row per source)"),
-                    source_col, "left")
+                    rates.select(*keys, "rate"),
+                    bound="mixture rates (one row per key)"),
+                    list(keys), "left")
             .filter(_bucket(id_col, salt) < thr)
             .drop("rate"))
 
@@ -516,14 +540,10 @@ def dsir_resample(ids: DataFrame, feats: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# Quality-weighted mixture (X-MIXTURE-QUALITY) — compose a trained
-# quality score (operators.classifier) into the mixture plan: rates
-# are derived per (source, quality-bucket) cell with the share TILTED
-# linearly by the bucket, so higher-quality strata of every source
-# are upsampled relative to their size while the total stays on
-# budget. The published pattern (quality-classifier-weighted sampling
-# — the fastText-filter tier of C4/CCNet-style pipelines) expressed
-# with the module's fixed-point machinery.
+# Quality strata (X-MIXTURE-QUALITY) — bucket a trained quality score
+# (operators.classifier) so the quality-weighted mixture is plain
+# `mixture_rates`/`apply_mixture` keyed by (source, stratum), with the
+# share tilted by ``stratum + 1``.
 # ---------------------------------------------------------------------------
 
 
@@ -534,76 +554,3 @@ def quality_bucket(score: Column, n_buckets: int = 4) -> Column:
     engines."""
     return F.least(F.floor(score * n_buckets),
                    F.lit(n_buckets - 1).cast("long")).cast("int")
-
-
-def quality_mixture_rates(df: DataFrame, source_col: str,
-                          bucket_col: str, weight: Column | str,
-                          budget_fraction: float = 0.5) -> DataFrame:
-    """(source, bucket, toks, rate): per-(source, quality-bucket)
-    sampling rates hitting `budget_fraction` of the total token mass
-    with quality-tilted temperature-2 shares:
-
-        share_cell ∝ floor(sqrt(toks_cell)·2^20) · (bucket + 1)
-        rate_cell  = min(1, (share_cell/Σshare) · (Σtoks · budget)
-                            / toks_cell)
-
-    The tilt multiplies the fixed-point sqrt weight by the exact
-    integer (bucket+1) — a top-of-4 bucket draws 4× the share of an
-    equal-sized bottom bucket — keeping the share denominator an
-    order-invariant integer sum (the `mixture_rates` portability
-    contract). Cell-count-sized after ONE weighted aggregate; fails
-    loud on a non-positive cell total exactly like `mixture_rates`."""
-    w = F.col(weight) if isinstance(weight, str) else weight
-    src = df.groupBy(source_col, bucket_col).agg(F.sum(w).alias("toks"))
-    q = F.when(
-        F.col("toks") <= 0,
-        F.raise_error(F.concat(
-            F.lit("quality_mixture_rates: cell ("),
-            F.col(source_col).cast("string"), F.lit(", "),
-            F.col(bucket_col).cast("string"),
-            F.lit(") has non-positive token total — its share is "
-                  "undefined (0/0); filter it out or fix the weight "
-                  "column"))).cast("long"),
-    ).otherwise(
-        F.floor(F.sqrt(F.col("toks").cast("double"))
-                * F.lit(float(MIX_SCALE))).cast("long")
-        * (F.col(bucket_col).cast("long") + 1))
-    per = src.select(source_col, bucket_col, "toks", q.alias("qs"))
-    tot = per.agg(F.sum("toks").alias("tot"), F.sum("qs").alias("qq"))
-    rate = F.least(
-        F.lit(1.0),
-        ((F.col("qs").cast("double") / F.col("qq").cast("double"))
-         * (F.col("tot").cast("double")
-            * F.lit(float(budget_fraction))))
-        / F.col("toks").cast("double"))
-    return (per.crossJoin(bounded_broadcast(
-                tot, bound="one-row corpus token total", max_rows=1))
-            .select(source_col, bucket_col, "toks", rate.alias("rate")))
-
-
-def apply_quality_mixture(df: DataFrame, rates: DataFrame,
-                          source_col: str, bucket_col: str,
-                          id_col: Column | str,
-                          salt: str = "qmix") -> DataFrame:
-    """APPLY a quality-weighted mixture plan: the `apply_mixture`
-    semantics with a (source, bucket) composite key — deterministic
-    md5-bucket thresholding against the broadcast rates relation, one
-    row-local filter, zero shuffles, fail-loud on a cell absent from
-    the plan."""
-    thr = F.when(
-        F.col("rate").isNull(),
-        F.raise_error(F.concat(
-            F.lit("apply_quality_mixture: cell ("),
-            F.col(source_col).cast("string"), F.lit(", "),
-            F.col(bucket_col).cast("string"),
-            F.lit(") has no rate in the mixture plan — rebuild "
-                  "quality_mixture_rates over the full corpus"))
-        ).cast("long"),
-    ).otherwise(
-        F.round(F.col("rate") * F.lit(float(FRACTION_DENOM))).cast("long"))
-    return (df.join(bounded_broadcast(
-                    rates.select(source_col, bucket_col, "rate"),
-                    bound="mixture rates (one row per source x stratum)"),
-                    [source_col, bucket_col], "left")
-            .filter(_bucket(id_col, salt) < thr)
-            .drop("rate"))

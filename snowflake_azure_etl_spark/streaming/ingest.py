@@ -526,11 +526,12 @@ def scored_ingest(stream: DataFrame, weights: list[float],
                   out_col: str = "clf_score") -> DataFrame:
     """Arrival-time quality gate with an offline-TRAINED linear probe
     (operators.classifier) — the production train-offline/score-online
-    split: `train_margin_classifier` learns on the batch corpus, the
-    d+1 weight doubles ship here (`weights_as_literals`), and each
+    split: `train_probes` learns a one-label probe on the batch corpus,
+    its d+1 weight doubles ship here (`weights_as_literals`), and each
     micro-batch is scored by a pure row-local projection (streaming
     DataFrames can't join the one-row batch weights relation, so the
-    weights fold in as literals — bit-identical arithmetic, pinned by
+    weights fold in as literals through the same margin chain as batch
+    scoring — bit-identical, pinned by
     tests/test_streaming_ingest.py's stream==batch equivalence).
     `threshold=None` keeps every row (score column only)."""
     from ..operators import classifier

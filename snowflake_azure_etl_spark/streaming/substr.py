@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (SUBSTR_MIN_COUNT, SUBSTR_MIN_LEN,
-                               WINDOW_INDEX_MERGE,
+                               WINDOW_INDEX_MERGE, _window_occurrences,
                                incremental_scrub_duplicate_substrings,
                                window_hash_index)
 from ..operators.sketches import merge_partials
@@ -63,7 +63,16 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
     ADVICE r10)."""
 
     def step(batch_df: DataFrame, epoch_id: int):
-        partial = window_hash_index(batch_df, id_col, text_col, min_len)
+        # the batch's windows are hashed once per epoch: the index
+        # partial and the probe share one occurrence relation, and the
+        # lazy localCheckpoint makes it a plan barrier that the first
+        # write computes and the rest read back (no extra job; not the
+        # session cache, whose plan-keyed entries would pile up one per
+        # epoch)
+        occ = _window_occurrences(batch_df, id_col, text_col,
+                                  min_len).localCheckpoint(eager=False)
+        partial = window_hash_index(batch_df, id_col, text_col, min_len,
+                                    occ=occ)
         earlier = read_epochs(batch_df.sparkSession, index_table,
                               before=epoch_id)
         if earlier is None:
@@ -76,7 +85,8 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
                  earlier.filter(F.col("min_len") != int(min_len))],
                 WINDOW_INDEX_MERGE)
         report = incremental_scrub_duplicate_substrings(
-            batch_df, index, id_col, text_col, min_len, min_count)
+            batch_df, index, id_col, text_col, min_len, min_count,
+            occ=occ)
         return report, partial
 
     return epoch_sink(step, scrub_table, index_table)

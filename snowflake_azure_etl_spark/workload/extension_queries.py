@@ -18,7 +18,9 @@ from ..functions.scalar import dec
 from ..operators import asof
 from ..sources.registry import load_tables
 from ._registry import query, union_legs
-from .pipeline_queries import _DSIR_CTES
+from .pipeline_queries import (_CLF_LSAT_SQL, _CLF_MARGIN_SQL,
+                               _CLF_STOP_SQL, _CLF_TTR_SQL, _DSIR_CTES,
+                               _clf_fx_cte, _clf_round_cte, _squash_sql)
 
 
 def _epoch_us(df: DataFrame, colname: str):
@@ -170,93 +172,73 @@ KMV_K = 16
 CMS_HEAVY_MIN = 80
 
 
+def _mix_rate_ctes(px: str, src: str, keys: str,
+                   tilt: str | None = None) -> str:
+    """The oracle of sampling.mixture_rates at budget 0.5: from the
+    CTE `src` (keys, toks), `{px}q` (fixed-point √toks weight, times
+    `tilt` when given), `{px}t` (one-row totals) and `{px}r` (keys,
+    toks, rate)."""
+    tilted = f" * ({tilt})" if tilt else ""
+    return f"""
+        {px}q AS (SELECT {keys}, toks,
+                         CAST(floor(sqrt(CAST(toks AS DOUBLE))
+                                    * CAST(1048576.0 AS DOUBLE))
+                              AS BIGINT){tilted} AS qs
+                  FROM {src}),
+        {px}t AS (SELECT SUM(toks) AS tot, SUM(qs) AS qq FROM {px}q),
+        {px}r AS (SELECT {keys}, toks,
+                         least(CAST(1.0 AS DOUBLE),
+                               ((CAST(qs AS DOUBLE) / CAST(qq AS DOUBLE))
+                                * (CAST(tot AS DOUBLE)
+                                   * CAST(0.5 AS DOUBLE)))
+                               / CAST(toks AS DOUBLE)) AS rate
+                  FROM {px}q CROSS JOIN {px}t)"""
+
+
+def _mix_keep_sql(salt: str, doc: str, rates: str) -> str:
+    """The oracle of sampling.apply_mixture's keep decision for row
+    alias `doc` against its rate row `rates`."""
+    return f"""CAST('0x' || substr(md5('{salt}:'
+                       || CAST({doc}.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+                  % 10000
+              < CAST(round({rates}.rate * 10000.0) AS BIGINT)"""
+
+
 # --- X-MIXTURE-QUALITY oracle (r11, VERDICT r10 #5) -----------------
 # Quality-weighted mixture: a BINARY quality probe trained in-engine
-# (operators.classifier, 2 GD rounds — the q57 one-vs-rest replay
-# machinery specialized to one class), its rational-sigmoid score
-# bucketed to 4 quality strata, per-(source, bucket) rates from the
-# quality-tilted fixed-point machinery
-# (sampling.quality_mixture_rates), and the kept set replayed row for
-# row. Feature fragments are textually identical to q57's cfx CTE;
-# the weak label is text.quality_score >= 0.5.
-_Q_STOP = ("CAST(len(list_filter(string_split(text, ' '), "
-           "t -> t IN ('the','a','of','and','to','in'))) AS DOUBLE) "
-           "/ len(string_split(text, ' '))")
-_Q_TTR = ("CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) "
-          "/ len(string_split(text, ' '))")
-_Q_LSAT = "LEAST(CAST(length(text) AS DOUBLE) / 200, 1.0)"
-
-
-def _qmix_round_cte(it: int) -> str:
-    """One binary-probe GD round (reads qw{it-1}) — the
-    pipeline_queries._clf_round_cte recurrence with the single y_q
-    label."""
-    s = "1048576.0"
-    sums = ",\n".join(
-        f"SUM(CAST(floor((r*fv[{i + 1}])*{s}) AS BIGINT)) AS s{i}"
-        for i in range(4))
-    ws = ",\n".join(f"MIN(w[{i + 1}]) AS pw{i}" for i in range(4))
-    upd = ",\n".join(
-        f"pw{i} - 0.5*((CAST(s{i} AS DOUBLE)/n)/{s})" for i in range(4))
-    return f"""
-        qgr{it} AS (SELECT fv, w,
-                           0.5*(1.0 + z/(1.0 + abs(z))) - y_q AS r
-                    FROM (SELECT fv, y_q, w,
-                                 w[1]*fv[1] + w[2]*fv[2] + w[3]*fv[3]
-                                 + w[4]*fv[4] AS z
-                          FROM qfx CROSS JOIN qw{it - 1})),
-        qgs{it} AS (SELECT {ws}, {sums}, COUNT(*) AS n FROM qgr{it}),
-        qw{it} AS (SELECT [{upd}] AS w FROM qgs{it})"""
-
-
+# (classifier.train_probes with one label, 2 GD rounds — q57's
+# per-probe replay fragments with prefix "q"), its rational-sigmoid
+# score bucketed to 4 quality strata, per-(source, bucket) rates from
+# the mixture replay tilted by (qb+1), and the kept set replayed row
+# for row. The weak label is text.quality_score >= 0.5 over q57's
+# feature fragments.
 _QMIX_SQL = f"""
     SELECT 'qmix' AS leg, source || ':' || CAST(qb AS VARCHAR),
            CAST(COALESCE(kn, 0) AS BIGINT), CAST(rate AS DOUBLE)
     FROM (
-        WITH qfx AS (
-            SELECT doc_id, source, len(string_split(text, ' ')) AS nt,
-                   [1.0, {_Q_STOP}, {_Q_TTR}, {_Q_LSAT}] AS fv,
-                   CASE WHEN (({_Q_LSAT} + LEAST(({_Q_STOP}) / 0.2, 1.0)
-                               + {_Q_TTR}) / 3) >= CAST(0.5 AS DOUBLE)
-                        THEN 1.0 ELSE 0.0 END AS y_q
-            FROM documents),
-        qw0 AS (SELECT [0.0, 0.0, 0.0, 0.0] AS w),
-        {_qmix_round_cte(1)},
-        {_qmix_round_cte(2)},
-        qsc AS (SELECT doc_id, source, nt,
-                       0.5*(1.0 + z/(1.0 + abs(z))) AS p
-                FROM (SELECT doc_id, source, nt,
-                             w[1]*fv[1] + w[2]*fv[2] + w[3]*fv[3]
-                             + w[4]*fv[4] AS z
-                      FROM qfx CROSS JOIN qw2)),
+        WITH {_clf_fx_cte(
+            "q", {"q": f"(({_CLF_LSAT_SQL} + LEAST(({_CLF_STOP_SQL}) / 0.2,"
+                       f" 1.0) + {_CLF_TTR_SQL}) / 3) >= CAST(0.5 AS DOUBLE)"},
+            extra="source, len(string_split(text, ' ')) AS nt, ")},
+        {_clf_round_cte("q", "q", 1)},
+        {_clf_round_cte("q", "q", 2)},
+        qsc AS (SELECT doc_id, source, nt, {_squash_sql("z")} AS p
+                FROM (SELECT doc_id, source, nt, {_CLF_MARGIN_SQL} AS z
+                      FROM qfx CROSS JOIN qwq2)),
         qcell AS (SELECT doc_id, source, nt,
                          CAST(LEAST(CAST(floor(p * 4) AS BIGINT),
                                     CAST(3 AS BIGINT)) AS INT) AS qb
                   FROM qsc),
         qcs AS (SELECT source, qb, SUM(nt) AS toks
                 FROM qcell GROUP BY 1, 2),
-        qqs AS (SELECT source, qb, toks,
-                       CAST(floor(sqrt(CAST(toks AS DOUBLE))
-                                  * CAST(1048576.0 AS DOUBLE))
-                            AS BIGINT) * (CAST(qb AS BIGINT) + 1) AS qs
-                FROM qcs),
-        qt AS (SELECT SUM(toks) AS tot, SUM(qs) AS qq FROM qqs),
-        qrt AS (SELECT source, qb, toks,
-                       least(CAST(1.0 AS DOUBLE),
-                             ((CAST(qs AS DOUBLE) / CAST(qq AS DOUBLE))
-                              * (CAST(tot AS DOUBLE)
-                                 * CAST(0.5 AS DOUBLE)))
-                             / CAST(toks AS DOUBLE)) AS rate
-                FROM qqs CROSS JOIN qt),
+        {_mix_rate_ctes("qm_", "qcs", "source, qb",
+                        tilt="CAST(qb AS BIGINT) + 1")},
         qk AS (SELECT c.source, c.qb, COUNT(*) AS kn
-               FROM qcell c JOIN qrt r USING (source, qb)
-               WHERE CAST('0x' || substr(md5('qmix:'
-                          || CAST(c.doc_id AS VARCHAR)), 1, 8)
-                          AS BIGINT) % 10000
-                     < CAST(round(r.rate * 10000.0) AS BIGINT)
+               FROM qcell c JOIN qm_r r USING (source, qb)
+               WHERE {_mix_keep_sql("qmix", "c", "r")}
                GROUP BY 1, 2)
         SELECT r.source, r.qb, qk.kn, r.rate
-        FROM qrt r LEFT JOIN qk USING (source, qb))"""
+        FROM qm_r r LEFT JOIN qk USING (source, qb))"""
 
 
 #: q47 oracle histogram fragments — the DuckDB replay of the engine's
@@ -310,22 +292,13 @@ _HIST_BRACKET_SQL = """CAST(prev AS DOUBLE)
     FROM events e JOIN customer c ON c.c_custkey = e.user_id
     GROUP BY e.event_type
     UNION ALL
-    SELECT 'mix', source, CAST(toks AS BIGINT),
-           least(CAST(1.0 AS DOUBLE),
-                 ((CAST(qs AS DOUBLE) / CAST(qq AS DOUBLE))
-                  * (CAST(tot AS DOUBLE) * CAST(0.5 AS DOUBLE)))
-                 / CAST(toks AS DOUBLE))
+    SELECT 'mix', source, CAST(toks AS BIGINT), rate
     FROM (
         WITH mx_src AS (
             SELECT source, SUM(len(string_split(text, ' '))) AS toks
             FROM documents GROUP BY 1),
-        mx_q AS (SELECT source, toks,
-                        CAST(floor(sqrt(CAST(toks AS DOUBLE))
-                                   * CAST(1048576.0 AS DOUBLE))
-                             AS BIGINT) AS qs
-                 FROM mx_src),
-        mx_t AS (SELECT SUM(toks) AS tot, SUM(qs) AS qq FROM mx_q)
-        SELECT source, toks, qs, tot, qq FROM mx_q CROSS JOIN mx_t)
+        {_mix_rate_ctes("mx_", "mx_src", "source")}
+        SELECT source, toks, rate FROM mx_r)
     UNION ALL
     SELECT 'mix_applied', source, CAST(COUNT(*) AS BIGINT),
            CAST(SUM(nt) AS DOUBLE)
@@ -336,25 +309,10 @@ _HIST_BRACKET_SQL = """CAST(prev AS DOUBLE)
             FROM documents),
         ma_src AS (SELECT source, SUM(nt) AS toks FROM ma_doc
                    GROUP BY 1),
-        ma_q AS (SELECT source, toks,
-                        CAST(floor(sqrt(CAST(toks AS DOUBLE))
-                                   * CAST(1048576.0 AS DOUBLE))
-                             AS BIGINT) AS qs
-                 FROM ma_src),
-        ma_t AS (SELECT SUM(toks) AS tot, SUM(qs) AS qq FROM ma_q),
-        ma_r AS (SELECT source,
-                        least(CAST(1.0 AS DOUBLE),
-                              ((CAST(qs AS DOUBLE) / CAST(qq AS DOUBLE))
-                               * (CAST(tot AS DOUBLE)
-                                  * CAST(0.5 AS DOUBLE)))
-                              / CAST(toks AS DOUBLE)) AS rate
-                 FROM ma_q CROSS JOIN ma_t)
+        {_mix_rate_ctes("ma_", "ma_src", "source")}
         SELECT d.source, d.nt
         FROM ma_doc d JOIN ma_r r USING (source)
-        WHERE CAST('0x' || substr(md5('mixture:'
-                       || CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                  % 10000
-              < CAST(round(r.rate * 10000.0) AS BIGINT)
+        WHERE {_mix_keep_sql("mixture", "d", "r")}
     ) GROUP BY source
     UNION ALL
     SELECT 'hist_value', CAST(bin AS VARCHAR), CAST(cnt AS BIGINT),
@@ -770,7 +728,8 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q47_doc_feats")
     mix_leg = cached_persist(
         spark, ("q47_mix_leg", plan_key(docs)),
-        lambda: mixture_rates(dbase.select("source", "nt"), "source", "nt")
+        lambda: mixture_rates(dbase.select("source", "nt"), ["source"],
+                              "nt")
         .select(F.col("source").alias("event_type"),
                 F.col("toks").cast("long").alias("exact_n"),
                 F.col("rate").alias("estimate"))
@@ -789,7 +748,7 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         rates = mix_leg.select(F.col("event_type").alias("source"),
                                F.col("estimate").alias("rate"))
         nt = dbase.select("doc_id", "source", "nt")
-        kept = apply_mixture(nt, rates, "source", "doc_id")
+        kept = apply_mixture(nt, rates, ["source"], "doc_id")
         return (kept.groupBy("source")
                 .agg(F.count("*").alias("_n"),
                      F.sum("nt").alias("_t"))
@@ -906,33 +865,30 @@ def q47_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classifier score composed into the mixture. A binary quality
     # probe (operators.classifier — 2 fixed-point GD rounds, weak
     # label = text.quality_score >= 0.5, the same feature vector as
-    # q57's language probe) scores every doc; scores bucket to 4
-    # quality strata; sampling.quality_mixture_rates derives
-    # per-(source, stratum) rates with the share tilted by (qb+1);
-    # apply_quality_mixture keeps docs row-locally. Emits rate + kept
-    # count per cell, oracle-replayed end to end INCLUDING the
-    # training loop.
+    # q57's language probe — train_probes with ONE label) scores every
+    # doc; scores bucket to 4 quality strata; the mixture pair keyed
+    # by (source, qb) derives per-cell rates with the share tilted by
+    # (qb+1) and keeps docs row-locally. Emits rate + kept count per
+    # cell, oracle-replayed end to end INCLUDING the training loop.
     def build_qmix_leg():
         from ..operators import classifier
-        from ..operators.sampling import (apply_quality_mixture,
-                                          quality_bucket,
-                                          quality_mixture_rates)
+        from ..operators.sampling import apply_mixture, quality_bucket
         # features/label read from the shared base — the 2 GD rounds
         # and the scoring pass scan cached doubles, not raw text
         feats = [F.col("_f1"), F.col("_f2"), F.col("_f3")]
-        w = classifier.train_margin_classifier(dbase, feats,
-                                               F.col("_lbl"), n_iter=2)
+        w = classifier.train_probes(dbase, feats, [F.col("_lbl")],
+                                    n_iter=2)
         scored = classifier.score_with(
             dbase.select("doc_id", "source", "nt",
                          "_f1", "_f2", "_f3"),
-            feats, w, out_col="p")
+            feats, w, out_cols=["p"])
         cells = scored.select("doc_id", "source", "nt",
                               quality_bucket(F.col("p"), 4).alias("qb"))
-        rates = quality_mixture_rates(cells, "source", "qb", "nt")
-        kept = (apply_quality_mixture(cells, rates, "source", "qb",
-                                      "doc_id")
-                .groupBy("source", "qb").agg(F.count("*").alias("_kn")))
-        return (rates.join(kept, ["source", "qb"], "left")
+        cell = ["source", "qb"]
+        rates = mixture_rates(cells, cell, "nt", tilt=F.col("qb") + 1)
+        kept = (apply_mixture(cells, rates, cell, "doc_id", salt="qmix")
+                .groupBy(*cell).agg(F.count("*").alias("_kn")))
+        return (rates.join(kept, cell, "left")
                 .select(F.concat(F.col("source"), F.lit(":"),
                                  F.col("qb").cast("string"))
                         .alias("event_type"),

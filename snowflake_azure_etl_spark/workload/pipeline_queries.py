@@ -1400,39 +1400,55 @@ PACK_CTX = 512
 
 # --- X-QUALITY-CLF oracle (mirrors operators.classifier exactly) ----
 # Feature vector [bias, stopword_ratio, type_token_ratio,
-# length-saturation] + one weak label per language class; the same
-# one-vs-rest GD loop as the Spark operator, replayed class-by-class
-# round-by-round (the q63 k-means pattern): explicit left-associated
-# margin, rational sigmoid (no exp — not cross-engine bit-portable),
-# fixed-point BIGINT gradient sums, identical parenthesization
-# everywhere. The Spark trainer computes all classes' gradients in
-# ONE scan per round; per-class recurrences are independent, so the
-# oracle may replay them as separate CTE chains and still produce the
-# identical weights.
+# length-saturation] + one weak label per probe; the same GD loop as
+# classifier.train_probes, replayed probe-by-probe round-by-round (the
+# q63 k-means pattern): explicit left-associated margin, rational
+# sigmoid (no exp — not cross-engine bit-portable), fixed-point BIGINT
+# gradient sums, identical parenthesization everywhere. The Spark
+# trainer computes all probes' gradients in ONE scan per round;
+# per-probe recurrences are independent, so the oracle may replay
+# them as separate CTE chains and still produce the identical
+# weights. q57's language probe (one label per class, prefix "c")
+# and q47's binary quality probe (one label, prefix "q") are both
+# built from these fragments.
 _CLF_CLASSES = ("de", "en", "es", "fr", "zh")
 _CLF_SCALE_SQL = "1048576.0"  # classifier.CLS_SCALE as a double literal
-_CLF_FX_CTE = """
-    cfx AS (SELECT doc_id,
-               [1.0,
-                CAST(len(list_filter(string_split(text, ' '),
-                     t -> t IN ('the','a','of','and','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')),
-                CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                    / len(string_split(text, ' ')),
-                LEAST(CAST(length(text) AS DOUBLE) / 200, 1.0)] AS fv,
-               """ + ",\n               ".join(
-    f"CASE WHEN lang = '{c}' THEN 1.0 ELSE 0.0 END AS y_{c}"
-    for c in _CLF_CLASSES) + """
-        FROM documents),
-    """ + ",\n    ".join(
-    f"cw{c}0 AS (SELECT [0.0, 0.0, 0.0, 0.0] AS w)"
-    for c in _CLF_CLASSES)
-
+#: the three feature doubles (text.stopword_ratio, type_token_ratio,
+#: the 200-char length saturation) — also the inputs of q47's
+#: quality_score weak label
+_CLF_STOP_SQL = ("CAST(len(list_filter(string_split(text, ' '), "
+                 "t -> t IN ('the','a','of','and','to','in'))) AS DOUBLE) "
+                 "/ len(string_split(text, ' '))")
+_CLF_TTR_SQL = ("CAST(len(list_distinct(string_split(text, ' '))) "
+                "AS DOUBLE) / len(string_split(text, ' '))")
+_CLF_LSAT_SQL = "LEAST(CAST(length(text) AS DOUBLE) / 200, 1.0)"
 _CLF_MARGIN_SQL = "w[1]*fv[1] + w[2]*fv[2] + w[3]*fv[3] + w[4]*fv[4]"
 
 
-def _clf_round_cte(it: int, c: str) -> str:
-    """One GD round for class `c`'s probe (reads cw{c}{it-1})."""
+def _squash_sql(z: str) -> str:
+    """classifier.squash — the rational sigmoid of margin `z`."""
+    return f"0.5*(1.0 + {z}/(1.0 + abs({z})))"
+
+
+def _clf_fx_cte(px: str, labels: dict[str, str], extra: str = "") -> str:
+    """`{px}fx` (doc_id, `extra` columns, fv, y_{name} per label) over
+    documents — a label is a SQL condition — plus each probe's zero
+    weights `{px}w{name}0`."""
+    ys = "".join(f"CASE WHEN {cond} THEN 1.0 ELSE 0.0 END AS y_{name},\n"
+                 for name, cond in labels.items())
+    w0 = ",\n".join(f"{px}w{name}0 AS (SELECT [0.0, 0.0, 0.0, 0.0] AS w)"
+                     for name in labels)
+    return f"""
+    {px}fx AS (SELECT doc_id, {extra}{ys}
+                      [1.0, {_CLF_STOP_SQL}, {_CLF_TTR_SQL},
+                       {_CLF_LSAT_SQL}] AS fv
+               FROM documents),
+    {w0}"""
+
+
+def _clf_round_cte(px: str, name: str, it: int) -> str:
+    """One GD round of probe `name` over `{px}fx` (reads
+    {px}w{name}{it-1}, defines {px}w{name}{it})."""
     s = _CLF_SCALE_SQL
     sums = ",\n".join(
         f"SUM(CAST(floor((r*fv[{i + 1}])*{s}) AS BIGINT)) AS s{i}"
@@ -1441,15 +1457,16 @@ def _clf_round_cte(it: int, c: str) -> str:
     upd = ",\n".join(
         f"pw{i} - 0.5*((CAST(s{i} AS DOUBLE)/n)/{s})" for i in range(4))
     return f"""
-    cr{c}{it} AS (SELECT fv, w,
-                      0.5*(1.0 + z/(1.0 + abs(z))) - y_{c} AS r
-               FROM (SELECT fv, y_{c}, w, {_CLF_MARGIN_SQL} AS z
-                     FROM cfx CROSS JOIN cw{c}{it - 1})),
-    cs{c}{it} AS (SELECT {ws}, {sums}, COUNT(*) AS n FROM cr{c}{it}),
-    cw{c}{it} AS (SELECT [{upd}] AS w FROM cs{c}{it})"""
+    {px}r{name}{it} AS (SELECT fv, w, {_squash_sql("z")} - y_{name} AS r
+               FROM (SELECT fv, y_{name}, w, {_CLF_MARGIN_SQL} AS z
+                     FROM {px}fx CROSS JOIN {px}w{name}{it - 1})),
+    {px}s{name}{it} AS (SELECT {ws}, {sums}, COUNT(*) AS n
+                        FROM {px}r{name}{it}),
+    {px}w{name}{it} AS (SELECT [{upd}] AS w FROM {px}s{name}{it})"""
 
 
-_CLF_ROUND_CTES = ",".join(_clf_round_cte(it, c)
+_CLF_FX_CTE = _clf_fx_cte("c", {c: f"lang = '{c}'" for c in _CLF_CLASSES})
+_CLF_ROUND_CTES = ",".join(_clf_round_cte("c", c, it)
                            for c in _CLF_CLASSES for it in (1, 2))
 
 # per-class score s_{c} from the trained cw{c}2 weights, then the
@@ -1458,8 +1475,7 @@ _CLF_ROUND_CTES = ",".join(_clf_round_cte(it, c)
 _CLF_SCORE_CTE = """
     cclf AS (SELECT doc_id,
                     """ + ",\n                    ".join(
-    f"0.5*(1.0 + z{c}/(1.0 + abs(z{c}))) AS s_{c}"
-    for c in _CLF_CLASSES) + """
+    f"{_squash_sql(f'z{c}')} AS s_{c}" for c in _CLF_CLASSES) + """
              FROM (SELECT cfx.doc_id,
                           """ + ",\n                          ".join(
     f"{c}.w[1]*fv[1] + {c}.w[2]*fv[2] + {c}.w[3]*fv[3]"
@@ -1712,7 +1728,8 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("score_scaled").alias("top_term_score")),
         "tficf_top_terms")
     # r8 addition (X-QUALITY-CLF, operators.classifier): a
-    # one-vs-rest language classifier TRAINED in-engine — 2 full-batch
+    # one-vs-rest language classifier TRAINED in-engine — the one
+    # trainer, train_probes, with one label per class: 2 full-batch
     # GD rounds per class probe (all five classes' gradients reduced
     # in the SAME single-row aggregate, so multiclass costs the same
     # two corpus scans as one binary probe) over three of the
@@ -1749,8 +1766,9 @@ def q57_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("clf_lang_probe", plan_key(docs),
          tuple(column_key(c) for c in clf_feats), "lang",
          _CLF_CLASSES, 2),
-        lambda: classifier.train_one_vs_rest(
-            docs, clf_feats, F.col("lang"), _CLF_CLASSES, n_iter=2))
+        lambda: classifier.train_probes(
+            docs, clf_feats,
+            [F.col("lang") == F.lit(c) for c in _CLF_CLASSES], n_iter=2))
     scored = classifier.predict_with(
         packed.join(maybe_broadcast(top_term, n_docs), "doc_id", "left"),
         clf_feats, clf_w, _CLF_CLASSES,

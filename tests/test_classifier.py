@@ -60,21 +60,25 @@ def _feats():
     return [F.col("f1"), F.col("f2")]
 
 
+def _ovr(classes):
+    return [F.col("lang") == F.lit(c) for c in classes]
+
+
 def test_weights_match_python_reference_exactly(spark):
-    got = classifier.train_margin_classifier(
-        _df(spark), _feats(), F.col("y"), n_iter=3).collect()[0]["_w"]
+    got = classifier.train_probes(
+        _df(spark), _feats(), [F.col("y")], n_iter=3).collect()[0]["_w0"]
     want = _ref_train(ROWS, n_iter=3)
     assert got == want          # bit-exact, not approx — the oracle contract
 
 
 def test_partitioning_and_order_invariance(spark):
     base = _df(spark)
-    w1 = classifier.train_margin_classifier(
-        base.repartition(1), _feats(), F.col("y"),
-        n_iter=4).collect()[0]["_w"]
-    w7 = classifier.train_margin_classifier(
+    w1 = classifier.train_probes(
+        base.repartition(1), _feats(), [F.col("y")],
+        n_iter=4).collect()[0]["_w0"]
+    w7 = classifier.train_probes(
         base.repartition(7).sortWithinPartitions(F.desc("f2")),
-        _feats(), F.col("y"), n_iter=4).collect()[0]["_w"]
+        _feats(), [F.col("y")], n_iter=4).collect()[0]["_w0"]
     assert w1 == w7
 
 
@@ -82,8 +86,8 @@ def test_learns_separable_labels(spark):
     rows = [(i / 100.0, ((i * 37) % 100) / 100.0,
              1.0 if i / 100.0 > 0.55 else 0.0) for i in range(100)]
     df = _df(spark, rows)
-    w = classifier.train_margin_classifier(df, _feats(), F.col("y"),
-                                           n_iter=12, lr=2.0)
+    w = classifier.train_probes(df, _feats(), [F.col("y")],
+                                n_iter=12, lr=2.0)
     scored = classifier.score_with(df, _feats(), w)
     acc = (scored.select(
         F.avg(((F.col("clf_score") >= 0.5).cast("double") == F.col("y"))
@@ -99,10 +103,14 @@ def test_learns_separable_labels(spark):
 def test_training_plan_has_no_corpus_shuffle_or_python(spark):
     """One round = broadcast weights in, single-row partial-combined
     aggregate out: no sort-merge join, no corpus-keyed exchange, no
-    Python workers anywhere in the plan. `eager=False` keeps the
-    round plan lazily inspectable (the default checkpoints it)."""
-    w = classifier.train_margin_classifier(
-        _df(spark), _feats(), F.col("y"), n_iter=2, eager=False)
+    Python workers anywhere in the plan. The round is built by the
+    training loop's own body (`_gd_round`), lazily, so its plan is
+    inspectable before the loop checkpoints it."""
+    df = _df(spark)
+    w0 = classifier.train_probes(df, _feats(), [F.col("y")], n_iter=0)
+    w = classifier._gd_round(
+        classifier._training_frame(df, _feats(), [F.col("y")]), w0,
+        classifier.CLS_LR)
     plan = w._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -127,8 +135,8 @@ def test_gd_rounds_cost_linear_jobs_and_cut_lineage(spark):
     def jobs_for(n_iter: int, group: str):
         sc.setJobGroup(group, f"train n_iter={n_iter}")
         try:
-            w = classifier.train_margin_classifier(
-                df, _feats(), F.col("y"), n_iter=n_iter)
+            w = classifier.train_probes(
+                df, _feats(), [F.col("y")], n_iter=n_iter)
         finally:
             sc.setJobGroup(f"{group}-done", "")
         return w, len(sc.statusTracker().getJobIdsForGroup(group))
@@ -143,7 +151,7 @@ def test_gd_rounds_cost_linear_jobs_and_cut_lineage(spark):
     assert "LogicalRDD" in plan or "ExistingRDD" in plan
     assert "Aggregate" not in plan       # lineage is cut
     # and the checkpointed values are bit-identical to the lazy chain
-    assert w.collect()[0]["_w"] == _ref_train(ROWS, n_iter=4)
+    assert w.collect()[0]["_w0"] == _ref_train(ROWS, n_iter=4)
 
 
 def test_empty_training_corpus_fails_loud(spark):
@@ -151,20 +159,22 @@ def test_empty_training_corpus_fails_loud(spark):
     all-NULL array of the right SIZE — it passes the arity guard and
     silently NULL-scores every row at a downstream clf gate. The guard
     lives inside the weight output expression (pruning-proof) and
-    trips at train time on the eager path."""
+    trips at train time, when the round is checkpointed."""
     import pytest
 
     empty = _df(spark).filter(F.col("f1") > 100.0)
     with pytest.raises(Exception, match="empty training corpus"):
-        classifier.train_margin_classifier(empty, _feats(), F.col("y"),
-                                           n_iter=1)
+        classifier.train_probes(empty, _feats(), [F.col("y")], n_iter=1)
     with pytest.raises(Exception, match="empty training corpus"):
-        classifier.train_one_vs_rest(
-            empty, _feats(), F.col("y").cast("string"), ("a", "b"),
+        classifier.train_probes(
+            empty, _feats(), [F.col("y") == 0.0, F.col("y") == 1.0],
             n_iter=1)
-    # the lazy path raises at materialization, not silently at NULL
-    lazy = classifier.train_margin_classifier(
-        empty, _feats(), F.col("y"), n_iter=1, eager=False)
+    # a lazily built round raises at materialization, not silently at
+    # NULL
+    w0 = classifier.train_probes(empty, _feats(), [F.col("y")], n_iter=0)
+    lazy = classifier._gd_round(
+        classifier._training_frame(empty, _feats(), [F.col("y")]), w0,
+        classifier.CLS_LR)
     with pytest.raises(Exception, match="empty training corpus"):
         lazy.collect()
 
@@ -173,12 +183,10 @@ def test_score_bounds_and_bias_only_prior(spark):
     """Zero-iteration weights are all-zero: every score is exactly the
     0.5 prior; any trained score stays inside (0, 1)."""
     df = _df(spark)
-    w0 = classifier.train_margin_classifier(df, _feats(), F.col("y"),
-                                            n_iter=0)
+    w0 = classifier.train_probes(df, _feats(), [F.col("y")], n_iter=0)
     s0 = classifier.score_with(df, _feats(), w0).select("clf_score")
     assert {r["clf_score"] for r in s0.collect()} == {0.5}
-    w = classifier.train_margin_classifier(df, _feats(), F.col("y"),
-                                           n_iter=5)
+    w = classifier.train_probes(df, _feats(), [F.col("y")], n_iter=5)
     mm = (classifier.score_with(df, _feats(), w)
           .agg(F.min("clf_score").alias("lo"),
                F.max("clf_score").alias("hi")).collect()[0])
@@ -203,26 +211,25 @@ def _mc_feats():
 
 
 def test_one_vs_rest_probe_equals_standalone_binary(spark):
-    """Class k's one-vs-rest weights are BIT-IDENTICAL to a standalone
-    binary train on (label == k) — the property the oracle's per-class
-    replay relies on."""
+    """K probes trained together are BIT-IDENTICAL to K one-label
+    trainings — probe k of the one-vs-rest train equals the binary
+    probe of (lang == k), the property the oracle's per-probe replay
+    relies on."""
     df = _mc_df(spark)
-    mc = classifier.train_one_vs_rest(
-        df, _mc_feats(), F.col("lang"), ("a", "b", "c"),
-        n_iter=3).collect()[0]
-    for k, c in enumerate(("a", "b", "c")):
-        solo = classifier.train_margin_classifier(
-            df, _mc_feats(), F.col("lang") == F.lit(c),
-            n_iter=3).collect()[0]["_w"]
+    classes = ("a", "b", "c")
+    mc = classifier.train_probes(df, _mc_feats(), _ovr(classes),
+                                 n_iter=3).collect()[0]
+    for k, label in enumerate(_ovr(classes)):
+        solo = classifier.train_probes(
+            df, _mc_feats(), [label], n_iter=3).collect()[0]["_w0"]
         assert mc[f"_w{k}"] == solo
 
 
 @pytest.mark.slow
 def test_one_vs_rest_argmax_predicts_planted_classes(spark):
     df = _mc_df(spark)
-    w = classifier.train_one_vs_rest(
-        df, _mc_feats(), F.col("lang"), ("a", "b", "c"),
-        n_iter=10, lr=2.0)
+    w = classifier.train_probes(
+        df, _mc_feats(), _ovr(("a", "b", "c")), n_iter=10, lr=2.0)
     pred = classifier.predict_with(df, _mc_feats(), w, ("a", "b", "c"))
     acc = pred.agg(F.avg((F.col("clf_pred") == F.col("lang"))
                          .cast("double")).alias("a")).collect()[0]["a"]
@@ -233,8 +240,8 @@ def test_predict_ties_resolve_to_earliest_class(spark):
     """With zero-iteration (all-zero) weights every class scores 0.5 —
     the chained->= rule must pick the FIRST class for every row."""
     df = _mc_df(spark)
-    w = classifier.train_one_vs_rest(
-        df, _mc_feats(), F.col("lang"), ("a", "b", "c"), n_iter=0)
+    w = classifier.train_probes(
+        df, _mc_feats(), _ovr(("a", "b", "c")), n_iter=0)
     got = {r["clf_pred"] for r in
            classifier.predict_with(df, _mc_feats(), w,
                                    ("a", "b", "c")).collect()}
@@ -243,16 +250,16 @@ def test_predict_ties_resolve_to_earliest_class(spark):
 
 def test_predict_score_prefix_exposes_probe_scores(spark):
     df = _mc_df(spark)
-    w = classifier.train_one_vs_rest(
-        df, _mc_feats(), F.col("lang"), ("a", "b", "c"), n_iter=2)
+    w = classifier.train_probes(
+        df, _mc_feats(), _ovr(("a", "b", "c")), n_iter=2)
     out = classifier.predict_with(df, _mc_feats(), w, ("a", "b", "c"),
                                   score_prefix="s_")
     row = out.select("s_a", "s_b", "s_c", "clf_pred").collect()[0]
     assert all(0.0 < row[f"s_{c}"] < 1.0 for c in ("a", "b", "c"))
     # the en-probe score surfaced by score_prefix matches score_with
     # on the matching standalone binary weights (same training loop)
-    solo = classifier.train_margin_classifier(
-        df, _mc_feats(), F.col("lang") == F.lit("a"), n_iter=2)
+    solo = classifier.train_probes(df, _mc_feats(), _ovr(("a",)),
+                                   n_iter=2)
     want = classifier.score_with(df, _mc_feats(), solo).collect()[0]
     assert row["s_a"] == want["clf_score"]
 
@@ -265,8 +272,7 @@ def test_stale_model_artifact_fails_loud(spark):
     from py4j.protocol import Py4JJavaError
 
     df = _df(spark)
-    w2 = classifier.train_margin_classifier(df, _feats(), F.col("y"),
-                                            n_iter=1)
+    w2 = classifier.train_probes(df, _feats(), [F.col("y")], n_iter=1)
     lits = classifier.weights_as_literals(w2)          # 3 slots (bias+2)
     with pytest.raises(ValueError, match="stale or mismatched"):
         classifier.score_with_literals(df, [F.col("f1")], lits)
@@ -285,8 +291,8 @@ def test_corpus_gate_requires_both_halves(spark):
         corpus.prepare_training_corpus(
             docs, near_dup_threshold=None,
             clf_feature_cols=[F.length("text")])
-    w = classifier.train_margin_classifier(
-        docs, [F.length("text").cast("double")], F.lit(True), n_iter=1)
+    w = classifier.train_probes(
+        docs, [F.length("text").cast("double")], [F.lit(True)], n_iter=1)
     with pytest.raises(ValueError, match="must be passed together"):
         corpus.prepare_training_corpus(docs, near_dup_threshold=None,
                                        clf_weights=w)

@@ -239,8 +239,8 @@ def test_prepare_training_corpus_trained_gate(spark):
             for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     feats = [text.stopword_ratio("text")]
-    w = classifier.train_margin_classifier(
-        docs, feats, F.col("doc_id") % 2 == 0, n_iter=8, lr=2.0)
+    w = classifier.train_probes(
+        docs, feats, [F.col("doc_id") % 2 == 0], n_iter=8, lr=2.0)
     out = corpus.prepare_training_corpus(
         docs, near_dup_threshold=None,
         clf_feature_cols=feats, clf_weights=w, clf_min_score=0.5)

@@ -334,6 +334,62 @@ def test_one_merge_law_site():
         f"sketches.merge_partials / subtract_partials: {drift}")
 
 
+#: (module, top-level function, site) -> count allowed in operators/:
+#: the one GD loop (its empty-corpus guard and its per-round lineage
+#: cut) and the one fixed-point √toks mixture share.
+PROBE_MIX_OK = {
+    ("operators/classifier.py", "_gd_round", "empty-corpus guard"): 1,
+    ("operators/classifier.py", "train_probes", "localCheckpoint"): 1,
+    ("operators/sampling.py", "mixture_rates", "sqrt share"): 1,
+}
+
+
+def _probe_mix_sites(rel: str, source: str) -> "dict[tuple, int]":
+    """(rel, top-level function, site) -> count of GD-loop and mixture
+    sites: `_empty_corpus_guarded(` calls, `localCheckpoint` calls in
+    classifier.py, and `F.sqrt(` in a function that reads MIX_SCALE."""
+    sites = {}
+    for top in ast.parse(source).body:
+        where = getattr(top, "name", "<module>")
+        nodes = list(ast.walk(top))
+        names = {getattr(n, "id", None) or getattr(n, "attr", None)
+                 for n in nodes}
+        for n in nodes:
+            if not isinstance(n, ast.Call):
+                continue
+            f = getattr(n.func, "id", None) or _call_attr(n)
+            site = {"_empty_corpus_guarded": "empty-corpus guard",
+                    "localCheckpoint": ("localCheckpoint"
+                                        if rel == "operators/classifier.py"
+                                        else None),
+                    "sqrt": ("sqrt share" if "MIX_SCALE" in names
+                             else None)}.get(f)
+            if site:
+                key = (rel, where, site)
+                sites[key] = sites.get(key, 0) + 1
+    return sites
+
+
+def test_one_probe_trainer_and_mixture_site():
+    """The binary quality probe is the one-label probe and the quality
+    mixture is the mixture keyed by (source, stratum): operators/ holds
+    ONE GD loop (classifier.train_probes over _gd_round) and ONE
+    fixed-point √ share (sampling.mixture_rates). A second trainer or a
+    second temperature-2 rate function shows up here as an extra
+    empty-corpus guard, lineage cut or MIX_SCALE-scaled sqrt."""
+    found = {}
+    for py in sorted((_PKG / "operators").glob("*.py")):
+        found.update(_probe_mix_sites(str(py.relative_to(_PKG)),
+                                      py.read_text()))
+    drift = {k: (found.get(k), PROBE_MIX_OK.get(k))
+             for k in found.keys() | PROBE_MIX_OK.keys()
+             if found.get(k) != PROBE_MIX_OK.get(k)}
+    assert not drift, (
+        "GD-loop / mixture-share sites as (found, allowed) — train "
+        "through classifier.train_probes and mix through "
+        f"sampling.mixture_rates: {drift}")
+
+
 #: streaming/ lines that land data outside `sinks.epoch_sink` without
 #: writing a stream epoch partition.
 EPOCH_WRITE_OK = {

@@ -170,14 +170,14 @@ def test_mixture_rates_flatten_and_respect_budget(spark):
             + [("small", 10) for _ in range(10)])
     df = spark.createDataFrame(rows, "source string, nt long")
     got = {r["source"]: r for r in
-           mixture_rates(df, "source", "nt").collect()}
+           mixture_rates(df, ["source"], "nt").collect()}
     assert got["small"]["rate"] == 1.0  # tiny source fully kept
     assert got["big"]["rate"] < got["mid"]["rate"] <= 1.0
     expected = sum(r["rate"] * r["toks"] for r in got.values())
     assert expected <= 0.5 * sum(r["toks"] for r in got.values()) + 1e-6
     import pytest
     with pytest.raises(ValueError, match="temperature"):
-        mixture_rates(df, "source", "nt", temperature=1.0)
+        mixture_rates(df, ["source"], "nt", temperature=1.0)
 
 
 def test_mixture_rates_fail_loud_on_nonpositive_source(spark):
@@ -191,7 +191,7 @@ def test_mixture_rates_fail_loud_on_nonpositive_source(spark):
     rows = [("ok", 10), ("ok", 5), ("zero", 0)]
     df = spark.createDataFrame(rows, "source string, nt long")
     with pytest.raises(Exception, match="non-positive token total"):
-        mixture_rates(df, "source", "nt").collect()
+        mixture_rates(df, ["source"], "nt").collect()
 
 
 def test_apply_mixture_matches_python_reference(spark):
@@ -205,10 +205,10 @@ def test_apply_mixture_matches_python_reference(spark):
     rows = [(i, "big" if i < 900 else ("mid" if i < 990 else "small"),
              10) for i in range(1000)]
     df = spark.createDataFrame(rows, "doc_id long, source string, nt long")
-    rates = mixture_rates(df, "source", "nt")
+    rates = mixture_rates(df, ["source"], "nt")
     rate_map = {r["source"]: r["rate"] for r in rates.collect()}
     kept = {r["doc_id"] for r in
-            apply_mixture(df, rates, "source", "doc_id").collect()}
+            apply_mixture(df, rates, ["source"], "doc_id").collect()}
 
     def py_keep(doc_id, src):
         b = int(hashlib.md5(f"mixture:{doc_id}".encode())
@@ -237,11 +237,11 @@ def test_apply_mixture_fails_loud_on_unplanned_source(spark):
     planned = spark.createDataFrame(
         [(i, "big", 10) for i in range(20)],
         "doc_id long, source string, nt long")
-    rates = mixture_rates(planned, "source", "nt")
+    rates = mixture_rates(planned, ["source"], "nt")
     with_stray = planned.unionByName(spark.createDataFrame(
         [(99, "unplanned", 10)], "doc_id long, source string, nt long"))
     with pytest.raises(Exception, match="no rate in the mixture plan"):
-        apply_mixture(with_stray, rates, "source", "doc_id").collect()
+        apply_mixture(with_stray, rates, ["source"], "doc_id").collect()
 
 
 def _py_plog2(n, scale=1 << 20):
@@ -331,16 +331,16 @@ def test_dsir_scores_match_python_reference(spark):
 
 
 def test_quality_mixture_tilts_toward_high_buckets(spark):
-    """quality_mixture_rates: equal-sized cells get rates growing with
-    the quality bucket (the (qb+1) tilt); apply_quality_mixture's kept
-    set replays in Python; an unplanned cell fails loud."""
+    """The quality mixture is the mixture keyed by (source, qb) with a
+    (qb+1) tilt: equal-sized cells get rates growing with the quality
+    bucket; the kept set (salt "qmix") replays in Python; an unplanned
+    cell fails loud."""
     import hashlib
 
     import pytest
 
     from snowflake_azure_etl_spark.operators.sampling import (
-        FRACTION_DENOM, apply_quality_mixture, quality_bucket,
-        quality_mixture_rates)
+        FRACTION_DENOM, apply_mixture, mixture_rates, quality_bucket)
     from pyspark.sql import functions as F
 
     # 4 equal cells (one per bucket) of 250 docs x 10 tokens
@@ -348,13 +348,14 @@ def test_quality_mixture_tilts_toward_high_buckets(spark):
     df = spark.createDataFrame(rows,
                                "doc_id long, source string, nt long,"
                                " qb int")
-    rates = quality_mixture_rates(df, "source", "qb", "nt")
+    cell = ["source", "qb"]
+    rates = mixture_rates(df, cell, "nt", tilt=F.col("qb") + 1)
     rm = {r["qb"]: r["rate"] for r in rates.collect()}
     assert rm[0] < rm[1] < rm[2] < rm[3]
     # equal toks => rate ratio == (qb+1) ratio until the min(1,...) cap
     assert abs(rm[1] / rm[0] - 2.0) < 1e-12
-    kept = {r["doc_id"] for r in apply_quality_mixture(
-        df, rates, "source", "qb", "doc_id").collect()}
+    kept = {r["doc_id"] for r in apply_mixture(
+        df, rates, cell, "doc_id", salt="qmix").collect()}
 
     def py_keep(doc_id, qb):
         b = int(hashlib.md5(f"qmix:{doc_id}".encode())
@@ -366,8 +367,8 @@ def test_quality_mixture_tilts_toward_high_buckets(spark):
         stray = df.unionByName(spark.createDataFrame(
             [(9999, "new", 10, 0)],
             "doc_id long, source string, nt long, qb int"))
-        apply_quality_mixture(stray, rates, "source", "qb",
-                              "doc_id").collect()
+        apply_mixture(stray, rates, cell, "doc_id",
+                      salt="qmix").collect()
     # quality_bucket clamps p = 1.0 into the top bucket
     probe = spark.range(1).select(
         quality_bucket(F.lit(1.0), 4).alias("b"),

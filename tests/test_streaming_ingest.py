@@ -134,8 +134,8 @@ def test_scored_ingest_matches_batch_probe(spark, drop_dir):
     batch = batch.filter(F.length("text") > 0)
     feats = [text.stopword_ratio("text"),
              F.least(F.length("text").cast("double") / 20, F.lit(1.0))]
-    wdf = classifier.train_margin_classifier(
-        batch, feats, F.length("text") > 15, n_iter=3)
+    wdf = classifier.train_probes(
+        batch, feats, [F.length("text") > 15], n_iter=3)
     w = classifier.weights_as_literals(wdf)
 
     stream = ingest.read_jsonl_stream(spark, drop_dir + "/*.jsonl",

@@ -182,3 +182,29 @@ def test_substr_sink_epoch_job_counts_are_pinned(spark):
             sc.setLocalProperty("spark.job.description", None)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert counts == [13, 18, 18], counts
+
+
+def test_substr_sink_hashes_batch_windows_once(spark, monkeypatch):
+    """The index partial and the probe share ONE occurrence relation,
+    checkpointed per epoch: the scrub report's executed plan holds no
+    window-hashing `Generate` of its own, only the covered-position
+    and report explodes. Hashing on every plan branch that reads the
+    batch's windows shows four window explodes here, six `Generate`
+    nodes in all."""
+    from snowflake_azure_etl_spark.streaming import sinks
+
+    ti, ts = _table(spark, "sx_once"), _table(spark, "sx_once_scrub")
+    sink = substr_scrub_ingest_sink(ti, ts)
+    sink(_batch(spark, BATCHES[0]), 0)
+    landed = {}
+    write = sinks.write_epoch
+
+    def capture(df, table, epoch_id, **kw):
+        landed[table] = df
+        write(df, table, epoch_id, **kw)
+
+    monkeypatch.setattr(sinks, "write_epoch", capture)
+    sink(_batch(spark, BATCHES[1]), 1)
+    plan = landed[ts]._jdf.queryExecution().executedPlan().toString()
+    assert "Generate explode(CASE WHEN" not in plan, plan
+    assert plan.count("Generate ") < 4, plan
