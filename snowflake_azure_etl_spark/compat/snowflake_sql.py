@@ -17,9 +17,9 @@ enumerates so a reference user can feed their scripts to
   apply them in the select (Spark tables have no universal defaults)
 - `CREATE OR REPLACE SECURE VIEW` → `CREATE OR REPLACE VIEW`
   (definition-hiding has no Spark analog — documented degradation)
-- `CREATE OR REPLACE TABLE` → `DROP TABLE IF EXISTS` + `CREATE TABLE`
-  (two statements; Spark's catalogs lack atomic replace for empty
-  tables)
+- `CREATE OR REPLACE TABLE` → `CREATE TABLE` of the table named in
+  `replaces`, which `run_script` first drops with `ddl.drop_table`
+  (a directory left by an earlier session goes too)
 - `COMMENT = '...'` trailing table options → stripped
 - bare `VARCHAR` (no length — Snowflake's 16 MB default,
   private_ddl/example_staging_table.sql) → `STRING` (Spark's VARCHAR
@@ -38,8 +38,10 @@ from dataclasses import dataclass, field
 
 @dataclass
 class Translated:
-    """One input statement → 1..n Spark statements + extracted info."""
+    """One input statement → 1..n Spark statements + extracted info;
+    `replaces` names a table to drop before the statements run."""
     statements: list[str]
+    replaces: str | None = None
     column_defaults: dict[str, str] = field(default_factory=dict)
     notes: list[str] = field(default_factory=list)
 
@@ -69,7 +71,7 @@ _TABLE_COMMENT = re.compile(r"\bCOMMENT\s*=\s*'[^']*'", re.IGNORECASE)
 
 def translate_statement(sql: str) -> Translated:
     """Translate one Snowflake statement into Spark statement(s)."""
-    out = Translated(statements=[], column_defaults={}, notes=[])
+    out = Translated(statements=[])
     s = sql.strip().rstrip(";")
     if not s:
         return out
@@ -100,13 +102,11 @@ def translate_statement(sql: str) -> Translated:
 
     m = _CREATE_OR_REPLACE_TABLE.match(s)
     if m:
-        table = m.group(1)
-        body = _CREATE_OR_REPLACE_TABLE.sub(
-            f"CREATE TABLE {table}", s, count=1)
-        out.statements = [f"DROP TABLE IF EXISTS {table}", body]
+        out.replaces = m.group(1)
+        s = _CREATE_OR_REPLACE_TABLE.sub(f"CREATE TABLE {out.replaces}", s,
+                                         count=1)
         out.notes.append("CREATE OR REPLACE TABLE → DROP + CREATE")
-    else:
-        out.statements = [s]
+    out.statements = [s]
     return out
 
 
@@ -183,8 +183,12 @@ def translate_script(sql_text: str) -> list[Translated]:
 def run_script(spark, sql_text: str) -> list[str]:
     """Translate + execute a Snowflake SQL script on Spark; returns the
     accumulated translation notes (what was degraded/stripped)."""
+    from ..warehouse.ddl import drop_table
+
     notes: list[str] = []
     for t in translate_script(sql_text):
+        if t.replaces:
+            drop_table(spark, t.replaces)
         for stmt in t.statements:
             spark.sql(stmt)
         notes.extend(t.notes)

@@ -53,12 +53,12 @@ def with_corrupt_field(schema: T.StructType) -> T.StructType:
         + [T.StructField(CORRUPT_COL, T.StringType(), True)])
 
 
-def copy_accounting(raw: DataFrame, table: str, entity: str | None,
-                    mode: str) -> LoadReport:
+def copy_accounting(raw: DataFrame, table: str,
+                    entity: str | None) -> LoadReport:
     """The shared ON_ERROR=CONTINUE COPY tail: split good/corrupt rows,
-    count per source file, land the good rows, report. One
-    implementation for every stage format (CSV, JSONL) so the
-    accounting semantics can't drift between them."""
+    count per source file, append the good rows (COPY INTO only ever
+    appends), report. One implementation for every stage format (CSV,
+    JSONL) so the accounting semantics can't drift between them."""
     raw = raw.withColumn("_src_file", F.input_file_name()).cache()
     try:
         good = raw.filter(F.col(CORRUPT_COL).isNull())
@@ -70,7 +70,7 @@ def copy_accounting(raw: DataFrame, table: str, entity: str | None,
         rejected = raw.filter(F.col(CORRUPT_COL).isNotNull()).count()
         loaded = sum(per_file.values())
         (good.drop(CORRUPT_COL, "_src_file")
-             .write.mode(mode).format("parquet").saveAsTable(table))
+             .write.mode("append").format("parquet").saveAsTable(table))
         return LoadReport(entity or table, loaded, rejected, per_file)
     finally:
         raw.unpersist()
@@ -99,8 +99,7 @@ def read_snowflake_csv(spark: SparkSession, path: str | list[str],
 
 
 def copy_into(spark: SparkSession, path: str | list[str], schema: T.StructType,
-              table: str, entity: str | None = None,
-              mode: str = "append") -> LoadReport:
+              table: str, entity: str | None = None) -> LoadReport:
     """COPY INTO table FROM stage with ON_ERROR=CONTINUE accounting.
 
     Bad rows (schema-unparseable) land in the corrupt-record column and are
@@ -108,7 +107,7 @@ def copy_into(spark: SparkSession, path: str | list[str], schema: T.StructType,
     the reference's per-file COPY result summary.
     """
     return copy_accounting(read_snowflake_csv(spark, path, schema),
-                           table, entity, mode)
+                           table, entity)
 
 
 def read_csv_match_by_name(spark: SparkSession, path: str | list[str],
@@ -174,9 +173,8 @@ def read_csv_match_by_name(spark: SparkSession, path: str | list[str],
 
 def copy_into_match_by_name(spark: SparkSession, path: str | list[str],
                             schema: T.StructType, table: str,
-                            entity: str | None = None,
-                            mode: str = "append") -> LoadReport:
+                            entity: str | None = None) -> LoadReport:
     """COPY INTO with MATCH_BY_COLUMN_NAME + ON_ERROR=CONTINUE: the
     schema-drift-tolerant sibling of `copy_into`, same accounting."""
     return copy_accounting(read_csv_match_by_name(spark, path, schema),
-                           table, entity, mode)
+                           table, entity)

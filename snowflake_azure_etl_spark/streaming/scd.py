@@ -21,12 +21,12 @@ deliberate epoch replay.
 
 Scale notes: state per epoch is the dimension (not the stream);
 `scd2_apply` is one classified join + a keyed insert, all
-partition-parallel. The snapshot write is the parquet-table analog of
-copy-on-write MERGE — a transactional table format would swap in at
-the write line without touching the merge plan. The pre-write
-localCheckpoint both breaks the read-overwrite cycle on the target
-table and bounds the risk window of the non-atomic overwrite (the
-next state is fully materialized before the first byte is replaced).
+partition-parallel. The snapshot write (`ddl.replace_table`) is the
+parquet analog of copy-on-write MERGE — a transactional table format
+would swap in at the write line without touching the merge plan. The
+pre-write localCheckpoint both breaks the read-replace cycle on the
+target table and bounds the risk window of the non-atomic replace (the
+next state is fully materialized before the table is dropped).
 """
 
 from __future__ import annotations
@@ -35,6 +35,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from ..warehouse.ddl import replace_table
 from ..warehouse.scd import scd2_apply
 
 
@@ -44,7 +45,7 @@ def scd2_stream_sink(table: str, *, key_col: str,
     """Build a foreachBatch function that maintains the SCD2 dimension
     `table` from a stream of update rows (business keys + tracked
     columns). The dimension must be seeded first (`scd2_seed` +
-    saveAsTable). batch_id recorded in the version history =
+    `ddl.replace_table`). batch_id recorded in the version history =
     epoch_id + 1 (0 is the seed's valid_from)."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
@@ -54,8 +55,7 @@ def scd2_stream_sink(table: str, *, key_col: str,
             state, batch_df, key_col=key_col,
             business_keys=business_keys, tracked_cols=tracked_cols,
             batch_id=int(epoch_id) + 1)
-        # materialize BEFORE overwriting the table the plan reads from
-        merged.localCheckpoint(eager=True).write.mode("overwrite") \
-            .format("parquet").saveAsTable(table)
+        # materialize BEFORE replacing the table the plan reads from
+        replace_table(merged.localCheckpoint(eager=True), table)
 
     return write

@@ -158,6 +158,27 @@ def require_columns(spark: SparkSession, table: str,
         raise ValueError(message.format(have=have, missing=missing))
 
 
+def epoch_partitions(spark: SparkSession, table: str,
+                     epoch_col: str = EPOCH_COL) -> tuple[list, list]:
+    """`table`'s partitions from the catalog alone (SHOW PARTITIONS, no
+    data pass): one `(epoch id, [[column, value], ...])` pair per LEAF
+    partition, and the epoch values that do not parse as an id. A
+    sub-partitioned sink lists one row per leaf ('_epoch_id=N/_hb=K'),
+    so the epoch is the FIRST path level (ADVICE r16 #1: the full
+    string failed int() and retention silently no-op'd on exactly the
+    sharded winner tables)."""
+    parts, bad = [], []
+    for r in spark.sql(f"SHOW PARTITIONS {table}").collect():
+        levels = [seg.split("=", 1) for seg in r[0].split("/")]
+        if levels[0][0] != epoch_col:
+            continue
+        try:
+            parts.append((int(levels[0][1]), levels))
+        except ValueError:
+            bad.append(levels[0][1])
+    return parts, bad
+
+
 def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
                   epoch_col: str = EPOCH_COL) -> int:
     """Retention for epoch-partitioned sink tables: drop every epoch
@@ -167,56 +188,32 @@ def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
     The other half of the epoch-sink lifecycle (compaction re-lands
     surviving epochs into coarser partitions; vacuum bounds the
     partition count and enforces retention). Partition-METADATA-only
-    end to end: epochs are discovered via SHOW PARTITIONS (catalog
-    listing — a distinct() over the data would scan every epoch's
-    files and silently miss registered-but-empty partitions) and
-    removed with batched ALTER TABLE … DROP statements — no data
-    pass, no rewrite of surviving epochs; cost is O(dropped
-    partitions), never O(rows). Drops are CHUNKED (ADVICE r8): a
-    months-idle stream can owe tens of thousands of stale epochs, and
-    one ALTER listing them all can exceed parser/metastore statement
-    limits — a few hundred specs per statement keeps each round-trip
-    bounded while staying O(dropped/chunk) calls. A partition value
-    that doesn't parse as an epoch id (corruption, a manually created
-    directory) is SKIPPED with a warning instead of failing the whole
-    vacuum before anything is dropped — retention must not be
-    hostage to one stray directory.
+    end to end: epochs come from `epoch_partitions` (a distinct() over
+    the data would scan every epoch and miss registered-but-empty
+    partitions) and go with batched ALTER TABLE … DROP statements;
+    cost is O(dropped partitions), never O(rows). Drops are CHUNKED
+    (ADVICE r8): one ALTER listing a months-idle stream's tens of
+    thousands of stale epochs can exceed parser/metastore statement
+    limits. A partition value that doesn't parse as an epoch id
+    (corruption, a manually created directory) is SKIPPED with a
+    warning: retention must not be hostage to one stray directory.
     Idempotent: a rerun with the same watermark drops nothing. A
     replay of a vacuumed epoch would re-create its partition (the
     idempotent sink writes by epoch id); callers must therefore only
     vacuum below their checkpoint's committed offset — the same
     watermark discipline as any state-store eviction."""
-    parts = [r[0] for r in spark.sql(f"SHOW PARTITIONS {table}").collect()]
-    eps_set, bad, leaves = set(), [], []
-    for p in parts:
-        if not p.startswith(f"{epoch_col}="):
-            continue
-        # sub-partitioned sinks (write_epoch's sub_partition_cols)
-        # list one row PER LEAF partition — '_epoch_id=N/_hb=K' — so
-        # parse the epoch from the FIRST path level (ADVICE r16 #1: the full string failed int() and
-        # retention silently no-op'd on exactly the sharded winner
-        # tables) and drop by FULL leaf spec: a partial
-        # PARTITION (_epoch_id = e) spec under DROP IF EXISTS matches
-        # no leaf of a multi-level table and silently drops nothing
-        # (verified live).
-        levels = [seg.split("=", 1) for seg in p.split("/")]
-        raw = levels[0][1]
-        try:
-            e = int(raw)
-        except ValueError:
-            bad.append(raw)
-            continue
-        if e < keep_from:
-            eps_set.add(e)
-            leaves.append(", ".join(
-                "{} = '{}'".format(k, v.replace("'", "''"))
-                for k, v in levels))
+    parts, bad = epoch_partitions(spark, table, epoch_col)
     if bad:
         import warnings
         warnings.warn(
             f"vacuum_epochs({table}): skipped {len(bad)} partition "
             f"value(s) that do not parse as epoch ids: {bad[:5]}")
-    leaves.sort()
+    # drop by FULL leaf spec: a partial PARTITION (_epoch_id = e) spec
+    # under DROP IF EXISTS matches no leaf of a multi-level table and
+    # silently drops nothing (verified live)
+    stale = [(e, levels) for e, levels in parts if e < keep_from]
+    leaves = sorted(", ".join("{} = '{}'".format(k, v.replace("'", "''"))
+                              for k, v in levels) for _, levels in stale)
     chunk = 200
     for i in range(0, len(leaves), chunk):
         specs = ", ".join(f"PARTITION ({leaf})"
@@ -224,7 +221,7 @@ def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
         spark.sql(f"ALTER TABLE {table} DROP IF EXISTS {specs}")
     if leaves:
         spark.catalog.refreshTable(table)
-    return len(eps_set)
+    return len({e for e, _ in stale})
 
 
 def compact_epochs(spark: SparkSession, table: str, upto_epoch: int,

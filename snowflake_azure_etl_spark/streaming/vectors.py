@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 from ..operators.similarity import (KMEANS_SCALE, _centroid_array,
                                     assign_cells, cell_fit_stats,
                                     drift_flags, kmeans_centroids)
-from .sinks import (EPOCH_COL, epoch_sink, read_epochs,
+from ..warehouse.ddl import drop_table
+from .sinks import (EPOCH_COL, epoch_partitions, epoch_sink, read_epochs,
                     require_columns, write_epoch)
 
 
@@ -54,14 +55,13 @@ def bootstrap_centroids(corpus: DataFrame, centroids_table: str, *,
     """Train a quantizer on a corpus and persist it as `(cell_id, ctv,
     q_version)` — the table every epoch's assignment reads (current =
     highest version). Bootstrap REPLACES the whole table (a fresh
-    quantizer lifecycle — CREATE OR REPLACE semantics) and lays it
-    q_version-PARTITIONED so `retrain_centroids` can add versions by
-    partition overwrite without touching earlier ones."""
-    (kmeans_centroids(corpus, id_col, vec_col, n_cells,
-                      n_iter=train_iters)
-     .withColumn("q_version", F.lit(int(version)).cast("long"))
-     .write.mode("overwrite").partitionBy("q_version").format("parquet")
-     .saveAsTable(centroids_table))
+    quantizer lifecycle: `ddl.drop_table`, then version `version`) and
+    lays it q_version-PARTITIONED so `retrain_centroids` can add
+    versions by partition overwrite without touching earlier ones."""
+    cents = kmeans_centroids(corpus, id_col, vec_col, n_cells,
+                             n_iter=train_iters)
+    drop_table(corpus.sparkSession, centroids_table)
+    write_epoch(cents, centroids_table, version, epoch_col="q_version")
 
 
 def retrain_centroids(spark: SparkSession, index_table: str,
@@ -94,6 +94,22 @@ def retrain_centroids(spark: SparkSession, index_table: str,
     write_epoch(new, centroids_table, int(cur) + 1, epoch_col="q_version")
 
 
+def _retention_probe(spark: SparkSession, index_table: str,
+                     version: int, below: int) -> DataFrame | None:
+    """The index rows of quantizer `version` below epoch `below`. Versions
+    never decrease from one epoch to the next, so such rows exist iff
+    the latest index epoch below `below` (from the partition listing;
+    None if there is none) holds them: one epoch is read, however long
+    the stream has run."""
+    earlier = [e for e, _ in epoch_partitions(spark, index_table)[0]
+               if e < below]
+    if not earlier:
+        return None
+    return spark.table(index_table).filter(
+        (F.col(EPOCH_COL) == max(earlier))
+        & (F.col("q_version") == int(version)))
+
+
 def _check_drift_retention(spark: SparkSession, index_table: str,
                            drift_table: str, version: int,
                            epoch_id: int) -> None:
@@ -109,11 +125,9 @@ def _check_drift_retention(spark: SparkSession, index_table: str,
     first = (spark.table(drift_table)
              .filter(F.col("q_version") == int(version))
              .agg(F.min(EPOCH_COL)).collect()[0][0])
-    below = int(epoch_id) if first is None else min(int(first),
-                                                   int(epoch_id))
-    orphaned = (read_epochs(spark, index_table, before=below)
-                .filter(F.col("q_version") == int(version)))
-    if not orphaned.isEmpty():
+    below = int(epoch_id) if first is None else min(int(first), int(epoch_id))
+    orphaned = _retention_probe(spark, index_table, version, below)
+    if orphaned is not None and not orphaned.isEmpty():
         raise ValueError(
             f"vector_ingest_sink: drift table {drift_table} has no rows "
             f"for q_version {version} before epoch {below}, but index "

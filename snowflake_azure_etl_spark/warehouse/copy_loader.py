@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..sources.csv_format import LoadReport, copy_into  # noqa: F401  (re-export)
+from .ddl import drop_table
 
 
 def list_stage(spark: SparkSession, path_glob: str) -> list[tuple[str, int]]:
@@ -90,12 +91,8 @@ def copy_with_history(spark: SparkSession, path_glob: str,
                 for r in (spark.table(history_table)
                           .filter(F.col("table_name") == table)
                           .select("file_path", "file_size").collect())}
-    else:
-        # a fresh catalog over a persisted warehouse dir may hold an
-        # orphan managed location from an earlier session; the append
-        # below would fail on it (same contract as ddl.create_table)
-        from .ddl import drop_orphan_location
-        drop_orphan_location(spark, history_table)
+    else:  # the append below must not meet an earlier session's location
+        drop_table(spark, history_table)
     todo = (list(listing) if force
             else [(p, sz) for p, sz in listing if (p, sz) not in seen])
     if not todo:

@@ -13,7 +13,8 @@ catalog) on top.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -30,32 +31,52 @@ def database_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.databaseExists(name)
 
 
-def create_table(spark: SparkSession, name: str, schema: T.StructType,
-                 replace: bool = True) -> bool:
+def create_table(spark: SparkSession, name: str, schema: T.StructType) -> bool:
     """CREATE OR REPLACE TABLE from a declared schema (S5; the reference
-    executes per-table .sql DDL files — create_tables.py:62-74). Spark's
-    in-memory/hive catalogs have no CREATE OR REPLACE TABLE for empty
-    tables, so REPLACE = DROP + CREATE (same idempotent contract)."""
-    if replace:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        drop_orphan_location(spark, name)
-    spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({schema.toDDL()}) USING parquet")
+    executes per-table .sql DDL files — create_tables.py:62-74): Spark's
+    catalogs have no CREATE OR REPLACE for an empty table, so it is
+    `drop_table` + CREATE TABLE (no Spark job)."""
+    drop_table(spark, name)
+    spark.sql(f"CREATE TABLE {name} ({schema.toDDL()}) USING parquet")
     return table_exists(spark, name)
 
 
-def drop_orphan_location(spark: SparkSession, name: str) -> None:
-    """Remove a managed-table location left behind by a previous session
-    (the in-memory catalog forgets tables at JVM exit, their dirs don't) —
-    required for CREATE OR REPLACE to be idempotent across sessions."""
-    db, _, tbl = name.rpartition(".")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    rel = f"{db}.db/{tbl}" if db and db != "default" else tbl
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(f"{wh}/{rel}")
-    fs = path.getFileSystem(hconf)
+def drop_table(spark: SparkSession, name: str) -> None:
+    """DROP TABLE IF EXISTS, and delete the table's location too: the
+    in-memory catalog forgets its tables at JVM exit but not their
+    directories, and a later CREATE over one fails with
+    LOCATION_ALREADY_EXISTS. The session catalog resolves the location
+    (current database, identifier case, database location)."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(name)
+    db = ident.database()
+    if db.isDefined() and not spark.catalog.databaseExists(db.get()):
+        return
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(
+        state.catalog().defaultTablePath(ident))
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if fs.exists(path):
         fs.delete(path, True)
+
+
+def replace_table(df: DataFrame, name: str) -> int:
+    """CREATE OR REPLACE TABLE `name` AS SELECT (S5, R6): drop the table
+    and its location, land `df` as parquet, return its row count.
+
+    The count is an Observation on the write, which reports the FIRST
+    action on its plan: a zero is checked against the table, so a count
+    taken by some other action fails loud."""
+    spark = df.sparkSession
+    drop_table(spark, name)
+    obs = Observation()
+    (df.observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.format("parquet").saveAsTable(name))
+    n = obs.get["n"]
+    if n == 0 and not spark.table(name).isEmpty():
+        raise RuntimeError(f"{name}: the write's row-count Observation "
+                           "saw 0 rows but the table is not empty")
+    return n
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:

@@ -10,8 +10,8 @@ config (config.py:20-59), and idempotent DDL throughout.
 Engine shape: one SparkSession, one `EtlRun` that sequences step
 functions, logs each with wall-clock + row counts, aborts on the first
 failure (raising EtlStepError — the exit-code analog), and returns a
-summary report. Materialization is `saveAsTable` into a warehouse
-database (overwrite = CREATE OR REPLACE semantics, R6); row accounting
+summary report. Materialization is `ddl.replace_table` into a
+warehouse database (CREATE OR REPLACE semantics, R6); row accounting
 (R3) rides each write as an Observation, with no read-back. No sleeps —
 the reference's time.sleep(1) pacing is a Snowflake-API courtesy with
 no Spark analog.
@@ -25,8 +25,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..plans.datedim import DIM_DATE_COLUMNS
 from . import ddl
@@ -51,10 +50,6 @@ class StepResult:
 class EtlReport:
     """Per-step accounting summary (R3; reference load_data.py:48-74)."""
     steps: list[StepResult] = field(default_factory=list)
-
-    @property
-    def total_seconds(self) -> float:
-        return sum(s.seconds for s in self.steps)
 
     @property
     def table_counts(self) -> dict[str, int]:
@@ -95,28 +90,6 @@ def warehouse_database() -> str:
     return os.environ.get("SPARK_GRAFT_WAREHOUSE_DB", "wh")
 
 
-def _materialize(spark: SparkSession, database: str, name: str,
-                 df: DataFrame) -> dict[str, int]:
-    """CREATE OR REPLACE TABLE AS SELECT (R6) + row accounting (R3).
-
-    With the in-memory catalog a table dir can survive a previous JVM
-    while the catalog entry didn't; drop both so REPLACE is truly
-    idempotent across sessions. The count is an Observation on the
-    write, which reports the FIRST action on its plan: a zero is checked
-    against the table, so a count taken by some other action fails loud."""
-    full = f"{database}.{name}"
-    spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ddl.drop_orphan_location(spark, full)
-    obs = Observation()
-    (df.observe(obs, F.count(F.lit(1)).alias("n"))
-     .write.mode("overwrite").format("parquet").saveAsTable(full))
-    n = obs.get["n"]
-    if n == 0 and not spark.table(full).isEmpty():
-        raise EtlStepError(f"{full}: the write's row-count Observation "
-                           "saw 0 rows but the table is not empty")
-    return {full: n}
-
-
 def run_warehouse_build(spark: SparkSession, sf_dir: str,
                         database: str | None = None) -> EtlReport:
     """The dimensional-ETL phase end-to-end: create DB → build + persist
@@ -132,8 +105,9 @@ def run_warehouse_build(spark: SparkSession, sf_dir: str,
     for name in ("dim_location", "dim_customer", "dim_supplier",
                  "dim_channel", "dim_part", "dim_date", "fact_sales",
                  "fact_sales_target", "fact_src_sales_target"):
-        run.step(f"load {name}",
-                 lambda n=name: _materialize(spark, database, n, star[n]))
+        full = f"{database}.{name}"
+        run.step(f"load {name}", lambda t=full, n=name: {
+            t: ddl.replace_table(star[n], t)})
     run.step("create views", lambda: create_passthrough_views(spark, database))
     run.step("create analytical views",
              lambda: create_analytical_views(spark, database))

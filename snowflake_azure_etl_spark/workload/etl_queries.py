@@ -382,9 +382,7 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             members.filter(F.col("custkey") % 10 != 0),
             "dim_customer_id", order_by=["custkey"], offset=1)
         table = f"{db}.dim_customer_incr"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        ddl.drop_orphan_location(spark, table)
-        base.write.mode("overwrite").format("parquet").saveAsTable(table)
+        ddl.replace_table(base, table)
         rep = append_new_members(spark, table, members, "dim_customer_id",
                                  ["custkey"], order_by=["custkey"])
         if rep.inserted <= 0 or rep.skipped <= 0:
@@ -417,10 +415,7 @@ def q65_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 business_keys=["bk"],
                                 tracked_cols=["segment"], batch_id=1)
         scd_table = f"{db}.dim_supplier_scd2"
-        spark.sql(f"DROP TABLE IF EXISTS {scd_table}")
-        ddl.drop_orphan_location(spark, scd_table)
-        merged.write.mode("overwrite").format("parquet") \
-            .saveAsTable(scd_table)
+        ddl.replace_table(merged, scd_table)
         return spark.table(scd_table).select(
             F.col("k").alias("surrogate_id"),
             F.col("bk").alias("business_key"),

@@ -71,8 +71,21 @@ def test_defaults_extracted():
 
 def test_create_or_replace_table_split():
     t = translate_statement(STAGING_DDL)
-    assert len(t.statements) == 2
-    assert t.statements[0].startswith("DROP TABLE IF EXISTS")
+    assert t.replaces == "compat_staging_customer"
+    assert len(t.statements) == 1
+    assert t.statements[0].startswith("CREATE TABLE compat_staging_customer")
+
+
+def test_create_or_replace_over_orphaned_location(spark, orphan_location):
+    """A re-run of a CREATE OR REPLACE TABLE script in a fresh session
+    finds the table's directory but no catalog entry; the replace drops
+    that directory too instead of failing LOCATION_ALREADY_EXISTS."""
+    orphan_location("compat_orphan_db", "t")
+    run_script(spark, "CREATE OR REPLACE TABLE compat_orphan_db.t "
+                      "(a NUMBER(10,0), b VARCHAR);")
+    t = spark.table("compat_orphan_db.t")
+    assert t.dtypes == [("a", "decimal(10,0)"), ("b", "string")]
+    assert t.isEmpty()
 
 
 def test_secure_view_degraded():

@@ -143,8 +143,7 @@ def test_replayed_epoch_leaves_every_table_unchanged(spark, family):
         full = f"{DB}.{family}_{name}"
         if full not in seen:
             seen.add(full)
-            spark.sql(f"DROP TABLE IF EXISTS {full}")
-            ddl.drop_orphan_location(spark, full)
+            ddl.drop_table(spark, full)
         return full
 
     sink, outputs = FAMILIES[family](spark, t)

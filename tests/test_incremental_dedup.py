@@ -48,10 +48,8 @@ def test_bucketed_index_never_reshuffles(spark):
         "doc_id bigint, text string")
     idx = (dedup.exact_dedup_groups(corpus, "doc_id", "text")
            .select("content_hash"))
-    spark.sql("DROP TABLE IF EXISTS dedup_hash_index")
-    from snowflake_azure_etl_spark.warehouse.ddl import \
-        drop_orphan_location
-    drop_orphan_location(spark, "dedup_hash_index")
+    from snowflake_azure_etl_spark.warehouse import ddl
+    ddl.drop_table(spark, "dedup_hash_index")
     # bucket count must equal the join's partition count for the
     # one-sided co-location to hold (same layout contract as
     # land_bucketed's two-sided case — a mismatch reshuffles the index)

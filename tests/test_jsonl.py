@@ -47,16 +47,12 @@ def test_read_jsonl_semantics(spark, stage):
 
 
 def test_copy_into_jsonl_accounting(spark, stage):
-    import shutil
+    from snowflake_azure_etl_spark.warehouse import ddl
 
     spark.sql("CREATE DATABASE IF NOT EXISTS jsonl_test_db")
-    spark.sql("DROP TABLE IF EXISTS jsonl_test_db.docs")
-    loc = (spark.conf.get("spark.sql.warehouse.dir")
-           .removeprefix("file:") + "/jsonl_test_db.db/docs")
-    shutil.rmtree(loc, ignore_errors=True)  # orphan managed location
+    ddl.drop_table(spark, "jsonl_test_db.docs")
     rep = jsonl_format.copy_into_jsonl(
-        spark, stage + "/*.jsonl", SCHEMA, "jsonl_test_db.docs",
-        mode="overwrite")
+        spark, stage + "/*.jsonl", SCHEMA, "jsonl_test_db.docs")
     # a: 3 good; b: 2 good, 1 malformed line, 1 type-mismatch line
     assert rep.rows_loaded == 5
     assert rep.rows_rejected == 2

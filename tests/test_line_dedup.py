@@ -241,8 +241,7 @@ def test_line_dedup_sink_reads_shards_back_when_observation_is_empty(
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     win_t, scrub_t = f"{db}.winners", f"{db}.scrubbed"
     for t in (win_t, scrub_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
     batches = [
         [(1, "cookie banner\nunique alpha\nnav menu"),
          (2, "cookie banner\nunique beta")],

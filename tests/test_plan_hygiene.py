@@ -397,6 +397,10 @@ EPOCH_WRITE_OK = {
     # idempotent write
     ("streaming/vectors.py",
      'write_epoch(new, centroids_table, int(cur) + 1, epoch_col="q_version")'),
+    # a bootstrap lands its first quantizer version the same way, after
+    # ddl.drop_table (CREATE OR REPLACE of the whole quantizer)
+    ("streaming/vectors.py",
+     'write_epoch(cents, centroids_table, version, epoch_col="q_version")'),
     # the SCD2 snapshot overwrite, replay-safe through scd2_apply's
     # idempotency rather than epoch partitions
     ("streaming/scd.py",
@@ -430,6 +434,83 @@ def test_only_sinks_writes_epoch_partitions():
         "epoch partition write(s) outside streaming/sinks.py — return "
         "the outputs from a step and land them through epoch_sink:\n"
         + "\n".join(offenders))
+
+
+#: (module, top-level function, kind) -> the drop/replace steps it may
+#: take outside warehouse/ddl.py, each with its reason.
+REPLACE_PATH_OK = {
+    # an epoch table's bootstrap: restarted in a fresh JVM over an
+    # earlier lineage's epochs it must keep failing loud
+    # (LOCATION_ALREADY_EXISTS), not wipe them
+    ("streaming/sinks.py", "write_epoch", "overwrite saveAsTable"): 1,
+    # a bucketed layout, written with its caller's mode
+    ("plans/layout.py", "land_bucketed", "overwrite saveAsTable"): 1,
+    # compact_landing's directory swap of a path landing, no table
+    ("plans/layout.py", "_swap_dirs", "location delete"): 2,
+}
+
+
+def _replace_sites(source: str) -> "dict[tuple[str, str], int]":
+    """(top-level function, kind) -> its hand-kept replace steps: a
+    string literal outside docstrings holding DROP TABLE (run directly
+    or handed on as a statement), a `.delete(` / `rmtree(` call, and
+    each saveAsTable in a function that sets a writer mode other than
+    "append"."""
+    tree = ast.parse(source)
+    docs = {id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)}
+    sites = {}
+    for top in tree.body:
+        where = getattr(top, "name", "<module>")
+        nodes = list(ast.walk(top))
+        overwrites = any(
+            _call_attr(n) == "mode" and not (
+                n.args and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == "append") for n in nodes)
+        for n in nodes:
+            name = isinstance(n, ast.Call) and (
+                _call_attr(n) or getattr(n.func, "id", None))
+            kind = ("DROP TABLE" if isinstance(n, ast.Constant)
+                    and isinstance(n.value, str) and id(n) not in docs
+                    and re.search(r"DROP\s+TABLE", n.value, re.IGNORECASE)
+                    else "location delete" if name in ("delete", "rmtree")
+                    else "overwrite saveAsTable"
+                    if name == "saveAsTable" and overwrites else None)
+            if kind:
+                sites[(where, kind)] = sites.get((where, kind), 0) + 1
+    return sites
+
+
+def test_one_replace_path():
+    """Every managed-table drop and replace goes through warehouse/ddl
+    (drop_table / replace_table), which removes the table's location
+    with its catalog entry, so a re-run in a fresh session is
+    idempotent. A DROP TABLE, a location delete or an overwriting
+    saveAsTable elsewhere is a hand-kept copy of that path."""
+    planted = ('def reload(spark, df, t, fs, path):\n'
+               '    """DROP TABLE, then CREATE."""\n'
+               '    spark.sql(f"DROP TABLE IF EXISTS {t}")\n'
+               '    fs.delete(path, True)\n'
+               '    df.write.mode("overwrite").saveAsTable(t)\n'
+               'def load(df, t):\n'
+               '    df.write.mode("append").saveAsTable(t)\n'
+               '    return ["drop table " + t]\n')
+    assert _replace_sites(planted) == {
+        ("reload", "DROP TABLE"): 1, ("reload", "location delete"): 1,
+        ("reload", "overwrite saveAsTable"): 1, ("load", "DROP TABLE"): 1}
+    found = {}
+    for py in sorted(_PKG.rglob("*.py")):
+        rel = str(py.relative_to(_PKG))
+        if rel != "warehouse/ddl.py":
+            for (where, kind), n in _replace_sites(py.read_text()).items():
+                found[(rel, where, kind)] = n
+    drift = {k: (found.get(k), REPLACE_PATH_OK.get(k))
+             for k in found.keys() | REPLACE_PATH_OK.keys()
+             if found.get(k) != REPLACE_PATH_OK.get(k)}
+    assert not drift, (
+        "drop/replace sites as (found, allowed) — drop and replace "
+        f"through ddl.drop_table / ddl.replace_table: {drift}")
 
 
 def test_bounded_broadcast_rejects_unattested_and_oversized(spark):

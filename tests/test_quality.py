@@ -80,15 +80,13 @@ def test_warehouse_contracts_pass_and_fail_loudly(spark, sf_dir):
     assert results and all(v == 0 for v in results.values())
     assert "dim_customer.dim_customer_id_unique" in results
 
-    from snowflake_azure_etl_spark.warehouse.ddl import \
-        drop_orphan_location
+    from snowflake_azure_etl_spark.warehouse import ddl
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}_dqtest")
 
     def validate_with_dim_customer(rows):
         """Validate a db holding only `rows` as dim_customer, under
         dim_customer's contracts alone."""
-        spark.sql(f"DROP TABLE IF EXISTS {db}_dqtest.dim_customer")
-        drop_orphan_location(spark, f"{db}_dqtest.dim_customer")
+        ddl.drop_table(spark, f"{db}_dqtest.dim_customer")
         rows.write.mode("overwrite").saveAsTable(
             f"{db}_dqtest.dim_customer")
         old = dict(runner.WAREHOUSE_CONTRACTS)

@@ -123,9 +123,8 @@ def test_epoch_sink_survives_replay(spark, staged_events_dir):
         EPOCH_COL, epoch_sink)
 
     table = "default.sink_events_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     from snowflake_azure_etl_spark.warehouse import ddl
-    ddl.drop_orphan_location(spark, table)
+    ddl.drop_table(spark, table)
 
     sink = epoch_sink(lambda batch_df, _: [batch_df], table)
     stream = (spark.readStream.format("parquet")

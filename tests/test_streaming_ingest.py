@@ -188,8 +188,7 @@ def test_decontam_ingest_matches_batch_operator(spark):
         db = "decontam_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     ev_docs = spark.createDataFrame(eval_rows, "doc_id long, text string")
@@ -270,8 +269,7 @@ def test_dsir_ingest_matches_batch_operator(spark):
         db = "dsir_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     corpus = spark.createDataFrame(train,
@@ -361,8 +359,7 @@ def test_lm_ingest_matches_batch_operator(spark):
         db = "lm_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     corpus = spark.createDataFrame(train, "doc_id long, text string")
@@ -453,8 +450,7 @@ def test_lm_counts_ingest_grows_model(spark):
         db = "lmc_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     uni_t, bi_t, tri_t = table("uni"), table("bi"), table("tri")
@@ -539,8 +535,7 @@ def test_wordpiece_ingest_matches_batch(spark):
     db = "wp_stream_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     ug.pieces_table_df(spark, model).write.saveAsTable(f"{db}.pieces")
     sink = ingest.wordpiece_ingest_sink(f"{db}.pieces", f"{db}.seg")
     sink(docs, 0)
@@ -588,8 +583,7 @@ def test_unigram_counts_ingest_grows_model(spark):
     db = "unic_stream_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     words_t = f"{db}.words"
-    spark.sql(f"DROP TABLE IF EXISTS {words_t}")
-    ddl.drop_orphan_location(spark, words_t)
+    ddl.drop_table(spark, words_t)
 
     src = tempfile.mkdtemp(prefix="unic_stream_")
     base = time.time() - 100
@@ -672,8 +666,7 @@ def test_lm3_ingest_matches_batch_operator(spark):
         db = "lm3_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     corpus = spark.createDataFrame(train, "doc_id long, text string")
@@ -777,8 +770,7 @@ def test_unigram_ingest_matches_batch_operator(spark):
         db = "uni_stream_db"
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         t = f"{db}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
         return t
 
     corpus = spark.createDataFrame(train, "doc_id long, text string")
@@ -861,8 +853,7 @@ def test_line_dedup_ingest_matches_batch(spark):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     win_t, scrub_t = f"{db}.winners", f"{db}.scrubbed"
     for t in (win_t, scrub_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
 
     src = tempfile.mkdtemp(prefix="lined_stream_")
     base = time.time() - 100
@@ -940,8 +931,7 @@ def test_wordpiece_ingest_two_set_flags_table(spark):
     db = "wp2_stream_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     spark.createDataFrame(wp._flag_items(init, cont),
                           "piece string, fl int") \
          .write.saveAsTable(f"{db}.pieces")
@@ -975,8 +965,7 @@ def test_wordpiece_ingest_rejects_membershipless_flags(spark):
     db = "wp2_badfl_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     spark.createDataFrame(
         [("good", 3), ("ghost", 0), ("nullfl", None), ("ini", 1)],
         "piece string, fl int").write.saveAsTable(f"{db}.pieces")
@@ -988,8 +977,7 @@ def test_wordpiece_ingest_rejects_membershipless_flags(spark):
     msg = str(ei.value)
     assert "ghost" in msg and "nullfl" in msg and "fl & 3" in msg
     # a well-formed flags table still streams
-    spark.sql(f"DROP TABLE IF EXISTS {db}.pieces")
-    ddl.drop_orphan_location(spark, f"{db}.pieces")
+    ddl.drop_table(spark, f"{db}.pieces")
     spark.createDataFrame([("good", 3), ("ini", 1)],
                           "piece string, fl int") \
          .write.saveAsTable(f"{db}.pieces")
@@ -1007,8 +995,7 @@ def test_wordpiece_ingest_null_piece_fails_loud_not_typeerror(spark):
     db = "wp2_nullpiece_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     spark.createDataFrame(
         [("good", 3), (None, 0), ("ghost", 0), ("ini", 1)],
         "piece string, fl int").write.saveAsTable(f"{db}.pieces")
@@ -1036,8 +1023,7 @@ def test_line_dedup_ingest_rejects_preshard_winner_table(spark):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     win_t, scrub_t = f"{db}.winners", f"{db}.scrubbed"
     for t in (win_t, scrub_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
     # the pre-shard layout: epoch partition only
     (spark.createDataFrame(
         [(11, 1, 0, "cookie banner", 0)],
@@ -1067,8 +1053,7 @@ def test_line_dedup_layout_guard_launches_no_job(spark):
 
     win_t = "linededup_guard_db.winners"
     spark.sql("CREATE DATABASE IF NOT EXISTS linededup_guard_db")
-    spark.sql(f"DROP TABLE IF EXISTS {win_t}")
-    ddl.drop_orphan_location(spark, win_t)
+    ddl.drop_table(spark, win_t)
     (spark.createDataFrame(
         [(11, 1, 0, "cookie banner", 0, 3)],
         f"_h long, d long, i int, t string, {EPOCH_COL} long, "
@@ -1112,8 +1097,7 @@ def test_line_dedup_ingest_winner_table_is_shard_pruned(spark):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     win_t, scrub_t = f"{db}.winners", f"{db}.scrubbed"
     for t in (win_t, scrub_t):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
 
     batches = [
         [(1, "cookie banner\nunique alpha\nnav menu"),

@@ -40,8 +40,7 @@ def tables(spark):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     names = (f"{db}.nd_index", f"{db}.nd_cands")
     for t in names:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
     return names
 
 

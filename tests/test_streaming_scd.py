@@ -34,8 +34,7 @@ def seeded(spark):
     db = "scd_stream_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     table = f"{db}.dim_stream_scd2"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    ddl.drop_orphan_location(spark, table)
+    ddl.drop_table(spark, table)
     members = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "a"), (4, "b")], "bk long, segment string")
     state = scd.scd2_seed(members, key_col="k", business_keys=["bk"])

@@ -45,8 +45,7 @@ def _table(spark, name):
     db = "substr_stream_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     t = f"{db}.{name}"
-    spark.sql(f"DROP TABLE IF EXISTS {t}")
-    ddl.drop_orphan_location(spark, t)
+    ddl.drop_table(spark, t)
     return t
 
 

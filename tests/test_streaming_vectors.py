@@ -51,8 +51,7 @@ def tables(spark):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     names = (f"{db}.v_index", f"{db}.v_drift", f"{db}.v_cents")
     for t in names:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        ddl.drop_orphan_location(spark, t)
+        ddl.drop_table(spark, t)
     return names
 
 
@@ -245,8 +244,11 @@ def test_vector_sink_epoch_job_counts_are_pinned(spark, tables):
     baseline): the version read (2), the centroid array and the
     checkpointed assignment (3), the drift bootstrap DDL (1), the
     drift write (2), the index DDL and write (2). Epoch 1 adds the
-    retention check (2) and the baseline probe (1) and drops the two
-    DDLs; its drift write aggregates the baseline partials too (3).
+    retention check and the baseline probe and drops the two DDLs; its
+    drift write aggregates the baseline partials too. The retention
+    check reads the version's first drift epoch (2 jobs), then probes
+    the one index epoch below it, here none: the probe of every earlier
+    epoch that it replaced took a job with nothing to read (12 -> 11).
     A join of the batch partials back onto the report once made the
     count race on adaptive execution's join re-planning (12 or 13)."""
     index_table, drift_table, cents_table = tables
@@ -267,7 +269,49 @@ def test_vector_sink_epoch_job_counts_are_pinned(spark, tables):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    assert counts == [10, 12]
+    assert counts == [10, 11]
+
+
+def test_bootstrap_replaces_an_orphaned_location(spark, tables,
+                                               orphan_location):
+    """Bootstrap is CREATE OR REPLACE: re-run in a fresh session, it
+    finds the quantizer's directory but no catalog entry, and replaces
+    it instead of failing LOCATION_ALREADY_EXISTS."""
+    cents_table = tables[2]
+    orphan_location(*cents_table.split("."))
+    bootstrap, _ = _batches()
+    bootstrap_centroids(spark.createDataFrame(
+        bootstrap, "vec_id long, embedding array<double>"),
+        cents_table, n_cells=3)
+    cents = spark.table(cents_table)
+    assert cents.columns == ["cell_id", "ctv", "q_version"]
+    assert sorted(r["q_version"] for r in cents.collect()) == [0, 0, 0]
+
+
+def test_drift_retention_probe_reads_one_epoch(spark, tables):
+    """The retention check's probe reads the one index epoch just below
+    the version's first drift epoch, not every earlier epoch: after
+    two epochs per quantizer version, the version-1 probe below epoch
+    2 reads epoch 1's files only."""
+    from snowflake_azure_etl_spark.streaming.vectors import _retention_probe
+
+    index_table, drift_table, cents_table = tables
+    bootstrap, (aligned, drifted) = _batches()
+    schema = "vec_id long, embedding array<double>"
+    bootstrap_centroids(spark.createDataFrame(bootstrap, schema),
+                        cents_table, n_cells=3)
+    sink = vector_ingest_sink(index_table, drift_table, cents_table)
+    sink(spark.createDataFrame(bootstrap, schema), 0)
+    sink(spark.createDataFrame(aligned, schema), 1)
+    retrain_centroids(spark, index_table, cents_table, n_cells=3)
+    sink(spark.createDataFrame(drifted, schema), 2)
+    sink(spark.createDataFrame(
+        [(i + 5000, v) for i, v in aligned], schema), 3)
+    probe = _retention_probe(spark, index_table, 1, 2)
+    files = probe.inputFiles()
+    assert files and all(f"/{EPOCH_COL}=1/" in f for f in files)
+    assert probe.isEmpty()
+    assert _retention_probe(spark, index_table, 0, 0) is None
 
 
 @pytest.mark.slow
@@ -334,8 +378,7 @@ def test_vacuum_skips_unparseable_partitions(spark):
 
     tbl = "vec_stream_db.v_vacuum_stray"
     spark.sql("CREATE DATABASE IF NOT EXISTS vec_stream_db")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    ddl.drop_orphan_location(spark, tbl)
+    ddl.drop_table(spark, tbl)
     (spark.createDataFrame([(1, "0"), (2, "1"), (3, "stray")],
                            f"x long, {EPOCH_COL} string")
      .write.mode("overwrite").partitionBy(EPOCH_COL)
@@ -364,8 +407,7 @@ def test_vacuum_epochs_drops_sharded_sub_partitions(spark):
 
     tbl = "vec_stream_db.v_vacuum_sharded"
     spark.sql("CREATE DATABASE IF NOT EXISTS vec_stream_db")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    ddl.drop_orphan_location(spark, tbl)
+    ddl.drop_table(spark, tbl)
     rows = [(x, e, x % 3) for e in range(3) for x in range(6)]
     (spark.createDataFrame(rows, f"x long, {EPOCH_COL} long, _hb int")
      .write.mode("overwrite").partitionBy(EPOCH_COL, "_hb")

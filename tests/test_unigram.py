@@ -236,8 +236,7 @@ def test_sink_derives_k_from_persisted_pieces(spark, tmp_path):
     db = "uni_k_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     ug.pieces_table_df(spark, model).write.saveAsTable(f"{db}.pieces")
     sink = ingest.unigram_ingest_sink(f"{db}.pieces", f"{db}.seg")
     sink(docs, 0)
@@ -622,8 +621,7 @@ def test_fallback_streaming_sink_matches_batch(spark):
     db = "uni_fb_db"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     for name in ("pieces", "seg"):
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
-        ddl.drop_orphan_location(spark, f"{db}.{name}")
+        ddl.drop_table(spark, f"{db}.{name}")
     ug.pieces_table_df(spark, model).write.saveAsTable(f"{db}.pieces")
     sink = ingest.unigram_ingest_sink(f"{db}.pieces", f"{db}.seg",
                                       fallback=True)

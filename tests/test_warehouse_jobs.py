@@ -4,8 +4,9 @@ Each `EtlRun` step runs under its own job group and the groups are read
 back through `statusTracker`, so the budget is a count of launched jobs,
 not a wall-clock bound. It pins the cold-cycle cuts: the database
 existence check is a catalog lookup, each load's row count rides its
-write as an Observation, and the contracts sweep is one action for the
-dim keys plus one pass over `fact_sales` for all its FK edges. The
+`ddl.replace_table` write as an Observation, and the contracts sweep
+is one action for the dim keys plus one pass over `fact_sales` for all
+its FK edges. The
 Observation counts are checked against the tables, and a count that
 missed its write must fail the step rather than under-report."""
 
@@ -14,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Observation
 
-from snowflake_azure_etl_spark.warehouse import runner
+from snowflake_azure_etl_spark.warehouse import ddl, runner
 
 DB = "wh_jobs_test"
 
@@ -88,8 +89,7 @@ class _BlindCount(Observation):
 def test_materialize_fails_loud_when_its_count_missed_the_write(
         spark, monkeypatch):
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB}")
-    assert runner._materialize(spark, DB, "empty_t", spark.range(0)) == {
-        f"{DB}.empty_t": 0}
-    monkeypatch.setattr(runner, "Observation", _BlindCount)
-    with pytest.raises(runner.EtlStepError, match="Observation"):
-        runner._materialize(spark, DB, "blind_t", spark.range(3))
+    assert ddl.replace_table(spark.range(0), f"{DB}.empty_t") == 0
+    monkeypatch.setattr(ddl, "Observation", _BlindCount)
+    with pytest.raises(RuntimeError, match="Observation"):
+        ddl.replace_table(spark.range(3), f"{DB}.blind_t")
