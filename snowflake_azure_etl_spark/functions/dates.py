@@ -32,8 +32,7 @@ from .scalar import date_key
 FISCAL_START_MONTH = 7  # FY starts July 1 (reference fiscal = calendar + offset)
 
 
-def date_attributes(d: Column | str,
-                    fiscal_start_month: int = FISCAL_START_MONTH) -> dict[str, Column]:
+def date_attributes(d: Column | str) -> dict[str, Column]:
     """All Dim_Date attributes keyed by output column name.
 
     ISO-week functions are used (Spark weekofyear is ISO; weekday() is
@@ -41,8 +40,9 @@ def date_attributes(d: Column | str,
     """
     c = F.col(d) if isinstance(d, str) else d
     month = F.month(c)
-    fy = F.when(month >= fiscal_start_month, F.year(c) + 1).otherwise(F.year(c))
-    fiscal_month = ((month - fiscal_start_month + 12) % 12) + 1
+    fy = (F.when(month >= FISCAL_START_MONTH, F.year(c) + 1)
+          .otherwise(F.year(c)))
+    fiscal_month = ((month - FISCAL_START_MONTH + 12) % 12) + 1
     fiscal_quarter = ((fiscal_month - 1) / 3).cast("int") + 1
     # ISO weekday 0=Mon..6=Sun from Spark's dayofweek (1=Sun..7=Sat)
     iso_wd0 = (F.dayofweek(c) + 5) % 7
@@ -53,8 +53,8 @@ def date_attributes(d: Column | str,
     # fiscal-year start date: July 1 of the previous calendar year for
     # Jan-Jun, July 1 of the current year for Jul-Dec
     fy_start = F.make_date(
-        F.year(c) - F.when(month < fiscal_start_month, 1).otherwise(0),
-        F.lit(fiscal_start_month), F.lit(1))
+        F.year(c) - F.when(month < FISCAL_START_MONTH, 1).otherwise(0),
+        F.lit(FISCAL_START_MONTH), F.lit(1))
     fiscal_doy = F.datediff(c, fy_start) + 1
     return {
         "date_pkey": date_key(c),
@@ -100,12 +100,11 @@ def date_attributes(d: Column | str,
     }
 
 
-def oracle_date_attributes_sql(d: str = "d",
-                               fiscal_start_month: int = FISCAL_START_MONTH) -> str:
+def oracle_date_attributes_sql(d: str = "d") -> str:
     """DuckDB expressions producing the identical attribute set — the
     SQL half of the date-dim contract, kept beside the Spark half so the
-    two can't drift independently."""
-    m = fiscal_start_month
+    two can't drift independently (both read FISCAL_START_MONTH)."""
+    m = FISCAL_START_MONTH
     return f"""
         CAST(strftime({d}, '%Y%m%d') AS INT) AS date_pkey,
         {d} AS date_value,

@@ -25,14 +25,14 @@ from pyspark.sql import functions as F
 MONEY = "decimal(18,2)"
 
 
-def dec(c: Column | str, typ: str = MONEY) -> Column:
+def dec(c: Column | str) -> Column:
     """Exact-decimal view of a money column."""
-    return F.col(c).cast(typ) if isinstance(c, str) else c.cast(typ)
+    return F.col(c).cast(MONEY) if isinstance(c, str) else c.cast(MONEY)
 
 
-def dsum(c: Column | str, typ: str = MONEY) -> Column:
+def dsum(c: Column | str) -> Column:
     """SUM with exact decimal arithmetic, emitted as double."""
-    return F.sum(dec(c, typ)).cast("double")
+    return F.sum(dec(c)).cast("double")
 
 
 def scaled_long(c: str, places: int = 2) -> Column:
@@ -48,10 +48,10 @@ def scaled_long(c: str, places: int = 2) -> Column:
     return F.round(F.col(c) * 10 ** places).cast("long")
 
 
-def davg(c: Column | str, typ: str = MONEY) -> Column:
+def davg(c: Column | str) -> Column:
     """AVG = exact-decimal SUM (as double) / COUNT — deterministic."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.sum(dec(col, typ)).cast("double") / F.count(col)
+    return F.sum(dec(col)).cast("double") / F.count(col)
 
 
 def safe_div(num: Column, den: Column) -> Column:
@@ -59,12 +59,12 @@ def safe_div(num: Column, den: Column) -> Column:
     return num / F.when(den != 0, den)
 
 
-def coalesce_unknown(c: Column | str, default: str = "Unknown") -> Column:
+def coalesce_unknown(c: Column | str) -> Column:
     """COALESCE(CAST(x AS STRING), 'Unknown') — the reference's key
     normalization for the Dim_Location composite join
     (load_dimension_tables.py:158-163)."""
     col = F.col(c) if isinstance(c, str) else c
-    return F.coalesce(col.cast("string"), F.lit(default))
+    return F.coalesce(col.cast("string"), F.lit("Unknown"))
 
 
 def date_key(c: Column | str) -> Column:

@@ -235,10 +235,10 @@ def bpe_segment_count(text: Column | str,
     return F.size(apply_merges(text, merges))
 
 
-def apply_merges_arrow(docs: DataFrame, merges: list[tuple[str, str, int]],
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """(id, segs, n_segs): the production-scale encode path — an
+def apply_merges_arrow(docs: DataFrame,
+                       merges: list[tuple[str, str, int]]) -> DataFrame:
+    """(doc_id, segs, n_segs) over (doc_id, text) documents: the
+    production-scale encode path — an
     Arrow-batched mapInPandas carrying the merge list as a plain
     Python structure captured in the task closure (k·~16 bytes; a
     10⁵-merge vocabulary is ~2 MB shipped once per task, the same
@@ -280,24 +280,23 @@ def apply_merges_arrow(docs: DataFrame, merges: list[tuple[str, str, int]],
         for pdf in batches:
             segs = [
                 [s for w in t.split(" ") if w for s in encode_word(w)]
-                for t in pdf[text_col]
+                for t in pdf["text"]
             ]
             yield pd.DataFrame({
-                id_col: pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "segs": segs,
                 "n_segs": [len(s) for s in segs],
             })
 
-    id_type = dict(docs.dtypes)[id_col]
+    id_type = dict(docs.dtypes)["doc_id"]
     return docs.mapInPandas(
-        op, schema=f"{id_col} {id_type}, segs array<string>, n_segs int")
+        op, schema=f"doc_id {id_type}, segs array<string>, n_segs int")
 
 
 def vocab_from_merges(spark, docs: DataFrame,
-                      merges: list[tuple[str, str, int]],
-                      text_col: str = "text") -> DataFrame:
+                      merges: list[tuple[str, str, int]]) -> DataFrame:
     """(token, token_id): the deterministic id space a trained BPE
-    tokenizer ships — base alphabet first (the corpus's distinct
+    tokenizer ships — base alphabet first (`docs.text`'s distinct
     non-space characters, ids 0.. in lexical order), then one token
     per learned merge in rank order. Rebuilding from the same (corpus,
     merges) yields byte-identical ids — the reproducibility contract
@@ -317,7 +316,7 @@ def vocab_from_merges(spark, docs: DataFrame,
     segments partition each word's characters, decode(encode(text))
     == text with spaces removed (q58's roundtrip leg attests it)."""
     alphabet = sorted(r["token"] for r in (docs.select(F.explode(
-        F.split(F.regexp_replace(F.col(text_col), " ", ""), ""))
+        F.split(F.regexp_replace(F.col("text"), " ", ""), ""))
         .alias("token"))
         .filter(F.length("token") > 0).distinct().collect()))
     rows = [(t, i) for i, t in enumerate(alphabet)]

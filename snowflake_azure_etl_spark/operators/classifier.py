@@ -283,9 +283,8 @@ def weights_as_literals(weights: DataFrame) -> list[float]:
 
 
 def score_with_literals(df: DataFrame, feature_cols: Sequence[Column],
-                        w: Sequence[float], out_col: str = "clf_score"
-                        ) -> DataFrame:
-    """Append `out_col` from an already-materialized weight vector —
+                        w: Sequence[float]) -> DataFrame:
+    """Append `clf_score` from an already-materialized weight vector —
     the deployment path (streaming ingest, cross-session scoring): a
     pure row-local projection with the weights folded in as literals,
     legal on a streaming DataFrame where the broadcast-relation
@@ -302,4 +301,4 @@ def score_with_literals(df: DataFrame, feature_cols: Sequence[Column],
             f"(need {len(feature_cols) + 1} incl. bias) — stale or "
             f"mismatched model artifact")
     return df.withColumn(
-        out_col, squash(_margin([F.lit(float(v)) for v in w], slots)))
+        "clf_score", squash(_margin([F.lit(float(v)) for v in w], slots)))

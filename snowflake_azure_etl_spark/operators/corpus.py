@@ -38,21 +38,20 @@ def exact_keepers(docs: DataFrame, id_col: str = "doc_id",
 
 def near_dup_losers(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", threshold: float = 0.7,
-                    n_docs: int | None = None, k: int = 8,
-                    bands: int = 2, rows: int = 4,
-                    shingle_n: int = 3) -> DataFrame:
-    """Ids to DROP under near-dup removal: the verified pairs (Jaccard
-    >= threshold) are resolved into similarity COMPONENTS
-    (`operators.graph.dup_clusters`, min-label propagation), and every
+                    n_docs: int | None = None,
+                    bands: int = 2, rows: int = 4) -> DataFrame:
+    """Ids to DROP under near-dup removal: the verified pairs (8-hash
+    MinHash over word 3-shingles, Jaccard >= threshold) are resolved
+    into similarity COMPONENTS (`operators.graph.dup_clusters`,
+    min-label propagation), and every
     member except the component's min id loses. Transitively correct:
     a chain A~B~C keeps exactly A, regardless of which pairwise
     verdicts the LSH stage happened to surface."""
-    sig = dedup.minhash_signature_shingled(docs, id_col, text_col,
-                                           k=k, n=shingle_n)
+    sig = dedup.minhash_signature_shingled(docs, id_col, text_col)
     cands = dedup.lsh_candidate_pairs(sig, id_col, bands=bands, rows=rows,
                                       n_docs=n_docs)
     jac = dedup.exact_jaccard(docs, cands, id_col, text_col,
-                              n_docs=n_docs, shingle_n=shingle_n)
+                              n_docs=n_docs, shingle_n=3)
     verified = jac.filter(F.col("jaccard") >= threshold)
     from .graph import dup_clusters
     clusters = dup_clusters(verified)
@@ -264,8 +263,7 @@ def prepare_training_corpus(docs: DataFrame, id_col: str = "doc_id",
 def forget_documents(artifact: DataFrame, requests: DataFrame,
                      id_col: str = "doc_id",
                      group_col: str | None = None,
-                     n_requests: int | None = None,
-                     n_groups: int | None = None) -> DataFrame:
+                     n_requests: int | None = None) -> DataFrame:
     """Right-to-be-forgotten scrub (X-FORGET) of ONE derived artifact:
     remove every row tied to a requested document id.
 
@@ -288,31 +286,22 @@ def forget_documents(artifact: DataFrame, requests: DataFrame,
     artifact NEVER shuffles on the row path. The contaminated-GROUP
     relation is requests × groups-per-doc — bounded by the request
     batch but NOT by ``n_requests`` itself (a doc can fan into
-    thousands of sequences), so it carries its own attestation
-    (``n_groups``); unattested it stays un-hinted and AQE decides."""
+    thousands of sequences), so it stays un-hinted and AQE decides."""
     ids = requests.select(id_col).distinct()
     b_ids = maybe_broadcast(ids, n_requests)
     if group_col is None:
         return artifact.join(b_ids, id_col, "left_anti")
     groups = (artifact.join(b_ids, id_col, "left_semi")
               .select(group_col).distinct())
-    return artifact.join(maybe_broadcast(groups, n_groups),
-                         group_col, "left_anti")
+    return artifact.join(groups, group_col, "left_anti")
 
 
 def forget_cascade(artifacts: dict[str, DataFrame], requests: DataFrame,
-                   id_col: str = "doc_id",
-                   group_cols: dict[str, str] | None = None,
-                   n_requests: int | None = None,
-                   n_groups: int | None = None) -> dict[str, DataFrame]:
-    """Apply `forget_documents` across every artifact of a pipeline in
-    one call: {name: scrubbed} with per-artifact group semantics from
-    `group_cols` (e.g. {"sequences": "seq_id"}). Idempotent — a second
-    application is a no-op — and lazy: one composed plan per artifact,
-    so the cascade lands atomically with whatever write strategy the
-    caller uses."""
-    group_cols = group_cols or {}
-    return {name: forget_documents(df, requests, id_col,
-                                   group_cols.get(name), n_requests,
-                                   n_groups)
+                   n_requests: int | None = None) -> dict[str, DataFrame]:
+    """Apply `forget_documents`' row scrub on ``doc_id`` across every
+    artifact of a pipeline in one call: {name: scrubbed}. Idempotent —
+    a second application is a no-op — and lazy: one composed plan per
+    artifact, so the cascade lands atomically with whatever write
+    strategy the caller uses."""
+    return {name: forget_documents(df, requests, n_requests=n_requests)
             for name, df in artifacts.items()}

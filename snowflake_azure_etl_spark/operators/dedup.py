@@ -581,8 +581,7 @@ def _popcount_and(n_words: int):
 
 def simhash_near_dups(sig: DataFrame, id_col: str = "doc_id",
                       sim_col: str = "simhash", max_hamming: int = 3,
-                      bands: int = 4, max_bucket: int = 10000,
-                      n_docs: int | None = None,
+                      bands: int = 4, n_docs: int | None = None,
                       cache_keys: bool = True) -> DataFrame:
     """(id_a, id_b, hamming) pairs with Hamming(simhash) ≤ max_hamming
     — the Manku-style SimHash dedup leg over `simhash32` output.
@@ -608,8 +607,7 @@ def simhash_near_dups(sig: DataFrame, id_col: str = "doc_id",
     ]
     keyed = sig.select(F.col(id_col), sim.alias("_sim"), *band_cols)
     cands = lsh_candidate_pairs(keyed, id_col, bands=bands, rows=1,
-                                max_bucket=max_bucket, n_docs=n_docs,
-                                cache_keys=cache_keys)
+                                n_docs=n_docs, cache_keys=cache_keys)
     a = keyed.select(F.col(id_col).alias("id_a"), F.col("_sim").alias("_sa"))
     b = keyed.select(F.col(id_col).alias("id_b"), F.col("_sim").alias("_sb"))
     return (cands
@@ -650,12 +648,11 @@ def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return sig.select(F.col(id_col), total.alias("simhash"))
 
 
-def incremental_exact(new_docs: DataFrame, seen_hashes: DataFrame,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def incremental_exact(new_docs: DataFrame,
+                      seen_hashes: DataFrame) -> DataFrame:
     """Incremental exact dedup (X-DEDUP-INCR): keep only the rows of a
-    NEW batch whose content was never seen — the batch sibling of
-    `streaming.dedup.dedup_stream`, for pipelines that ingest by
+    NEW (doc_id, text) batch whose content was never seen — the batch
+    sibling of `streaming.dedup.dedup_stream`, for pipelines that ingest by
     COPY/batch rather than a stream.
 
     Two stages, both equi-keyed on the uniform content hash:
@@ -679,8 +676,8 @@ def incremental_exact(new_docs: DataFrame, seen_hashes: DataFrame,
     hashed once (md5 projection) before either stage.
     """
     hashed = new_docs.withColumn("content_hash",
-                                 F.md5(F.col(text_col)))
-    keeper = Window.partitionBy("content_hash").orderBy(id_col)
+                                 F.md5(F.col("text")))
+    keeper = Window.partitionBy("content_hash").orderBy("doc_id")
     batch_first = (hashed
                    .withColumn("_rn", F.row_number().over(keeper))
                    .filter(F.col("_rn") == 1).drop("_rn"))
@@ -733,13 +730,12 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
             .filter(F.col("n_docs") >= min_docs))
 
 
-def scrub_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
+def scrub_repeated_spans(docs: DataFrame,
                          span_tokens: int = SPAN_TOKENS,
                          min_docs: int = SPAN_MIN_DOCS) -> DataFrame:
-    """Remove globally-repeated spans from every document. Output:
-    (id_col, n_spans, n_removed, cleaned) with surviving spans rejoined
-    in original order.
+    """Remove globally-repeated spans from every (doc_id, text)
+    document. Output: (doc_id, n_spans, n_removed, cleaned) with
+    surviving spans rejoined in original order.
 
     The primary plan: posexplode -> LEFT ANTI equi-join on the span
     value -> order-preserving reassembly (groupBy doc, sort by
@@ -751,16 +747,16 @@ def scrub_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     holding it in memory); reassembly is the one corpus shuffle, keyed
     on the doc id. pytest pins it row-equal to an independent Python
     reference."""
-    common = repeated_spans(docs, id_col, text_col, span_tokens, min_docs)
+    common = repeated_spans(docs, "doc_id", "text", span_tokens, min_docs)
     sp = docs.select(
-        F.col(id_col),
-        F.posexplode(doc_spans(text_col, span_tokens))
+        F.col("doc_id"),
+        F.posexplode(doc_spans("text", span_tokens))
         .alias("pos", "span"))
     kept = sp.join(common.select("span"), "span", "left_anti")
     base = docs.select(
-        F.col(id_col),
-        F.size(doc_spans(text_col, span_tokens)).alias("n_spans"))
-    return _reassemble_scrub(kept, base, id_col,
+        F.col("doc_id"),
+        F.size(doc_spans("text", span_tokens)).alias("n_spans"))
+    return _reassemble_scrub(kept, base, "doc_id",
                              count_col="n_spans",
                              pos_col="pos", unit_col="span")
 
@@ -872,16 +868,15 @@ def repeated_window_positions(docs: DataFrame, id_col: str = "doc_id",
     return _covered_positions(occ, rep, id_col, min_len)
 
 
-def scrub_duplicate_substrings(docs: DataFrame, id_col: str = "doc_id",
-                               text_col: str = "text",
+def scrub_duplicate_substrings(docs: DataFrame,
                                min_len: int = SUBSTR_MIN_LEN,
-                               min_count: int = SUBSTR_MIN_COUNT,
                                index: DataFrame | None = None,
                                occ: DataFrame | None = None
                                ) -> DataFrame:
     """Remove every token run that is part of a repeated substring of
-    length >= min_len (corpus-wide occurrence count >= min_count,
-    intra-doc repeats included). Output: (id_col, n_tokens, n_removed,
+    length >= min_len (corpus-wide occurrence count >=
+    SUBSTR_MIN_COUNT, intra-doc repeats included) from every
+    (doc_id, text) document. Output: (doc_id, n_tokens, n_removed,
     cleaned) with surviving tokens rejoined in original order —
     the scrub report a pipeline persists beside the cleaned corpus.
 
@@ -895,9 +890,9 @@ def scrub_duplicate_substrings(docs: DataFrame, id_col: str = "doc_id",
     ``index``: reuse an already-built `window_hash_index` of this
     corpus (identical output, one fewer corpus-wide count shuffle —
     the pipeline that persists the index anyway scrubs from it)."""
-    covered = repeated_window_positions(docs, id_col, text_col,
-                                        min_len, min_count, index, occ)
-    return _scrub_report(docs, covered, id_col, text_col)
+    covered = repeated_window_positions(docs, "doc_id", "text", min_len,
+                                        SUBSTR_MIN_COUNT, index, occ)
+    return _scrub_report(docs, covered, "doc_id", "text")
 
 
 def _scrub_report(docs: DataFrame, covered: DataFrame, id_col: str,
@@ -1044,11 +1039,19 @@ def incremental_scrub_duplicate_substrings(
 # `incremental_exact`: dedup an ingest batch against a PERSISTED corpus
 # LSH index without recomputing corpus signatures.
 
+#: The band layout of a persisted incremental index (`band_key_index`
+#: over 8 MinHash permutations): the streaming near-dup sink writes
+#: its index in it and the probe reads it back in the same layout.
+INCR_BANDS = 4
+INCR_ROWS = 2
+
+
 def incremental_near_dup_candidates(new_docs: DataFrame,
                                     index_keys: DataFrame,
                                     id_col: str = "doc_id",
                                     text_col: str = "text",
-                                    bands: int = 4, rows: int = 2,
+                                    bands: int = INCR_BANDS,
+                                    rows: int = INCR_ROWS,
                                     shingle_n: int = 3,
                                     max_bucket: int = 10000,
                                     n_new: int | None = None,

@@ -39,13 +39,13 @@ from pyspark.sql import functions as F
 
 from ..plans.attest import bounded_broadcast
 
-def connected_components(edges: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 20) -> DataFrame:
-    """(id, component) for every node in `edges`, component = min node
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+    """(id, component) for every node in the (id_a, id_b) `edges`,
+    component = min node
     id reachable through the (undirected) edge set. Nodes with no edges
     are not emitted (callers left-join and COALESCE to own id)."""
-    e = edges.select(F.col(src).cast("long").alias("s"),
-                     F.col(dst).cast("long").alias("d"))
+    e = edges.select(F.col("id_a").cast("long").alias("s"),
+                     F.col("id_b").cast("long").alias("d"))
     # materialize the edge set ONCE: every superstep references it, and
     # its upstream (e.g. the whole LSH+Jaccard verify pipeline when
     # called from near-dup removal) must not re-execute per round
@@ -94,13 +94,13 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         "— component diameter exceeds the bound; raise max_iter")
 
 
-def dup_clusters(pairs: DataFrame, src: str = "id_a",
-                 dst: str = "id_b") -> DataFrame:
-    """(id, keeper) per document appearing in any near-dup pair:
+def dup_clusters(pairs: DataFrame) -> DataFrame:
+    """(id, keeper) per document appearing in any (id_a, id_b)
+    near-dup pair:
     keeper = min id of the document's similarity component (transitive
     closure of the pairwise verdicts). Documents in no pair keep
     themselves and are not emitted."""
-    return (connected_components(pairs, src, dst)
+    return (connected_components(pairs)
             .select("id", F.col("component").alias("keeper")))
 
 

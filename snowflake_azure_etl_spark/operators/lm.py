@@ -397,10 +397,7 @@ def lm_select(scored: DataFrame, selection: DataFrame,
 
 
 def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
-                             order: int, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             n_rows: int | None = None,
-                             toks: DataFrame | None = None) -> DataFrame:
+                             order: int) -> DataFrame:
     """Refresh the order's selection model from ROLLED-UP raw counts
     [c_1, …] — the sanctioned maintenance path for a pipeline that
     grows its LM via `streaming.ingest.lm_counts_ingest_sink` (its
@@ -411,11 +408,11 @@ def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
     against it, and trains a fresh `lm_selection`; stream-grown counts
     + this call equal a batch retrain over the concatenated corpus exactly
     (pinned in tests/test_lm.py and tests/test_streaming_ingest.py).
-    `n_rows` attests the landed corpus size for `lm_terciles`."""
+    `docs` carries (doc_id, text)."""
     model, tot = lm_model_from_counts(counts[:order])
-    sc = lm_bits(docs, id_col, text_col, model, tot, order,
-                 toks=toks, grams=counts[order - 1])
-    return lm_selection(sc, order, n_rows)
+    sc = lm_bits(docs, "doc_id", "text", model, tot, order,
+                 grams=counts[order - 1])
+    return lm_selection(sc, order)
 
 
 # --------------------------------------------------------------------------
@@ -424,15 +421,14 @@ def lm_selection_from_rollup(docs: DataFrame, counts: Sequence[DataFrame],
 # other CTEs and join lm_scored/lm_thr by doc id.
 # --------------------------------------------------------------------------
 
-def lm_oracle_ctes(min_count: int = LM_MIN_COUNT,
-                   lam_num: int = LM_LAMBDA_NUM,
-                   lam_den: int = LM_LAMBDA_DEN) -> str:
+def lm_oracle_ctes() -> str:
     """CTE chain ending in lm_scored(doc_id, lm_bits, lm_n_pos,
     lm_ppl_bits) and lm_thr(thr) over the `documents` view."""
     p = plog2_sql
-    term = (f"({lam_num} * ({p('COALESCE(b.c, 0) + 1')}"
+    term = (f"({LM_LAMBDA_NUM} * ({p('COALESCE(b.c, 0) + 1')}"
             f" - {p('COALESCE(u1.c, 0) + t.v')})"
-            f" + {lam_den - lam_num} * ({p('COALESCE(u2.c, 0) + 1')}"
+            f" + {LM_LAMBDA_DEN - LM_LAMBDA_NUM}"
+            f" * ({p('COALESCE(u2.c, 0) + 1')}"
             f" - {p('t.n + t.v')}))")
     return f"""
     lm_tk AS (SELECT doc_id, string_split(text, ' ') AS tk
@@ -442,7 +438,7 @@ def lm_oracle_ctes(min_count: int = LM_MIN_COUNT,
         FROM (SELECT unnest(tk) AS tok FROM lm_tk) GROUP BY tok),
     lm_tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n,
                       CAST(COUNT(*) AS BIGINT) AS v FROM lm_uni_all),
-    lm_uni AS (SELECT tok, c FROM lm_uni_all WHERE c >= {min_count}),
+    lm_uni AS (SELECT tok, c FROM lm_uni_all WHERE c >= {LM_MIN_COUNT}),
     lm_pos AS (
         SELECT doc_id,
                unnest(list_transform(generate_series(1, len(tk) - 1),
@@ -453,7 +449,7 @@ def lm_oracle_ctes(min_count: int = LM_MIN_COUNT,
     lm_k AS (SELECT doc_id, w1, w2, CAST(COUNT(*) AS BIGINT) AS k
              FROM lm_pos GROUP BY doc_id, w1, w2),
     lm_bi AS (SELECT w1, w2, SUM(k) AS c FROM lm_k
-              GROUP BY w1, w2 HAVING SUM(k) >= {min_count}),
+              GROUP BY w1, w2 HAVING SUM(k) >= {LM_MIN_COUNT}),
     lm_doc AS (
         SELECT lm_k.doc_id,
                CAST(SUM(k * {term}) AS BIGINT) AS lm_bits,
@@ -474,19 +470,17 @@ def lm_oracle_ctes(min_count: int = LM_MIN_COUNT,
         FROM lm_scored)"""
 
 
-def lm3_oracle_ctes(min_count: int = LM_MIN_COUNT,
-                    l3: int = LM3_L3, l2: int = LM3_L2,
-                    l1: int = LM3_L1) -> str:
+def lm3_oracle_ctes() -> str:
     """Trigram-tier CTE chain ending in lm3_scored(doc_id, lm3_bits,
     lm3_n_pos, lm3_ppl_bits) and lm3_cuts(t1, t2) — a CONTINUATION of
     `lm_oracle_ctes` (reuses its lm_tk/lm_uni/lm_bi/lm_tot relations);
     splice it immediately after."""
     p = plog2_sql
-    term = (f"({l3} * ({p('COALESCE(t.c, 0) + 1')}"
+    term = (f"({LM3_L3} * ({p('COALESCE(t.c, 0) + 1')}"
             f" - {p('COALESCE(b12.c, 0) + tt.v')})"
-            f" + {l2} * ({p('COALESCE(b23.c, 0) + 1')}"
+            f" + {LM3_L2} * ({p('COALESCE(b23.c, 0) + 1')}"
             f" - {p('COALESCE(u2.c, 0) + tt.v')})"
-            f" + {l1} * ({p('COALESCE(u3.c, 0) + 1')}"
+            f" + {LM3_L1} * ({p('COALESCE(u3.c, 0) + 1')}"
             f" - {p('tt.n + tt.v')}))")
     return f"""
     lm3_pos AS (
@@ -501,7 +495,7 @@ def lm3_oracle_ctes(min_count: int = LM_MIN_COUNT,
     lm3_k AS (SELECT doc_id, w1, w2, w3, CAST(COUNT(*) AS BIGINT) AS k
               FROM lm3_pos GROUP BY doc_id, w1, w2, w3),
     lm3_tri AS (SELECT w1, w2, w3, SUM(k) AS c FROM lm3_k
-                GROUP BY w1, w2, w3 HAVING SUM(k) >= {min_count}),
+                GROUP BY w1, w2, w3 HAVING SUM(k) >= {LM_MIN_COUNT}),
     lm3_doc AS (
         SELECT lm3_k.doc_id,
                CAST(SUM(k * {term}) AS BIGINT) AS lm3_bits,
@@ -531,19 +525,19 @@ def lm3_oracle_ctes(min_count: int = LM_MIN_COUNT,
         FROM lm3_cum)"""
 
 
-def lm3_bucket_sql(ppl: str = "lms3.lm3_ppl_bits",
-                   cuts: str = "lmc") -> str:
-    """The head/middle/tail CASE for a consuming oracle's SELECT —
+def lm3_bucket_sql(ppl: str = "lms3.lm3_ppl_bits") -> str:
+    """The head/middle/tail CASE for a consuming oracle's SELECT, with
+    the tercile cuts under the alias `lmc` —
     kept beside the engine's `lm_bucket` so the label logic cannot
     drift between them. The NULL-cuts guard mirrors the engine's
     fail-loud branch (ADVICE r12): without it, `p <= NULL` falls
     through both WHENs and every scorable row silently labels 'tail'
     where the engine raises."""
     return (f"CASE WHEN {ppl} IS NULL THEN 'unscorable' "
-            f"WHEN {cuts}.t1 IS NULL OR {cuts}.t2 IS NULL THEN "
+            f"WHEN lmc.t1 IS NULL OR lmc.t2 IS NULL THEN "
             f"CAST(error('lm3_bucket: tercile cuts are NULL (trained "
             f"on a corpus with no scorable documents) — retrain "
             f"before labeling') AS VARCHAR) "
-            f"WHEN {ppl} <= {cuts}.t1 THEN 'head' "
-            f"WHEN {ppl} <= {cuts}.t2 THEN 'middle' "
+            f"WHEN {ppl} <= lmc.t1 THEN 'head' "
+            f"WHEN {ppl} <= lmc.t2 THEN 'middle' "
             f"ELSE 'tail' END")

@@ -134,14 +134,11 @@ def pack_assignments(offsets: DataFrame, id_col: str = "doc_id",
             .drop("n_tokens", "token_offset"))
 
 
-def build_sequences(enc: DataFrame, id_col: str = "doc_id",
-                    ids_col: str = "token_ids",
-                    ctx: int = PACK_CTX,
-                    n_rows: int | None = None,
-                    order_col: Column | None = None) -> DataFrame:
+def build_sequences(enc: DataFrame, ctx: int = PACK_CTX) -> DataFrame:
     """(seq_id, token_ids, n_tokens): the materialized training rows —
     the capstone of the tokenize→pack pipeline. Input is the
-    `segment.encode_ids` shape (one row per document with its id array);
+    `segment.encode_ids` shape (one row per doc_id with its token_ids
+    array);
     output is one row per fixed-length sequence, each carrying exactly
     `ctx` ids (the final sequence may be shorter).
 
@@ -152,14 +149,13 @@ def build_sequences(enc: DataFrame, id_col: str = "doc_id",
     document count or corpus size. Ordered reassembly sorts the
     (offset, piece) structs inside the group: documents never
     interleave, so offset order IS concatenation order."""
-    offs = pack_offsets(enc, id_col=id_col, text_col=ids_col, ctx=ctx,
-                        weight=F.size(ids_col), n_rows=n_rows,
-                        order_col=order_col)
+    offs = pack_offsets(enc, id_col="doc_id", text_col="token_ids",
+                        ctx=ctx, weight=F.size("token_ids"))
     asg = (pack_assignments(offs.select(
-        id_col, "n_tokens", "token_offset",
-        "pack_first_seq", "pack_last_seq"), id_col, ctx)
-        .join(offs.select(id_col, ids_col, "token_offset"), id_col))
-    piece = F.slice(F.col(ids_col), F.col("doc_start") + 1,
+        "doc_id", "n_tokens", "token_offset",
+        "pack_first_seq", "pack_last_seq"), "doc_id", ctx)
+        .join(offs.select("doc_id", "token_ids", "token_offset"), "doc_id"))
+    piece = F.slice(F.col("token_ids"), F.col("doc_start") + 1,
                     F.col("doc_end") - F.col("doc_start"))
     pieces = asg.select(
         "seq_id",

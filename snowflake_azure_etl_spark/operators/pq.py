@@ -61,8 +61,7 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 
 def pq_codebooks(emb: DataFrame, id_col: str, vec_col: str, dim: int,
-                 m: int = 4, k: int = 8, n_iter: int = 1,
-                 scale: int = KMEANS_SCALE) -> DataFrame:
+                 m: int = 4, k: int = 8, n_iter: int = 1) -> DataFrame:
     """(sub, cell_id, ctv): `k` centroids per subspace, seeded from the
     `k` lowest-id vectors' subvectors (deterministic, like
     `similarity._centroid_frame`) and refined with `n_iter` Lloyd's
@@ -91,9 +90,10 @@ def pq_codebooks(emb: DataFrame, id_col: str, vec_col: str, dim: int,
         ex = assigned.select("sub", "cell_id",
                              F.posexplode("sv").alias("dim", "val"))
         mean = ((F.col("s").cast("double") / F.col("n"))
-                / F.lit(float(scale))).alias("v")
+                / F.lit(float(KMEANS_SCALE))).alias("v")
         cents = (ex.groupBy("sub", "cell_id", "dim")
-                 .agg(F.sum(F.floor(F.col("val") * scale).cast("long"))
+                 .agg(F.sum(F.floor(F.col("val") * KMEANS_SCALE)
+                             .cast("long"))
                       .alias("s"),
                       F.count("*").alias("n"))
                  .groupBy("sub", "cell_id")

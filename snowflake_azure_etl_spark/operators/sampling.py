@@ -38,7 +38,7 @@ from typing import Iterator, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.attest import bounded_broadcast, maybe_broadcast
+from ..plans.attest import bounded_broadcast
 
 #: Hash-space resolution for fraction thresholds: fractions are exact
 #: in units of 1/10000 (md5 buckets are uniform over [0, 10000)).
@@ -53,19 +53,17 @@ def _bucket(id_col: Column | str, salt: str) -> Column:
         16, 10).cast("long") % FRACTION_DENOM
 
 
-def hash_keep(id_col: Column | str, fraction: float,
-              salt: str = "sample") -> Column:
+def hash_keep(id_col: Column | str, fraction: float) -> Column:
     """Boolean keep-decision for an exact-expected-rate sample: true
     for the deterministic `fraction` of the id hash space."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    return _bucket(id_col, salt) < int(round(fraction * FRACTION_DENOM))
+    return _bucket(id_col, "sample") < int(round(fraction * FRACTION_DENOM))
 
 
 def stratified_keep(id_col: Column | str, class_col: Column | str,
                     fractions: dict[str, float],
-                    default_fraction: float = 1.0,
-                    salt: str = "sample") -> Column:
+                    default_fraction: float = 1.0) -> Column:
     """Per-class keep-decision: class c keeps `fractions[c]` of its
     rows (by id hash), unlisted classes keep `default_fraction`.
     Row-local — the class column only selects the threshold; the hash
@@ -82,7 +80,7 @@ def stratified_keep(id_col: Column | str, class_col: Column | str,
         threshold = F.when(cc == cls,
                            int(round(frac * FRACTION_DENOM))) \
                      .otherwise(threshold)
-    return _bucket(id_col, salt) < threshold
+    return _bucket(id_col, "sample") < threshold
 
 
 def quota_rank(class_cols: list[str], order_cols: list[str]) -> Column:
@@ -209,10 +207,12 @@ def _local_precap(df: DataFrame, class_cols: list[str],
 
 #: Fixed-point scale for the temperature-sampling share weights.
 MIX_SCALE = 1 << 20
+#: The mixture's token budget as a fraction of the corpus total (read
+#: by the DuckDB oracle's `_mix_rate_ctes` too).
+MIX_BUDGET = 0.5
 
 
 def mixture_rates(df: DataFrame, keys: Sequence[str], weight: Column | str,
-                  budget_fraction: float = 0.5,
                   temperature: float = 2.0,
                   tilt: Column | None = None) -> DataFrame:
     """(*keys, toks, rate): per-key sampling rates that hit a total
@@ -224,7 +224,7 @@ def mixture_rates(df: DataFrame, keys: Sequence[str], weight: Column | str,
     a per-cell one.
 
     rate_k = min(1, (share_k · budget) / toks_k), where budget =
-    budget_fraction · Σ toks. Engine-portable by the fixed-point
+    MIX_BUDGET · Σ toks. Engine-portable by the fixed-point
     contract: per-key weights are floor(sqrt(toks)·2^20) LONGS (sqrt
     is IEEE correctly-rounded, ·2^20 exact, floor unambiguous), so the
     share denominator is an order-invariant integer sum; the remaining
@@ -272,7 +272,7 @@ def mixture_rates(df: DataFrame, keys: Sequence[str], weight: Column | str,
         F.lit(1.0),
         ((F.col("qs").cast("double") / F.col("qq").cast("double"))
          * (F.col("tot").cast("double")
-            * F.lit(float(budget_fraction))))
+            * F.lit(MIX_BUDGET)))
         / F.col("toks").cast("double"))
     return (per.crossJoin(bounded_broadcast(
                 tot, bound="one-row corpus token total", max_rows=1))
@@ -364,9 +364,10 @@ DSIR_BUCKETS = 4_096
 _PLOG2_MAX_E = 42
 
 
-def plog2(n: Column, scale: int = PLOG2_SCALE) -> Column:
+def plog2(n: Column) -> Column:
     """Exact-integer fixed-point log2 of a positive integer column:
-    e·scale + ((m − 2^(e−s))·scale) div 2^(e−s), where e = floor(log2
+    e·S + ((m − 2^(e−s))·S) div 2^(e−s) with S = PLOG2_SCALE, where
+    e = floor(log2
     n) comes from the binary-string length and m = n >> s with
     s = max(e − 42, 0) (the overflow-safe mantissa — see
     `_PLOG2_MAX_E`). Every step is integer-exact in both engines
@@ -376,11 +377,11 @@ def plog2(n: Column, scale: int = PLOG2_SCALE) -> Column:
     s = F.greatest(e - F.lit(_PLOG2_MAX_E), F.lit(0))
     m = F.call_function("shiftright", n.cast("long"), s)
     p2 = F.call_function("shiftleft", F.lit(1).cast("long"), e - s)
-    frac = F.call_function("div", (m - p2) * F.lit(int(scale)), p2)
-    return e.cast("long") * F.lit(int(scale)) + frac
+    frac = F.call_function("div", (m - p2) * F.lit(PLOG2_SCALE), p2)
+    return e.cast("long") * F.lit(PLOG2_SCALE) + frac
 
 
-def plog2_int(n: int, scale: int = PLOG2_SCALE) -> int:
+def plog2_int(n: int) -> int:
     """The pure-Python twin of `plog2` for DRIVER-side model
     parameters (bounded Pregel-probe artifacts — BPE merges, unigram
     piece costs): identical integer math, so a cost computed on the
@@ -391,10 +392,10 @@ def plog2_int(n: int, scale: int = PLOG2_SCALE) -> int:
     s = max(e - _PLOG2_MAX_E, 0)
     m = n >> s
     p2 = 1 << (e - s)
-    return e * scale + ((m - p2) * scale) // p2
+    return e * PLOG2_SCALE + ((m - p2) * PLOG2_SCALE) // p2
 
 
-def plog2_sql(expr: str, scale: int = PLOG2_SCALE) -> str:
+def plog2_sql(expr: str) -> str:
     """The DuckDB mirror of `plog2` for oracle strings. The input is
     pinned to BIGINT: DuckDB widens SUM(BIGINT) to HUGEINT, whose
     format('{:b}') is rejected."""
@@ -403,52 +404,47 @@ def plog2_sql(expr: str, scale: int = PLOG2_SCALE) -> str:
     s = f"greatest({e} - {_PLOG2_MAX_E}, 0)"
     m = f"({v} >> {s})"
     p2 = f"(CAST(1 AS BIGINT) << ({e} - {s}))"
-    return (f"(CAST({e} AS BIGINT) * {scale} "
-            f"+ (({m} - {p2}) * {scale}) // {p2})")
+    return (f"(CAST({e} AS BIGINT) * {PLOG2_SCALE} "
+            f"+ (({m} - {p2}) * {PLOG2_SCALE}) // {p2})")
 
 
-def hashed_ngram_counts(df: DataFrame, id_col: str, text_col: str,
-                        n: int = 2, n_buckets: int = DSIR_BUCKETS,
-                        salt: str = "dsir") -> DataFrame:
-    """(id_col, bucket, c): md5-hashed word-n-gram counts per
-    document — the DSIR feature map. Full-width grams only (a doc
-    with fewer than `n` tokens contributes nothing); repeats count
-    (bag semantics, the paper's model). Row-local until the one
+def hashed_ngram_counts(df: DataFrame, id_col: str,
+                        text_col: str) -> DataFrame:
+    """(id_col, bucket, c): word-bigram counts per document, md5-hashed
+    into DSIR_BUCKETS buckets — the DSIR feature map. Full-width grams
+    only (a doc with fewer than 2 tokens contributes nothing); repeats
+    count (bag semantics, the paper's model). Row-local until the one
     uniform-key (id, bucket) aggregate."""
     toks = F.split(F.col(text_col), " ")
     grams = F.when(
-        F.size(toks) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - n),
-                    lambda i: F.array_join(F.slice(toks, i + 1, n), " ")),
+        F.size(toks) >= 2,
+        F.transform(F.sequence(F.lit(0), F.size(toks) - 2),
+                    lambda i: F.array_join(F.slice(toks, i + 1, 2), " ")),
     ).otherwise(F.array().cast("array<string>"))
     bucket = (F.conv(F.substring(
-        F.md5(F.concat(F.lit(f"{salt}:"), F.col("_g"))), 1, 8),
-        16, 10).cast("long") % n_buckets)
+        F.md5(F.concat(F.lit("dsir:"), F.col("_g"))), 1, 8),
+        16, 10).cast("long") % DSIR_BUCKETS)
     return (df.select(F.col(id_col), F.explode(grams).alias("_g"))
             .select(id_col, bucket.alias("bucket"))
             .groupBy(id_col, "bucket").agg(F.count("*").alias("c")))
 
 
-def dsir_feats_artifact(docs: DataFrame, id_col: str, text_col: str,
-                        n: int = 2, n_buckets: int = DSIR_BUCKETS,
-                        salt: str = "dsir") -> DataFrame:
+def dsir_feats_artifact(docs: DataFrame, id_col: str,
+                        text_col: str) -> DataFrame:
     """The session-shared DSIR feature map: `hashed_ngram_counts`
-    persisted once per (corpus plan, params) — the derived corpus
+    persisted once per corpus plan — the derived corpus
     representation every DSIR consumer (model training, scoring,
     top-k selection — q50 and q47 share it) reads instead of
     re-featurizing. Lazy persist: the first executing consumer
     materializes it."""
     from ._cache import cached_relation
     return cached_relation(
-        hashed_ngram_counts(docs, id_col, text_col, n, n_buckets, salt),
+        hashed_ngram_counts(docs, id_col, text_col),
         "dsir_feats")
 
 
 def dsir_bucket_stats(feats: DataFrame, target_ids: DataFrame,
-                      id_col: str,
-                      n_buckets: int = DSIR_BUCKETS,
-                      scale: int = PLOG2_SCALE,
-                      n_target: int | None = None) -> DataFrame:
+                      id_col: str) -> DataFrame:
     """(bucket, lam): the DSIR importance model over a feature map
     (`hashed_ngram_counts` output, built once and shared between model
     training and scoring) — per hashed bucket, the fixed-point log2
@@ -467,14 +463,10 @@ def dsir_bucket_stats(feats: DataFrame, target_ids: DataFrame,
     emits are irrelevant (no document references them), so the
     relation is built on the raw bucket set with the target counts
     left-joined. `target_ids` is corpus-proportional in the worst
-    case, so it broadcasts ONLY under the module-standard size
-    attestation (``n_target`` ≤ `plans.attest.BROADCAST_MAX_ROWS`);
-    unattested, the semi-join shuffles and AQE may still broadcast at
-    runtime."""
+    case, so the semi-join carries no broadcast hint: it shuffles, and
+    AQE may still broadcast at runtime."""
     raw = feats.groupBy("bucket").agg(F.sum("c").alias("_nr"))
-    tgt = (feats.join(maybe_broadcast(target_ids.select(id_col),
-                                       n_target),
-                      id_col, "left_semi")
+    tgt = (feats.join(target_ids.select(id_col), id_col, "left_semi")
            .groupBy("bucket").agg(F.sum("c").alias("_nt")))
     joined = (raw.join(tgt, "bucket", "left")
               .select("bucket", "_nr",
@@ -482,10 +474,10 @@ def dsir_bucket_stats(feats: DataFrame, target_ids: DataFrame,
                       .alias("_nt")))
     totals = joined.agg(F.sum("_nr").alias("_tr"),
                         F.sum("_nt").alias("_tt"))
-    lam = (plog2(F.col("_nt") + 1, scale)
-           - plog2(F.col("_tt") + n_buckets, scale)
-           - plog2(F.col("_nr") + 1, scale)
-           + plog2(F.col("_tr") + n_buckets, scale))
+    lam = (plog2(F.col("_nt") + 1)
+           - plog2(F.col("_tt") + DSIR_BUCKETS)
+           - plog2(F.col("_nr") + 1)
+           + plog2(F.col("_tr") + DSIR_BUCKETS))
     return (joined.crossJoin(bounded_broadcast(
                 totals, bound="one-row gram-total normalizers",
                 max_rows=1))
@@ -493,20 +485,18 @@ def dsir_bucket_stats(feats: DataFrame, target_ids: DataFrame,
 
 
 def dsir_log_weights(ids: DataFrame, feats: DataFrame,
-                     stats: DataFrame, id_col: str,
-                     n_buckets: int = DSIR_BUCKETS) -> DataFrame:
+                     stats: DataFrame, id_col: str) -> DataFrame:
     """(id_col, dsir_score): per-document importance score
     Σ_b c_b·lam_b as an exact long over the feature map `feats`. `ids`
     is the id universe: docs with no full-width gram coalesce to score
     0 (the neutral log-ratio). One narrow broadcast join of the
     feature map against the bucket stats, one doc-keyed aggregate;
-    documents never shuffle their text. ``n_buckets`` is the model's
-    bucket count — the broadcast attestation bound (review finding
-    r12: a hardcoded DSIR_BUCKETS bound was FALSE for callers with
-    wider models)."""
+    documents never shuffle their text. The model has at most
+    DSIR_BUCKETS rows (every feature map hashes into that many
+    buckets) — the broadcast attestation bound."""
     scored = (feats.join(bounded_broadcast(
-        stats, bound="DSIR bucket model (<= n_buckets rows)",
-        max_rows=min(n_buckets, 1_000_000)), "bucket")
+        stats, bound="DSIR bucket model (<= DSIR_BUCKETS rows)",
+        max_rows=DSIR_BUCKETS), "bucket")
               .groupBy(id_col)
               .agg(F.sum(F.col("c") * F.col("lam")).alias("_s")))
     return (ids.join(scored, id_col, "left")
@@ -516,8 +506,7 @@ def dsir_log_weights(ids: DataFrame, feats: DataFrame,
 
 
 def dsir_resample(ids: DataFrame, feats: DataFrame,
-                  target_ids: DataFrame, id_col: str, k: int,
-                  n_buckets: int = DSIR_BUCKETS) -> DataFrame:
+                  target_ids: DataFrame, id_col: str, k: int) -> DataFrame:
     """Deterministic DSIR selection: the `k` highest-importance
     documents of `ids` (score desc, id asc — the engine's
     reproducibility contract; the paper's Gumbel-noise variant needs
@@ -530,8 +519,8 @@ def dsir_resample(ids: DataFrame, feats: DataFrame,
     per-partition top-k merge, NOT a global rank window (which would
     drag every (id, score) row to one partition); the rank attaches
     after the limit, over k rows."""
-    stats = dsir_bucket_stats(feats, target_ids, id_col, n_buckets)
-    top = (dsir_log_weights(ids, feats, stats, id_col, n_buckets)
+    stats = dsir_bucket_stats(feats, target_ids, id_col)
+    top = (dsir_log_weights(ids, feats, stats, id_col)
            .orderBy(F.desc("dsir_score"), F.asc(id_col))
            .limit(k))
     w = Window.orderBy(F.desc("dsir_score"), F.asc(id_col))

@@ -167,28 +167,28 @@ def word_segmentations(docs: DataFrame, seg: Segmenter,
 
 
 def encode_pieces(docs: DataFrame, seg: Segmenter,
-                  id_col: str = "doc_id", text_col: str = "text",
                   wseg: DataFrame | None = None) -> DataFrame:
-    """(id, pieces, n_pieces): the word-grain encode — join each
-    document's words to `wseg` (default: `word_segmentations` of
-    `docs`) and reassemble per document in (doc, position) order via a
-    map-side-combining aggregate. A caller-supplied `wseg` must COVER
-    the docs' words: an uncovered word surfaces like an unsegmentable
-    one (the document's pieces go NULL, fail-visible, never a silently
-    shorter segmentation). A document with no words keeps [], a NULL
-    text keeps NULL — the `segment_text` semantics, pinned equal."""
-    pos = docs.select(F.col(id_col),
-                      F.posexplode(_words(F.col(text_col)))
+    """(doc_id, pieces, n_pieces): the word-grain encode — join each
+    (doc_id, text) document's words to `wseg` (default:
+    `word_segmentations` of `docs`) and reassemble per document in
+    (doc, position) order via a map-side-combining aggregate. A
+    caller-supplied `wseg` must COVER the docs' words: an uncovered
+    word surfaces like an unsegmentable one (the document's pieces go
+    NULL, fail-visible, never a silently shorter segmentation). A
+    document with no words keeps [], a NULL text keeps NULL — the
+    `segment_text` semantics, pinned equal."""
+    pos = docs.select(F.col("doc_id"),
+                      F.posexplode(_words(F.col("text")))
                       .alias("_i", "word"))
     if wseg is None:
-        wseg = word_segmentations(docs, seg, text_col)
+        wseg = word_segmentations(docs, seg, "text")
     # a NULL segs array must never reach flatten: flattening a null
     # inner array inside an aggregate's (collapsed) result projection
     # NPEs in Spark 4.1's generated code (verified minimal repro), so
     # nullness is aggregated as its own flag and the collected arrays
     # are coalesced non-null
     per_doc = (pos.join(wseg, "word", "left")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.collect_list(F.struct(
                        F.col("_i").alias("i"),
                        F.coalesce(F.col("segs"),
@@ -196,7 +196,7 @@ def encode_pieces(docs: DataFrame, seg: Segmenter,
                        .alias("s"))).alias("_lst"),
                     F.max(F.col("segs").isNull()).alias("_bad"),
                     F.count("*").alias("_nw"))
-               .select(id_col, "_nw",
+               .select("doc_id", "_nw",
                        F.when(F.col("_bad"),
                               F.lit(None).cast("array<string>"))
                        .otherwise(F.flatten(F.transform(
@@ -206,10 +206,10 @@ def encode_pieces(docs: DataFrame, seg: Segmenter,
     # unsegmentable or uncovered (NULL pieces); a NULL text is NULL
     # pieces too — posexplode alone would drop it into the no-words
     # bucket
-    base = docs.select(F.col(id_col),
-                       F.col(text_col).isNull().alias("_tnull"))
-    return (base.join(per_doc, id_col, "left")
-            .select(id_col,
+    base = docs.select(F.col("doc_id"),
+                       F.col("text").isNull().alias("_tnull"))
+    return (base.join(per_doc, "doc_id", "left")
+            .select("doc_id",
                     F.when(F.col("_tnull"),
                            F.lit(None).cast("array<string>"))
                     .when(F.col("_nw").isNull(),
@@ -232,8 +232,8 @@ def _vocab_map(vocab: DataFrame, key: str, value: str,
 
 
 def encode_ids(docs: DataFrame, pieces: Column | str, vocab: DataFrame,
-               id_col: str = "doc_id", unk_id: int = -1) -> DataFrame:
-    """(id, token_ids, n_ids): the `pieces` array column of `docs`
+               unk_id: int = -1) -> DataFrame:
+    """(doc_id, token_ids, n_ids): the `pieces` array column of `docs`
     (any family's segmentation — `bpe.apply_merges`, `segment_text`,
     the `segment_docs` column) mapped to `vocab`'s ids. A surface the
     vocabulary lacks maps to `unk_id`; NULL pieces keep NULL ids.
@@ -244,17 +244,17 @@ def encode_ids(docs: DataFrame, pieces: Column | str, vocab: DataFrame,
         p, lambda s: F.coalesce(F.element_at(F.col("_vmap"), s),
                                 F.lit(unk_id)))
     return (docs.crossJoin(_vocab_map(vocab, "token", "token_id", "_vmap"))
-            .select(F.col(id_col), ids.alias("token_ids"))
+            .select(F.col("doc_id"), ids.alias("token_ids"))
             .withColumn("n_ids", F.size("token_ids")))
 
 
 def decode_ids(encoded: DataFrame, vocab: DataFrame,
-               id_col: str = "doc_id", ids_col: str = "token_ids",
                unk_token: str = "�",
                strip_mark: str | None = None) -> DataFrame:
-    """(id, detok): ids back to surface text, the inverse of
-    `encode_ids`. Because every family's pieces partition each word's
-    characters, decode(encode(text)) == text with spaces removed — a
+    """(doc_id, detok): `encoded.token_ids` back to surface text, the
+    inverse of `encode_ids`. Because every family's pieces partition
+    each word's characters, decode(encode(text)) == text with spaces
+    removed — a
     round-trip a driver can attest without replaying the segmenter.
     An id the vocabulary lacks renders as `unk_token`, fail-visible;
     NULL ids stay NULL. `strip_mark` is removed from the front of each
@@ -264,7 +264,7 @@ def decode_ids(encoded: DataFrame, vocab: DataFrame,
         if strip_mark:
             t = F.regexp_replace(t, rf"^\Q{strip_mark}\E", "")
         return t
-    toks = F.transform(F.col(ids_col), surface)
+    toks = F.transform(F.col("token_ids"), surface)
     return (encoded.crossJoin(_vocab_map(vocab, "token_id", "token",
                                          "_imap"))
-            .select(F.col(id_col), F.array_join(toks, "").alias("detok")))
+            .select(F.col("doc_id"), F.array_join(toks, "").alias("detok")))

@@ -150,10 +150,9 @@ KMEANS_SCALE = 1 << 20
 
 
 def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
-                     n_cells: int, n_iter: int = 2,
-                     scale: int = KMEANS_SCALE) -> DataFrame:
+                     n_cells: int) -> DataFrame:
     """Fixed-iteration Lloyd's k-means coarse quantizer as DataFrame
-    aggregations — (cell_id, ctv) after `n_iter` assign/update rounds
+    aggregations — (cell_id, ctv) after 2 assign/update rounds
     from the deterministic seed centroids (`_centroid_frame`).
 
     Each round: assign = the existing `assign_cells` plan (argmax
@@ -177,8 +176,8 @@ def kmeans_centroids(emb: DataFrame, id_col: str, vec_col: str,
     `_kmeans_rounds`): `streaming.vectors.retrain_centroids` trains on
     a table whose analyzed plan stays the same while epochs land, so a
     plan-keyed entry would hand back the old quantizer."""
-    return _lloyd_rounds(emb, id_col, vec_col, n_cells, n_iter,
-                         scale)[-1].select("cell_id", "ctv")
+    return _lloyd_rounds(emb, id_col, vec_col, n_cells, 2,
+                         KMEANS_SCALE)[-1].select("cell_id", "ctv")
 
 
 def _lloyd_rounds(emb: DataFrame, id_col: str, vec_col: str,
@@ -261,8 +260,8 @@ def _inertia_row(it: int, parts: DataFrame, scale: int) -> DataFrame:
 
 
 def ivf_inertia_trajectory(emb: DataFrame, id_col: str, vec_col: str,
-                           n_cells: int = 8, train_iters: int = 2,
-                           scale: int = KMEANS_SCALE) -> DataFrame:
+                           n_cells: int = 8,
+                           train_iters: int = 2) -> DataFrame:
     """Quantizer-quality attestation (VERDICT r11 #7 — the trained-
     quantizer analog of recall@3): the k-means inertia trajectory as
     exact fixed-point longs, one row per training round (SSD of the
@@ -280,20 +279,22 @@ def ivf_inertia_trajectory(emb: DataFrame, id_col: str, vec_col: str,
     from ._cache import cached_build, plan_key
     spark = emb.sparkSession
     key = ("ivf_inertia", plan_key(emb), id_col, vec_col, n_cells,
-           train_iters, scale)
+           train_iters)
 
     def build():
         rounds = _kmeans_rounds(emb, id_col, vec_col, n_cells,
-                                train_iters, scale)
+                                train_iters, KMEANS_SCALE)
         _, final_assigned = _ivf_index(emb, id_col, vec_col, n_cells,
                                        train_iters)
-        final = _sq_dists(final_assigned, rounds[train_iters], scale)
-        legs = [_inertia_row(it, rounds[it], scale)
+        final = _sq_dists(final_assigned, rounds[train_iters],
+                          KMEANS_SCALE)
+        legs = [_inertia_row(it, rounds[it], KMEANS_SCALE)
                 for it in range(1, train_iters + 1)]
         legs.append(_inertia_row(
             train_iters + 1,
             final.select(F.col("d2").alias("ssd"),
-                         F.lit(1).cast("long").alias("n")), scale))
+                         F.lit(1).cast("long").alias("n")),
+            KMEANS_SCALE))
         out = legs[0]
         for leg in legs[1:]:
             out = out.unionByName(leg)
@@ -393,11 +394,16 @@ def assign_cells(emb: DataFrame, id_col: str, vec_col: str,
     return _nearest_cells(pre, cent_arr, 1).drop("cell_rank")
 
 
+#: Mean-fit drop (in cosine) past which a cell's drift report flags a
+#: retrain — the batch report's default and the streaming sink's value.
+DRIFT_COS_DROP = 0.02
+
+
 def ivf_drift_report(emb: DataFrame, batch: DataFrame, id_col: str,
                      vec_col: str, n_cells: int = 8,
                      train_iters: int = 2,
                      cos_scale: int = KMEANS_SCALE,
-                     cos_drop: float = 0.02) -> DataFrame:
+                     cos_drop: float = DRIFT_COS_DROP) -> DataFrame:
     """Incremental IVF index maintenance (X-ANN-IVF-INCR): assign a
     NEW arrival batch to the PERSISTED quantizer — no retrain, the
     incremental contract that `incremental_exact` /
@@ -583,21 +589,20 @@ EMBED_MIN_BITS = 8
 EMBED_MAX_BITS = 24
 
 
-def scaled_bits(n_rows: int | None, target_bucket: int = 1024,
-                min_bits: int = EMBED_MIN_BITS,
-                max_bits: int = EMBED_MAX_BITS) -> int:
+def scaled_bits(n_rows: int | None, target_bucket: int = 1024) -> int:
     """Bucket-width-driven bits choice: enough sign bits that the
     EXPECTED bucket holds ≈ target_bucket vectors (2^bits ≈
     n_rows / target_bucket). A fixed 2^8 grid that is fine at 10⁶
     vectors puts ~4M vectors per bucket at 10⁹ — quadratic pair blowup;
     scaling bits with the attested corpus size keeps per-bucket work
     constant as the corpus grows. Unattested (None) falls back to
-    min_bits."""
+    EMBED_MIN_BITS; the choice is clamped to [EMBED_MIN_BITS,
+    EMBED_MAX_BITS]."""
     import math
     if n_rows is None or n_rows <= 0:
-        return min_bits
+        return EMBED_MIN_BITS
     want = math.ceil(math.log2(max(n_rows / target_bucket, 1.0)))
-    return min(max_bits, max(min_bits, want))
+    return min(EMBED_MAX_BITS, max(EMBED_MIN_BITS, want))
 
 
 def embedding_near_dups(emb: DataFrame, id_col: str, vec_col: str,

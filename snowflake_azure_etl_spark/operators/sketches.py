@@ -54,29 +54,28 @@ KMV_STATE_BUDGET = 1024
 KMV_MAX_FINE = 1 << 20
 
 
-def fine_buckets(n_rows: int | None, state_budget: int = KMV_STATE_BUDGET,
-                 coarse: int = KMV_COARSE) -> int:
+def fine_buckets(n_rows: int | None,
+                 state_budget: int = KMV_STATE_BUDGET) -> int:
     """Level-0 bucket count for an attested input size: the smallest
     power of two keeping expected per-state distincts ≤ state_budget,
-    clamped to [coarse, KMV_MAX_FINE]. Power-of-two so fine nests into
-    coarse (fine % coarse == 0)."""
+    clamped to [KMV_COARSE, KMV_MAX_FINE]. Power-of-two so fine nests
+    into coarse (fine % KMV_COARSE == 0)."""
     if n_rows is None or n_rows <= 0:
-        return coarse
+        return KMV_COARSE
     want = 1 << math.ceil(math.log2(max(n_rows / state_budget, 1.0)))
-    return min(KMV_MAX_FINE, max(coarse, want))
+    return min(KMV_MAX_FINE, max(KMV_COARSE, want))
 
 
 def kmv_mins(df: DataFrame, group_col: str, hv: Column | str, k: int,
              n_rows: int | None = None,
-             state_budget: int = KMV_STATE_BUDGET,
-             coarse: int = KMV_COARSE) -> DataFrame:
+             state_budget: int = KMV_STATE_BUDGET) -> DataFrame:
     """(group, mins: array of the k smallest distinct hash strings,
     n_exact: exact distinct count) via the bounded merge tree above.
 
     `hv` must be a fixed-width hash string (e.g. md5 hex) so that
     lexicographic min == numeric min of the hash value."""
     hv = F.col(hv) if isinstance(hv, str) else hv
-    fine = fine_buckets(n_rows, state_budget, coarse)
+    fine = fine_buckets(n_rows, state_budget)
     h = df.select(F.col(group_col), hv.alias("_hv")) \
           .withColumn("_bf", F.pmod(F.xxhash64("_hv"), F.lit(fine)))
     lvl = (h.groupBy(group_col, "_bf")
@@ -84,8 +83,8 @@ def kmv_mins(df: DataFrame, group_col: str, hv: Column | str, k: int,
            .select(group_col, F.col("_bf"),
                    F.slice(F.array_sort("_hs"), 1, k).alias("mins"),
                    F.size("_hs").alias("_nb")))
-    if fine > coarse:
-        lvl = (lvl.withColumn("_bc", F.col("_bf") % coarse)
+    if fine > KMV_COARSE:
+        lvl = (lvl.withColumn("_bc", F.col("_bf") % KMV_COARSE)
                .groupBy(group_col, "_bc")
                .agg(F.slice(F.array_sort(F.flatten(F.collect_list("mins"))),
                             1, k).alias("mins"),
@@ -115,15 +114,15 @@ def kmv_mins(df: DataFrame, group_col: str, hv: Column | str, k: int,
 HLL_LGK = 12
 
 
-def hll_partials(df: DataFrame, group_cols: list[str], value_col: str,
-                 lgk: int = HLL_LGK) -> DataFrame:
+def hll_partials(df: DataFrame, group_cols: list[str],
+                 value_col: str) -> DataFrame:
     """(group_cols…, hll_sketch): one mergeable DataSketches HLL
     partial per group — a partial-aggregating hash aggregate (map-side
-    combine applies; per-state memory is the fixed 2^lgk register
+    combine applies; per-state memory is the fixed 2^HLL_LGK register
     block). This is the relation a pipeline lands per fine bucket
     (e.g. per day)."""
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(value_col, lgk).alias("hll_sketch"))
+        F.hll_sketch_agg(value_col, HLL_LGK).alias("hll_sketch"))
 
 
 def hll_rollup(partials: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -374,9 +373,9 @@ def bloom_build(df: DataFrame, key: Column | str,
 
 
 def bloom_probe(bloom: DataFrame, candidates: DataFrame, key_col: str,
-                bits: int = BLOOM_BITS,
-                hashes: int = BLOOM_HASHES) -> DataFrame:
-    """(*candidates' columns, bloom_pass): True iff ALL k bits are set
+                bits: int = BLOOM_BITS) -> DataFrame:
+    """(*candidates' columns, bloom_pass): True iff ALL BLOOM_HASHES
+    bits are set (the filter must be built with the default hashes)
     — candidates × k probe rows equi-join the broadcast word relation;
     a missing word reads as the implicit 0 (so an empty filter rejects
     everything and never NULLs). As with cms_estimate, every candidate
@@ -392,7 +391,7 @@ def bloom_probe(bloom: DataFrame, candidates: DataFrame, key_col: str,
                          f"{sorted(reserved)} — rename them first")
     probes = (candidates.select(
         *carry, F.explode(F.array(*[
-            _bloom_pos(key, j, bits) for j in range(hashes)]))
+            _bloom_pos(key, j, bits) for j in range(BLOOM_HASHES)]))
         .alias("_pos"))
         .select(*carry,
                 F.floor(F.col("_pos") / _BLOOM_WORD).alias("word_idx"),

@@ -49,8 +49,9 @@ def stopword_hits(text: Column | str, lang: str = "en") -> Column:
     return F.size(F.filter(tokens(text), lambda t: t.isin(*words)))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    return stopword_hits(text, lang).cast("double") / n_tokens(text)
+def stopword_ratio(text: Column | str) -> Column:
+    """English stopword hits / tokens."""
+    return stopword_hits(text, "en").cast("double") / n_tokens(text)
 
 
 def bpe_token_estimate(text: Column | str) -> Column:
@@ -75,14 +76,13 @@ BPE_PRETOKEN_PATTERN = (
 )
 
 
-def regex_token_count(text: Column | str,
-                      pattern: str = BPE_PRETOKEN_PATTERN) -> Column:
+def regex_token_count(text: Column | str) -> Column:
     """Exact pre-tokenizer segment count via the JVM regex engine
     (`regexp_count` — codegen'd, no UDF). Pairs with
     `bpe_token_estimate`: estimate for cheap heuristics, this for the
     exact segmentation grid a real BPE vocab would merge within."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(c, F.lit(pattern)).cast("int")
+    return F.regexp_count(c, F.lit(BPE_PRETOKEN_PATTERN)).cast("int")
 
 
 def lang_guess(text: Column | str) -> Column:
@@ -109,12 +109,12 @@ def quality_score(text: Column | str) -> Column:
     return (len_feat + stop_feat + ttr) / 3
 
 
-def md5_fingerprint(text: Column | str, prefix_len: int = 16) -> Column:
+def md5_fingerprint(text: Column | str) -> Column:
     """Canonical-form fingerprint: md5 of lowercased,
-    whitespace-collapsed text (first `prefix_len` hex chars)."""
+    whitespace-collapsed text (first 16 hex chars)."""
     c = F.col(text) if isinstance(text, str) else text
     canon = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    return F.substring(F.md5(canon), 1, prefix_len)
+    return F.substring(F.md5(canon), 1, 16)
 
 
 def n_chunks(text: Column | str, size: int = 128,
@@ -169,24 +169,22 @@ def chunk_documents(docs, id_col: str = "doc_id",
     ).withColumn("chunk_tokens", F.size(F.split(F.col("chunk_text"), " ")))
 
 
-def split_assign(id_col: Column | str, train_pct: int = 80,
-                 val_pct: int = 10, salt: str = "split") -> Column:
-    """Deterministic train/val/test assignment by hashed id — the
-    standard leakage-safe splitter (a document's split never depends
-    on corpus order or size, so re-runs and incremental loads agree).
-    Bucket = first 8 md5 hex chars of '<salt>:<id>' mod 100."""
+def split_assign(id_col: Column | str) -> Column:
+    """Deterministic 80/10/10 train/val/test assignment by hashed id —
+    the standard leakage-safe splitter (a document's split never
+    depends on corpus order or size, so re-runs and incremental loads
+    agree). Bucket = first 8 md5 hex chars of 'split:<id>' mod 100."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{salt}:"),
+        F.substring(F.md5(F.concat(F.lit("split:"),
                                    c.cast("string"))), 1, 8),
         16, 10).cast("long") % 100
-    return (F.when(bucket < train_pct, "train")
-            .when(bucket < train_pct + val_pct, "val")
+    return (F.when(bucket < 80, "train")
+            .when(bucket < 90, "val")
             .otherwise("test"))
 
 
-def token_vocab(docs, text_col: str = "text", min_doc_freq: int = 1,
-                top_k: int | None = None):
+def token_vocab(docs, text_col: str = "text", top_k: int | None = None):
     """Corpus token vocabulary — the tokenizer-training prep step:
     (token, doc_freq, total_freq, rank), rank by total_freq desc with
     token tiebreak (deterministic). One explode + one groupBy (map-side
@@ -206,8 +204,7 @@ def token_vocab(docs, text_col: str = "text", min_doc_freq: int = 1,
         .select(F.posexplode(tokens(text_col)).alias("_p", "token"), "_doc")
     agg = (per.groupBy("token")
            .agg(F.countDistinct("_doc").alias("doc_freq"),
-                F.count("*").alias("total_freq"))
-           .filter(F.col("doc_freq") >= min_doc_freq))
+                F.count("*").alias("total_freq")))
     order = [F.desc("total_freq"), F.asc("token")]
     if top_k is not None:
         # rank only the kept head: orderBy+limit → TakeOrderedAndProject,
@@ -271,11 +268,10 @@ def symbol_ratio(text: Column | str) -> Column:
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def pii_email_count(text: Column | str,
-                    pattern: str = EMAIL_PATTERN) -> Column:
+def pii_email_count(text: Column | str) -> Column:
     """Count of email-shaped spans (the canonical PII screen's cheapest
-    signal; swap the pattern for phones/IDs — same plan)."""
-    return pii_count(text, pattern)
+    signal; `pii_count` runs the same plan for phones/IDs)."""
+    return pii_count(text, EMAIL_PATTERN)
 
 
 #: RE2-safe NANP-ish phone shape (optional +country, area code with
@@ -303,27 +299,26 @@ def pii_ipv4_count(text: Column | str) -> Column:
     return pii_count(text, IPV4_PATTERN)
 
 
-def redact_pii(text: Column | str, pattern: str = EMAIL_PATTERN,
-               replacement: str = "<PII>") -> Column:
-    """Replace every PII-shaped span with a fixed tag — the scrub step
+#: The fixed tag a redacted PII span becomes.
+PII_TAG = "<PII>"
+
+
+def redact_pii(text: Column | str) -> Column:
+    """Replace every email-shaped span with `PII_TAG` — the scrub step
     a corpus runs before training. regexp_replace is global and
     JVM-side; composes per-row with chunking/splitting downstream."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_replace(c, pattern, replacement)
+    return F.regexp_replace(c, EMAIL_PATTERN, PII_TAG)
 
 
-def redact_pii_all(text: Column | str,
-                   patterns: "tuple[str, ...]" = (EMAIL_PATTERN,
-                                                  PHONE_PATTERN,
-                                                  IPV4_PATTERN),
-                   replacement: str = "<PII>") -> Column:
-    """Chain every PII class through one projection — order is the
-    tuple order (emails first so an address inside a larger span is
-    tagged before the broader shapes run). Still row-local JVM
-    regexes; zero shuffles."""
+def redact_pii_all(text: Column | str) -> Column:
+    """Chain every PII class through one projection — emails first so
+    an address inside a larger span is tagged before the broader
+    phone and IPv4 shapes run. Still row-local JVM regexes; zero
+    shuffles."""
     c = F.col(text) if isinstance(text, str) else text
-    for p in patterns:
-        c = F.regexp_replace(c, p, replacement)
+    for p in (EMAIL_PATTERN, PHONE_PATTERN, IPV4_PATTERN):
+        c = F.regexp_replace(c, p, PII_TAG)
     return c
 
 
@@ -367,22 +362,21 @@ def top_bigram_mass(text: Column | str) -> Column:
         best.cast("double") / F.size(bg))
 
 
-def rolling_hash(text: Column | str, base: int = ROLLING_BASE,
-                 mod: int = ROLLING_MOD) -> Column:
+def rolling_hash(text: Column | str) -> Column:
     """Polynomial rolling hash over characters:
-    h = fold(h * base + ascii(ch)) % mod — a Catalyst higher-order
-    aggregate over the char array (no UDF). Portable: the same fold in
-    any engine yields the same value."""
+    h = fold(h * ROLLING_BASE + ascii(ch)) % ROLLING_MOD — a Catalyst
+    higher-order aggregate over the char array (no UDF). Portable: the
+    same fold in any engine yields the same value."""
     c = F.col(text) if isinstance(text, str) else text
     chars = F.split(c, "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * ROLLING_BASE + F.ascii(ch)) % ROLLING_MOD,
     )
 
 
-def unigram_lm_map(docs, text_col: str = "text"):
+def unigram_lm_map(docs):
     """ONE-ROW corpus unigram language model: a map column
     token → ln(count/total) (X-TEXT-LM). Train = one explode + one
     token-keyed aggregate (map-side combined) + a vocabulary-bounded
@@ -392,7 +386,7 @@ def unigram_lm_map(docs, text_col: str = "text"):
     The vocabulary is bounded (~10⁵-10⁶ types for natural text at any
     corpus size — Heaps' law), which is what makes the one-row map
     safe where a per-token join would shuffle the corpus."""
-    toks = (docs.select(F.explode(tokens(text_col)).alias("tok"))
+    toks = (docs.select(F.explode(tokens("text")).alias("tok"))
             .filter(F.length("tok") > 0))
     freq = toks.groupBy("tok").agg(F.count("*").alias("c"))
     return (freq.agg(
@@ -404,13 +398,13 @@ def unigram_lm_map(docs, text_col: str = "text"):
             .alias("_lm")))
 
 
-def unigram_logprob(text_col: Column | str, lm_col: str = "_lm",
+def unigram_logprob(text_col: Column | str,
                     floor: float = -20.0) -> Column:
     """Length-normalized unigram log-probability of a document under
     the corpus LM — the classic gibberish/perplexity-proxy quality
     filter (low score = tokens the corpus has rarely seen). Row-local:
     a sequential fold over the document's tokens with `element_at`
-    lookups into the one-row LM map; `floor` is the unseen-token
+    lookups into the one-row LM map (column `_lm`); `floor` is the unseen-token
     log-prob (never hit when scoring the training corpus itself).
 
     The fold adds per-token log-probs in TOKEN ORDER (deterministic
@@ -420,7 +414,7 @@ def unigram_logprob(text_col: Column | str, lm_col: str = "_lm",
     total = F.aggregate(
         toks, F.lit(0.0),
         lambda acc, t: acc + F.coalesce(
-            F.element_at(F.col(lm_col), t), F.lit(floor)))
+            F.element_at(F.col("_lm"), t), F.lit(floor)))
     return F.when(F.size(toks) > 0, total / F.size(toks))
 
 
@@ -439,18 +433,18 @@ def token_freq_map(docs, text_col: str = "text"):
         .alias("_tf"))
 
 
-def mean_token_freq(text_col: Column | str,
-                    tf_col: str = "_tf") -> Column:
+def mean_token_freq(text_col: Column | str) -> Column:
     """Mean corpus frequency of the document's tokens — the
     rare-token/gibberish signal with EXACT arithmetic: a long-integer
-    fold over `token_freq_map` lookups, one final double division.
+    fold over `token_freq_map` lookups (column `_tf`), one final
+    double division.
     Low values = tokens the corpus has rarely seen (same decision
     boundary family as `unigram_logprob`, hash-portable)."""
     toks = F.filter(tokens(text_col), lambda t: F.length(t) > 0)
     total = F.aggregate(
         toks, F.lit(0).cast("long"),
         lambda acc, t: acc + F.coalesce(
-            F.element_at(F.col(tf_col), t), F.lit(0)))
+            F.element_at(F.col("_tf"), t), F.lit(0)))
     return F.when(F.size(toks) > 0,
                   total.cast("double") / F.size(toks))
 
@@ -478,12 +472,11 @@ def doc_term_freqs(docs, id_col: str = "doc_id",
 
 def tf_icf_top_terms(docs, id_col: str = "doc_id",
                      text_col: str = "text", k: int = 1,
-                     n_docs: int | None = None,
-                     scale: int = TFIDF_SCALE):
+                     n_docs: int | None = None):
     """Top-`k` most-characteristic terms per document by the EXACT-
     integer idf-weighted score
 
-        score = (tf · n_docs · scale) div df
+        score = (tf · n_docs · TFIDF_SCALE) div df
 
     — inverse document frequency without log damping, monotone in
     tf/df, and hash-portable (the classic smooth-idf variant needs ln,
@@ -509,7 +502,7 @@ def tf_icf_top_terms(docs, id_col: str = "doc_id",
           .groupBy("token").agg(F.count("*").alias("df")))
     scored = (tf.join(df, "token")
               .withColumn("score_scaled",
-                          F.expr(f"(tf * {n}L * {scale}L) div df")
+                          F.expr(f"(tf * {n}L * {TFIDF_SCALE}L) div df")
                           .cast("long")))
     w = (Window.partitionBy(id_col)
          .orderBy(F.desc("score_scaled"), F.asc("token")))
@@ -588,23 +581,22 @@ def pmi(pair_count: Column, count_a: Column, count_b: Column,
 # candidates only.
 # ---------------------------------------------------------------------------
 
+#: BM25 parameters, shared with q58's DuckDB oracle (`_BM25_SCORE_SQL`
+#: and its stopword-class cut read these, so the two cannot drift).
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_SCALE = 1 << 20
+BM25_MAX_DF_RATIO = 0.9
 
 
-def bm25_topk(docs, queries, id_col: str = "doc_id",
-              text_col: str = "text", k: int = 5,
-              k1: float = BM25_K1, b: float = BM25_B,
-              scale: int = BM25_SCALE,
-              max_df_ratio: float = 0.9):
+def bm25_topk(docs, queries, k: int = 5):
     """(query, doc_id, score_q, rank): top-k documents per literal
-    query string by quantized rational-IDF BM25 (module comment);
-    ties break on doc id. `queries` is a small literal list — the
-    query relation is built as a JVM one-row explode (no Python
-    worker on the plan).
+    query string by quantized rational-IDF BM25 (module comment) over
+    `docs`' (doc_id, text); ties break on doc id. `queries` is a small
+    literal list — the query relation is built as a JVM one-row
+    explode (no Python worker on the plan).
 
-    `max_df_ratio` drops query terms present in more than that
+    `BM25_MAX_DF_RATIO` drops query terms present in more than that
     fraction of documents (the standard stopword-class cut): besides
     contributing near-zero IDF, such a term makes the CANDIDATE SET
     corpus-sized — the per-query top-k partition would hold nearly
@@ -623,12 +615,13 @@ def bm25_topk(docs, queries, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     spark = docs.sparkSession
+    id_col = "doc_id"
     terms = sorted({t for q in queries for t in q.split() if t})
-    toks = tokens(text_col)
+    toks = tokens("text")
     # row-local per-doc length + query-term matches; docs with NULL
     # text produce no explode rows in the old shape, so they are
     # excluded from n/tot here too
-    base = docs.filter(F.col(text_col).isNotNull())
+    base = docs.filter(F.col("text").isNotNull())
     lens = (base.select(F.col(id_col), F.size(toks).alias("dl"),
                         F.filter(toks,
                                  lambda t: t.isin(*terms)).alias("_qtoks")))
@@ -639,7 +632,7 @@ def bm25_topk(docs, queries, id_col: str = "doc_id",
     # and the tokenization but NOT the query terms (stats built from
     # `base`, not `lens` — `_qtoks` would put the term list in the
     # cache key and every new query set would re-register);
-    # k1/b/max_df_ratio don't enter the stats either.
+    # the BM25 parameters don't enter the stats either.
     from ._cache import cached_relation
     stats = cached_relation(
         base.select(F.size(toks).alias("dl"))
@@ -658,7 +651,7 @@ def bm25_topk(docs, queries, id_col: str = "doc_id",
             .withColumn("df", F.count("*").over(
                 Window.partitionBy("token")))
             .filter(F.col("df").cast("double")
-                    <= F.lit(float(max_df_ratio))
+                    <= F.lit(BM25_MAX_DF_RATIO)
                     * F.col("n").cast("double")))
     qt = (spark.range(1).select(F.explode(F.array(*[
         F.struct(F.lit(q).alias("query"), F.lit(t).alias("token"))
@@ -671,11 +664,11 @@ def bm25_topk(docs, queries, id_col: str = "doc_id",
     dl_d = F.col("dl").cast("double")
     avgdl = F.col("tot").cast("double") / n_d
     idf = ((n_d - df_d) + F.lit(0.5)) / (df_d + F.lit(0.5))
-    denom = tf_d + (F.lit(float(k1))
-                    * ((F.lit(1.0) - F.lit(float(b)))
-                       + F.lit(float(b)) * (dl_d / avgdl)))
-    num = tf_d * F.lit(float(k1) + 1.0)
-    q_t = F.floor((idf * (num / denom)) * F.lit(float(scale))) \
+    denom = tf_d + (F.lit(BM25_K1)
+                    * ((F.lit(1.0) - F.lit(BM25_B))
+                       + F.lit(BM25_B) * (dl_d / avgdl)))
+    num = tf_d * F.lit(BM25_K1 + 1.0)
+    q_t = F.floor((idf * (num / denom)) * F.lit(float(BM25_SCALE))) \
            .cast("long")
 
     scored = (cand.join(bounded_broadcast(

@@ -137,8 +137,7 @@ def seed_pieces(words: DataFrame, k: int = UNIGRAM_MAX_PIECE_LEN,
     return singles.unionByName(multis)
 
 
-def piece_costs(counts: dict[str, int], keys: list[str],
-                scale: int = PLOG2_SCALE) -> dict[str, int]:
+def piece_costs(counts: dict[str, int], keys: list[str]) -> dict[str, int]:
     """Driver-side M-step: cost(p) = plog2(T + V) − plog2(c(p) + 1)
     over the FIXED candidate key set (zero-usage pieces stay in the
     model at max cost — the candidate set never changes across
@@ -146,8 +145,8 @@ def piece_costs(counts: dict[str, int], keys: list[str],
     expression bit-for-bit (`plog2_int`)."""
     t = sum(counts.get(p, 0) for p in keys)
     v = len(keys)
-    base = plog2_int(t + v, scale)
-    return {p: base - plog2_int(counts.get(p, 0) + 1, scale)
+    base = plog2_int(t + v)
+    return {p: base - plog2_int(counts.get(p, 0) + 1)
             for p in keys}
 
 
@@ -285,13 +284,13 @@ PRUNE_SHRINK_NUM = 3
 PRUNE_SHRINK_DEN = 4
 
 
-def train_unigram(docs: DataFrame, text_col: str = "text",
+def train_unigram(docs: DataFrame,
                   rounds: int = UNIGRAM_ROUNDS,
-                  k: int = UNIGRAM_MAX_PIECE_LEN,
                   seed_multi: int = UNIGRAM_SEED_MULTI,
                   vocab_target: int | None = None) -> UnigramModel:
-    """Train the unigram tokenizer (module docstring) — memoized per
-    (session, corpus plan, hyperparameters) like `train_bpe_merges`.
+    """Train the unigram tokenizer (module docstring) on `docs.text` —
+    memoized per (session, corpus plan, hyperparameters) like
+    `train_bpe_merges`.
     Driver-side state is candidate-set-bounded (the Pregel-probe
     pattern: per-round piece counts and the one-row objective are the
     model parameters being learned, not data).
@@ -311,12 +310,12 @@ def train_unigram(docs: DataFrame, text_col: str = "text",
     if vocab_target is not None and vocab_target < 1:
         raise ValueError(f"vocab_target ({vocab_target}) must be >= 1")
     from ._cache import cached_build, plan_key
-    key = ("unigram_model", plan_key(docs.select(text_col)),
-           rounds, k, seed_multi, vocab_target)
+    key = ("unigram_model", plan_key(docs.select("text")),
+           rounds, seed_multi, vocab_target)
     return cached_build(
         docs.sparkSession, key,
-        lambda: _train(docs, text_col, rounds, k, seed_multi,
-                       vocab_target))
+        lambda: _train(docs, "text", rounds, UNIGRAM_MAX_PIECE_LEN,
+                       seed_multi, vocab_target))
 
 
 def _prune_keys(keys: list[str], counts: dict[str, int],
@@ -338,7 +337,6 @@ def _prune_keys(keys: list[str], counts: dict[str, int],
 
 def train_unigram_from_words(words: DataFrame,
                              rounds: int = UNIGRAM_ROUNDS,
-                             k: int = UNIGRAM_MAX_PIECE_LEN,
                              seed_multi: int = UNIGRAM_SEED_MULTI,
                              vocab_target: int | None = None
                              ) -> UnigramModel:
@@ -356,8 +354,8 @@ def train_unigram_from_words(words: DataFrame,
     sc = words.sparkSession.sparkContext
     n_parts = max(4, sc.defaultParallelism // 8)
     pinned = words.coalesce(n_parts).localCheckpoint(eager=True)
-    return _train_from_words(pinned, rounds, k, seed_multi,
-                             vocab_target)
+    return _train_from_words(pinned, rounds, UNIGRAM_MAX_PIECE_LEN,
+                             seed_multi, vocab_target)
 
 
 def _train(docs: DataFrame, text_col: str, rounds: int, k: int,
@@ -527,7 +525,7 @@ def _viterbi_cte(tag: str, costs_cte: str, k: int,
              CASE WHEN length(word) > {max_word_len}
                   THEN error('unigram oracle: word longer than the '
                              || '{max_word_len}-position unrolled DP '
-                             || '— raise max_word_len')
+                             || '— raise ORACLE_MAX_WORD_LEN')
                   ELSE costs[length(word) + 1] END AS cost,
              segs[length(word) + 1] AS segs
       FROM {tag}{max_word_len})""")
@@ -547,22 +545,24 @@ def _costs_cte(tag: str, counts_cte: str) -> str:
       CROSS JOIN {tag}_t tt)"""
 
 
-def unigram_oracle_ctes(rounds: int = UNIGRAM_ROUNDS,
-                        k: int = UNIGRAM_MAX_PIECE_LEN,
-                        seed_multi: int = UNIGRAM_SEED_MULTI,
-                        max_word_len: int = 12) -> str:
+#: The oracle's unrolled Viterbi length (module `unigram_oracle_ctes`).
+ORACLE_MAX_WORD_LEN = 12
+
+
+def unigram_oracle_ctes() -> str:
     """CTE chain ending in: `uni_pieces(piece, cnt, cost)` — the
     trained model, `uni_rounds(round, obj)` — the EM trajectory, and
     `uni_wseg(word, segs)` — final-model Viterbi segmentation of
     every corpus word. Mirrors `train_unigram` round for round over
     the `documents` view; each Viterbi pass is an unrolled
-    `max_word_len`-position DP chain (fail-loud beyond it — the
-    engine fold has no such bound). The default carries 50% headroom
+    `ORACLE_MAX_WORD_LEN`-position DP chain (fail-loud beyond it — the
+    engine fold has no such bound). It carries 50% headroom
     over the corpus: the synthetic documents' generator draws words
     from a fixed vocabulary whose longest word is 8 chars at every
     driver sf (probed r14 over sf0.001/0.01/0.1) — if a future corpus
-    version grows past 12, the oracle error()s with this knob's name
-    (ADVICE r13 #4: remembered, deliberately fail-loud)."""
+    version grows past 12, the oracle error()s with this constant's
+    name (ADVICE r13 #4: remembered, deliberately fail-loud)."""
+    rounds, k = UNIGRAM_ROUNDS, UNIGRAM_MAX_PIECE_LEN
     parts = [f"""
     uwf AS MATERIALIZED (
         SELECT word, COUNT(*) AS freq FROM
@@ -580,12 +580,12 @@ def unigram_oracle_ctes(rounds: int = UNIGRAM_ROUNDS,
         UNION ALL
         SELECT piece, cnt FROM
         (SELECT piece, cnt FROM usubs WHERE length(piece) > 1
-         ORDER BY cnt DESC, piece LIMIT {seed_multi})),
+         ORDER BY cnt DESC, piece LIMIT {UNIGRAM_SEED_MULTI})),
     useed_keys AS MATERIALIZED (SELECT piece FROM useed)"""]
     parts.append(_costs_cte("ucost0", "useed"))
     for r in range(1, rounds + 1):
         parts.append(_viterbi_cte(f"udp{r}", f"ucost{r - 1}", k,
-                                  max_word_len))
+                                  ORACLE_MAX_WORD_LEN))
         parts.append(f"""
     ucnt{r} AS MATERIALIZED (
         SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM
@@ -593,7 +593,7 @@ def unigram_oracle_ctes(rounds: int = UNIGRAM_ROUNDS,
         GROUP BY 1)""")
         parts.append(_costs_cte(f"ucost{r}", f"ucnt{r}"))
     parts.append(_viterbi_cte(f"udp{rounds + 1}", f"ucost{rounds}", k,
-                              max_word_len))
+                              ORACLE_MAX_WORD_LEN))
     parts.append(f"""
     uni_pieces AS (
         SELECT k.piece, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS cnt,

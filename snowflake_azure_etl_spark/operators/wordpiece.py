@@ -100,13 +100,12 @@ def _flag_items(pieces: "list[str] | set[str]",
 
 
 def greedy_expr(word: Column, pieces_map: Column,
-                k: int = UNIGRAM_MAX_PIECE_LEN,
-                unk: str = WP_UNK) -> Column:
+                k: int = UNIGRAM_MAX_PIECE_LEN) -> Column:
     """array<string>: the greedy maximal-munch segmentation of `word`
     under the membership map (piece → positional flags: 1 = valid
     word-initial, 2 = valid continuation, 3 = both — `_flag_items`) —
     longest piece first at every consumed position, continuations
-    marked ``##``, whole word → ``[unk]`` on the first unmatchable
+    marked ``##``, whole word → ``[WP_UNK]`` on the first unmatchable
     position. One `F.aggregate` fold over positions: the state
     (next-position, segs, failed) only advances at iterations equal
     to its own position pointer, so each consumed position is visited
@@ -148,7 +147,7 @@ def greedy_expr(word: Column, pieces_map: Column,
                         init, step)
     return F.when(F.length(word) < 1,
                   F.array().cast("array<string>")) \
-            .when(final["b"], F.array(F.lit(unk))) \
+            .when(final["b"], F.array(F.lit(WP_UNK))) \
             .otherwise(final["s"])
 
 
@@ -234,8 +233,7 @@ def load_bert_vocab(tokens: "list[str]"
 # --------------------------------------------------------------------------
 
 def greedy_cte(tag: str, pieces_cte: str, words_cte: str, k: int,
-               max_word_len: int, unk: str = WP_UNK,
-               flags_sql: str = "3") -> str:
+               max_word_len: int, flags_sql: str = "3") -> str:
     """One greedy maximal-munch pass over `{words_cte}(word)` as an
     UNROLLED chain of per-position CTEs; `{pieces_cte}(piece)` is the
     vocabulary and `flags_sql` an expression over its columns giving
@@ -287,7 +285,7 @@ def greedy_cte(tag: str, pieces_cte: str, words_cte: str, k: int,
                   THEN error('wordpiece oracle: word longer than the '
                              || '{max_word_len}-position unrolled '
                              || 'greedy walk — raise max_word_len')
-                  WHEN bad THEN ['{unk}']
+                  WHEN bad THEN ['{WP_UNK}']
                   ELSE segs END AS segs
       FROM {tag}{max_word_len})""")
     return ",".join(parts)

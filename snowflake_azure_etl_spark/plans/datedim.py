@@ -17,7 +17,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.dates import FISCAL_START_MONTH, date_attributes
+from ..functions.dates import date_attributes
 
 DIM_DATE_COLUMNS = (
     # the reference's full 34-column contract (example_dim_date.sql:12-28
@@ -48,8 +48,7 @@ def date_spine(spark: SparkSession, start: str | _dt.date,
 
 
 def build_dim_date(spark: SparkSession, start: str | _dt.date = "2013-01-01",
-                   end: str | _dt.date = "2014-12-31",
-                   fiscal_start_month: int = FISCAL_START_MONTH) -> DataFrame:
+                   end: str | _dt.date = "2014-12-31") -> DataFrame:
     """The reference's DIM_DATE re-expressed as a deterministic plan.
 
     Defaults reproduce the reference's 730-day 2013-2014 calendar; the
@@ -65,10 +64,10 @@ def build_dim_date(spark: SparkSession, start: str | _dt.date = "2013-01-01",
     from ..operators._cache import cached_persist
 
     def build() -> DataFrame:
-        attrs = date_attributes("d", fiscal_start_month)
+        attrs = date_attributes("d")
         return date_spine(spark, start, end).select(
             *[attrs[name].alias(name) for name in DIM_DATE_COLUMNS])
 
     return cached_persist(
-        spark, ("dim_date", str(start), str(end), fiscal_start_month),
+        spark, ("dim_date", str(start), str(end)),
         build, eager=True)

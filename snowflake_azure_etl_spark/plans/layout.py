@@ -45,24 +45,20 @@ from pyspark.sql import functions as F
 from .attest import bounded_broadcast
 
 
-def land_bucketed(df: DataFrame, table: str, key: str, buckets: int,
-                  sort: bool = True, mode: str = "overwrite") -> None:
+def land_bucketed(df: DataFrame, table: str, key: str, buckets: int) -> None:
     """Write `df` as a managed table bucketed (and bucket-sorted) on `key`.
 
     One shuffle now, zero shuffles for every subsequent equi-join or
     aggregation on `key`. Bucket count is a layout contract: both sides
     of a co-located join must use the same `buckets`.
     """
-    writer = df.write.mode(mode).bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
+    (df.write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
+     .saveAsTable(table))
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  left_key: str, right_key: str,
-                  how: str = "inner") -> DataFrame:
-    """Join two co-bucketed tables shuffle-free.
+                  left_key: str, right_key: str) -> DataFrame:
+    """Inner-join two co-bucketed tables shuffle-free.
 
     The MERGE hint pins sort-merge so the demonstration is explicit
     (without it AQE may legitimately choose a broadcast for a small
@@ -73,12 +69,12 @@ def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
     """
     left = spark.table(left_table).hint("merge")
     right = spark.table(right_table)
-    return left.join(right, left[left_key] == right[right_key], how)
+    return left.join(right, left[left_key] == right[right_key])
 
 
-def land_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                     mode: str = "overwrite") -> None:
-    """Write parquet directory-partitioned by `partition_cols`.
+def land_partitioned(df: DataFrame, path: str,
+                     partition_cols: list[str]) -> None:
+    """Overwrite parquet directory-partitioned by `partition_cols`.
 
     Partition columns should be low-cardinality (date key, region,
     tenant): each distinct combination is a directory, and planning-time
@@ -86,12 +82,11 @@ def land_partitioned(df: DataFrame, path: str, partition_cols: list[str],
     file. High-cardinality keys belong in bucketing, not partitioning
     (a 10^6-directory listing is its own bottleneck).
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def salted_join(big: DataFrame, small: DataFrame, on: list[str],
-                how: str = "inner", salt: int = 16,
-                salt_col: str = "_salt") -> DataFrame:
+                how: str = "inner", salt: int = 16) -> DataFrame:
     """Skew-resistant equi-join: big side salted, small side replicated.
 
     Each big-side row gets a deterministic salt in [0, salt) (hash of
@@ -111,20 +106,20 @@ def salted_join(big: DataFrame, small: DataFrame, on: list[str],
     if salt < 1:
         raise ValueError("salt must be >= 1")
     big_s = big.withColumn(
-        salt_col,
+        "_salt",
         F.pmod(F.xxhash64(F.struct(*[F.col(c) for c in big.columns])),
                F.lit(salt)).cast("int"))
     small_s = small.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-    return big_s.join(small_s, on + [salt_col], how).drop(salt_col)
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+    return big_s.join(small_s, on + ["_salt"], how).drop("_salt")
 
 
 def land_sorted(df: DataFrame, path: str, sort_cols: list[str],
-                num_files: int | None = None,
-                mode: str = "overwrite") -> None:
-    """Range-clustered landing: range-partition on `sort_cols`, sort
-    within each file, write parquet — the engine's analog of a
-    Snowflake clustering key (and the 1-D case of Z-ordering).
+                num_files: int | None = None) -> None:
+    """Range-clustered landing (overwrite): range-partition on
+    `sort_cols`, sort within each file, write parquet — the engine's
+    analog of a Snowflake clustering key (and the 1-D case of
+    Z-ordering).
 
     Every parquet row group then covers a narrow, non-overlapping
     slice of the sort key's domain, so the min/max statistics in file
@@ -140,7 +135,8 @@ def land_sorted(df: DataFrame, path: str, sort_cols: list[str],
     """
     parts = df.repartitionByRange(*([num_files] if num_files else []),
                                   *sort_cols)
-    parts.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    (parts.sortWithinPartitions(*sort_cols).write.mode("overwrite")
+     .parquet(path))
 
 
 #: Bits per dimension in the Z-value. 12 bits × up to 5 dims stays
@@ -188,10 +184,9 @@ def zorder_key(cols: list, bounds: list[tuple[float, float]],
 def land_zorder(df: DataFrame, path: str, cols: list[str],
                 bounds: list[tuple[float, float]] | None = None,
                 bits: int = ZORDER_BITS,
-                num_files: int | None = None,
-                mode: str = "overwrite") -> None:
-    """Z-order clustered landing: range-cluster the data on the Morton
-    key of `cols` so every file/row group covers a small
+                num_files: int | None = None) -> None:
+    """Z-order clustered landing (overwrite): range-cluster the data on
+    the Morton key of `cols` so every file/row group covers a small
     hyper-rectangle of the clustered columns' joint domain — the
     engine's analog of Delta/Snowflake multi-column clustering keys.
 
@@ -220,7 +215,7 @@ def land_zorder(df: DataFrame, path: str, cols: list[str],
              .repartitionByRange(*([num_files] if num_files else []),
                                  "_z"))
     (parts.sortWithinPartitions("_z").drop("_z")
-     .write.mode(mode).parquet(path))
+     .write.mode("overwrite").parquet(path))
 
 
 def prefilter_semi(big: DataFrame, filtered: DataFrame, on: list[str],

@@ -53,8 +53,7 @@ def with_corrupt_field(schema: T.StructType) -> T.StructType:
         + [T.StructField(CORRUPT_COL, T.StringType(), True)])
 
 
-def copy_accounting(raw: DataFrame, table: str,
-                    entity: str | None) -> LoadReport:
+def copy_accounting(raw: DataFrame, table: str) -> LoadReport:
     """The shared ON_ERROR=CONTINUE COPY tail: split good/corrupt rows,
     count per source file, append the good rows (COPY INTO only ever
     appends), report. One implementation for every stage format (CSV,
@@ -71,7 +70,7 @@ def copy_accounting(raw: DataFrame, table: str,
         loaded = sum(per_file.values())
         (good.drop(CORRUPT_COL, "_src_file")
              .write.mode("append").format("parquet").saveAsTable(table))
-        return LoadReport(entity or table, loaded, rejected, per_file)
+        return LoadReport(table, loaded, rejected, per_file)
     finally:
         raw.unpersist()
 
@@ -99,22 +98,21 @@ def read_snowflake_csv(spark: SparkSession, path: str | list[str],
 
 
 def copy_into(spark: SparkSession, path: str | list[str], schema: T.StructType,
-              table: str, entity: str | None = None) -> LoadReport:
+              table: str) -> LoadReport:
     """COPY INTO table FROM stage with ON_ERROR=CONTINUE accounting.
 
     Bad rows (schema-unparseable) land in the corrupt-record column and are
     dropped, not aborted on — the report carries the rejected count, like
     the reference's per-file COPY result summary.
     """
-    return copy_accounting(read_snowflake_csv(spark, path, schema),
-                           table, entity)
+    return copy_accounting(read_snowflake_csv(spark, path, schema), table)
 
 
 def read_csv_match_by_name(spark: SparkSession, path: str | list[str],
-                           schema: T.StructType,
-                           case_insensitive: bool = True) -> DataFrame:
+                           schema: T.StructType) -> DataFrame:
     """COPY ... MATCH_BY_COLUMN_NAME semantics (X-COPY-EVOLVE): the
-    file's HEADER drives the mapping instead of column position, which
+    file's HEADER drives the mapping (case-insensitively) instead of
+    column position, which
     is how Snowflake loads survive stage-schema drift — reordered
     columns load correctly, a column missing from the file lands NULL,
     extra file columns are ignored.
@@ -137,19 +135,16 @@ def read_csv_match_by_name(spark: SparkSession, path: str | list[str],
     union into ONE lazy relation."""
     from ..warehouse.copy_loader import list_stage
 
-    def key(name: str) -> str:
-        return name.lower() if case_insensitive else name
-
     paths = [path] if isinstance(path, str) else list(path)
     files = [p for g in paths for p, _ in list_stage(spark, g)]
     legs = []
     for fpath in files:
         raw = spark.read.options(header="true", sep=",").csv(fpath)
-        by_name = {key(c): c for c in raw.columns}
+        by_name = {c.lower(): c for c in raw.columns}
         outs: list = []
         bad = F.lit(False)
         for f_ in schema.fields:
-            src = by_name.get(key(f_.name))
+            src = by_name.get(f_.name.lower())
             if src is None:
                 outs.append(F.lit(None).cast(f_.dataType).alias(f_.name))
                 continue
@@ -172,9 +167,8 @@ def read_csv_match_by_name(spark: SparkSession, path: str | list[str],
 
 
 def copy_into_match_by_name(spark: SparkSession, path: str | list[str],
-                            schema: T.StructType, table: str,
-                            entity: str | None = None) -> LoadReport:
+                            schema: T.StructType, table: str) -> LoadReport:
     """COPY INTO with MATCH_BY_COLUMN_NAME + ON_ERROR=CONTINUE: the
     schema-drift-tolerant sibling of `copy_into`, same accounting."""
     return copy_accounting(read_csv_match_by_name(spark, path, schema),
-                           table, entity)
+                           table)

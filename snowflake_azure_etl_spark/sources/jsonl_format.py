@@ -49,9 +49,9 @@ def read_jsonl(spark: SparkSession, path: str,
 
 
 def copy_into_jsonl(spark: SparkSession, path: str, schema: T.StructType,
-                    table: str, entity: str | None = None) -> LoadReport:
+                    table: str) -> LoadReport:
     """COPY INTO table FROM jsonl-stage with ON_ERROR=CONTINUE
     accounting — the JSONL twin of `csv_format.copy_into`: both
     formats share `csv_format.copy_accounting`, so the accounting
     semantics cannot drift between them."""
-    return copy_accounting(read_jsonl(spark, path, schema), table, entity)
+    return copy_accounting(read_jsonl(spark, path, schema), table)

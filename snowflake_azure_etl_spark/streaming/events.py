@@ -30,21 +30,26 @@ EVENTS_SCHEMA = T.StructType([
 ])
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str,
-                       max_files_per_trigger: int = 1) -> DataFrame:
-    """File-source stream over the events parquet (schema-declared —
-    streaming sources require explicit schemas)."""
+#: Event-time lateness every windowed stream tolerates before it
+#: drops window state.
+WATERMARK = "1 hour"
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events parquet, one file per
+    trigger (schema-declared — streaming sources require explicit
+    schemas)."""
     return (spark.readStream.format("parquet")
             .schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .option("maxFilesPerTrigger", "1")
             .load(f"{sf_dir}/events.parquet"))
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """1-hour tumbling windows per event_type (twin of
     q40_events_tumbling_window) with a watermark bounding window state."""
     return (events
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", WATERMARK)
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"),
                  F.approx_count_distinct("user_id").alias("approx_users"),
@@ -54,11 +59,11 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
                     "event_type", "n_events", "approx_users", "total_value"))
 
 
-def sliding_value_sums(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def sliding_value_sums(events: DataFrame) -> DataFrame:
     """1-hour windows hopping every 15 minutes (twin of
     q41_events_sliding_window)."""
     return (events
-            .withWatermark("ts", watermark)
+            .withWatermark("ts", WATERMARK)
             .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
             .agg(F.count("*").alias("n_events"),
                  F.sum(F.col("value").cast("decimal(18,2)"))
@@ -67,14 +72,14 @@ def sliding_value_sums(events: DataFrame, watermark: str = "1 hour") -> DataFram
                     "n_events", "total_value"))
 
 
-def session_aggregates(events: DataFrame, gap: str = "30 minutes",
-                       watermark: str = "1 hour") -> DataFrame:
+def session_aggregates(events: DataFrame) -> DataFrame:
     """Native session windows per user (streaming analog of the batch
     lag+cumsum sessionization in q42): session_window closes a session
-    after `gap` inactivity; state pruned at the watermark."""
+    after 30 minutes of inactivity; state pruned at the watermark."""
     return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+            .withWatermark("ts", WATERMARK)
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"),
+                     "user_id")
             .agg(F.count("*").alias("n_events"),
                  F.sum(F.col("value").cast("decimal(18,2)"))
                  .cast("double").alias("session_value"))

@@ -65,27 +65,19 @@ def split_quarantine(stream: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, bad
 
 
-def scrubbed_ingest(stream: DataFrame, text_col: str = "text",
-                    min_chars: int = 1,
-                    scrub_pii: bool = True) -> DataFrame:
+def scrubbed_ingest(stream: DataFrame) -> DataFrame:
     """The standard arrival-time scrub over the good leg: drop
-    empty/short documents, redact PII — narrow row-local stages that
-    keep the stream stateless (dedup is the caller's stateful stage:
-    `streaming.dedup.dedup_stream` composes after this)."""
+    empty documents, redact PII in `text` — narrow row-local stages
+    that keep the stream stateless (dedup is the caller's stateful
+    stage: `streaming.dedup.dedup_stream` composes after this)."""
     from ..operators import text as text_ops
 
-    out = stream.filter(F.length(F.col(text_col)) >= min_chars)
-    if scrub_pii:
-        out = out.withColumn(text_col, text_ops.redact_pii(text_col))
-    return out
+    return (stream.filter(F.length(F.col("text")) >= 1)
+            .withColumn("text", text_ops.redact_pii("text")))
 
 
 def decontam_ingest_sink(eval_gram_table: str, clean_table: str, *,
-                         audit_table: str | None = None,
-                         id_col: str = "doc_id",
-                         text_col: str = "text",
-                         n: int | None = None,
-                         n_eval_grams: int | None = None):
+                         audit_table: str | None = None):
     """Arrival-time benchmark decontamination (VERDICT r10 #6 — the
     streaming sibling the decontam family was missing, completing the
     per-artifact set: exact dedup → `streaming.dedup`, near-dup →
@@ -103,18 +95,13 @@ def decontam_ingest_sink(eval_gram_table: str, clean_table: str, *,
     against the same fixed benchmark), so the stream output equals
     the batch operator over the concatenated stream — pinned in
     tests/test_streaming_ingest.py. Per epoch only the batch pays
-    gram hashing; the benchmark side broadcasts under the
-    ``n_eval_grams`` attestation (the batch operator's contract)."""
-    from ..operators.decontam import (DECONTAM_N,
-                                      contamination_hits_against)
+    gram hashing; the benchmark side is un-hinted (AQE decides)."""
+    from ..operators.decontam import contamination_hits_against
     from .sinks import epoch_sink
-
-    width = DECONTAM_N if n is None else n
 
     def step(batch_df: DataFrame, epoch_id: int):
         ev = batch_df.sparkSession.table(eval_gram_table)
-        hits = contamination_hits_against(
-            batch_df, ev, id_col, text_col, width, n_eval_grams)
+        hits = contamination_hits_against(batch_df, ev)
         if audit_table:
             # hits feeds BOTH outputs — materialize once (eager, an
             # epoch-bounded relation) so the gram hashing + eval join
@@ -124,16 +111,14 @@ def decontam_ingest_sink(eval_gram_table: str, clean_table: str, *,
             hits = hits.localCheckpoint(eager=True)
         # hit ids are hit-proportional (bounded by the batch); the
         # anti-join drops contaminated docs from the clean leg
-        clean = batch_df.join(hits.select(id_col), id_col, "left_anti")
+        clean = batch_df.join(hits.select("doc_id"), "doc_id", "left_anti")
         return clean, (hits if audit_table else None)
 
     return epoch_sink(step, clean_table, audit_table)
 
 
 def dsir_ingest_sink(model_table: str, scored_table: str, *,
-                     id_col: str = "doc_id", text_col: str = "text",
-                     n: int = 2, n_buckets: int | None = None,
-                     salt: str = "dsir", keep_only: bool = False):
+                     keep_only: bool = False):
     """Arrival-time DSIR importance scoring (VERDICT r11 #6 — the
     streaming sibling of the r11 DSIR operator, completing its
     maintenance family the way decontam/dedup/near-dup/substr/
@@ -153,22 +138,18 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
     applies the row-local selection decision (score > 0: more
     target-like than raw) at ingest — the filter-at-the-door shape.
 
-    Scale: the model is ≤ n_buckets rows (bounded broadcast via the
+    Scale: the model is ≤ DSIR_BUCKETS rows (bounded broadcast via the
     scoring operator's attestation); per epoch only the batch pays
     gram hashing; nothing accumulates driver- or executor-side."""
-    from ..operators.sampling import (DSIR_BUCKETS, dsir_log_weights,
-                                      hashed_ngram_counts)
+    from ..operators.sampling import dsir_log_weights, hashed_ngram_counts
     from .sinks import epoch_sink
-
-    buckets = DSIR_BUCKETS if n_buckets is None else n_buckets
 
     def step(batch_df: DataFrame, epoch_id: int):
         stats = batch_df.sparkSession.table(model_table)
-        feats = hashed_ngram_counts(batch_df, id_col, text_col, n,
-                                    buckets, salt)
-        scored = dsir_log_weights(batch_df.select(id_col), feats,
-                                  stats, id_col, n_buckets=buckets)
-        out = batch_df.join(scored, id_col)
+        feats = hashed_ngram_counts(batch_df, "doc_id", "text")
+        scored = dsir_log_weights(batch_df.select("doc_id"), feats,
+                                  stats, "doc_id")
+        out = batch_df.join(scored, "doc_id")
         if keep_only:
             out = out.filter(F.col("dsir_score") > 0)
         return [out]
@@ -178,9 +159,7 @@ def dsir_ingest_sink(model_table: str, scored_table: str, *,
 
 def lm_ingest_sink(order: int, count_tables: Sequence[str],
                    totals_table: str, selection_table: str,
-                   scored_table: str, *,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   keep_only: bool = False):
+                   scored_table: str, *, keep_only: bool = False):
     """Arrival-time n-gram-LM perplexity scoring (r12 — the streaming
     sibling of `operators.lm`, completing the quality tier's
     maintenance family exactly like `dsir_ingest_sink` does DSIR's).
@@ -208,12 +187,12 @@ def lm_ingest_sink(order: int, count_tables: Sequence[str],
 
     def step(batch_df: DataFrame, epoch_id: int):
         spark = batch_df.sparkSession
-        scored = lm_bits(batch_df, id_col, text_col,
+        scored = lm_bits(batch_df, "doc_id", "text",
                          [spark.table(t) for t in count_tables],
                          spark.table(totals_table), order)
         out = batch_df.join(
             lm_select(scored, spark.table(selection_table), order),
-            id_col)
+            "doc_id")
         if keep_only:
             out = out.filter(F.col(keep_col))
         return [out]
@@ -221,9 +200,7 @@ def lm_ingest_sink(order: int, count_tables: Sequence[str],
     return epoch_sink(step, scored_table)
 
 
-def lm_counts_ingest_sink(count_tables: Sequence[str], *,
-                          id_col: str = "doc_id",
-                          text_col: str = "text"):
+def lm_counts_ingest_sink(count_tables: Sequence[str]):
     """GROW the LM model artifact at ingest — the maintenance sibling
     of the scoring sink above, completing the LM family's streaming
     set the way `streaming.substr` completes the window index's. Each
@@ -244,7 +221,7 @@ def lm_counts_ingest_sink(count_tables: Sequence[str], *,
         # persist for the duration of the write actions — each is its
         # own job, and an unpersisted toks would re-read and re-split
         # the batch source per gram family (review finding)
-        toks = tokenized(batch_df, id_col, text_col).persist()
+        toks = tokenized(batch_df, "doc_id", "text").persist()
         try:
             for n in range(1, len(count_tables) + 1):
                 yield gram_counts(toks, n)
@@ -255,9 +232,6 @@ def lm_counts_ingest_sink(count_tables: Sequence[str], *,
 
 
 def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
-                        id_col: str = "doc_id",
-                        text_col: str = "text",
-                        k: int | None = None,
                         drop_unsegmentable: bool = False,
                         fallback: bool = False):
     """Arrival-time unigram-tokenizer segmentation (r13 — the
@@ -272,7 +246,7 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
 
     The model is read per micro-batch (`_piece_rows`: a maintenance
     job CAN land a retrained table mid-stream and later batches pick
-    it up; `k` defaults to the longest persisted piece); with the
+    it up; the max piece length is the longest persisted piece); with the
     table fixed the sink is stateless and stream == batch over the
     concatenated stream (pinned in tests/test_streaming_ingest.py).
     Unsegmentable documents carry NULL pieces (fail-visible);
@@ -289,11 +263,11 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
 
     def step(batch_df: DataFrame, epoch_id: int):
         rows, eff_k = _piece_rows(batch_df.sparkSession, pieces_table,
-                                  ("piece", "cost"), k,
+                                  ("piece", "cost"),
                                   "unigram_ingest_sink", "trained model")
         costs = {r["piece"]: int(r["cost"]) for r in rows}
         out = (segment_docs(batch_df, segmenter(costs, eff_k, fallback),
-                            text_col)
+                            "text")
                .withColumn("n_pieces", F.size("pieces")))
         if drop_unsegmentable:
             out = out.filter(F.col("pieces").isNotNull())
@@ -303,10 +277,10 @@ def unigram_ingest_sink(pieces_table: str, seg_table: str, *,
 
 
 def _piece_rows(spark: SparkSession, table: str, cols: Sequence[str],
-                k: int | None, sink: str, what: str):
+                sink: str, what: str):
     """(rows, k) of a tokenizer sink's PERSISTED piece table: a
     piece-vocab-sized collect per micro-batch; empty fails loud. `k`
-    defaults to the LONGEST persisted piece, so a model trained with a
+    is the LONGEST persisted piece, so a model trained with a
     non-default max piece length segments identically at ingest (r13
     review: a k=4 default silently dropped a k=6 model's long
     candidates). NULL pieces are left to the family's validation."""
@@ -314,14 +288,10 @@ def _piece_rows(spark: SparkSession, table: str, cols: Sequence[str],
     if not rows:
         raise ValueError(f"{sink}: piece table {table} is empty — land "
                          f"a {what} before streaming")
-    return rows, (k if k is not None
-                  else max(len(r["piece"] or "") for r in rows))
+    return rows, max(len(r["piece"] or "") for r in rows)
 
 
-def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
-                          id_col: str = "doc_id",
-                          text_col: str = "text",
-                          k: int | None = None):
+def wordpiece_ingest_sink(pieces_table: str, seg_table: str):
     """Arrival-time WordPiece greedy segmentation — the
     `unigram_ingest_sink` twin for the third tokenizer family (r14).
     Each micro-batch is greedy-encoded ROW-LOCALLY against the
@@ -331,7 +301,7 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
     (pieces, n_pieces) via `sinks.epoch_sink`. WordPiece's
     whole-word ``[UNK]`` makes coverage total by construction, so
     there is no drop knob — unknown material is visible IN the data.
-    `k` defaults to the longest persisted piece (the unigram sink's
+    The max piece length is the longest persisted piece (the unigram sink's
     derivation rule, same drift pin); the encode routes through
     `segment.segment_docs`, so a production-scale vocabulary ships as
     a one-row broadcast map, never plan literals. A piece table carrying
@@ -352,7 +322,7 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
         flagged = "fl" in spark.table(pieces_table).columns
         rows, eff_k = _piece_rows(spark, pieces_table,
                                   ("piece", "fl") if flagged else ("piece",),
-                                  k, "wordpiece_ingest_sink", "vocabulary")
+                                  "wordpiece_ingest_sink", "vocabulary")
         if flagged:
             # a malformed landed vocabulary fails LOUD like the
             # empty-table case: a NULL fl would TypeError below, and a
@@ -381,15 +351,14 @@ def wordpiece_ingest_sink(pieces_table: str, seg_table: str, *,
         else:
             pieces, cont = {r["piece"] for r in rows}, None
         out = (segment_docs(batch_df, segmenter(pieces, eff_k, cont),
-                            text_col)
+                            "text")
                .withColumn("n_pieces", F.size("pieces")))
         return [out]
 
     return epoch_sink(step, seg_table)
 
 
-def unigram_counts_ingest_sink(words_table: str, *,
-                               text_col: str = "text"):
+def unigram_counts_ingest_sink(words_table: str):
     """GROW the unigram tokenizer's training statistics at ingest —
     the `lm_counts_ingest_sink` twin the trained-tokenizer family was
     missing (VERDICT r13 next #5), completing its maintenance set:
@@ -407,7 +376,7 @@ def unigram_counts_ingest_sink(words_table: str, *,
     from .sinks import epoch_sink
 
     return epoch_sink(
-        lambda batch_df, _: [word_freqs(batch_df, text_col)], words_table)
+        lambda batch_df, _: [word_freqs(batch_df, "text")], words_table)
 
 
 #: Shard column of the streaming line-winner table — a deterministic
@@ -522,8 +491,8 @@ def line_dedup_ingest_sink(winner_table: str, scrubbed_table: str, *,
 
 
 def scored_ingest(stream: DataFrame, weights: list[float],
-                  feature_cols, threshold: float | None = 0.5,
-                  out_col: str = "clf_score") -> DataFrame:
+                  feature_cols,
+                  threshold: float | None = 0.5) -> DataFrame:
     """Arrival-time quality gate with an offline-TRAINED linear probe
     (operators.classifier) — the production train-offline/score-online
     split: `train_probes` learns a one-label probe on the batch corpus,
@@ -533,11 +502,10 @@ def scored_ingest(stream: DataFrame, weights: list[float],
     weights fold in as literals through the same margin chain as batch
     scoring — bit-identical, pinned by
     tests/test_streaming_ingest.py's stream==batch equivalence).
-    `threshold=None` keeps every row (score column only)."""
+    `threshold=None` keeps every row (score column `clf_score` only)."""
     from ..operators import classifier
 
-    scored = classifier.score_with_literals(stream, feature_cols,
-                                            weights, out_col=out_col)
+    scored = classifier.score_with_literals(stream, feature_cols, weights)
     if threshold is None:
         return scored
-    return scored.filter(F.col(out_col) >= threshold)
+    return scored.filter(F.col("clf_score") >= threshold)

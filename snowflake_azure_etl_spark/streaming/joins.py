@@ -19,19 +19,18 @@ from pyspark.sql import functions as F
 from ..plans.attest import bounded_broadcast
 
 
-def purchases_with_recent_views(purchases: DataFrame, views: DataFrame,
-                                within: str = "1 hour",
-                                watermark: str = "2 hours") -> DataFrame:
+def purchases_with_recent_views(purchases: DataFrame,
+                                views: DataFrame) -> DataFrame:
     """Each purchase joined to the same user's views in the preceding
-    `within` interval — the streaming form of 'attribute a conversion
-    to recent impressions'. Works identically on static frames (the
-    batch twin used by the equivalence test): watermarks are a no-op
-    on batch DataFrames."""
-    p = purchases.withWatermark("ts", watermark).alias("p")
-    v = views.withWatermark("ts", watermark).alias("v")
+    hour — the streaming form of 'attribute a conversion to recent
+    impressions', with a 2-hour watermark on both sides. Works
+    identically on static frames (the batch twin used by the
+    equivalence test): watermarks are a no-op on batch DataFrames."""
+    p = purchases.withWatermark("ts", "2 hours").alias("p")
+    v = views.withWatermark("ts", "2 hours").alias("v")
     cond = ((F.col("p.user_id") == F.col("v.user_id"))
             & (F.col("v.ts") <= F.col("p.ts"))
-            & (F.col("v.ts") >= F.col("p.ts") - F.expr(f"INTERVAL {within}")))
+            & (F.col("v.ts") >= F.col("p.ts") - F.expr("INTERVAL 1 hour")))
     return (p.join(v, cond, "inner")
             .select(F.col("p.event_id").alias("purchase_id"),
                     F.col("p.user_id").alias("user_id"),
@@ -41,9 +40,9 @@ def purchases_with_recent_views(purchases: DataFrame, views: DataFrame,
                     F.col("v.value").alias("view_value")))
 
 
-def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: list[str],
-                    how: str = "left") -> DataFrame:
-    """Stream-STATIC enrichment join — the standard 'attach dimension
+def enrich_with_dim(stream: DataFrame, dim: DataFrame,
+                    on: list[str]) -> DataFrame:
+    """Stream-STATIC left enrichment join — the standard 'attach dimension
     attributes to a live event stream' pattern (the streaming twin of
     the batch star join).
 
@@ -60,4 +59,4 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: list[str],
         bounded_broadcast(dim, bound="stream-static dim (caller "
                           "contract: drop the hint for dims past the "
                           "cap and pre-bucket instead)"),
-        on, how)
+        on, "left")

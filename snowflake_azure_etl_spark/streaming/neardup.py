@@ -26,7 +26,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (band_key_index,
+from ..operators.dedup import (INCR_BANDS, INCR_ROWS, band_key_index,
                                incremental_near_dup_candidates,
                                minhash_signature_shingled)
 from ..sources.registry import footer_row_count
@@ -34,13 +34,12 @@ from .sinks import epoch_sink, read_epochs
 
 
 def near_dup_ingest_sink(index_table: str, cand_table: str, *,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         bands: int = 4, rows: int = 2,
-                         shingle_n: int = 3,
                          max_bucket: int = 10000
                          ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function:
-    `readStream ... .writeStream.foreachBatch(near_dup_ingest_sink(...))`.
+    `readStream ... .writeStream.foreachBatch(near_dup_ingest_sink(...))`
+    over (doc_id, text) batches, MinHash over word 3-shingles in the
+    `dedup.INCR_BANDS` × `dedup.INCR_ROWS` band layout.
 
     Per epoch: (1) candidates of the batch vs the index restricted to
     earlier epochs (plus intra-batch pairs) → `cand_table`;
@@ -59,11 +58,11 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
         # ONE materialized signature pass per epoch; its band keys feed
         # both the probe (`keys` hand-off) and the index write
         obs = Observation()
-        sig = (minhash_signature_shingled(batch_df, id_col, text_col,
-                                          k=bands * rows, n=shingle_n)
+        sig = (minhash_signature_shingled(batch_df, "doc_id", "text",
+                                          k=INCR_BANDS * INCR_ROWS)
                .observe(obs, F.count(F.lit(1)).alias("n"))
                .localCheckpoint(eager=True))
-        keys = band_key_index(sig, id_col, bands, rows)
+        keys = band_key_index(sig, "doc_id", INCR_BANDS, INCR_ROWS)
         index = read_epochs(spark, index_table, before=epoch_id)
         if index is None:
             index, n_index = keys.limit(0), 0
@@ -71,10 +70,8 @@ def near_dup_ingest_sink(index_table: str, cand_table: str, *,
             # the epoch filter prunes the listing to the probed files
             n_index = footer_row_count(index.inputFiles())
         cands = incremental_near_dup_candidates(
-            batch_df, index, id_col, text_col,
-            bands=bands, rows=rows, shingle_n=shingle_n,
-            max_bucket=max_bucket, n_new=obs.get["n"], n_index=n_index,
-            keys=keys)
+            batch_df, index, max_bucket=max_bucket, n_new=obs.get["n"],
+            n_index=n_index, keys=keys)
         return cands, keys
 
     return epoch_sink(step, cand_table, index_table)

@@ -158,8 +158,7 @@ def require_columns(spark: SparkSession, table: str,
         raise ValueError(message.format(have=have, missing=missing))
 
 
-def epoch_partitions(spark: SparkSession, table: str,
-                     epoch_col: str = EPOCH_COL) -> tuple[list, list]:
+def epoch_partitions(spark: SparkSession, table: str) -> tuple[list, list]:
     """`table`'s partitions from the catalog alone (SHOW PARTITIONS, no
     data pass): one `(epoch id, [[column, value], ...])` pair per LEAF
     partition, and the epoch values that do not parse as an id. A
@@ -170,7 +169,7 @@ def epoch_partitions(spark: SparkSession, table: str,
     parts, bad = [], []
     for r in spark.sql(f"SHOW PARTITIONS {table}").collect():
         levels = [seg.split("=", 1) for seg in r[0].split("/")]
-        if levels[0][0] != epoch_col:
+        if levels[0][0] != EPOCH_COL:
             continue
         try:
             parts.append((int(levels[0][1]), levels))
@@ -179,8 +178,7 @@ def epoch_partitions(spark: SparkSession, table: str,
     return parts, bad
 
 
-def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
-                  epoch_col: str = EPOCH_COL) -> int:
+def vacuum_epochs(spark: SparkSession, table: str, keep_from: int) -> int:
     """Retention for epoch-partitioned sink tables: drop every epoch
     partition BELOW `keep_from` (the watermark the caller derives from
     its replay/compliance policy) and return how many were dropped.
@@ -202,7 +200,7 @@ def vacuum_epochs(spark: SparkSession, table: str, keep_from: int,
     idempotent sink writes by epoch id); callers must therefore only
     vacuum below their checkpoint's committed offset — the same
     watermark discipline as any state-store eviction."""
-    parts, bad = epoch_partitions(spark, table, epoch_col)
+    parts, bad = epoch_partitions(spark, table)
     if bad:
         import warnings
         warnings.warn(

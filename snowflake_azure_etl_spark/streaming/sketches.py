@@ -27,32 +27,25 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..operators.sketches import (BLOOM_BITS, BLOOM_HASHES, CMS_DEPTH,
-                                  CMS_WIDTH, HIST_BINS, bloom_build,
-                                  cms_build, equiwidth_histogram)
+from ..operators.sketches import (HIST_BINS, bloom_build, cms_build,
+                                  equiwidth_histogram)
 from .sinks import epoch_sink
 
 
-def cms_ingest_sink(table: str, key_col: str,
-                    depth: int = CMS_DEPTH,
-                    width: int = CMS_WIDTH) -> Callable[[DataFrame, int],
-                                                        None]:
+def cms_ingest_sink(table: str,
+                    key_col: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: land each micro-batch's Count-Min
     PARTIAL (j, bucket, cnt) as its own epoch partition."""
     return epoch_sink(
-        lambda batch_df, _: [cms_build(batch_df, key_col, depth, width)],
-        table)
+        lambda batch_df, _: [cms_build(batch_df, key_col)], table)
 
 
-def bloom_ingest_sink(table: str, key_col: str,
-                      bits: int = BLOOM_BITS,
-                      hashes: int = BLOOM_HASHES
-                      ) -> Callable[[DataFrame, int], None]:
+def bloom_ingest_sink(table: str,
+                      key_col: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: land each micro-batch's Bloom PARTIAL
     (word_idx, word) as its own epoch partition."""
     return epoch_sink(
-        lambda batch_df, _: [bloom_build(batch_df, key_col, bits, hashes)],
-        table)
+        lambda batch_df, _: [bloom_build(batch_df, key_col)], table)
 
 
 def hist_ingest_sink(table: str, value_col: str, lo: float, hi: float,

@@ -42,15 +42,13 @@ from .sinks import epoch_sink, read_epochs
 
 
 def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
-                             id_col: str = "doc_id",
-                             text_col: str = "text",
-                             min_len: int = SUBSTR_MIN_LEN,
-                             min_count: int = SUBSTR_MIN_COUNT
+                             min_len: int = SUBSTR_MIN_LEN
                              ) -> Callable[[DataFrame, int], None]:
-    """Build the foreachBatch function. Per epoch: (1) the batch's
-    scrub report vs the earlier-epoch index → `scrub_table`; (2) the
-    batch's own window-hash counts → `index_table`. Both
-    epoch-idempotent.
+    """Build the foreachBatch function over (doc_id, text) batches,
+    with `dedup.SUBSTR_MIN_COUNT` as the repeat floor. Per epoch: (1)
+    the batch's scrub report vs the earlier-epoch index →
+    `scrub_table`; (2) the batch's own window-hash counts →
+    `index_table`. Both epoch-idempotent.
 
     The probe reads only what the batch can touch: earlier partials
     semi-join the batch's own window hashes BEFORE the SUM merge, so
@@ -69,9 +67,9 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
         # write computes and the rest read back (no extra job; not the
         # session cache, whose plan-keyed entries would pile up one per
         # epoch)
-        occ = _window_occurrences(batch_df, id_col, text_col,
+        occ = _window_occurrences(batch_df, "doc_id", "text",
                                   min_len).localCheckpoint(eager=False)
-        partial = window_hash_index(batch_df, id_col, text_col, min_len,
+        partial = window_hash_index(batch_df, "doc_id", "text", min_len,
                                     occ=occ)
         earlier = read_epochs(batch_df.sparkSession, index_table,
                               before=epoch_id)
@@ -85,7 +83,7 @@ def substr_scrub_ingest_sink(index_table: str, scrub_table: str, *,
                  earlier.filter(F.col("min_len") != int(min_len))],
                 WINDOW_INDEX_MERGE)
         report = incremental_scrub_duplicate_substrings(
-            batch_df, index, id_col, text_col, min_len, min_count,
+            batch_df, index, "doc_id", "text", min_len, SUBSTR_MIN_COUNT,
             occ=occ)
         return report, partial
 

@@ -124,13 +124,13 @@ def require_transform_with_state() -> None:
             "cluster with protobuf installed.") from e
 
 
-def user_profiles(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
+def user_profiles(events: DataFrame) -> DataFrame:
     """Per-user evolving profile emitted every micro-batch the user
     appears in; all state survives across batches (and restarts, via
-    the checkpoint)."""
+    the checkpoint) with no TTL."""
     require_transform_with_state()
     return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_user_profile_processor(ttl_ms),
+        statefulProcessor=make_user_profile_processor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
         timeMode="None")

@@ -39,35 +39,33 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (KMEANS_SCALE, _centroid_array,
-                                    assign_cells, cell_fit_stats,
-                                    drift_flags, kmeans_centroids)
+from ..operators.similarity import (DRIFT_COS_DROP, KMEANS_SCALE,
+                                    _centroid_array, assign_cells,
+                                    cell_fit_stats, drift_flags,
+                                    kmeans_centroids)
 from ..warehouse.ddl import drop_table
 from .sinks import (EPOCH_COL, epoch_partitions, epoch_sink, read_epochs,
                     require_columns, write_epoch)
 
 
 def bootstrap_centroids(corpus: DataFrame, centroids_table: str, *,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        n_cells: int = 8, train_iters: int = 2,
-                        version: int = 0) -> None:
-    """Train a quantizer on a corpus and persist it as `(cell_id, ctv,
-    q_version)` — the table every epoch's assignment reads (current =
-    highest version). Bootstrap REPLACES the whole table (a fresh
-    quantizer lifecycle: `ddl.drop_table`, then version `version`) and
-    lays it q_version-PARTITIONED so `retrain_centroids` can add
-    versions by partition overwrite without touching earlier ones."""
-    cents = kmeans_centroids(corpus, id_col, vec_col, n_cells,
-                             n_iter=train_iters)
+                        n_cells: int = 8) -> None:
+    """Train a quantizer (2 Lloyd's rounds) on a (vec_id, embedding)
+    corpus and persist it as `(cell_id, ctv, q_version)` — the table
+    every epoch's assignment reads (current = highest version).
+    Bootstrap REPLACES the whole table (a fresh quantizer lifecycle:
+    `ddl.drop_table`, then version 0) and lays it q_version-PARTITIONED
+    so `retrain_centroids` can add versions by partition overwrite
+    without touching earlier ones."""
+    cents = kmeans_centroids(corpus, "vec_id", "embedding", n_cells)
     drop_table(corpus.sparkSession, centroids_table)
-    write_epoch(cents, centroids_table, version, epoch_col="q_version")
+    write_epoch(cents, centroids_table, 0, epoch_col="q_version")
 
 
 def retrain_centroids(spark: SparkSession, index_table: str,
                       centroids_table: str, *,
-                      n_cells: int = 8, train_iters: int = 2) -> None:
-    """The retrain act the drift flags call for: re-run Lloyd's rounds
+                      n_cells: int = 8) -> None:
+    """The retrain act the drift flags call for: re-run 2 Lloyd's rounds
     over EVERY vector the index has absorbed (the index stores `_v`
     for this) and replace the quantizer at version+1. Subsequent
     epochs assign against the new centroids AND restart the drift
@@ -89,8 +87,7 @@ def retrain_centroids(spark: SparkSession, index_table: str,
     vecs = (spark.table(index_table)
             .select(F.col("_id").alias("vec_id"),
                     F.col("_v").alias("embedding")))
-    new = kmeans_centroids(vecs, "vec_id", "embedding", n_cells,
-                           n_iter=train_iters)
+    new = kmeans_centroids(vecs, "vec_id", "embedding", n_cells)
     write_epoch(new, centroids_table, int(cur) + 1, epoch_col="q_version")
 
 
@@ -139,14 +136,11 @@ def _check_drift_retention(spark: SparkSession, index_table: str,
 
 
 def vector_ingest_sink(index_table: str, drift_table: str,
-                       centroids_table: str, *,
-                       id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       cos_scale: int = KMEANS_SCALE,
-                       cos_drop: float = 0.02
+                       centroids_table: str
                        ) -> Callable[[DataFrame, int], None]:
     """Build the foreachBatch function:
-    `readStream ... .writeStream.foreachBatch(vector_ingest_sink(...))`.
+    `readStream ... .writeStream.foreachBatch(vector_ingest_sink(...))`
+    over (vec_id, embedding) batches.
 
     Per epoch: (1) assign the batch to the persisted quantizer and
     append `(_id, cell_id, fit_q, _v)` to `index_table`; (2) compare
@@ -196,9 +190,10 @@ def vector_ingest_sink(index_table: str, drift_table: str,
         # ONE materialized assignment pass per epoch — shared by the
         # index write and the drift aggregate (batch-sized by
         # definition, the neardup-sink localCheckpoint contract)
-        scored = (assign_cells(batch_df, id_col, vec_col, cent_arr)
+        scored = (assign_cells(batch_df, "vec_id", "embedding", cent_arr)
                   .select(F.col("neighbor_id").alias("_id"), "cell_id",
-                          F.floor(F.col("cell_cos") * F.lit(float(cos_scale)))
+                          F.floor(F.col("cell_cos")
+                                  * F.lit(float(KMEANS_SCALE)))
                           .cast("long").alias("fit_q"),
                           F.col("cv").alias("_v"),
                           F.lit(version).cast("long").alias("q_version"))
@@ -226,9 +221,8 @@ def vector_ingest_sink(index_table: str, drift_table: str,
             iraw = braw.limit(0)
         # the shared stats/flag definitions (operators.similarity) so
         # the batch operator and this sink cannot silently diverge
-        rep = (drift_flags(cell_fit_stats(iraw, "index", cos_scale),
-                           cell_fit_stats(braw, "new", cos_scale),
-                           cos_drop)
+        rep = (drift_flags(cell_fit_stats(iraw, "index"),
+                           cell_fit_stats(braw, "new"), DRIFT_COS_DROP)
                .withColumn("q_version", F.lit(version).cast("long")))
         return rep, scored
 

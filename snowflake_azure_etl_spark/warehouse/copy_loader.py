@@ -39,14 +39,14 @@ def list_stage(spark: SparkSession, path_glob: str) -> list[tuple[str, int]]:
 
 
 def load_stage_if_present(spark: SparkSession, path_glob: str,
-                          schema: T.StructType, table: str,
-                          entity: str | None = None) -> LoadReport | None:
+                          schema: T.StructType,
+                          table: str) -> LoadReport | None:
     """The reference's per-entity flow: LIST, skip-if-empty, else COPY
     with accounting (load_data.py:22-74). Returns None when the stage
     has no files (reported as a skipped entity, not a failure)."""
     if not list_stage(spark, path_glob):
         return None
-    return copy_into(spark, path_glob, schema, table, entity=entity)
+    return copy_into(spark, path_glob, schema, table)
 
 
 #: Where COPY load history lives (Snowflake keeps this per table in
@@ -55,8 +55,7 @@ LOAD_HISTORY_TABLE = "etl_load_history"
 
 
 def copy_with_history(spark: SparkSession, path_glob: str,
-                      schema: T.StructType, table: str,
-                      entity: str | None = None, force: bool = False,
+                      schema: T.StructType, table: str, force: bool = False,
                       history_table: str = LOAD_HISTORY_TABLE
                       ) -> LoadReport | None:
     """COPY with Snowflake's load-history semantics: a file already
@@ -97,8 +96,7 @@ def copy_with_history(spark: SparkSession, path_glob: str,
             else [(p, sz) for p, sz in listing if (p, sz) not in seen])
     if not todo:
         return None
-    report = copy_into(spark, [p for p, _ in todo], schema, table,
-                       entity=entity)
+    report = copy_into(spark, [p for p, _ in todo], schema, table)
     unseen = [(table, p, sz) for p, sz in todo if (p, sz) not in seen]
     if unseen:
         hist = spark.createDataFrame(

@@ -100,7 +100,12 @@ def run_warehouse_build(spark: SparkSession, sf_dir: str,
     run.step("create database",
              lambda: ({} if ddl.create_database(spark, database)
                       else _raise(f"database {database} missing after create")))
+    # the DAG build runs outside every step (a step of its own would
+    # change the run's step set), so its duration is logged here
+    t0 = time.perf_counter()
     star = build_star(spark, sf_dir)
+    log.info("[%s] star DAG built in %.2fs", run.name,
+             time.perf_counter() - t0)
     # dependency order: location first, then its referrers, then facts
     for name in ("dim_location", "dim_customer", "dim_supplier",
                  "dim_channel", "dim_part", "dim_date", "fact_sales",
@@ -390,18 +395,18 @@ class ViewSample:
     error: str | None = None
 
 
-def sample_all_views(spark: SparkSession, database: str,
-                     limit: int = 5) -> list[ViewSample]:
-    """Sample + count every pass-through and analytical view, recording
-    per-view success/failure instead of aborting — the reference's
-    verify_all_views sweep. Returns the tally; logs a ✓/✗ line per view
-    and the summary footer."""
+def sample_all_views(spark: SparkSession,
+                     database: str) -> list[ViewSample]:
+    """Sample 5 rows of and count every pass-through and analytical
+    view, recording per-view success/failure instead of aborting — the
+    reference's verify_all_views sweep. Returns the tally; logs a ✓/✗
+    line per view and the summary footer."""
     out: list[ViewSample] = []
     for view in list(PASSTHROUGH_VIEWS) + list(ANALYTICAL_VIEWS):
         full = f"{database}.{view}"
         try:
             df = spark.table(full)
-            sample = df.limit(limit).collect()
+            sample = df.limit(5).collect()
             n = df.count()
             out.append(ViewSample(view=view, ok=True, rows=n, sample=sample))
             log.info("[views] ✓ %s: %d rows", full, n)

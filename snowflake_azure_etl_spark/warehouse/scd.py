@@ -43,9 +43,8 @@ scale this materialization is the MERGE's copy-on-write working set.
 The new-key pass reuses `with_surrogate_key`'s attested auto-switch
 (global window for dim-sized batches, range-partitioned parallel
 keying above `prefix.WINDOW_MAX_ROWS`). The max-key probe is one scalar
-aggregate. Update batches are usually ≪ the dim: pass
-`n_update_rows` to broadcast the batch side under the same
-size-attestation contract as `operators.dedup`.
+aggregate. The batch side carries no broadcast hint: update batches
+are usually ≪ the dim, and AQE broadcasts one that materializes small.
 """
 
 from __future__ import annotations
@@ -57,7 +56,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators._cache import cached_relation
-from ..plans.attest import maybe_broadcast
 from ..plans.surrogate import with_surrogate_key
 
 #: SCD2 bookkeeping columns, in schema order after the business/tracked
@@ -82,8 +80,8 @@ def _same_tracked(tracked_cols: list[str]) -> Column:
 
 
 def _classified_join(current: DataFrame, updates: DataFrame,
-                     business_keys: list[str], tracked_cols: list[str],
-                     n_update_rows: int | None) -> DataFrame:
+                     business_keys: list[str],
+                     tracked_cols: list[str]) -> DataFrame:
     """Full-outer join current members × update batch on the business
     key, with `_action` ∈ keep | change | insert. Materialized once per
     merge; every branch filter below reads this one relation."""
@@ -92,8 +90,7 @@ def _classified_join(current: DataFrame, updates: DataFrame,
         *[F.col(c).alias(f"_u_{c}") for c in tracked_cols],
         F.lit(True).alias("_u_present"))
     j = current.withColumn("_t_present", F.lit(True)).join(
-        maybe_broadcast(u, n_update_rows),
-        business_keys, "full_outer")
+        u, business_keys, "full_outer")
     j = j.withColumn(
         "_action",
         F.when(F.col("_u_present").isNull(), F.lit("keep"))
@@ -118,9 +115,8 @@ def merge_counts(classified: DataFrame) -> MergeClassification:
 
 
 def scd1_upsert(target: DataFrame, updates: DataFrame, *, key_col: str,
-                business_keys: list[str], tracked_cols: list[str],
-                n_update_rows: int | None = None,
-                n_insert_rows: int | None = None) -> DataFrame:
+                business_keys: list[str],
+                tracked_cols: list[str]) -> DataFrame:
     """MERGE INTO with UPDATE + INSERT branches, type-1 (overwrite in
     place, keys survive, no history). Returns the next dimension state
     with `target`'s exact schema.
@@ -129,8 +125,7 @@ def scd1_upsert(target: DataFrame, updates: DataFrame, *, key_col: str,
     compare equal, unmatched keys are already present).
     """
     cols = target.columns
-    j = _classified_join(target, updates, business_keys, tracked_cols,
-                         n_update_rows)
+    j = _classified_join(target, updates, business_keys, tracked_cols)
     kept = j.filter(F.col("_action") == "keep").select(*cols)
     updated = j.filter(F.col("_action") == "change").select(
         *[F.col(f"_u_{c}").alias(c) if c in tracked_cols else F.col(c)
@@ -139,30 +134,27 @@ def scd1_upsert(target: DataFrame, updates: DataFrame, *, key_col: str,
         *business_keys,
         *[F.col(f"_u_{c}").alias(c) for c in tracked_cols])
     keyed = with_surrogate_key(fresh, key_col, order_by=business_keys,
-                               offset=_max_key(target, key_col),
-                               n_rows=n_insert_rows)
+                               offset=_max_key(target, key_col))
     return kept.unionByName(updated).unionByName(keyed.select(*cols))
 
 
 def scd2_seed(members: DataFrame, *, key_col: str,
-              business_keys: list[str], batch_id: int = 0,
-              n_rows: int | None = None) -> DataFrame:
-    """Initial SCD2 state: every member version 1, open-ended, current,
-    surrogate keys 2.. in business-key order (key 1 reserved for the
-    unknown member, the reference's seeding convention)."""
+              business_keys: list[str]) -> DataFrame:
+    """Initial SCD2 state: every member version 1 (valid from batch 0),
+    open-ended, current, surrogate keys 2.. in business-key order (key
+    1 reserved for the unknown member, the reference's seeding
+    convention)."""
     keyed = with_surrogate_key(members, key_col, order_by=business_keys,
-                               offset=1, n_rows=n_rows)
+                               offset=1)
     return (keyed
-            .withColumn("valid_from", F.lit(batch_id).cast("int"))
+            .withColumn("valid_from", F.lit(0).cast("int"))
             .withColumn("valid_to", F.lit(None).cast("int"))
             .withColumn("is_current", F.lit(True)))
 
 
 def scd2_apply(target: DataFrame, updates: DataFrame, *, key_col: str,
                business_keys: list[str], tracked_cols: list[str],
-               batch_id: int,
-               n_update_rows: int | None = None,
-               n_insert_rows: int | None = None) -> DataFrame:
+               batch_id: int) -> DataFrame:
     """Apply one update batch to an SCD2 dimension; returns the next
     state (same schema: key, business keys, tracked cols, SCD2_COLS).
 
@@ -181,8 +173,7 @@ def scd2_apply(target: DataFrame, updates: DataFrame, *, key_col: str,
     cols = target.columns
     cur = target.filter(F.col("is_current"))
     hist = target.filter(~F.col("is_current"))
-    j = _classified_join(cur, updates, business_keys, tracked_cols,
-                         n_update_rows)
+    j = _classified_join(cur, updates, business_keys, tracked_cols)
     kept = j.filter(F.col("_action") == "keep").select(*cols)
     closed = j.filter(F.col("_action") == "change").select(
         *[c for c in cols if c not in ("valid_to", "is_current")],
@@ -192,8 +183,7 @@ def scd2_apply(target: DataFrame, updates: DataFrame, *, key_col: str,
         *business_keys,
         *[F.col(f"_u_{c}").alias(c) for c in tracked_cols])
     keyed = with_surrogate_key(fresh, key_col, order_by=business_keys,
-                               offset=_max_key(target, key_col),
-                               n_rows=n_insert_rows)
+                               offset=_max_key(target, key_col))
     inserted = (keyed
                 .withColumn("valid_from", F.lit(batch_id).cast("int"))
                 .withColumn("valid_to", F.lit(None).cast("int"))

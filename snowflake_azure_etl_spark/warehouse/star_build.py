@@ -92,23 +92,23 @@ def _key_map(keys: DataFrame) -> DataFrame:
 
 def build_dim_location(spark: SparkSession, t: dict[str, DataFrame],
                        n_rows: int | None = None) -> DataFrame:
-    """Shared location dim: UNION (distinct!) of customer- and
-    supplier-referenced (nation, region) addresses + unknown member —
-    the reference's Dim_Location pattern (load_dimension_tables.py:72-115:
-    3-branch UNION dedups addresses shared across customer/store/reseller)."""
+    """Shared location dim: the DISTINCT (nation, region) addresses that
+    a customer or a supplier references + unknown member — the
+    reference's Dim_Location pattern (load_dimension_tables.py:72-115:
+    3-branch UNION dedups addresses shared across customer/store/reseller),
+    as one semi-join of the addresses against the union of referencing
+    nation keys: the same set as the distinct union of the per-referrer
+    joins, in one join and one distinct."""
     geo = (t["nation"]
            .join(t["region"], t["nation"].n_regionkey == t["region"].r_regionkey)
            .select(F.col("n_nationkey").alias("nationkey"),
                    coalesce_unknown("n_name").alias("nation_name"),
                    coalesce_unknown("r_name").alias("region_name")))
-    cust_locs = (t["customer"].select(F.col("c_nationkey").alias("nationkey"))
-                 .join(geo, "nationkey").select("nationkey", "nation_name",
-                                                "region_name").distinct())
-    supp_locs = (t["supplier"].select(F.col("s_nationkey").alias("nationkey"))
-                 .join(geo, "nationkey").select("nationkey", "nation_name",
-                                                "region_name").distinct())
+    refs = (t["customer"].select(F.col("c_nationkey").alias("nationkey"))
+            .union(t["supplier"].select(F.col("s_nationkey")
+                                        .alias("nationkey"))))
     # UNION distinct semantics (U1) — shared locations collapse
-    locs = cust_locs.union(supp_locs).distinct()
+    locs = geo.join(refs, "nationkey", "left_semi").distinct()
     return _keyed_dim(locs, "dim_location", ["nation_name", "nationkey"],
                       n_rows, {"nationkey": -1, "nation_name": "Unknown",
                                "region_name": "Unknown"})
@@ -349,13 +349,14 @@ def build_fact_src_sales_target(spark: SparkSession, t: dict[str, DataFrame],
 
 def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The full dimensional DAG as lazy DataFrames, memoized per
-    (session, sf_dir): constructing the 9-table DAG costs ~0.8 s of
-    pure driver work (analyzed-plan keying for the dim cache, footer
-    row-count attestations) with zero jobs run — r9 measurement — and
-    the result is a dict of immutable lazy relations, so repeat
-    callers (q29 per bench sweep, the runner) reuse it. Facts stay
-    lazy and uncached (corpus-sized; only their DEFINITIONS are
-    shared)."""
+    (session, sf_dir): a cold build runs 7 Spark jobs — 4 for
+    `orderdate_span`'s collect and 3 for `dim_date`'s eager persist;
+    the stage reads declare their footer schemas, so no schema
+    inference runs (sf0.01, `local[2]`, fresh JVM: 6.2 s, most of it
+    JIT warm-up) — and the result is a dict of immutable lazy
+    relations, so repeat callers (q29 per bench sweep, the runner)
+    reuse it. Facts stay lazy and uncached (corpus-sized; only their
+    DEFINITIONS are shared)."""
     from ..operators._cache import cached_build
     return cached_build(spark, ("build_star", sf_dir),
                         lambda: _build_star(spark, sf_dir))

@@ -190,16 +190,15 @@ def _guarded_fold(ev: DataFrame, steps: tuple[str, ...],
 
 def funnel_anchor_variants(ev: DataFrame,
                            steps: tuple[str, ...] = FUNNEL_STEPS,
-                           bounds: "list[int | None]" = (None,),
-                           max_events_per_user: int =
-                           FUNNEL_MAX_EVENTS_PER_USER) -> DataFrame:
+                           bounds: "list[int | None]" = (None,)
+                           ) -> DataFrame:
     """(user_id, a0, a1, …): one anchor struct PER BOUND from a single
     collected sequence — running k time-bound variants costs ONE
     user-keyed shuffle and one pass over each user's array, not k
     (r9: q40's bounded leg re-shuffled the events before this)."""
     return _step_seq(ev, steps).select(
         "user_id",
-        *[_guarded_fold(ev, steps, b, max_events_per_user)
+        *[_guarded_fold(ev, steps, b, FUNNEL_MAX_EVENTS_PER_USER)
           .alias(f"a{i}") for i, b in enumerate(bounds)])
 
 

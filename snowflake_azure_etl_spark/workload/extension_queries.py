@@ -16,6 +16,7 @@ from ..plans.attest import bounded_broadcast
 
 from ..functions.scalar import dec
 from ..operators import asof
+from ..operators.sampling import MIX_BUDGET
 from ..sources.registry import load_tables
 from ._registry import query, union_legs
 from .pipeline_queries import (_CLF_LSAT_SQL, _CLF_MARGIN_SQL,
@@ -174,7 +175,7 @@ CMS_HEAVY_MIN = 80
 
 def _mix_rate_ctes(px: str, src: str, keys: str,
                    tilt: str | None = None) -> str:
-    """The oracle of sampling.mixture_rates at budget 0.5: from the
+    """The oracle of sampling.mixture_rates: from the
     CTE `src` (keys, toks), `{px}q` (fixed-point √toks weight, times
     `tilt` when given), `{px}t` (one-row totals) and `{px}r` (keys,
     toks, rate)."""
@@ -190,7 +191,7 @@ def _mix_rate_ctes(px: str, src: str, keys: str,
                          least(CAST(1.0 AS DOUBLE),
                                ((CAST(qs AS DOUBLE) / CAST(qq AS DOUBLE))
                                 * (CAST(tot AS DOUBLE)
-                                   * CAST(0.5 AS DOUBLE)))
+                                   * CAST({MIX_BUDGET} AS DOUBLE)))
                                / CAST(toks AS DOUBLE)) AS rate
                   FROM {px}q CROSS JOIN {px}t)"""
 

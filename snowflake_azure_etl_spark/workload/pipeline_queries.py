@@ -1908,15 +1908,15 @@ _BM25_VALUES = ", ".join(f"('{q}')" for q in _BM25_QUERIES)
 #: The BM25 score expression, kept in ONE f-string so the
 #: parenthesization — which fixes the IEEE operation order — cannot
 #: drift from the Spark tree as the oracle evolves.
-_BM25_SCORE_SQL = """
+_BM25_SCORE_SQL = f"""
            (((CAST(n AS DOUBLE) - CAST(df AS DOUBLE))
              + CAST(0.5 AS DOUBLE))
             / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-           * ((CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE))
+           * ((CAST(tf AS DOUBLE) * CAST({text.BM25_K1 + 1.0} AS DOUBLE))
               / (CAST(tf AS DOUBLE)
-                 + (CAST(1.2 AS DOUBLE)
-                    * ((CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE))
-                       + (CAST(0.75 AS DOUBLE)
+                 + (CAST({text.BM25_K1} AS DOUBLE)
+                    * ((CAST(1.0 AS DOUBLE) - CAST({text.BM25_B} AS DOUBLE))
+                       + (CAST({text.BM25_B} AS DOUBLE)
                           * (CAST(dl AS DOUBLE)
                              / (CAST(tot AS DOUBLE)
                                 / CAST(n AS DOUBLE))))))))
@@ -1985,11 +1985,12 @@ _WP2_VALUES = ", ".join(
                   WHERE token IN (SELECT DISTINCT token FROM bm_qt)
                   GROUP BY 1) CROSS JOIN bm_st
               WHERE CAST(df AS DOUBLE)
-                        <= CAST(0.9 AS DOUBLE) * CAST(n AS DOUBLE)),
+                        <= CAST({text.BM25_MAX_DF_RATIO} AS DOUBLE)
+                           * CAST(n AS DOUBLE)),
     bm_sc AS (
         SELECT q.query, t.doc_id,
                CAST(SUM(CAST(floor(({_BM25_SCORE_SQL})
-                                   * CAST(1048576.0 AS DOUBLE))
+                                   * CAST({float(text.BM25_SCALE)} AS DOUBLE))
                              AS BIGINT)) AS BIGINT) AS s
         FROM bm_qt q JOIN bm_tf t USING (token)
         JOIN bm_df USING (token) JOIN bm_dl USING (doc_id)

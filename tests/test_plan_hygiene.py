@@ -150,7 +150,7 @@ SCOPED_PERSIST_OK = {
      'raw = raw.withColumn("_src_file", F.input_file_name()).cache()'),
     # the n-gram sink's per-epoch tokens across its 2-3 writes
     ("streaming/ingest.py",
-     "toks = tokenized(batch_df, id_col, text_col).persist()"),
+     'toks = tokenized(batch_df, "doc_id", "text").persist()'),
 }
 
 
@@ -400,7 +400,7 @@ EPOCH_WRITE_OK = {
     # a bootstrap lands its first quantizer version the same way, after
     # ddl.drop_table (CREATE OR REPLACE of the whole quantizer)
     ("streaming/vectors.py",
-     'write_epoch(cents, centroids_table, version, epoch_col="q_version")'),
+     'write_epoch(cents, centroids_table, 0, epoch_col="q_version")'),
     # the SCD2 snapshot overwrite, replay-safe through scd2_apply's
     # idempotency rather than epoch partitions
     ("streaming/scd.py",
@@ -511,6 +511,95 @@ def test_one_replace_path():
     assert not drift, (
         "drop/replace sites as (found, allowed) — drop and replace "
         f"through ddl.drop_table / ddl.replace_table: {drift}")
+
+
+#: Defaulted public parameters no call site sets, each kept for a
+#: reason: (module, function, parameter) -> reason. Everything else
+#: with one value in use is a module constant or an inlined literal.
+UNSET_KNOB_OK = {
+    ("session.py", "get_spark", "master"):
+        "deployment setting: the cluster a driver attaches to",
+    ("session.py", "get_spark", "shuffle_partitions"):
+        "deployment setting: shuffle width follows the cluster size",
+}
+
+_ROOT = _PKG.parent
+
+
+def _call_name(call: ast.Call) -> "str | None":
+    f = call.func
+    return getattr(f, "id", None) or getattr(f, "attr", None)
+
+
+def _unset_knobs(defs: "dict[str, tuple[str, ast.FunctionDef]]",
+                 calls: "list[ast.Call]") -> "set[tuple[str, str, str]]":
+    """(module, function, parameter) for every defaulted parameter of
+    `defs` that no call in `calls` passes — by position or keyword, or
+    through *args / **kwargs."""
+    passed: "dict[str, set[str]]" = {}
+    for c in calls:
+        name = _call_name(c)
+        if name not in defs:
+            continue
+        a = defs[name][1].args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        got = passed.setdefault(name, set())
+        if (any(isinstance(x, ast.Starred) for x in c.args)
+                or any(k.arg is None for k in c.keywords)):
+            got.update(pos, (p.arg for p in a.kwonlyargs))
+        got.update(pos[:len(c.args)], (k.arg for k in c.keywords))
+    unset = set()
+    for name, (mod, fn) in defs.items():
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        defaulted = [p.arg for p in pos[len(pos) - len(a.defaults):]] + [
+            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+        unset.update((mod, name, p) for p in defaulted
+                     if p not in passed.get(name, ()))
+    return unset
+
+
+def _public_defs(sources: "dict[str, str]"
+                 ) -> "dict[str, tuple[str, ast.FunctionDef]]":
+    """Top-level public functions by name; a name defined in two
+    modules is ambiguous at its call sites and left out."""
+    found: "dict[str, list]" = {}
+    for mod, src in sources.items():
+        for n in ast.parse(src).body:
+            if isinstance(n, ast.FunctionDef) and not n.name.startswith("_"):
+                found.setdefault(n.name, []).append((mod, n))
+    return {k: v[0] for k, v in found.items() if len(v) == 1}
+
+
+def _calls(sources) -> "list[ast.Call]":
+    return [n for src in sources for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.Call)]
+
+
+def test_no_unset_public_knobs():
+    """A defaulted parameter of a public package function that no call
+    site in the repository (package, tests, perfbench, root scripts)
+    sets is an option with one value: make it a module constant or
+    inline it, or allow-list it here with its reason."""
+    planted = ("def f(x, k=2, *, tag=None):\n    return x\n"
+               "def g(y=1):\n    return f(0, tag='t')\n")
+    defs = _public_defs({"m.py": planted})
+    assert _unset_knobs(defs, _calls([planted])) == {
+        ("m.py", "f", "k"), ("m.py", "g", "y")}
+    assert _unset_knobs(defs, _calls([planted, "f(1, *a)\ng(**kw)\n"])) \
+        == set()
+    pkg = {str(p.relative_to(_PKG)): p.read_text()
+           for p in sorted(_PKG.rglob("*.py"))}
+    callers = [p.read_text() for d in ("tests", "perfbench")
+               for p in sorted((_ROOT / d).rglob("*.py"))]
+    callers += [p.read_text() for p in sorted(_ROOT.glob("*.py"))]
+    unset = _unset_knobs(_public_defs(pkg),
+                         _calls(list(pkg.values()) + callers))
+    drift = sorted(unset ^ UNSET_KNOB_OK.keys())
+    assert not drift, (
+        "defaulted public parameters no call site sets (or stale "
+        "allow-list entries) — make each a module constant: "
+        f"{drift}")
 
 
 def test_bounded_broadcast_rejects_unattested_and_oversized(spark):

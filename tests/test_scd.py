@@ -116,6 +116,6 @@ def test_merge_counts_accounting(spark):
     updates = spark.createDataFrame(
         [(10, "platinum"), (20, "silver"), (40, "bronze")],
         "bk bigint, tier string")
-    j = scd._classified_join(t, updates, ["bk"], ["tier"], None)
+    j = scd._classified_join(t, updates, ["bk"], ["tier"])
     c = scd.merge_counts(j)
     assert (c.unchanged, c.changed, c.inserted) == (1, 1, 1)

@@ -23,7 +23,7 @@ DB = "wh_jobs_test"
 #: jobs only; the contracts are one key sweep plus one FK pass.
 BUDGET = {
     "create database": 0,
-    "load dim_location": 8,
+    "load dim_location": 6,
     "load dim_customer": 4,
     "load dim_supplier": 4,
     "load dim_channel": 4,
