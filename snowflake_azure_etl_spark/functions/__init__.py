@@ -1,7 +1,6 @@
 from .scalar import (
     dec,
     dsum,
-    davg,
     safe_div,
     coalesce_unknown,
     date_key,
@@ -10,6 +9,6 @@ from .scalar import (
 from .dates import date_attributes
 
 __all__ = [
-    "dec", "dsum", "davg", "safe_div", "coalesce_unknown",
+    "dec", "dsum", "safe_div", "coalesce_unknown",
     "date_key", "store_name", "date_attributes",
 ]

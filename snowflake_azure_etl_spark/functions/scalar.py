@@ -7,7 +7,7 @@ concat with the float-cast artifact *fixed* (SURVEY §1.4.2), and
 YYYYMMDD date keys standardizing the reference's inconsistent date-key
 contract (SURVEY §1.4.1).
 
-Determinism helpers (`dec`/`dsum`/`davg`): the testdata's measures are
+Determinism helpers (`dec`/`dsum`): the testdata's measures are
 2-decimal money values stored as doubles. Summing doubles is
 partition-order-dependent, so cross-engine value-hash comparison would
 flake. We cast to DECIMAL first (exact arithmetic, identical in Spark and
@@ -46,12 +46,6 @@ def scaled_long(c: str, places: int = 2) -> Column:
     at scale 4, far above any group in this star), so it matches the
     oracle's DECIMAL arithmetic bit-for-bit."""
     return F.round(F.col(c) * 10 ** places).cast("long")
-
-
-def davg(c: Column | str) -> Column:
-    """AVG = exact-decimal SUM (as double) / COUNT — deterministic."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.sum(dec(col)).cast("double") / F.count(col)
 
 
 def safe_div(num: Column, den: Column) -> Column:

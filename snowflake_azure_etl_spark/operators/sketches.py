@@ -347,10 +347,10 @@ def _bloom_pos(key: Column, j: int, bits: int) -> Column:
 
 def bloom_build(df: DataFrame, key: Column | str,
                 bits: int = BLOOM_BITS,
-                hashes: int = BLOOM_HASHES,
                 group_cols: "tuple[str, ...]" = ()) -> DataFrame:
     """(*group_cols, word_idx, word): the Bloom filter of `key`'s
-    distinct set — one pass, one bit_or hash aggregate; absent words
+    distinct set, BLOOM_HASHES bits per key (the bits `bloom_probe`
+    checks) — one pass, one bit_or hash aggregate; absent words
     are implicit zeros, so the relation is at most bits/32 rows (per
     group). `group_cols` builds one PARTIAL per group — the epoch
     partials of `streaming.sketches` — which `merge_partials` under
@@ -358,8 +358,8 @@ def bloom_build(df: DataFrame, key: Column | str,
     word for word."""
     key = F.col(key) if isinstance(key, str) else key
     gc = list(group_cols)
-    pos = F.explode(F.array(*[
-        _bloom_pos(key, j, bits) for j in range(hashes)])).alias("_pos")
+    pos = F.explode(F.array(*[_bloom_pos(key, j, bits)
+                              for j in range(BLOOM_HASHES)])).alias("_pos")
     return (df.select(*gc, pos)
             .select(*gc,
                     F.floor(F.col("_pos") / _BLOOM_WORD).alias("word_idx"),
@@ -375,12 +375,11 @@ def bloom_build(df: DataFrame, key: Column | str,
 def bloom_probe(bloom: DataFrame, candidates: DataFrame, key_col: str,
                 bits: int = BLOOM_BITS) -> DataFrame:
     """(*candidates' columns, bloom_pass): True iff ALL BLOOM_HASHES
-    bits are set (the filter must be built with the default hashes)
-    — candidates × k probe rows equi-join the broadcast word relation;
-    a missing word reads as the implicit 0 (so an empty filter rejects
-    everything and never NULLs). As with cms_estimate, every candidate
-    column rides through the probe (all become group keys; they must
-    be functionally dependent on `key_col`)."""
+    bits are set — candidates × k probe rows equi-join the broadcast
+    word relation; a missing word reads as the implicit 0 (so an empty
+    filter rejects everything and never NULLs). As with cms_estimate,
+    every candidate column rides through the probe (all become group
+    keys; they must be functionally dependent on `key_col`)."""
     key = F.col(key_col)
     carry = list(candidates.columns)
     reserved = {"word_idx", "word", "_off", "_pos", "bloom_pass"}

@@ -15,9 +15,7 @@ local parquet star.
 
 from __future__ import annotations
 
-import functools
 import os
-import stat
 from dataclasses import dataclass, field
 from typing import Iterable
 
@@ -92,14 +90,9 @@ class SourceRegistry:
     @classmethod
     def for_star_dir(cls, sf_dir: str,
                      tables: Iterable[str] = STAR_TABLES) -> "SourceRegistry":
-        """One parquet stage per table, each declaring the read schema
-        its footer attests (`stage_footer`), so resolving it runs no
-        schema-inference job; a stage without one is inferred."""
         reg = cls()
         for t in tables:
-            footer = stage_footer(sf_dir, t)
-            reg.register(Stage(name=t, path=f"{sf_dir}/{t}.parquet",
-                               schema=footer.schema if footer else None))
+            reg.register(Stage(name=t, path=f"{sf_dir}/{t}.parquet"))
         return reg
 
 
@@ -176,90 +169,33 @@ def footer_row_count(paths: list[str]) -> int | None:
     return total
 
 
-@dataclass(frozen=True)
-class StageFooter:
-    """What a single-file parquet stage's footer attests, read once per
-    file version (`stage_footer`) and served to every consumer: the
-    read schema (`for_star_dir`), the exact row count
-    (`stage_row_count`) and the scan-split gate's row groups and bytes
-    (`stage_scan_splits`)."""
-    rows: int
-    row_groups: int
-    nbytes: int
-    schema: T.StructType | None
-
-
-def _nullable(dt: T.DataType) -> T.DataType:
-    """`dt` with every field, element and value nullable — the form a
-    file relation's read schema always takes."""
-    if isinstance(dt, T.StructType):
-        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
-                                           True, f.metadata)
-                             for f in dt.fields])
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, _nullable(dt.valueType), True)
-    return dt
-
-
-def _read_schema(arrow_schema) -> T.StructType | None:
-    """The schema Spark's parquet inference gives a file with this
-    footer: its Arrow types through PySpark's own converter, naive
-    timestamps as timestamp_ntz (inference's default), all nullable.
-    None when a column holds nanosecond timestamps (or INT96, which
-    Arrow reads as nanoseconds): Spark maps those by session conf
-    (`nanosAsLong`, see `_fix_events_ts`), so that stage keeps
-    Spark's own inference."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    def nanos(t: "pa.DataType") -> bool:
-        if pa.types.is_timestamp(t):
-            return t.unit == "ns"
-        return any(nanos(t.field(i).type) for i in range(t.num_fields))
-
-    if any(nanos(f.type) for f in arrow_schema):
-        return None
-    try:
-        return _nullable(from_arrow_schema(arrow_schema,
-                                           prefer_timestamp_ntz=True))
-    except TypeError:  # an Arrow type Spark has no mapping for
-        return None
-
-
-@functools.lru_cache(maxsize=64)
-def _read_footer(path: str, mtime_ns: int,
-                 nbytes: int) -> StageFooter | None:
-    """One pyarrow footer read per (path, mtime, size): a rewritten
-    stage file is read again, an unchanged one never."""
+def _stage_footer(sf_dir: str, table: str) -> tuple[int, int, int] | None:
+    """(rows, row_groups, bytes) of a stage table's local parquet file,
+    from one footer read — what both `stage_row_count` and
+    `stage_scan_splits` serve. None for a directory-shaped, non-local
+    or unreadable stage, which has no single footer to attest it."""
     import pyarrow.parquet as pq
-    try:
-        md = pq.read_metadata(path)
-    except (OSError, ValueError):
-        return None
-    return StageFooter(md.num_rows, md.num_row_groups, nbytes,
-                       _read_schema(md.schema.to_arrow_schema()))
-
-
-def stage_footer(sf_dir: str, table: str) -> StageFooter | None:
-    """The footer of a stage table's local parquet file; None for a
-    directory-shaped, non-local or unreadable stage, which has no
-    single footer to attest it."""
     path = f"{sf_dir}/{table}.parquet"
     try:
-        st = os.stat(path)
-    except OSError:
+        if not os.path.isfile(path):
+            return None
+        md = pq.read_metadata(path)
+        return md.num_rows, md.num_row_groups, os.path.getsize(path)
+    except (OSError, ValueError):
         return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
-    return _read_footer(path, st.st_mtime_ns, st.st_size)
 
 
 def stage_row_count(sf_dir: str, table: str) -> int | None:
-    """A stage table's exact row count from its footer (`stage_footer`)."""
-    footer = stage_footer(sf_dir, table)
-    return footer.rows if footer else None
+    """A stage table's exact row count: its footer's (`_stage_footer`),
+    or for a directory-shaped stage (a Spark-written one) the
+    `footer_row_count` of its part files."""
+    path = f"{sf_dir}/{table}.parquet"
+    if os.path.isdir(path):
+        return footer_row_count([
+            os.path.join(root, f) for root, _, files in os.walk(path)
+            for f in files if f.endswith(".parquet")])
+    footer = _stage_footer(sf_dir, table)
+    return footer[0] if footer else None
 
 
 #: Only inputs this small are ever rebalanced — above it, the natural
@@ -274,9 +210,9 @@ def stage_scan_splits(sf_dir: str, table: str) -> tuple[int, int] | None:
     only materializes row groups whose midpoint it covers, so a
     single-row-group file is read by exactly one task no matter how
     many splits the planner cuts. None without a footer
-    (`stage_footer`)."""
-    footer = stage_footer(sf_dir, table)
-    return (footer.row_groups, footer.nbytes) if footer else None
+    (`_stage_footer`)."""
+    footer = _stage_footer(sf_dir, table)
+    return footer[1:] if footer else None
 
 
 def _balanced(spark: SparkSession, df: DataFrame,

@@ -349,14 +349,13 @@ def build_fact_src_sales_target(spark: SparkSession, t: dict[str, DataFrame],
 
 def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The full dimensional DAG as lazy DataFrames, memoized per
-    (session, sf_dir): a cold build runs 7 Spark jobs — 4 for
-    `orderdate_span`'s collect and 3 for `dim_date`'s eager persist;
-    the stage reads declare their footer schemas, so no schema
-    inference runs (sf0.01, `local[2]`, fresh JVM: 6.2 s, most of it
-    JIT warm-up) — and the result is a dict of immutable lazy
-    relations, so repeat callers (q29 per bench sweep, the runner)
-    reuse it. Facts stay lazy and uncached (corpus-sized; only their
-    DEFINITIONS are shared)."""
+    (session, sf_dir): a cold build runs 14 Spark jobs — 7 parquet
+    schema inferences (one per stage read), 4 for `orderdate_span`'s
+    collect and 3 for `dim_date`'s eager persist (sf0.01, `local[2]`,
+    fresh JVM: 5.2–5.5 s, most of it JIT warm-up) — and the result is
+    a dict of immutable lazy relations, so repeat callers (q29 per
+    bench sweep, the runner) reuse it. Facts stay lazy and uncached
+    (corpus-sized; only their DEFINITIONS are shared)."""
     from ..operators._cache import cached_build
     return cached_build(spark, ("build_star", sf_dir),
                         lambda: _build_star(spark, sf_dir))

@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from ..plans.attest import bounded_broadcast
 
 from ..functions.dates import oracle_date_attributes_sql
-from ..functions.scalar import (coalesce_unknown, date_key, davg, dec, dsum,
-                                safe_div, scaled_long, store_name)
+from ..functions.scalar import (coalesce_unknown, date_key, dec, safe_div,
+                                scaled_long, store_name)
 from ..plans.datedim import build_dim_date
 from ..sources.registry import load_tables, read_stage
 from ._registry import query

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from ..plans.attest import bounded_broadcast
 
 from ..functions.dates import oracle_date_attributes_sql
-from ..plans.datedim import DIM_DATE_COLUMNS, build_dim_date
+from ..plans.datedim import build_dim_date
 from ..plans.surrogate import with_surrogate_key
 from ..sources.registry import load_tables
 from ._registry import query

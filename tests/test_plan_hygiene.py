@@ -443,7 +443,7 @@ REPLACE_PATH_OK = {
     # earlier lineage's epochs it must keep failing loud
     # (LOCATION_ALREADY_EXISTS), not wipe them
     ("streaming/sinks.py", "write_epoch", "overwrite saveAsTable"): 1,
-    # a bucketed layout, written with its caller's mode
+    # a bucketed layout, always an overwrite of the whole table
     ("plans/layout.py", "land_bucketed", "overwrite saveAsTable"): 1,
     # compact_landing's directory swap of a path landing, no table
     ("plans/layout.py", "_swap_dirs", "location delete"): 2,

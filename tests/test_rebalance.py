@@ -67,10 +67,12 @@ def test_big_single_split_keeps_natural_splits(spark, monkeypatch):
 
 def test_missing_footer_is_a_noop(spark):
     """A directory-shaped stage has no single footer to attest its
-    layout, so it keeps its natural splits."""
+    layout, so it keeps its natural splits; its part files' footers
+    still attest its exact row count."""
     d = tempfile.mkdtemp(prefix="rebal_")
     spark.range(100).write.parquet(f"{d}/documents.parquet")
     assert registry.stage_scan_splits(d, "documents") is None
+    assert registry.stage_row_count(d, "documents") == 100
     docs = registry.load_tables(spark, d, ("documents",))["documents"]
     assert _is_raw(spark, docs, d, "documents")
 
@@ -86,31 +88,3 @@ def test_rebalanced_partitions_survive_aqe(spark):
     emb.count()                             # materialize the cache
     par = spark.sparkContext.defaultParallelism
     assert emb.rdd.getNumPartitions() == par
-
-
-def test_stage_schema_is_the_inferred_schema(spark, sf_dir):
-    """Every star stage declares its footer's read schema, and it is
-    exactly the schema Spark's own inference gives the file."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reg = registry.SourceRegistry.for_star_dir(sf_dir)
-    for t in registry.STAR_TABLES:
-        declared = reg.get(t).schema
-        assert declared is not None, t
-        assert declared == spark.read.parquet(
-            f"{sf_dir}/{t}.parquet").schema, t
-
-
-def test_dim_stage_reads_launch_no_job(spark, sf_dir):
-    """Resolving the dims in a fresh session (empty relation catalog)
-    runs no schema-inference job: the footer answers the schema."""
-    fresh = spark.newSession()
-    sc = spark.sparkContext
-    group = "stage_reads_no_job"
-    sc.setJobGroup(group, group)
-    try:
-        registry.load_tables(fresh, sf_dir, ("region", "nation", "customer",
-                                             "supplier", "part"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []

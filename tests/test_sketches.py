@@ -393,11 +393,10 @@ def test_grouped_bloom_partials_merge_to_full_filter(spark):
     from snowflake_azure_etl_spark.operators import sketches
     rows = [(i % 2, f"s{i}") for i in range(40)]
     df = spark.createDataFrame(rows, "ep int, k string")
-    partials = sketches.bloom_build(df, "k", bits=256, hashes=2,
-                                    group_cols=("ep",))
+    partials = sketches.bloom_build(df, "k", bits=256, group_cols=("ep",))
     merged = sorted(map(tuple, sketches.merge_partials(
         partials.select("word_idx", "word"), sketches.BLOOM_MERGE)
         .collect()))
     full = sorted(map(tuple, sketches.bloom_build(
-        df, "k", bits=256, hashes=2).collect()))
+        df, "k", bits=256).collect()))
     assert merged == full
